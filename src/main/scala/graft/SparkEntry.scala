@@ -107,16 +107,23 @@ object SparkEntry {
   /** Per-process temp dir `prefix_$pid` for persisted-index queries: a
     * concurrently running Verify/Bench JVM must never read an index this one
     * is mid-overwrite on. Dead siblings left by FINISHED processes are reaped
-    * (best-effort) so repeated runs don't accumulate copies in tmp.
+    * (best-effort) so repeated runs don't accumulate copies in tmp; so is,
+    * on this process's first use of `prefix`, a dir carrying this process's
+    * own pid — a dead process's leftover under a recycled pid, whose
+    * indexes may be at an older layout version.
     */
-  private def perProcessTmpDir(prefix: String): String = {
+  private val tmpDirPrefixesSeen = scala.collection.mutable.Set.empty[String]
+  private def perProcessTmpDir(prefix: String): String = tmpDirPrefixesSeen.synchronized {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     val pid = ProcessHandle.current().pid()
+    val firstUse = tmpDirPrefixesSeen.add(prefix)
     Option(tmp.listFiles()).getOrElse(Array.empty)
+      // only `prefix_<pid>` names: `graft_asof_open_<pid>` is not a
+      // `graft_asof` dir
       .filter(f => f.getName.startsWith(prefix + "_") &&
-        f.getName != s"${prefix}_$pid" &&
-        !f.getName.stripPrefix(prefix + "_").toLongOption
-          .exists(p => ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false)))
+        f.getName.stripPrefix(prefix + "_").toLongOption.exists(p =>
+          if (p == pid) firstUse
+          else !ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false)))
       .foreach { f =>
         def rm(x: java.io.File): Unit = {
           Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); ()
@@ -721,7 +728,7 @@ object SparkEntry {
             case "minhash" => mhRoot; case "bm25" => bmRoot; case _ => annRoot
           }
           (e, ev.index, ev.action, ev.genAfter,
-            IndexMaintenance.committedBatchIds(fs, currentPath(s, root)).size)
+            IndexLayout.committedBatchIds(fs, currentPath(s, root)).size)
         }
       }
       // from-scratch references over (corpus ∪ every epoch's survivors);

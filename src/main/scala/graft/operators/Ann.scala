@@ -277,12 +277,10 @@ object Ann {
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     val spark = cells.sparkSession
     cb.foreach(c => Pq.saveCodebook(spark, s"$path/pq_codebook.json", c))
-    val metaPath = new org.apache.hadoop.fs.Path(path, "ann_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    try out.write(
-      s"""{"type": "ann_ivf", "n_centroids": $n, "n_rows": $nRows}""".getBytes("UTF-8"))
-    finally out.close()
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IndexLayout.writeMeta(fs, path, IndexLayout.AnnIvf,
+      s""""n_centroids": $n, "n_rows": $nRows""")
   }
 
   /** Write the cell layout. `pqM > 0` additionally fits a PQ codebook on
@@ -327,19 +325,13 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String,
       batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9._-]+"),
-      s"batchId must match [A-Za-z0-9._-]+ (it names a directory), got '$batchId'")
-    val idx = annOpenIndex(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = new org.apache.hadoop.fs.Path(s"$path/batches/$batchId")
-    val marker = new org.apache.hadoop.fs.Path(batchDir, "_COMMITTED")
-    if (fs.exists(marker)) return false
-    // folded into the base by a compaction — the ledger witnesses it now
-    if (IndexMaintenance.absorbedBatches(fs, path).contains(batchId)) return false
-    // uncommitted leftover from a failed attempt: invisible to open(), safe
-    // to drop wholesale and rewrite
-    if (fs.exists(batchDir)) fs.delete(batchDir, true)
+    val batchDir = IndexLayout.beginBatch(fs, path, batchId) match {
+      case Some(d) => d
+      case None => return false
+    }
+    val idx = annOpenIndex(spark, path)
     // frozen-centroid assignment: the same broadcast 1-NN kernel the build
     // used, against the index's OWN centroid table
     val assign = SemanticJoin.knnJoinVec(
@@ -358,12 +350,9 @@ object Ann {
     // identical vectors encode bit-identically across build and append)
     enrichCells(cells, idx.pqCodebook).repartition(col("__cell"))
       .write.mode("overwrite").partitionBy("__cell").parquet(s"$batchDir/cells")
-    // per-batch row count rides INSIDE the batch dir (the shared meta stays
-    // immutable — mutating it would break the marker protocol's atomicity):
-    // open() sums committed batches for the scan-size estimate + staleness
-    val bmeta = fs.create(new org.apache.hadoop.fs.Path(batchDir, "batch_meta.json"), false)
-    try bmeta.write(s"""{"n_rows": $nRows}""".getBytes("UTF-8")) finally bmeta.close()
-    fs.create(marker, false).close()
+    // open() sums the committed batches' row counts for the scan-size
+    // estimate + staleness
+    IndexLayout.commitBatch(fs, batchDir, nRows)
     true
   }
 
@@ -383,32 +372,16 @@ object Ann {
     */
   def annCompactIndex(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath,
-      "compact is non-in-place: dstPath must differ from srcPath " +
-        "(an overwrite of the layout being read would destroy the input)")
+    IndexLayout.requireNonInPlace(srcPath, dstPath)
     val idx = annOpenIndex(spark, srcPath)
     // the source codebook passes through unchanged (retraining would change
     // every code): compacted searches stay row-identical to the source's
     writeLayout(idx.cells.select(col("corpus_id"), col("cv"), col("__cell")),
       idx.centroids, dstPath, idx.pqCodebook)
-    // ledger the folded batch ids (and applied tombstones — the opened cells
-    // already exclude them, so the compaction applies deletes physically) so
-    // a crash-replayed append/delete of one of them against the compacted
-    // layout stays an idempotent no-op
-    val fs = new org.apache.hadoop.fs.Path(srcPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMaintenance.carryLedger(fs, srcPath, dstPath)
-    Tombstones.carryDeleteLedger(fs, srcPath, dstPath)
+    // the opened cells already exclude tombstones: deletes apply physically
+    IndexLayout.carryLedgers(spark, srcPath, dstPath)
   }
 
-  /** Open an [[annWriteIndex]] directory: the base cell layout unioned with
-    * every COMMITTED append batch (see [[annAppendIndex]] — batches without
-    * the `_COMMITTED` marker are in-flight or failed appends and are
-    * ignored). Each root is read separately and unioned, so per-directory
-    * `__cell=` partition pruning still holds in every branch; the meta's
-    * row count is topped up with the committed batches' counts so the
-    * serving fast-path gate and the staleness signal see the true size.
-    */
   /** Exact schemas of the persisted cell/centroid layouts, as
     * [[writeLayout]] / [[annAppendIndex]] write them (r16): a known schema
     * skips the footer/schema-inference job per `spark.read` — see
@@ -436,6 +409,14 @@ object Ann {
       StructField("centroid_vec", ArrayType(DoubleType))))
   }
 
+  /** Open an [[annWriteIndex]] directory: the base cell layout unioned with
+    * every COMMITTED append batch (see [[annAppendIndex]] — batches without
+    * the `_COMMITTED` marker are in-flight or failed appends and are
+    * ignored). Each root is read separately and unioned, so per-directory
+    * `__cell=` partition pruning still holds in every branch; the meta's
+    * row count is topped up with the committed batches' counts so the
+    * serving fast-path gate and the staleness signal see the true size.
+    */
   def annOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): AnnIndex =
     annOpenIndex(spark, path, None)
 
@@ -445,39 +426,13 @@ object Ann {
     */
   def annOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       pins: Option[IndexPins]): AnnIndex = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, "ann_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath), s"no ANN index at $path (missing ann_meta.json)")
-    val in = fs.open(metaPath)
-    val metaStr = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(metaStr)
-    require(Option(node.get("type")).exists(_.asText() == "ann_ivf"),
-      s"$path/ann_meta.json is not an ann_ivf index meta file")
-    val batchesDir = new org.apache.hadoop.fs.Path(path, "batches")
-    val committedAll =
-      if (!fs.exists(batchesDir)) Seq.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(batchesDir).toSeq
-        .filter(st => st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMITTED")))
-        .map(_.getPath).sortBy(_.toString)
-    val committed = pins match {
-      case None => committedAll
-      case Some(p) =>
-        val present = committedAll.filter(b => p.batches.contains(b.getName))
-        val missing = p.batches -- present.map(_.getName)
-        require(missing.isEmpty,
-          s"pinned batch dir(s) ${missing.toSeq.sorted.mkString(", ")} not " +
-            s"committed under $path/batches — the snapshot's pins were violated")
-        present
-    }
-    val appendedRows = committed.map { b =>
-      val bin = fs.open(new org.apache.hadoop.fs.Path(b, "batch_meta.json"))
-      val s = try scala.io.Source.fromInputStream(bin, "UTF-8").mkString finally bin.close()
-      mapper.readTree(s).get("n_rows").asLong()
-    }.sum
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = IndexLayout.readMeta(fs, path, IndexLayout.AnnIvf)
+    val batches = IndexLayout.openBatches(fs, path, pins)
+    val appendedRows = batches.map(_.nRows).sum
     val hasPq = fs.exists(new org.apache.hadoop.fs.Path(path, "pq_codebook.json"))
-    val raw = (s"$path/cells" +: committed.map(b => s"$b/cells"))
+    val raw = (s"$path/cells" +: batches.map(b => s"${b.dir}/cells"))
       .map(spark.read.schema(cellsReadSchema(hasPq)).parquet(_))
       .reduce(_.unionByName(_))
     // committed tombstones (r13): exclusion over the merged scan — filters
@@ -488,21 +443,16 @@ object Ann {
     val idx = AnnIndex(
       cells,
       spark.read.schema(centroidsReadSchema).parquet(s"$path/centroids"),
-      node.get("n_centroids").asInt(),
-      // absent in pre-r8 layouts: searches simply skip the size-gated fast
-      // path; tombstoned rows are still SCANNED, so the estimate keeps them
-      Option(node.get("n_rows")).map(_.asLong() + appendedRows),
+      meta.get("n_centroids").asInt(),
+      // tombstoned rows are still SCANNED, so the estimate keeps them
+      Some(meta.get("n_rows").asLong() + appendedRows),
       appendedRows,
       // absent in non-PQ layouts: annSearchIndexPq refuses, everything else
       // is unaffected
       Pq.loadCodebook(spark, s"$path/pq_codebook.json"),
       deletedRows = dels.map(_.nRows).getOrElse(0L))
-    // shared-mirror key (judge r12 #5): see Lexical.bm25OpenIndex — the
-    // tombstone names key a NEW mirror after a delete
-    idx.residentHolder.shareKey = Some(
-      s"ann:${fs.makeQualified(new org.apache.hadoop.fs.Path(path))}#" +
-        committed.map(_.getName).mkString(",") + "!" +
-        dels.map(_.names.mkString(",")).getOrElse(""))
+    idx.residentHolder.shareKey =
+      Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels))
     idx
   }
 
@@ -526,8 +476,7 @@ object Ann {
   def annDeleteFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, idCol: String, delId: String): Boolean = {
-    require(delId.matches("[A-Za-z0-9._-]+"),
-      s"delId must match [A-Za-z0-9._-]+ (it names a directory), got '$delId'")
+    IndexLayout.requireDirName("delId", delId)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (Tombstones.alreadyDeleted(fs, path, delId)) return false

@@ -483,18 +483,16 @@ object Dedup extends Logging {
     // metadata only), same convention as the BM25/ANN index metas
     val nRows = spark.read.schema(minhashCountReadSchema)
       .parquet(s"$path/postings").count()
-    val metaPath = new org.apache.hadoop.fs.Path(path, "minhash_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    try out.write(
-      (s"""{"type": "minhash_lsh", "shingle_size": ${index.shingleSize}, """ +
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IndexLayout.writeMeta(fs, path, IndexLayout.MinHashLsh,
+      s""""shingle_size": ${index.shingleSize}, """ +
         s""""num_bands": ${index.numBands}, "rows_per_band": ${index.rowsPerBand}, """ +
         // the id column keeps the CORPUS id type (string keys are
         // first-class here, unlike bm25's integral contract), so open()
-        // needs it recorded to skip schema inference (r16)
+        // needs it recorded to skip schema inference
         s""""id_type": "${index.postings.schema("id").dataType.typeName}", """ +
-        s""""hash_family": "${index.hashFamily}", "n_rows": $nRows}""").getBytes("UTF-8"))
-    finally out.close()
+        s""""hash_family": "${index.hashFamily}", "n_rows": $nRows""")
   }
 
   /** Absorb a new batch into a persisted index WITHOUT a rebuild — the
@@ -532,21 +530,13 @@ object Dedup extends Logging {
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, textCol: String,
       batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9._-]+"),
-      s"batchId must match [A-Za-z0-9._-]+ (it names a directory), got '$batchId'")
-    val idx = minhashOpenIndex(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = new org.apache.hadoop.fs.Path(s"$path/batches/$batchId")
-    val marker = new org.apache.hadoop.fs.Path(batchDir, "_COMMITTED")
-    if (fs.exists(marker)) return false
-    // a compaction folded this batch into the base layout and deleted its
-    // dir — the generation's ledger witnesses it now (replaying it as new
-    // would double-add its rows)
-    if (IndexMaintenance.absorbedBatches(fs, path).contains(batchId)) return false
-    // uncommitted leftover from a failed attempt: invisible to open(), safe
-    // to drop wholesale and rewrite
-    if (fs.exists(batchDir)) fs.delete(batchDir, true)
+    val batchDir = IndexLayout.beginBatch(fs, path, batchId) match {
+      case Some(d) => d
+      case None => return false
+    }
+    val idx = minhashOpenIndex(spark, path)
     val base = shingleSig(batch, col(idCol), col(textCol),
       idx.shingleSize, idx.numBands * idx.rowsPerBand, idx.hashFamily)
     // empty batch: absorbing nothing is a committed no-op with NO batch dir
@@ -559,25 +549,13 @@ object Dedup extends Logging {
       .write.mode("overwrite").partitionBy("band").parquet(s"$batchDir/postings")
     base.select(col("id"), col("sh"))
       .write.mode("overwrite").parquet(s"$batchDir/shingles")
-    // batch postings count for the serving fast-path gate — its own file,
-    // written BEFORE the marker, so the `_COMMITTED` create stays the single
-    // atomic visibility event (content written into the marker itself would
-    // be visible empty between create and close)
+    // batch postings count for the serving fast-path gate
     val nRows = spark.read.schema(minhashCountReadSchema)
       .parquet(s"$batchDir/postings").count()
-    val bm = fs.create(new org.apache.hadoop.fs.Path(batchDir, "batch_meta.json"), true)
-    try bm.write(s"""{"n_rows": $nRows}""".getBytes("UTF-8")) finally bm.close()
-    fs.create(marker, false).close()
+    IndexLayout.commitBatch(fs, batchDir, nRows)
     true
   }
 
-  /** Open a [[minhashWriteIndex]] directory: the base layout unioned with
-    * every COMMITTED append batch (see [[minhashAppendIndex]] — batches
-    * without the `_COMMITTED` marker are in-flight or failed appends and
-    * are ignored). Multi-path parquet reads keep per-directory `band=`
-    * partition pruning, so a banded search still scans only the probed
-    * band's files in each layout.
-    */
   /** Compact an appended index into a fresh single-layout index at
     * `dstPath` — the MinHash sibling of [[Ann.annCompactIndex]], bounding
     * [[minhashAppendIndex]]'s batch-directory accumulation (every open
@@ -592,18 +570,10 @@ object Dedup extends Logging {
     */
   def minhashCompactIndex(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath,
-      "compact is non-in-place: dstPath must differ from srcPath " +
-        "(an overwrite of the layout being read would destroy the input)")
+    IndexLayout.requireNonInPlace(srcPath, dstPath)
     minhashWriteIndex(minhashOpenIndex(spark, srcPath), dstPath)
-    // ledger the folded batch ids (and applied tombstones — the opened
-    // frames already exclude them, so the compaction applies deletes
-    // physically) so a crash-replayed append/delete of one of them against
-    // the compacted layout stays an idempotent no-op
-    val fs = new org.apache.hadoop.fs.Path(srcPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMaintenance.carryLedger(fs, srcPath, dstPath)
-    Tombstones.carryDeleteLedger(fs, srcPath, dstPath)
+    // the opened frames already exclude tombstones: deletes apply physically
+    IndexLayout.carryLedgers(spark, srcPath, dstPath)
   }
 
   /** Exact schemas of the persisted layout components, as
@@ -611,8 +581,8 @@ object Dedup extends Logging {
     * known schema skips the footer/schema-inference job per `spark.read` —
     * see [[Lexical.postingsReadSchema]] for the rationale. The id column
     * keeps the CORPUS id type, so it is parameterised from the meta's
-    * `id_type` record; pre-r16 metas without it fall back to inference.
-    * Spec-pinned equal to inference (EngineSpec), incl. a string-id index.
+    * `id_type` record. Spec-pinned equal to inference (EngineSpec), incl.
+    * a string-id index.
     */
   private[graft] def minhashPostingsReadSchema(
       idType: org.apache.spark.sql.types.DataType) = {
@@ -639,6 +609,13 @@ object Dedup extends Logging {
     StructType(Seq(StructField("bkey", LongType)))
   }
 
+  /** Open a [[minhashWriteIndex]] directory: the base layout unioned with
+    * every COMMITTED append batch (see [[minhashAppendIndex]] — batches
+    * without the `_COMMITTED` marker are in-flight or failed appends and
+    * are ignored). Multi-path parquet reads keep per-directory `band=`
+    * partition pruning, so a banded search still scans only the probed
+    * band's files in each layout.
+    */
   def minhashOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): MinHashIndex =
     minhashOpenIndex(spark, path, None)
 
@@ -648,69 +625,20 @@ object Dedup extends Logging {
     */
   def minhashOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       pins: Option[IndexPins]): MinHashIndex = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, "minhash_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath), s"no MinHash index at $path (missing minhash_meta.json)")
-    val in = fs.open(metaPath)
-    val metaStr = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(metaStr)
-    require(Option(node.get("type")).exists(_.asText() == "minhash_lsh"),
-      s"$path/minhash_meta.json is not a minhash_lsh index meta file")
-    val batchesDir = new org.apache.hadoop.fs.Path(path, "batches")
-    val committedAll =
-      if (!fs.exists(batchesDir)) Seq.empty[String]
-      else fs.listStatus(batchesDir).toSeq
-        .filter(st => st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMITTED")))
-        .map(_.getPath.toString).sorted
-    val committed = pins match {
-      case None => committedAll
-      case Some(p) =>
-        def base(b: String) = new org.apache.hadoop.fs.Path(b).getName
-        val present = committedAll.filter(b => p.batches.contains(base(b)))
-        val missing = p.batches -- present.map(base)
-        require(missing.isEmpty,
-          s"pinned batch dir(s) ${missing.toSeq.sorted.mkString(", ")} not " +
-            s"committed under $path/batches — the snapshot's pins were violated")
-        present
-    }
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = IndexLayout.readMeta(fs, path, IndexLayout.MinHashLsh)
+    val batches = IndexLayout.openBatches(fs, path, pins)
     // each root is read separately and unioned (a single multi-root read
     // trips partition-structure inference); a band filter still prunes
     // inside EVERY branch's scan — union pushes predicates to each child.
     // Known schemas (r16): skip the footer/schema-inference job per branch
     // — see Lexical.postingsReadSchema for the rationale. The id type comes
-    // from the meta (the corpus id type); pre-r16 metas lack the record and
-    // keep the inference path.
-    val idType = Option(node.get("id_type")).map(t =>
-      org.apache.spark.sql.types.DataType.fromDDL(t.asText()))
-    def layout(sub: String): DataFrame = {
-      def rd(p: String): DataFrame = idType match {
-        case Some(t) =>
-          val schema = if (sub == "postings") minhashPostingsReadSchema(t)
-            else shinglesReadSchema(t)
-          spark.read.schema(schema).parquet(p)
-        case None => spark.read.parquet(p)
-      }
-      (s"$path/$sub" +: committed.map(b => s"$b/$sub"))
-        .map(rd).reduce(_.unionByName(_))
-    }
-    // total postings row count = base meta + every committed batch's own
-    // count file; any component written before the counts existed (pre-r10
-    // index) yields None and the search keeps its parallel plan
-    val nRows: Option[Long] = Option(node.get("n_rows")).map(_.asLong()).flatMap { base =>
-      val batchCounts = committed.map { b =>
-        val p = new org.apache.hadoop.fs.Path(s"$b/batch_meta.json")
-        if (!fs.exists(p)) None
-        else {
-          val bin = fs.open(p)
-          val s = try scala.io.Source.fromInputStream(bin, "UTF-8").mkString finally bin.close()
-          Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).get("n_rows"))
-            .map(_.asLong())
-        }
-      }
-      if (batchCounts.exists(_.isEmpty)) None
-      else Some(base + batchCounts.flatten.sum)
-    }
+    // from the meta (the corpus id type).
+    val idType = org.apache.spark.sql.types.DataType.fromDDL(meta.get("id_type").asText())
+    def layout(sub: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+      (s"$path/$sub" +: batches.map(b => s"${b.dir}/$sub"))
+        .map(spark.read.schema(schema).parquet(_)).reduce(_.unionByName(_))
     // committed tombstones (r13): exclusion over both merged layouts —
     // filters AFTER the `band=` partition pruning, so banded probes keep
     // their pruned shape in every union branch
@@ -718,22 +646,19 @@ object Dedup extends Logging {
     def excl(df: DataFrame): DataFrame =
       dels.map(_.exclude(df, "id")).getOrElse(df)
     val idx = MinHashIndex(
-      excl(layout("postings")),
-      excl(layout("shingles")),
-      node.get("shingle_size").asInt(),
-      node.get("num_bands").asInt(),
-      node.get("rows_per_band").asInt(),
-      node.get("hash_family").asText(),
+      excl(layout("postings", minhashPostingsReadSchema(idType))),
+      excl(layout("shingles", shinglesReadSchema(idType))),
+      meta.get("shingle_size").asInt(),
+      meta.get("num_bands").asInt(),
+      meta.get("rows_per_band").asInt(),
+      meta.get("hash_family").asText(),
+      // total postings = base meta + every committed batch's own count;
       // tombstoned rows are still SCANNED: the estimate keeps them
-      nRows,
-      appendedBatches = committed.size,
+      Some(meta.get("n_rows").asLong() + batches.map(_.nRows).sum),
+      appendedBatches = batches.size,
       deletedPostings = dels.map(_.nRows).getOrElse(0L))
-    // shared-mirror key (judge r12 #5): see Lexical.bm25OpenIndex — the
-    // tombstone names key a NEW mirror after a delete
-    idx.residentHolder.shareKey = Some(
-      s"minhash:${fs.makeQualified(new org.apache.hadoop.fs.Path(path))}#" +
-        committed.map(b => new org.apache.hadoop.fs.Path(b).getName).mkString(",") + "!" +
-        dels.map(_.names.mkString(",")).getOrElse(""))
+    idx.residentHolder.shareKey =
+      Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels))
     idx
   }
 
@@ -757,8 +682,7 @@ object Dedup extends Logging {
   def minhashDeleteFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, idCol: String, delId: String): Boolean = {
-    require(delId.matches("[A-Za-z0-9._-]+"),
-      s"delId must match [A-Za-z0-9._-]+ (it names a directory), got '$delId'")
+    IndexLayout.requireDirName("delId", delId)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (Tombstones.alreadyDeleted(fs, path, delId)) return false

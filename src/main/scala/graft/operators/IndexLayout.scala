@@ -1,0 +1,230 @@
+package graft.operators
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+/** The on-disk layout the three persisted index families share — BM25
+  * ([[Lexical.bm25WriteIndex]]), IVF/PQ ANN ([[Ann.annWriteIndex]]) and
+  * MinHash-LSH ([[Dedup.minhashWriteIndex]]):
+  *
+  * {{{
+  *   path/<family>_meta.json                  type, format_version, family fields
+  *   path/batches/<batchId>/...               one append's own layout
+  *   path/batches/<batchId>/batch_meta.json   its row count (+ family sums)
+  *   path/batches/<batchId>/_COMMITTED        its single visibility event
+  *   path/absorbed_batches.json               batch ids a compaction folded in
+  *   path/deletes/<delId>/...                 tombstones (see [[Tombstones]])
+  * }}}
+  *
+  * Every root meta carries [[FormatVersion]], and [[readMeta]] — the only
+  * reader of those files — refuses a meta without it or at another
+  * version, so the openers, appenders and deleters read exactly the layout
+  * the current writers produce. Bump the version with any change to a
+  * persisted field; an index at an older version is rebuilt, not read.
+  */
+object IndexLayout {
+
+  val FormatVersion = 1
+
+  /** One index family: its meta `type` tag and meta file name. */
+  final case class Family(tag: String, metaFile: String, label: String)
+  val Bm25 = Family("bm25", "bm25_meta.json", "BM25")
+  val AnnIvf = Family("ann_ivf", "ann_meta.json", "ANN")
+  val MinHashLsh = Family("minhash_lsh", "minhash_meta.json", "MinHash")
+
+  private val RebuildHint = "rebuild the index with the current writer"
+  private val BatchesDir = "batches"
+  private val Marker = "_COMMITTED"
+  private val BatchMetaFile = "batch_meta.json"
+  private val LedgerFile = "absorbed_batches.json"
+
+  // ObjectMapper reads are thread-safe: one mapper serves every read
+  private val mapper = new ObjectMapper()
+
+  private[operators] def readJson(fs: FileSystem, p: Path): JsonNode = {
+    val in = fs.open(p)
+    try mapper.readTree(in) finally in.close()
+  }
+
+  private[operators] def writeJson(
+      fs: FileSystem, p: Path, json: String, overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Directory names (batch ids, delete ids, snapshot names) are one path
+    * component: no separators, no `..`.
+    */
+  private[graft] def requireDirName(what: String, name: String): Unit =
+    require(name.matches("[A-Za-z0-9._-]+"),
+      s"$what must match [A-Za-z0-9._-]+ (it names a directory), got '$name'")
+
+  // ------------------------------------------------------------------
+  // root meta
+  // ------------------------------------------------------------------
+
+  /** Write `path`'s root meta: the family tag, [[FormatVersion]], then the
+    * family's own `fields` (a JSON member list).
+    */
+  private[operators] def writeMeta(
+      fs: FileSystem, path: String, family: Family, fields: String): Unit =
+    writeJson(fs, new Path(path, family.metaFile),
+      s"""{"type": "${family.tag}", "format_version": $FormatVersion, $fields}""",
+      overwrite = true)
+
+  /** Read `path`'s root meta, refusing a missing meta, a meta of another
+    * family, or one at another [[FormatVersion]].
+    */
+  private[operators] def readMeta(fs: FileSystem, path: String, family: Family): JsonNode = {
+    val p = new Path(path, family.metaFile)
+    require(fs.exists(p),
+      s"no ${family.label} index at $path (missing ${family.metaFile}); $RebuildHint")
+    val node = readJson(fs, p)
+    require(Option(node.get("type")).exists(_.asText() == family.tag),
+      s"$p is not a ${family.tag} index meta file; $RebuildHint")
+    val version = Option(node.get("format_version")).map(_.asInt())
+    require(version.contains(FormatVersion),
+      s"$p has format_version ${version.getOrElse("(none)")}, this reader " +
+        s"needs $FormatVersion; $RebuildHint")
+    node
+  }
+
+  // ------------------------------------------------------------------
+  // append batches
+  // ------------------------------------------------------------------
+
+  private def batchDir(path: String, batchId: String): Path =
+    new Path(new Path(path, BatchesDir), batchId)
+
+  private[graft] def isBatchCommitted(fs: FileSystem, path: String, batchId: String): Boolean =
+    fs.exists(new Path(batchDir(path, batchId), Marker))
+
+  /** Wall time `batchId` became visible: its marker is created once and
+    * never rewritten.
+    */
+  private[operators] def batchCommittedAt(fs: FileSystem, path: String, batchId: String): Long =
+    fs.getFileStatus(new Path(batchDir(path, batchId), Marker)).getModificationTime
+
+  /** Committed (visible) batch ids under `path/batches`, name-sorted —
+    * directories without the marker are in-flight or failed appends.
+    */
+  private[graft] def committedBatchIds(fs: FileSystem, path: String): Seq[String] = {
+    val dir = new Path(path, BatchesDir)
+    if (!fs.exists(dir)) return Seq.empty
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, Marker)))
+      .map(_.getPath.getName).sorted
+  }
+
+  /** One committed batch as an open reads it. */
+  final case class Batch(dir: Path, meta: JsonNode) {
+    def nRows: Long = meta.get("n_rows").asLong()
+  }
+
+  /** The committed batches an open reads, with their `batch_meta.json`:
+    * all of them, or exactly the `pins`'d ones ([[Snapshots]]). Every pinned
+    * batch must still be committed — generations are only deleted whole, so
+    * a missing one means the pin was violated.
+    */
+  private[operators] def openBatches(
+      fs: FileSystem, path: String, pins: Option[IndexPins]): Seq[Batch] = {
+    val all = committedBatchIds(fs, path)
+    val ids = pins match {
+      case None => all
+      case Some(p) =>
+        val missing = p.batches -- all
+        require(missing.isEmpty,
+          s"pinned batch dir(s) ${missing.toSeq.sorted.mkString(", ")} not " +
+            s"committed under $path/$BatchesDir — the snapshot's pins were violated")
+        all.filter(p.batches.contains)
+    }
+    ids.map { id =>
+      val dir = batchDir(path, id)
+      val p = new Path(dir, BatchMetaFile)
+      require(fs.exists(p), s"committed batch $dir has no $BatchMetaFile; $RebuildHint")
+      Batch(dir, readJson(fs, p))
+    }
+  }
+
+  /** The pre-commit checks every append runs. A `batchId` already committed,
+    * or folded into the base by a compaction (the absorbed ledger — its dir
+    * is gone, so the marker no longer witnesses it), is an idempotent no-op:
+    * None. Otherwise an uncommitted leftover of a failed attempt (invisible
+    * to opens) is dropped and the dir to write the batch into is returned.
+    */
+  private[operators] def beginBatch(
+      fs: FileSystem, path: String, batchId: String): Option[Path] = {
+    requireDirName("batchId", batchId)
+    if (isBatchCommitted(fs, path, batchId) ||
+        absorbedBatches(fs, path).contains(batchId)) return None
+    val dir = batchDir(path, batchId)
+    if (fs.exists(dir)) fs.delete(dir, true)
+    Some(dir)
+  }
+
+  /** Make a fully written batch visible: its `batch_meta.json` (the row
+    * count opens sum, then any family `fields`) goes in BEFORE the marker,
+    * so the marker create stays the single atomic visibility event and the
+    * shared root meta stays immutable.
+    */
+  private[operators] def commitBatch(
+      fs: FileSystem, dir: Path, nRows: Long, fields: String = ""): Unit = {
+    writeJson(fs, new Path(dir, BatchMetaFile), s"""{"n_rows": $nRows$fields}""",
+      overwrite = false)
+    fs.create(new Path(dir, Marker), false).close()
+  }
+
+  // ------------------------------------------------------------------
+  // compaction ledgers
+  // ------------------------------------------------------------------
+
+  /** Batch ids folded into `path`'s base layout by a compaction. */
+  private def absorbedBatches(fs: FileSystem, path: String): Set[String] = {
+    val p = new Path(path, LedgerFile)
+    if (!fs.exists(p)) return Set.empty
+    val node = readJson(fs, p).get("absorbed")
+    (0 until node.size()).map(node.get(_).asText()).toSet
+  }
+
+  /** A compactor's precondition: overwriting the layout being read would
+    * destroy the input.
+    */
+  private[operators] def requireNonInPlace(srcPath: String, dstPath: String): Unit =
+    require(srcPath != dstPath,
+      "compact is non-in-place: dstPath must differ from srcPath " +
+        "(an overwrite of the layout being read would destroy the input)")
+
+  /** Ledger what compacting `srcPath` into `dstPath` folded: `dstPath`'s
+    * absorbed ledger = `srcPath`'s ledger ∪ its committed batch ids, and the
+    * same for applied tombstones ([[Tombstones.carryDeleteLedger]]), so a
+    * crash-replayed append or delete of one of them against the new layout
+    * stays an idempotent no-op. Called AFTER the new layout is fully
+    * written (the ledgers ride inside the generation, so the generation
+    * marker stays the single visibility event).
+    */
+  private[operators] def carryLedgers(
+      spark: org.apache.spark.sql.SparkSession, srcPath: String, dstPath: String): Unit = {
+    val fs = new Path(srcPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val all = absorbedBatches(fs, srcPath) ++ committedBatchIds(fs, srcPath)
+    if (all.nonEmpty) writeJson(fs, new Path(dstPath, LedgerFile),
+      all.toSeq.sorted.map(id => "\"" + id + "\"").mkString("{\"absorbed\": [", ", ", "]}"),
+      overwrite = true)
+    Tombstones.carryDeleteLedger(fs, srcPath, dstPath)
+  }
+
+  // ------------------------------------------------------------------
+  // shared resident mirrors
+  // ------------------------------------------------------------------
+
+  /** The shared-mirror key of one open: qualified path + the committed
+    * batch names + the tombstone names — the immutable inputs a resident
+    * mirror is a function of, so two opens of one generation refcount ONE
+    * mirror and a new append or delete keys a NEW mirror (pinned views
+    * restrict both lists, so they never alias a live mirror).
+    */
+  private[operators] def shareKey(fs: FileSystem, family: Family, path: String,
+      batches: Seq[Batch], dels: Option[Tombstones.Deletes]): String =
+    s"${family.tag}:${fs.makeQualified(new Path(path))}#" +
+      batches.map(_.dir.getName).mkString(",") + "!" +
+      dels.map(_.names.mkString(",")).getOrElse("")
+}

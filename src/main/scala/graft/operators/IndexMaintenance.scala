@@ -38,56 +38,12 @@ import org.apache.spark.sql.functions.col
   * `absorbed_batches.json` ledger into the new generation — the union of
   * the source's ledger and the batch ids it folded — and all three
   * appenders treat a ledgered `batchId` as already-committed (idempotent
-  * no-op). The MinHash compaction step additionally CARRIES the
-  * `ingest_manifests` directory forward, so a replayed
-  * [[graft.streaming.StreamOps.ingestEpochPipeline]] epoch still
+  * no-op; see [[IndexLayout.carryLedgers]]). The MinHash compaction step
+  * additionally CARRIES the `ingest_manifests` directory forward, so a
+  * replayed [[graft.streaming.StreamOps.ingestEpochPipeline]] epoch still
   * re-delivers its committed survivor set after the swap.
   */
 object IndexMaintenance {
-
-  // ------------------------------------------------------------------
-  // absorbed-batch ledger (shared with the appenders/compactors)
-  // ------------------------------------------------------------------
-
-  private val LedgerFile = "absorbed_batches.json"
-
-  /** Batch ids folded into `path`'s base layout by a compaction — an
-    * appender must no-op on these exactly as it does on a live
-    * `_COMMITTED` marker.
-    */
-  private[operators] def absorbedBatches(fs: FileSystem, path: String): Set[String] = {
-    val p = new Path(path, LedgerFile)
-    if (!fs.exists(p)) return Set.empty
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).get("absorbed")
-    (0 until node.size()).map(node.get(_).asText()).toSet
-  }
-
-  /** Committed (visible) batch ids under `path/batches`. */
-  private[graft] def committedBatchIds(fs: FileSystem, path: String): Seq[String] = {
-    val dir = new Path(path, "batches")
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "_COMMITTED")))
-      .map(_.getPath.getName).sorted
-  }
-
-  /** Write `dstPath`'s ledger = `srcPath`'s ledger ∪ the batch ids the
-    * compaction just folded. Called by the three compactors AFTER the new
-    * layout is fully written (the ledger rides inside the generation, so
-    * the generation marker stays the single visibility event).
-    */
-  private[operators] def carryLedger(
-      fs: FileSystem, srcPath: String, dstPath: String): Unit = {
-    val all = absorbedBatches(fs, srcPath) ++ committedBatchIds(fs, srcPath)
-    if (all.isEmpty) return
-    val out = fs.create(new Path(dstPath, LedgerFile), true)
-    try out.write(all.toSeq.sorted
-      .map(id => "\"" + id + "\"").mkString("{\"absorbed\": [", ", ", "]}")
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
 
   // ------------------------------------------------------------------
   // generation layout
@@ -358,8 +314,6 @@ object IndexMaintenance {
       StructField("signal", StringType), StructField("value", DoubleType),
       StructField("threshold", DoubleType), StructField("action", StringType),
       StructField("gen_before", IntegerType), StructField("gen_after", IntegerType),
-      // r13: wall timestamp + duration per decision; pre-r13 logs lack the
-      // columns and read back as nulls (schema-on-read)
       StructField("at", LongType), StructField("duration_ms", LongType)))
     val fs = fsOf(spark, root)
     val logRoot = new Path(root, LogDir)
@@ -703,18 +657,13 @@ object IndexMaintenance {
     */
   private def rowsAtRefit(fs: FileSystem, path: String, idx: Ann.AnnIndex): Option[Long] = {
     val p = new Path(path, RefitMetaFile)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      Some(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(s).get("rows_at_refit").asLong())
-    } else idx.nRows.map(_ - idx.appendedRows)
+    if (fs.exists(p)) Some(IndexLayout.readJson(fs, p).get("rows_at_refit").asLong())
+    else idx.nRows.map(_ - idx.appendedRows)
   }
 
-  private def writeRefitMeta(fs: FileSystem, path: String, rows: Long): Unit = {
-    val out = fs.create(new Path(path, RefitMetaFile), true)
-    try out.write(s"""{"rows_at_refit": $rows}""".getBytes("UTF-8")) finally out.close()
-  }
+  private def writeRefitMeta(fs: FileSystem, path: String, rows: Long): Unit =
+    IndexLayout.writeJson(fs, new Path(path, RefitMetaFile),
+      s"""{"rows_at_refit": $rows}""", overwrite = true)
 
   /** Prepare `genPath(root, cur+1)` for a compaction/refit write: delete an
     * uncommitted leftover from a failed attempt (invisible by protocol,
@@ -847,8 +796,7 @@ object IndexMaintenance {
           nCentroids = idx.nCentroids)
         Ann.annWriteIndex(cells, cents, dst,
           pqM = idx.pqCodebook.map(_.m).getOrElse(0))
-        carryLedger(fs, src, dst)
-        Tombstones.carryDeleteLedger(fs, src, dst)
+        IndexLayout.carryLedgers(spark, src, dst)
         // the watermark is the corpus the centroids were FITTED on: nRows is
         // a scan estimate that still counts tombstoned rows, but the refit
         // trained on the excluded frame — record survivors only

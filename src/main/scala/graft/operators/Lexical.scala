@@ -338,39 +338,17 @@ object Lexical {
       .repartition(col("__bkt"))
       .write.mode("overwrite").partitionBy("__bkt").parquet(s"$path/postings")
     stats.write.mode("overwrite").parquet(s"$path/stats")
-    val metaPath = new org.apache.hadoop.fs.Path(path, "bm25_meta.json")
-    val fs = metaPath.getFileSystem(
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       postings.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath, true)
-    try out.write(
-      (s"""{"type": "bm25", "n_buckets": $nBuckets, "n_rows": $nRows, """ +
+    IndexLayout.writeMeta(fs, path, IndexLayout.Bm25,
+      s""""n_buckets": $nBuckets, "n_rows": $nRows, """ +
         s""""contrib_k1": $bakeK1, "contrib_b": $bakeB, """ +
         // exact-merge inputs for bm25AppendIndex: Double.toString round-trips
         // through Jackson's asDouble bit-exactly
-        s""""n_docs": ${sr.getDouble(0)}, "sum_dl": $sumDl}""").getBytes("UTF-8"))
-    finally out.close()
+        s""""n_docs": ${sr.getDouble(0)}, "sum_dl": $sumDl""")
     } finally pinned.unpersist(blocking = false)
   }
 
-  /** Open a [[bm25WriteIndex]] directory: the base bucket layout unioned
-    * with every COMMITTED append batch (see [[bm25AppendIndex]] — batches
-    * without the `_COMMITTED` marker are in-flight or failed appends and
-    * are ignored). When batches exist the baked `df`/`contrib0` columns are
-    * DROPPED — they were computed against the base corpus only and are
-    * stale the moment a batch lands — so every search recomputes df from
-    * its pruned scan (exact: term-hash bucketing with the shared modulus
-    * puts all of a term's postings in the same pruned branch across every
-    * root) and the one-row stats table is rebuilt driver-side from the
-    * metas' exact integer-valued sums. Per-branch `__bkt=` partition
-    * pruning holds in every root of the union.
-    *
-    * `pins` (r15, [[Snapshots]]): restrict the open to exactly the named
-    * committed batches and tombstone dirs — the capture-time view. Every
-    * pinned batch must still be committed on disk (generations are only
-    * deleted whole, so a missing one means the pin was violated) and every
-    * pinned tombstone must still be visible ([[Tombstones.read]] refuses
-    * otherwise); post-capture batches and deletes are simply not read.
-    */
   /** Exact schemas of the persisted layout components, as [[bm25WriteIndex]]
     * / [[bm25AppendIndex]] write them (r16, guide §1/§2 job-shape): passing
     * the known schema to `spark.read` skips the footer/schema-inference JOB
@@ -398,77 +376,58 @@ object Lexical {
     org.apache.spark.sql.types.StructField("n_docs", org.apache.spark.sql.types.DoubleType),
     org.apache.spark.sql.types.StructField("avgdl", org.apache.spark.sql.types.DoubleType)))
 
+  /** Open a [[bm25WriteIndex]] directory: the base bucket layout unioned
+    * with every COMMITTED append batch (see [[bm25AppendIndex]] — batches
+    * without the `_COMMITTED` marker are in-flight or failed appends and
+    * are ignored). When batches exist the baked `df`/`contrib0` columns are
+    * DROPPED — they were computed against the base corpus only and are
+    * stale the moment a batch lands — so every search recomputes df from
+    * its pruned scan (exact: term-hash bucketing with the shared modulus
+    * puts all of a term's postings in the same pruned branch across every
+    * root) and the one-row stats table is rebuilt driver-side from the
+    * metas' exact integer-valued sums. Per-branch `__bkt=` partition
+    * pruning holds in every root of the union.
+    *
+    * `pins` (r15, [[Snapshots]]): restrict the open to exactly the named
+    * committed batches and tombstone dirs — the capture-time view. Every
+    * pinned batch must still be committed on disk (generations are only
+    * deleted whole, so a missing one means the pin was violated) and every
+    * pinned tombstone must still be visible ([[Tombstones.read]] refuses
+    * otherwise); post-capture batches and deletes are simply not read.
+    */
   def bm25OpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): Bm25Index =
     bm25OpenIndex(spark, path, None)
 
   def bm25OpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       pins: Option[IndexPins]): Bm25Index = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, "bm25_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath), s"no BM25 index at $path (missing bm25_meta.json)")
-    val in = fs.open(metaPath)
-    val metaStr = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(metaStr)
-    require(Option(node.get("type")).exists(_.asText() == "bm25"),
-      s"$path/bm25_meta.json is not a bm25 index meta file")
-    val batchesDir = new org.apache.hadoop.fs.Path(path, "batches")
-    val committedAll =
-      if (!fs.exists(batchesDir)) Seq.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(batchesDir).toSeq
-        .filter(st => st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_COMMITTED")))
-        .map(_.getPath).sortBy(_.toString)
-    val committed = pins match {
-      case None => committedAll
-      case Some(p) =>
-        val present = committedAll.filter(b => p.batches.contains(b.getName))
-        val missing = p.batches -- present.map(_.getName)
-        require(missing.isEmpty,
-          s"pinned batch dir(s) ${missing.toSeq.sorted.mkString(", ")} not " +
-            s"committed under $path/batches — the snapshot's pins were violated")
-        present
-    }
-    val baseNRows = Option(node.get("n_rows")).map(_.asLong())
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = IndexLayout.readMeta(fs, path, IndexLayout.Bm25)
+    val batches = IndexLayout.openBatches(fs, path, pins)
+    val nBuckets = meta.get("n_buckets").asInt()
+    val baseNRows = meta.get("n_rows").asLong()
     // committed tombstones (r13): exclusion + exact stat deltas; None in the
     // common no-deletes case (one directory-exists check). Pinned opens
     // (r15) restrict to the capture-time names — both restrictions feed the
     // shareKey below, so a pinned view never aliases a live mirror.
     val dels = Tombstones.read(spark, path, pins.map(_.deletes))
-    val idx = if (committed.isEmpty && dels.isEmpty) {
+    val idx = if (batches.isEmpty && dels.isEmpty) {
       Bm25Index(
         spark.read.schema(postingsReadSchema).parquet(s"$path/postings"),
         spark.read.schema(statsReadSchema).parquet(s"$path/stats"),
-        node.get("n_buckets").asInt(),
-        // absent in pre-r8 layouts: searches simply skip the fast path
-        baseNRows,
-        // absent in pre-r10 layouts: searches recompute contribs from tf/dl/df
-        for (k1 <- Option(node.get("contrib_k1")); b <- Option(node.get("contrib_b")))
-          yield (k1.asDouble(), b.asDouble()))
+        nBuckets, Some(baseNRows),
+        Some((meta.get("contrib_k1").asDouble(), meta.get("contrib_b").asDouble())))
     } else {
-      // appended/tombstoned index: merged stats need the base corpus' exact
-      // sums — bm25AppendIndex/bm25DeleteFromIndex refuse to land on a meta
-      // without them, so hitting this means the dirs were hand-copied onto
-      // an old layout
-      require(node.has("n_docs") && node.has("sum_dl"),
-        s"$path has committed append batches or tombstones but its meta " +
-          "predates the n_docs/sum_dl record; rebuild or compact with the " +
-          "current writer")
-      val batchMetas = committed.map { b =>
-        val bin = fs.open(new org.apache.hadoop.fs.Path(b, "batch_meta.json"))
-        val s = try scala.io.Source.fromInputStream(bin, "UTF-8").mkString finally bin.close()
-        mapper.readTree(s)
-      }
       val core = Seq("doc_id", "term", "tf", "dl", "__bkt").map(col)
       val raw = (spark.read.schema(postingsReadSchema)
         .parquet(s"$path/postings").select(core: _*) +:
-        committed.zip(batchMetas).collect {
+        batches.collect {
           // zero-posting batches (all-blank docs) have stats but no postings
           // dir — an empty partitioned parquet dir has no footers and would
           // corrupt this very open (the minhash/ann append lesson)
-          case (b, bm) if bm.get("n_rows").asLong() > 0L =>
+          case b if b.nRows > 0L =>
             spark.read.schema(batchPostingsReadSchema)
-              .parquet(s"$b/postings").select(core: _*)
+              .parquet(s"${b.dir}/postings").select(core: _*)
         }).reduce(_.unionByName(_))
       // tombstone exclusion over the merged scan: df recomputes in-plan over
       // the FILTERED postings (the same mechanism that makes appends exact),
@@ -478,34 +437,29 @@ object Lexical {
       // corpus stats shrink by the tombstones' exact recorded sums — the
       // deltas were measured against the live index at delete time, so the
       // merged n_docs/avgdl equal a rebuild-without-the-deleted-docs'
-      val nDocs = node.get("n_docs").asDouble() +
-        batchMetas.map(_.get("n_docs").asDouble()).sum -
+      val nDocs = meta.get("n_docs").asDouble() +
+        batches.map(_.meta.get("n_docs").asDouble()).sum -
         dels.map(_.nDocs).getOrElse(0.0)
-      val sumDl = node.get("sum_dl").asDouble() +
-        batchMetas.map(_.get("sum_dl").asDouble()).sum -
+      val sumDl = meta.get("sum_dl").asDouble() +
+        batches.map(_.meta.get("sum_dl").asDouble()).sum -
         dels.map(_.sumDl).getOrElse(0.0)
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
       val stats = spark.createDataFrame(
         java.util.Arrays.asList(Row(nDocs, sumDl / nDocs)),
         StructType(Seq(StructField("n_docs", DoubleType, nullable = false),
           StructField("avgdl", DoubleType, nullable = false))))
-      val appended = batchMetas.map(_.get("n_rows").asLong()).sum
-      Bm25Index(postings, stats, node.get("n_buckets").asInt(),
+      val appended = batches.map(_.nRows).sum
+      Bm25Index(postings, stats, nBuckets,
         // scan-size estimate: tombstoned rows are still SCANNED (the
         // exclusion filters after the read), so the gate estimate keeps them
-        baseNRows.map(_ + appended),
+        Some(baseNRows + appended),
         // stale by construction — searches must recompute from tf/dl
         bakedParams = None, appendedPostings = appended,
         deletedPostings = dels.map(_.nRows).getOrElse(0L))
     }
-    // shared-mirror key (judge r12 #5): qualified path + the sorted
-    // committed-batch names + the sorted tombstone names — the immutable
-    // inputs the resident mirror is a function of, so two opens of one
-    // generation refcount ONE mirror and a new delete keys a NEW mirror
-    idx.residentHolder.shareKey = Some(
-      s"bm25:${fs.makeQualified(new org.apache.hadoop.fs.Path(path))}#" +
-        committed.map(_.getName).mkString(",") + "!" +
-        dels.map(_.names.mkString(",")).getOrElse(""))
+    // shared-mirror key (judge r12 #5): a new delete keys a NEW mirror
+    idx.residentHolder.shareKey =
+      Some(IndexLayout.shareKey(fs, IndexLayout.Bm25, path, batches, dels))
     idx
   }
 
@@ -536,29 +490,14 @@ object Lexical {
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, docId: String, docText: String,
       batchId: String): Boolean = {
-    require(batchId.matches("[A-Za-z0-9._-]+"),
-      s"batchId must match [A-Za-z0-9._-]+ (it names a directory), got '$batchId'")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batchDir = IndexLayout.beginBatch(fs, path, batchId) match {
+      case Some(d) => d
+      case None => return false
+    }
     requireIntegralId(batch, docId, "batch")
-    val metaPath = new org.apache.hadoop.fs.Path(path, "bm25_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(metaPath), s"no BM25 index at $path (missing bm25_meta.json)")
-    val in = fs.open(metaPath)
-    val metaStr = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(metaStr)
-    require(Option(node.get("type")).exists(_.asText() == "bm25"),
-      s"$path/bm25_meta.json is not a bm25 index meta file")
-    require(node.has("n_docs") && node.has("sum_dl"),
-      s"$path predates the n_docs/sum_dl meta record appends merge stats " +
-        "from; rebuild (or compact) once with the current writer first")
-    val nBuckets = node.get("n_buckets").asInt()
-    val batchDir = new org.apache.hadoop.fs.Path(s"$path/batches/$batchId")
-    val marker = new org.apache.hadoop.fs.Path(batchDir, "_COMMITTED")
-    if (fs.exists(marker)) return false
-    // folded into the base by a compaction — the ledger witnesses it now
-    if (IndexMaintenance.absorbedBatches(fs, path).contains(batchId)) return false
-    // uncommitted leftover from a failed attempt: invisible to open(), safe
-    // to drop wholesale and rewrite
-    if (fs.exists(batchDir)) fs.delete(batchDir, true)
+    val nBuckets = IndexLayout.readMeta(fs, path, IndexLayout.Bm25).get("n_buckets").asInt()
     // batch stats in one narrow pass: doc count + exact token-count sum
     // (the same size(terms(...)) the build's stats aggregate uses)
     val st = batch.agg(
@@ -583,14 +522,8 @@ object Lexical {
       postings.repartition(col("__bkt"))
         .write.mode("overwrite").partitionBy("__bkt").parquet(s"$batchDir/postings")
     } else fs.mkdirs(batchDir)
-    // per-batch counts ride INSIDE the batch dir (the shared meta stays
-    // immutable — mutating it would break the marker protocol's atomicity)
-    val bmeta = fs.create(new org.apache.hadoop.fs.Path(batchDir, "batch_meta.json"), false)
-    try bmeta.write(
-      (s"""{"n_rows": $nRows, "n_docs": ${st.getDouble(0)}, """ +
-        s""""sum_dl": ${st.getDouble(1)}}""").getBytes("UTF-8"))
-    finally bmeta.close()
-    fs.create(marker, false).close()
+    IndexLayout.commitBatch(fs, batchDir, nRows,
+      s""", "n_docs": ${st.getDouble(0)}, "sum_dl": ${st.getDouble(1)}""")
     postings.unpersist()
     true
   }
@@ -625,21 +558,10 @@ object Lexical {
   def bm25DeleteFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, idCol: String, delId: String): Boolean = {
-    require(delId.matches("[A-Za-z0-9._-]+"),
-      s"delId must match [A-Za-z0-9._-]+ (it names a directory), got '$delId'")
+    IndexLayout.requireDirName("delId", delId)
     requireIntegralId(ids, idCol, "ids")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // refuse BEFORE landing anything: a tombstone on a meta without the
-    // exact base sums would brick the next open, not this call
-    val metaPath = new org.apache.hadoop.fs.Path(path, "bm25_meta.json")
-    require(fs.exists(metaPath), s"no BM25 index at $path (missing bm25_meta.json)")
-    val min = fs.open(metaPath)
-    val mStr = try scala.io.Source.fromInputStream(min, "UTF-8").mkString finally min.close()
-    val mNode = new com.fasterxml.jackson.databind.ObjectMapper().readTree(mStr)
-    require(mNode.has("n_docs") && mNode.has("sum_dl"),
-      s"$path predates the n_docs/sum_dl meta record deletes adjust stats " +
-        "from; rebuild (or compact) once with the current writer first")
     if (Tombstones.alreadyDeleted(fs, path, delId)) return false
     // open() excludes prior tombstones, so re-deleting an already-deleted
     // doc under a NEW delId resolves to "not present" and moves no stats
@@ -683,19 +605,11 @@ object Lexical {
     */
   def bm25CompactIndex(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String): Unit = {
-    require(srcPath != dstPath,
-      "compact is non-in-place: dstPath must differ from srcPath " +
-        "(an overwrite of the layout being read would destroy the input)")
+    IndexLayout.requireNonInPlace(srcPath, dstPath)
     val idx = bm25OpenIndex(spark, srcPath)
     bm25WriteIndex(idx.postings.select("doc_id", "term", "tf", "dl"),
       idx.stats, dstPath, idx.nBuckets)
-    // ledger the folded batch ids (and applied tombstones) so a
-    // crash-replayed append/delete of one of them against the compacted
-    // layout stays an idempotent no-op
-    val fs = new org.apache.hadoop.fs.Path(srcPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMaintenance.carryLedger(fs, srcPath, dstPath)
-    Tombstones.carryDeleteLedger(fs, srcPath, dstPath)
+    IndexLayout.carryLedgers(spark, srcPath, dstPath)
   }
 
   /** Driver materialization bound for a search's exploded (query_id, term)

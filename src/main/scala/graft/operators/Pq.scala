@@ -197,9 +197,7 @@ object Pq {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    val node = IndexLayout.readJson(fs, p)
     val flatNode = node.get("flat")
     val flat = new Array[Double](flatNode.size())
     var i = 0

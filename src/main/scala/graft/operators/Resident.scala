@@ -59,7 +59,7 @@ object Resident {
     * bound above is a proxy — a wide-shingle MinHash mirror runs ~39 MB at
     * the same 131k rows where an ANN mirror runs ~1 MB — and bytes are the
     * real constraint on a long-lived server. Unset = the row bound alone
-    * governs (the pre-r13 behavior); set, an index whose PINNED frames'
+    * governs; set, an index whose PINNED frames'
     * accounted cache size exceeds the budget is declined residency and
     * keeps its 1-job pinned plans (a [[ServingSession]] still swaps
     * generations correctly — it just never builds the mirror, and

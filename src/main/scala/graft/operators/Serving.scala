@@ -5,8 +5,8 @@ package graft.operators
   * so when a search's estimated pruned scan (from the row count the index
   * meta records at write time) fits under this budget, the scoring chain
   * runs as ONE single-partition stage (`coalesce(1)` lets every aggregate
-  * elide its exchange). Above the budget — or on a pre-r8 index without a
-  * recorded row count — the parallel plan runs unchanged. Results are
+  * elide its exchange). Above the budget — or on an in-memory index, which
+  * has no recorded row count — the parallel plan runs unchanged. Results are
   * identical either way: the bounded top-k and ordered-sum aggregates are
   * partition-order-invariant (spec-pinned).
   */

@@ -88,8 +88,7 @@ object Snapshots {
     * move one) and on a root with no committed generation.
     */
   def create(spark: SparkSession, root: String, name: String): Info = {
-    require(name.matches("[A-Za-z0-9._-]+"),
-      s"snapshot name must match [A-Za-z0-9._-]+ (it names a directory), got '$name'")
+    IndexLayout.requireDirName("snapshot name", name)
     val fs = fsOf(spark, root)
     val dir = snapPath(root, name)
     require(!fs.exists(new Path(dir, Marker)),
@@ -98,27 +97,23 @@ object Snapshots {
     val gen = IndexMaintenance.currentGeneration(spark, root)
     require(gen >= 0, s"no committed generation under $root to snapshot")
     val p = IndexMaintenance.genPath(root, gen)
-    val batches = IndexMaintenance.committedBatchIds(fs, p)
+    val batches = IndexLayout.committedBatchIds(fs, p)
     val deletes = Tombstones.visibleDeleteNames(fs, p)
     val info = Info(name, gen, batches, deletes, System.currentTimeMillis())
     // uncommitted leftover from a crashed create: invisible, safe to drop
     if (fs.exists(dir)) fs.delete(dir, true)
-    val out = fs.create(new Path(dir, ManifestFile), false)
     def arr(xs: Seq[String]): String =
       xs.sorted.map(x => "\"" + x + "\"").mkString("[", ", ", "]")
-    try out.write(
-      (s"""{"name": "$name", "gen": $gen, "at": ${info.at}, """ +
-        s""""batches": ${arr(batches)}, "deletes": ${arr(deletes)}}""")
-        .getBytes("UTF-8"))
-    finally out.close()
+    IndexLayout.writeJson(fs, new Path(dir, ManifestFile),
+      s"""{"name": "$name", "gen": $gen, "at": ${info.at}, """ +
+        s""""batches": ${arr(batches)}, "deletes": ${arr(deletes)}}""",
+      overwrite = false)
     fs.create(new Path(dir, Marker), false).close()
     info
   }
 
   private def readInfo(fs: FileSystem, dir: Path): Info = {
-    val in = fs.open(new Path(dir, ManifestFile))
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    val n = IndexLayout.readJson(fs, new Path(dir, ManifestFile))
     def arr(field: String): Seq[String] = {
       val a = n.get(field)
       if (a == null) Seq.empty else (0 until a.size()).map(a.get(_).asText())
@@ -231,10 +226,8 @@ object Snapshots {
     IndexMaintenance.generationAsOf(spark, root, atMillis).map { g =>
       val p = IndexMaintenance.genPath(root, g)
       val fs = fsOf(spark, root)
-      val batches = IndexMaintenance.committedBatchIds(fs, p).filter { b =>
-        fs.getFileStatus(
-          new Path(s"$p/batches/$b/_COMMITTED")).getModificationTime <= atMillis
-      }
+      val batches = IndexLayout.committedBatchIds(fs, p)
+        .filter(b => IndexLayout.batchCommittedAt(fs, p, b) <= atMillis)
       val deletes = Tombstones.deleteNamesAsOf(fs, p, atMillis)
       Info(s"asof-$atMillis", g, batches, deletes, atMillis)
     }

@@ -551,8 +551,8 @@ object Stress {
         }.getOrElse(0L)
         (e, nBatch, nSurv,
           Dedup.minhashOpenIndex(spark, cur(mhRoot)).unionFanIn,
-          IndexMaintenance.committedBatchIds(fs, cur(bmRoot)).size,
-          IndexMaintenance.committedBatchIds(fs, cur(annRoot)).size,
+          IndexLayout.committedBatchIds(fs, cur(bmRoot)).size,
+          IndexLayout.committedBatchIds(fs, cur(annRoot)).size,
           jobs, maintJobs)
       }
     } finally spark.sparkContext.removeSparkListener(listener)

@@ -101,6 +101,10 @@ object Tombstones {
   private[operators] def dirOf(path: String, delId: String): Path =
     new Path(new Path(path, DelDir), delId)
 
+  /** One committed tombstone dir's `delete_meta.json`. */
+  private def deleteMeta(fs: FileSystem, dir: Path) =
+    IndexLayout.readJson(fs, new Path(dir, MetaFile))
+
   /** Committed tombstone directories under `path/deletes`, name-sorted —
     * the same visibility rule as the append batches: no `_COMMITTED`, not
     * there.
@@ -126,11 +130,8 @@ object Tombstones {
     * silently resurrecting every taken-down doc).
     */
   private[operators] def foldedDeletes(fs: FileSystem, path: String): Set[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     committedDeleteDirs(fs, path).flatMap { d =>
-      val in = fs.open(new Path(d, MetaFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val node = mapper.readTree(s).get("folds")
+      val node = deleteMeta(fs, d).get("folds")
       if (node == null) Nil
       else (0 until node.size()).map(node.get(_).asText())
         .filterNot(_ == d.getName)
@@ -173,20 +174,16 @@ object Tombstones {
     *  - a MIX → the window is genuinely destroyed: the per-dir id
     *    partition a partial window needs is what the union erased. REFUSE
     *    — consolidation is GC, GC destroys history, and silently
-    *    under-excluding would serve taken-down docs into a replay. Same
-    *    answer for a pre-r15 fold without `folded_ats`. The documented
-    *    remedy is a named [[Snapshots]] pin, whose preserve set keeps
-    *    exactly the dirs a guaranteed as-of read needs.
+    *    under-excluding would serve taken-down docs into a replay. The
+    *    documented remedy is a named [[Snapshots]] pin, whose preserve set
+    *    keeps exactly the dirs a guaranteed as-of read needs.
     */
   private[operators] def deleteNamesAsOf(
       fs: FileSystem, path: String, atMillis: Long): Seq[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     case class D(name: String, mtime: Long, folds: Seq[String],
         foldedAts: Map[String, Long])
     val ds = committedDeleteDirs(fs, path).map { d =>
-      val in = fs.open(new Path(d, MetaFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val node = mapper.readTree(s)
+      val node = deleteMeta(fs, d)
       val f = node.get("folds")
       val folds =
         if (f == null) Seq.empty[String]
@@ -214,7 +211,7 @@ object Tombstones {
           "is gone). Use a named snapshot to guarantee as-of reads across " +
           "folds.")
       if (unknown.nonEmpty)
-        refuse(s"predates the folded_ats record for ${unknown.sorted.mkString(", ")}")
+        refuse(s"has no commit instant for ${unknown.sorted.mkString(", ")}")
       val known = ats.map(_._2.get)
       if (known.forall(_ <= atMillis)) include += f.name
       else if (!known.forall(_ > atMillis))
@@ -235,15 +232,13 @@ object Tombstones {
   private[operators] def appliedDeletes(fs: FileSystem, path: String): Set[String] = {
     val p = new Path(path, LedgerFile)
     if (!fs.exists(p)) return Set.empty
-    val in = fs.open(p)
-    val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s).get("applied")
+    val node = IndexLayout.readJson(fs, p).get("applied")
     (0 until node.size()).map(node.get(_).asText()).toSet
   }
 
   /** Write `dstPath`'s delete ledger = `srcPath`'s ledger ∪ the tombstones
     * the compaction just applied. Called by the compactors AFTER the new
-    * layout is fully written, alongside [[IndexMaintenance.carryLedger]].
+    * layout is fully written, from [[IndexLayout.carryLedgers]].
     */
   private[operators] def carryDeleteLedger(
       fs: FileSystem, srcPath: String, dstPath: String): Unit = {
@@ -256,11 +251,9 @@ object Tombstones {
       committedDeleteDirs(fs, srcPath).map(_.getName) ++
       foldedDeletes(fs, srcPath)
     if (all.isEmpty) return
-    val out = fs.create(new Path(dstPath, LedgerFile), true)
-    try out.write(all.toSeq.sorted
-      .map(id => "\"" + id + "\"").mkString("{\"applied\": [", ", ", "]}")
-      .getBytes("UTF-8"))
-    finally out.close()
+    IndexLayout.writeJson(fs, new Path(dstPath, LedgerFile),
+      all.toSeq.sorted.map(id => "\"" + id + "\"").mkString("{\"applied\": [", ", ", "]}"),
+      overwrite = true)
   }
 
   /** True when `delId` is already visible (committed) or ledgered (applied
@@ -289,14 +282,13 @@ object Tombstones {
     // a corpus): one file keeps later opens' exclusion read to one footer
     foundIds.select(col("id").cast("long").as("id"))
       .coalesce(1).write.parquet(new Path(dir, "ids").toString)
-    val meta = fs.create(new Path(dir, MetaFile), false)
-    try meta.write(
-      (s"""{"n_ids": $nIds, "n_rows": $nRows, """ +
+    IndexLayout.writeJson(fs, new Path(dir, MetaFile),
+      s"""{"n_ids": $nIds, "n_rows": $nRows, """ +
         s""""n_docs": $nDocs, "sum_dl": $sumDl, """ +
         // wall timestamp for the audit surface (the maintenance-log move):
         // WHEN was this takedown applied — compliance wants the answer
-        s""""at": ${System.currentTimeMillis()}}""").getBytes("UTF-8"))
-    finally meta.close()
+        s""""at": ${System.currentTimeMillis()}}""",
+      overwrite = false)
     fs.create(new Path(dir, Marker), false).close()
   }
 
@@ -305,7 +297,7 @@ object Tombstones {
     * timestamp the takedown was applied). Compliance's question — "what was
     * removed, how much, and when" — answered from the index directory alone;
     * exposed to SQL as the `graft_index_deletes` TVF. Empty frame when the
-    * index has no tombstones; pre-r13 metas without `at` read back as null.
+    * index has no tombstones.
     */
   def deletesDf(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types._
@@ -314,19 +306,15 @@ object Tombstones {
       StructField("n_rows", LongType), StructField("n_docs", DoubleType),
       StructField("sum_dl", DoubleType), StructField("at", LongType)))
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     // visible, not raw-committed: a consolidated-away dir surviving in the
     // fold's crash window must not double-report its deltas (the fold row
     // itself carries the summed deltas under its own del_id)
     val rows: java.util.List[org.apache.spark.sql.Row] =
       visibleDeleteDirs(fs, path).map { d =>
-        val in = fs.open(new Path(d, MetaFile))
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val n = mapper.readTree(s)
+        val n = deleteMeta(fs, d)
         org.apache.spark.sql.Row(d.getName, n.get("n_ids").asLong(),
           n.get("n_rows").asLong(), n.get("n_docs").asDouble(),
-          n.get("sum_dl").asDouble(),
-          Option(n.get("at")).map(v => java.lang.Long.valueOf(v.asLong())).orNull)
+          n.get("sum_dl").asDouble(), n.get("at").asLong())
       }.asJava
     spark.createDataFrame(rows, schema)
   }
@@ -368,12 +356,9 @@ object Tombstones {
         present
     }
     if (dirs.isEmpty) return None
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     var nIds = 0L; var nRows = 0L; var nDocs = 0.0; var sumDl = 0.0
     dirs.foreach { d =>
-      val in = fs.open(new Path(d, MetaFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val node = mapper.readTree(s)
+      val node = deleteMeta(fs, d)
       nIds += node.get("n_ids").asLong()
       nRows += node.get("n_rows").asLong()
       nDocs += node.get("n_docs").asDouble()
@@ -465,7 +450,6 @@ object Tombstones {
     val visible = all.filterNot(d => folded.contains(d.getName))
       .filterNot(d => preserve.contains(d.getName))
     if (visible.size <= 1) return 0
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     var nIds = 0L; var nRows = 0L; var nDocs = 0.0; var sumDl = 0.0
     val transitive = Seq.newBuilder[String]
     // each absorbed name's COMMIT INSTANT rides along (r15): the sweep
@@ -476,9 +460,7 @@ object Tombstones {
     // the absorbed fold's own folded_ats (transitively complete)
     val foldedAts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     visible.foreach { d =>
-      val in = fs.open(new Path(d, MetaFile))
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val node = mapper.readTree(s)
+      val node = deleteMeta(fs, d)
       nIds += node.get("n_ids").asLong()
       nRows += node.get("n_rows").asLong()
       nDocs += node.get("n_docs").asDouble()
@@ -514,16 +496,15 @@ object Tombstones {
       .parquet(visible.map(d => new Path(d, "ids").toString): _*)
       .distinct()
       .coalesce(1).write.parquet(new Path(dir, "ids").toString)
-    val meta = fs.create(new Path(dir, MetaFile), false)
-    try meta.write(
-      (s"""{"n_ids": $nIds, "n_rows": $nRows, """ +
+    IndexLayout.writeJson(fs, new Path(dir, MetaFile),
+      s"""{"n_ids": $nIds, "n_rows": $nRows, """ +
         s""""n_docs": $nDocs, "sum_dl": $sumDl, """ +
         s""""at": ${System.currentTimeMillis()}, """ +
         transitive.result().sorted.map(id => "\"" + id + "\"")
           .mkString(""""folds": [""", ", ", "], ") +
         foldedAts.toSeq.sortBy(_._1).map { case (n, t) => s""""$n": $t""" }
-          .mkString(""""folded_ats": {""", ", ", "}}")).getBytes("UTF-8"))
-    finally meta.close()
+          .mkString(""""folded_ats": {""", ", ", "}}"),
+      overwrite = false)
     fs.create(new Path(dir, Marker), false).close()
     // sweep AFTER the commit: a crash leaves absorbed-but-present dirs that
     // readers skip via the folds array and the next call deletes

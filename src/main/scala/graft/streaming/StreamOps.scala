@@ -348,8 +348,7 @@ object StreamOps {
       bm25Path: Option[String] = None,
       ann: Option[(String, Embedder)] = None,
       denylistRoot: Option[String] = None): DataFrame = {
-    require(batchId.matches("[A-Za-z0-9._-]+"),
-      s"batchId must match [A-Za-z0-9._-]+ (it names a directory), got '$batchId'")
+    graft.operators.IndexLayout.requireDirName("batchId", batchId)
     import graft.operators.{Dedup, Lexical}
     val spark = batch.sparkSession
     // denylist BEFORE survivor computation (r13): a re-crawled taken-down
@@ -387,8 +386,9 @@ object StreamOps {
       // skip the embed work entirely when the batch is already committed
       // (the common replay case) — annAppendIndex would no-op anyway, but
       // only after paying the embedding
-      val marker = new org.apache.hadoop.fs.Path(s"$p/batches/$batchId/_COMMITTED")
-      if (!marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)) {
+      val annFs = new org.apache.hadoop.fs.Path(p)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!graft.operators.IndexLayout.isBatchCommitted(annFs, p, batchId)) {
         val texts = fresh.select(col(idCol), col(textCol))
         val vecs =
           if (embedder.preferDedup)
@@ -594,20 +594,13 @@ object Denylist {
 
   private val Dir = "denylist"
   private val Marker = "_COMMITTED"
-  /** The ids parquet written by [[append]]/[[compact]] is a single long
-    * column (r16: the known schema skips the footer/schema-inference job
-    * per read — see Lexical.postingsReadSchema for the rationale).
-    */
-  private val idsReadSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
 
   /** Record `ids` under `delId`; idempotent (a committed `delId` returns
     * false and writes nothing — the takedown replay contract).
     */
   def append(spark: org.apache.spark.sql.SparkSession, root: String,
       ids: DataFrame, idCol: String, delId: String): Boolean = {
-    require(delId.matches("[A-Za-z0-9._-]+"),
-      s"delId must match [A-Za-z0-9._-]+ (it names a directory), got '$delId'")
+    graft.operators.IndexLayout.requireDirName("delId", delId)
     val dir = new Path(new Path(root, Dir), delId)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(dir, Marker))) return false
@@ -635,7 +628,7 @@ object Denylist {
     // read + left-deep union fold: at the documented ~10k-entry scale the
     // fold cost 10k footer round-trips and a 10k-node plan per ingest
     // epoch (review r13); identical schemas make this safe
-    else Some(spark.read.schema(idsReadSchema).parquet(dirs: _*).distinct())
+    else Some(spark.read.schema(graft.operators.Tombstones.idsReadSchema).parquet(dirs: _*).distinct())
   }
 
   /** Drop denylisted rows from `df` — a distributed anti-join; no-op
@@ -691,7 +684,7 @@ object Denylist {
       .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, Marker)))
       .map(_.getPath)
     if (committed.size <= 1) return 0
-    val all = spark.read.schema(idsReadSchema)
+    val all = spark.read.schema(graft.operators.Tombstones.idsReadSchema)
       .parquet(committed.map(p => s"$p/ids"): _*).distinct()
       .localCheckpoint(true) // pin: the write below must not re-read dirs mid-delete
     var k = 0

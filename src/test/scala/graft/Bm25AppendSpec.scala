@@ -189,24 +189,4 @@ class Bm25AppendSpec extends AnyFunSuite {
         search(rebuilt, q, k1 = 0.6, b = 0.9), s"custom params, seed=$seed")
     }
   }
-
-  test("pre-r10 meta without n_docs/sum_dl: append refuses with a rebuild hint") {
-    val dir = tmp("graft_bm25_old_spec")
-    build(docs(0 until 20), dir)
-    // strip the exact-merge fields to simulate an old layout
-    val metaPath = new org.apache.hadoop.fs.Path(dir, "bm25_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(metaPath)
-    val meta = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val stripped = meta.replaceAll(""", "n_docs":[^,}]*""", "")
-      .replaceAll(""", "sum_dl":[^,}]*""", "")
-    val out = fs.create(metaPath, true)
-    try out.write(stripped.getBytes("UTF-8")) finally out.close()
-    val e = intercept[IllegalArgumentException] {
-      Lexical.bm25AppendIndex(spark, dir, docs(100 until 105), "doc_id", "text", "b1")
-    }
-    assert(e.getMessage.contains("rebuild"))
-    // the stripped meta still opens and searches fine without batches
-    assert(search(Lexical.bm25OpenIndex(spark, dir), docs(0 until 2)).nonEmpty)
-  }
 }

@@ -1452,17 +1452,12 @@ class EngineSpec extends AnyFunSuite {
       jaccardThreshold = 0.5)
     assert(viaBig.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet ==
       fastRows, "fallback path must find the same pairs (filler rows match nothing)")
-    // append: nRows sums base + committed batch counts; a batch without its
-    // count file (pre-r10 append) degrades nRows to None, never to a wrong sum
+    // append: nRows sums base + committed batch counts
     assert(Dedup.minhashAppendIndex(spark, tmp,
       Seq((100L, "shared common prefix tokens for base 0 alpha beta gamma delta " +
         "epsilon zeta eta theta variant 9")).toDF("id", "text"), "id", "text", "b1"))
     val app = Dedup.minhashOpenIndex(spark, tmp)
     assert(app.nRows.contains(app.postings.count()))
-    val fs = new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$tmp/batches/b1/batch_meta.json"), false)
-    assert(Dedup.minhashOpenIndex(spark, tmp).nRows.isEmpty)
     idx.postings.unpersist()
     idx.shingles.unpersist()
   }

@@ -1,0 +1,132 @@
+package graft
+
+import graft.operators.{Ann, Dedup, IndexLayout, Lexical}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The shared on-disk layout ([[IndexLayout]]), once per index family:
+  * every writer stamps the current `format_version`, every reader (open,
+  * append, delete) refuses a root meta without it or at another version
+  * with a rebuild hint — before anything lands — and a committed batch
+  * missing its `batch_meta.json` fails the open.
+  */
+class IndexLayoutSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def docs(ids: Range): DataFrame = {
+    import spark.implicits._
+    val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
+    ids.map { i =>
+      val words = (0 until 8).map(j => vocab((i + j * 3) % vocab.size))
+      (i.toLong, (words :+ s"id$i").mkString(" "),
+        Array.tabulate(8)(d => math.sin(i * 13 + d * 7)))
+    }.toDF("id", "text", "vec")
+  }
+
+  /** One family's write / open / append / delete, keyed by index dir. */
+  private case class Family(
+      name: String, metaFile: String,
+      write: String => Unit,
+      open: String => Unit,
+      append: (String, String) => Boolean,
+      delete: (String, String) => Boolean,
+      compact: (String, String) => Unit)
+
+  private val families = Seq(
+    Family("bm25", "bm25_meta.json",
+      dir => {
+        val (postings, stats) = Lexical.bm25BuildIndex(docs(0 until 20), "id", "text")
+        Lexical.bm25WriteIndex(postings, stats, dir, nBuckets = 4)
+      },
+      dir => Lexical.bm25OpenIndex(spark, dir),
+      (dir, b) => Lexical.bm25AppendIndex(spark, dir, docs(100 until 104), "id", "text", b),
+      (dir, d) => Lexical.bm25DeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
+      (src, dst) => Lexical.bm25CompactIndex(spark, src, dst)),
+    Family("ann", "ann_meta.json",
+      dir => {
+        val (cells, cents) = Ann.annBuildIndex(docs(0 until 20), "id", "vec", nCentroids = 3)
+        Ann.annWriteIndex(cells, cents, dir)
+      },
+      dir => Ann.annOpenIndex(spark, dir),
+      (dir, b) => Ann.annAppendIndex(spark, dir, docs(100 until 104), "id", "vec", b),
+      (dir, d) => Ann.annDeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
+      (src, dst) => Ann.annCompactIndex(spark, src, dst)),
+    Family("minhash", "minhash_meta.json",
+      dir => Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(docs(0 until 20), "id", "text"), dir),
+      dir => Dedup.minhashOpenIndex(spark, dir),
+      (dir, b) => Dedup.minhashAppendIndex(spark, dir, docs(100 until 104), "id", "text", b),
+      (dir, d) => Dedup.minhashDeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
+      (src, dst) => Dedup.minhashCompactIndex(spark, src, dst)))
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_layout_$tag").toString
+
+  private def readMeta(dir: String, f: Family): String = {
+    val in = fs.open(new Path(dir, f.metaFile))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def writeMeta(dir: String, f: Family, meta: String): Unit = {
+    val out = fs.create(new Path(dir, f.metaFile), true)
+    try out.write(meta.getBytes("UTF-8")) finally out.close()
+  }
+
+  private val versionField = s""""format_version": ${IndexLayout.FormatVersion}"""
+
+  for (f <- families) {
+    test(s"${f.name}: fresh writes and compactions carry the current format_version") {
+      val src = tmp(s"${f.name}_fresh")
+      f.write(src)
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readMeta(src, f))
+      assert(node.get("format_version").asInt() === IndexLayout.FormatVersion)
+      f.open(src)
+      assert(f.append(src, "b1"))
+      assert(f.delete(src, "d1"))
+      val dst = tmp(s"${f.name}_compacted")
+      f.compact(src, dst)
+      assert(readMeta(dst, f).contains(versionField))
+      f.open(dst)
+    }
+
+    test(s"${f.name}: open, append and delete refuse a missing, lower or higher version") {
+      val dir = tmp(s"${f.name}_old")
+      f.write(dir)
+      val current = readMeta(dir, f)
+      assert(current.contains(versionField + ", "))
+      val v = IndexLayout.FormatVersion
+      for ((label, replacement) <- Seq("missing" -> "",
+          "lower" -> s""""format_version": ${v - 1}, """,
+          "higher" -> s""""format_version": ${v + 1}, """)) {
+        writeMeta(dir, f, current.replace(versionField + ", ", replacement))
+        for ((verb, call) <- Seq[(String, () => Any)](
+            "open" -> (() => f.open(dir)),
+            "append" -> (() => f.append(dir, "b1")),
+            "delete" -> (() => f.delete(dir, "d1")))) {
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("rebuild"), s"$label/$verb: ${e.getMessage}")
+        }
+        // refused before anything landed
+        assert(!fs.exists(new Path(s"$dir/batches/b1")), label)
+        assert(!fs.exists(new Path(s"$dir/deletes/d1")), label)
+      }
+    }
+
+    test(s"${f.name}: a committed batch without batch_meta.json fails the open") {
+      val dir = tmp(s"${f.name}_nobm")
+      f.write(dir)
+      assert(f.append(dir, "b1"))
+      f.open(dir)
+      fs.delete(new Path(s"$dir/batches/b1/batch_meta.json"), false)
+      val e = intercept[IllegalArgumentException](f.open(dir))
+      assert(e.getMessage.contains("batch_meta.json") && e.getMessage.contains("rebuild"))
+    }
+  }
+}
