@@ -643,14 +643,11 @@ object Ann {
     import org.apache.spark.sql.types.IntegerType
     if (qRows.length <= boundQ) {
       val m = index.centroidMat
+      val buf = new graft.functions.TopKBuffer(nProbe)
+      val out = new Array[Double](m.size)
       val exploded = qRows.toSeq.flatMap { case (lid, lv) =>
+        VecScan.topK(lid, lv, m, excludeSelf = false, buf, out)
         val ln = math.sqrt(VecScan.dot(lv, lv))
-        val buf = new graft.functions.TopKBuffer(nProbe)
-        var j = 0
-        while (j < m.ids.length) {
-          buf.insert(VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j)), m.ids(j))
-          j += 1
-        }
         (0 until buf.n).map(r => (lid, lv, ln, buf.ids(r)))
       }
       val wantedCells = exploded.map(_._4).distinct
@@ -1062,8 +1059,8 @@ object Ann {
       else refineCentroids(corpus, cId, cVec, cents0, refineRounds, refineFraction, seed)
 
     // corpus → nearest centroid (exact 1-NN against the tiny centroid table;
-    // skipSizeCheck: the table is ≤nCentroids rows by construction, the
-    // fitsBroadcast census job would be pure overhead)
+    // skipSizeCheck: the table is ≤nCentroids rows by construction, so it
+    // is collected without the broadcast bound)
     val assign = SemanticJoin.knnJoinVec(
       corpus, cId, cVec,
       cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)

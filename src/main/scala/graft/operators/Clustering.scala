@@ -124,14 +124,12 @@ object Clustering extends Logging {
     * a sentinel label (DBSCAN noise) rather than their own component.
     */
   private[operators] def componentsOfEdgeIncident(edges: DataFrame): DataFrame = {
+    // the edge list is evaluated once (it is the similarity self-scan) and
+    // pinned; both directions are derived from the pinned copy
     val e0 = edges.select(
       col(edges.columns(0)).cast("long").as("src"),
       col(edges.columns(1)).cast("long").as("dst"))
-    // materialize the (symmetrized) edge list once and truncate its lineage —
-    // every iteration reuses it without re-deriving the similarity self-join
-    val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
-      .distinct()
       .localCheckpoint(true)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -141,13 +139,19 @@ object Clustering extends Logging {
     // (≤ ~80 MB of longs at the limit), so this never materializes the INPUT
     // — only the (already ε/LSH-filtered) edge list. The distributed
     // iteration below remains the path for genuinely large graphs.
-    val edgeCount = sym.count()
+    val edgeCount = e0.count()
     if (edgeCount <= smallGraphEdgeLimit(spark)) {
-      val labeled = unionFindMinLabel(
-        sym.select(col("src"), col("dst")).as[(Long, Long)].collect())
+      val labeled = unionFindMinLabel(e0.as[(Long, Long)].collect())
       return spark.createDataset(labeled).toDF("id", "component")
     }
 
+    // symmetrized once and truncated: every iteration reuses it
+    val sym = e0.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+      .distinct()
+      .localCheckpoint(true)
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint(true)
     // convergence check: per-node labels only ever decrease, so the global sum
@@ -199,8 +203,9 @@ object Clustering extends Logging {
       forceExact: Boolean = false,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     import graft.functions.VectorOps._
-    if (VecScan.fitsBroadcast(pts, "v")) {
-      VecScan.range(pts, "id", "v", pts, "id", "v", tau,
+    val mat = VecScan.collectMatIfFits(pts, "id", "v")
+    if (mat.isDefined) {
+      VecScan.range(pts, "id", "v", mat.get, tau,
         excludeSelf = true, onlyUpperPairs = onlyUpperPairs)
     } else if (!forceExact) {
       // never silent: results become approximate here, and at tau ~0.5 the

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   * Bit parity is by construction, not by re-derivation: every kernel the
   * executors run is reused verbatim on the driver —
   * [[graft.functions.TopKBuffer]] / [[TopKPayloadBuffer]] for selection,
-  * [[VecScan.dot]]/[[VecScan.cosine]] for scoring,
+  * the exact scan kernel [[VecScan.scores]] (and [[VecScan.dot]]/
+  * [[VecScan.cosine]] for a candidate rerank or an allow-listed cell) for
+  * scoring,
   * [[Quantize.quantizeArray]]/[[Quantize.dotI8Array]]/
   * [[Quantize.cosineI8Scalar]] for the int8 path, the
   * [[graft.functions.MultiOrderedSumAggregate.ByteOrder]] comparator for
@@ -559,9 +561,13 @@ object Resident {
     * SQ8 bake, `pq`/`cn` null on layouts without the PQ bake.
     */
   private[operators] final class CellMat(
-      val ids: Array[Long], val vecs: Array[Array[Double]], val norms: Array[Double],
+      val mat: VecScan.Mat,
       val codes: Array[Array[Byte]], val cn2: Array[Long],
-      val pq: Array[Array[Byte]], val cn: Array[Double])
+      val pq: Array[Array[Byte]], val cn: Array[Double]) {
+    def ids: Array[Long] = mat.ids
+    def vecs: Array[Array[Double]] = mat.vecs
+    def norms: Array[Double] = mat.norms
+  }
 
   private[operators] final class AnnResident(
       val cells: java.util.HashMap[java.lang.Long, CellMat]) extends Mirror {
@@ -624,7 +630,7 @@ object Resident {
         }
         i += 1
       }
-      cells.put(cell, new CellMat(ids, vecs, norms, codes, cn2, pq, cn))
+      cells.put(cell, new CellMat(VecScan.Mat(ids, vecs, norms), codes, cn2, pq, cn))
     }
     new AnnResident(cells)
   }
@@ -634,6 +640,13 @@ object Resident {
     StructField("right_id", LongType, nullable = false),
     StructField("score", DoubleType, nullable = false),
     StructField("rank", IntegerType, nullable = false)))
+
+  /** Score scratch for [[VecScan.scores]] over any one cell of `res`. */
+  private def cellScratch(res: AnnResident): Array[Double] = {
+    var n = 0
+    res.cells.forEach((_, m) => n = math.max(n, m.ids.length))
+    new Array[Double](n)
+  }
 
   /** Driver-side [[Ann.annSearchIndex]] scoring tail over probed cells:
     * same dot/cosine kernels, same TopKBuffer order. `probes` is the
@@ -645,17 +658,21 @@ object Resident {
       allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
     residentSearches.incrementAndGet()
     val out = Seq.newBuilder[Row]
+    val scores = cellScratch(res)
     probes.foreach { case (qid, qv, qn, cellIds) =>
       val buf = new TopKBuffer(k)
       cellIds.foreach { c =>
         val m = res.cells.get(java.lang.Long.valueOf(c))
         if (m != null) {
+          // the block kernel scores a whole cell; under an allow-list only
+          // the allowed rows are scored (the same scalar form, bit for bit)
+          if (allowed == null) VecScan.scores(qv, qn, m.mat, 0, scores)
           var i = 0
           while (i < m.ids.length) {
             // allow-list = the semi-join: disallowed ids never enter top-k
-            if (allowed == null || allowed.contains(m.ids(i)))
-              buf.insert(VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i)),
-                m.ids(i))
+            if (allowed == null) buf.insert(scores(i), m.ids(i))
+            else if (allowed.contains(m.ids(i)))
+              buf.insert(VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i)), m.ids(i))
             i += 1
           }
         }
@@ -681,12 +698,16 @@ object Resident {
       allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
     residentSearches.incrementAndGet()
     val out = Seq.newBuilder[Row]
+    val scores = cellScratch(res)
     probes.foreach { case (qid, qv, qn, cellIds) =>
       val (qCodes, qn2) = Quantize.quantizeArray(qv)
       val pool = new TopKPayloadBuffer(k * rerankFactor)
       cellIds.foreach { c =>
         val m = res.cells.get(java.lang.Long.valueOf(c))
         if (m != null) {
+          // exact scores as in searchAnnFloat: the whole cell, or the
+          // allowed rows only
+          if (allowed == null) VecScan.scores(qv, qn, m.mat, 0, scores)
           var i = 0
           while (i < m.ids.length) {
             // filter BEFORE the coarse pool — the distributed plan's allow
@@ -694,7 +715,9 @@ object Resident {
             if (allowed == null || allowed.contains(m.ids(i))) {
               val coarse = Quantize.cosineI8Scalar(
                 Quantize.dotI8Array(qCodes, m.codes(i)), qn2, m.cn2(i))
-              val exact = VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
+              val exact =
+                if (allowed == null) scores(i)
+                else VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
               pool.insert(coarse, m.ids(i), exact)
             }
             i += 1

@@ -5,18 +5,24 @@ import graft.embed.Embedder
 import graft.functions.VectorOps._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 /** The semantic-join family: exact cosine kNN join (k=1 "merge", top-k "merge_knn"),
   * threshold range join with left-outer retention ("merge_range"), blocked
   * equi+semantic join ("merge_blocking"), and semantic rollup ("aggregate_rows").
   *
-  * Physical shape (SURVEY §4.3): broadcast the (id, vec) projection of the right
-  * side, generate candidates with a BroadcastNestedLoopJoin, score with codegen'd
-  * higher-order functions, then reduce with the partial-aggregating [[TopKAgg]] —
-  * so only ≤k rows per left key ever shuffle. Exact (matches FAISS IndexFlatIP,
-  * reference: src/linktransformer/infer.py:144-151) with deterministic tie-break
-  * (score desc, right id asc).
+  * Physical shape (SURVEY §4.3): one job sizes and collects the right side's
+  * (id, vec) projection, which is broadcast as a [[VecScan.Mat]]; the left
+  * side streams through [[VecScan]]'s one exact kernel, split by pair work
+  * (left rows × right rows × dim) over up to `defaultParallelism` tasks, with
+  * no shuffle and no per-pair rows. The merges pin the scan's ≤k (or ≥τ)
+  * result before they join and order it, so the scan runs once; the blocked
+  * join co-groups both sides on the block key and scans each block with the
+  * same kernel. Over the broadcast bound the joins fall back to a shuffled
+  * crossJoin reduced by the partial-aggregating `graft_top_k`, so only ≤k
+  * rows per left key shuffle. Exact (matches FAISS IndexFlatIP, reference:
+  * src/linktransformer/infer.py:144-151) with deterministic tie-break
+  * (score desc, right id asc); a null id or vector never matches.
   */
 object SemanticJoin {
 
@@ -33,37 +39,47 @@ object SemanticJoin {
     // the broadcast path is size-guarded: an over-limit right side falls back
     // to the shuffle plan instead of collecting to the driver (100 TB safety).
     // skipSizeCheck lets callers with a size guarantee by construction (e.g. a
-    // ≤nCentroids centroid table) save the census aggregate job.
-    if (broadcastRight && (skipSizeCheck || VecScan.fitsBroadcast(right, rightVec))) {
-      // broadcast-matrix scan: zero shuffle, no per-pair rows (SURVEY §4.3)
-      VecScan.knn(left, leftId, leftVec, right, rightId, rightVec, k, excludeSelf)
-    } else {
-      // shuffle path for when neither side fits a broadcast: crossJoin pairs,
-      // partial-aggregating native top-k so only ≤k rows per left key shuffle
-      val l = left.select(col(leftId).cast("long").as("__lid"), asDouble(col(leftVec)).as("__lvec"))
-        .withColumn("__lnorm", norm(col("__lvec")))
-      val r = right.select(col(rightId).cast("long").as("__rid"), asDouble(col(rightVec)).as("__rvec"))
-        .withColumn("__rnorm", norm(col("__rvec")))
-      val pairs0 = l.crossJoin(r)
-      val pairs = if (excludeSelf) pairs0.filter(col("__lid") =!= col("__rid")) else pairs0
-      val scored = pairs.select(
-        col("__lid"), col("__rid"),
-        cosineWithNorms(dot(col("__lvec"), col("__rvec")), col("__lnorm"), col("__rnorm"))
-          .as("__score"))
-      scored.groupBy(col("__lid"))
-        .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("__rid")).as("__top"))
-        .select(col("__lid"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-        .select(
-          col("__lid").as("left_id"),
-          col("__s.id").as("right_id"),
-          col("__s.score").as("score"),
-          (col("__pos") + 1).cast(IntegerType).as("rank"))
+    // ≤nCentroids centroid table) collect without the bound.
+    val mat =
+      if (!broadcastRight) None
+      else if (skipSizeCheck) Some(VecScan.collectMat(right, rightId, rightVec))
+      else VecScan.collectMatIfFits(right, rightId, rightVec)
+    mat match {
+      case Some(m) => VecScan.knn(left, leftId, leftVec, m, k, excludeSelf)
+      case None =>
+        // shuffle path for when neither side fits a broadcast: crossJoin pairs,
+        // partial-aggregating native top-k so only ≤k rows per left key shuffle
+        val pairs0 = shuffleSide(left, leftId, leftVec, "__lid", "l")
+          .crossJoin(shuffleSide(right, rightId, rightVec, "__rid", "r"))
+        val pairs = if (excludeSelf) pairs0.filter(col("__lid") =!= col("__rid")) else pairs0
+        val scored = pairs.select(
+          col("__lid"), col("__rid"),
+          cosineWithNorms(dot(col("__lvec"), col("__rvec")), col("__lnorm"), col("__rnorm"))
+            .as("__score"))
+        scored.groupBy(col("__lid"))
+          .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("__rid")).as("__top"))
+          .select(col("__lid"), posexplode(col("__top")).as(Seq("__pos", "__s")))
+          .select(
+            col("__lid").as("left_id"),
+            col("__s.id").as("right_id"),
+            col("__s.score").as("score"),
+            (col("__pos") + 1).cast(IntegerType).as("rank"))
     }
   }
 
+  /** One `(id, vec, norm)` side of the shuffle plans, columns named by `idAs`
+    * and prefix `p`. A row with a null id or vector never matches, so no side
+    * carries one into the pairs.
+    */
+  private def shuffleSide(df: DataFrame, id: String, vec: String, idAs: String, p: String): DataFrame =
+    df.select(col(id).cast("long").as(idAs), asDouble(col(vec)).as(s"__${p}vec"))
+      .filter(col(idAs).isNotNull && col(s"__${p}vec").isNotNull)
+      .withColumn(s"__${p}norm", norm(col(s"__${p}vec")))
+
   /** Similarity range join (theta join on cosine >= tau) over precomputed vectors.
     * With `keepUnmatched` (the reference's left-outer semantics, infer.py:852-864),
-    * left ids with no match are retained with null right_id/score.
+    * left rows with no match (a null vector never matches) are retained with
+    * null right_id/score; a left row with a null id yields no row.
     */
   def rangeJoinVec(
       left: DataFrame, leftId: String, leftVec: String,
@@ -72,25 +88,24 @@ object SemanticJoin {
       excludeSelf: Boolean = false,
       keepUnmatched: Boolean = true,
       broadcastRight: Boolean = true): DataFrame = {
-    val matches =
-      if (broadcastRight && VecScan.fitsBroadcast(right, rightVec)) {
-        VecScan.range(left, leftId, leftVec, right, rightId, rightVec, tau, excludeSelf)
-      } else {
-        val l = left.select(col(leftId).cast("long").as("left_id"), asDouble(col(leftVec)).as("__lvec"))
-          .withColumn("__lnorm", norm(col("__lvec")))
-        val r = right.select(col(rightId).cast("long").as("right_id"), asDouble(col(rightVec)).as("__rvec"))
-          .withColumn("__rnorm", norm(col("__rvec")))
-        val pairs0 = l.crossJoin(r)
+    val mat = if (broadcastRight) VecScan.collectMatIfFits(right, rightId, rightVec) else None
+    mat match {
+      case Some(m) =>
+        VecScan.range(left, leftId, leftVec, m, tau, excludeSelf, keepUnmatched = keepUnmatched)
+      case None =>
+        val pairs0 = shuffleSide(left, leftId, leftVec, "left_id", "l")
+          .crossJoin(shuffleSide(right, rightId, rightVec, "right_id", "r"))
         val pairs = if (excludeSelf) pairs0.filter(col("left_id") =!= col("right_id")) else pairs0
-        pairs
+        val matches = pairs
           .withColumn("score",
             cosineWithNorms(dot(col("__lvec"), col("__rvec")), col("__lnorm"), col("__rnorm")))
           .filter(col("score") >= lit(tau))
           .select("left_id", "right_id", "score")
-      }
-    if (!keepUnmatched) matches
-    else left.select(col(leftId).cast("long").as("left_id"))
-      .join(matches, Seq("left_id"), "left")
+        if (!keepUnmatched) matches
+        else left.select(col(leftId).cast("long").as("left_id"))
+          .filter(col("left_id").isNotNull)
+          .join(matches, Seq("left_id"), "left")
+    }
   }
 
   // ---------------------------------------------------------------------------
@@ -145,9 +160,11 @@ object SemanticJoin {
     val l = withTextVec(df1, lk, LeftIdCol, embedder, sep)
     val r = withTextVec(df2, rk, RightIdCol, embedder, sep)
 
+    // materialized (lazily, by the first job that reads it): the ordering's
+    // range-partition sample would otherwise run the scan a second time
     val knn = knnJoinVec(
       l, LeftIdCol, "__graft_vec",
-      r, RightIdCol, "__graft_vec", k)
+      r, RightIdCol, "__graft_vec", k).localCheckpoint(false)
 
     // string-name joins (all names disjoint after suffixing) — dataset column
     // refs would trip DetectAmbiguousSelfJoin when df1/df2 share lineage
@@ -185,10 +202,12 @@ object SemanticJoin {
     val l = withTextVec(df1, lk, LeftIdCol, embedder, sep)
     val r = withTextVec(df2, rk, RightIdCol, embedder, sep)
 
+    // materialized for the same reason as mergeKnn's scan: the ordering
+    // samples its input before it shuffles it
     val rj = rangeJoinVec(
       l, LeftIdCol, "__graft_vec",
       r, RightIdCol, "__graft_vec",
-      tau = simThreshold, keepUnmatched = true)
+      tau = simThreshold, keepUnmatched = true).localCheckpoint(false)
 
     val (ls, rs) = Keys.suffixConflicts(
       l.drop("__graft_text", "__graft_vec"),
@@ -203,8 +222,9 @@ object SemanticJoin {
   }
 
   /** Blocked equi+semantic join — the engine's `merge_blocking`
-    * (reference: infer.py:169-274). One equi-join + one partial-agg top-1 instead
-    * of the reference's per-block Python loop; blocks present on only one side
+    * (reference: infer.py:169-274). One co-group on the block key, each block
+    * scanned by the exact kernel for its top-1 ([[blockTop1]]), instead of the
+    * reference's per-block Python loop; blocks present on only one side
     * pass through unmatched with their original (unsuffixed) columns, union'd by
     * name with nulls elsewhere (reference: infer.py:240-274).
     */
@@ -223,25 +243,7 @@ object SemanticJoin {
     val l = withTextVec(df1, lk, LeftIdCol, embedder, sep)
     val r = withTextVec(df2, rk, RightIdCol, embedder, sep)
 
-    // candidates restricted to equal block keys; null-safe equality mirrors
-    // pandas groupby (NaN blocks are dropped by pandas; we require non-null).
-    // norms are computed once per ROW before the join — inside the pair
-    // predicate they would be recomputed O(candidates) times
-    val lSide = l.select(Seq(col(LeftIdCol), asDouble(col("__graft_vec")).as("__lv")) ++ blockingVars.map(l(_)): _*)
-      .withColumn("__ln", norm(col("__lv")))
-    val rSide = r.select(Seq(col(RightIdCol), asDouble(col("__graft_vec")).as("__rv")) ++ blockingVars.map(r(_)): _*)
-      .withColumn("__rn", norm(col("__rv")))
-      .withColumnsRenamed(blockingVars.map(c => c -> s"__rb_$c").toMap)
-    val scored = lSide
-      .join(rSide, blockingVars.map(c => col(c) === col(s"__rb_$c")).reduce(_ && _))
-      .select(col(LeftIdCol), col(RightIdCol),
-        cosineWithNorms(dot(col("__lv"), col("__rv")), col("__ln"), col("__rn")).as("__score"))
-    val best = scored.groupBy(col(LeftIdCol))
-      .agg(graft.functions.VecExpressions.topK(1, col("__score"), col(RightIdCol)).as("__top"))
-      .select(col(LeftIdCol).as("left_id"),
-        col("__top")(0).getField("id").as("right_id"),
-        col("__top")(0).getField("score").as("score"))
-
+    val best = blockTop1(l, r, blockingVars, embedder.dim)
     val (ls, rs) = Keys.suffixConflicts(
       l.drop("__graft_text", "__graft_vec"),
       r.drop("__graft_text", "__graft_vec"), suffixes)
@@ -261,6 +263,70 @@ object SemanticJoin {
     matched
       .unionByName(leftOnly, allowMissingColumns = true)
       .unionByName(rightOnly, allowMissingColumns = true)
+  }
+
+  /** Best right row per left row within equal block keys:
+    * `(left_id, right_id, score)`. Both sides are co-grouped on the block
+    * key; within a block the right rows form a [[VecScan.Mat]] that each left
+    * row scans with the exact kernel (top-1, (score desc, id asc)). A null
+    * block key matches nothing (pandas drops NaN groups), nor does a null
+    * vector. The block keys are grouped in the type `===` compares them in
+    * ([[equalityTypes]]), so a block matches here exactly when the one-side
+    * anti-joins of [[mergeBlocking]] find it on both sides. The co-group
+    * runs on as many partitions as the pair work warrants
+    * ([[VecScan.slicesFor]]), which AQE does not coalesce back.
+    */
+  private def blockTop1(l: DataFrame, r: DataFrame, blockingVars: Seq[String],
+      dim: Int): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    val spark = l.sparkSession
+    val keyTypes = equalityTypes(l, r, blockingVars)
+    def keyed(df: DataFrame, id: String) = df
+      .select(blockingVars.zip(keyTypes).map { case (c, t) => col(c).cast(t).as(c) } ++
+        Seq(col(id).cast("long").as("__id"), asDouble(col("__graft_vec")).as("__v")): _*)
+      .filter(blockingVars.map(col(_).isNotNull).reduce(_ && _) &&
+        col("__id").isNotNull && col("__v").isNotNull)
+    val lk = keyed(l, LeftIdCol)
+    val rk = keyed(r, RightIdCol)
+    val parts = VecScan.slicesFor(VecScan.estimatedRows(lk.queryExecution.optimizedPlan),
+      math.min(VecScan.estimatedRows(rk.queryExecution.optimizedPlan), Int.MaxValue).toInt,
+      dim, upper = false, leftParts = 1, spark.sparkContext.defaultParallelism)
+    val keyEnc = Encoders.row(StructType(lk.schema.take(blockingVars.length)))
+    def grouped(df: DataFrame) = df.repartition(parts, blockingVars.map(col): _*)
+      .groupBy(blockingVars.map(col): _*).as[Row, Row](keyEnc, Encoders.row(df.schema))
+    val idAt = blockingVars.length
+    val pairs = VecScan.pairsScored(spark.sparkContext)
+    grouped(lk).cogroup(grouped(rk)) { (_, ls, rs) =>
+      val rows = rs.toArray
+      if (rows.isEmpty) Iterator.empty
+      else {
+        val m = VecScan.Mat.of(rows.map(_.getLong(idAt)),
+          rows.map(_.getSeq[Double](idAt + 1).toArray))
+        val out = new Array[Double](m.size)
+        val buf = new graft.functions.TopKBuffer(1)
+        ls.map { row =>
+          val lid = row.getLong(idAt)
+          VecScan.topK(lid, row.getSeq[Double](idAt + 1).toArray, m, excludeSelf = false, buf, out)
+          pairs.add(m.size)
+          (lid, buf.ids(0), buf.scores(0))
+        }
+      }
+    }(Encoders.product[(Long, Long, Double)]).toDF("left_id", "right_id", "score")
+  }
+
+  /** Per column of `cols`, the type Spark's `===` compares a value of `l`'s
+    * column with one of `r`'s in (its implicit coercion; analysis only, no
+    * job).
+    */
+  private def equalityTypes(l: DataFrame, r: DataFrame, cols: Seq[String]): Seq[DataType] = {
+    import org.apache.spark.sql.catalyst.expressions.EqualTo
+    cols.map { c =>
+      val (lt, rt) = (l.schema(c).dataType, r.schema(c).dataType)
+      if (lt == rt) lt
+      else l.sparkSession.range(0).select(lit(null).cast(lt) === lit(null).cast(rt))
+        .queryExecution.analyzed.expressions.head
+        .collectFirst { case e: EqualTo => e.left.dataType }.get
+    }
   }
 
   /** Semantic many-to-one rollup onto a small reference table — the engine's

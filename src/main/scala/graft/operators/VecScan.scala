@@ -2,30 +2,48 @@ package graft.operators
 
 import graft.functions.TopKBuffer
 import graft.functions.VectorOps.asDouble
+import org.apache.spark.{HashPartitioner, NarrowDependency, OneToOneDependency, Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
-/** Broadcast-matrix similarity scan — the physical kernel behind the kNN and
-  * range joins when the right side fits in memory (SURVEY §4.3: "small right:
+/** The exact similarity scan: one cosine kernel ([[scores]]) behind every
+  * exact kNN, range and ε-graph scan over an in-memory right side — the
+  * DataFrame kNN/range joins, the planned `SemanticTopKJoinExec` /
+  * `SemanticRangeJoinExec`, the blocked join, the clustering self-scan, the
+  * IVF centroid probe and the resident IVF scan (SURVEY §4.3: "small right:
   * broadcast right (id, vec) matrix, mapPartitions top-k per left row").
   *
-  * Versus the crossJoin formulation this removes all per-pair row machinery:
-  * the pair space exists only as two nested primitive loops inside a partition,
-  * each left row allocates nothing but its TopK buffer, and only ≤k (or
+  * The pair space exists only as the kernel's primitive loops: each left row
+  * allocates nothing but its top-k buffer or its hits, and only ≤k (or
   * ≥τ-matching) rows are ever materialized. Scores are bit-identical to the
-  * declarative path: same `dot / (sqrt(na)·sqrt(nb))` double op order, same
-  * [-1,1] clamp, same (score desc, id asc) tie-break.
+  * declarative path: same left-to-right `dot` summation, same
+  * `dot / (na·nb)` op order, same [-1,1] clamp, same (score desc, id asc)
+  * tie-break.
   *
-  * Scale posture: the scan distributes over left partitions with zero shuffle;
-  * the broadcast is bounded by [[VecScan.maxBroadcastBytes]] and callers fall
-  * back to the shuffle/crossJoin plan (or IVF) above that.
+  * Scale posture: the right side is collected once ([[collectMatIfFits]]:
+  * one job that sizes and collects it together) and broadcast, bounded by
+  * [[maxBroadcastBytes]]; callers fall back to the shuffle/crossJoin plan
+  * (or IVF) above that. The left side streams and is split by pair work
+  * ([[scanRdd]]): a scan worth more than one task's share of multiply-adds
+  * runs on up to `defaultParallelism` tasks even when its left side is one
+  * partition (re-read per slice when cached or checkpointed, else shuffled
+  * once into the slices), and a small scan stays in one task.
   */
 object VecScan {
 
   /** Right side must stay under this to take the broadcast path. The default
     * (256 MiB of packed doubles) leaves headroom under Spark's default
-    * `spark.driver.maxResultSize=1g`: [[collectMat]] pulls the matrix through
-    * the driver, so a bound near 1 GiB kills the job with a confusing
+    * `spark.driver.maxResultSize=1g`: [[collectMatIfFits]] pulls the matrix
+    * through the driver, so a bound near 1 GiB kills the job with a confusing
     * driver-side error instead of falling back to the shuffle plan. Tune with
     * `spark.graft.vecscan.maxBroadcastBytes` (raise it together with
     * maxResultSize / driver memory).
@@ -36,24 +54,24 @@ object VecScan {
   def maxBroadcastBytes(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.getOption(MaxBroadcastBytesKey).map(_.toLong).getOrElse(DefaultMaxBroadcastBytes)
 
-  private[graft] final case class Mat(ids: Array[Long], vecs: Array[Array[Double]], norms: Array[Double])
+  /** Scan-ready right side: ids, vectors and their norms, with no null id or
+    * vector (a null never matches).
+    */
+  private[graft] final case class Mat(ids: Array[Long], vecs: Array[Array[Double]], norms: Array[Double]) {
+    def size: Int = ids.length
+    /** Longest vector; the per-pair cost of a scan against this side. */
+    def dim: Int = vecs.foldLeft(0)((d, v) => math.max(d, v.length))
+  }
 
-  private[graft] def collectMat(df: DataFrame, idCol: String, vecCol: String): Mat = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(col(idCol).cast("long"), asDouble(col(vecCol)))
-      .as[(Long, Array[Double])].collect()
-    val ids = new Array[Long](rows.length)
-    val vecs = new Array[Array[Double]](rows.length)
-    val norms = new Array[Double](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      ids(i) = rows(i)._1
-      vecs(i) = rows(i)._2
-      norms(i) = math.sqrt(dot(rows(i)._2, rows(i)._2))
-      i += 1
+  private[graft] object Mat {
+    /** Rows in id order (stable for equal ids), norms computed once. The
+      * order lets the upper-pair self-scan start each left row past its id.
+      */
+    def of(ids: Array[Long], vecs: Array[Array[Double]]): Mat = {
+      val order = ids.indices.sortBy(ids(_)).toArray
+      val sortedVecs = order.map(vecs(_))
+      Mat(order.map(ids(_)), sortedVecs, sortedVecs.map(v => math.sqrt(dot(v, v))))
     }
-    Mat(ids, vecs, norms)
   }
 
   @inline private[graft] def dot(a: Array[Double], b: Array[Double]): Double = {
@@ -68,82 +86,345 @@ object VecScan {
   @inline private[graft] def cosine(d: Double, na: Double, nb: Double): Double =
     math.min(math.max(d / (na * nb), -1.0), 1.0)
 
-  /** True if the right side is small enough (rows × dim × 8 bytes). One job:
-    * count and dim come from a single aggregate.
+  /** The exact scan kernel: `out(j) = cosine(dot(lv, m.vecs(j)), ln, m.norms(j))`
+    * for every `j` in `[from, m.size)`. One pass over `lv` scores four right
+    * rows, with four independent accumulators instead of one dependent chain
+    * of adds; each accumulator sums its pair's products left to right, as
+    * [[dot]] does, so every score is bit-identical to the scalar form. A block
+    * holding a row shorter than `lv` (ragged) takes the scalar [[dot]].
     */
-  def fitsBroadcast(right: DataFrame, vecCol: String, dim: => Int = 0): Boolean = {
-    val bound = maxBroadcastBytes(right.sparkSession)
-    if (dim > 0) {
-      right.count() * dim.toLong * 8L <= bound
-    } else {
-      val r = right.agg(count(lit(1)), first(size(col(vecCol)), ignoreNulls = true)).first()
-      val n = r.getLong(0)
-      val d = if (r.isNullAt(1)) 1 else math.max(r.getInt(1), 1)
-      n * d.toLong * 8L <= bound
+  private[graft] def scores(lv: Array[Double], ln: Double, m: Mat, from: Int,
+      out: Array[Double]): Unit = {
+    val n = lv.length
+    val vecs = m.vecs
+    val norms = m.norms
+    val end = vecs.length
+    var j = from
+    while (j + 4 <= end) {
+      val a = vecs(j); val b = vecs(j + 1); val c = vecs(j + 2); val d = vecs(j + 3)
+      if (a.length >= n && b.length >= n && c.length >= n && d.length >= n) {
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var i = 0
+        while (i < n) {
+          val x = lv(i)
+          s0 += x * a(i); s1 += x * b(i); s2 += x * c(i); s3 += x * d(i)
+          i += 1
+        }
+        out(j) = cosine(s0, ln, norms(j))
+        out(j + 1) = cosine(s1, ln, norms(j + 1))
+        out(j + 2) = cosine(s2, ln, norms(j + 2))
+        out(j + 3) = cosine(s3, ln, norms(j + 3))
+      } else {
+        out(j) = cosine(dot(lv, a), ln, norms(j))
+        out(j + 1) = cosine(dot(lv, b), ln, norms(j + 1))
+        out(j + 2) = cosine(dot(lv, c), ln, norms(j + 2))
+        out(j + 3) = cosine(dot(lv, d), ln, norms(j + 3))
+      }
+      j += 4
+    }
+    while (j < end) { out(j) = cosine(dot(lv, vecs(j)), ln, norms(j)); j += 1 }
+  }
+
+  /** First row of `m` (in id order) with an id above `id`: where the i<j
+    * self-scan of row `id` starts.
+    */
+  private[graft] def firstAbove(m: Mat, id: Long): Int = {
+    var lo = 0
+    var hi = m.size
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (m.ids(mid) <= id) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** Top-k of one left row into `buf` (cleared first), scored with [[scores]]
+    * into the `out` scratch (length ≥ `m.size`).
+    */
+  private[graft] def topK(lid: Long, lv: Array[Double], m: Mat, excludeSelf: Boolean,
+      buf: TopKBuffer, out: Array[Double]): Unit = {
+    buf.n = 0
+    scores(lv, math.sqrt(dot(lv, lv)), m, 0, out)
+    var j = 0
+    while (j < m.size) {
+      if (!(excludeSelf && m.ids(j) == lid)) buf.insert(out(j), m.ids(j))
+      j += 1
     }
   }
 
-  /** kNN scan: `(left_id, right_id, score, rank)`, rank 1-based best-first,
-    * ≤k rows per left row.
+  /** What a distributed scan emits per left row. */
+  private[graft] sealed trait ScanSpec { def upper: Boolean = false }
+  /** ≤k `(left_id, right_id, score, rank)` rows, rank 1-based best-first. */
+  private[graft] final case class KnnSpec(k: Int, excludeSelf: Boolean) extends ScanSpec
+  /** `(left_id, right_id, score)` rows with score ≥ τ; `onlyUpperPairs` keeps
+    * left_id < right_id; `keepUnmatched` adds a null-extended row for a left
+    * row without a match (a null vector never matches; a null left id gives
+    * no row at all).
     */
-  def knn(
-      left: DataFrame, leftId: String, leftVec: String,
-      right: DataFrame, rightId: String, rightVec: String,
-      k: Int, excludeSelf: Boolean): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    val mat = spark.sparkContext.broadcast(collectMat(right, rightId, rightVec))
-    val out = left.select(col(leftId).cast("long"), asDouble(col(leftVec)))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val m = mat.value
-        it.flatMap { case (lid, lv) =>
-          val ln = math.sqrt(dot(lv, lv))
-          val buf = new TopKBuffer(k)
-          var j = 0
-          while (j < m.ids.length) {
-            if (!(excludeSelf && m.ids(j) == lid)) {
-              buf.insert(cosine(dot(lv, m.vecs(j)), ln, m.norms(j)), m.ids(j))
-            }
-            j += 1
-          }
-          (0 until buf.n).map(r => (lid, buf.ids(r), buf.scores(r), r + 1))
-        }
-      }
-    out.toDF("left_id", "right_id", "score", "rank")
+  private[graft] final case class RangeSpec(tau: Double, excludeSelf: Boolean,
+      onlyUpperPairs: Boolean, keepUnmatched: Boolean) extends ScanSpec {
+    override def upper: Boolean = onlyUpperPairs
   }
 
-  /** Range scan: matching `(left_id, right_id, score)` pairs with score ≥ τ.
-    * `onlyUpperPairs` emits i<j once (self-join edge lists for clustering).
+  private[graft] val KnnSchema: StructType = StructType(Seq(
+    StructField("left_id", LongType, nullable = false),
+    StructField("right_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("rank", IntegerType, nullable = false)))
+
+  private[graft] def rangeSchema(keepUnmatched: Boolean): StructType = StructType(Seq(
+    StructField("left_id", LongType, nullable = false),
+    StructField("right_id", LongType, nullable = keepUnmatched),
+    StructField("score", DoubleType, nullable = keepUnmatched)))
+
+  /** Multiply-adds one scan task is worth (~50-70 ms of kernel time at the
+    * blocked kernel's ~1 ns per multiply-add): a scan is split only into
+    * tasks of at least this much work, so a small scan stays in one task.
     */
-  def range(
-      left: DataFrame, leftId: String, leftVec: String,
-      right: DataFrame, rightId: String, rightVec: String,
-      tau: Double, excludeSelf: Boolean, onlyUpperPairs: Boolean = false): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    val mat = spark.sparkContext.broadcast(collectMat(right, rightId, rightVec))
-    val out = left.select(col(leftId).cast("long"), asDouble(col(leftVec)))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val m = mat.value
-        it.flatMap { case (lid, lv) =>
-          val ln = math.sqrt(dot(lv, lv))
-          val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          var j = 0
-          while (j < m.ids.length) {
-            val rid = m.ids(j)
-            val keep = if (onlyUpperPairs) lid < rid
-              else !(excludeSelf && rid == lid)
-            if (keep) {
-              val s = cosine(dot(lv, m.vecs(j)), ln, m.norms(j))
-              if (s >= tau) hits += ((lid, rid, s))
-            }
-            j += 1
-          }
-          hits
+  private[graft] val WorkPerTask: Long = 1L << 26
+
+  /** How many tasks each left partition's rows are dealt across: the scan's
+    * pair work (`estLeftRows × nRight`, halved for the i<j self-scan, times
+    * the dimension) in [[WorkPerTask]] units, capped at `parallelism` tasks
+    * in all, over the left side's `leftParts` partitions.
+    */
+  private[graft] def slicesFor(estLeftRows: Long, nRight: Int, dim: Int, upper: Boolean,
+      leftParts: Int, parallelism: Int): Int = {
+    val work = BigInt(math.max(estLeftRows, 0L)) * nRight * math.max(dim, 1) / (if (upper) 2 else 1)
+    val tasks = ((work + WorkPerTask - 1) / WorkPerTask).min(BigInt(math.max(parallelism, 1))).toInt
+    math.max(1, tasks / math.max(leftParts, 1))
+  }
+
+  /** Row-count estimate of a plan: the optimizer's row count, else its size
+    * estimate over the per-row size estimate. Needs no job; used only to size
+    * the split, so an estimate off by a small factor costs nothing.
+    */
+  private[graft] def estimatedRows(plan: LogicalPlan): Long = {
+    val st = plan.stats
+    val n = st.rowCount.getOrElse(st.sizeInBytes / EstimationUtils.getSizePerRow(plan.output))
+    if (n > Long.MaxValue) Long.MaxValue else n.toLong
+  }
+
+  private val pairsAccs = new java.util.WeakHashMap[SparkContext, LongAccumulator]
+
+  /** Pairs scored by the distributed scans of this context: every scan task
+    * adds the pairs it scores, so a scan that runs twice counts twice.
+    */
+  def pairsScored(sc: SparkContext): LongAccumulator = pairsAccs.synchronized {
+    var acc = pairsAccs.get(sc)
+    if (acc == null) {
+      acc = sc.longAccumulator("graft.vecscan.pairs_scored")
+      pairsAccs.put(sc, acc)
+    }
+    acc
+  }
+
+  /** Slice of a left row among `slices`: a hash of its id, so which rows a
+    * slice holds does not depend on the order a read returns them in.
+    */
+  private[graft] def sliceOf(id: Long, slices: Int): Int =
+    Math.floorMod(java.lang.Long.hashCode(id * 0x9E3779B97F4A7C15L), slices)
+
+  /** True when re-reading a partition of `rdd` is a read, not a recomputation:
+    * its one-to-one lineage reaches a cached or checkpointed RDD.
+    */
+  private[graft] def materialized(rdd: RDD[_]): Boolean =
+    rdd.getStorageLevel != StorageLevel.NONE || rdd.isCheckpointed || (rdd.dependencies match {
+      case Seq(d: OneToOneDependency[_]) => materialized(d.rdd)
+      case _ => false
+    })
+
+  /** The distributed scan: left rows (id at `idOrd`, vector at `vecOrd`) to
+    * the rows of `spec`, scored against the matrix `mat` returns on the
+    * executor. Split by pair work ([[slicesFor]]): each left row goes to the
+    * slice of its id ([[sliceOf]]). A [[materialized]] left partition is
+    * re-read by each of its slices ([[SlicedRDD]], no shuffle); any other
+    * left side is shuffled once into the slices, so its lineage is not
+    * recomputed per slice.
+    */
+  private[graft] def scanRdd(
+      left: RDD[InternalRow], idOrd: Int, idType: DataType, vecOrd: Int, vecElem: DataType,
+      estLeftRows: Long, nRight: Int, dim: Int, mat: () => Mat, spec: ScanSpec): RDD[InternalRow] = {
+    val sc = left.sparkContext
+    val slices = slicesFor(estLeftRows, nRight, dim, spec.upper,
+      left.getNumPartitions, sc.defaultParallelism)
+    val src =
+      if (slices == 1) left
+      else {
+        // a null id yields no row, so its slice does not matter
+        val sliceBy = (r: InternalRow, n: Int) =>
+          if (r.isNullAt(idOrd)) 0 else sliceOf(graft.plans.RowVec.getId(r, idOrd, idType), n)
+        if (materialized(left)) new SlicedRDD(left, slices, sliceBy(_: InternalRow, slices))
+        else {
+          val n = left.getNumPartitions * slices
+          new ShuffledRDD[Int, InternalRow, InternalRow](
+            left.mapPartitions(_.map(r => (sliceBy(r, n), r.copy()))), new HashPartitioner(n)).values
         }
       }
-    out.toDF("left_id", "right_id", "score")
+    val pairs = pairsScored(sc)
+    src.mapPartitions({ it =>
+      val m = mat()
+      val out = new Array[Double](m.size)
+      val types = (spec match {
+        case _: KnnSpec => KnnSchema
+        case _ => rangeSchema(keepUnmatched = true)
+      }).map(_.dataType).toArray
+      val proj = UnsafeProjection.create(types)
+      val row = new GenericInternalRow(types.length)
+      def emit(lid: Any, rid: Any, s: Any): InternalRow = {
+        row.update(0, lid); row.update(1, rid); row.update(2, s)
+        proj(row)
+      }
+      spec match {
+        case KnnSpec(k, excludeSelf) =>
+          val buf = new TopKBuffer(k)
+          it.flatMap { r =>
+            if (r.isNullAt(idOrd) || r.isNullAt(vecOrd)) Iterator.empty
+            else {
+              val lid = graft.plans.RowVec.getId(r, idOrd, idType)
+              topK(lid, graft.plans.RowVec.getVec(r, vecOrd, vecElem), m, excludeSelf, buf, out)
+              pairs.add(m.size)
+              (0 until buf.n).iterator.map { i =>
+                row.update(3, i + 1)
+                emit(lid, buf.ids(i), buf.scores(i))
+              }
+            }
+          }
+        case RangeSpec(tau, excludeSelf, upper, keepUnmatched) =>
+          it.flatMap { r =>
+            if (r.isNullAt(idOrd)) Iterator.empty
+            else {
+              val lid = graft.plans.RowVec.getId(r, idOrd, idType)
+              val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+              if (!r.isNullAt(vecOrd)) {
+                val lv = graft.plans.RowVec.getVec(r, vecOrd, vecElem)
+                val from = if (upper) firstAbove(m, lid) else 0
+                scores(lv, math.sqrt(dot(lv, lv)), m, from, out)
+                pairs.add(m.size - from)
+                var j = from
+                while (j < m.size) {
+                  if (out(j) >= tau && !(excludeSelf && m.ids(j) == lid))
+                    hits += emit(lid, m.ids(j), out(j)).copy()
+                  j += 1
+                }
+              }
+              if (hits.isEmpty && keepUnmatched) Iterator.single(emit(lid, null, null))
+              else hits.iterator
+            }
+          }
+      }
+    }, preservesPartitioning = false)
   }
+
+  /** Scan over the left DataFrame's `(id, vec)` columns against `mat`. */
+  private def scanDf(left: DataFrame, leftId: String, leftVec: String, mat: Mat,
+      spec: ScanSpec, schema: StructType): DataFrame = {
+    val spark = left.sparkSession
+    val proj = left.select(col(leftId).cast("long"), asDouble(col(leftVec)))
+    val bc = spark.sparkContext.broadcast(mat)
+    val out = scanRdd(proj.queryExecution.toRdd, 0, LongType, 1, DoubleType,
+      estimatedRows(proj.queryExecution.optimizedPlan), mat.size, mat.dim, () => bc.value, spec)
+    ColumnBridge.fromInternalRows(spark, out, schema)
+  }
+
+  /** One partition's share of a bounded collect: its vector bytes, and its
+    * rows when those bytes are within `cap` (else null).
+    */
+  private final class Part(val bytes: Long, val ids: Array[Long], val vecs: Array[Array[Double]])
+    extends Serializable
+
+  private def collectPart(it: Iterator[InternalRow], cap: Long): Part = {
+    val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+    val vecs = scala.collection.mutable.ArrayBuilder.make[Array[Double]]
+    var bytes = 0L
+    it.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val a = r.getArray(1)
+        bytes += 8L * a.numElements()
+        if (bytes <= cap) { ids += r.getLong(0); vecs += a.toDoubleArray() }
+      }
+    }
+    if (bytes <= cap) new Part(bytes, ids.result(), vecs.result()) else new Part(bytes, null, null)
+  }
+
+  /** The right side as a [[Mat]] if its vectors fit `bound` bytes, else None.
+    * One job sizes and collects it together: each partition ships its rows
+    * when they fit its even share of the bound, so the driver never holds
+    * more than the bound; partitions over their share (a skewed side that
+    * still fits) are fetched by a second job.
+    */
+  private[graft] def collectMatIfFits(df: DataFrame, idCol: String, vecCol: String,
+      bound: Long): Option[Mat] = {
+    val rdd = df.select(col(idCol).cast("long"), asDouble(col(vecCol))).queryExecution.toRdd
+    val sc = rdd.sparkContext
+    val cap = bound / math.max(rdd.getNumPartitions, 1)
+    val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) => collectPart(it, cap))
+    if (parts.iterator.map(_.bytes).sum > bound) None
+    else {
+      val missing = parts.indices.filter(parts(_).ids == null)
+      val fetched = if (missing.isEmpty) Array.empty[Part]
+        else sc.runJob(rdd, (it: Iterator[InternalRow]) => collectPart(it, Long.MaxValue), missing)
+      val all = parts.filter(_.ids != null) ++ fetched
+      Some(Mat.of(all.flatMap(_.ids), all.flatMap(_.vecs)))
+    }
+  }
+
+  /** [[collectMatIfFits]] under the session's [[maxBroadcastBytes]]. */
+  private[graft] def collectMatIfFits(df: DataFrame, idCol: String, vecCol: String): Option[Mat] =
+    collectMatIfFits(df, idCol, vecCol, maxBroadcastBytes(df.sparkSession))
+
+  /** The whole right side as a [[Mat]], for sides bounded by construction. */
+  private[graft] def collectMat(df: DataFrame, idCol: String, vecCol: String): Mat =
+    collectMatIfFits(df, idCol, vecCol, Long.MaxValue).get
+
+  /** kNN scan: `(left_id, right_id, score, rank)`, rank 1-based best-first,
+    * ≤k rows per left row; a null left id or vector yields no row.
+    */
+  def knn(left: DataFrame, leftId: String, leftVec: String, right: Mat,
+      k: Int, excludeSelf: Boolean): DataFrame =
+    scanDf(left, leftId, leftVec, right, KnnSpec(k, excludeSelf), KnnSchema)
+
+  /** Range scan: matching `(left_id, right_id, score)` pairs with score ≥ τ.
+    * `onlyUpperPairs` emits i<j once (self-join edge lists for clustering);
+    * `keepUnmatched` keeps a left row without a match (a null vector never
+    * matches) with null right_id/score. A null left id yields no row.
+    */
+  def range(left: DataFrame, leftId: String, leftVec: String, right: Mat,
+      tau: Double, excludeSelf: Boolean, onlyUpperPairs: Boolean = false,
+      keepUnmatched: Boolean = false): DataFrame =
+    scanDf(left, leftId, leftVec, right,
+      RangeSpec(tau, excludeSelf, onlyUpperPairs, keepUnmatched), rangeSchema(keepUnmatched))
 }
+
+/** Deals each parent partition's rows over `slices` child partitions (row
+  * `r` to slice `slice(r)`, in `[0, slices)`): a one-partition input then runs
+  * on `slices` tasks without a shuffle. Each slice reads the whole parent
+  * partition, so this pays off only when the read is cheap (a cached or
+  * checkpointed parent) and per-row work dwarfs it — a similarity scan. The
+  * slice must be a function of the row, not of its position: two reads of a
+  * partition may return its rows in different orders.
+  */
+private[graft] final class SlicedRDD[T: scala.reflect.ClassTag](parent: RDD[T], slices: Int,
+    slice: T => Int)
+  extends RDD[T](parent.sparkContext, Seq(new NarrowDependency[T](parent) {
+    override def getParents(partitionId: Int): Seq[Int] = Seq(partitionId / slices)
+  })) {
+
+  override protected def getPartitions: Array[Partition] = {
+    val ps = parent.partitions
+    Array.tabulate[Partition](ps.length * slices)(i => SlicePartition(i, ps(i / slices)))
+  }
+
+  override def compute(split: Partition, context: TaskContext): Iterator[T] = {
+    val mine = split.index % slices
+    parent.iterator(split.asInstanceOf[SlicePartition].parent, context).filter(slice(_) == mine)
+  }
+
+  override protected def getPreferredLocations(split: Partition): Seq[String] =
+    parent.preferredLocations(split.asInstanceOf[SlicePartition].parent)
+}
+
+/** A slice of `parent`, carried along: a parent RDD's partitions are known
+  * on the driver only.
+  */
+private final case class SlicePartition(index: Int, parent: Partition) extends Partition

@@ -3,7 +3,7 @@ package graft.plans
 import graft.operators.VecScan
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
@@ -18,8 +18,9 @@ import org.apache.spark.sql.types._
   *
   * Output is `(left_id long, right_id long, score double)`; with
   * `keepUnmatched` (the reference's left-outer contract) every left id is
-  * retained — unmatched ones with null right_id/score, so those two
-  * attributes are nullable exactly when `keepUnmatched` is set. Scores are
+  * retained — unmatched ones (a null vector never matches) with null
+  * right_id/score, so those two attributes are nullable exactly when
+  * `keepUnmatched` is set. A left row with a null id yields no row. Scores are
   * bit-identical to [[graft.operators.SemanticJoin.rangeJoinVec]] (same
   * double op order + clamp via [[VecScan]]).
   *
@@ -61,10 +62,11 @@ object SemanticRangeJoin {
 
 /** Physical range join: broadcast right (via the same
   * `BroadcastDistribution` + [[MatCache]] machinery as
-  * [[SemanticTopKJoinExec]]), stream left partitions, emit every pair with
-  * cosine ≥ τ — plus, under `keepUnmatched`, a null-extended row for each
-  * left row with no match (left-outer semantics with zero extra passes:
-  * matched-ness is known the moment the row's scan finishes). Zero shuffle;
+  * [[SemanticTopKJoinExec]]), stream the left side through
+  * [[VecScan.scanRdd]], emit every pair with cosine ≥ τ — plus, under
+  * `keepUnmatched`, a null-extended row for each left row with no match
+  * (left-outer semantics with zero extra passes: matched-ness is known the
+  * moment the row's scan finishes). Zero shuffle;
   * output size is data-dependent (τ controls selectivity), never
   * materialized as a full pair matrix.
   */
@@ -101,45 +103,11 @@ case class SemanticRangeJoinExec(
     val rElem = elemType(right, rVecOrd)
     val lIdOrd = ordinalOf(left, leftIdCol)
     val lVecOrd = ordinalOf(left, leftVecCol)
-    val lIdType = left.output(lIdOrd).dataType
-    val lElem = elemType(left, lVecOrd)
-    val tauLoc = tau
-    val exSelf = excludeSelf
-    val outer = keepUnmatched
-    val outTypes = output.map(_.dataType)
-    left.execute().mapPartitions({ it =>
-      val m = MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem)
-      val proj = UnsafeProjection.create(outTypes.toArray)
-      val scratch = new GenericInternalRow(3)
-      it.flatMap { lrow =>
-        if (lrow.isNullAt(lIdOrd) || lrow.isNullAt(lVecOrd)) Iterator.empty
-        else {
-          val lid = RowVec.getId(lrow, lIdOrd, lIdType)
-          val lv = RowVec.getVec(lrow, lVecOrd, lElem)
-          val ln = math.sqrt(VecScan.dot(lv, lv))
-          val hits = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-          var j = 0
-          while (j < m.ids.length) {
-            if (!(exSelf && m.ids(j) == lid)) {
-              val s = VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j))
-              if (s >= tauLoc) hits += ((m.ids(j), s))
-            }
-            j += 1
-          }
-          if (hits.isEmpty && outer) {
-            scratch.update(0, lid)
-            scratch.update(1, null)
-            scratch.update(2, null)
-            Iterator.single(proj(scratch))
-          } else hits.iterator.map { case (rid, s) =>
-            scratch.update(0, lid)
-            scratch.update(1, rid)
-            scratch.update(2, s)
-            proj(scratch)
-          }
-        }
-      }
-    }, preservesPartitioning = true)
+    val (nRight, dim) = MatCache.shape(rowsBc.value, rIdOrd, rVecOrd)
+    VecScan.scanRdd(left.execute(), lIdOrd, left.output(lIdOrd).dataType,
+      lVecOrd, elemType(left, lVecOrd), MatCache.estimatedRows(left), nRight, dim,
+      () => MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem),
+      VecScan.RangeSpec(tau, excludeSelf, onlyUpperPairs = false, keepUnmatched))
   }
 
   override protected def withNewChildrenInternal(

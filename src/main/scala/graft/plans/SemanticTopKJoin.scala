@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.BroadcastMode
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 
 /** Logical plan node for the semantic top-k (cosine kNN) join — the engine's
@@ -128,26 +129,31 @@ private[plans] object MatCache {
     val hit = cache.get(rows)
     if (hit != null) hit
     else {
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val vecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-      rows.foreach { r =>
-        if (!r.isNullAt(idOrd) && !r.isNullAt(vecOrd)) {
-          ids += RowVec.getId(r, idOrd, idType)
-          vecs += RowVec.getVec(r, vecOrd, vecElemType)
-        }
-      }
-      val norms = new Array[Double](vecs.length)
-      var i = 0
-      while (i < norms.length) { norms(i) = math.sqrt(VecScan.dot(vecs(i), vecs(i))); i += 1 }
-      val mat = VecScan.Mat(ids.toArray, vecs.toArray, norms)
+      val live = rows.filter(r => !r.isNullAt(idOrd) && !r.isNullAt(vecOrd))
+      val mat = VecScan.Mat.of(live.map(RowVec.getId(_, idOrd, idType)),
+        live.map(RowVec.getVec(_, vecOrd, vecElemType)))
       cache.put(rows, mat)
       mat
     }
   }
+
+  /** `(rows, longest vector)` of the side [[get]] builds, read off the
+    * broadcast rows: sizes the scan's split without a driver-side matrix.
+    */
+  def shape(rows: Array[InternalRow], idOrd: Int, vecOrd: Int): (Int, Int) = {
+    val live = rows.filter(r => !r.isNullAt(idOrd) && !r.isNullAt(vecOrd))
+    (live.length, live.foldLeft(0)((d, r) => math.max(d, r.getArray(vecOrd).numElements())))
+  }
+
+  /** Row estimate of a physical child from its logical plan's statistics
+    * (unknown: assume a large side), for [[VecScan.scanRdd]]'s split.
+    */
+  def estimatedRows(plan: SparkPlan): Long =
+    plan.logicalLink.map(VecScan.estimatedRows).getOrElse(Long.MaxValue)
 }
 
 /** Shared InternalRow → primitive extraction for the planned operator. */
-private[plans] object RowVec {
+private[graft] object RowVec {
   def getId(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
     case LongType => r.getLong(ord)
     case IntegerType => r.getInt(ord).toLong

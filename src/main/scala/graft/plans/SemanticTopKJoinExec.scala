@@ -1,10 +1,9 @@
 package graft.plans
 
-import graft.functions.TopKBuffer
 import graft.operators.VecScan
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -15,13 +14,13 @@ import org.apache.spark.sql.types._
   * `BroadcastExchangeExec` — the exchange brings its size guards, reuse
   * across identical subtrees, and AQE handling for free. The broadcast rows
   * are unpacked into the scan-ready [[VecScan.Mat]] once per executor
-  * ([[MatCache]]); each left partition then streams rows through the same
-  * TopKBuffer kernel as [[VecScan.knn]]: zero shuffle, ≤k output rows per
+  * ([[MatCache]]); the left side then streams through the same scan as
+  * [[VecScan.knn]] ([[VecScan.scanRdd]]): zero shuffle, ≤k output rows per
   * left row, no per-pair row materialization.
   *
   * Scale posture: identical to the DataFrame broadcast path — the right side
   * must fit a broadcast (enforced by the exchange), the left side streams
-  * with full scan parallelism. For an over-broadcast right side use the
+  * split by pair work. For an over-broadcast right side use the
   * DataFrame API ([[graft.operators.SemanticJoin.knnJoinVec]]), which falls
   * back to the shuffled crossJoin + partial-agg top-k plan automatically.
   */
@@ -61,41 +60,11 @@ case class SemanticTopKJoinExec(
     val rVecOrd = rightVecOrd
     val rIdType = right.output(rIdOrd).dataType
     val rElem = elemType(right, rVecOrd)
-    val lIdOrd = leftIdOrd
-    val lVecOrd = leftVecOrd
-    val lIdType = left.output(lIdOrd).dataType
-    val lElem = elemType(left, lVecOrd)
-    val kLoc = k
-    val exSelf = excludeSelf
-    val outTypes = output.map(_.dataType)
-    left.execute().mapPartitions({ it =>
-      val m = MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem)
-      val proj = UnsafeProjection.create(outTypes.toArray)
-      val scratch = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-      it.flatMap { lrow =>
-        if (lrow.isNullAt(lIdOrd) || lrow.isNullAt(lVecOrd)) Iterator.empty
-        else {
-          val lid = RowVec.getId(lrow, lIdOrd, lIdType)
-          val lv = RowVec.getVec(lrow, lVecOrd, lElem)
-          val ln = math.sqrt(VecScan.dot(lv, lv))
-          val buf = new TopKBuffer(kLoc)
-          var j = 0
-          while (j < m.ids.length) {
-            if (!(exSelf && m.ids(j) == lid)) {
-              buf.insert(VecScan.cosine(VecScan.dot(lv, m.vecs(j)), ln, m.norms(j)), m.ids(j))
-            }
-            j += 1
-          }
-          (0 until buf.n).iterator.map { r =>
-            scratch.update(0, lid)
-            scratch.update(1, buf.ids(r))
-            scratch.update(2, buf.scores(r))
-            scratch.update(3, r + 1)
-            proj(scratch)
-          }
-        }
-      }
-    }, preservesPartitioning = true)
+    val (nRight, dim) = MatCache.shape(rowsBc.value, rIdOrd, rVecOrd)
+    VecScan.scanRdd(left.execute(), leftIdOrd, left.output(leftIdOrd).dataType,
+      leftVecOrd, elemType(left, leftVecOrd), MatCache.estimatedRows(left), nRight, dim,
+      () => MatCache.get(rowsBc.value, rIdOrd, rIdType, rVecOrd, rElem),
+      VecScan.KnnSpec(k, excludeSelf))
   }
 
   override protected def withNewChildrenInternal(

@@ -1057,7 +1057,7 @@ class EngineSpec extends AnyFunSuite {
     val exact = clusters()
     spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
     try {
-      assert(!VecScan.fitsBroadcast(df, "vec"))
+      assert(VecScan.collectMatIfFits(df, "id", "vec").isEmpty)
       assert(clusters() == exact)
     } finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
     assert(exact.values.toSet.size == 3)
@@ -1917,10 +1917,10 @@ class EngineSpec extends AnyFunSuite {
     val viaBroadcast = run()
     spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
     try {
-      assert(!VecScan.fitsBroadcast(e, "vec"))
+      assert(VecScan.collectMatIfFits(e, "id", "vec").isEmpty)
       assert(run() == viaBroadcast)
     } finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
-    assert(VecScan.fitsBroadcast(e, "vec"))
+    assert(VecScan.collectMatIfFits(e, "id", "vec").isDefined)
   }
 
   test("allPairCombos drops the broadcast hint when the right side exceeds the bound") {
