@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: prints `explain("formatted")` for selected queries so scan
   * pushdown (`PushedFilters`/`ReadSchema`), join strategies (broadcast vs SMJ),
   * and `WholeStageCodegen` spans can be audited per round.
@@ -18,11 +16,7 @@ object PlanAudit {
         "q_topk_per_group", "q_agg_pricing", "q_bm25", "q_retrieve_rerank",
         "q_corpus_pipeline", "q_quantize_int8", "q_dsir_weights",
         "q_token_budget", "q_quality_gate")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main: decomposes a query's wall time into DataFrame
   * construction (analysis), job execution, and between-job driver gaps
   * (planning/collect/scheduler latency), with per-job wall and task counts.
-  * Uses the SAME session configs as [[Bench]] so walls are comparable to the
-  * recorded bench numbers (TimeQuery intentionally omits them and reads ~4x
-  * slower at sf0.1 — see BENCH_NOTES.md r12).
+  * Runs in [[Bench.session]], so walls are comparable to the recorded bench
+  * numbers.
   *
   * Usage: `runMain graft.Profile <sfDir> <queryName> [reps]`
   */
@@ -19,15 +17,7 @@ object Profile {
     val reps = if (args.length > 2) args(2).toInt else 2
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.files.maxPartitionBytes", "1048576")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class JobRec(id: Int, start: Long, var end: Long = 0L,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: per-job anatomy of one steady-state search through each
@@ -15,11 +14,7 @@ object ServingProbe {
     val which = if (args.length > 1) args.drop(1).toSet
       else Set("bm25", "ann", "int8", "minhash")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -19,34 +19,19 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  /** Table handles cached per (session, path): `spark.read.parquet` runs a
+  /** Table handle per (session, sf dir, table): `spark.read.parquet` runs a
     * footer/schema-inference job on EVERY call (~40-90 ms of driver+task
     * latency, profiled as the leading `parquet at SparkEntry.scala` job of
     * nearly every query) and the bench re-creates each query's frame per
-    * attempt. The cache holds the immutable DataFrame HANDLE — logical plan
+    * attempt. The memo holds the immutable DataFrame HANDLE — logical plan
     * + resolved schema, no rows, no results — so every action still
     * computes from the parquet files; it is the same session-level metadata
     * reuse Spark's own FileStatusCache does for listings, extended to the
-    * schema job. Keyed by the session OBJECT (a DataFrame is owned by its
-    * session) and BOUNDED as an access-order LRU (advisor r15: test suites
-    * create many sessions, and an unbounded map pins every stopped
-    * session's plans and schemas forever — a weak-keyed map would not help
-    * because the cached DataFrame itself strongly references its session).
-    * 64 entries ≈ a handful of live sessions × ~10 tables; eviction just
-    * re-pays one schema job. Assumes immutable table files (true for the
-    * fixture dirs; a path rewritten mid-session must not use ld()).
+    * schema job. Assumes immutable table files (true for the fixture dirs;
+    * a path rewritten mid-session must not use ld()).
     */
-  private val ldCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        size() > 64
-    })
   private def ld(spark: SparkSession, dir: String, table: String): DataFrame =
-    ldCache.synchronized {
-      ldCache.computeIfAbsent((spark, s"$dir/$table.parquet"),
-        k => k._1.read.parquet(k._2))
-    }
+    Fixture.memo(s"table_$table", spark, dir)(_ => spark.read.parquet(s"$dir/$table.parquet"))
 
   /** Round-robin repartition to the session's default parallelism — the
     * optimization guide's §2.5 fix ("one huge unsplittable file …
@@ -61,11 +46,7 @@ object SparkEntry {
     * declarations, not in the operators.
     */
   private def spread(df: DataFrame): DataFrame =
-    df.repartition(math.min(
-      df.sparkSession.sparkContext.defaultParallelism,
-      sys.env.getOrElse("SPARK_GRAFT_SPREAD_CAP",
-        sys.props.getOrElse("graft.spread.cap",
-          String.valueOf(Int.MaxValue))).toInt))
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Build + eagerly pin several independent frames CONCURRENTLY (guide
     * §2.6 — the q_resident_parity pattern: each localCheckpoint is a
@@ -104,78 +85,114 @@ object SparkEntry {
     }
   }
 
-  /** Per-process temp dir `prefix_$pid` for persisted-index queries: a
-    * concurrently running Verify/Bench JVM must never read an index this one
-    * is mid-overwrite on. Dead siblings left by FINISHED processes are reaped
-    * (best-effort) so repeated runs don't accumulate copies in tmp; so is,
-    * on this process's first use of `prefix`, a dir carrying this process's
-    * own pid — a dead process's leftover under a recycled pid, whose
-    * indexes may be at an older layout version.
+  /** A directory of this process's own for a query that writes an index on
+    * every call: a concurrently running Verify/Bench JVM never reads an
+    * index this one is mid-overwrite on.
     */
-  private val tmpDirPrefixesSeen = scala.collection.mutable.Set.empty[String]
-  private def perProcessTmpDir(prefix: String): String = tmpDirPrefixesSeen.synchronized {
-    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-    val pid = ProcessHandle.current().pid()
-    val firstUse = tmpDirPrefixesSeen.add(prefix)
-    Option(tmp.listFiles()).getOrElse(Array.empty)
-      // only `prefix_<pid>` names: `graft_asof_open_<pid>` is not a
-      // `graft_asof` dir
-      .filter(f => f.getName.startsWith(prefix + "_") &&
-        f.getName.stripPrefix(prefix + "_").toLongOption.exists(p =>
-          if (p == pid) firstUse
-          else !ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false)))
-      .foreach { f =>
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); ()
-        }
-        rm(f)
-      }
-    s"${tmp.getAbsolutePath}/${prefix}_$pid"
+  private def scratchDir(name: String, s: SparkSession, dir: String): String =
+    Fixture.memo(name, s, dir)(d => d)
+
+  // ----------------------------------------------- fixture build blocks
+
+  /** Writes a 16-bucket BM25 index over `docs`' (doc_id, text) to `path`. */
+  private def writeBm25(docs: DataFrame, path: String, nBuckets: Int = 16): Unit = {
+    val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
+    Lexical.bm25WriteIndex(postings, stats, path, nBuckets = nBuckets)
   }
 
-  /** Steady-state BM25 index over `dir`'s documents: built + written ONCE per
-    * (process, sf dir), then served from the persisted bucket layout. Lets
-    * q_bm25_index_search time the "search an existing index" regime without
-    * paying the build inside the timed window (judge r5 finding #2).
-    */
-  private val steadyIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Lexical.Bm25Index]
-  private def steadyBm25Dir(s: SparkSession, dir: String): String = {
-    val sub = s"${perProcessTmpDir("graft_bm25_steady")}/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (!new java.io.File(s"$sub/bm25_meta.json").exists()) {
-      val (postings, stats) =
-        Lexical.bm25BuildIndex(ld(s, dir, "documents"), "doc_id", "text")
-      Lexical.bm25WriteIndex(postings, stats, sub, nBuckets = 16)
-    }
-    sub
+  /** Writes a MinHash-LSH index over `docs`' (doc_id, text) to `path`. */
+  private def writeMinhash(docs: DataFrame, path: String): Unit =
+    Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(docs, "doc_id", "text"), path)
+
+  /** Writes a 16-centroid IVF index over `rows`' (id, vec) to `path`. */
+  private def writeAnn(rows: DataFrame, id: String, vec: String, path: String,
+      pqM: Int = 0): Unit = {
+    val (cells, cents) = Ann.annBuildIndex(rows, id, vec, nCentroids = 16)
+    Ann.annWriteIndex(cells, cents, path, pqM = pqM)
   }
+
+  /** The rebuild an appended or tombstoned ANN index must serve exactly
+    * like: all of `rows` assigned to the SAME centroids `cents` in one shot,
+    * with the 1-NN kernel the build and the append use. The centroid table
+    * is append- and delete-invariant, so it may be read from the live index
+    * before or after its appends/deletes land.
+    */
+  private def writeAnnAtCentroids(rows: DataFrame, id: String, vec: String,
+      cents: DataFrame, path: String): Unit = {
+    val assign = SemanticJoin.knnJoinVec(rows, id, vec,
+        cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
+      .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
+    val cells = rows
+      .select(col(id).cast("long").as("corpus_id"), asDouble(col(vec)).as("cv"))
+      .join(assign, "corpus_id")
+    Ann.annWriteIndex(cells, cents, path)
+  }
+
+  /** Writes gen-0 of the managed root `root` with `write`, then commits it. */
+  private def seedGen0(s: SparkSession, root: String)(write: String => Unit): Unit = {
+    write(IndexMaintenance.genPath(root, 0))
+    IndexMaintenance.commitGeneration(s, root, 0)
+  }
+
+  /** `d`'s (doc_id, text) as (doc_id, __vec) md5 embeddings. */
+  private def md5Vecs(d: DataFrame): DataFrame = md5Embedder
+    .embed(d.select(col("doc_id"), col("text")), "text", "__vec")
+    .select("doc_id", "__vec")
+
+  /** The q_stream_ingest batch shape: corpus dups (all drop), reversed docs
+    * (genuinely new — reversal destroys every shingle under the lowercasing
+    * tokenizer), and each reversed doc twice (intra-batch dups, keep-first).
+    */
+  private def ingestBatch(docs: DataFrame): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(10)) === 0)
+      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
+      .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
+        .select((col("doc_id") + 2000000L).as("doc_id"), reverse(col("text")).as("text")))
+      .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
+        .select((col("doc_id") + 3000000L).as("doc_id"), reverse(col("text")).as("text")))
+
+  // ----------------------------------------------------------- fixtures
+  // Each is built once per (session, sf dir) by [[Fixture.memo]], in an
+  // empty directory of its own.
+
+  /** Steady-state BM25 index over `dir`'s documents, served from the
+    * persisted bucket layout. Lets q_bm25_index_search time the "search an
+    * existing index" regime without paying the build inside the timed
+    * window.
+    */
+  private def steadyBm25Dir(s: SparkSession, dir: String): String =
+    Fixture.memo("bm25", s, dir) { d => writeBm25(ld(s, dir, "documents"), d); d }
   private[graft] def steadyBm25Index(s: SparkSession, dir: String): Lexical.Bm25Index =
-    steadyIdxCache.computeIfAbsent(dir, _ => Lexical.bm25OpenIndex(s, steadyBm25Dir(s, dir)))
+    Fixture.memo("bm25_open", s, dir)(_ => Lexical.bm25OpenIndex(s, steadyBm25Dir(s, dir)))
 
-  /** Steady-state ANN index over `dir`'s embeddings: built + written ONCE
-    * per (process, sf dir), then served cell-partition-pruned — the vector
-    * sibling of [[steadyBm25Index]] (same build-once / search-many regime).
+  /** Steady-state ANN index over `dir`'s embeddings, served
+    * cell-partition-pruned — the vector sibling of [[steadyBm25Index]].
     */
-  private val steadyAnnCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.Ann.AnnIndex]
-  /** Per-process persisted MinHash-LSH index over the documents table —
-    * the incremental-dedup sibling of [[steadyBm25Index]]/[[steadyAnnIndex]]
+  private def steadyAnnDir(s: SparkSession, dir: String): String =
+    Fixture.memo("ann", s, dir) { d =>
+      writeAnn(ld(s, dir, "embeddings"), "vec_id", "embedding", d); d
+    }
+  private[graft] def steadyAnnIndex(s: SparkSession, dir: String): Ann.AnnIndex =
+    Fixture.memo("ann_open", s, dir)(_ => Ann.annOpenIndex(s, steadyAnnDir(s, dir)))
+
+  /** PQ-enabled sibling of [[steadyAnnIndex]] (separate layout: pqM > 0
+    * changes the written schema, and the classic legs must keep measuring
+    * the classic layout).
+    */
+  private[graft] def steadyAnnPqIndex(s: SparkSession, dir: String): Ann.AnnIndex =
+    Fixture.memo("ann_pq", s, dir) { d =>
+      writeAnn(ld(s, dir, "embeddings"), "vec_id", "embedding", d, pqM = 16)
+      Ann.annOpenIndex(s, d)
+    }
+
+  /** Persisted MinHash-LSH index over the documents table — the
+    * incremental-dedup sibling of [[steadyBm25Index]]/[[steadyAnnIndex]]
     * (build the corpus postings once, search each arriving batch).
     */
-  private val steadyMinhashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.MinHashIndex]
-  private def steadyMinhashDir(s: SparkSession, dir: String): String = {
-    val sub = s"${perProcessTmpDir("graft_minhash_steady")}/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (!new java.io.File(s"$sub/minhash_meta.json").exists()) {
-      Dedup.minhashWriteIndex(
-        Dedup.minhashBuildIndex(ld(s, dir, "documents"), "doc_id", "text"), sub)
-    }
-    sub
-  }
+  private def steadyMinhashDir(s: SparkSession, dir: String): String =
+    Fixture.memo("minhash", s, dir) { d => writeMinhash(ld(s, dir, "documents"), d); d }
   private[graft] def steadyMinhashIndex(s: SparkSession, dir: String): Dedup.MinHashIndex =
-    steadyMinhashCache.computeIfAbsent(dir, _ =>
+    Fixture.memo("minhash_open", s, dir)(_ =>
       Dedup.minhashOpenIndex(s, steadyMinhashDir(s, dir)))
 
   /** Incrementally-assembled sibling of [[steadyMinhashIndex]]: built on the
@@ -184,29 +201,14 @@ object SparkEntry {
     * append ≡ rebuild row-identically (q_minhash_index_append shares
     * q_contamination's oracle).
     */
-  private val steadyMinhashAppCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.MinHashIndex]
   private def steadyMinhashAppendedIndex(s: SparkSession, dir: String): Dedup.MinHashIndex =
-    steadyMinhashAppCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_minhash_app")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      // done-marker = the append batch's own _COMMITTED sentinel, NOT the
-      // meta file the base write creates first (advisor r8: keying on the
-      // meta meant a crash between write and append froze a forever-stale
-      // index). The append itself is idempotent on batchId, so re-running
-      // after a partial build is safe either way.
-      if (!new java.io.File(s"$sub/batches/heldout/_COMMITTED").exists()) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$sub/minhash_meta.json").exists()) {
-          Dedup.minhashWriteIndex(
-            Dedup.minhashBuildIndex(
-              docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), "doc_id", "text"), sub)
-        }
-        Dedup.minhashAppendIndex(s, sub,
-          docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "heldout")
-      }
-      Dedup.minhashOpenIndex(s, sub)
-    })
+    Fixture.memo("minhash_app", s, dir) { d =>
+      val docs = ld(s, dir, "documents")
+      writeMinhash(docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), d)
+      Dedup.minhashAppendIndex(s, d,
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "heldout")
+      Dedup.minhashOpenIndex(s, d)
+    }
 
   /** Incrementally-assembled sibling of [[steadyBm25Index]]: built on the
     * corpus MINUS a held-out slice, then the slice absorbed via
@@ -216,26 +218,14 @@ object SparkEntry {
     * search-via-full-rebuild bit-for-bit — a far stronger contract than the
     * ANN append's same-centroids parity.
     */
-  private val steadyBm25AppCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Lexical.Bm25Index]
   private def steadyBm25AppendedIndex(s: SparkSession, dir: String): Lexical.Bm25Index =
-    steadyBm25AppCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_bm25_app")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      // done-marker = the append batch's own _COMMITTED sentinel (the
-      // advisor-r8 minhash lesson); the append is idempotent on batchId
-      if (!new java.io.File(s"$sub/batches/heldout/_COMMITTED").exists()) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$sub/bm25_meta.json").exists()) {
-          val (postings, stats) = Lexical.bm25BuildIndex(
-            docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), "doc_id", "text")
-          Lexical.bm25WriteIndex(postings, stats, sub, nBuckets = 16)
-        }
-        Lexical.bm25AppendIndex(s, sub,
-          docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "heldout")
-      }
-      Lexical.bm25OpenIndex(s, sub)
-    })
+    Fixture.memo("bm25_app", s, dir) { d =>
+      val docs = ld(s, dir, "documents")
+      writeBm25(docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), d)
+      Lexical.bm25AppendIndex(s, d,
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "heldout")
+      Lexical.bm25OpenIndex(s, d)
+    }
 
   /** Tombstoned sibling of [[steadyBm25Index]] (r13): the full-corpus index
     * with every `doc_id % 10 == 3` document REMOVED via
@@ -245,28 +235,18 @@ object SparkEntry {
     * and the score shifts on every surviving document included — not just
     * self-parity with a rebuild.
     */
-  private val steadyBm25DelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Lexical.Bm25Index]
-  private def steadyBm25DeletedDir(s: SparkSession, dir: String): String = {
-    val sub = s"${perProcessTmpDir("graft_bm25_del")}/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    // done-marker = the tombstone's own _COMMITTED sentinel (the append
-    // fixtures' crash-resume lesson); the delete is idempotent on delId
-    if (!new java.io.File(s"$sub/deletes/takedown/_COMMITTED").exists()) {
+  private def steadyBm25DeletedDir(s: SparkSession, dir: String): String =
+    Fixture.memo("bm25_del", s, dir) { d =>
       val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"$sub/bm25_meta.json").exists()) {
-        val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(postings, stats, sub, nBuckets = 16)
-      }
-      Lexical.bm25DeleteFromIndex(s, sub,
+      writeBm25(docs, d)
+      Lexical.bm25DeleteFromIndex(s, d,
         docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
         "doc_id", "takedown")
+      d
     }
-    sub
-  }
   private def steadyBm25DeletedIndex(s: SparkSession, dir: String): Lexical.Bm25Index =
-    steadyBm25DelCache.computeIfAbsent(dir,
-      _ => Lexical.bm25OpenIndex(s, steadyBm25DeletedDir(s, dir)))
+    Fixture.memo("bm25_del_open", s, dir)(_ =>
+      Lexical.bm25OpenIndex(s, steadyBm25DeletedDir(s, dir)))
 
   /** Consolidation fixture (r14, judge r13 #1; r15: THREE fold cycles —
     * judge r14 #1): the full-corpus BM25 index with the SAME takedown set
@@ -285,30 +265,21 @@ object SparkEntry {
     * through the thrice-folded index still equal DuckDB's survivor-BM25
     * from scratch — consolidation moves files, never a score bit.
     */
-  private val steadyBm25FoldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def steadyBm25FoldDir(s: SparkSession, dir: String): String =
-    steadyBm25FoldCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_bm25_fold")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!new java.io.File(s"$sub/deletes/fold-2/_COMMITTED").exists()) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$sub/bm25_meta.json").exists()) {
-          val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-          Lexical.bm25WriteIndex(postings, stats, sub, nBuckets = 16)
-        }
-        Seq(Seq(3, 13), Seq(23, 33), Seq(43, 53)).zipWithIndex
-          .foreach { case (cycle, c) =>
-            cycle.zipWithIndex.foreach { case (r, i) =>
-              Lexical.bm25DeleteFromIndex(s, sub,
-                docs.filter(pmod(col("doc_id"), lit(60)) === r).select("doc_id"),
-                "doc_id", s"t${2 * c + i}")
-            }
-            graft.operators.Tombstones.consolidate(s, sub)
+    Fixture.memo("bm25_fold", s, dir) { d =>
+      val docs = ld(s, dir, "documents")
+      writeBm25(docs, d)
+      Seq(Seq(3, 13), Seq(23, 33), Seq(43, 53)).zipWithIndex
+        .foreach { case (cycle, c) =>
+          cycle.zipWithIndex.foreach { case (r, i) =>
+            Lexical.bm25DeleteFromIndex(s, d,
+              docs.filter(pmod(col("doc_id"), lit(60)) === r).select("doc_id"),
+              "doc_id", s"t${2 * c + i}")
           }
-      }
-      sub
-    })
+          Tombstones.consolidate(s, d)
+        }
+      d
+    }
 
   /** The ANN family's fold-cycle fixture (judge r14 #6): consolidation is
     * family-shared code, but both r14 fold oracles were BM25-rooted — this
@@ -319,30 +290,20 @@ object SparkEntry {
     * over it at exhaustive probes against the same independent brute-force
     * survivor oracle as `q_ann_delete_sql`.
     */
-  private val steadyAnnFoldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def steadyAnnFoldDir(s: SparkSession, dir: String): String =
-    steadyAnnFoldCache.computeIfAbsent(dir, _ => {
-      import graft.operators.Ann
-      val sub = s"${perProcessTmpDir("graft_ann_fold")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!new java.io.File(s"$sub/deletes/fold-1/_COMMITTED").exists()) {
-        val emb = ld(s, dir, "embeddings")
-        if (!new java.io.File(s"$sub/ann_meta.json").exists()) {
-          val (cells, cents) = Ann.annBuildIndex(emb, "vec_id", "embedding", nCentroids = 16)
-          Ann.annWriteIndex(cells, cents, sub)
+    Fixture.memo("ann_fold", s, dir) { d =>
+      val emb = ld(s, dir, "embeddings")
+      writeAnn(emb, "vec_id", "embedding", d)
+      Seq(Seq(3, 13), Seq(23)).zipWithIndex.foreach { case (cycle, c) =>
+        cycle.zipWithIndex.foreach { case (r, i) =>
+          Ann.annDeleteFromIndex(s, d,
+            emb.filter(pmod(col("vec_id"), lit(30)) === r).select("vec_id"),
+            "vec_id", s"a${2 * c + i}")
         }
-        Seq(Seq(3, 13), Seq(23)).zipWithIndex.foreach { case (cycle, c) =>
-          cycle.zipWithIndex.foreach { case (r, i) =>
-            Ann.annDeleteFromIndex(s, sub,
-              emb.filter(pmod(col("vec_id"), lit(30)) === r).select("vec_id"),
-              "vec_id", s"a${2 * c + i}")
-          }
-          graft.operators.Tombstones.consolidate(s, sub)
-        }
+        Tombstones.consolidate(s, d)
       }
-      sub
-    })
+      d
+    }
 
   /** Snapshot fixture (r15): a managed BM25 root whose capture-time state
     * is EXACTLY the tombstone oracle's corpus (full minus `doc_id % 10 ==
@@ -356,42 +317,31 @@ object SparkEntry {
     * BM25 from scratch — the frozen point-in-time view across every
     * mutation class the engine has.
     */
-  private val steadySnapshotCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def steadySnapshotRoot(s: SparkSession, dir: String): String =
-    steadySnapshotCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{IndexMaintenance, Snapshots, Tombstones}
-      val root = s"${perProcessTmpDir("graft_snap_bm")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Fixture.memo("snap_bm", s, dir) { root =>
       val g0 = IndexMaintenance.genPath(root, 0)
-      if (!new java.io.File(s"$root/gen-1/_GEN_COMMITTED").exists()) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$g0/bm25_meta.json").exists()) {
-          val (postings, stats) = Lexical.bm25BuildIndex(
-            docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), "doc_id", "text")
-          Lexical.bm25WriteIndex(postings, stats, g0, nBuckets = 16)
-          Lexical.bm25AppendIndex(s, g0,
-            docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "b0")
-        }
-        Lexical.bm25DeleteFromIndex(s, g0,
-          docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
-          "doc_id", "takedown")
-        IndexMaintenance.commitGeneration(s, root, 0)
-        if (Snapshots.get(s, root, "s0").isEmpty) Snapshots.create(s, root, "s0")
-        Lexical.bm25DeleteFromIndex(s, g0,
-          docs.filter(pmod(col("doc_id"), lit(10)) === 7).select("doc_id"),
-          "doc_id", "d2")
-        Lexical.bm25DeleteFromIndex(s, g0,
-          docs.filter(pmod(col("doc_id"), lit(10)) === 9).select("doc_id"),
-          "doc_id", "d3")
-        Tombstones.consolidate(s, g0) // folds d2+d3, preserves pinned takedown
-        val g1 = IndexMaintenance.genPath(root, 1)
-        Lexical.bm25CompactIndex(s, g0, g1)
-        IndexMaintenance.commitGeneration(s, root, 1)
-        IndexMaintenance.pruneGenerations(s, root, keepLatest = 1) // pinned: no-op
-      }
+      val docs = ld(s, dir, "documents")
+      writeBm25(docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), g0)
+      Lexical.bm25AppendIndex(s, g0,
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "b0")
+      Lexical.bm25DeleteFromIndex(s, g0,
+        docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
+        "doc_id", "takedown")
+      IndexMaintenance.commitGeneration(s, root, 0)
+      Snapshots.create(s, root, "s0")
+      Lexical.bm25DeleteFromIndex(s, g0,
+        docs.filter(pmod(col("doc_id"), lit(10)) === 7).select("doc_id"),
+        "doc_id", "d2")
+      Lexical.bm25DeleteFromIndex(s, g0,
+        docs.filter(pmod(col("doc_id"), lit(10)) === 9).select("doc_id"),
+        "doc_id", "d3")
+      Tombstones.consolidate(s, g0) // folds d2+d3, preserves pinned takedown
+      val g1 = IndexMaintenance.genPath(root, 1)
+      Lexical.bm25CompactIndex(s, g0, g1)
+      IndexMaintenance.commitGeneration(s, root, 1)
+      IndexMaintenance.pruneGenerations(s, root, keepLatest = 1) // pinned: no-op
       root
-    })
+    }
 
   /** The snapshot lifecycle's observable-census trace (r15) — every number
     * structural (dir/generation/fold counts), so one VALUES oracle covers
@@ -399,25 +349,12 @@ object SparkEntry {
     * snapshot to prove both collectors reclaim the freed components —
     * [[steadySnapshotRoot]]'s pin must stay live for `q_snapshot_search`.
     */
-  private val steadySnapshotTraceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Int)]]
   private def steadySnapshotTrace(s: SparkSession, dir: String): Seq[(String, Int)] =
-    steadySnapshotTraceCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{IndexMaintenance, Snapshots, Tombstones}
+    Fixture.memo("snap_trace", s, dir) { root =>
       graft.plans.GraftPlans.install(s)
-      val root = s"${perProcessTmpDir("graft_snap_tr")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val fsRoot = new java.io.File(root)
-      if (fsRoot.exists()) { // re-runs in one process replay the whole story
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).getOrElse(Array.empty).foreach(rm); x.delete(); ()
-        }
-        rm(fsRoot)
-      }
       val docs = ld(s, dir, "documents").filter(pmod(col("doc_id"), lit(3)) === 0)
       val g0 = IndexMaintenance.genPath(root, 0)
-      val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-      Lexical.bm25WriteIndex(postings, stats, g0, nBuckets = 8)
+      writeBm25(docs, g0, nBuckets = 8)
       Lexical.bm25DeleteFromIndex(s, g0,
         docs.filter(pmod(col("doc_id"), lit(30)) === 0).select("doc_id"),
         "doc_id", "takedown")
@@ -456,7 +393,7 @@ object SparkEntry {
       trace += (("gens_after_drop",
         IndexMaintenance.committedGenerations(s, root).size))
       trace.result()
-    })
+    }
 
   /** Time-travel fixture (r15): a managed BM25 root over the FULL corpus
     * with two takedowns and two wall timestamps captured between the
@@ -468,20 +405,11 @@ object SparkEntry {
     * different moments of ONE mutating index, each bit-equal to its own
     * from-scratch recomputation, zero new oracle SQL.
     */
-  private val steadyAsOfOpenCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long)]
   private def steadyAsOfOpenFixture(s: SparkSession, dir: String): (String, Long, Long) =
-    steadyAsOfOpenCache.computeIfAbsent(dir, _ => {
-      import graft.operators.IndexMaintenance
-      val root = s"${perProcessTmpDir("graft_asof_open")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Fixture.memo("asof_open", s, dir) { root =>
       val g0 = IndexMaintenance.genPath(root, 0)
       val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"$g0/bm25_meta.json").exists()) {
-        val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(postings, stats, g0, nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, root, 0)
+      seedGen0(s, root)(writeBm25(docs, _))
       val t0 = System.currentTimeMillis()
       Lexical.bm25DeleteFromIndex(s, g0,
         docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
@@ -491,7 +419,7 @@ object SparkEntry {
         docs.filter(pmod(col("doc_id"), lit(10)) === 7).select("doc_id"),
         "doc_id", "d2")
       (root, t0, t1)
-    })
+    }
 
   /** Snapshot-compliance fixture (r15): a managed BM25 root whose
     * snapshot `pre` was captured BEFORE the `doc_id % 10 == 3` takedown
@@ -501,29 +429,18 @@ object SparkEntry {
     * MEANS and what `auditSnapshots` must surface: one (bm25, pre, id)
     * row per denylisted id, nothing for `post`.
     */
-  private val steadySnapshotAuditCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
   private def steadySnapshotAuditRoot(s: SparkSession, dir: String): String =
-    steadySnapshotAuditCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{IndexMaintenance, Snapshots}
-      val root = s"${perProcessTmpDir("graft_snap_aud")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val g0 = IndexMaintenance.genPath(root, 0)
-      if (Snapshots.get(s, root, "post").isEmpty) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$g0/bm25_meta.json").exists()) {
-          val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-          Lexical.bm25WriteIndex(postings, stats, g0, nBuckets = 16)
-        }
-        IndexMaintenance.commitGeneration(s, root, 0)
-        if (Snapshots.get(s, root, "pre").isEmpty) Snapshots.create(s, root, "pre")
-        val doomed = docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id")
-        Lexical.bm25DeleteFromIndex(s, g0, doomed, "doc_id", "takedown")
-        graft.streaming.Denylist.append(s, root, doomed, "doc_id", "takedown")
-        Snapshots.create(s, root, "post")
-      }
+    Fixture.memo("snap_aud", s, dir) { root =>
+      val docs = ld(s, dir, "documents")
+      seedGen0(s, root)(writeBm25(docs, _))
+      Snapshots.create(s, root, "pre")
+      val doomed = docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id")
+      Lexical.bm25DeleteFromIndex(s, IndexMaintenance.genPath(root, 0), doomed,
+        "doc_id", "takedown")
+      graft.streaming.Denylist.append(s, root, doomed, "doc_id", "takedown")
+      Snapshots.create(s, root, "post")
       root
-    })
+    }
 
   /** Composed-lifecycle sibling (r14, judge r13 #6): built on `doc_id % 7
     * != 3`, APPENDED with the held-out slice (so df is recomputed in-plan
@@ -535,27 +452,17 @@ object SparkEntry {
     * the unfiltered survivor search). The oracle recomputes
     * survivor-then-allowed BM25 from scratch.
     */
-  private val steadyBm25FltDelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Lexical.Bm25Index]
   private def steadyBm25FilteredDeletedIndex(s: SparkSession, dir: String): Lexical.Bm25Index =
-    steadyBm25FltDelCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_bm25_fltdel")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!new java.io.File(s"$sub/deletes/takedown/_COMMITTED").exists()) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$sub/bm25_meta.json").exists()) {
-          val (postings, stats) = Lexical.bm25BuildIndex(
-            docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), "doc_id", "text")
-          Lexical.bm25WriteIndex(postings, stats, sub, nBuckets = 16)
-          Lexical.bm25AppendIndex(s, sub,
-            docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "heldout")
-        }
-        Lexical.bm25DeleteFromIndex(s, sub,
-          docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
-          "doc_id", "takedown")
-      }
-      Lexical.bm25OpenIndex(s, sub)
-    })
+    Fixture.memo("bm25_fltdel", s, dir) { d =>
+      val docs = ld(s, dir, "documents")
+      writeBm25(docs.filter(pmod(col("doc_id"), lit(7)) =!= 3), d)
+      Lexical.bm25AppendIndex(s, d,
+        docs.filter(pmod(col("doc_id"), lit(7)) === 3), "doc_id", "text", "heldout")
+      Lexical.bm25DeleteFromIndex(s, d,
+        docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
+        "doc_id", "takedown")
+      Lexical.bm25OpenIndex(s, d)
+    }
 
   /** Tombstoned sibling of [[steadyMinhashIndex]] (r13): full-corpus index
     * minus the `doc_id % 10 == 3` takedown set. `q_minhash_index_delete`
@@ -563,24 +470,106 @@ object SparkEntry {
     * docs, against the DuckDB banding+jaccard oracle restricted to the
     * survivor corpus — a taken-down doc must stop matching immediately.
     */
-  private val steadyMinhashDelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Dedup.MinHashIndex]
   private def steadyMinhashDeletedIndex(s: SparkSession, dir: String): Dedup.MinHashIndex =
-    steadyMinhashDelCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_minhash_del")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!new java.io.File(s"$sub/deletes/takedown/_COMMITTED").exists()) {
-        val docs = ld(s, dir, "documents")
-        if (!new java.io.File(s"$sub/minhash_meta.json").exists()) {
-          Dedup.minhashWriteIndex(
-            Dedup.minhashBuildIndex(docs, "doc_id", "text"), sub)
-        }
-        Dedup.minhashDeleteFromIndex(s, sub,
-          docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
-          "doc_id", "takedown")
-      }
-      Dedup.minhashOpenIndex(s, sub)
-    })
+    Fixture.memo("minhash_del", s, dir) { d =>
+      val docs = ld(s, dir, "documents")
+      writeMinhash(docs, d)
+      Dedup.minhashDeleteFromIndex(s, d,
+        docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id"),
+        "doc_id", "takedown")
+      Dedup.minhashOpenIndex(s, d)
+    }
+
+  /** Incrementally-assembled sibling of [[steadyAnnIndex]] plus its
+    * rebuild-with-same-centroids reference: the appended index is built on
+    * 4/5 of the embeddings and the held-out slice absorbed via
+    * [[graft.operators.Ann.annAppendIndex]] (frozen centroids); the
+    * reference assigns the FULL corpus to the SAME centroids in one shot.
+    * `q_ann_index_append` proves search-via-append ≡ search-via-rebuild
+    * row-identically (emptiness oracle, the q_ann_recall move).
+    */
+  private def steadyAnnAppendedPair(s: SparkSession, dir: String)
+      : (Ann.AnnIndex, Ann.AnnIndex) =
+    Fixture.memo("ann_app", s, dir) { d =>
+      val (subApp, subRef) = (s"$d/app", s"$d/ref")
+      val emb = ld(s, dir, "embeddings")
+      writeAnn(emb.filter(pmod(col("vec_id"), lit(5)) =!= 3), "vec_id", "embedding", subApp)
+      writeAnnAtCentroids(emb, "vec_id", "embedding",
+        Ann.annOpenIndex(s, subApp).centroids, subRef)
+      Ann.annAppendIndex(s, subApp, emb.filter(pmod(col("vec_id"), lit(5)) === 3),
+        "vec_id", "embedding", "heldout")
+      (Ann.annOpenIndex(s, subApp), Ann.annOpenIndex(s, subRef))
+    }
+
+  /** Tombstoned sibling of [[steadyAnnIndex]] plus its reference (r13): the
+    * live index is the FULL corpus with the `vec_id % 10 == 3` slice removed
+    * via [[graft.operators.Ann.annDeleteFromIndex]]; the reference assigns
+    * only the SURVIVORS to the SAME centroids in one shot (the
+    * [[steadyAnnAppendedPair]] move, inverted). `q_ann_index_delete` proves
+    * search-via-tombstones ≡ search-via-rebuild row-identically: surviving
+    * vectors keep their cells and scores bit-for-bit, deleted ids never
+    * surface (emptiness oracle). The live dir rides along so the SQL-surface
+    * leg (`q_ann_delete_sql`, whose `graft_ann_search` opens per call) opens
+    * the SAME directory this builder wrote.
+    */
+  private def steadyAnnDeletedPair(s: SparkSession, dir: String)
+      : (Ann.AnnIndex, Ann.AnnIndex, String) =
+    Fixture.memo("ann_del", s, dir) { d =>
+      val (subLive, subRef) = (s"$d/live", s"$d/ref")
+      val emb = ld(s, dir, "embeddings")
+      writeAnn(emb, "vec_id", "embedding", subLive)
+      writeAnnAtCentroids(emb.filter(pmod(col("vec_id"), lit(10)) =!= 3),
+        "vec_id", "embedding", Ann.annOpenIndex(s, subLive).centroids, subRef)
+      Ann.annDeleteFromIndex(s, subLive,
+        emb.filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"),
+        "vec_id", "takedown")
+      (Ann.annOpenIndex(s, subLive), Ann.annOpenIndex(s, subRef), subLive)
+    }
+  private def steadyAnnDeletedDir(s: SparkSession, dir: String): String =
+    steadyAnnDeletedPair(s, dir)._3
+
+  /** Crawl-ingest composite: a fresh copy of the corpus MinHash index
+    * absorbs one constructed epoch ([[ingestBatch]]) via
+    * [[graft.streaming.StreamOps.ingestEpoch]] (self-dedup → corpus-dedup →
+    * atomic append), and the SURVIVOR ids are kept — the epoch is not
+    * re-runnable against the mutated index (its survivors are in the corpus
+    * afterwards, by design), so repeated query calls replay the kept set.
+    */
+  private def steadyIngestSurvivors(s: SparkSession, dir: String): DataFrame = {
+    val ids = Fixture.memo("ingest", s, dir) { d =>
+      val docs = ld(s, dir, "documents")
+      writeMinhash(docs, d)
+      graft.streaming.StreamOps
+        .ingestEpoch(ingestBatch(docs), "doc_id", "text", d, jaccardThreshold = 0.8, "leg_0")
+        .select("doc_id").collect().map(_.getLong(0)).sorted
+    }
+    import s.implicits._
+    ids.toSeq.toDF("doc_id")
+  }
+
+  /** Manifest-backed ingest pipeline maintaining a BM25 index in lockstep
+    * with the MinHash dedup corpus
+    * ([[graft.streaming.StreamOps.ingestEpochPipeline]]), plus the
+    * reference: a one-shot BM25 rebuild over (corpus ∪ survivors).
+    * `q_stream_ingest_bm25` checks maintained ≡ rebuilt search-for-search,
+    * bit-identical scores — the exact-append guarantee carried end-to-end
+    * through the streaming composite. Survivor-set correctness itself is
+    * hash-gated by `q_stream_ingest`'s all-SQL oracle (same batch shape).
+    */
+  private def steadyIngestBm25Pair(s: SparkSession, dir: String)
+      : (Lexical.Bm25Index, Lexical.Bm25Index) =
+    Fixture.memo("ingest_bm25", s, dir) { d =>
+      val (mhSub, bmSub, refSub) = (s"$d/mh", s"$d/bm25", s"$d/ref")
+      val docs = ld(s, dir, "documents")
+      writeMinhash(docs, mhSub)
+      writeBm25(docs, bmSub)
+      val survivors = graft.streaming.StreamOps.ingestEpochPipeline(
+        ingestBatch(docs), "doc_id", "text", mhSub,
+        jaccardThreshold = 0.8, batchId = "leg_0", bm25Path = Some(bmSub))
+      writeBm25(docs.select(col("doc_id"), col("text"))
+        .unionByName(survivors.select(col("doc_id"), col("text"))), refSub)
+      (Lexical.bm25OpenIndex(s, bmSub), Lexical.bm25OpenIndex(s, refSub))
+    }
 
   /** ANN sibling of [[steadyIngestBm25Pair]] — the triad's semantic leg:
     * a fresh MinHash+ANN index pair over md5-embedded documents, one
@@ -591,59 +580,25 @@ object SparkEntry {
     * search-for-search (the `q_ann_index_append` contract carried through
     * the streaming composite).
     */
-  private val steadyIngestAnnCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.operators.Ann.AnnIndex, graft.operators.Ann.AnnIndex)]
   private def steadyIngestAnnPair(s: SparkSession, dir: String)
-      : (graft.operators.Ann.AnnIndex, graft.operators.Ann.AnnIndex) =
-    steadyIngestAnnCache.computeIfAbsent(dir, _ => {
-      import graft.operators.Ann
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhSub = s"${perProcessTmpDir("graft_ingesta_mh")}/$tag"
-      val annSub = s"${perProcessTmpDir("graft_ingesta_ann")}/$tag"
-      val refSub = s"${perProcessTmpDir("graft_ingesta_ref")}/$tag"
+      : (Ann.AnnIndex, Ann.AnnIndex) =
+    Fixture.memo("ingest_ann", s, dir) { d =>
+      val (mhSub, annSub, refSub) = (s"$d/mh", s"$d/ann", s"$d/ref")
       val docs = ld(s, dir, "documents")
-      def embed(d: DataFrame): DataFrame = md5Embedder
-        .embed(d.select(col("doc_id"), col("text")), "text", "__vec")
-        .select("doc_id", "__vec")
-      if (!new java.io.File(s"$mhSub/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), mhSub)
-      }
-      if (!new java.io.File(s"$annSub/ann_meta.json").exists()) {
-        val (cells, cents) = Ann.annBuildIndex(embed(docs), "doc_id", "__vec",
-          nCentroids = 16)
-        Ann.annWriteIndex(cells, cents, annSub)
-      }
-      val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 2000000L).as("doc_id"), reverse(col("text")).as("text")))
-        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 3000000L).as("doc_id"), reverse(col("text")).as("text")))
+      writeMinhash(docs, mhSub)
+      writeAnn(md5Vecs(docs), "doc_id", "__vec", annSub)
       val survivors = graft.streaming.StreamOps.ingestEpochPipeline(
-        batch, "doc_id", "text", mhSub,
+        ingestBatch(docs), "doc_id", "text", mhSub,
         jaccardThreshold = 0.8, batchId = "leg_0", ann = Some((annSub, md5Embedder)))
-      if (!new java.io.File(s"$refSub/ann_meta.json").exists()) {
-        // centroid table is append-invariant; assign the FULL grown corpus
-        // to it with the same 1-NN kernel the build and the append used
-        val cents = Ann.annOpenIndex(s, annSub).centroids
-        val all = embed(docs.select(col("doc_id"), col("text"))
-          .unionByName(survivors.select(col("doc_id"), col("text"))))
-        val assign = graft.operators.SemanticJoin.knnJoinVec(
-          all, "doc_id", "__vec",
-          cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
-          .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
-        val refCells = all
-          .select(col("doc_id").cast("long").as("corpus_id"),
-            graft.functions.VectorOps.asDouble(col("__vec")).as("cv"))
-          .join(assign, "corpus_id")
-        Ann.annWriteIndex(refCells, cents, refSub)
-      }
+      writeAnnAtCentroids(
+        md5Vecs(docs.select(col("doc_id"), col("text"))
+          .unionByName(survivors.select(col("doc_id"), col("text")))),
+        "doc_id", "__vec", Ann.annOpenIndex(s, annSub).centroids, refSub)
       (Ann.annOpenIndex(s, annSub), Ann.annOpenIndex(s, refSub))
-    })
+    }
 
-  /** Managed-triad maintenance composite (judge r10 #1), run ONCE per
-    * process: three [[graft.operators.IndexMaintenance]] generation roots
+  /** Managed-triad maintenance composite: three
+    * [[graft.operators.IndexMaintenance]] generation roots
     * seeded at gen-0 (MinHash + BM25 over the documents corpus, ANN over
     * md5-embedded documents), then FOUR ingest epochs through
     * [[graft.streaming.StreamOps.ingestEpochPipeline]] with
@@ -665,42 +620,18 @@ object SparkEntry {
   private final case class MaintenanceFixture(
       census: Seq[(Int, String, String, Int, Int)],
       maintMh: Dedup.MinHashIndex, maintBm: Lexical.Bm25Index,
-      maintAnn: graft.operators.Ann.AnnIndex,
+      maintAnn: Ann.AnnIndex,
       refMh: Dedup.MinHashIndex, refBm: Lexical.Bm25Index,
-      refAnn: graft.operators.Ann.AnnIndex,
+      refAnn: Ann.AnnIndex,
       mhRoot: String, bmRoot: String, annRoot: String)
-  private val steadyMaintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MaintenanceFixture]
   private def steadyMaintenance(s: SparkSession, dir: String): MaintenanceFixture =
-    steadyMaintCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{Ann, IndexMaintenance}
-      import graft.operators.IndexMaintenance.{currentPath, genPath}
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhRoot = s"${perProcessTmpDir("graft_maint_mh")}/$tag"
-      val bmRoot = s"${perProcessTmpDir("graft_maint_bm")}/$tag"
-      val annRoot = s"${perProcessTmpDir("graft_maint_ann")}/$tag"
-      val refBase = s"${perProcessTmpDir("graft_maint_ref")}/$tag"
+    Fixture.memo("maint", s, dir) { d =>
+      import IndexMaintenance.currentPath
+      val (mhRoot, bmRoot, annRoot, refBase) = (s"$d/mh", s"$d/bm", s"$d/ann", s"$d/ref")
       val docs = ld(s, dir, "documents")
-      def embed(d: DataFrame): DataFrame = md5Embedder
-        .embed(d.select(col("doc_id"), col("text")), "text", "__vec")
-        .select("doc_id", "__vec")
-      // seed gen-0 of each root (idempotent within the process)
-      if (!new java.io.File(s"${genPath(mhRoot, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), genPath(mhRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, mhRoot, 0)
-      if (!new java.io.File(s"${genPath(bmRoot, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, genPath(bmRoot, 0), nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, bmRoot, 0)
-      if (!new java.io.File(s"${genPath(annRoot, 0)}/ann_meta.json").exists()) {
-        val (cells, cents) = Ann.annBuildIndex(embed(docs), "doc_id", "__vec",
-          nCentroids = 16)
-        Ann.annWriteIndex(cells, cents, genPath(annRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, annRoot, 0)
+      seedGen0(s, mhRoot)(writeMinhash(docs, _))
+      seedGen0(s, bmRoot)(writeBm25(docs, _))
+      seedGen0(s, annRoot)(writeAnn(md5Vecs(docs), "doc_id", "__vec", _))
       val policy = IndexMaintenance.Policy(minhashMaxFanIn = 2,
         bm25MaxAppendFraction = 0.0, annMaxAppendFraction = 0.0)
       val fs = new org.apache.hadoop.fs.Path(mhRoot)
@@ -737,27 +668,10 @@ object SparkEntry {
       // annRefitStaleness at the +inf default)
       val grown = docs.select(col("doc_id"), col("text"))
         .unionByName(survivors.reduce(_.unionByName(_)))
-      if (!new java.io.File(s"$refBase/mh/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(grown, "doc_id", "text"), s"$refBase/mh")
-      }
-      if (!new java.io.File(s"$refBase/bm/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(grown, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, s"$refBase/bm", nBuckets = 16)
-      }
-      if (!new java.io.File(s"$refBase/ann/ann_meta.json").exists()) {
-        val cents = Ann.annOpenIndex(s, currentPath(s, annRoot)).centroids
-        val all = embed(grown)
-        val assign = graft.operators.SemanticJoin.knnJoinVec(
-          all, "doc_id", "__vec",
-          cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
-          .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
-        val refCells = all
-          .select(col("doc_id").cast("long").as("corpus_id"),
-            graft.functions.VectorOps.asDouble(col("__vec")).as("cv"))
-          .join(assign, "corpus_id")
-        Ann.annWriteIndex(refCells, cents, s"$refBase/ann")
-      }
+      writeMinhash(grown, s"$refBase/mh")
+      writeBm25(grown, s"$refBase/bm")
+      writeAnnAtCentroids(md5Vecs(grown), "doc_id", "__vec",
+        Ann.annOpenIndex(s, currentPath(s, annRoot)).centroids, s"$refBase/ann")
       MaintenanceFixture(census.result(),
         Dedup.minhashOpenIndex(s, currentPath(s, mhRoot)),
         Lexical.bm25OpenIndex(s, currentPath(s, bmRoot)),
@@ -766,10 +680,10 @@ object SparkEntry {
         Lexical.bm25OpenIndex(s, s"$refBase/bm"),
         Ann.annOpenIndex(s, s"$refBase/ann"),
         mhRoot, bmRoot, annRoot)
-    })
+    }
 
-  /** Generation-aware serving sessions over managed roots (judge r11 #1),
-    * run ONCE per process: three [[graft.operators.ServingSession]]s opened
+  /** Generation-aware serving sessions over managed roots:
+    * three [[graft.operators.ServingSession]]s opened
     * on three [[graft.operators.IndexMaintenance]] roots seeded at gen-0
     * (MinHash + BM25 over documents, ANN over md5-embedded documents), then
     * FOUR append epochs with `maintainIndexes` after each (the
@@ -798,37 +712,15 @@ object SparkEntry {
       annPruned: Seq[org.apache.spark.sql.Row],
       finalGens: Map[String, Int],
       refBm: Lexical.Bm25Index, refMh: Dedup.MinHashIndex,
-      refAnn: graft.operators.Ann.AnnIndex)
-  private val steadySessionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ServingSessionFixture]
+      refAnn: Ann.AnnIndex)
   private def steadyServingSession(s: SparkSession, dir: String): ServingSessionFixture =
-    steadySessionCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{Ann, IndexMaintenance, ServingSession}
-      import graft.operators.IndexMaintenance.{currentPath, genPath}
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhRoot = s"${perProcessTmpDir("graft_sess_mh")}/$tag"
-      val bmRoot = s"${perProcessTmpDir("graft_sess_bm")}/$tag"
-      val annRoot = s"${perProcessTmpDir("graft_sess_ann")}/$tag"
+    Fixture.memo("sess", s, dir) { d =>
+      import IndexMaintenance.currentPath
+      val (mhRoot, bmRoot, annRoot) = (s"$d/mh", s"$d/bm", s"$d/ann")
       val docs = ld(s, dir, "documents")
-      def embed(d: DataFrame): DataFrame = md5Embedder
-        .embed(d.select(col("doc_id"), col("text")), "text", "__vec")
-        .select("doc_id", "__vec")
-      if (!new java.io.File(s"${genPath(mhRoot, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), genPath(mhRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, mhRoot, 0)
-      if (!new java.io.File(s"${genPath(bmRoot, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, genPath(bmRoot, 0), nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, bmRoot, 0)
-      if (!new java.io.File(s"${genPath(annRoot, 0)}/ann_meta.json").exists()) {
-        val (cells, cents) = Ann.annBuildIndex(embed(docs), "doc_id", "__vec",
-          nCentroids = 16)
-        Ann.annWriteIndex(cells, cents, genPath(annRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, annRoot, 0)
+      seedGen0(s, mhRoot)(writeMinhash(docs, _))
+      seedGen0(s, bmRoot)(writeBm25(docs, _))
+      seedGen0(s, annRoot)(writeAnn(md5Vecs(docs), "doc_id", "__vec", _))
       val policy = IndexMaintenance.Policy(minhashMaxFanIn = 2,
         bm25MaxAppendFraction = 0.0, annMaxAppendFraction = 0.0)
       val sessBm = ServingSession.bm25(s, bmRoot)
@@ -837,7 +729,7 @@ object SparkEntry {
       val q = steadyQueries(s, dir)
       val probe = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select("doc_id", "text").localCheckpoint(true)
-      val qv = embed(docs.filter(col("doc_id") < 25)).localCheckpoint(true)
+      val qv = md5Vecs(docs.filter(col("doc_id") < 25)).localCheckpoint(true)
       def searchBm(): DataFrame = {
         val (g, i) = sessBm.resolved
         Lexical.bm25SearchIndex(i, q, "qid", "text", k = 5).withColumn("gen", lit(g))
@@ -862,7 +754,7 @@ object SparkEntry {
           "doc_id", "text", s"b$e")
         Lexical.bm25AppendIndex(s, currentPath(s, bmRoot), batch,
           "doc_id", "text", s"b$e")
-        Ann.annAppendIndex(s, currentPath(s, annRoot), embed(batch),
+        Ann.annAppendIndex(s, currentPath(s, annRoot), md5Vecs(batch),
           "doc_id", "__vec", s"b$e")
         IndexMaintenance.maintainIndexes(s, minhashRoot = Some(mhRoot),
           bm25Root = Some(bmRoot), annRoot = Some(annRoot), policy = policy)
@@ -895,13 +787,13 @@ object SparkEntry {
         Lexical.bm25OpenIndex(s, currentPath(s, bmRoot)),
         Dedup.minhashOpenIndex(s, currentPath(s, mhRoot)),
         Ann.annOpenIndex(s, currentPath(s, annRoot)))
-    })
+    }
 
   /** The STREAMING capstone, oracle-gated (judge r12 #2): live
     * [[graft.operators.ServingSession]]s serving THROUGH the
     * self-maintaining streaming loop
-    * ([[graft.streaming.StreamOps.streamingIngestPipelineManaged]]), run
-    * ONCE per process. MinHash + BM25 generation roots are seeded at gen-0
+    * ([[graft.streaming.StreamOps.streamingIngestPipelineManaged]]).
+    * MinHash + BM25 generation roots are seeded at gen-0
     * over `documents`; a MemoryStream feeds THREE ingest epochs of
     * deterministic novel docs (id-offset, reversed text), the managed loop
     * dedupes each batch against the CURRENT generation, appends survivors
@@ -921,29 +813,16 @@ object SparkEntry {
       mhRows: (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType),
       finalGens: Map[String, Int],
       refBm: Lexical.Bm25Index, refMh: Dedup.MinHashIndex)
-  private val steadyStreamServingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StreamServingFixture]
   private def steadyStreamServing(s: SparkSession, dir: String): StreamServingFixture =
-    steadyStreamServingCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{IndexMaintenance, ServingSession}
-      import graft.operators.IndexMaintenance.{currentPath, genPath}
+    Fixture.memo("strm", s, dir) { d =>
+      import IndexMaintenance.currentPath
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhRoot = s"${perProcessTmpDir("graft_strm_mh")}/$tag"
-      val bmRoot = s"${perProcessTmpDir("graft_strm_bm")}/$tag"
+      val (mhRoot, bmRoot) = (s"$d/mh", s"$d/bm")
       val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"${genPath(mhRoot, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), genPath(mhRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, mhRoot, 0)
-      if (!new java.io.File(s"${genPath(bmRoot, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, genPath(bmRoot, 0), nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, bmRoot, 0)
+      seedGen0(s, mhRoot)(writeMinhash(docs, _))
+      seedGen0(s, bmRoot)(writeBm25(docs, _))
       val sessBm = ServingSession.bm25(s, bmRoot)
       val sessMh = ServingSession.minhash(s, mhRoot)
       val q = steadyQueries(s, dir)
@@ -1001,9 +880,9 @@ object SparkEntry {
       StreamServingFixture(census.result(), bmRows, mhRows, finalGens,
         Lexical.bm25OpenIndex(s, currentPath(s, bmRoot)),
         Dedup.minhashOpenIndex(s, currentPath(s, mhRoot)))
-    })
+    }
 
-  /** The streaming-TAKEDOWN capstone fixture (r13), run ONCE per process:
+  /** The streaming-TAKEDOWN capstone fixture (r13):
     * minhash + bm25 generation roots on the full documents corpus, one
     * takedown epoch streaming every `doc_id % 10 == 3` through
     * [[graft.streaming.StreamOps.streamingTakedownPipelineManaged]] with an
@@ -1024,29 +903,15 @@ object SparkEntry {
       ingestSurvivors: Seq[Long],
       denylist: Seq[Long],
       mhRoot: String)
-  private val steadyStreamTakedownCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StreamTakedownFixture]
   private def steadyStreamTakedown(s: SparkSession, dir: String): StreamTakedownFixture =
-    steadyStreamTakedownCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{IndexMaintenance, ServingSession}
-      import graft.operators.IndexMaintenance.genPath
+    Fixture.memo("tkdn", s, dir) { d =>
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhRoot = s"${perProcessTmpDir("graft_tkdn_mh")}/$tag"
-      val bmRoot = s"${perProcessTmpDir("graft_tkdn_bm")}/$tag"
+      val (mhRoot, bmRoot) = (s"$d/mh", s"$d/bm")
       val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"${genPath(mhRoot, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), genPath(mhRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, mhRoot, 0)
-      if (!new java.io.File(s"${genPath(bmRoot, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, genPath(bmRoot, 0), nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, bmRoot, 0)
+      seedGen0(s, mhRoot)(writeMinhash(docs, _))
+      seedGen0(s, bmRoot)(writeBm25(docs, _))
       val sessBm = ServingSession.bm25(s, bmRoot)
       val sessMh = ServingSession.minhash(s, mhRoot)
       val delIds = docs.filter(pmod(col("doc_id"), lit(10)) === 3)
@@ -1105,19 +970,8 @@ object SparkEntry {
         .map(_.collect().map(_.getLong(0)).toSeq.sorted).getOrElse(Seq.empty)
       StreamTakedownFixture(census, bmRows, mhRows,
         survivors.result().sorted, denylist, mhRoot)
-    })
+    }
 
-  /** Content-based takedown fixture (r13), run ONCE per process: dedicated
-    * minhash + bm25 generation roots over the full documents corpus; the
-    * "notice" is copies of every `doc_id % 10 == 6` document under offset
-    * ids (content known, corpus ids not);
-    * [[graft.operators.IndexMaintenance.takedownByContent]] resolves them
-    * through the banded near-dup search at 0.8 and tombstones the resolved
-    * ids in both indexes. The oracle recomputes the RESOLUTION (banding +
-    * Jaccard verify — so near-dups of noticed content count too, and
-    * blank-shingle docs never match) and the post-takedown BM25 relation
-    * over the survivors it derives itself.
-    */
   /** Multi-tenant serving fixture (r14, judge r13 #2's census leg): one
     * live BM25 [[graft.operators.ServingSession]] serving TWO tenants
     * through keyed [[graft.operators.ServingSession.derived]] views,
@@ -1132,21 +986,10 @@ object SparkEntry {
     * bug this gates against).
     */
   private final case class TenantViewsFixture(legs: Seq[(String, Long, Long)])
-  private val steadyTenantViewsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TenantViewsFixture]
   private def steadyTenantViews(s: SparkSession, dir: String): TenantViewsFixture =
-    steadyTenantViewsCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{IndexMaintenance, ServingSession}
-      import IndexMaintenance.genPath
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val root = s"${perProcessTmpDir("graft_tenant_bm")}/$tag"
+    Fixture.memo("tenant", s, dir) { root =>
       val docs = ld(s, dir, "documents")
-      val base = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-      if (!new java.io.File(s"${genPath(root, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(base, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, genPath(root, 0), nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, root, 0)
+      seedGen0(s, root)(writeBm25(docs.filter(pmod(col("doc_id"), lit(2)) === 0), _))
       val queries = docs.filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("text"))
       val allows = Seq(
@@ -1184,10 +1027,10 @@ object SparkEntry {
         legs += (("derives", sess.deriveCount.get(), 0L))
       } finally sess.close()
       TenantViewsFixture(legs.result())
-    })
+    }
 
   /** Replica-FOLLOWER fixture (r14, judge r13 #3 — the continuous half of
-    * `q_replica_serving`'s one-shot copy), run ONCE per process: a managed
+    * `q_replica_serving`'s one-shot copy): a managed
     * minhash source root advances through three committed generations
     * (base build, two append+compact passes) while an
     * [[graft.operators.IndexMaintenance.ReplicaFollower]] on a standby
@@ -1200,29 +1043,17 @@ object SparkEntry {
     */
   private final case class ReplicaFollowFixture(
       srcRoot: String, dstRoot: String, trace: Seq[(String, Long, Long)])
-  private val steadyReplicaFollowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ReplicaFollowFixture]
   private def steadyReplicaFollow(s: SparkSession, dir: String): ReplicaFollowFixture =
-    steadyReplicaFollowCache.computeIfAbsent(dir, _ => {
-      import graft.operators.IndexMaintenance
-      import IndexMaintenance.genPath
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val src = s"${perProcessTmpDir("graft_follow_src")}/$tag"
-      val dst = s"${perProcessTmpDir("graft_follow_dst")}/$tag"
+    Fixture.memo("follow", s, dir) { d =>
+      val (src, dst) = (s"$d/src", s"$d/dst")
       val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"${genPath(src, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(
-            docs.filter(pmod(col("doc_id"), lit(6)) === 0), "doc_id", "text"),
-          genPath(src, 0))
-      }
-      IndexMaintenance.commitGeneration(s, src, 0)
+      seedGen0(s, src)(writeMinhash(docs.filter(pmod(col("doc_id"), lit(6)) === 0), _))
       val follower = new IndexMaintenance.ReplicaFollower(s, src, dst)
       val trace = Seq.newBuilder[(String, Long, Long)]
       follower.poll().foreach(g => trace += (("follow", 0L, g.toLong)))
-      // two generations committed while the follower is down (idempotent
-      // appends; any-fan-in policy compacts each into a fresh generation)
-      def advance(pred: org.apache.spark.sql.Column, batchId: String): Unit = {
+      // two generations committed while the follower is down (any-fan-in
+      // policy compacts each append into a fresh generation)
+      def advance(pred: Column, batchId: String): Unit = {
         Dedup.minhashAppendIndex(s, IndexMaintenance.currentPath(s, src),
           docs.filter(pred), "doc_id", "text", batchId)
         IndexMaintenance.maintainIndexes(s, minhashRoot = Some(src),
@@ -1235,31 +1066,28 @@ object SparkEntry {
       trace += (("wm", IndexMaintenance.currentGeneration(s, src).toLong,
         follower.watermark.toLong))
       ReplicaFollowFixture(src, dst, trace.result())
-    })
+    }
 
+  /** Content-based takedown fixture (r13): dedicated
+    * minhash + bm25 generation roots over the full documents corpus; the
+    * "notice" is copies of every `doc_id % 10 == 6` document under offset
+    * ids (content known, corpus ids not);
+    * [[graft.operators.IndexMaintenance.takedownByContent]] resolves them
+    * through the banded near-dup search at 0.8 and tombstones the resolved
+    * ids in both indexes. The oracle recomputes the RESOLUTION (banding +
+    * Jaccard verify — so near-dups of noticed content count too, and
+    * blank-shingle docs never match) and the post-takedown BM25 relation
+    * over the survivors it derives itself.
+    */
   private final case class ContentTakedownFixture(
       resolved: Seq[Long],
       bmRows: (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType))
-  private val steadyContentTakedownCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ContentTakedownFixture]
   private def steadyContentTakedown(s: SparkSession, dir: String): ContentTakedownFixture =
-    steadyContentTakedownCache.computeIfAbsent(dir, _ => {
-      import graft.operators.IndexMaintenance
-      import graft.operators.IndexMaintenance.{currentPath, genPath}
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhRoot = s"${perProcessTmpDir("graft_ctd_mh")}/$tag"
-      val bmRoot = s"${perProcessTmpDir("graft_ctd_bm")}/$tag"
+    Fixture.memo("ctd", s, dir) { d =>
+      val (mhRoot, bmRoot) = (s"$d/mh", s"$d/bm")
       val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"${genPath(mhRoot, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), genPath(mhRoot, 0))
-      }
-      IndexMaintenance.commitGeneration(s, mhRoot, 0)
-      if (!new java.io.File(s"${genPath(bmRoot, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, genPath(bmRoot, 0), nBuckets = 16)
-      }
-      IndexMaintenance.commitGeneration(s, bmRoot, 0)
+      seedGen0(s, mhRoot)(writeMinhash(docs, _))
+      seedGen0(s, bmRoot)(writeBm25(docs, _))
       val probes = docs.filter(pmod(col("doc_id"), lit(10)) === 6)
         .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
       val resolved = IndexMaintenance.takedownByContent(s,
@@ -1267,13 +1095,13 @@ object SparkEntry {
           bm25Root = Some(bmRoot), jaccardThreshold = 0.8)
         .collect().map(_.getLong(0)).toSeq.sorted
       val bm = Lexical.bm25SearchIndex(
-        Lexical.bm25OpenIndex(s, currentPath(s, bmRoot)),
+        Lexical.bm25OpenIndex(s, IndexMaintenance.currentPath(s, bmRoot)),
         steadyQueries(s, dir), "qid", "text", k = 5)
       ContentTakedownFixture(resolved, (bm.collect().toSeq, bm.schema))
-    })
+    }
 
-  /** Drift → recall degradation → refit recovery (judge r10 #2), run ONCE
-    * per process: an ANN index fitted on the embeddings corpus absorbs two
+  /** Drift → recall degradation → refit recovery: an ANN
+    * index fitted on the embeddings corpus absorbs two
     * DISTRIBUTION-SHIFTED batches against its frozen centroids — tight
     * cones around two basis directions (see the `shifted` note below for
     * why cones are the genuine k-means drift where reflections of an
@@ -1291,56 +1119,11 @@ object SparkEntry {
   private final case class DriftFixture(
       staleness: Double, appendMean: Double, refitMean: Double,
       refitMean8: Double)
-  private val steadyStressIngestCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]
-
-  /** Single-partition PINNED copies of the three steady indexes — the
-    * serving configuration (the bench census's setup), as a driver-query
-    * fixture for `q_resident_parity`. Frames are re-pinned on every call:
-    * the bench unpersists all retained blocks between attempts, and the
-    * resident gate requires live pins.
-    */
-  private val steadyPinnedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Lexical.Bm25Index, graft.operators.Ann.AnnIndex, Dedup.MinHashIndex,
-      graft.operators.Ann.AnnIndex)]
-  private def steadyPinnedIndexes(s: SparkSession, dir: String)
-      : (Lexical.Bm25Index, graft.operators.Ann.AnnIndex, Dedup.MinHashIndex,
-        graft.operators.Ann.AnnIndex) = {
-    val t = steadyPinnedCache.computeIfAbsent(dir, _ => {
-      val bm0 = steadyBm25Index(s, dir)
-      val ann0 = steadyAnnIndex(s, dir)
-      val mh0 = steadyMinhashIndex(s, dir)
-      val pq0 = steadyAnnPqIndex(s, dir)
-      (bm0.copy(postings = bm0.postings.coalesce(1)),
-        ann0.copy(cells = ann0.cells.coalesce(1)),
-        mh0.copy(postings = mh0.postings.coalesce(1),
-          shingles = mh0.shingles.coalesce(1)),
-        pq0.copy(cells = pq0.cells.coalesce(1)))
-    })
-    Seq(t._1.postings, t._2.cells, t._3.postings, t._3.shingles, t._4.cells)
-      .foreach { f =>
-        if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-          f.persist(); f.count()
-        }
-      }
-    t
-  }
-
-  private val steadyDriftCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DriftFixture]
   private def steadyDriftRefit(s: SparkSession, dir: String): DriftFixture =
-    steadyDriftCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{Ann, IndexMaintenance}
-      import graft.operators.IndexMaintenance.{currentPath, genPath}
-      val root = s"${perProcessTmpDir("graft_drift")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Fixture.memo("drift", s, dir) { root =>
+      import IndexMaintenance.currentPath
       val e = ld(s, dir, "embeddings").select("vec_id", "embedding")
-      if (!new java.io.File(s"${genPath(root, 0)}/ann_meta.json").exists()) {
-        val (cells, cents) = Ann.annBuildIndex(e, "vec_id", "embedding",
-          nCentroids = 16)
-        Ann.annWriteIndex(cells, cents, genPath(root, 0))
-      }
-      IndexMaintenance.commitGeneration(s, root, 0)
+      seedGen0(s, root)(writeAnn(e, "vec_id", "embedding", _))
       // cone(d) = basis direction e_d + 0.5·x: a ~27° cone of the corpus
       // around e_d. In 64 dims e_d is near-orthogonal to every centroid
       // fitted on the isotropic base (cos ≈ ±0.12), so the cone sits on the
@@ -1380,230 +1163,35 @@ object SparkEntry {
       val refit = Ann.annOpenIndex(s, currentPath(s, root))
       DriftFixture(frozen.appendStaleness, appendMean,
         meanRecall(refit, nProbe = 2), meanRecall(refit, nProbe = 8))
-    })
-
-  /** PQ-enabled sibling of [[steadyAnnIndex]] (separate layout: pqM > 0
-    * changes the written schema, and the classic legs must keep measuring
-    * the classic layout).
-    */
-  private val steadyAnnPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.Ann.AnnIndex]
-  private[graft] def steadyAnnPqIndex(s: SparkSession, dir: String): graft.operators.Ann.AnnIndex =
-    steadyAnnPqCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_ann_pq_steady")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!new java.io.File(s"$sub/ann_meta.json").exists()) {
-        val (cells, cents) = graft.operators.Ann.annBuildIndex(
-          ld(s, dir, "embeddings"), "vec_id", "embedding", nCentroids = 16)
-        graft.operators.Ann.annWriteIndex(cells, cents, sub, pqM = 16)
-      }
-      graft.operators.Ann.annOpenIndex(s, sub)
-    })
-
-  /** Crawl-ingest composite, run ONCE per process: a fresh per-process copy
-    * of the corpus MinHash index absorbs one constructed epoch via
-    * [[graft.streaming.StreamOps.ingestEpoch]] (self-dedup → corpus-dedup →
-    * atomic append), and the SURVIVOR ids are cached — the epoch is not
-    * re-runnable against the mutated index (its survivors are in the corpus
-    * afterwards, by design), so repeated query calls replay the cached set.
-    * The batch: corpus docs (dups, must all drop), reversed docs (genuinely
-    * new — reversal destroys every shingle under the lowercasing tokenizer),
-    * and a second copy of each reversed doc (intra-batch dups, keep-first).
-    */
-  private val steadyIngestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]
-  private def steadyIngestSurvivors(s: SparkSession, dir: String): DataFrame = {
-    val ids = steadyIngestCache.computeIfAbsent(dir, _ => {
-      val sub = s"${perProcessTmpDir("graft_ingest_steady")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
-      if (!new java.io.File(s"$sub/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(ld(s, dir, "documents"), "doc_id", "text"), sub)
-      }
-      val docs = ld(s, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 2000000L).as("doc_id"), reverse(col("text")).as("text")))
-        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 3000000L).as("doc_id"), reverse(col("text")).as("text")))
-      graft.streaming.StreamOps
-        .ingestEpoch(batch, "doc_id", "text", sub, jaccardThreshold = 0.8, "leg_0")
-        .select("doc_id").collect().map(_.getLong(0)).sorted
-    })
-    import s.implicits._
-    ids.toSeq.toDF("doc_id")
-  }
-
-  /** Manifest-backed ingest pipeline run ONCE per process, maintaining a
-    * BM25 index in lockstep with the MinHash dedup corpus
-    * ([[graft.streaming.StreamOps.ingestEpochPipeline]]), plus the
-    * reference: a one-shot BM25 rebuild over (corpus ∪ survivors).
-    * `q_stream_ingest_bm25` checks maintained ≡ rebuilt search-for-search,
-    * bit-identical scores — the exact-append guarantee carried end-to-end
-    * through the streaming composite. Survivor-set correctness itself is
-    * hash-gated by `q_stream_ingest`'s all-SQL oracle (same batch shape).
-    */
-  private val steadyIngestBm25Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Lexical.Bm25Index, Lexical.Bm25Index)]
-  private def steadyIngestBm25Pair(s: SparkSession, dir: String)
-      : (Lexical.Bm25Index, Lexical.Bm25Index) =
-    steadyIngestBm25Cache.computeIfAbsent(dir, _ => {
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mhSub = s"${perProcessTmpDir("graft_ingestp_mh")}/$tag"
-      val bmSub = s"${perProcessTmpDir("graft_ingestp_bm25")}/$tag"
-      val refSub = s"${perProcessTmpDir("graft_ingestp_ref")}/$tag"
-      val docs = ld(s, dir, "documents")
-      if (!new java.io.File(s"$mhSub/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), mhSub)
-      }
-      if (!new java.io.File(s"$bmSub/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, bmSub, nBuckets = 16)
-      }
-      // the q_stream_ingest batch shape: corpus dups (all drop), reversed
-      // docs (genuinely new), each reversed doc twice (intra-batch dups)
-      val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 2000000L).as("doc_id"), reverse(col("text")).as("text")))
-        .unionByName(docs.filter(pmod(col("doc_id"), lit(10)) === 3)
-          .select((col("doc_id") + 3000000L).as("doc_id"), reverse(col("text")).as("text")))
-      // idempotent across partial re-runs: a committed epoch replays from
-      // its survivor manifest and the per-index appends no-op on batchId
-      val survivors = graft.streaming.StreamOps.ingestEpochPipeline(
-        batch, "doc_id", "text", mhSub,
-        jaccardThreshold = 0.8, batchId = "leg_0", bm25Path = Some(bmSub))
-      if (!new java.io.File(s"$refSub/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(
-          docs.select(col("doc_id"), col("text"))
-            .unionByName(survivors.select(col("doc_id"), col("text"))),
-          "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, refSub, nBuckets = 16)
-      }
-      (Lexical.bm25OpenIndex(s, bmSub), Lexical.bm25OpenIndex(s, refSub))
-    })
-
-  private def steadyAnnDir(s: SparkSession, dir: String): String = {
-    val sub = s"${perProcessTmpDir("graft_ann_steady")}/" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
-    if (!new java.io.File(s"$sub/ann_meta.json").exists()) {
-      val (cells, cents) = graft.operators.Ann.annBuildIndex(
-        ld(s, dir, "embeddings"), "vec_id", "embedding", nCentroids = 16)
-      graft.operators.Ann.annWriteIndex(cells, cents, sub)
     }
-    sub
+
+  /** Single-partition PINNED copies of the three steady indexes — the
+    * serving configuration (the bench census's setup), as a catalog
+    * fixture for `q_resident_parity`. Frames are re-pinned on every call:
+    * the bench unpersists all retained blocks between attempts, and the
+    * resident gate requires live pins.
+    */
+  private def steadyPinnedIndexes(s: SparkSession, dir: String)
+      : (Lexical.Bm25Index, Ann.AnnIndex, Dedup.MinHashIndex, Ann.AnnIndex) = {
+    val t = Fixture.memo("pinned", s, dir) { _ =>
+      val bm0 = steadyBm25Index(s, dir)
+      val ann0 = steadyAnnIndex(s, dir)
+      val mh0 = steadyMinhashIndex(s, dir)
+      val pq0 = steadyAnnPqIndex(s, dir)
+      (bm0.copy(postings = bm0.postings.coalesce(1)),
+        ann0.copy(cells = ann0.cells.coalesce(1)),
+        mh0.copy(postings = mh0.postings.coalesce(1),
+          shingles = mh0.shingles.coalesce(1)),
+        pq0.copy(cells = pq0.cells.coalesce(1)))
+    }
+    Seq(t._1.postings, t._2.cells, t._3.postings, t._3.shingles, t._4.cells)
+      .foreach { f =>
+        if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+          f.persist(); f.count()
+        }
+      }
+    t
   }
-  private[graft] def steadyAnnIndex(s: SparkSession, dir: String): graft.operators.Ann.AnnIndex =
-    steadyAnnCache.computeIfAbsent(dir,
-      _ => graft.operators.Ann.annOpenIndex(s, steadyAnnDir(s, dir)))
-
-  /** Incrementally-assembled sibling of [[steadyAnnIndex]] plus its
-    * rebuild-with-same-centroids reference: the appended index is built on
-    * 4/5 of the embeddings and the held-out slice absorbed via
-    * [[graft.operators.Ann.annAppendIndex]] (frozen centroids); the
-    * reference assigns the FULL corpus to the SAME centroids in one shot.
-    * `q_ann_index_append` proves search-via-append ≡ search-via-rebuild
-    * row-identically (emptiness oracle, the q_ann_recall move).
-    */
-  private val steadyAnnAppCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.operators.Ann.AnnIndex, graft.operators.Ann.AnnIndex)]
-  private def steadyAnnAppendedPair(s: SparkSession, dir: String)
-      : (graft.operators.Ann.AnnIndex, graft.operators.Ann.AnnIndex) =
-    steadyAnnAppCache.computeIfAbsent(dir, _ => {
-      import graft.operators.Ann
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val subApp = s"${perProcessTmpDir("graft_ann_app")}/$tag"
-      val subRef = s"${perProcessTmpDir("graft_ann_ref")}/$tag"
-      val emb = ld(s, dir, "embeddings")
-      val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 3)
-      val held = emb.filter(pmod(col("vec_id"), lit(5)) === 3)
-      if (!new java.io.File(s"$subApp/ann_meta.json").exists()) {
-        val (cells, cents) = Ann.annBuildIndex(base, "vec_id", "embedding", nCentroids = 16)
-        Ann.annWriteIndex(cells, cents, subApp)
-      }
-      if (!new java.io.File(s"$subRef/ann_meta.json").exists()) {
-        // the centroid table is append-invariant, so reading it from the
-        // base index is safe in any order relative to the append below
-        val cents = Ann.annOpenIndex(s, subApp).centroids
-        val assign = graft.operators.SemanticJoin.knnJoinVec(
-          emb, "vec_id", "embedding",
-          cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
-          .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
-        val refCells = emb
-          .select(col("vec_id").cast("long").as("corpus_id"),
-            graft.functions.VectorOps.asDouble(col("embedding")).as("cv"))
-          .join(assign, "corpus_id")
-        Ann.annWriteIndex(refCells, cents, subRef)
-      }
-      // idempotent on batchId: safe to re-run after a partial build/crash
-      // (done-marker = the batch's own _COMMITTED, the minhash lesson)
-      if (!new java.io.File(s"$subApp/batches/heldout/_COMMITTED").exists()) {
-        Ann.annAppendIndex(s, subApp, held, "vec_id", "embedding", "heldout")
-      }
-      (Ann.annOpenIndex(s, subApp), Ann.annOpenIndex(s, subRef))
-    })
-
-  /** Tombstoned sibling of [[steadyAnnIndex]] plus its reference (r13): the
-    * live index is the FULL corpus with the `vec_id % 10 == 3` slice removed
-    * via [[graft.operators.Ann.annDeleteFromIndex]]; the reference assigns
-    * only the SURVIVORS to the SAME centroids in one shot (the
-    * [[steadyAnnAppendedPair]] move, inverted). `q_ann_index_delete` proves
-    * search-via-tombstones ≡ search-via-rebuild row-identically: surviving
-    * vectors keep their cells and scores bit-for-bit, deleted ids never
-    * surface (emptiness oracle).
-    */
-  private val steadyAnnDelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.operators.Ann.AnnIndex, graft.operators.Ann.AnnIndex, String)]
-  private def steadyAnnDeletedPair(s: SparkSession, dir: String)
-      : (graft.operators.Ann.AnnIndex, graft.operators.Ann.AnnIndex, String) =
-    steadyAnnDelCache.computeIfAbsent(dir, _ => {
-      import graft.operators.Ann
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val subLive = s"${perProcessTmpDir("graft_ann_del")}/$tag"
-      val subRef = s"${perProcessTmpDir("graft_ann_delref")}/$tag"
-      val emb = ld(s, dir, "embeddings")
-      if (!new java.io.File(s"$subLive/ann_meta.json").exists()) {
-        val (cells, cents) = Ann.annBuildIndex(emb, "vec_id", "embedding", nCentroids = 16)
-        Ann.annWriteIndex(cells, cents, subLive)
-      }
-      if (!new java.io.File(s"$subRef/ann_meta.json").exists()) {
-        // the centroid table is delete-invariant, so reading it from the
-        // live index is safe in any order relative to the delete below
-        val cents = Ann.annOpenIndex(s, subLive).centroids
-        val survivors = emb.filter(pmod(col("vec_id"), lit(10)) =!= 3)
-        val assign = graft.operators.SemanticJoin.knnJoinVec(
-          survivors, "vec_id", "embedding",
-          cents, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
-          .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
-        val refCells = survivors
-          .select(col("vec_id").cast("long").as("corpus_id"),
-            graft.functions.VectorOps.asDouble(col("embedding")).as("cv"))
-          .join(assign, "corpus_id")
-        Ann.annWriteIndex(refCells, cents, subRef)
-      }
-      // idempotent on delId: safe to re-run after a partial build/crash
-      // (done-marker = the tombstone's own _COMMITTED)
-      if (!new java.io.File(s"$subLive/deletes/takedown/_COMMITTED").exists()) {
-        Ann.annDeleteFromIndex(s, subLive,
-          emb.filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"),
-          "vec_id", "takedown")
-      }
-      // the live dir rides along in the cache entry so the SQL-surface leg
-      // opens the SAME directory this builder wrote (advisor r14: the dir
-      // was re-derived by duplicating the naming construction — a rename
-      // here would have silently pointed q_ann_delete_sql at a stale path)
-      (Ann.annOpenIndex(s, subLive), Ann.annOpenIndex(s, subRef), subLive)
-    })
-
-  /** The tombstoned ANN fixture's directory — for the SQL surface
-    * (`q_ann_delete_sql`): `graft_ann_search` opens per call, so it must
-    * see the post-delete corpus with no API-side help. Recorded by the
-    * pair builder itself, never re-derived.
-    */
-  private def steadyAnnDeletedDir(s: SparkSession, dir: String): String =
-    steadyAnnDeletedPair(s, dir)._3
 
   /** Removal-audit fixture (r15): four generation roots sharing ONE
     * takedown promise — ids `% 10 == 3` denylisted at the minhash root.
@@ -1611,49 +1199,28 @@ object SparkEntry {
     * deliberately NOT tombstoned (the violation
     * [[graft.operators.IndexMaintenance.auditRemovals]] must surface —
     * e.g. an index family someone added to serving after the takedown ran);
-    * a second ANN root IS tombstoned (the re-audit-after-fix leg, so the
-    * query stays idempotent across bench attempts).
+    * a second ANN root IS tombstoned (the re-audit-after-fix leg).
     */
-  private val steadyAuditCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String, String)]
   private def steadyAuditRoots(s: SparkSession, dir: String)
       : (String, String, String, String) =
-    steadyAuditCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{Ann, Dedup, IndexMaintenance => IM}
-      val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val mh = s"${perProcessTmpDir("graft_audit_mh")}/$tag"
-      val bm = s"${perProcessTmpDir("graft_audit_bm")}/$tag"
-      val av = s"${perProcessTmpDir("graft_audit_annv")}/$tag"
-      val ac = s"${perProcessTmpDir("graft_audit_annc")}/$tag"
+    Fixture.memo("audit", s, dir) { d =>
+      val (mh, bm, av, ac) = (s"$d/mh", s"$d/bm", s"$d/annv", s"$d/annc")
       val docs = ld(s, dir, "documents")
       val emb = ld(s, dir, "embeddings")
       val slice = docs.filter(pmod(col("doc_id"), lit(10)) === 3).select("doc_id")
-      if (!new java.io.File(s"${IM.genPath(mh, 0)}/minhash_meta.json").exists()) {
-        Dedup.minhashWriteIndex(
-          Dedup.minhashBuildIndex(docs, "doc_id", "text"), IM.genPath(mh, 0))
-        IM.commitGeneration(s, mh, 0)
-      }
-      if (!new java.io.File(s"${IM.genPath(bm, 0)}/bm25_meta.json").exists()) {
-        val (p, st) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-        Lexical.bm25WriteIndex(p, st, IM.genPath(bm, 0), nBuckets = 16)
-        IM.commitGeneration(s, bm, 0)
-      }
-      Seq(av, ac).foreach { root =>
-        if (!new java.io.File(s"${IM.genPath(root, 0)}/ann_meta.json").exists()) {
-          val (cells, cents) = Ann.annBuildIndex(emb, "vec_id", "embedding", nCentroids = 16)
-          Ann.annWriteIndex(cells, cents, IM.genPath(root, 0))
-          IM.commitGeneration(s, root, 0)
-        }
-      }
-      // each durable effect idempotent on its delId — safe across attempts
-      Dedup.minhashDeleteFromIndex(s, IM.currentPath(s, mh), slice, "doc_id", "takedown")
-      Lexical.bm25DeleteFromIndex(s, IM.currentPath(s, bm), slice, "doc_id", "takedown")
-      Ann.annDeleteFromIndex(s, IM.currentPath(s, ac),
+      seedGen0(s, mh)(writeMinhash(docs, _))
+      seedGen0(s, bm)(writeBm25(docs, _))
+      Seq(av, ac).foreach(root => seedGen0(s, root)(writeAnn(emb, "vec_id", "embedding", _)))
+      Dedup.minhashDeleteFromIndex(s, IndexMaintenance.currentPath(s, mh), slice,
+        "doc_id", "takedown")
+      Lexical.bm25DeleteFromIndex(s, IndexMaintenance.currentPath(s, bm), slice,
+        "doc_id", "takedown")
+      Ann.annDeleteFromIndex(s, IndexMaintenance.currentPath(s, ac),
         emb.filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"),
         "vec_id", "takedown")
       graft.streaming.Denylist.append(s, mh, slice, "doc_id", "takedown")
       (mh, bm, av, ac)
-    })
+    }
 
   /** As-of fixture (r15): three committed minhash generations with wall
     * timestamps captured between the commits, then pruned to latest-2 —
@@ -1662,58 +1229,45 @@ object SparkEntry {
     * deterministically. The corpus is tiny: the commit-marker protocol is
     * the point, not the index.
     */
-  private val steadyAsOfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, Long, Long, Long)]
   private def steadyAsOfFixture(s: SparkSession, dir: String)
       : (String, Long, Long, Long, Long) =
-    steadyAsOfCache.computeIfAbsent(dir, _ => {
-      import graft.operators.{Dedup, IndexMaintenance => IM}
-      val root = s"${perProcessTmpDir("graft_asof")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+    Fixture.memo("asof", s, dir) { root =>
+      import IndexMaintenance.{commitGeneration, genPath}
       val docs = ld(s, dir, "documents").filter(col("doc_id") < 64)
       val tPre = System.currentTimeMillis(); Thread.sleep(10)
-      Dedup.minhashWriteIndex(
-        Dedup.minhashBuildIndex(docs, "doc_id", "text"), IM.genPath(root, 0))
-      IM.commitGeneration(s, root, 0)
+      seedGen0(s, root)(writeMinhash(docs, _))
       Thread.sleep(10); val t0 = System.currentTimeMillis(); Thread.sleep(10)
-      Dedup.minhashCompactIndex(s, IM.genPath(root, 0), IM.genPath(root, 1))
-      IM.commitGeneration(s, root, 1)
+      Dedup.minhashCompactIndex(s, genPath(root, 0), genPath(root, 1))
+      commitGeneration(s, root, 1)
       Thread.sleep(10); val t1 = System.currentTimeMillis(); Thread.sleep(10)
-      Dedup.minhashCompactIndex(s, IM.genPath(root, 1), IM.genPath(root, 2))
-      IM.commitGeneration(s, root, 2)
+      Dedup.minhashCompactIndex(s, genPath(root, 1), genPath(root, 2))
+      commitGeneration(s, root, 2)
       Thread.sleep(10); val t2 = System.currentTimeMillis()
-      IM.pruneGenerations(s, root, keepLatest = 2)
+      IndexMaintenance.pruneGenerations(s, root, keepLatest = 2)
       (root, tPre, t0, t1, t2)
-    })
+    }
 
-  /** Per-process LinearModel artifact with the md5 featurizer and an
+  /** LinearModel artifact with the md5 featurizer and an
     * integer-formula weight matrix `w(i,j) = ((7i + 3j) mod 11 − 5) / 10`
     * (8 x 16): every number the artifact produces is recomputable in SQL,
     * so `q_model_embed` hash-checks the whole save → load → broadcast →
     * executor-assembly → batched-inference path against a DuckDB matmul.
     */
-  private val steadyModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.embed.ModelEmbedder]
-  private def steadyModelEmbedder(s: SparkSession): graft.embed.ModelEmbedder =
-    steadyModelCache.computeIfAbsent("model", _ => {
-      val sub = s"${perProcessTmpDir("graft_linear_steady")}/artifact"
-      if (!new java.io.File(s"$sub/linear_meta.json").exists()) {
-        val w = Array.tabulate(8, 16)((i, j) => (((7 * i + 3 * j) % 11) - 5) / 10.0)
-        graft.embed.LinearModel.save(s, sub, dimIn = 16, w, featurizer = "md5")
-      }
-      graft.embed.ModelEmbedder.load(s, sub)
-    })
+  private def steadyModelEmbedder(s: SparkSession, dir: String): graft.embed.ModelEmbedder =
+    Fixture.memo("linear", s, dir) { d =>
+      val w = Array.tabulate(8, 16)((i, j) => (((7 * i + 3 * j) % 11) - 5) / 10.0)
+      graft.embed.LinearModel.save(s, d, dimIn = 16, w, featurizer = "md5")
+      graft.embed.ModelEmbedder.load(s, d)
+    }
 
-  /** The search legs' 10-row query set as a per-process LocalRelation: in
+  /** The search legs' 10-row query set as a LocalRelation: in
     * the steady-search regime the queries arrive from the application, not
     * from a corpus re-scan, so the repeated parquet read to build them was
     * measured overhead that belongs to the fixture, not the operator
     * (documents scan ~0.1s of a 0.7s leg at sf0.1).
     */
-  private val steadyQueryCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]
-  private def steadyQueries(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    steadyQueryCache.computeIfAbsent(dir, _ => {
+  private def steadyQueries(s: SparkSession, dir: String): DataFrame =
+    Fixture.memo("queries", s, dir) { _ =>
       val rows = ld(s, dir, "documents").filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("text")).collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*),
@@ -1722,7 +1276,7 @@ object SparkEntry {
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("text",
             org.apache.spark.sql.types.StringType, nullable = true))))
-    })
+    }
 
   /** Deterministic prose structure for the corpus-gate queries: the synthetic
     * documents are single-line punctuation-free word soup, so sentence ends
@@ -2931,7 +2485,7 @@ object SparkEntry {
     // a DuckDB matmul over the bit-parity md5 feature subquery — closing
     // the last spec-only gap in the embedding boundary.
     "q_model_embed" -> ((s, dir) => {
-      val emb = steadyModelEmbedder(s)
+      val emb = steadyModelEmbedder(s, dir)
       emb.embed(ld(s, dir, "documents").select("doc_id", "text"), "text", "__v")
         .select(col("doc_id"), posexplode(col("__v")).as(Seq("d", "val")))
         .orderBy(col("doc_id"), col("d"))
@@ -3041,7 +2595,7 @@ object SparkEntry {
       val queries = ld(s, dir, "documents").filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("text"))
       val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-      val idxDir = perProcessTmpDir("graft_bm25_index")
+      val idxDir = scratchDir("bm25_index", s, dir)
       Lexical.bm25WriteIndex(postings, stats, idxDir, nBuckets = 16)
       val index = Lexical.bm25OpenIndex(s, idxDir)
       Lexical.bm25SearchIndex(index, queries, "qid", "text", k = 5)
@@ -3064,7 +2618,7 @@ object SparkEntry {
       // see q_bm25_index above
       val docs = spread(ld(s, dir, "documents").select("doc_id", "text"))
       val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
-      val idxDir = perProcessTmpDir("graft_bm25_build")
+      val idxDir = scratchDir("bm25_build", s, dir)
       Lexical.bm25WriteIndex(postings, stats, idxDir, nBuckets = 16)
       Lexical.bm25OpenIndex(s, idxDir).postings
         .select(col("doc_id"), col("term"), col("tf"), col("dl"), col("df"))
@@ -4235,8 +3789,7 @@ object SparkEntry {
       import s.implicits._
       import graft.operators.IndexMaintenance
       val f = steadyStreamTakedown(s, dir) // mhRoot exists, final gen = 1
-      val dst = s"${perProcessTmpDir("graft_repl_serve")}/" +
-        dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val dst = scratchDir("repl_serve", s, dir)
       val srcGen = IndexMaintenance.currentGeneration(s, f.mhRoot)
       val gen =
         if (IndexMaintenance.currentGeneration(s, dst) < srcGen)
@@ -4490,7 +4043,7 @@ object SparkEntry {
     "q_stress_ingest" -> ((s, dir) => {
       // collected rows, not a cached frame: the bench unpersists every
       // retained block between attempts, which kills a localCheckpoint
-      val (rows, schema) = steadyStressIngestCache.computeIfAbsent(dir, _ => {
+      val (rows, schema) = Fixture.memo("stress_ingest", s, dir) { _ =>
         // both curves side by side (judge r11 #6): the unmanaged run's
         // fan-in / batch counts / ingest jobs grow per epoch; the managed
         // run (the q_maintenance_census policy) pays maint_jobs and keeps
@@ -4507,7 +4060,7 @@ object SparkEntry {
         val df = plain.unionByName(managed)
           .orderBy(col("mode"), col("epoch"))
         (df.collect().toSeq, df.schema)
-      })
+      }
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     }),
   )
