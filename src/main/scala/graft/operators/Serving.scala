@@ -2,22 +2,23 @@ package graft.operators
 
 /** Shared serving-regime tuning for the persisted indexes. A search at
   * serving scale spends its wall on Spark scheduler round-trips, not data —
-  * so when a search's estimated pruned scan (from the row count the index
-  * meta records at write time) fits under this budget, the scoring chain
-  * runs as ONE single-partition stage (`coalesce(1)` lets every aggregate
-  * elide its exchange). Above the budget — or on an in-memory index, which
-  * has no recorded row count — the parallel plan runs unchanged. Results are
-  * identical either way: the bounded top-k and ordered-sum aggregates are
-  * partition-order-invariant (spec-pinned).
+  * so when an ANN or MinHash search's estimated pruned scan (from the row
+  * count the index meta records at write time) fits under this budget, the
+  * scoring chain runs as ONE single-partition stage (`coalesce(1)` lets
+  * every aggregate elide its exchange). Above the budget — or on an
+  * in-memory index, which has no recorded row count — the parallel plan
+  * runs unchanged. Results are identical either way: the bounded top-k and
+  * ordered-sum aggregates are partition-order-invariant (spec-pinned).
   */
 object Serving {
   // The full serving-tier decision table (cold batch → parallel plan;
-  // pinned ≤ driverResidentRows → Resident 0-job mirror; pinned ≤
-  // singleStageRows → 1-job single-stage; pinned larger → pruned parallel;
-  // over the driver bounds → fully distributed) lives in README
-  // "Retrieval indexes" — the gates are here, in [[Resident.eligible]],
-  // and in the per-family search entry points; [[ServingSession]] adds the
-  // generation-following lifecycle on top.
+  // pinned ≤ driverResidentRows → Resident 0-job mirror; pinned BM25 larger
+  // → Resident.Bm25Partitioned, 1 job; pinned ANN/MinHash ≤ singleStageRows
+  // → 1-job single-stage, larger → pruned parallel; over the driver bounds
+  // → fully distributed) lives in README "Retrieval indexes" — the gates
+  // are here, in [[Resident.eligible]], and in the per-family search entry
+  // points; [[ServingSession]] adds the generation-following lifecycle on
+  // top.
 
   /** Where the serving wall actually goes, measured (r10, `ServingProbe`
     * with PROBE_STEADY on the bench box): an EMPTY one-task job
@@ -40,9 +41,11 @@ object Serving {
     * arithmetic — zero jobs, so neither the scheduler floor nor the
     * bucket-granularity cache scan is paid at all (measured sf0.1 census:
     * 0.06/0.025/0.023/0.021 s per bm25/ann/int8/minhash search, from
-    * 0.164/0.088/0.115/0.169 at r10's 1-job paths). The 1-job single-stage
-    * plans below remain the fallback between the resident bound and the
-    * parallel plan.
+    * 0.164/0.088/0.115/0.169 at r10's 1-job paths). Above the resident
+    * bound, a pinned BM25 index serves from [[Resident.Bm25Partitioned]]
+    * (the same fold once per partition, one job); the 1-job single-stage
+    * plans below remain the ANN and MinHash fallback between the resident
+    * bound and the parallel plan.
     */
   val SingleStageRowsKey = "spark.graft.serving.singleStageRows"
 

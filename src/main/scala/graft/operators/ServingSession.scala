@@ -41,15 +41,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * marker listing is one filesystem metadata call per `checkIntervalMs`
   * (default: every search — right for a local/HDFS root; set a TTL on
   * object stores where LIST costs real latency). Indexes above the
-  * residency bound still swap correctly — they just serve through the
-  * pinned distributed plans instead of a mirror.
+  * residency bound still swap correctly: bm25 serves from the partitioned
+  * tier (one job per search, built at swap time), ann and minhash through
+  * the pinned distributed plans.
   */
 final class ServingSession[I] private[operators] (
     spark: SparkSession,
     val root: String,
     opener: String => I,
     frames: I => Seq[DataFrame],
-    holder: I => Resident.Holder[_ <: Resident.Mirror],
+    holders: I => Seq[Resident.Holder[_ <: Resident.Mirror]],
     prewarm: I => Unit,
     checkIntervalMs: Long,
     asyncSwap: Boolean) extends AutoCloseable {
@@ -68,7 +69,12 @@ final class ServingSession[I] private[operators] (
     * append hold DIFFERENT plans and must not share a pin count).
     */
   private def pinKey(gen: Int, idx: I): String =
-    holder(idx).shareKey.getOrElse(IndexMaintenance.genPath(root, gen))
+    holders(idx).head.shareKey.getOrElse(IndexMaintenance.genPath(root, gen))
+
+  /** Drops every mirror `idx` holds (the driver mirror and, for bm25, the
+    * partitioned tier); shared slots refcount their own.
+    */
+  private def drop(idx: I): Unit = holders(idx).foreach(_.drop())
 
   private def openGen(gen: Int): (Int, I) = {
     require(gen >= 0, s"no committed generation under $root " +
@@ -221,34 +227,35 @@ final class ServingSession[I] private[operators] (
           // closed mid-derive: nothing to cache against; serve the view
           // uncached (its holder ref was never counted — drop is a no-op
           // on an unbuilt holder, and the session released its own refs)
-          holder(d).drop()
+          drop(d)
           return (g, d)
         }
         if (cur._1 == g) {
           val prev = derivedCache.put(key, (g, d))
-          if (prev != null) holder(prev._2).drop()
+          if (prev != null) drop(prev._2)
           val it = derivedCache.entrySet().iterator()
           while (derivedCache.size() > maxDerived && it.hasNext) {
             val e = it.next() // access-order map: eldest first
             it.remove()
-            holder(e.getValue._2).drop()
+            drop(e.getValue._2)
           }
           return (g, d)
         }
         // the generation moved while deriving — the view belongs to a
         // released generation: drop its holder ref and re-derive
-        holder(d).drop()
+        drop(d)
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
-  /** Estimated heap bytes of the CURRENT generation's resident mirror —
+  /** Estimated heap bytes of the CURRENT generation's driver mirror —
     * 0 before the mirror exists (above-bound or unpinned indexes never
-    * build one) and 0 again after [[close]].
+    * build one; a bm25 partitioned tier is executor-held and shows in
+    * [[Resident.residentCensus]] instead) and 0 again after [[close]].
     */
   def residentBytes: Long =
-    if (closed) 0L else holder(cur._2).peek.map(_.bytes).getOrElse(0L)
+    if (closed) 0L else holders(cur._2).head.peek.map(_.bytes).getOrElse(0L)
 
   private def release(gen: Int, idx: I): Unit = {
     // derived views of the released generation hold their OWN references
@@ -260,14 +267,14 @@ final class ServingSession[I] private[operators] (
     val it = derivedCache.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getValue._1 == gen) { it.remove(); holder(e.getValue._2).drop() }
+      if (e.getValue._1 == gen) { it.remove(); drop(e.getValue._2) }
     }
     // mirror first (per-session reference; shared slots refcount their
     // own), then the frames — but ONLY when this session was the LAST
     // pinner of this generation: Spark's CacheManager is PLAN-keyed, so a
     // blind unpersist here would also unpin a SIBLING session's identical
     // frames (r13 — the two-session sharing spec caught exactly that)
-    holder(idx).drop()
+    drop(idx)
     if (ServingSession.PinRegistry.unpin(pinKey(gen, idx)))
       frames(idx).foreach(_.unpersist(false))
   }
@@ -322,16 +329,20 @@ object ServingSession {
     * generation). `checkIntervalMs` ≤ 0 checks the generation markers on
     * every [[ServingSession.resolved]] call; `asyncSwap` moves the
     * open+pin+prewarm of a new generation off the search path entirely.
+    * Prewarm builds the driver mirror under the resident bound and the
+    * partitioned tier ([[Resident.Bm25Partitioned]]) over it, so the swap
+    * pays for either and every search is zero jobs or one.
     */
   def bm25(spark: SparkSession, root: String,
       checkIntervalMs: Long = 0L,
       asyncSwap: Boolean = false): ServingSession[Lexical.Bm25Index] =
     new ServingSession[Lexical.Bm25Index](
       spark, root, p => Lexical.bm25OpenIndex(spark, p),
-      i => Seq(i.postings), _.residentHolder,
+      i => Seq(i.postings), i => Seq(i.residentHolder, i.partitionedHolder),
       i => {
         i.statsRow
         if (Resident.eligible(spark, i.nRows, i.postings)) i.resident
+        else i.partitioned.materialize()
       },
       checkIntervalMs, asyncSwap)
 
@@ -343,7 +354,7 @@ object ServingSession {
       asyncSwap: Boolean = false): ServingSession[Ann.AnnIndex] =
     new ServingSession[Ann.AnnIndex](
       spark, root, p => Ann.annOpenIndex(spark, p),
-      i => Seq(i.cells), _.residentHolder,
+      i => Seq(i.cells), i => Seq(i.residentHolder),
       i => {
         i.centroidMat
         if (Resident.eligible(spark, i.nRows, i.cells)) i.resident
@@ -358,7 +369,7 @@ object ServingSession {
       asyncSwap: Boolean = false): ServingSession[Dedup.MinHashIndex] =
     new ServingSession[Dedup.MinHashIndex](
       spark, root, p => Dedup.minhashOpenIndex(spark, p),
-      i => Seq(i.postings, i.shingles), _.residentHolder,
+      i => Seq(i.postings, i.shingles), i => Seq(i.residentHolder),
       i => if (Resident.eligible(spark, i.nRows, i.postings, i.shingles)) i.resident,
       checkIntervalMs, asyncSwap)
 }

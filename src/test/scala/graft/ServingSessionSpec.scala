@@ -61,6 +61,8 @@ class ServingSessionSpec extends AnyFunSuite {
       // prewarm built+registered the mirror: bytes accounted
       val bytes0 = sess.residentBytes
       assert(bytes0 > 0, "prewarmed mirror must report bytes")
+      // flush mirrors abandoned by earlier tests so census counts are stable
+      System.gc(); Thread.sleep(50)
       val bmMirrors0 = Resident.residentCensus.count(_._1 == "bm25")
       val oldPostings = sess.index.postings
       assert(oldPostings.storageLevel !=
