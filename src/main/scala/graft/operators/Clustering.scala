@@ -5,7 +5,6 @@ import graft.core.{Keys, Serialize}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed clustering over embedding vectors (the engine's semantic GROUP BY).
   *
@@ -53,13 +52,13 @@ object Clustering extends Logging {
   val SmallGraphEdgeLimit: Long = 5L * 1000 * 1000
   val SmallGraphEdgeLimitKey = "spark.graft.cc.smallGraphEdgeLimit"
 
-  private def smallGraphEdgeLimit(spark: SparkSession): Long =
+  private[operators] def smallGraphEdgeLimit(spark: SparkSession): Long =
     spark.conf.getOption(SmallGraphEdgeLimitKey).map(_.toLong).getOrElse(SmallGraphEdgeLimit)
 
   /** Driver union-find (path-halving + union-by-rank) over an edge list;
     * returns (id, minIdOfComponent) for every edge-incident node.
     */
-  private def unionFindMinLabel(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+  private[operators] def unionFindMinLabel(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
     // boxed key/value types: the Scala-primitive form of these maps unboxes
     // a missing-key null to 0, silently corrupting the interning
     val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
@@ -135,15 +134,15 @@ object Clustering extends Logging {
     import spark.implicits._
 
     // small-graph fast path: below the guard, a driver union-find replaces
-    // ~5 shuffles × O(diameter) iterations with one collect. Edge-bounded
-    // (≤ ~80 MB of longs at the limit), so this never materializes the INPUT
-    // — only the (already ε/LSH-filtered) edge list. The distributed
-    // iteration below remains the path for genuinely large graphs.
-    val edgeCount = e0.count()
-    if (edgeCount <= smallGraphEdgeLimit(spark)) {
-      val labeled = unionFindMinLabel(e0.as[(Long, Long)].collect())
-      return spark.createDataset(labeled).toDF("id", "component")
-    }
+    // ~5 shuffles × O(diameter) iterations with one bounded collect (one job
+    // sizes and collects the edge list together). Edge-bounded (≤ ~80 MB of
+    // longs at the limit), so this never materializes the INPUT — only the
+    // (already ε/LSH-filtered) edge list. The distributed iteration below
+    // remains the path for genuinely large graphs.
+    val small = VecScan.collectIfFits(e0, smallGraphEdgeLimit(spark))(
+      _ => 1L, r => (r.getLong(0), r.getLong(1)))
+    if (small.isDefined)
+      return spark.createDataset(unionFindMinLabel(small.get)).toDF("id", "component")
 
     // symmetrized once and truncated: every iteration reuses it
     val sym = e0.select(explode(array(
@@ -258,8 +257,14 @@ object Clustering extends Logging {
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     import graft.functions.VectorOps._
     val tau = 1.0 - eps
-    val pts = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // pts is read by the pair scan and by the label join-back: a select over
+    // a materialized input (clusterRows passes a checkpoint) re-reads it;
+    // anything else is pinned by a local checkpoint, which the context
+    // cleaner reclaims once the result is dropped (a persist would stay in
+    // the CacheManager for the life of the session)
+    val sel = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
+    val pts = if (VecScan.materialized(sel.queryExecution.toRdd)) sel
+      else sel.localCheckpoint(eager = false)
 
     // minSamples <= 2 degenerate case: any point with >= 1 ε-neighbor is core,
     // so there are no border points and DBSCAN is exactly connected components

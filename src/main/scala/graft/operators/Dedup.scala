@@ -1,19 +1,48 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.util.LongAccumulator
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Large-scale deduplication operators for training-data pipelines:
   * exact (hash-groupBy), MinHash+LSH, SimHash, n-gram Jaccard verification, and
   * embedding-cosine near-dup (via [[Clustering.epsilonCluster]]).
   *
-  * All stages are shuffle-minimal: candidate generation is a self-equi-join on
-  * LSH band buckets (shuffle on the band hash, never all-pairs), verification
-  * runs only on candidates, and final representative selection is one window.
+  * [[minhashLsh]] runs in one of two regimes. While the documents'
+  * `(id, shingles, signature)` rows fit the driver-collect bound
+  * (`spark.graft.vecscan.maxBroadcastBytes`) and the band buckets hold at
+  * most `spark.graft.cc.smallGraphEdgeLimit` row pairs, one Spark job
+  * computes and collects those rows, and banding, the exact verify and
+  * union-find run on the driver. Above either bound every stage is
+  * shuffle-minimal: candidate generation is a self-equi-join on LSH band
+  * buckets (shuffle on the band hash, never all-pairs), verification runs
+  * only on candidates, and final representative selection is one window.
   */
 object Dedup extends Logging {
+
+  /** [[minhashLsh]] calls of this context that ran in the driver regime. */
+  def lshDriverRuns(sc: SparkContext): LongAccumulator = VecScan.counter(sc, "graft.dedup.lsh_driver_runs")
+
+  /** Distinct `(i, j)` candidate id pairs (i < j) [[minhashLsh]] found in a
+    * shared band bucket, in either regime.
+    */
+  def lshCandidatePairs(sc: SparkContext): LongAccumulator =
+    VecScan.counter(sc, "graft.dedup.lsh_candidate_pairs")
+
+  /** Row pairs of candidates that pass [[minhashLsh]]'s exact Jaccard verify,
+    * in either regime: one per verified candidate pair, or one per passing
+    * row pair when an id has several rows.
+    */
+  def lshVerifiedPairs(sc: SparkContext): LongAccumulator =
+    VecScan.counter(sc, "graft.dedup.lsh_verified_pairs")
 
   /** Exact dedup on key columns, keep-first by `ordCol` (deterministic version of
     * pandas keep="first", reference: src/linktransformer/infer.py:477).
@@ -39,17 +68,24 @@ object Dedup extends Logging {
         s"unknown minhash hash family: $f (expected md5 | xx)")
     }
 
-  /** Per-doc distinct shingle set + minhash signature, computed ONCE and
-    * pinned (reused by the band join and the exact-Jaccard verify). The id
-    * expression keeps its natural type.
+  /** Per-doc distinct shingle set + minhash signature `(id, sh, sig)`. The
+    * id expression keeps its natural type.
+    */
+  private def shingleSigFrame(
+      df: DataFrame, idExpr: Column, textCol: Column,
+      shingleSize: Int, numHashes: Int, hashFamily: String): DataFrame =
+    df.select(
+      idExpr.as("id"),
+      array_distinct(TextAnalysis.wordShingles(textCol, shingleSize)).as("sh"))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes, hashFamily))
+
+  /** [[shingleSigFrame]] computed ONCE and pinned (reused by the band join
+    * and the exact-Jaccard verify).
     */
   private def shingleSig(
       df: DataFrame, idExpr: Column, textCol: Column,
       shingleSize: Int, numHashes: Int, hashFamily: String): DataFrame = {
-    val sig = df.select(
-      idExpr.as("id"),
-      array_distinct(TextAnalysis.wordShingles(textCol, shingleSize)).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes, hashFamily))
+    val sig = shingleSigFrame(df, idExpr, textCol, shingleSize, numHashes, hashFamily)
     // the signature frame has two consumers (banding + the verify join), so
     // it is pinned eagerly to compute shingles/minhash once — EXCEPT when
     // the whole plan folds to a LocalRelation (a serving-regime batch):
@@ -102,29 +138,199 @@ object Dedup extends Logging {
 
   /** MinHash+LSH near-duplicate clustering.
     *
-    * shingle → minhash(numBands*rowsPerBand) → band-bucket equi-join → verify
+    * shingle → minhash(numBands*rowsPerBand) → band buckets → verify
     * (exact n-gram Jaccard >= `jaccardThreshold`) → connected components.
-    * Returns `(id, cluster)`; cluster = min doc id of the duplicate group.
+    * Returns `(id, cluster)`, one row per distinct id (a null id included);
+    * cluster = min doc id of the duplicate group.
+    *
+    * Two regimes, with the same rows and schema:
+    *  - driver ([[minhashLshOnDriver]]): one job computes and collects
+    *    `(id, shingles, signature)` while they fit
+    *    `spark.graft.vecscan.maxBroadcastBytes`, and the buckets hold at most
+    *    `spark.graft.cc.smallGraphEdgeLimit` row pairs; buckets, verify and
+    *    union-find then run on the driver and the result is a LocalRelation;
+    *  - plan ([[minhashLshPlan]]): above either bound, a band-bucket
+    *    self-equi-join, a join-back verify and distributed components.
     */
   def minhashLsh(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numBands: Int = 8, rowsPerBand: Int = 4,
       jaccardThreshold: Double = 0.5, hashFamily: String = "md5"): DataFrame = {
-    val numHashes = numBands * rowsPerBand
     // CC needs long node ids — cast here, not in the shared helper
-    val base = shingleSig(df, col(idCol).cast("long"), col(textCol), shingleSize, numHashes, hashFamily)
+    val sig = shingleSigFrame(df, col(idCol).cast("long"), col(textCol), shingleSize,
+      numBands * rowsPerBand, hashFamily)
+    minhashLshOnDriver(sig, numBands, rowsPerBand, jaccardThreshold).getOrElse(
+      minhashLshPlan(df, idCol, textCol, shingleSize, numBands, rowsPerBand,
+        jaccardThreshold, hashFamily))
+  }
+
+  /** A filter condition that keeps every row and adds one to `acc` per row. */
+  private def counting(acc: LongAccumulator): Column =
+    udf(() => { acc.add(1); true }).asNondeterministic()()
+
+  /** [[minhashLsh]]'s distributed regime. */
+  private def minhashLshPlan(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, numBands: Int, rowsPerBand: Int,
+      jaccardThreshold: Double, hashFamily: String): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val base = shingleSig(df, col(idCol).cast("long"), col(textCol), shingleSize,
+      numBands * rowsPerBand, hashFamily)
     val banded = bandBuckets(base, numBands, rowsPerBand)
     val candidates = bandJoin(banded, "i", banded, "j", (i, j) => i < j)
+      .filter(counting(lshCandidatePairs(sc)))
 
     // verify candidates with exact shingle-set Jaccard (arrays joined back in)
     val edges = candidates
       .join(base.select(col("id").as("i"), col("sh").as("si")), "i")
       .join(base.select(col("id").as("j"), col("sh").as("sj")), "j")
       .filter(jaccardOf(col("si"), col("sj")) >= jaccardThreshold)
+      .filter(counting(lshVerifiedPairs(sc)))
       .select("i", "j")
 
     Clustering.connectedComponents(df.select(col(idCol).cast("long")), edges)
       .withColumnRenamed("component", "cluster")
+  }
+
+  /** A document of [[minhashLshOnDriver]]: its id (null for a null id), its
+    * signature and its distinct shingles (each null when null).
+    */
+  private final class LshDoc(val id: java.lang.Long, val sig: Array[Long], val sh: Array[String])
+    extends Serializable
+
+  /** What a `(id, sh, sig)` row costs the driver: its id, its signature's
+    * longs and its shingles' UTF-8 bytes.
+    */
+  private def lshDocBytes(r: InternalRow, numHashes: Int): Long = {
+    var bytes = 8L + 8L * numHashes
+    if (!r.isNullAt(1)) {
+      val sh = r.getArray(1)
+      var i = 0
+      while (i < sh.numElements()) { bytes += sh.getUTF8String(i).numBytes(); i += 1 }
+    }
+    bytes
+  }
+
+  private def readLshDoc(r: InternalRow): LshDoc =
+    if (r.isNullAt(0)) new LshDoc(null, null, null)
+    else {
+      val sh = if (r.isNullAt(1)) null
+        else { val a = r.getArray(1); Array.tabulate(a.numElements())(a.getUTF8String(_).toString) }
+      // a signature has a null component only for an empty shingle set,
+      // which word shingles never are
+      new LshDoc(r.getLong(0), if (r.isNullAt(2)) null else r.getArray(2).toLongArray(), sh)
+    }
+
+  /** `len` signature components from `from`, compared and hashed in place. */
+  private final class Slice(val sig: Array[Long], val from: Int, val len: Int) {
+    override def hashCode: Int = {
+      var h = 1
+      var i = from
+      while (i < from + len) { h = 31 * h + java.lang.Long.hashCode(sig(i)); i += 1 }
+      h
+    }
+    override def equals(o: Any): Boolean = o match {
+      case t: Slice => java.util.Arrays.equals(sig, from, from + len, t.sig, t.from, t.from + t.len)
+      case _ => false
+    }
+  }
+
+  /** [[minhashLsh]]'s driver regime over the `(id long, sh, sig)` frame, or
+    * None when its rows exceed `spark.graft.vecscan.maxBroadcastBytes` or its
+    * band buckets hold more than `spark.graft.cc.smallGraphEdgeLimit` row
+    * pairs (hot buckets, e.g. many identical texts). Same rows and schema as
+    * [[minhashLshPlan]]: a bucket is an exact signature slice (a null
+    * signature joins none); a candidate id pair verifies when any row of
+    * `i` and any row of `j` pass the exact Jaccard (a null shingle set
+    * scores as `size(null)` does in the session: null under ANSI, so it
+    * never passes); every distinct id gets a row, an isolated one its own
+    * cluster.
+    */
+  private def minhashLshOnDriver(sig: DataFrame, numBands: Int, rowsPerBand: Int,
+      jaccardThreshold: Double): Option[DataFrame] = {
+    val spark = sig.sparkSession
+    val numHashes = numBands * rowsPerBand
+    val collected = VecScan.collectIfFits(sig, VecScan.maxBroadcastBytes(spark))(
+      lshDocBytes(_, numHashes), readLshDoc)
+    if (collected.isEmpty) return None
+    val docs = collected.get.filter(_.id != null).sortBy(_.id.longValue)
+    val n = docs.length
+
+    // band buckets of row indices, checked against the pair bound before
+    // any pair is enumerated
+    val buckets = (0 until numBands).flatMap { b =>
+      val m = new java.util.HashMap[Slice, mutable.ArrayBuffer[Int]]
+      var k = 0
+      while (k < n) {
+        val s = docs(k).sig
+        if (s != null)
+          m.computeIfAbsent(new Slice(s, b * rowsPerBand, rowsPerBand), _ => mutable.ArrayBuffer.empty) += k
+        k += 1
+      }
+      m.values.asScala.filter(_.length > 1)
+    }
+    val rowPairs = buckets.iterator.map(g => g.length.toLong * (g.length - 1) / 2).sum
+    if (rowPairs > Clustering.smallGraphEdgeLimit(spark)) return None
+
+    // dense id index u: distinct ids in order, rows of u in [start(u), start(u + 1))
+    val ids = mutable.ArrayBuilder.make[Long]
+    val start = mutable.ArrayBuilder.make[Int]
+    val dense = new Array[Int](n)
+    var u = -1
+    for (k <- 0 until n) {
+      if (k == 0 || docs(k).id.longValue != docs(k - 1).id.longValue) {
+        ids += docs(k).id; start += k; u += 1
+      }
+      dense(k) = u
+    }
+    start += n
+    val uid = ids.result()
+    val first = start.result()
+
+    // distinct candidate pairs (i < j) as packed dense ids
+    val packed = mutable.ArrayBuilder.make[Long]
+    for (g <- buckets; x <- g.indices; y <- x + 1 until g.length) {
+      val a = dense(g(x)); val b = dense(g(y))
+      if (a != b) packed += (math.min(a, b).toLong << 32) | math.max(a, b)
+    }
+    val sorted = packed.result()
+    java.util.Arrays.sort(sorted)
+    val cand = sorted.indices.iterator.filter(k => k == 0 || sorted(k) != sorted(k - 1))
+      .map(sorted(_)).toArray
+
+    // exact Jaccard over distinct shingle sets, as the plan's jaccardOf
+    val nullPasses = spark.conf.get("spark.sql.legacy.sizeOfNull").toBoolean &&
+      !spark.conf.get("spark.sql.ansi.enabled").toBoolean && 1.0 >= jaccardThreshold
+    val sets = new Array[java.util.HashSet[String]](n)
+    def passes(x: Int, y: Int): Boolean = {
+      val (sx, sy) = (docs(x).sh, docs(y).sh)
+      if (sx == null || sy == null) nullPasses
+      else {
+        if (sets(x) == null) sets(x) = new java.util.HashSet(java.util.Arrays.asList(sx: _*))
+        val inter = sy.count(sets(x).contains)
+        val uni = sx.length + sy.length - inter
+        (if (uni == 0) 0.0 else inter.toDouble / uni) >= jaccardThreshold
+      }
+    }
+    var verified = 0L
+    val edges = cand.flatMap { c =>
+      val (a, b) = ((c >>> 32).toInt, c.toInt)
+      val hits = (first(a) until first(a + 1)).iterator
+        .flatMap(x => (first(b) until first(b + 1)).iterator.filter(passes(x, _))).size
+      verified += hits
+      if (hits > 0) Some((uid(a), uid(b))) else None
+    }
+
+    val label = Clustering.unionFindMinLabel(edges).toMap
+    val rows = uid.map(i => Row(i, label.getOrElse(i, i))).toSeq ++
+      (if (collected.get.exists(_.id == null)) Seq(Row(null, null)) else Nil)
+    val sc = spark.sparkContext
+    lshCandidatePairs(sc).add(cand.length)
+    lshVerifiedPairs(sc).add(verified)
+    lshDriverRuns(sc).add(1)
+    val nullable = sig.schema("id").nullable
+    Some(Resident.toDf(spark, rows, StructType(Seq(
+      StructField("id", LongType, nullable), StructField("cluster", LongType, nullable)))))
   }
 
   /** Exact n-gram Jaccard near-duplicate pairs — the no-sketch reference point

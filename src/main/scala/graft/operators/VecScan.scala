@@ -7,13 +7,16 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
+
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** The exact similarity scan: one cosine kernel ([[scores]]) behind every
   * exact kNN, range and ε-graph scan over an in-memory right side — the
@@ -30,13 +33,14 @@ import org.apache.spark.util.LongAccumulator
   * tie-break.
   *
   * Scale posture: the right side is collected once ([[collectMatIfFits]]:
-  * one job that sizes and collects it together) and broadcast, bounded by
-  * [[maxBroadcastBytes]]; callers fall back to the shuffle/crossJoin plan
-  * (or IVF) above that. The left side streams and is split by pair work
-  * ([[scanRdd]]): a scan worth more than one task's share of multiply-adds
-  * runs on up to `defaultParallelism` tasks even when its left side is one
-  * partition (re-read per slice when cached or checkpointed, else shuffled
-  * once into the slices), and a small scan stays in one task.
+  * one job that sizes and collects it together, [[collectIfFits]]) and
+  * broadcast, bounded by [[maxBroadcastBytes]]; callers fall back to the
+  * shuffle/crossJoin plan (or IVF) above that. The left side streams and
+  * is split by pair work ([[scanRdd]]): a scan worth more than one task's
+  * share of multiply-adds runs on up to `defaultParallelism` tasks even
+  * when its left side is one partition (re-read per slice when cached or
+  * checkpointed, else shuffled once into the slices), and a small scan
+  * stays in one task.
   */
 object VecScan {
 
@@ -205,19 +209,18 @@ object VecScan {
     if (n > Long.MaxValue) Long.MaxValue else n.toLong
   }
 
-  private val pairsAccs = new java.util.WeakHashMap[SparkContext, LongAccumulator]
+  private val counters = new java.util.WeakHashMap[SparkContext, java.util.Map[String, LongAccumulator]]
+
+  /** The context's accumulator named `name`, registered on first use. */
+  private[graft] def counter(sc: SparkContext, name: String): LongAccumulator = counters.synchronized {
+    counters.computeIfAbsent(sc, _ => new java.util.HashMap[String, LongAccumulator])
+      .computeIfAbsent(name, n => sc.longAccumulator(n))
+  }
 
   /** Pairs scored by the distributed scans of this context: every scan task
     * adds the pairs it scores, so a scan that runs twice counts twice.
     */
-  def pairsScored(sc: SparkContext): LongAccumulator = pairsAccs.synchronized {
-    var acc = pairsAccs.get(sc)
-    if (acc == null) {
-      acc = sc.longAccumulator("graft.vecscan.pairs_scored")
-      pairsAccs.put(sc, acc)
-    }
-    acc
-  }
+  def pairsScored(sc: SparkContext): LongAccumulator = counter(sc, "graft.vecscan.pairs_scored")
 
   /** Slice of a left row among `slices`: a hash of its id, so which rows a
     * slice holds does not depend on the order a read returns them in.
@@ -295,7 +298,7 @@ object VecScan {
             if (r.isNullAt(idOrd)) Iterator.empty
             else {
               val lid = graft.plans.RowVec.getId(r, idOrd, idType)
-              val hits = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+              val hits = mutable.ArrayBuffer.empty[InternalRow]
               if (!r.isNullAt(vecOrd)) {
                 val lv = graft.plans.RowVec.getVec(r, vecOrd, vecElem)
                 val from = if (upper) firstAbove(m, lid) else 0
@@ -327,46 +330,58 @@ object VecScan {
     ColumnBridge.fromInternalRows(spark, out, schema)
   }
 
-  /** One partition's share of a bounded collect: its vector bytes, and its
-    * rows when those bytes are within `cap` (else null).
+  /** One partition's share of a bounded collect: its charged size, and its
+    * rows when that size is within the partition's share (else null).
     */
-  private final class Part(val bytes: Long, val ids: Array[Long], val vecs: Array[Array[Double]])
-    extends Serializable
+  private final class Part[T](val size: Long, val rows: Array[T]) extends Serializable
 
-  private def collectPart(it: Iterator[InternalRow], cap: Long): Part = {
-    val ids = scala.collection.mutable.ArrayBuilder.make[Long]
-    val vecs = scala.collection.mutable.ArrayBuilder.make[Array[Double]]
-    var bytes = 0L
+  private def collectPart[T: ClassTag](it: Iterator[InternalRow], cap: Long,
+      cost: InternalRow => Long, read: InternalRow => T): Part[T] = {
+    val rows = mutable.ArrayBuilder.make[T]
+    var size = 0L
     it.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        val a = r.getArray(1)
-        bytes += 8L * a.numElements()
-        if (bytes <= cap) { ids += r.getLong(0); vecs += a.toDoubleArray() }
-      }
+      size += cost(r)
+      if (size <= cap) rows += read(r)
     }
-    if (bytes <= cap) new Part(bytes, ids.result(), vecs.result()) else new Part(bytes, null, null)
+    new Part(size, if (size <= cap) rows.result() else null)
   }
 
-  /** The right side as a [[Mat]] if its vectors fit `bound` bytes, else None.
-    * One job sizes and collects it together: each partition ships its rows
-    * when they fit its even share of the bound, so the driver never holds
-    * more than the bound; partitions over their share (a skewed side that
-    * still fits) are fetched by a second job.
+  /** Every row of `df`, read by `read`, if the rows' summed `cost` fits
+    * `bound`, else None. One job sizes and collects them together: each
+    * partition ships its rows when they fit its even share of the bound, so
+    * the driver never holds more than the bound; partitions over their share
+    * (a skewed input that still fits) are fetched by a second job. A plan
+    * that folds to a LocalRelation is read on the driver, with no job.
+    */
+  private[graft] def collectIfFits[T: ClassTag](df: DataFrame, bound: Long)(
+      cost: InternalRow => Long, read: InternalRow => T): Option[Array[T]] =
+    df.queryExecution.optimizedPlan match {
+      case local: LocalRelation => Option(collectPart(local.data.iterator, bound, cost, read).rows)
+      case _ =>
+        val rdd = df.queryExecution.toRdd
+        val sc = rdd.sparkContext
+        val cap = bound / math.max(rdd.getNumPartitions, 1)
+        val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) => collectPart(it, cap, cost, read))
+        if (parts.iterator.map(_.size).sum > bound) None
+        else {
+          val missing = parts.indices.filter(parts(_).rows == null)
+          val fetched = if (missing.isEmpty) Array.empty[Part[T]]
+            else sc.runJob(rdd,
+              (it: Iterator[InternalRow]) => collectPart(it, Long.MaxValue, cost, read), missing)
+          Some((parts.filter(_.rows != null) ++ fetched).flatMap(_.rows))
+        }
+    }
+
+  /** The right side as a [[Mat]] if its vectors fit `bound` bytes, else None
+    * ([[collectIfFits]], each row charged 8 bytes per element).
     */
   private[graft] def collectMatIfFits(df: DataFrame, idCol: String, vecCol: String,
       bound: Long): Option[Mat] = {
-    val rdd = df.select(col(idCol).cast("long"), asDouble(col(vecCol))).queryExecution.toRdd
-    val sc = rdd.sparkContext
-    val cap = bound / math.max(rdd.getNumPartitions, 1)
-    val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) => collectPart(it, cap))
-    if (parts.iterator.map(_.bytes).sum > bound) None
-    else {
-      val missing = parts.indices.filter(parts(_).ids == null)
-      val fetched = if (missing.isEmpty) Array.empty[Part]
-        else sc.runJob(rdd, (it: Iterator[InternalRow]) => collectPart(it, Long.MaxValue), missing)
-      val all = parts.filter(_.ids != null) ++ fetched
-      Some(Mat.of(all.flatMap(_.ids), all.flatMap(_.vecs)))
-    }
+    val rows = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
+      .filter(col("id").isNotNull && col("v").isNotNull)
+    collectIfFits(rows, bound)(r => 8L * r.getArray(1).numElements(),
+        r => (r.getLong(0), r.getArray(1).toDoubleArray()))
+      .map(all => Mat.of(all.map(_._1), all.map(_._2)))
   }
 
   /** [[collectMatIfFits]] under the session's [[maxBroadcastBytes]]. */

@@ -308,10 +308,13 @@ object GraftPlans {
     * — MinHash+LSH near-duplicate clustering from SQL
     * ([[graft.operators.Dedup.minhashLsh]]): returns `(id, cluster)` with
     * cluster = min doc id of each verified near-duplicate group. Composed-plan
-    * builder (the fuzzy-join move — shingle/minhash/band kernels are all
-    * codegen'd builtins and the CC iteration is driver-bounded, so no custom
-    * node is needed); the table name resolves through the session catalog and
-    * the child is pre-projected to the two used columns.
+    * builder: `minhashLsh` runs at analysis time and its result is the plan —
+    * a LocalRelation in the driver regime (one job, while the shingles and
+    * signatures fit `spark.graft.vecscan.maxBroadcastBytes` and the band
+    * buckets hold ≤ `spark.graft.cc.smallGraphEdgeLimit` row pairs), else
+    * the band-join plan over codegen'd builtins with driver-bounded CC, so
+    * no custom node is needed; the table name resolves through the session
+    * catalog and the child is pre-projected to the two used columns.
     */
   private def minhashDedupBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 4 && args.length <= 7,

@@ -977,6 +977,24 @@ class EngineSpec extends AnyFunSuite {
 
   // --- connected components: both paths agree -------------------------------
 
+  test("dedupRows and clusterRows leave no cached frame or persisted RDD behind") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // local checkpoints are reclaimed by the context cleaner once unreachable;
+    // a persist stays until unpersisted
+    def persisted = sc.getPersistentRDDs.values.filterNot(_.isCheckpointed).map(_.id).toSet
+    val docs = Seq((1L, "Apple Inc"), (2L, "Apple Inc."), (3L, "Tesla Motors"),
+      (4L, "Carrefour"), (5L, "Carrefour SA")).toDF("id", "name")
+    val (baseline, wasEmpty) = (persisted, cache.isEmpty)
+    Clustering.dedupRows(docs, Seq("name"), emb, threshold = 0.5).collect()
+    Clustering.clusterRows(docs, Seq("name"), emb, threshold = 0.5).collect()
+    assert(cache.isEmpty == wasEmpty, "a frame was left in the CacheManager")
+    assert(persisted == baseline,
+      s"left persisted: ${(persisted -- baseline).map(sc.getPersistentRDDs(_))}")
+  }
+
   test("distributed CC iteration agrees with the union-find fast path") {
     import spark.implicits._
     // chain 0-1-...-19 (diameter stresses label propagation), a triangle,
