@@ -16,7 +16,7 @@ object PlanAudit {
         "q_topk_per_group", "q_agg_pricing", "q_bm25", "q_retrieve_rerank",
         "q_corpus_pipeline", "q_quantize_int8", "q_dsir_weights",
         "q_token_budget", "q_quality_gate")
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Bench.session(Bench.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

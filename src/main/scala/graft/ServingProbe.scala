@@ -13,28 +13,9 @@ object ServingProbe {
     val sfDir = args(0)
     val which = if (args.length > 1) args.drop(1).toSet
       else Set("bm25", "bm25_partitioned", "ann", "int8", "minhash")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Bench.session(cpus)
+    val spark = Bench.session(Bench.cpus)
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // the first frames are the async-execution wrapper — attribute each
-        // stage by the first frames that mention this library or the Dataset
-        // API instead
-        val names = e.stageInfos.map { si =>
-          val frames = si.details.linesIterator
-            .filter(l => l.contains("graft.") || l.contains("sql.classic.Dataset") ||
-              l.contains("sql.Dataset"))
-            .take(3).mkString(" <- ")
-          s"${si.name} tasks=${si.numTasks} details=$frames"
-        }
-        jobs.add(s"stages=${e.stageInfos.size} :: ${names.mkString(" | ").take(700)}" +
-          (if (sys.env.contains("PROBE_RAW"))
-            s"\n[probe]   RAW ${e.stageInfos.map(_.details.linesIterator.take(10).mkString(" <- ")).mkString(" || ").take(1500)}"
-          else ""))
-      }
-    })
+    val instrument = Instrument.attach(spark.sparkContext)
     def slice(table: String, id: String, payload: String, lo: Long) = {
       val src = spark.read.parquet(s"$sfDir/$table.parquet")
         .select(col(id).cast("long").as(id), col(payload))
@@ -45,32 +26,17 @@ object ServingProbe {
             org.apache.spark.sql.types.LongType, nullable = false),
           src.schema(payload))))
     }
-    // SparkListener events post asynchronously on the listener bus, so a
-    // clear() right after warm() can drop warm-up jobs INTO the timed census
-    // and a read right after the timed action can miss late arrivals
-    // (advisor r9). Quiesce = wait until the job queue has been stable for a
-    // few polls (bounded at 2 s) before clearing and before reading.
-    def quiesce(): Unit = {
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 2000000000L
-      while (stable < 4 && System.nanoTime() < deadline) {
-        Thread.sleep(25)
-        val n = jobs.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
     def probe(name: String, warm: () => Long, timed: () => Long): Unit = {
       warm()
-      quiesce()
-      jobs.clear()
+      val mark = instrument.settle()
       val t0 = System.nanoTime()
       val n = timed()
       val wall = (System.nanoTime() - t0) / 1e9
-      quiesce()
-      System.err.println(f"[probe] $name: $wall%.4fs rows=$n jobs=${jobs.size} " +
-        "(job census read after listener-bus quiesce; async attribution caveat)")
-      jobs.forEach(j => System.err.println(s"[probe]   $j"))
+      instrument.settle()
+      val jobs = instrument.jobsSince(mark)
+      System.err.println(f"[probe] $name: $wall%.4fs rows=$n jobs=${jobs.size}")
+      jobs.foreach(j => System.err.println(
+        s"[probe]   stages=${j.stageSites.size} :: ${j.stageSites.mkString(" | ").take(700)}"))
       // steady-state floor: best of N repeats of the SAME search (plan and
       // codegen caches warm) — the per-search cost a long-running service
       // converges to
@@ -116,8 +82,6 @@ object ServingProbe {
         val d = df; d.collect() // finalize this plan's own AQE
         System.err.println(s"[plan] $name:\n${d.queryExecution.executedPlan}")
       }
-    if (sys.env.contains("PROBE_NO_AQE")) spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val doPersist = !sys.env.contains("PROBE_NO_PERSIST")
     // reference points: the cost floor of trivial actions in this session —
     // an empty-work job (1-row range) and a full count of a cached table —
     // so the searches' walls can be read against the JVM's per-job floor
@@ -135,12 +99,10 @@ object ServingProbe {
     if (which("bm25")) {
       val bm250 = SparkEntry.steadyBm25Index(spark, sfDir)
       // single-partition pin — same serving configuration as the bench census
-      val bm25 = if (doPersist) bm250.copy(postings = bm250.postings.coalesce(1)) else bm250
-      if (doPersist) { bm25.postings.persist(); bm25.postings.count() }
+      val bm25 = bm250.copy(postings = bm250.postings.coalesce(1))
+      bm25.postings.persist(); bm25.postings.count()
       refPoint("bm25_postings_count", () => bm25.postings.count())
-      // PROBE_SAME=1 warms with the SAME slice the timed search uses —
-      // isolates plan/codegen-cache effects from data effects
-      val q0 = slice("documents", "doc_id", "text", if (sys.env.contains("PROBE_SAME")) 10 else 0)
+      val q0 = slice("documents", "doc_id", "text", 0)
       val q1 = slice("documents", "doc_id", "text", 10)
       probe("bm25_index",
         () => graft.operators.Lexical.bm25SearchIndex(bm25, q0, "doc_id", "text", k = 5).count(),
@@ -169,10 +131,10 @@ object ServingProbe {
     }
     if (which("ann") || which("int8")) {
       val ann0 = SparkEntry.steadyAnnIndex(spark, sfDir)
-      val ann = if (doPersist) ann0.copy(cells = ann0.cells.coalesce(1)) else ann0
-      if (doPersist) { ann.cells.persist(); ann.cells.count() }
+      val ann = ann0.copy(cells = ann0.cells.coalesce(1))
+      ann.cells.persist(); ann.cells.count()
       refPoint("cells_count", () => ann.cells.count())
-      val e0 = slice("embeddings", "vec_id", "embedding", if (sys.env.contains("PROBE_SAME")) 10 else 0)
+      val e0 = slice("embeddings", "vec_id", "embedding", 0)
       val e1 = slice("embeddings", "vec_id", "embedding", 10)
       if (which("ann")) probe("ann_index",
         () => graft.operators.Ann.annSearchIndex(ann, e0, "vec_id", "embedding",
@@ -198,13 +160,11 @@ object ServingProbe {
     }
     if (which("minhash")) {
       val mh0 = SparkEntry.steadyMinhashIndex(spark, sfDir)
-      val mh = if (doPersist) mh0.copy(postings = mh0.postings.coalesce(1),
-        shingles = mh0.shingles.coalesce(1)) else mh0
-      if (doPersist) {
-        mh.postings.persist(); mh.postings.count()
-        mh.shingles.persist(); mh.shingles.count()
-      }
-      val q0 = slice("documents", "doc_id", "text", if (sys.env.contains("PROBE_SAME")) 10 else 0)
+      val mh = mh0.copy(postings = mh0.postings.coalesce(1),
+        shingles = mh0.shingles.coalesce(1))
+      mh.postings.persist(); mh.postings.count()
+      mh.shingles.persist(); mh.shingles.count()
+      val q0 = slice("documents", "doc_id", "text", 0)
       val q1 = slice("documents", "doc_id", "text", 10)
       probe("minhash_index",
         () => graft.operators.Dedup.minhashSearchIndex(mh, q0, "doc_id", "text",
@@ -218,6 +178,7 @@ object ServingProbe {
       breakdown("minhash_index", () => graft.operators.Dedup.minhashSearchIndex(
         mh, q1, "doc_id", "text", jaccardThreshold = 0.8))
     }
+    instrument.close()
     spark.stop()
   }
 }

@@ -455,8 +455,8 @@ object Stress {
     * rows before the corpus search and the three appends run. Summary: one
     * row per epoch with the batch/survivor census, the growing MinHash
     * union fan-in, committed batch counts on all three indexes, and the
-    * Spark JOB count the epoch cost (read after a listener-bus quiesce —
-    * the ServingProbe async caveat). Value semantics are gated by the
+    * Spark JOB count the epoch cost (read after the listener bus has
+    * drained, see [[graft.Instrument]]). Value semantics are gated by the
     * hash-green 1x ingest legs (q_stream_ingest, q_stream_ingest_bm25,
     * q_stream_ingest_ann). The census makes the append-accumulation cost
     * OBSERVABLE: jobs/epoch grows ~+5 with every committed batch (each
@@ -498,27 +498,9 @@ object Stress {
     def cur(root: String): String =
       if (managed) IndexMaintenance.currentPath(spark, root) else root
 
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    // listener events post asynchronously: poll until the counter is stable
-    // (bounded) before reading an epoch boundary
-    def quiesce(): Long = {
-      var last = -1L
-      var stable = 0
-      val deadline = System.nanoTime() + 2000000000L
-      while (stable < 4 && System.nanoTime() < deadline) {
-        Thread.sleep(25)
-        val n = jobCount.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-      jobCount.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    // the listener bus delivers asynchronously: each epoch boundary is read
+    // after settle() has drained it
+    val instrument = graft.Instrument.attach(spark.sparkContext)
     val rows = try {
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -533,21 +515,21 @@ object Stress {
           // appenders' disjoint-id contract)
           .withColumn(idCol, col(idCol) + lit(e * 100000000L))
         val nBatch = batch.count()
-        val j0 = quiesce()
+        val j0 = instrument.settle().jobs
         val survivors = graft.streaming.StreamOps.ingestEpochPipeline(
           batch, idCol, textCol, cur(mhRoot), jaccardThreshold = 0.5,
           batchId = s"stress_$e", bm25Path = Some(cur(bmRoot)),
           ann = Some((cur(annRoot), embedder)))
         val nSurv = survivors.count()
-        val jobs = quiesce() - j0
+        val jobs = instrument.settle().jobs - j0
         // managed: run the maintenance pass, its jobs accounted SEPARATELY
         // from the ingest jobs — the claim is that paying maintenance
         // flattens the per-epoch INGEST cost, so the two must not blur
         val maintJobs = policy.map { pol =>
-          val m0 = quiesce()
+          val m0 = instrument.settle().jobs
           IndexMaintenance.maintainIndexes(spark, minhashRoot = Some(mhRoot),
             bm25Root = Some(bmRoot), annRoot = Some(annRoot), policy = pol)
-          quiesce() - m0
+          instrument.settle().jobs - m0
         }.getOrElse(0L)
         (e, nBatch, nSurv,
           Dedup.minhashOpenIndex(spark, cur(mhRoot)).unionFanIn,
@@ -555,7 +537,7 @@ object Stress {
           IndexLayout.committedBatchIds(fs, cur(annRoot)).size,
           jobs, maintJobs)
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally instrument.close()
     rows.toDF("epoch", "n_batch", "n_survivors", "minhash_fan_in",
       "bm25_batches", "ann_batches", "jobs", "maint_jobs")
       .orderBy(col("epoch"))
