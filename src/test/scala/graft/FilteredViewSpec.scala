@@ -108,31 +108,9 @@ class FilteredViewSpec extends AnyFunSuite {
     assert(flt(appDir) == flt(fullDir))
   }
 
-  private val jobCount = new java.util.concurrent.atomic.AtomicLong
-  private lazy val listener = {
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCount.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-  private def quiesce(): Unit = {
-    var last = -1L
-    var stable = 0
-    val deadline = System.nanoTime() + 5000000000L
-    while (stable < 4 && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      val n = jobCount.get()
-      if (n == last) stable += 1 else { stable = 0; last = n }
-    }
-  }
   private def jobsFor(search: () => Long): Long = {
-    listener
-    search(); quiesce()
-    val before = jobCount.get()
-    search(); quiesce()
-    jobCount.get() - before
+    search()
+    SpecJobs.count(spark)(search())
   }
 
   test("bm25 filtered RESIDENT serving: pinned index + driver-sized allow set " +

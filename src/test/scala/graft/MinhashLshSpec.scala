@@ -147,39 +147,18 @@ class MinhashLshSpec extends AnyFunSuite {
   }
 
   test("job budget: one job over parquet, collect included; none over a LocalRelation") {
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def quiesce(): Unit = {
-      var last = -1L
-      var stable = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 4 && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val n = jobs.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
     def jobsOf(df: DataFrame): Long = {
       run(df) // warm
-      quiesce()
-      val before = jobs.get()
       val runs = Dedup.lshDriverRuns(spark.sparkContext).value
-      run(df)
-      quiesce()
+      val n = SpecJobs.count(spark)(run(df))
       assert(Dedup.lshDriverRuns(spark.sparkContext).value == runs + 1)
-      jobs.get() - before
+      n
     }
     val dir = java.nio.file.Files.createTempDirectory("graft_minhash_jobs").toString
     longIds.repartition(2).write.mode("overwrite").parquet(s"$dir/docs")
     val parquet = spark.read.parquet(s"$dir/docs")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(jobsOf(parquet) == 1)
-      assert(jobsOf(longIds) == 0)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsOf(parquet) == 1)
+    assert(jobsOf(longIds) == 0)
   }
 
   test("an empty input gives no rows in either regime") {

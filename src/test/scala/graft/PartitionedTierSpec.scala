@@ -169,31 +169,9 @@ class PartitionedTierSpec extends AnyFunSuite {
 
   test("one job per search, the first search included") {
     overBound {
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      def quiesce(): Unit = {
-        var last = -1L; var stable = 0
-        val deadline = System.nanoTime() + 5000000000L
-        while (stable < 4 && System.nanoTime() < deadline) {
-          Thread.sleep(20)
-          val now = jobs.get()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
-      }
-      def jobsOf(f: => Unit): Long = {
-        quiesce()
-        val before = jobs.get()
-        f
-        quiesce()
-        jobs.get() - before
-      }
+      def jobsOf(f: => Unit): Long = graft.SpecJobs.count(spark)(f)
       val idx = pinned(write(docs(200)))
       idx.statsRow // read once per open, by the first search or a session's prewarm
-      spark.sparkContext.addSparkListener(listener)
       try {
         val first = jobsOf(search(idx).collect())
         assert(first == 1, s"first search (deals and caches the tier) ran $first jobs")
@@ -203,7 +181,6 @@ class PartitionedTierSpec extends AnyFunSuite {
         val counted = jobsOf(search(idx).count())
         assert(counted == 1, s"a counted search ran $counted jobs")
       } finally {
-        spark.sparkContext.removeSparkListener(listener)
         idx.partitionedHolder.drop()
         idx.postings.unpersist()
       }

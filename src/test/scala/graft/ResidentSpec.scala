@@ -183,21 +183,6 @@ class ResidentSpec extends AnyFunSuite {
   }
 
   test("resident searches cost zero Spark jobs; gate refuses unpinned indexes") {
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    def quiesce(): Unit = {
-      var last = -1L; var stable = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 4 && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val n = jobCount.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
     val tmp = java.nio.file.Files.createTempDirectory("graft_resident_jobs").toString
     val (p, st) = graft.operators.Lexical.bm25BuildIndex(docs(150), "id", "text")
     graft.operators.Lexical.bm25WriteIndex(p, st, tmp, nBuckets = 8)
@@ -214,16 +199,9 @@ class ResidentSpec extends AnyFunSuite {
     idx.postings.persist(); idx.postings.count()
     val q = docs(3, from = 300)
     graft.operators.Lexical.bm25SearchIndex(idx, q, "id", "text", k = 3).collect() // warm
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      quiesce()
-      val j0 = jobCount.get()
-      val n = graft.operators.Lexical
-        .bm25SearchIndex(idx, q, "id", "text", k = 3).collect().length
-      quiesce()
-      assert(n > 0)
-      assert(jobCount.get() - j0 == 0,
-        s"resident bm25 search ran ${jobCount.get() - j0} jobs, expected 0")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (n, jobs) = SpecJobs.of(spark)(graft.operators.Lexical
+      .bm25SearchIndex(idx, q, "id", "text", k = 3).collect().length)
+    assert(n > 0)
+    assert(jobs.isEmpty, s"resident bm25 search ran ${jobs.size} jobs, expected 0")
   }
 }

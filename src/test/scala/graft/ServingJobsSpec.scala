@@ -17,9 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    LocalRelation, whose executeCollect is driver-local);
   *  - no shuffle (single-partition chain elides every exchange).
   *
-  * The census counts SparkListenerJobStart events around a warm search,
-  * with a bounded quiesce for the async listener bus. A regression in any
-  * of the structural properties above shows up here as a second job.
+  * The census counts the jobs a warm search starts, exactly, through
+  * [[SpecJobs]]. A regression in any of the structural properties above
+  * shows up here as a second job.
   */
 class ServingJobsSpec extends AnyFunSuite {
 
@@ -29,37 +29,10 @@ class ServingJobsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val jobCount = new java.util.concurrent.atomic.AtomicLong
-  private lazy val listener = {
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCount.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  /** Bounded listener-bus quiesce: wait until the count is stable. */
-  private def quiesce(): Unit = {
-    var last = -1L
-    var stable = 0
-    val deadline = System.nanoTime() + 5000000000L
-    while (stable < 4 && System.nanoTime() < deadline) {
-      Thread.sleep(20)
-      val n = jobCount.get()
-      if (n == last) stable += 1 else { stable = 0; last = n }
-    }
-  }
-
   /** Jobs triggered by `search` at steady state (after one warm run). */
   private def jobsFor(search: () => Long): Long = {
-    listener
     search() // warm: codegen + any open-time work
-    quiesce()
-    val before = jobCount.get()
-    search()
-    quiesce()
-    jobCount.get() - before
+    SpecJobs.count(spark)(search())
   }
 
   private def localDocs(n: Int, from: Int = 0): DataFrame = {

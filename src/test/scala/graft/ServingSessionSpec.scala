@@ -125,36 +125,14 @@ class ServingSessionSpec extends AnyFunSuite {
       IndexMaintenance.currentPath(spark, root),
       docs(20, from = 2000), "id", "text", "b1")
     IndexMaintenance.maintainIndexes(spark, bm25Root = Some(root), policy = anyAppend)
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    def quiesce(): Unit = {
-      var last = -1L; var stable = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 4 && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val n = jobCount.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    }
     try {
       // the swap itself costs jobs (open + pin + prewarm) — paid here, once
       val (g, idx) = sess.resolved
       assert(g == 1)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        quiesce()
-        val j0 = jobCount.get()
-        val n = graft.operators.Lexical
-          .bm25SearchIndex(idx, q, "id", "text", k = 3).collect().length
-        quiesce()
-        assert(n > 0)
-        assert(jobCount.get() - j0 == 0,
-          s"first post-swap search ran ${jobCount.get() - j0} jobs, expected 0")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (n, jobs) = SpecJobs.of(spark)(graft.operators.Lexical
+        .bm25SearchIndex(idx, q, "id", "text", k = 3).collect().length)
+      assert(n > 0)
+      assert(jobs.isEmpty, s"first post-swap search ran ${jobs.size} jobs, expected 0")
     } finally sess.close()
   }
 
