@@ -1,8 +1,9 @@
 package graft
 
 /** Diagnostic main: decomposes a query's wall time into DataFrame
-  * construction (analysis), job execution, and between-job driver gaps
-  * (planning/collect/scheduler latency), with per-job wall and task counts.
+  * construction (analysis, plus any jobs it runs: `build_jobs`), job
+  * execution, and between-job driver gaps (planning/collect/scheduler
+  * latency), with per-job wall and task counts.
   * Runs in [[Bench.session]], so walls are comparable to the recorded bench
   * numbers.
   *
@@ -37,12 +38,15 @@ object Profile {
       val build = (t1 - t0) / 1e3
       val recs = instrument.jobsSince(mark)
       val jobWall = recs.map(r => (r.end - r.start).max(0L)).sum / 1e3
+      // jobs run while the DataFrame is built (eager localCheckpoints) are
+      // inside `build` already: only the later ones are `covered`
+      val buildJobs = recs.count(_.start < t1)
       // gaps: wall minus the MERGED union of job [start,end] intervals
       // (advisor r15: queries that submit jobs concurrently — e.g.
       // q_resident_parity's four plan legs — make the naive sum exceed
       // wall and print negative gaps), minus DataFrame construction
       val covered = {
-        val iv = recs.map(r => (r.start, r.end.max(r.start))).sortBy(_._1)
+        val iv = recs.filter(_.start >= t1).map(r => (r.start, r.end.max(r.start))).sortBy(_._1)
         var tot = 0L
         var curS = 0L
         var curE = -1L
@@ -55,7 +59,7 @@ object Profile {
       }
       val gapTotal = wall - build - covered
       println(f"[$name rep$rep] wall=$wall%.3f build=$build%.3f " +
-        f"jobs=${recs.size} jobWall=$jobWall%.3f covered=$covered%.3f " +
+        f"jobs=${recs.size} build_jobs=$buildJobs jobWall=$jobWall%.3f covered=$covered%.3f " +
         f"gaps=$gapTotal%.3f rows=$n")
       if (rep == reps - 1) {
         recs.foreach { r =>

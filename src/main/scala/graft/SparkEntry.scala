@@ -2104,13 +2104,12 @@ object SparkEntry {
     "q_resident_parity" -> ((s, dir) => {
       import graft.operators.Resident
       val (bm, ann, mh, pq) = steadyPinnedIndexes(s, dir)
-      // the forced-PLAN legs search the parquet-backed steady indexes, not
-      // the coalesce(1)-pinned copies (r15): the pinned layout exists for
-      // the resident tier's single-fetch mirror build, but it serializes
-      // the distributed plan to one task (profiled: 0.7-1.9 s single-task
-      // search jobs). Same index directories, so parity semantics are
-      // unchanged — and the plan legs now verify the bucket-pruned parquet
-      // plan a production search would actually run
+      // the forced-PLAN legs search the parquet-backed steady indexes,
+      // which nothing pins, not the coalesce(1)-pinned copies (r15): with
+      // the resident bound at 0 a pinned copy would serve from its
+      // partitioned tier instead of the plan. Same index directories, so
+      // parity semantics are unchanged — and the plan legs verify the
+      // bucket-pruned parquet plan a production search would actually run
       val bmP = steadyBm25Index(s, dir)
       val annP = steadyAnnIndex(s, dir)
       val mhP = steadyMinhashIndex(s, dir)
@@ -4046,8 +4045,8 @@ object SparkEntry {
       val (rows, schema) = Fixture.memo("stress_ingest", s, dir) { _ =>
         // both curves side by side (judge r11 #6): the unmanaged run's
         // fan-in / batch counts / ingest jobs grow per epoch; the managed
-        // run (the q_maintenance_census policy) pays maint_jobs and keeps
-        // the ingest-side curve ~flat after compactions fire
+        // run (the q_maintenance_census policy) commits maint_generations
+        // and keeps the ingest-side curve ~flat after compactions fire
         val plain = Stress.ingestTriadSummary(ld(s, dir, "documents"),
           "doc_id", "text", md5Embedder, epochs = 5, m = 10)
           .withColumn("mode", lit("plain"))

@@ -193,17 +193,9 @@ final class TopKPayloadBuffer(val k: Int) {
   }
 }
 
-/** [[TopKAggregate]] carrying a payload double per kept entry — built for the
-  * IVF_SQ8 serving fast path, where the int8 coarse score SELECTS the
-  * candidate set but the exact cosine (computed in the same scan) is what the
-  * rerank needs: keeping it as payload makes the whole coarse→rerank chain a
-  * pair of aggregates with NO join above them. That shape matters because
-  * EnsureRequirements re-shuffles SinglePartition JOIN children whose size
-  * ESTIMATE exceeds `spark.sql.maxSinglePartitionBytes` (128 MB default), and
-  * the size-only join estimator multiplies child sizes — a serving-regime
-  * join above an aggregate always "exceeds" the bound on paper and turns the
-  * single-stage plan back into three shuffle stages (judge r9: the int8
-  * path's extra serving jobs).
+/** [[TopKAggregate]] carrying a payload double per kept entry: a coarse
+  * score SELECTS the candidate set while an exact score rides along as the
+  * payload, so a coarse→rerank chain needs no join back to the scored rows.
   *
   * Output: array<struct<score double, id bigint, payload double>> in the
   * same best-first (score desc, id asc) order as [[TopKAggregate]] — the
@@ -214,24 +206,16 @@ case class TopKPayloadAggregate(
     idExpr: Expression,
     payloadExpr: Expression,
     k: Int,
-    rerankK: Int = 0,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKPayloadBuffer] {
 
   require(k >= 1, "k must be >= 1")
-  require(rerankK >= 0 && rerankK <= k, s"rerankK must be in [0, k], got $rerankK")
 
   override def children: Seq[Expression] = Seq(scoreExpr, idExpr, payloadExpr)
   override def nullable: Boolean = false
   override def dataType: DataType =
-    if (rerankK > 0)
-      // rerank mode: array<struct<score, id>> where score IS the payload —
-      // the [[TopKAggregate]] output contract
-      ArrayType(StructType(Seq(
-        StructField("score", DoubleType), StructField("id", LongType))),
-        containsNull = false)
-    else ArrayType(
+    ArrayType(
       StructType(Seq(StructField("score", DoubleType), StructField("id", LongType),
         StructField("payload", DoubleType))),
       containsNull = false)
@@ -256,25 +240,10 @@ case class TopKPayloadAggregate(
   }
 
   override def eval(buf: TopKPayloadBuffer): Any = {
-    if (rerankK > 0) {
-      // rerank mode: among the k coarse-kept entries, the top rerankK BY
-      // PAYLOAD (payload desc, id asc — TopKBuffer's exact order contract),
-      // emitted as (payload, id). Entry-for-entry identical to feeding this
-      // aggregate's 3-column output through a second topK(rerankK, payload,
-      // id) — the fused form of the coarse-select → exact-rerank chain.
-      val fin = new TopKBuffer(rerankK)
-      var i = 0
-      while (i < buf.n) { fin.insert(buf.payloads(i), buf.ids(i)); i += 1 }
-      val out = new Array[Any](fin.n)
-      i = 0
-      while (i < fin.n) { out(i) = InternalRow(fin.scores(i), fin.ids(i)); i += 1 }
-      new GenericArrayData(out)
-    } else {
-      val out = new Array[Any](buf.n)
-      var i = 0
-      while (i < buf.n) { out(i) = InternalRow(buf.scores(i), buf.ids(i), buf.payloads(i)); i += 1 }
-      new GenericArrayData(out)
-    }
+    val out = new Array[Any](buf.n)
+    var i = 0
+    while (i < buf.n) { out(i) = InternalRow(buf.scores(i), buf.ids(i), buf.payloads(i)); i += 1 }
+    new GenericArrayData(out)
   }
 
   override def serialize(buf: TopKPayloadBuffer): Array[Byte] = {
@@ -759,17 +728,6 @@ object VecExpressions {
     ColumnBridge.column(TopKPayloadAggregate(
       ColumnBridge.expression(score), ColumnBridge.expression(id),
       ColumnBridge.expression(payload), k).toAggregateExpression())
-
-  /** Fused coarse-select + rerank: keep the top `kCoarse` by `score`, then
-    * emit the top `kFinal` of those BY `payload` as array<struct<score,id>>
-    * (score = the payload) — one aggregate instead of
-    * topKPayload → explode → topK.
-    */
-  def topKRerank(kCoarse: Int, kFinal: Int, score: Column, id: Column,
-      payload: Column): Column =
-    ColumnBridge.column(TopKPayloadAggregate(
-      ColumnBridge.expression(score), ColumnBridge.expression(id),
-      ColumnBridge.expression(payload), kCoarse, rerankK = kFinal).toAggregateExpression())
 
   /** Key-ordered double-sum aggregate column (bit-reproducible fold). */
   def orderedSum(key: Column, value: Column): Column =

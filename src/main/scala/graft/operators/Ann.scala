@@ -195,6 +195,22 @@ object Ann {
       new Resident.Holder[Resident.AnnResident]("ann")
     private[operators] def resident: Resident.AnnResident =
       residentHolder.get(Resident.buildAnn(this))
+    /** The partitioned tier ([[Resident.Partitioned]]) for pinned indexes
+      * over the resident bound: built once per open, shared and released
+      * like the driver mirror.
+      */
+    @transient private[operators] val partitionedHolder =
+      new Resident.Holder[Resident.Partitioned[Resident.AnnResident]]("ann-partitioned")
+    private[operators] def partitioned: Resident.Partitioned[Resident.AnnResident] =
+      partitionedHolder.get(Resident.buildAnnPartitioned(this,
+        Resident.partitionsFor(cells.sparkSession, nRows)))
+    /** Stamps the shared-mirror identity of both tiers (see
+      * [[Resident.Holder]]).
+      */
+    private[operators] def shareAs(key: Option[String]): Unit = {
+      residentHolder.shareKey = key
+      partitionedHolder.shareKey = key.map(_ + "|partitioned")
+    }
     /** Driver-collected allow set for filtered RESIDENT serving (r13) — the
       * [[graft.operators.Lexical.Bm25Index.allowedServingSet]] pattern:
       * present iff this is a filtered view whose allow-list fits
@@ -265,7 +281,7 @@ object Ann {
       cb: Option[Pq.PqCodebook]): Unit = {
     val n = centroids.count().toInt
     // corpus row count into the meta: one count at build buys every later
-    // search a free scan-size estimate (the single-stage fast-path gate)
+    // search a free size estimate (the serving tiers' residency gate)
     val nRows = cells.count()
     // bake int8 codes + integer norms next to the double vectors (the
     // IVF_SQ8 layout): the quantized search scans ONLY these narrow columns
@@ -451,8 +467,7 @@ object Ann {
       // is unaffected
       Pq.loadCodebook(spark, s"$path/pq_codebook.json"),
       deletedRows = dels.map(_.nRows).getOrElse(0L))
-    idx.residentHolder.shareKey =
-      Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels))
+    idx.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels)))
     idx
   }
 
@@ -519,10 +534,10 @@ object Ann {
     * matrix lazily on first search — REUSE one view across a query stream
     * rather than rebuilding it per search. A PINNED index with a
     * driver-sized allow-list (r13, [[Serving.maxDriverAllowIds]], collected
-    * once per view) serves filtered searches from the RESIDENT tier at
-    * zero jobs — candidate ids filtered in the driver scoring loops, the
-    * mirror itself shared with plain opens; over-bound views keep the
-    * distributed semi-join plan.
+    * once per view) serves filtered searches from the base index's mirrors
+    * (the driver mirror at zero jobs, or the partitioned tier over the
+    * resident bound) — candidate ids filtered in the scoring folds; any
+    * other view keeps the distributed semi-join plan.
     */
   def annFilteredView(index: AnnIndex, allowed: DataFrame, idCol: String): AnnIndex = {
     val ids = allowed.select(col(idCol).cast("long").as("__allow_id")).distinct()
@@ -531,10 +546,10 @@ object Ann {
     val v = index.copy(allowed = Some(
       index.allowed.fold(ids)(prev =>
         ids.join(prev, Seq("__allow_id"), "left_semi"))))
-    // inherit the mirror identity: the view's resident mirror IS the base
-    // index's (unfiltered — the allow set applies at search time), so two
-    // opens + a view share one census entry
-    v.residentHolder.shareKey = index.residentHolder.shareKey
+    // inherit the mirror identity: the view's mirrors ARE the base index's
+    // (unfiltered — the allow set applies at search time), so two opens + a
+    // view share one census entry per tier
+    v.shareAs(index.residentHolder.shareKey)
     v
   }
 
@@ -606,19 +621,30 @@ object Ann {
   private final case class LocalProbes(
       qRows: Array[(Long, Array[Double])],
       exploded: Seq[(Long, Array[Double], Double, Long)],
-      nProbedCells: Int,
       restrict: DataFrame => DataFrame) extends ProbeResult
   private final case class DistProbes(
       probes: DataFrame, restrict: DataFrame => DataFrame) extends ProbeResult
 
-  /** Serving fast-path gate (see [[Serving]]): estimated pruned-cell scan =
-    * `n_rows · probedCells / nCentroids` from the meta's row count.
+  /** Pinned serving (see [[Resident]]): with the probes driver-known, a
+    * pinned index is searched by the same fold on the driver mirror under
+    * the resident bound (zero jobs) and on the partitioned tier over it (one
+    * job) — spec-pinned bit-identical to the plans. A filtered view serves
+    * here when its allow set is driver-sized; the pin check comes first,
+    * because the allow set's first evaluation is a collect job an unpinned
+    * view must not pay. None: the distributed plan serves.
     */
-  private def estScanFitsSingleStage(index: AnnIndex, pr: ProbeResult,
-      spark: org.apache.spark.sql.SparkSession): Boolean = pr match {
-    case lp: LocalProbes => Serving.pinned(index.cells) && index.nRows.exists(n =>
-      n * lp.nProbedCells / math.max(index.nCentroids, 1) <= Serving.singleStageRows(spark))
-    case _ => false
+  private def servePinned(index: AnnIndex, pr: ProbeResult, k: Int,
+      scoring: Resident.AnnScoring): Option[DataFrame] = pr match {
+    case lp: LocalProbes if Serving.pinned(index.cells) &&
+        (index.allowed.isEmpty || index.allowedServingSet.isDefined) =>
+      val spark = index.cells.sparkSession
+      val allowed = index.allowedServingSet.orNull
+      Some(if (Resident.eligible(spark, index.nRows, index.cells))
+        Resident.toDf(spark, Resident.searchAnn(index.resident, groupProbes(lp), k, scoring,
+          allowed), Resident.AnnSchema)
+      else Resident.searchAnnPartitioned(spark, index.partitioned, groupProbes(lp), k, scoring,
+        allowed))
+    case _ => None
   }
 
   private def probeAndPrune(
@@ -659,8 +685,7 @@ object Ann {
         case IntegerType => wantedCells.map(_.toInt)
         case _ => wantedCells
       }
-      LocalProbes(qRows, exploded, wantedCells.size,
-        cells => cells.filter(col("__cell").isin(cellLits: _*)))
+      LocalProbes(qRows, exploded, cells => cells.filter(col("__cell").isin(cellLits: _*)))
     } else {
       joinRestrictionSearches.incrementAndGet()
       val probesPlan = SemanticJoin.knnJoinVec(
@@ -694,57 +719,18 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    // driver-resident serving (see [[Resident]]): the probe assignment is
-    // already driver-known (LocalProbes), so with the cell mirror resident
-    // the whole search is driver arithmetic — zero Spark jobs. Same
-    // dot/cosine/TopKBuffer kernels as the scan, spec-pinned bit-identical.
-    pr match {
-      case lp: LocalProbes
-          if Resident.eligible(spark, index.nRows, index.cells) &&
-            (index.allowed.isEmpty || index.allowedServingSet.isDefined) =>
-        return Resident.toDf(spark,
-          Resident.searchAnnFloat(index.resident, groupProbes(lp), k,
-            allowed = index.allowedServingSet.orNull),
-          Resident.AnnSchema)
-      case _ =>
+    servePinned(index, pr, k, Resident.FloatScoring) match {
+      case Some(df) => return df
+      case None =>
     }
     val pruned = allowRestrict(pr.restrict(index.cells), index.allowed)
     val scored = pr match {
-      // Serving fast path: the probe assignment is driver-known, so the
-      // query side enters the plan as a LITERAL map `cell -> [(query_id,
-      // qv, qn)]` and the "join" is a per-row map lookup + explode — no
-      // broadcast at all. A broadcast of even a LocalRelation build side is
-      // NOT jobless: BroadcastExchangeExec materializes its child via
-      // executeCollectIterator, which LocalTableScanExec does not override,
-      // so every search paid a real min(defaultParallelism, rows)-task
-      // collect job (measured: half the fast path's wall at sf0.1). The
-      // INSET cell restriction guarantees every scanned cell hits the map;
-      // try_element_at (vs element_at) keeps a miss a no-row, not an ANSI
-      // error. Scoring expressions are identical, so scores stay bit-equal
-      // to the join form (spec-pinned).
-      // filtered views skip the literal-map single-stage shape (no allow
-      // seam without a join above the coalesce) — they score through the
-      // broadcast branch below with the semi-joined pruned scan
-      case LocalProbes(_, exploded, _, _)
-          if index.allowed.isEmpty && estScanFitsSingleStage(index, pr, spark) =>
-        val byCell: Map[Long, Seq[(Long, Seq[Double], Double)]] = exploded
-          .groupBy(_._4)
-          .map { case (c, es) => (c, es.map(e => (e._1, e._2.toSeq, e._3))) }
-        pruned.withColumn("__cn", norm(col("cv")))
-          .select(col("corpus_id"), col("cv"), col("__cn"),
-            explode(try_element_at(typedLit(byCell), col("__cell").cast("long"))).as("__q"))
-          .select(col("__q._1").as("query_id"), col("corpus_id"),
-            cosineWithNorms(dot(col("__q._2"), col("cv")), col("__q._3"), col("__cn"))
-              .as("__score"))
-          .coalesce(1)
-      // distributed regimes: the probe side joins in. For LocalProbes the
-      // norms were computed driver-side with the same sequential-fold
-      // kernel the Catalyst norm expression lowers to (bit-identical
-      // doubles), and the explicit broadcast() pins the BUILD side to the
-      // LocalRelation — that broadcast costs one materialization job, which
-      // is fine here (the scan side is big enough to want the parallelism)
-      // but is exactly what the fast path above eliminates
-      case LocalProbes(_, exploded, _, _) =>
+      // for LocalProbes the norms were computed driver-side with the same
+      // sequential-fold kernel the Catalyst norm expression lowers to
+      // (bit-identical doubles), and the explicit broadcast() pins the BUILD
+      // side to the LocalRelation (one materialization job; the scan side
+      // is big enough to want the parallelism)
+      case LocalProbes(_, exploded, _) =>
         broadcast(exploded.toDF("query_id", "qv", "__qn", "__cell"))
           .join(pruned.withColumn("__cn", norm(col("cv"))), Seq("__cell"))
           .select(col("query_id"), col("corpus_id"),
@@ -757,32 +743,30 @@ object Ann {
         .select(col("query_id"), col("corpus_id"),
           cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score"))
     }
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-      .select(
-        col("query_id").as("left_id"),
-        col("__s.id").as("right_id"),
-        col("__s.score").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
+    rankedTopK(scored, k)
   }
+
+  /** Per-query exact-cosine top-k of `(query_id, corpus_id, __score)` rows
+    * in the `(left_id, right_id, score, rank)` output contract.
+    */
+  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = scored
+    .groupBy(col("query_id"))
+    .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
+    .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
+    .select(
+      col("query_id").as("left_id"),
+      col("__s.id").as("right_id"),
+      col("__s.score").as("score"),
+      (col("__pos") + 1).cast("int").as("rank"))
 
   /** IVF_SQ8 search of a persisted index: same cell pruning as
     * [[annSearchIndex]]; the int8 codes coarse-score the probed cells and
     * only the top `rerankFactor·k` candidates per query are re-scored with
-    * the exact double cosine. Two physical shapes, row-identical (the guard
-    * spec differential-tests them):
-    *
-    *  - distributed regimes: a narrow coarse scan of ONLY `codes`/`cn2`
-    *    (parquet column pruning keeps the 8-byte-per-lane `cv` out of the
-    *    coarse read, ~8x less IO) and a rerank JOIN pulls `cv` back for the
-    *    candidates;
-    *  - the single-stage serving regime (see [[Serving]]): one wide scan
-    *    computes both scores per row and a payload top-k carries the exact
-    *    score through candidate selection — no join above any aggregate, so
-    *    the whole chain is one result job (r10; the scan is budget-bounded
-    *    tiny there, so the narrow-read saving is irrelevant and the rerank
-    *    join's serving jobs were the real cost).
+    * the exact double cosine. The plan's coarse scan reads ONLY
+    * `codes`/`cn2` (parquet column pruning keeps the 8-byte-per-lane `cv`
+    * out of the coarse read, ~8x less IO) and a rerank JOIN pulls `cv` back
+    * for the candidates; a pinned index serves from its mirrors instead
+    * (see [[servePinned]]).
     *
     * Output contract = [[annSearchIndex]]; `score` is the exact cosine
     * (bit-identical on every kept pair — only the candidate set is
@@ -799,94 +783,9 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    // driver-resident serving: same gate as the float path; the fused
-    // coarse-select → exact-rerank chain reuses the identical
-    // TopKPayloadBuffer/TopKBuffer pair — spec-pinned bit-identical.
-    pr match {
-      case lp: LocalProbes
-          if Resident.eligible(spark, index.nRows, index.cells) &&
-            (index.allowed.isEmpty || index.allowedServingSet.isDefined) =>
-        return Resident.toDf(spark,
-          Resident.searchAnnInt8(index.resident, groupProbes(lp), k, rerankFactor,
-            allowed = index.allowedServingSet.orNull),
-          Resident.AnnSchema)
-      case _ =>
-    }
-    // shared output tail: per-query exact-cosine top-k → ranked long form
-    def rankedTopK(scored: DataFrame): DataFrame = scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-      .select(
-        col("query_id").as("left_id"),
-        col("__s.id").as("right_id"),
-        col("__s.score").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
-    // Serving fast path (same gate as annSearchIndex; implies LocalProbes).
-    // The shape that keeps this ONE result job: a single wide scan of the
-    // pruned cells computes BOTH the int8 coarse score and the exact cosine
-    // per row, a payload top-k keeps the k·rerankFactor candidates BY the
-    // coarse score while CARRYING their exact scores, and a second top-k
-    // reranks among them — two chained aggregates over one coalesced
-    // partition, no join above any aggregate. The earlier two-pass shape
-    // (narrow coarse scan + rerank join) is kept for the distributed
-    // regimes where its 8x-narrower coarse IO matters; here the pruned scan
-    // is budget-bounded tiny and a rerank JOIN would cost either a
-    // broadcast-materialization job or (merge-join form) get re-shuffled by
-    // EnsureRequirements' maxSinglePartitionBytes bound, whose size-only
-    // join ESTIMATE multiplies child sizes and always "exceeds" on paper.
-    // Candidate selection is entry-for-entry identical to the two-pass form
-    // (same (score desc, id asc) TopK order on the same coarse stream), so
-    // the kept pairs and their exact scores are bit-identical — the guard
-    // spec differential-tests the two regimes.
-    if (index.allowed.isEmpty && estScanFitsSingleStage(index, pr, spark)) {
-      val exploded = pr.asInstanceOf[LocalProbes].exploded
-      // query quantization runs as plain driver arithmetic — the Catalyst
-      // form (`max(|x|)/127` scale, `floor(x/scale + 0.5)` cast tinyint,
-      // integer squared norm) evaluated through ConvertToLocalRelation's
-      // interpreted projection costs ~100 ms per serving batch in
-      // higher-order-function eval overhead alone. Each step below is the
-      // same double/long operation in the same order, so the codes are
-      // bit-identical (the guard spec differential-tests this path against
-      // the two-pass join form, and q_quantize_int8 oracles the kernel).
-      // The query side then enters the plan as a literal map instead of a
-      // broadcast build side: a broadcast of even a LocalRelation is NOT
-      // jobless (BroadcastExchangeExec materializes via
-      // executeCollectIterator, which LocalTableScanExec does not
-      // override), so the join form paid a real collect job per search
-      val byCell: Map[Long, Seq[(Long, Seq[Byte], Long, Seq[Double], Double)]] =
-        exploded
-          .map { case (qid, qv, qn, cell) =>
-            val (codes, n2) = Quantize.quantizeArray(qv)
-            (cell, (qid, codes.toSeq, n2, qv.toSeq, qn))
-          }
-          .groupBy(_._1).map { case (c, es) => (c, es.map(_._2)) }
-      val scored = pr.restrict(index.cells)
-        .select(col("corpus_id"), col("codes"), col("cn2"),
-          asDouble(col("cv")).as("cv"), col("__cell"))
-        .withColumn("__cn", norm(col("cv")))
-        .select(col("corpus_id"), col("codes"), col("cn2"), col("cv"), col("__cn"),
-          explode(try_element_at(typedLit(byCell), col("__cell").cast("long"))).as("__q"))
-        .select(col("__q._1").as("query_id"), col("corpus_id"),
-          graft.operators.Quantize.cosineI8WithNorms(
-            graft.functions.Int8Kernels.dotI8(col("__q._2"), col("codes")),
-            col("__q._3"), col("cn2")).as("__qscore"),
-          cosineWithNorms(dot(col("__q._4"), col("cv")), col("__q._5"), col("__cn"))
-            .as("__score"))
-      // fused coarse-select + rerank: ONE aggregate keeps the k·rerankFactor
-      // pool by int8 score and emits the exact-score top-k at eval —
-      // entry-for-entry identical to the two-aggregate chain it replaces
-      return scored.coalesce(1)
-        .groupBy(col("query_id"))
-        .agg(graft.functions.VecExpressions
-          .topKRerank(k * rerankFactor, k, col("__qscore"), col("corpus_id"), col("__score"))
-          .as("__top"))
-        .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-        .select(
-          col("query_id").as("left_id"),
-          col("__s.id").as("right_id"),
-          col("__s.score").as("score"),
-          (col("__pos") + 1).cast("int").as("rank"))
+    servePinned(index, pr, k, Resident.Int8Scoring(rerankFactor)) match {
+      case Some(df) => return df
+      case None =>
     }
     // coarse: narrow scan — corpus_id, codes, cn2 only; cv never read here.
     // The allow semi-join sits on the coarse scan, so disallowed vectors
@@ -899,7 +798,7 @@ object Ann {
     // skipping the probe broadcast + join entirely
     val isLocal = pr.isInstanceOf[LocalProbes]
     val qCodesBase = pr match {
-      case LocalProbes(_, exploded, _, _) =>
+      case LocalProbes(_, exploded, _) =>
         exploded.map(r => (r._1, r._2, r._4)).toDF("query_id", "__qv", "__cell")
       case DistProbes(probes, _) => queries
         .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("__qv"))
@@ -910,9 +809,9 @@ object Ann {
       .select(col("query_id"), col("__qc"), col("__qn2"), col("__cell"))
     // local regime: pin the BUILD side to the folded LocalRelation — the
     // broadcast costs one materialization job (LocalTableScanExec does not
-    // override executeCollectIterator — see the single-stage branch's
-    // note), which is fine in this batch regime; letting the planner
-    // broadcast the cell scan instead would cost a far bigger one
+    // override executeCollectIterator), which is fine in this batch regime;
+    // letting the planner broadcast the cell scan instead would cost a far
+    // bigger one
     val qCodes = if (isLocal) broadcast(qCodes0) else qCodes0
     val scoredCoarse0 = qCodes
       .join(coarseCells, Seq("__cell"))
@@ -932,13 +831,13 @@ object Ann {
       .select(col("corpus_id"), asDouble(col("cv")).as("cv"))
       .withColumn("__cn", norm(col("cv")))
     val qFull = (pr match {
-      case LocalProbes(qRows, _, _, _) => qRows.toSeq.toDF("query_id", "qv")
+      case LocalProbes(qRows, _, _) => qRows.toSeq.toDF("query_id", "qv")
       case DistProbes(_, _) => queries
         .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("qv"))
     }).withColumn("__qn", norm(col("qv")))
     rankedTopK(candidates.join(qFull, "query_id").join(rerankCells, "corpus_id")
       .select(col("query_id"), col("corpus_id"),
-        cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score")))
+        cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score")), k)
   }
 
   /** IVF_PQ search of a persisted index written with `annWriteIndex(pqM >
@@ -954,14 +853,8 @@ object Ann {
     * [[graft.functions.PqKernels.lut]] kernel the expression calls — or
     * in-plan in the distributed regime); each candidate then costs m table
     * lookups, zero multiplies.
-    *
-    * No single-stage plan variant on purpose: the serving regime's wall is
-    * scheduler round-trips, not scan bytes, and [[annSearchIndexInt8]]
-    * already owns that regime — PQ's lever is the scan-bound batch regime
-    * where candidate IO dominates. The RESIDENT tier (r12) is the
-    * exception: a pinned under-bound IVF_PQ index serves zero-job like the
-    * other three families, ADC + rerank as driver arithmetic over the
-    * mirrored codes (see [[Resident.searchAnnPq]]).
+    * A pinned index serves from its mirrors instead, ADC + rerank as the
+    * same arithmetic over the mirrored codes (see [[servePinned]]).
     */
   def annSearchIndexPq(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
@@ -974,19 +867,10 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    // driver-resident serving (see [[Resident]]): same gate as the float /
-    // int8 paths; the LUT, ADC coarse pass, and exact rerank all reuse the
-    // plan's kernels verbatim — spec-pinned bit-identical
-    pr match {
-      case lp: LocalProbes
-          if Resident.eligible(spark, index.nRows, index.cells) &&
-            (index.allowed.isEmpty || index.allowedServingSet.isDefined) =>
-        return Resident.toDf(spark,
-          Resident.searchAnnPq(index.resident, groupProbes(lp),
-            cb.flat, cb.m, cb.ks, cb.dsub, k, rerankFactor,
-            allowed = index.allowedServingSet.orNull),
-          Resident.AnnSchema)
-      case _ =>
+    servePinned(index, pr, k,
+      Resident.PqScoring(cb.flat, cb.m, cb.ks, cb.dsub, rerankFactor)) match {
+      case Some(df) => return df
+      case None =>
     }
     // the allow semi-join sits on the ADC coarse scan (disallowed vectors
     // never form candidates); the rerank join fetches filtered ids only
@@ -994,7 +878,7 @@ object Ann {
       .select(col("corpus_id"), col("pq"), col("cn"), col("__cell"))
     val isLocal = pr.isInstanceOf[LocalProbes]
     val qLut0 = pr match {
-      case LocalProbes(_, exploded, _, _) =>
+      case LocalProbes(_, exploded, _) =>
         // LUT per (query, probe) row via the same kernel the Catalyst
         // expression calls — bit-identical tables, zero Spark work
         exploded.map { case (qid, qv, qn, cell) =>
@@ -1029,21 +913,13 @@ object Ann {
       .select(col("corpus_id"), asDouble(col("cv")).as("cv"))
       .withColumn("__cn", norm(col("cv")))
     val qFull = (pr match {
-      case LocalProbes(qRows, _, _, _) => qRows.toSeq.toDF("query_id", "qv")
+      case LocalProbes(qRows, _, _) => qRows.toSeq.toDF("query_id", "qv")
       case DistProbes(_, _) => queries
         .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("qv"))
     }).withColumn("__qn", norm(col("qv")))
-    candidates.join(qFull, "query_id").join(rerankCells, "corpus_id")
+    rankedTopK(candidates.join(qFull, "query_id").join(rerankCells, "corpus_id")
       .select(col("query_id"), col("corpus_id"),
-        cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-      .select(
-        col("query_id").as("left_id"),
-        col("__s.id").as("right_id"),
-        col("__s.score").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
+        cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score")), k)
   }
 
   def ivfTopK(
@@ -1085,13 +961,6 @@ object Ann {
       .join(corpusByList.withColumn("__cn", norm(col("cv"))), Seq("centroid_id"))
       .select(col("query_id"), col("corpus_id"),
         cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score"))
-    scored.groupBy(col("query_id"))
-      .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-      .select(
-        col("query_id").as("left_id"),
-        col("__s.id").as("right_id"),
-        col("__s.score").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
+    rankedTopK(scored, k)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
 
 import scala.collection.mutable
@@ -640,6 +640,22 @@ object Dedup extends Logging {
       new Resident.Holder[Resident.MinhashResident]("minhash")
     private[operators] def resident: Resident.MinhashResident =
       residentHolder.get(Resident.buildMinhash(this))
+    /** The partitioned tier ([[Resident.Partitioned]]) for pinned indexes
+      * over the resident bound: built once per open, shared and released
+      * like the driver mirror.
+      */
+    @transient private[operators] val partitionedHolder =
+      new Resident.Holder[Resident.Partitioned[Resident.MinhashResident]]("minhash-partitioned")
+    private[operators] def partitioned: Resident.Partitioned[Resident.MinhashResident] =
+      partitionedHolder.get(Resident.buildMinhashPartitioned(this,
+        Resident.partitionsFor(postings.sparkSession, nRows)))
+    /** Stamps the shared-mirror identity of both tiers (see
+      * [[Resident.Holder]]).
+      */
+    private[operators] def shareAs(key: Option[String]): Unit = {
+      residentHolder.shareKey = key
+      partitionedHolder.shareKey = key.map(_ + "|partitioned")
+    }
     /** Driver-collected allow set for filtered RESIDENT serving (r13) — the
       * [[graft.operators.Lexical.Bm25Index.allowedServingSet]] pattern:
       * present iff this is a filtered view whose allow-list fits
@@ -863,8 +879,7 @@ object Dedup extends Logging {
       Some(meta.get("n_rows").asLong() + batches.map(_.nRows).sum),
       appendedBatches = batches.size,
       deletedPostings = dels.map(_.nRows).getOrElse(0L))
-    idx.residentHolder.shareKey =
-      Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels))
+    idx.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels)))
     idx
   }
 
@@ -932,10 +947,11 @@ object Dedup extends Logging {
     * docs never generate candidates (a post-filter on the output would
     * verify and then discard them). No broadcast hint — AQE broadcasts a
     * small allow set. A PINNED index with a driver-sized allow-list still
-    * serves from the resident tier (r13, [[Serving.maxDriverAllowIds]]):
-    * candidate ids are filtered in the driver fold before Jaccard
-    * verification — zero jobs, same rows. Search-only: append/delete/
-    * compact take the index PATH and ignore views.
+    * serves from the base index's mirrors (r13, [[Serving.maxDriverAllowIds]]):
+    * candidate ids are filtered in the fold before Jaccard verification —
+    * zero jobs on the driver mirror, one on the partitioned tier, same
+    * rows. Search-only: append/delete/compact take the index PATH and
+    * ignore views.
     */
   def minhashFilteredView(
       index: MinHashIndex, allowed: DataFrame, idCol: String): MinHashIndex = {
@@ -946,8 +962,8 @@ object Dedup extends Logging {
       index.allowed.fold(ids)(prev =>
         ids.join(prev, Seq("__allow_id"), "left_semi"))))
     // inherit the mirror identity (see [[graft.operators.Lexical
-    // .bm25FilteredView]]) — the mirror is the unfiltered index, shared
-    v.residentHolder.shareKey = index.residentHolder.shareKey
+    // .bm25FilteredView]]) — the mirrors are the unfiltered index's, shared
+    v.shareAs(index.residentHolder.shareKey)
     v
   }
 
@@ -956,23 +972,28 @@ object Dedup extends Logging {
       jaccardThreshold: Double = 0.5): DataFrame = {
     val b = shingleSig(batch, col(idCol), col(textCol),
       index.shingleSize, index.numBands * index.rowsPerBand, index.hashFamily)
-    // serving fast path (see [[Serving]]): when the meta's postings row
-    // count fits the single-stage budget AND the batch is small enough to
-    // collect bounded, the whole search runs as one single-partition stage
-    // allow-set gating for views: consult allowedServingSet (whose first
-    // evaluation is a bounded collect job) ONLY when the RESIDENT tier
-    // could actually use it — a pinned view between the resident bound and
-    // the single-stage budget otherwise paid the collect just to have the
-    // 1-job plan branch return None anyway (review r13); pinned-ness first
-    // keeps unpinned views free of the job entirely
-    if (Serving.pinned(index.postings, index.shingles) && index.nRows.exists(_ <=
-        Serving.singleStageRows(index.postings.sparkSession)) &&
-        (index.allowed.isEmpty ||
-          (Resident.eligible(index.postings.sparkSession, index.nRows,
-            index.postings, index.shingles) && index.allowedServingSet.isDefined))) {
-      minhashSearchSingleStage(index, b, jaccardThreshold) match {
-        case Some(fast) => return fast
-        case None => // batch blew the bound — parallel plan below
+    // pinned serving (see [[Resident]]): the batch's rows are collected
+    // once, bounded, and the same fold answers on the driver mirror under
+    // the resident bound (zero jobs) or on the partitioned tier over it (one
+    // job) — spec-pinned row-identical to the plan below. Pinned-ness comes
+    // before the allow set, whose first evaluation is a collect job an
+    // unpinned view must not pay
+    if (Serving.pinned(index.postings, index.shingles) &&
+        (index.allowed.isEmpty || index.allowedServingSet.isDefined)) {
+      servingBatch(b) match {
+        case Some(rows) =>
+          val spark = index.postings.sparkSession
+          val schema = StructType(Seq(
+            StructField("corpus_id", index.postings.schema("id").dataType, nullable = true),
+            StructField("batch_id", b.schema("id").dataType, nullable = true),
+            StructField("jaccard", DoubleType, nullable = false)))
+          val allowed = index.allowedServingSet.orNull
+          return if (Resident.eligible(spark, index.nRows, index.postings, index.shingles))
+            Resident.toDf(spark, Resident.searchMinhash(index.resident, rows, index.numBands,
+              index.rowsPerBand, jaccardThreshold, allowed), schema)
+          else Resident.searchMinhashPartitioned(spark, index.partitioned, rows,
+            index.numBands, index.rowsPerBand, jaccardThreshold, allowed, schema)
+        case None => // the batch blew the bound: the plan below
       }
     }
     // distributed plan: a view's allow semi-join sits on the postings scan,
@@ -999,122 +1020,23 @@ object Dedup extends Logging {
       .select("corpus_id", "batch_id", "jaccard")
   }
 
-  /** Serving batches above this many docs take the parallel plan even under
-    * the corpus-size budget: the fast path collects the batch's shingle sets
-    * to build a driver-local band table, and that collect must stay bounded.
+  /** Serving batches above this many docs take the distributed plan even
+    * on a pinned index: the serving tiers collect the batch's shingle sets
+    * and signatures, and that collect must stay bounded.
     */
-  private val MaxSingleStageBatchDocs = 1024
+  private val MaxServingBatchDocs = 1024
 
-  /** One-single-partition-stage [[minhashSearchIndex]] plan for the serving
-    * regime (a handful of documents probed against a bounded corpus index,
-    * wall dominated by scheduler round-trips — the [[Serving]] rationale).
-    * Returns None when the batch exceeds [[MaxSingleStageBatchDocs]].
-    *
-    * Shape (each choice is load-bearing):
-    *  - the batch's `(id, shingles, signature)` rows are collected ONCE
-    *    (zero jobs when the batch folds to a LocalRelation — the common
-    *    serving case; one bounded job otherwise) and re-banded driver-side
-    *    into a LITERAL map `band -> [(batch_id, bucket, shingles)]` in the
-    *    plan itself — NOT a broadcast build side: a broadcast of even a
-    *    LocalRelation costs a real materialization job per search
-    *    (BroadcastExchangeExec collects its child via
-    *    executeCollectIterator, which LocalTableScanExec does not
-    *    override), and that job was half this fast path's wall;
-    *  - the corpus shingle arrays join below the band matching
-    *    (postings ⋈ shingles first, both single-partition cached scans with
-    *    accurate size estimates, merge-hinted — the shape EnsureRequirements'
-    *    maxSinglePartitionBytes bound accepts, SPARK-41986), and the band
-    *    match itself is a per-row map lookup + bucket-equality filter +
-    *    explode: `bucket === candidate.bucket` on the slice arrays is
-    *    ordering-based equality, exactly the equi-join's key semantics
-    *    (null signature entries compare null-to-null equal);
-    *  - candidate dedup is max-over-duplicates ABOVE the per-row Jaccard
-    *    (identical per duplicate, so max ≡ distinct-then-score), because a
-    *    single-partition aggregate elides its exchange where a distinct-
-    *    then-join could not.
-    * One result job per search; row-identical to the parallel plan
-    * (spec-pinned).
+  /** The batch's `(id, sh, sig)` rows, collected once (zero jobs when the
+    * batch folds to a LocalRelation — the common serving case; one bounded
+    * job otherwise), or None when it exceeds [[MaxServingBatchDocs]].
     */
-  private def minhashSearchSingleStage(
-      index: MinHashIndex, b: DataFrame,
-      jaccardThreshold: Double): Option[DataFrame] = {
+  private def servingBatch(b: DataFrame): Option[Array[Row]] = {
     val folded = b.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val rows =
       if (folded) b.collect()
-      else b.coalesce(1).limit(MaxSingleStageBatchDocs + 1).collect()
-    if (rows.length > MaxSingleStageBatchDocs) return None
-    // driver-resident serving (see [[Resident]]): the per-open (band,
-    // bucket) → postings mirror answers the whole search driver-side —
-    // zero Spark jobs. Candidates are the exact bucket-equality set (the
-    // plan's xxhash64 INSET is only a prefilter), Jaccard the same
-    // size(intersect)/size(union) division — spec-pinned row-identical.
-    if (Resident.eligible(index.postings.sparkSession, index.nRows,
-        index.postings, index.shingles)) {
-      import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-      val res = index.resident
-      return Some(Resident.toDf(index.postings.sparkSession,
-        Resident.searchMinhash(res, rows, index.numBands, index.rowsPerBand,
-          jaccardThreshold, allowed = index.allowedServingSet.orNull),
-        StructType(Seq(
-          StructField("corpus_id", res.corpusIdType, nullable = true),
-          StructField("batch_id", b.schema("id").dataType, nullable = true),
-          StructField("jaccard", DoubleType, nullable = false)))))
-    }
-    // the 1-job single-stage PLAN below has no allow seam — filtered views
-    // between the resident bound and the single-stage budget keep the
-    // distributed semi-join plan
-    if (index.allowed.isDefined) return None
-    val r = index.rowsPerBand
-    val localRows: Seq[org.apache.spark.sql.Row] = for {
-      row <- rows.toSeq
-      sig = row.getSeq[Any](2)
-      band <- 0 until index.numBands
-    } yield org.apache.spark.sql.Row(
-      row.get(0), band, sig.slice(band * r, band * r + r), row.getSeq[Any](1))
-    import org.apache.spark.sql.types.{ArrayType, IntegerType, MapType, StructField, StructType}
-    val entryType = StructType(Seq(
-      StructField("batch_id", b.schema("id").dataType, nullable = true),
-      StructField("bucket", b.schema("sig").dataType, nullable = true),
-      StructField("bs", b.schema("sh").dataType, nullable = true)))
-    val byBand: Map[Int, Seq[org.apache.spark.sql.Row]] = localRows
-      .groupBy(_.getInt(1))
-      .map { case (band, rs) =>
-        (band, rs.map(e => org.apache.spark.sql.Row(e.get(0), e.get(2), e.get(3))))
-      }
-    // Literal.create (not typedLit): the batch id type is dynamic
-    val bandMap = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        byBand, MapType(IntegerType, ArrayType(entryType), valueContainsNull = false)))
-    // the batch's (band, bucket) keys as a driver-computed xxhash64 INSET —
-    // the SAME Catalyst expression the plan applies per posting row (seed
-    // and all, see the bm25 bucket-hash note), so the prefilter is a fast
-    // codegen'd hash-set probe that leaves only true-and-collision rows for
-    // the exact (interpreted, per-row-lambda) bucket-equality check above
-    // the join. Without it the higher-order filter ran on every banded
-    // posting row and dominated the single task's wall.
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val keyHashes: Seq[Long] = localRows.map { e =>
-      XxHash64(Seq(
-        Literal(e.getInt(1), IntegerType),
-        Literal.create(e.get(2), b.schema("sig").dataType)), 42L)
-        .eval(null).asInstanceOf[Long]
-    }.distinct
-    val post1 = index.postings.coalesce(1)
-      .select(col("id"), col("band").cast("int").as("band"), col("bucket"))
-      .filter(xxhash64(col("band"), col("bucket")).isin(keyHashes: _*))
-    val sh1 = index.shingles.coalesce(1)
-      .select(col("id"), col("sh").as("cs"))
-    Some(post1.hint("merge").join(sh1, Seq("id"))
-      .select(col("id").as("corpus_id"), col("cs"),
-        explode(filter(try_element_at(bandMap, col("band")),
-          e => e("bucket") === col("bucket"))).as("__b"))
-      .select(col("corpus_id"), col("__b.batch_id").as("batch_id"),
-        jaccardOf(col("cs"), col("__b.bs")).as("jaccard"))
-      .filter(col("jaccard") >= jaccardThreshold)
-      .groupBy("corpus_id", "batch_id")
-      .agg(max(col("jaccard")).as("jaccard"))
-      .select("corpus_id", "batch_id", "jaccard"))
+      else b.coalesce(1).limit(MaxServingBatchDocs + 1).collect()
+    if (rows.length > MaxServingBatchDocs) None else Some(rows)
   }
 
   /** Exact n-gram benchmark contamination (the public GPT-3/Pile

@@ -196,15 +196,16 @@ object Lexical {
       new Resident.Holder[Resident.Bm25Resident]("bm25")
     private[operators] def resident: Resident.Bm25Resident =
       residentHolder.get(Resident.buildBm25(this))
-    /** The partitioned tier ([[Resident.Bm25Partitioned]]) for pinned
+    /** The partitioned tier ([[Resident.Partitioned]]) for pinned
       * indexes over the resident bound: built once per open, shared and
       * released like the driver mirror. Each term's df is attached in-plan
       * before the deal, so appended and tombstoned indexes score exactly.
       */
     @transient private[operators] val partitionedHolder =
-      new Resident.Holder[Resident.Bm25Partitioned]("bm25-partitioned")
-    private[operators] def partitioned: Resident.Bm25Partitioned =
-      partitionedHolder.get(Resident.buildBm25Partitioned(ensureDf(postings), nRows))
+      new Resident.Holder[Resident.Partitioned[Resident.Bm25Resident]]("bm25-partitioned")
+    private[operators] def partitioned: Resident.Partitioned[Resident.Bm25Resident] =
+      partitionedHolder.get(Resident.buildBm25Partitioned(ensureDf(postings),
+        Resident.partitionsFor(postings.sparkSession, nRows)))
     /** Stamps the shared-mirror identity of both tiers (see
       * [[Resident.Holder]]).
       */
@@ -320,8 +321,8 @@ object Lexical {
     // at bench scale, shuffle join on a 100 TB corpus.
     val dfc = pinned.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     // posting row count + exact doc-length sum into the meta, ONE job: the
-    // row count buys every later search a free scan-size estimate (the
-    // single-stage fast-path gate; the df join is inner on term over the
+    // row count buys every later search a free size estimate (the serving
+    // tiers' residency gate; the df join is inner on term over the
     // same rows, so counting the un-joined postings is exact), and `sum_dl`
     // is what lets an append merge `avgdl` exactly — dl is one value per
     // doc (repeated per posting), so sum the per-doc firsts; zero-token
@@ -651,11 +652,6 @@ object Lexical {
     */
   private[graft] val joinRestrictionSearches = new java.util.concurrent.atomic.AtomicLong
 
-  /** Count of searches served by the partitioned tier
-    * ([[Resident.Bm25Partitioned]]) — its sibling.
-    */
-  private[graft] val partitionedSearches = new java.util.concurrent.atomic.AtomicLong
-
   /** Search a persisted index with partition pruning: the scan is first
     * restricted to the query vocabulary's bucket set — the collected literal
     * list is bounded by the DISTINCT BUCKET count (≤ nBuckets values, never
@@ -773,7 +769,6 @@ object Lexical {
           Resident.searchBm25(index.resident, qSets, nDocs, avgdl, k, k1, b,
             useBake, allowed),
           Resident.Bm25Schema)
-      partitionedSearches.incrementAndGet()
       return Resident.searchBm25Partitioned(spark, index.partitioned, qSets,
         nDocs, avgdl, k, k1, b, useBake, allowed)
     }

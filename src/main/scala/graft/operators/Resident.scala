@@ -7,6 +7,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -44,17 +45,17 @@ import org.apache.spark.sql.types._
   * frames are pinned (a retrieval service's configuration; never on a
   * cold batch read) and (b) the meta row count fits
   * [[Resident.driverResidentRows]]. A 100 TB corpus index fails (b) and
-  * keeps the distributed partition-pruned plan untouched — except a pinned
-  * BM25 index, which serves from per-partition mirrors
-  * ([[Resident.Bm25Partitioned]]): the same fold, one job per search.
+  * is not mirrored on the driver: pinned, it serves from per-partition
+  * mirrors ([[Resident.Partitioned]]) with the same fold, one job per
+  * search; unpinned, it keeps the distributed partition-pruned plan.
   */
 object Resident {
 
-  /** Total index rows (postings / cells) tolerated in driver heap. The
-    * default matches [[Serving.DefaultSingleStageRows]]: ~131k of the
-    * widest rows these indexes store is a few tens of MB — trivially
-    * driver-resident — while anything larger should keep executor-side
-    * plans. Set to 0 to disable residency entirely.
+  /** Total index rows (postings / cells) tolerated in driver heap: ~131k
+    * of the widest rows these indexes store is a few tens of MB — trivially
+    * driver-resident — while anything larger is served from executors. Set
+    * to 0 to disable residency entirely: a pinned index then serves from
+    * the partitioned tier.
     */
   val DriverResidentRowsKey = "spark.graft.serving.driverResidentRows"
   val DefaultDriverResidentRows: Long = 1L << 17
@@ -69,7 +70,7 @@ object Resident {
     * real constraint on a long-lived server. Unset = the row bound alone
     * governs; set, an index whose PINNED frames'
     * accounted cache size exceeds the budget is declined residency and
-    * keeps its 1-job pinned plans (a [[ServingSession]] still swaps
+    * serves from the partitioned tier (a [[ServingSession]] still swaps
     * generations correctly — it just never builds the mirror, and
     * `residentBytes` reads 0). The estimate is the InMemoryRelation's
     * materialized size — known BEFORE any driver copy exists, which is the
@@ -143,12 +144,12 @@ object Resident {
   private def deregister(m: Mirror): Unit = { live.remove(m); m.release() }
 
   /** Estimated bytes of all live (built, not-yet-dropped) mirrors: the
-    * driver mirrors plus the cached blocks of the partitioned bm25 tier.
+    * driver mirrors plus the cached blocks of the partitioned tiers.
     */
   def residentBytes: Long = residentCensus.map(_._2).sum
 
   /** (kind, estimatedBytes) per live mirror. Sized outside the census lock:
-    * a `bm25-partitioned` mirror asks the block manager's status store.
+    * a `*-partitioned` mirror asks the block manager's status store.
     */
   def residentCensus: Seq[(String, Long)] = {
     val mirrors = Seq.newBuilder[(Mirror, String)]
@@ -282,6 +283,72 @@ object Resident {
     }
   }
 
+  // ------------------------------------------------------------------
+  // the partitioned tier: one mirror per partition, one job per search
+  // ------------------------------------------------------------------
+
+  /** The tier between the driver mirror and the distributed plan, for a
+    * pinned index over [[driverResidentRows]]: the index rows dealt to
+    * partitions by their document id, each partition holding the mirror of
+    * its documents, cached MEMORY_ONLY. A search is one job whose tasks run
+    * the family's driver fold over their partition, merged in one task.
+    * Each document is whole inside one partition and every selection orders
+    * by (score desc, id asc), which is total, so the rows are those of the
+    * driver fold whatever the partition count. An evicted block is rebuilt
+    * from lineage: eviction costs speed, never correctness.
+    */
+  private[operators] final class Partitioned[M <: Mirror](val parts: RDD[M]) extends Mirror {
+    /** The cached blocks as the block manager's status store reports them:
+      * no job, and 0 until the first search or prewarm materializes them.
+      */
+    def bytes: Long = parts.sparkContext.getRDDStorageInfo
+      .find(_.id == parts.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
+    override private[operators] def release(): Unit = parts.unpersist(blocking = false)
+    /** Builds and caches every partition: one job. */
+    def materialize(): Unit = { parts.count(); () }
+
+    /** One search, as a one-partition plan: `fold` runs in each partition's
+      * task over its mirror, `merge` in one task over every partition's
+      * output, so any action on the result (a count included) is one job.
+      * Counts in [[partitionedSearches]], not as a resident search.
+      */
+    private[operators] def search[T: ClassTag](spark: SparkSession, schema: StructType)(
+        fold: M => Iterator[T])(merge: Iterator[T] => Iterator[InternalRow]): DataFrame = {
+      partitionedSearches.incrementAndGet()
+      org.apache.spark.sql.graftbridge.ColumnBridge.fromSinglePartitionRows(spark,
+        parts.flatMap(fold).coalesce(1, shuffle = true).mapPartitions(merge), schema)
+    }
+  }
+
+  /** Count of searches served by a partitioned tier — the sibling of
+    * [[residentSearches]].
+    */
+  private[graft] val partitionedSearches = new java.util.concurrent.atomic.AtomicLong
+
+  /** Index rows one partition of the tier holds: an index just over the
+    * resident bound spreads over 4 partitions.
+    */
+  private val RowsPerPartition: Long = DefaultDriverResidentRows / 4
+
+  /** Partitions for `nRows` index rows: [[RowsPerPartition]] each, at least
+    * one, at most `parallelism`.
+    */
+  private[operators] def partitionsFor(spark: SparkSession, nRows: Option[Long]): Int =
+    math.max(1L, math.min((nRows.getOrElse(0L) + RowsPerPartition - 1) / RowsPerPartition,
+      math.max(spark.sparkContext.defaultParallelism, 1).toLong)).toInt
+
+  /** The tier over `rows`, keyed by document id: dealt into `nParts`
+    * partitions, one `mirror` per partition. Lazy: the first action (a
+    * search or [[Partitioned.materialize]]) deals and caches it, inside its
+    * own job.
+    */
+  private def partitioned[R: ClassTag, M <: Mirror: ClassTag](
+      rows: RDD[(Any, R)], nParts: Int, kind: String)(mirror: Iterator[R] => M): Partitioned[M] =
+    new Partitioned(rows.partitionBy(new HashPartitioner(nParts))
+      .mapPartitions(it => Iterator.single(mirror(it.map(_._2))))
+      .setName(kind)
+      .persist(StorageLevel.MEMORY_ONLY))
+
   // modeled JVM overheads for the byte estimates: 16 B object header +
   // array length word (arrays), ~32-48 B per hash-map entry / boxed key,
   // 2 B per UTF-16 char. Estimates, not measurements — good to ~20%,
@@ -409,6 +476,22 @@ object Resident {
       hasBake)
   }
 
+  /** The partitioned tier over `postings`, which carries each term's
+    * corpus-wide `df`, dealt by `doc_id` into `nParts` partitions.
+    */
+  private[operators] def buildBm25Partitioned(
+      postings: DataFrame, nParts: Int): Partitioned[Bm25Resident] = {
+    val hasBake = postings.columns.contains("contrib0")
+    val cols = Seq(col("doc_id").cast("long"), col("term"), col("tf").cast("double"),
+      col("dl").cast("double"), col("df").cast("double")) ++
+      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
+    val rows = postings.select(cols: _*).queryExecution.toRdd.map { r =>
+      (r.getLong(0): Any, Bm25Row(r.getLong(0), r.getUTF8String(1).toString, r.getDouble(2),
+        r.getDouble(3), r.getDouble(4), if (hasBake) r.getDouble(5) else 0.0))
+    }
+    partitioned(rows, nParts, "bm25-partitioned")(bm25Slices(_, hasBake))
+  }
+
   /** The BM25 fold over one mirror: same df (the slice's corpus-wide
     * count), same `contribCol` arithmetic in the same operation order, same
     * term-byte-order score fold as `MultiOrderedSumAggregate`, same
@@ -494,103 +577,40 @@ object Resident {
     out.result()
   }
 
-  // ------------------------------------------------------------------
-  // BM25, partitioned: one mirror per partition, one job per search
-  // ------------------------------------------------------------------
-
-  /** The tier between the driver mirror and the distributed plan, for a
-    * pinned index over [[driverResidentRows]]: the postings dealt to
-    * partitions by `doc_id`, each partition holding the [[Bm25Resident]] of
-    * its docs, cached MEMORY_ONLY. A search is one job whose tasks run
-    * [[foldBm25]] over their partition and return at most k rows per query,
-    * merged in one task with the same [[TopKBuffer]]. Each doc is scored
-    * whole inside one partition, and the buffer's (score desc, id asc) order
-    * is total, so the rows are those of the driver fold whatever the
-    * partition count. An evicted block is rebuilt from lineage: eviction
-    * costs speed, never correctness.
-    */
-  private[operators] final class Bm25Partitioned(val parts: RDD[Bm25Resident]) extends Mirror {
-    /** The cached blocks as the block manager's status store reports them:
-      * no job, and 0 until the first search or prewarm materializes them.
-      */
-    def bytes: Long = parts.sparkContext.getRDDStorageInfo
-      .find(_.id == parts.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
-    override private[operators] def release(): Unit = parts.unpersist(blocking = false)
-    /** Builds and caches every partition: one job. */
-    def materialize(): Unit = { parts.count(); () }
-  }
-
-  /** Posting rows one partition of the tier holds: an index just over the
-    * resident bound spreads over 4 partitions.
-    */
-  private val RowsPerPartition: Long = DefaultDriverResidentRows / 4
-
-  /** Partitions for `nRows` postings: [[RowsPerPartition]] each, at least
-    * one, at most `parallelism`.
-    */
-  private def partitionsFor(nRows: Long, parallelism: Int): Int =
-    math.max(1L, math.min((nRows + RowsPerPartition - 1) / RowsPerPartition,
-      math.max(parallelism, 1).toLong)).toInt
-
-  /** The partitioned tier over `postings`, which carries each term's
-    * corpus-wide `df`. Lazy: the first action (a search or
-    * [[Bm25Partitioned.materialize]]) deals and caches it, inside its own job.
-    */
-  private[operators] def buildBm25Partitioned(
-      postings: DataFrame, nRows: Option[Long]): Bm25Partitioned =
-    buildBm25Partitioned(postings,
-      partitionsFor(nRows.getOrElse(0L), postings.sparkSession.sparkContext.defaultParallelism))
-
-  private[operators] def buildBm25Partitioned(
-      postings: DataFrame, nParts: Int): Bm25Partitioned = {
-    val hasBake = postings.columns.contains("contrib0")
-    val cols = Seq(col("doc_id").cast("long"), col("term"), col("tf").cast("double"),
-      col("dl").cast("double"), col("df").cast("double")) ++
-      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
-    val rows = postings.select(cols: _*).queryExecution.toRdd.map { r =>
-      (r.getLong(0), Bm25Row(r.getLong(0), r.getUTF8String(1).toString, r.getDouble(2),
-        r.getDouble(3), r.getDouble(4), if (hasBake) r.getDouble(5) else 0.0))
-    }
-    val parts = rows.partitionBy(new HashPartitioner(nParts))
-      .mapPartitions(it => Iterator.single(bm25Slices(it.map(_._2), hasBake)))
-      .setName("bm25-partitioned")
-      .persist(StorageLevel.MEMORY_ONLY)
-    new Bm25Partitioned(parts)
-  }
-
-  /** [[searchBm25]] over the partitioned tier, as a one-partition plan: its
-    * tasks return at most k rows per query, merged with [[TopKBuffer]] in
-    * one task, so any action on the result (a count included) is one job.
-    * Does not count as a resident search.
+  /** [[searchBm25]] over the partitioned tier: each task folds its
+    * partition and returns at most k rows per query, which one task merges
+    * with the same [[TopKBuffer]].
     */
   private[operators] def searchBm25Partitioned(
-      spark: SparkSession, tier: Bm25Partitioned, qSets: Seq[(Long, Seq[String])],
+      spark: SparkSession, tier: Partitioned[Bm25Resident], qSets: Seq[(Long, Seq[String])],
       nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
       useBake: Boolean,
       allowed: java.util.HashSet[java.lang.Long] = null): DataFrame = {
-    val hits = tier.parts.mapPartitions { it =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      it.foreach(res => foldBm25(res, qSets, nDocs, avgdl, k, k1, b, useBake, allowed) {
-        (qid, buf) =>
-          var r = 0
-          while (r < buf.n) { out += ((qid, buf.ids(r), buf.scores(r))); r += 1 }
-      })
-      out.iterator
-    }
     val qids = qSets.map(_._1).toArray
-    val ranked = hits.coalesce(1, shuffle = true).mapPartitions { it =>
+    tier.search(spark, Bm25Schema) { res =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      foldBm25(res, qSets, nDocs, avgdl, k, k1, b, useBake, allowed) { (qid, buf) =>
+        var r = 0
+        while (r < buf.n) { out += ((qid, buf.ids(r), buf.scores(r))); r += 1 }
+      }
+      out.iterator
+    } { hits =>
       val merged = new java.util.HashMap[java.lang.Long, TopKBuffer]
-      it.foreach { case (qid, id, s) =>
+      hits.foreach { case (qid, id, s) =>
         merged.computeIfAbsent(qid, _ => new TopKBuffer(k)).insert(s, id)
       }
-      qids.iterator.flatMap { qid =>
-        val buf = merged.get(qid)
-        if (buf == null) Iterator.empty
-        else Iterator.tabulate(buf.n)(r => InternalRow(qid, (r + 1).toLong, buf.ids(r), buf.scores(r)))
-      }
+      inQueryOrder(qids, merged)((qid, buf, r) =>
+        InternalRow(qid, (r + 1).toLong, buf.ids(r), buf.scores(r)))
     }
-    org.apache.spark.sql.graftbridge.ColumnBridge.fromSinglePartitionRows(spark, ranked, Bm25Schema)
   }
+
+  /** Each query's merged rows, in query order. */
+  private def inQueryOrder(qids: Array[Long], merged: java.util.HashMap[java.lang.Long, TopKBuffer])(
+      row: (Long, TopKBuffer, Int) => InternalRow): Iterator[InternalRow] =
+    qids.iterator.flatMap { qid =>
+      val buf = merged.get(qid)
+      if (buf == null) Iterator.empty else Iterator.tabulate(buf.n)(row(qid, buf, _))
+    }
 
   private[operators] val Bm25Schema: StructType = StructType(Seq(
     StructField("query_id", LongType, nullable = false),
@@ -626,34 +646,83 @@ object Resident {
     }
   }
 
-  private[operators] def buildMinhash(index: Dedup.MinHashIndex): MinhashResident = {
+  /** One row of a MinHash mirror build, keyed by its corpus id: a banded
+    * posting or a document's shingle set.
+    */
+  private sealed trait MinhashRow extends Serializable { def id: Any }
+  private final case class MinhashPosting(id: Any, band: Int, bucket: Seq[Any]) extends MinhashRow
+  private final case class MinhashShingles(id: Any, sh: Seq[Any]) extends MinhashRow
+
+  private def minhashMirror(rows: Iterator[MinhashRow], corpusIdType: DataType): MinhashResident = {
     val byBucket =
       new java.util.HashMap[(Int, Seq[Any]), scala.collection.mutable.ArrayBuffer[Any]]
-    index.postings.select(col("id"), col("band").cast("int"), col("bucket"))
-      .collect().foreach { r =>
-        val key = (r.getInt(1), r.getSeq[Any](2))
-        byBucket.computeIfAbsent(key,
-          _ => scala.collection.mutable.ArrayBuffer.empty[Any]) += r.get(0)
-      }
     val shingles = new java.util.HashMap[Any, Set[Any]]
-    index.shingles.select(col("id"), col("sh")).collect().foreach { r =>
-      shingles.put(r.get(0), Option(r.getSeq[Any](1)).getOrElse(Seq.empty).toSet)
+    rows.foreach {
+      case MinhashPosting(id, band, bucket) =>
+        byBucket.computeIfAbsent((band, bucket),
+          _ => scala.collection.mutable.ArrayBuffer.empty[Any]) += id
+      case MinhashShingles(id, sh) => shingles.put(id, Option(sh).getOrElse(Seq.empty).toSet)
     }
-    new MinhashResident(byBucket, shingles,
-      index.postings.schema("id").dataType)
+    new MinhashResident(byBucket, shingles, corpusIdType)
   }
 
-  /** Driver-side [[Dedup.minhashSearchIndex]]: per batch band slice, exact
-    * (band, bucket) candidate lookup, per distinct (corpus, batch) pair ONE
-    * exact Jaccard (the plan computes it per colliding band and maxes —
-    * identical per duplicate, so once ≡ max), thresholded. `batchRows` are
-    * the collected `(id, sh, sig)` rows the single-stage path already holds.
+  /** The index's postings and shingle sets, each a frame and its rows. */
+  private def minhashRows(index: Dedup.MinHashIndex): Seq[(DataFrame, Row => MinhashRow)] = Seq(
+    (index.postings.select(col("id"), col("band").cast("int"), col("bucket")),
+      r => MinhashPosting(r.get(0), r.getInt(1), r.getSeq[Any](2))),
+    (index.shingles.select(col("id"), col("sh")),
+      r => MinhashShingles(r.get(0), r.getSeq[Any](1))))
+
+  private[operators] def buildMinhash(index: Dedup.MinHashIndex): MinhashResident =
+    minhashMirror(minhashRows(index).iterator.flatMap { case (frame, row) =>
+      frame.collect().iterator.map(row)
+    }, index.postings.schema("id").dataType)
+
+  /** The partitioned tier of a MinHash index: postings and shingle sets
+    * dealt by the same hash of the corpus id, so every document is whole in
+    * one partition.
     */
+  private[operators] def buildMinhashPartitioned(
+      index: Dedup.MinHashIndex, nParts: Int): Partitioned[MinhashResident] = {
+    val idType = index.postings.schema("id").dataType
+    val rows = minhashRows(index).map { case (frame, row) => frame.rdd.map(row) }
+      .reduce(_ union _).map(r => (r.id, r))
+    partitioned(rows, nParts, "minhash-partitioned")(minhashMirror(_, idType))
+  }
+
+  /** Driver-side [[Dedup.minhashSearchIndex]] ([[foldMinhash]]). */
   private[operators] def searchMinhash(
       res: MinhashResident, batchRows: Array[Row],
       numBands: Int, rowsPerBand: Int, jaccardThreshold: Double,
       allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
     residentSearches.incrementAndGet()
+    foldMinhash(res, batchRows, numBands, rowsPerBand, jaccardThreshold, allowed)
+  }
+
+  /** [[searchMinhash]] over the partitioned tier: every document is whole
+    * in one partition, so the merge is a concatenation.
+    */
+  private[operators] def searchMinhashPartitioned(
+      spark: SparkSession, tier: Partitioned[MinhashResident], batchRows: Array[Row],
+      numBands: Int, rowsPerBand: Int, jaccardThreshold: Double,
+      allowed: java.util.HashSet[java.lang.Long], schema: StructType): DataFrame =
+    tier.search(spark, schema) { res =>
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(schema)
+      foldMinhash(res, batchRows, numBands, rowsPerBand, jaccardThreshold, allowed)
+        .iterator.map(toRow(_).asInstanceOf[InternalRow])
+    }(identity)
+
+  /** The [[Dedup.minhashSearchIndex]] fold over one mirror: per batch band
+    * slice, exact (band, bucket) candidate lookup, per distinct (corpus,
+    * batch) pair ONE exact Jaccard (the plan computes it per colliding band
+    * and maxes — identical per duplicate, so once ≡ max), thresholded.
+    * `batchRows` are the batch's collected `(id, sh, sig)` rows.
+    */
+  private def foldMinhash(
+      res: MinhashResident, batchRows: Array[Row],
+      numBands: Int, rowsPerBand: Int, jaccardThreshold: Double,
+      allowed: java.util.HashSet[java.lang.Long]): Seq[Row] = {
     // Allow-set membership by corpus-id TYPE (advisor r13): minhash corpus
     // ids are generic — a string-id corpus crashed here on the old
     // `asInstanceOf[Number]` while the distributed plan's cast semi-join
@@ -673,7 +742,9 @@ object Resident {
       }
     val seen = new java.util.HashSet[(Any, Any)]
     val out = Seq.newBuilder[Row]
-    batchRows.foreach { row =>
+    // a null id, on either side, joins nothing: the plan meets the shingle
+    // sets through equi-joins on the ids
+    batchRows.iterator.filter(!_.isNullAt(0)).foreach { row =>
       val batchId = row.get(0)
       val bs = Option(row.getSeq[Any](1)).getOrElse(Seq.empty).toSet
       val sig = row.getSeq[Any](2)
@@ -684,7 +755,7 @@ object Resident {
         if (cands != null) cands.foreach { corpusId =>
           // allow-list filters candidates before Jaccard verification —
           // Jaccard has no corpus stats, so this is the semi-join, verbatim
-          if (allowContains(corpusId) && seen.add((corpusId, batchId))) {
+          if (corpusId != null && allowContains(corpusId) && seen.add((corpusId, batchId))) {
             val cs = res.shingles.get(corpusId)
             if (cs != null) {
               // size(array_intersect) / size(array_union) on distinct arrays
@@ -702,7 +773,7 @@ object Resident {
   }
 
   // ------------------------------------------------------------------
-  // ANN (float + int8)
+  // ANN (float, int8, PQ)
   // ------------------------------------------------------------------
 
   /** One cell's resident matrix; `codes`/`cn2` null on layouts without the
@@ -738,7 +809,14 @@ object Resident {
     }
   }
 
-  private[operators] def buildAnn(index: Ann.AnnIndex): AnnResident = {
+  /** One cell row of an ANN mirror build; `codes` and `pq` are null on
+    * layouts without the SQ8 / PQ bake.
+    */
+  private final case class AnnRow(id: Long, vec: Array[Double], cell: Long,
+      codes: Array[Byte], cn2: Long, pq: Array[Byte], cn: Double)
+
+  /** The index cells, as mirror rows. */
+  private def annRows(index: Ann.AnnIndex): (DataFrame, Row => AnnRow) = {
     val hasCodes = index.cells.columns.contains("codes")
     val hasPq = index.cells.columns.contains("pq")
     val cols = Seq(col("corpus_id").cast("long"), asDouble(col("cv")),
@@ -746,41 +824,45 @@ object Resident {
       (if (hasCodes) Seq(col("codes"), col("cn2").cast("long")) else Nil) ++
       (if (hasPq) Seq(col("pq"), col("cn").cast("double")) else Nil)
     val pqOff = if (hasCodes) 5 else 3
+    (index.cells.select(cols: _*), r => AnnRow(r.getLong(0), r.getSeq[Double](1).toArray,
+      r.getLong(2),
+      if (hasCodes) r.getSeq[Byte](3).toArray else null, if (hasCodes) r.getLong(4) else 0L,
+      if (hasPq) r.getSeq[Byte](pqOff).toArray else null, if (hasPq) r.getDouble(pqOff + 1) else 0.0))
+  }
+
+  private def annMirror(rows: Iterator[AnnRow]): AnnResident = {
     val grouped = new java.util.HashMap[java.lang.Long,
-      scala.collection.mutable.ArrayBuffer[Row]]
-    index.cells.select(cols: _*).collect().foreach { r =>
-      grouped.computeIfAbsent(java.lang.Long.valueOf(r.getLong(2)),
-        _ => scala.collection.mutable.ArrayBuffer.empty[Row]) += r
+      scala.collection.mutable.ArrayBuffer[AnnRow]]
+    rows.foreach { r =>
+      grouped.computeIfAbsent(java.lang.Long.valueOf(r.cell),
+        _ => scala.collection.mutable.ArrayBuffer.empty[AnnRow]) += r
     }
     val cells = new java.util.HashMap[java.lang.Long, CellMat](grouped.size() * 2)
     grouped.forEach { (cell, rs) =>
-      val n = rs.length
-      val ids = new Array[Long](n)
-      val vecs = new Array[Array[Double]](n)
-      val norms = new Array[Double](n)
-      val codes = if (hasCodes) new Array[Array[Byte]](n) else null
-      val cn2 = if (hasCodes) new Array[Long](n) else null
-      val pq = if (hasPq) new Array[Array[Byte]](n) else null
-      val cn = if (hasPq) new Array[Double](n) else null
-      var i = 0
-      while (i < n) {
-        val r = rs(i)
-        ids(i) = r.getLong(0)
-        vecs(i) = r.getSeq[Double](1).toArray
-        norms(i) = math.sqrt(VecScan.dot(vecs(i), vecs(i)))
-        if (hasCodes) {
-          codes(i) = r.getSeq[Byte](3).toArray
-          cn2(i) = r.getLong(4)
-        }
-        if (hasPq) {
-          pq(i) = r.getSeq[Byte](pqOff).toArray
-          cn(i) = r.getDouble(pqOff + 1)
-        }
-        i += 1
-      }
-      cells.put(cell, new CellMat(VecScan.Mat(ids, vecs, norms), codes, cn2, pq, cn))
+      val hasCodes = rs(0).codes != null
+      val hasPq = rs(0).pq != null
+      val vecs = rs.map(_.vec).toArray
+      cells.put(cell, new CellMat(
+        VecScan.Mat(rs.map(_.id).toArray, vecs, vecs.map(v => math.sqrt(VecScan.dot(v, v)))),
+        if (hasCodes) rs.map(_.codes).toArray else null,
+        if (hasCodes) rs.map(_.cn2).toArray else null,
+        if (hasPq) rs.map(_.pq).toArray else null,
+        if (hasPq) rs.map(_.cn).toArray else null))
     }
     new AnnResident(cells)
+  }
+
+  private[operators] def buildAnn(index: Ann.AnnIndex): AnnResident = {
+    val (frame, row) = annRows(index)
+    annMirror(frame.collect().iterator.map(row))
+  }
+
+  /** The partitioned tier of an ANN index: cells dealt by `corpus_id`. */
+  private[operators] def buildAnnPartitioned(
+      index: Ann.AnnIndex, nParts: Int): Partitioned[AnnResident] = {
+    val (frame, row) = annRows(index)
+    partitioned(frame.rdd.map { r => val a = row(r); (a.id: Any, a) }, nParts,
+      "ann-partitioned")(annMirror)
   }
 
   private[operators] val AnnSchema: StructType = StructType(Seq(
@@ -789,6 +871,24 @@ object Resident {
     StructField("score", DoubleType, nullable = false),
     StructField("rank", IntegerType, nullable = false)))
 
+  /** How an ANN search scores its probed cells, and the size of the
+    * candidate pool it keeps per query before the exact rerank.
+    */
+  private[operators] sealed trait AnnScoring extends Serializable { def pool(k: Int): Int }
+  /** Exact float cosine: the pool is the top k. */
+  private[operators] case object FloatScoring extends AnnScoring { def pool(k: Int): Int = k }
+  /** Int8 coarse scores keep k·rerankFactor candidates. */
+  private[operators] final case class Int8Scoring(rerankFactor: Int) extends AnnScoring {
+    def pool(k: Int): Int = k * rerankFactor
+  }
+  /** PQ ADC coarse scores over the codebook `flat` keep k·rerankFactor
+    * candidates.
+    */
+  private[operators] final case class PqScoring(flat: Array[Double], m: Int, ks: Int, dsub: Int,
+      rerankFactor: Int) extends AnnScoring {
+    def pool(k: Int): Int = k * rerankFactor
+  }
+
   /** Score scratch for [[VecScan.scores]] over any one cell of `res`. */
   private def cellScratch(res: AnnResident): Array[Double] = {
     var n = 0
@@ -796,160 +896,139 @@ object Resident {
     new Array[Double](n)
   }
 
-  /** Driver-side [[Ann.annSearchIndex]] scoring tail over probed cells:
-    * same dot/cosine kernels, same TopKBuffer order. `probes` is the
-    * per-query probe list from the LocalProbes assignment (driver-known).
+  /** The exact rerank: the top k of a pool by its exact-cosine payload. */
+  private def rerank(pool: TopKPayloadBuffer, k: Int): TopKBuffer = {
+    val fin = new TopKBuffer(k)
+    var i = 0
+    while (i < pool.n) { fin.insert(pool.payloads(i), pool.ids(i)); i += 1 }
+    fin
+  }
+
+  /** The ANN fold over one mirror: per query, the candidate pool of its
+    * probed cells as a [[TopKPayloadBuffer]] of `scoring.pool(k)` entries
+    * — (selection score, id) with the exact cosine as payload — handed to
+    * `emit`. The kernels are the plans': the exact scan [[VecScan.scores]]
+    * (or [[VecScan.cosine]] of [[VecScan.dot]] for an allow-listed cell),
+    * the same query quantization and int8 kernels, the same PQ lookup
+    * table, ADC, zero-norm guard and `/ (qn·cn)` normalization, and the
+    * same (score desc, id asc) selection as their top-k aggregates. An
+    * allow-list filters membership before the pool, as the plans'
+    * semi-join filters the scan. `probes` is the per-query probe list from
+    * the LocalProbes assignment (driver-known).
     */
-  private[operators] def searchAnnFloat(
-      res: AnnResident,
-      probes: Seq[(Long, Array[Double], Double, Seq[Long])], k: Int,
+  private def foldAnn(
+      res: AnnResident, probes: Seq[(Long, Array[Double], Double, Seq[Long])],
+      k: Int, scoring: AnnScoring, allowed: java.util.HashSet[java.lang.Long])(
+      emit: (Long, TopKPayloadBuffer) => Unit): Unit = {
+    val scores = cellScratch(res)
+    def exact(qv: Array[Double], qn: Double, m: CellMat, i: Int): Double =
+      if (allowed == null) scores(i) else VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
+    probes.foreach { case (qid, qv, qn, cellIds) =>
+      val pool = new TopKPayloadBuffer(scoring.pool(k))
+      val cells = cellIds.flatMap(c => Option(res.cells.get(java.lang.Long.valueOf(c))))
+      scoring match {
+        case FloatScoring | Int8Scoring(_) =>
+          val quantized = scoring match {
+            case Int8Scoring(_) => Quantize.quantizeArray(qv)
+            case _ => null
+          }
+          cells.foreach { m =>
+            // the block kernel scores a whole cell; under an allow-list only
+            // the allowed rows are scored (the same scalar form, bit for bit)
+            if (allowed == null) VecScan.scores(qv, qn, m.mat, 0, scores)
+            var i = 0
+            while (i < m.ids.length) {
+              if (allowed == null || allowed.contains(m.ids(i))) {
+                val e = exact(qv, qn, m, i)
+                if (quantized == null) pool.insert(e, m.ids(i), e)
+                else pool.insert(Quantize.cosineI8Scalar(
+                  Quantize.dotI8Array(quantized._1, m.codes(i)), quantized._2, m.cn2(i)),
+                  m.ids(i), e)
+              }
+              i += 1
+            }
+          }
+        case PqScoring(flat, pm, ks, dsub, _) =>
+          val lut = graft.functions.PqKernels.lutArray(qv, flat, pm, ks, dsub)
+          cells.foreach { mt =>
+            if (mt.pq != null) {
+              var i = 0
+              while (i < mt.ids.length) {
+                if (allowed == null || allowed.contains(mt.ids(i))) {
+                  val s =
+                    if (qn == 0.0 || mt.cn(i) == 0.0) 0.0
+                    else graft.functions.PqKernels.adcArray(mt.pq(i), lut, pm, ks) /
+                      (qn * mt.cn(i))
+                  pool.insert(s, mt.ids(i), 0.0)
+                }
+                i += 1
+              }
+            }
+          }
+          // the exact cosine of only the pool's candidates: one more pass
+          // over the probed cells
+          val slot = new java.util.HashMap[java.lang.Long, Integer](pool.n * 2)
+          var j = 0
+          while (j < pool.n) { slot.put(pool.ids(j), j); j += 1 }
+          cells.foreach { mt =>
+            var i = 0
+            while (i < mt.ids.length) {
+              val at = slot.get(mt.ids(i))
+              if (at != null)
+                pool.payloads(at) = VecScan.cosine(VecScan.dot(qv, mt.vecs(i)), qn, mt.norms(i))
+              i += 1
+            }
+          }
+      }
+      emit(qid, pool)
+    }
+  }
+
+  /** Driver-side [[Ann.annSearchIndex]], [[Ann.annSearchIndexInt8]] and
+    * [[Ann.annSearchIndexPq]] ([[foldAnn]], then the exact rerank).
+    */
+  private[operators] def searchAnn(
+      res: AnnResident, probes: Seq[(Long, Array[Double], Double, Seq[Long])],
+      k: Int, scoring: AnnScoring,
       allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
     residentSearches.incrementAndGet()
     val out = Seq.newBuilder[Row]
-    val scores = cellScratch(res)
-    probes.foreach { case (qid, qv, qn, cellIds) =>
-      val buf = new TopKBuffer(k)
-      cellIds.foreach { c =>
-        val m = res.cells.get(java.lang.Long.valueOf(c))
-        if (m != null) {
-          // the block kernel scores a whole cell; under an allow-list only
-          // the allowed rows are scored (the same scalar form, bit for bit)
-          if (allowed == null) VecScan.scores(qv, qn, m.mat, 0, scores)
-          var i = 0
-          while (i < m.ids.length) {
-            // allow-list = the semi-join: disallowed ids never enter top-k
-            if (allowed == null) buf.insert(scores(i), m.ids(i))
-            else if (allowed.contains(m.ids(i)))
-              buf.insert(VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i)), m.ids(i))
-            i += 1
-          }
-        }
-      }
+    foldAnn(res, probes, k, scoring, allowed) { (qid, pool) =>
+      val fin = rerank(pool, k)
       var r = 0
-      while (r < buf.n) {
-        out += Row(qid, buf.ids(r), buf.scores(r), r + 1)
-        r += 1
-      }
+      while (r < fin.n) { out += Row(qid, fin.ids(r), fin.scores(r), r + 1); r += 1 }
     }
     out.result()
   }
 
-  /** Driver-side [[Ann.annSearchIndexInt8]]: same query quantization, same
-    * int8 coarse kernels, same fused coarse-select → exact-rerank buffer
-    * chain ([[TopKPayloadBuffer]] keeping k·rerankFactor by coarse score
-    * with the exact score as payload, then [[TopKBuffer]] on the payload).
+  /** [[searchAnn]] over the partitioned tier: each task emits its
+    * partition's pool per query, and one task re-selects the pools with the
+    * same [[TopKPayloadBuffer]] before the exact rerank. The global pool is
+    * the best of the partitions' pools, so the rows are the driver fold's.
     */
-  private[operators] def searchAnnInt8(
-      res: AnnResident,
+  private[operators] def searchAnnPartitioned(
+      spark: SparkSession, tier: Partitioned[AnnResident],
       probes: Seq[(Long, Array[Double], Double, Seq[Long])],
-      k: Int, rerankFactor: Int,
-      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
-    residentSearches.incrementAndGet()
-    val out = Seq.newBuilder[Row]
-    val scores = cellScratch(res)
-    probes.foreach { case (qid, qv, qn, cellIds) =>
-      val (qCodes, qn2) = Quantize.quantizeArray(qv)
-      val pool = new TopKPayloadBuffer(k * rerankFactor)
-      cellIds.foreach { c =>
-        val m = res.cells.get(java.lang.Long.valueOf(c))
-        if (m != null) {
-          // exact scores as in searchAnnFloat: the whole cell, or the
-          // allowed rows only
-          if (allowed == null) VecScan.scores(qv, qn, m.mat, 0, scores)
-          var i = 0
-          while (i < m.ids.length) {
-            // filter BEFORE the coarse pool — the distributed plan's allow
-            // semi-join sits on the coarse scan, so the candidate pools match
-            if (allowed == null || allowed.contains(m.ids(i))) {
-              val coarse = Quantize.cosineI8Scalar(
-                Quantize.dotI8Array(qCodes, m.codes(i)), qn2, m.cn2(i))
-              val exact =
-                if (allowed == null) scores(i)
-                else VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
-              pool.insert(coarse, m.ids(i), exact)
-            }
-            i += 1
-          }
-        }
+      k: Int, scoring: AnnScoring,
+      allowed: java.util.HashSet[java.lang.Long] = null): DataFrame = {
+    val qids = probes.map(_._1).toArray
+    val poolK = scoring.pool(k)
+    tier.search(spark, AnnSchema) { res =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long, Double)]
+      foldAnn(res, probes, k, scoring, allowed) { (qid, pool) =>
+        var i = 0
+        while (i < pool.n) { out += ((qid, pool.scores(i), pool.ids(i), pool.payloads(i))); i += 1 }
       }
-      val fin = new TopKBuffer(k)
-      var i = 0
-      while (i < pool.n) { fin.insert(pool.payloads(i), pool.ids(i)); i += 1 }
-      var r = 0
-      while (r < fin.n) {
-        out += Row(qid, fin.ids(r), fin.scores(r), r + 1)
-        r += 1
+      out.iterator
+    } { hits =>
+      val pools = new java.util.HashMap[java.lang.Long, TopKPayloadBuffer]
+      hits.foreach { case (qid, s, id, p) =>
+        pools.computeIfAbsent(qid, _ => new TopKPayloadBuffer(poolK)).insert(s, id, p)
       }
+      val merged = new java.util.HashMap[java.lang.Long, TopKBuffer]
+      pools.forEach((qid, pool) => { merged.put(qid, rerank(pool, k)); () })
+      inQueryOrder(qids, merged)((qid, buf, r) => InternalRow(qid, buf.ids(r), buf.scores(r), r + 1))
     }
-    out.result()
-  }
-
-  /** Driver-side [[Ann.annSearchIndexPq]] (judge r11 #3 — the one
-    * persisted-index search that still paid the 1-job path): per query the
-    * SAME [[graft.functions.PqKernels.lutArray]] table the plan's
-    * expression builds, ADC over the baked m-byte codes with the plan's
-    * zero-norm guard and `/ (qn·cn)` normalization, coarse selection into
-    * a `k·rerankFactor` [[TopKBuffer]] (the plan's topK aggregate runs the
-    * same buffer), then the exact-cosine rerank of only those candidates
-    * against the resident double vectors — same dot/cosine kernels, same
-    * final [[TopKBuffer]]. Bit parity by kernel reuse, pinned by
-    * `q_resident_parity`'s pq leg and ResidentSpec.
-    */
-  private[operators] def searchAnnPq(
-      res: AnnResident,
-      probes: Seq[(Long, Array[Double], Double, Seq[Long])],
-      flat: Array[Double], m: Int, ks: Int, dsub: Int,
-      k: Int, rerankFactor: Int,
-      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
-    residentSearches.incrementAndGet()
-    val out = Seq.newBuilder[Row]
-    probes.foreach { case (qid, qv, qn, cellIds) =>
-      val lut = graft.functions.PqKernels.lutArray(qv, flat, m, ks, dsub)
-      val coarse = new TopKBuffer(k * rerankFactor)
-      cellIds.foreach { c =>
-        val mt = res.cells.get(java.lang.Long.valueOf(c))
-        if (mt != null && mt.pq != null) {
-          var i = 0
-          while (i < mt.ids.length) {
-            // filter at the ADC coarse pass — mirrors the distributed
-            // plan's semi-joined coarse scan
-            if (allowed == null || allowed.contains(mt.ids(i))) {
-              val s =
-                if (qn == 0.0 || mt.cn(i) == 0.0) 0.0
-                else graft.functions.PqKernels.adcArray(mt.pq(i), lut, m, ks) /
-                  (qn * mt.cn(i))
-              coarse.insert(s, mt.ids(i))
-            }
-            i += 1
-          }
-        }
-      }
-      // exact rerank of only the coarse candidates: one more pass over the
-      // probed cells, scoring the ≤ k·rerankFactor ids the buffer kept
-      val cand = new java.util.HashSet[java.lang.Long](coarse.n * 2)
-      var ci = 0
-      while (ci < coarse.n) { cand.add(java.lang.Long.valueOf(coarse.ids(ci))); ci += 1 }
-      val fin = new TopKBuffer(k)
-      cellIds.foreach { c =>
-        val mt = res.cells.get(java.lang.Long.valueOf(c))
-        if (mt != null) {
-          var i = 0
-          while (i < mt.ids.length) {
-            if (cand.contains(java.lang.Long.valueOf(mt.ids(i))))
-              fin.insert(
-                VecScan.cosine(VecScan.dot(qv, mt.vecs(i)), qn, mt.norms(i)),
-                mt.ids(i))
-            i += 1
-          }
-        }
-      }
-      var r = 0
-      while (r < fin.n) {
-        out += Row(qid, fin.ids(r), fin.scores(r), r + 1)
-        r += 1
-      }
-    }
-    out.result()
   }
 
   /** LocalRelation result frame: `collect()` on it is a zero-job driver

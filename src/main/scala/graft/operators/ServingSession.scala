@@ -41,9 +41,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * marker listing is one filesystem metadata call per `checkIntervalMs`
   * (default: every search — right for a local/HDFS root; set a TTL on
   * object stores where LIST costs real latency). Indexes above the
-  * residency bound still swap correctly: bm25 serves from the partitioned
-  * tier (one job per search, built at swap time), ann and minhash through
-  * the pinned distributed plans.
+  * residency bound swap the same way: they serve from the partitioned tier
+  * ([[Resident.Partitioned]], one job per search, built at swap time).
   */
 final class ServingSession[I] private[operators] (
     spark: SparkSession,
@@ -71,8 +70,8 @@ final class ServingSession[I] private[operators] (
   private def pinKey(gen: Int, idx: I): String =
     holders(idx).head.shareKey.getOrElse(IndexMaintenance.genPath(root, gen))
 
-  /** Drops every mirror `idx` holds (the driver mirror and, for bm25, the
-    * partitioned tier); shared slots refcount their own.
+  /** Drops every mirror `idx` holds (the driver mirror and the partitioned
+    * tier); shared slots refcount their own.
     */
   private def drop(idx: I): Unit = holders(idx).foreach(_.drop())
 
@@ -251,7 +250,7 @@ final class ServingSession[I] private[operators] (
 
   /** Estimated heap bytes of the CURRENT generation's driver mirror —
     * 0 before the mirror exists (above-bound or unpinned indexes never
-    * build one; a bm25 partitioned tier is executor-held and shows in
+    * build one; a partitioned tier is executor-held and shows in
     * [[Resident.residentCensus]] instead) and 0 again after [[close]].
     */
   def residentBytes: Long =
@@ -330,8 +329,9 @@ object ServingSession {
     * every [[ServingSession.resolved]] call; `asyncSwap` moves the
     * open+pin+prewarm of a new generation off the search path entirely.
     * Prewarm builds the driver mirror under the resident bound and the
-    * partitioned tier ([[Resident.Bm25Partitioned]]) over it, so the swap
-    * pays for either and every search is zero jobs or one.
+    * partitioned tier ([[Resident.Partitioned]]) over it, so the swap pays
+    * for either and every search is zero jobs or one; the ann and minhash
+    * sessions do the same.
     */
   def bm25(spark: SparkSession, root: String,
       checkIntervalMs: Long = 0L,
@@ -354,10 +354,11 @@ object ServingSession {
       asyncSwap: Boolean = false): ServingSession[Ann.AnnIndex] =
     new ServingSession[Ann.AnnIndex](
       spark, root, p => Ann.annOpenIndex(spark, p),
-      i => Seq(i.cells), i => Seq(i.residentHolder),
+      i => Seq(i.cells), i => Seq(i.residentHolder, i.partitionedHolder),
       i => {
         i.centroidMat
         if (Resident.eligible(spark, i.nRows, i.cells)) i.resident
+        else i.partitioned.materialize()
       },
       checkIntervalMs, asyncSwap)
 
@@ -369,7 +370,8 @@ object ServingSession {
       asyncSwap: Boolean = false): ServingSession[Dedup.MinHashIndex] =
     new ServingSession[Dedup.MinHashIndex](
       spark, root, p => Dedup.minhashOpenIndex(spark, p),
-      i => Seq(i.postings, i.shingles), i => Seq(i.residentHolder),
-      i => if (Resident.eligible(spark, i.nRows, i.postings, i.shingles)) i.resident,
+      i => Seq(i.postings, i.shingles), i => Seq(i.residentHolder, i.partitionedHolder),
+      i => if (Resident.eligible(spark, i.nRows, i.postings, i.shingles)) i.resident
+        else i.partitioned.materialize(),
       checkIntervalMs, asyncSwap)
 }

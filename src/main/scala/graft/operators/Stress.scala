@@ -454,9 +454,10 @@ object Stress {
     * keep-first must collapse the replica near-dup cliques at m·|slice|
     * rows before the corpus search and the three appends run. Summary: one
     * row per epoch with the batch/survivor census, the growing MinHash
-    * union fan-in, committed batch counts on all three indexes, and the
-    * Spark JOB count the epoch cost (read after the listener bus has
-    * drained, see [[graft.Instrument]]). Value semantics are gated by the
+    * union fan-in, committed batch counts on all three indexes, the Spark
+    * JOB count the epoch cost (read after the listener bus has drained, see
+    * [[graft.Instrument]]) and, managed, the generations the maintenance
+    * pass committed. Value semantics are gated by the
     * hash-green 1x ingest legs (q_stream_ingest, q_stream_ingest_bm25,
     * q_stream_ingest_ann). The census makes the append-accumulation cost
     * OBSERVABLE: jobs/epoch grows ~+5 with every committed batch (each
@@ -522,24 +523,24 @@ object Stress {
           ann = Some((cur(annRoot), embedder)))
         val nSurv = survivors.count()
         val jobs = instrument.settle().jobs - j0
-        // managed: run the maintenance pass, its jobs accounted SEPARATELY
-        // from the ingest jobs — the claim is that paying maintenance
-        // flattens the per-epoch INGEST cost, so the two must not blur
-        val maintJobs = policy.map { pol =>
-          val m0 = instrument.settle().jobs
+        // managed: run the maintenance pass after the ingest jobs were read
+        // — the claim is that paying maintenance flattens the per-epoch
+        // INGEST cost. Its census is the generations it committed across
+        // the three roots: its job count depends on the core count
+        val maintGens = policy.map { pol =>
           IndexMaintenance.maintainIndexes(spark, minhashRoot = Some(mhRoot),
             bm25Root = Some(bmRoot), annRoot = Some(annRoot), policy = pol)
-          instrument.settle().jobs - m0
+            .map(ev => (ev.genAfter - ev.genBefore).toLong).sum
         }.getOrElse(0L)
         (e, nBatch, nSurv,
           Dedup.minhashOpenIndex(spark, cur(mhRoot)).unionFanIn,
           IndexLayout.committedBatchIds(fs, cur(bmRoot)).size,
           IndexLayout.committedBatchIds(fs, cur(annRoot)).size,
-          jobs, maintJobs)
+          jobs, maintGens)
       }
     } finally instrument.close()
     rows.toDF("epoch", "n_batch", "n_survivors", "minhash_fan_in",
-      "bm25_batches", "ann_batches", "jobs", "maint_jobs")
+      "bm25_batches", "ann_batches", "jobs", "maint_generations")
       .orderBy(col("epoch"))
   }
 }

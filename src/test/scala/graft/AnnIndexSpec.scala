@@ -86,51 +86,43 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(!phys.toLowerCase.contains("cartesianproduct"), phys)
   }
 
-  test("serving fast path: meta carries n_rows; small searches run shuffle-free and row-identical") {
+  test("pinned tiers: meta carries n_rows; the partitioned tier and the driver mirror are row-identical to the unpinned plan") {
+    import graft.operators.Resident
     assert(index.nRows.contains(300L))
     val q = emb(300).filter(col("vec_id") < 10)
-    // the fast path requires the index to be PINNED (the serving regime);
-    // before pinning, the same under-budget search keeps the parallel plan
+    // the serving tiers require the index to be PINNED; before pinning, the
+    // same search keeps the parallel plan, the reference
     val cold = Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 2)
     assert(cold.queryExecution.executedPlan.toString.contains("Exchange"),
       "cold (unpinned) search must keep the parallel plan")
+    val coldRows = sortedRows(cold)
+    val cold8Rows = sortedRows(
+      Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 2))
+    assert(coldRows.nonEmpty && cold8Rows.nonEmpty)
     index.cells.persist(); index.cells.count()
-    // this test pins the single-stage PLAN tier's shape: disable the r11
-    // driver-resident tier (which would answer from driver memory with a
-    // LocalTableScan — its own contract is ResidentSpec's)
-    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
-    try {
-      val fast = Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 2)
-      // under the scan budget the whole scoring chain is one single-partition
-      // stage: no shuffle exchange anywhere in the executed plan
-      assert(!fast.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
-        fast.queryExecution.executedPlan.toString.linesIterator.take(25).mkString("\n"))
-      val fastRows = sortedRows(fast)
-      // forcing the budget to zero restores the parallel (shuffled) plan —
-      // results identical (the top-k aggregate is partition-order-invariant)
-      spark.conf.set(graft.operators.Serving.SingleStageRowsKey, "0")
-      try {
-        val par = Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 2)
-        assert(par.queryExecution.executedPlan.toString.contains("Exchange"))
-        assert(sortedRows(par) === fastRows)
-      } finally spark.conf.unset(graft.operators.Serving.SingleStageRowsKey)
-      assert(sortedRows(cold) === fastRows)
-      assert(fastRows.nonEmpty)
-      // int8 literal-map fast path: shuffle-free and row-identical to its
-      // parallel form under the same pin
-      val fast8 = Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 2)
-      assert(!fast8.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"))
-      val fast8Rows = sortedRows(fast8)
-      spark.conf.set(graft.operators.Serving.SingleStageRowsKey, "0")
-      try {
-        val par8 = Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 2)
-        assert(sortedRows(par8) === fast8Rows)
-      } finally spark.conf.unset(graft.operators.Serving.SingleStageRowsKey)
-      assert(fast8Rows.nonEmpty)
-    } finally {
-      spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
-      index.cells.unpersist()
+    /** Rows of `search` through the partitioned tier (the resident bound at
+      * 0) and through the driver mirror, each checked to have served it.
+      */
+    def tiers(search: => DataFrame): (Seq[(Long, Long, Double, Int)], Seq[(Long, Long, Double, Int)]) = {
+      val p0 = Resident.partitionedSearches.get()
+      spark.conf.set(Resident.DriverResidentRowsKey, "0")
+      val viaTier = try sortedRows(search)
+        finally spark.conf.unset(Resident.DriverResidentRowsKey)
+      assert(Resident.partitionedSearches.get() == p0 + 1, "the partitioned tier must serve")
+      val r0 = Resident.residentSearches.get()
+      val viaMirror = sortedRows(search)
+      assert(Resident.residentSearches.get() == r0 + 1, "the driver mirror must serve")
+      (viaTier, viaMirror)
     }
+    try {
+      val (tier, mirror) = tiers(Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 2))
+      assert(tier === coldRows)
+      assert(mirror === coldRows)
+      val (tier8, mirror8) =
+        tiers(Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 2))
+      assert(tier8 === cold8Rows)
+      assert(mirror8 === cold8Rows)
+    } finally index.cells.unpersist()
   }
 
   test("append: an empty batch is a committed no-op — no batch dir, open stays healthy") {

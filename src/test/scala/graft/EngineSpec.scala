@@ -758,32 +758,33 @@ class EngineSpec extends AnyFunSuite {
     val idx = Ann.annOpenIndex(spark, dir)
     assert(idx.cells.columns.contains("codes") && idx.cells.columns.contains("cn2"))
     // rerank pool big enough to cover every probed-cell candidate -> the
-    // exact rerank reproduces the double search bit-for-bit. The serving
-    // fast path additionally requires the index PINNED (r10 regime split)
-    idx.cells.persist(); idx.cells.count()
-    // pinning the single-stage PLAN shape: keep the r11 driver-resident
-    // tier out of the way (bit-parity of that tier is ResidentSpec's job)
-    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
-    val viaSq8 = Ann.annSearchIndexInt8(idx, q, "vec_id", "embedding",
-      k = 5, nProbe = 4, rerankFactor = 50)
-    val viaDouble = Ann.annSearchIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)
+    // exact rerank reproduces the double search bit-for-bit, on the
+    // partitioned tier (pinned, resident bound 0), on the driver mirror
+    // (pinned) and on the plan (unpinned, below)
     def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
       .map(r => (r.getAs[Long]("left_id"), r.getAs[Long]("right_id"),
         java.lang.Double.doubleToLongBits(r.getAs[Double]("score")),
         r.getAs[Int]("rank"))).sortBy(x => (x._1, x._4)).toSeq
-    assert(rows(viaSq8) == rows(viaDouble))
-    // regime split (serving-jobs fix, r10): the single-stage serving path
-    // reads codes AND cv in ONE wide scan (payload top-k rerank, no second
-    // pass), so its plan has no rerank join at all; the DISTRIBUTED regime
-    // keeps the two-pass shape whose coarse scan must stay narrow — codes
-    // without the 8-byte cv column (the 8x IO property)
-    val servingPlan = viaSq8.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(servingPlan.contains("graft_top_k_payload"), servingPlan)
-    spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+    def both(): (Seq[(Long, Long, Long, Int)], Seq[(Long, Long, Long, Int)]) = (
+      rows(Ann.annSearchIndexInt8(idx, q, "vec_id", "embedding",
+        k = 5, nProbe = 4, rerankFactor = 50)),
+      rows(Ann.annSearchIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)))
+    idx.cells.persist(); idx.cells.count()
+    val p0 = graft.operators.Resident.partitionedSearches.get()
+    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
+    val (tierSq8, tierDouble) = try both()
+      finally spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+    assert(graft.operators.Resident.partitionedSearches.get() == p0 + 2)
+    assert(tierSq8 == tierDouble)
+    val r0 = graft.operators.Resident.residentSearches.get()
+    val (mirrorSq8, mirrorDouble) = both()
+    assert(graft.operators.Resident.residentSearches.get() == r0 + 2)
+    assert(mirrorSq8 == tierSq8 && mirrorDouble == tierDouble)
     // unpin before the distributed-regime check: the narrow-coarse-scan
     // property is a PARQUET ReadSchema property, invisible through a cache
     idx.cells.unpersist()
+    val viaDouble = Ann.annSearchIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)
+    assert(rows(viaDouble) == tierDouble)
     val viaSq8Dist = Ann.annSearchIndexInt8(idx, q, "vec_id", "embedding",
       k = 5, nProbe = 4, rerankFactor = 50, maxProbeRowsOverride = 1L)
     // both regimes are row- and bit-identical
@@ -1430,7 +1431,7 @@ class EngineSpec extends AnyFunSuite {
     assert(recommitted.postings.count() == appendedPostings)
   }
 
-  test("minhash serving fast path: row-identical to the parallel plan, shuffle-free, nRows meta sums appends") {
+  test("minhash pinned tiers: the partitioned tier and the driver mirror are row-identical to the unpinned plan; over-bound batches fall back; nRows meta sums appends") {
     import spark.implicits._
     val docs = ((0L until 30L).map { i =>
       val base = i / 3
@@ -1443,26 +1444,28 @@ class EngineSpec extends AnyFunSuite {
     // meta records the postings row count; appends sum their own counts in
     assert(idx.nRows.contains(idx.postings.count()))
     val batch = docs.filter(col("id") % 3 === 0)
-    // the fast path requires the index PINNED (serving regime): cold, the
-    // same search keeps the parallel plan
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // the serving tiers require the index PINNED: cold, the same search
+    // keeps the parallel plan, the reference
     val cold = Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5)
     assert(cold.queryExecution.executedPlan.toString.contains("Exchange"),
       "cold (unpinned) search must keep the parallel plan")
+    val coldRows = pairs(cold)
+    assert(coldRows.nonEmpty, "fixture must produce matches")
     idx.postings.persist(); idx.postings.count()
     idx.shingles.persist(); idx.shingles.count()
-    // tiny corpus → pinned + under the single-stage budget → fast path
-    val fast = Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5)
-    val fastRows = fast.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(!fast.queryExecution.executedPlan.toString.contains("ShuffleExchange"),
-      "fast path must not shuffle")
-    // force the parallel plan via the serving conf; rows must be identical
-    spark.conf.set(graft.operators.Serving.SingleStageRowsKey, "0")
-    val slowRows = try {
-      Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    } finally spark.conf.unset(graft.operators.Serving.SingleStageRowsKey)
-    assert(fastRows == slowRows)
-    assert(fastRows.nonEmpty, "fixture must produce matches")
+    val p0 = graft.operators.Resident.partitionedSearches.get()
+    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
+    val tierRows = try {
+      pairs(Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5))
+    } finally spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+    assert(graft.operators.Resident.partitionedSearches.get() == p0 + 1)
+    val r0 = graft.operators.Resident.residentSearches.get()
+    val fastRows = pairs(Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5))
+    assert(graft.operators.Resident.residentSearches.get() == r0 + 1)
+    assert(tierRows == coldRows)
+    assert(fastRows == coldRows)
     // an over-bound batch falls back to the parallel plan and still answers
     val big = (0L until 1030L).map(i => (i + 1000L, s"filler tokens row $i payload"))
       .toDF("id", "text")

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The partitioned bm25 tier ([[Resident.Bm25Partitioned]]): a pinned index
-  * over the resident bound serves from per-partition mirrors in one Spark
-  * job per search. Its rows must be bit-identical (scores compared by bit
-  * pattern) to the distributed plan of the same files opened unpinned, which
-  * stays the reference, and to `bm25TopK`, at any partition count. The
-  * specs live in `graft.operators` to reach the tier's holder and its build.
+/** The partitioned tier ([[Resident.Partitioned]]): a pinned bm25, ANN
+  * (float, int8, PQ) or MinHash index over the resident bound serves from
+  * per-partition mirrors in one Spark job per search. Its rows must be
+  * bit-identical (scores compared by bit pattern) to the distributed plan of
+  * the same files opened unpinned, which stays the reference, and to the
+  * driver mirror (and, for bm25, to `bm25TopK`), at any partition count. The
+  * specs live in `graft.operators` to reach the tiers' holders and builds.
   */
 class PartitionedTierSpec extends AnyFunSuite {
 
@@ -70,13 +71,16 @@ class PartitionedTierSpec extends AnyFunSuite {
   private def search(idx: Lexical.Bm25Index, k1: Double = 1.2, b: Double = 0.75): DataFrame =
     Lexical.bm25SearchIndex(idx, queries, "id", "text", 5, k1, b)
 
-  /** Rows of `f`, with the partitioned and resident searches it ran. */
-  private def counted(f: => DataFrame): (Set[String], Long, Long) = {
-    val p0 = Lexical.partitionedSearches.get()
+  /** `f`'s value, with the partitioned and resident searches it ran. */
+  private def tally[A](f: => A): (A, Long, Long) = {
+    val p0 = Resident.partitionedSearches.get()
     val r0 = Resident.residentSearches.get()
-    val rows = bits(f)
-    (rows, Lexical.partitionedSearches.get() - p0, Resident.residentSearches.get() - r0)
+    val a = f
+    (a, Resident.partitionedSearches.get() - p0, Resident.residentSearches.get() - r0)
   }
+
+  /** Rows of `f`, with the partitioned and resident searches it ran. */
+  private def counted(f: => DataFrame): (Set[String], Long, Long) = tally(bits(f))
 
   test("rows bit-equal to the unpinned plan and bm25TopK: baked, non-default params, appended, tombstoned; the driver mirror too") {
     overBound {
@@ -251,6 +255,297 @@ class PartitionedTierSpec extends AnyFunSuite {
       assert(tiers == tiers0)
       assert(census.size == census0)
       assert(!Resident.sharedCensus.exists(_._1.contains(root)))
+    }
+  }
+
+  // ------------------------------------------------------------------
+  // ANN (float, int8, PQ) and MinHash
+  // ------------------------------------------------------------------
+
+  private def vecDf(rows: Seq[(Long, Seq[Double])]): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map { case (i, v) => org.apache.spark.sql.Row(i, v) }: _*),
+      StructType(Seq(StructField("vec_id", LongType, nullable = false),
+        StructField("embedding", ArrayType(DoubleType, containsNull = false), nullable = false))))
+  }
+
+  private def vecs(n: Int, from: Int = 0): Seq[(Long, Seq[Double])] =
+    (from until from + n).map(i => (i.toLong, (0 until 8).map(d => math.sin(i * 13 + d * 7))))
+
+  /** One direction shared by the tied vectors and the tie query. */
+  private val tieVec: Seq[Double] = (0 until 8).map(d => math.cos(d * 1.0))
+
+  /** `n` identical vectors: equal scores on any query, ranked by id. */
+  private def tieVecs(n: Int, from: Int): Seq[(Long, Seq[Double])] =
+    (from until from + n).map(i => (i.toLong, tieVec))
+
+  /** Six probe queries and the tie query (id 99); a LocalRelation, the
+    * serving shape.
+    */
+  private lazy val annQueries: DataFrame = vecDf(vecs(6, from = 900) :+ ((99L, tieVec)))
+
+  /** Float, int8 and PQ rows of one search each through `idx`. */
+  private def annSearches(idx: Ann.AnnIndex): Seq[Set[String]] = Seq(
+    bits(Ann.annSearchIndex(idx, annQueries, "vec_id", "embedding", k = 5, nProbe = 2)),
+    bits(Ann.annSearchIndexInt8(idx, annQueries, "vec_id", "embedding", k = 5, nProbe = 2,
+      rerankFactor = 2)),
+    bits(Ann.annSearchIndexPq(idx, annQueries, "vec_id", "embedding", k = 5, nProbe = 2,
+      rerankFactor = 2)))
+
+  private def pinnedAnn(dir: String): Ann.AnnIndex = {
+    val idx = Ann.annOpenIndex(spark, dir)
+    idx.cells.persist(); idx.cells.count()
+    idx
+  }
+
+  /** `idx`'s searches through a tier of `parts` partitions, and through the
+    * driver mirror.
+    */
+  private def annTiers(idx: Ann.AnnIndex, parts: Seq[Int]): (Seq[Seq[Set[String]]], Seq[Set[String]]) = {
+    val viaTiers = parts.map { n =>
+      val tiered = idx.copy() // fresh holders with no share key: one tier per copy
+      tiered.partitionedHolder.get(Resident.buildAnnPartitioned(tiered, n))
+      assert(tiered.partitioned.parts.getNumPartitions == n)
+      val (got, p, r) = tally(annSearches(tiered))
+      assert(p == 3 && r == 0, s"$n partitions: the partitioned tier must serve all three")
+      tiered.partitionedHolder.drop()
+      got
+    }
+    spark.conf.unset(Resident.DriverResidentRowsKey)
+    val mirror = idx.copy()
+    val (viaMirror, p, r) =
+      try tally(annSearches(mirror))
+      finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
+    assert(p == 0 && r == 3, "the driver mirror must serve all three")
+    mirror.residentHolder.drop()
+    (viaTiers, viaMirror)
+  }
+
+  test("ann float, int8 and PQ: rows bit-equal to the unpinned plan and the driver mirror at 1, 3 and defaultParallelism partitions; ties at rank k, a filtered view, appended and tombstoned") {
+    overBound {
+      val n = spark.sparkContext.defaultParallelism
+      val parts = Seq(1, 3, n)
+      val dir = java.nio.file.Files.createTempDirectory("graft_partitioned_ann").toString
+      val (cells, cents) = Ann.annBuildIndex(vecDf(vecs(300) ++ tieVecs(20, from = 500)),
+        "vec_id", "embedding", nCentroids = 6)
+      Ann.annWriteIndex(cells, cents, dir, pqM = 4)
+      // the tied vectors land in more than one partition of the n-way deal
+      val hp = new org.apache.spark.HashPartitioner(n)
+      assert((500L until 520L).map(hp.getPartition).distinct.size > 1)
+      val allow = vecDf(vecs(320)).select(col("vec_id")).filter(col("vec_id") % 2 === 0)
+      def check(label: String, withView: Boolean): Seq[Set[String]] = {
+        // references before any pin: the cache manager matches frames by plan
+        val cold = Ann.annOpenIndex(spark, dir)
+        val (plan, p0, r0) = tally(annSearches(cold))
+        assert(p0 == 0 && r0 == 0, s"$label: the reference must run the plan")
+        assert(plan.forall(_.nonEmpty))
+        val viewPlan =
+          if (withView) Some(annSearches(Ann.annFilteredView(cold, allow, "vec_id"))) else None
+        val live = pinnedAnn(dir)
+        try {
+          val (tiers, mirror) = annTiers(live, parts)
+          tiers.zip(parts).foreach { case (got, p) =>
+            assert(got == plan, s"$label: $p partitions diverged from the plan")
+          }
+          assert(mirror == plan, s"$label: the driver mirror diverged from the plan")
+          viewPlan.foreach { vp =>
+            assert(vp != plan && vp.forall(_.nonEmpty))
+            val (vTiers, vMirror) = annTiers(Ann.annFilteredView(live.copy(), allow, "vec_id"), parts)
+            vTiers.foreach(got => assert(got == vp, s"$label: filtered view diverged"))
+            assert(vMirror == vp)
+          }
+        } finally live.cells.unpersist()
+        plan
+      }
+      val base = check("base", withView = true)
+      // every leg of the tie query ranks the 5 smallest tied ids, as the plan does
+      base.foreach { rows =>
+        assert(rows.filter(_.startsWith("99|")).map(_.split('|')(1).toLong) ==
+          (500L until 505L).toSet)
+      }
+      assert(Ann.annAppendIndex(spark, dir, vecDf(vecs(40, from = 2000) ++ tieVecs(4, from = 480)),
+        "vec_id", "embedding", "b1"))
+      check("appended", withView = false)
+      assert(Ann.annDeleteFromIndex(spark, dir, vecDf(Seq(3L, 17L, 480L, 500L, 2001L)
+        .map(i => (i, tieVec))), "vec_id", "d1"))
+      check("appended and tombstoned", withView = false)
+    }
+  }
+
+  /** MinHash docs with string ids (numeric, so an allow-list of longs can
+    * name them) and one null id.
+    */
+  private def mhDocs(ids: Seq[String], text: Int => String): DataFrame = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    spark.createDataFrame(
+      java.util.Arrays.asList(ids.zipWithIndex.map { case (id, i) =>
+        org.apache.spark.sql.Row(id, text(i)) }: _*),
+      StructType(Seq(StructField("id", StringType, nullable = true),
+        StructField("text", StringType, nullable = true))))
+  }
+
+  private def nearDup(i: Int): String =
+    s"shared text block number ${i / 3} with stable words and more words tail${i % 3}"
+
+  private lazy val mhCorpus: DataFrame =
+    mhDocs((0 until 90).map(i => (1000 + i).toString) :+ null, i => nearDup(i % 90))
+
+  private lazy val mhBatch: DataFrame =
+    mhDocs((0 until 12).map(i => (5000 + i).toString) :+ null, i => nearDup(i * 7 % 90))
+
+  private def mhSearch(idx: Dedup.MinHashIndex): Set[String] =
+    bits(Dedup.minhashSearchIndex(idx, mhBatch, "id", "text", jaccardThreshold = 0.5))
+
+  private def pinnedMinhash(dir: String): Dedup.MinHashIndex = {
+    val idx = Dedup.minhashOpenIndex(spark, dir)
+    idx.postings.persist(); idx.postings.count()
+    idx.shingles.persist(); idx.shingles.count()
+    idx
+  }
+
+  /** `idx`'s search through a tier of each of `parts` partitions, and
+    * through the driver mirror.
+    */
+  private def minhashTiers(idx: Dedup.MinHashIndex, parts: Seq[Int]): (Seq[Set[String]], Set[String]) = {
+    val viaTiers = parts.map { n =>
+      val tiered = idx.copy()
+      tiered.partitionedHolder.get(Resident.buildMinhashPartitioned(tiered, n))
+      assert(tiered.partitioned.parts.getNumPartitions == n)
+      val (got, p, r) = tally(mhSearch(tiered))
+      assert(p == 1 && r == 0, s"$n partitions: the partitioned tier must serve")
+      tiered.partitionedHolder.drop()
+      got
+    }
+    spark.conf.unset(Resident.DriverResidentRowsKey)
+    val mirror = idx.copy()
+    val (viaMirror, p, r) =
+      try tally(mhSearch(mirror))
+      finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
+    assert(p == 0 && r == 1, "the driver mirror must serve")
+    mirror.residentHolder.drop()
+    (viaTiers, viaMirror)
+  }
+
+  test("minhash: rows equal to the unpinned plan and the driver mirror at 1, 3 and defaultParallelism partitions; string and null ids, a filtered view, appended and tombstoned") {
+    overBound {
+      val n = spark.sparkContext.defaultParallelism
+      val parts = Seq(1, 3, n)
+      val dir = java.nio.file.Files.createTempDirectory("graft_partitioned_mh").toString
+      Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(mhCorpus, "id", "text"), dir)
+      val allow = spark.range(1000, 1100).filter(col("id") % 2 === 0).toDF("id")
+      def check(label: String, withView: Boolean): Set[String] = {
+        val cold = Dedup.minhashOpenIndex(spark, dir)
+        val (plan, p0, r0) = tally(mhSearch(cold))
+        assert(p0 == 0 && r0 == 0, s"$label: the reference must run the plan")
+        assert(plan.nonEmpty)
+        val viewPlan =
+          if (withView) Some(mhSearch(Dedup.minhashFilteredView(cold, allow, "id"))) else None
+        val live = pinnedMinhash(dir)
+        try {
+          val (tiers, mirror) = minhashTiers(live, parts)
+          tiers.zip(parts).foreach { case (got, p) =>
+            assert(got == plan, s"$label: $p partitions diverged from the plan")
+          }
+          assert(mirror == plan, s"$label: the driver mirror diverged from the plan")
+          viewPlan.foreach { vp =>
+            assert(vp.nonEmpty && vp != plan)
+            val (vTiers, vMirror) =
+              minhashTiers(Dedup.minhashFilteredView(live.copy(), allow, "id"), parts)
+            vTiers.foreach(got => assert(got == vp, s"$label: filtered view diverged"))
+            assert(vMirror == vp)
+          }
+        } finally { live.postings.unpersist(); live.shingles.unpersist() }
+        plan
+      }
+      val base = check("base", withView = true)
+      assert(base.forall(r => !r.startsWith("null|") && !r.contains("|null|")),
+        "a null id joins nothing")
+      assert(Dedup.minhashAppendIndex(spark, dir,
+        mhDocs((0 until 6).map(i => (3000 + i).toString), i => nearDup(i * 11 % 90)),
+        "id", "text", "b1"))
+      check("appended", withView = false)
+      assert(Dedup.minhashDeleteFromIndex(spark, dir,
+        spark.range(1000, 1012).toDF("id"), "id", "d1"))
+      check("appended and tombstoned", withView = false)
+    }
+  }
+
+  test("ann and minhash: one job per search, the first search included") {
+    overBound {
+      def jobsOf(f: => Unit): Long = graft.SpecJobs.count(spark)(f)
+      val annDir = java.nio.file.Files.createTempDirectory("graft_partitioned_ann_jobs").toString
+      val (cells, cents) = Ann.annBuildIndex(vecDf(vecs(200)), "vec_id", "embedding", nCentroids = 4)
+      Ann.annWriteIndex(cells, cents, annDir, pqM = 4)
+      val ann = pinnedAnn(annDir)
+      val mhDir = java.nio.file.Files.createTempDirectory("graft_partitioned_mh_jobs").toString
+      Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(mhCorpus, "id", "text"), mhDir)
+      val mh = pinnedMinhash(mhDir)
+      ann.centroidMat // read once per open, by the first search or a session's prewarm
+      try {
+        val first = jobsOf(Ann.annSearchIndex(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2).collect())
+        assert(first == 1, s"first ann search (deals and caches the tier) ran $first jobs")
+        val int8 = jobsOf(Ann.annSearchIndexInt8(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2).collect())
+        assert(int8 == 1, s"int8 search ran $int8 jobs")
+        val pq = jobsOf(Ann.annSearchIndexPq(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2).count())
+        assert(pq == 1, s"a counted PQ search ran $pq jobs")
+        val mhFirst = jobsOf(Dedup.minhashSearchIndex(mh, mhBatch, "id", "text", 0.5).collect())
+        assert(mhFirst == 1, s"first minhash search ran $mhFirst jobs")
+        val mhCounted = jobsOf(Dedup.minhashSearchIndex(mh, mhBatch, "id", "text", 0.5).count())
+        assert(mhCounted == 1, s"a counted minhash search ran $mhCounted jobs")
+      } finally {
+        ann.partitionedHolder.drop(); ann.cells.unpersist()
+        mh.partitionedHolder.drop(); mh.postings.unpersist(); mh.shingles.unpersist()
+      }
+    }
+  }
+
+  test("ann and minhash sessions: one tier per generation; after a swap and close sc.getPersistentRDDs returns to its baseline") {
+    overBound {
+      val sc = spark.sparkContext
+      def persisted: Set[Int] =
+        sc.getPersistentRDDs.values.filterNot(_.isCheckpointed).map(_.id).toSet
+      def tiers(kind: String): Int = sc.getPersistentRDDs.values.count(_.name == kind)
+      val annRoot = java.nio.file.Files.createTempDirectory("graft_partitioned_ann_sess").toString
+      val (cells, cents) = Ann.annBuildIndex(vecDf(vecs(200)), "vec_id", "embedding", nCentroids = 4)
+      Ann.annWriteIndex(cells, cents, IndexMaintenance.genPath(annRoot, 0), pqM = 4)
+      IndexMaintenance.commitGeneration(spark, annRoot, 0)
+      val mhRoot = java.nio.file.Files.createTempDirectory("graft_partitioned_mh_sess").toString
+      Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(mhCorpus, "id", "text"),
+        IndexMaintenance.genPath(mhRoot, 0))
+      IndexMaintenance.commitGeneration(spark, mhRoot, 0)
+      val baseline = persisted
+      val (ann0, mh0) = (tiers("ann-partitioned"), tiers("minhash-partitioned"))
+      val annSess = ServingSession.ann(spark, annRoot)
+      val mhSess = ServingSession.minhash(spark, mhRoot)
+      try {
+        assert(tiers("ann-partitioned") == ann0 + 1 && tiers("minhash-partitioned") == mh0 + 1,
+          "prewarm builds each session's tier")
+        assert(annSess.residentBytes == 0L && mhSess.residentBytes == 0L)
+        val (a0, pa, _) = tally(annSearches(annSess.index))
+        assert(pa == 3 && a0.forall(_.nonEmpty))
+        val (m0, pm, _) = tally(mhSearch(mhSess.index))
+        assert(pm == 1 && m0.nonEmpty)
+        assert(Ann.annAppendIndex(spark, IndexMaintenance.currentPath(spark, annRoot),
+          vecDf(vecs(20, from = 3000)), "vec_id", "embedding", "b1"))
+        assert(Dedup.minhashAppendIndex(spark, IndexMaintenance.currentPath(spark, mhRoot),
+          mhDocs(Seq("7000", "7001"), i => nearDup(i + 30)), "id", "text", "b1"))
+        IndexMaintenance.maintainIndexes(spark, minhashRoot = Some(mhRoot), annRoot = Some(annRoot),
+          policy = IndexMaintenance.Policy(annMaxAppendFraction = 0.0, minhashMaxFanIn = 1))
+        assert(annSess.resolved._1 == 1 && mhSess.resolved._1 == 1)
+        assert(tiers("ann-partitioned") == ann0 + 1 && tiers("minhash-partitioned") == mh0 + 1,
+          "the swap must release the old tiers")
+        val (_, pa1, _) = tally(annSearches(annSess.index))
+        val (m1, pm1, _) = tally(mhSearch(mhSess.index))
+        assert(pa1 == 3 && pm1 == 1 && m1.nonEmpty)
+      } finally { annSess.close(); mhSess.close() }
+      assert((persisted -- baseline).isEmpty,
+        s"still persisted after close: ${(persisted -- baseline).map(sc.getPersistentRDDs(_))}")
+      assert(tiers("ann-partitioned") == ann0 && tiers("minhash-partitioned") == mh0)
+      assert(!Resident.sharedCensus.exists(k => k._1.contains(annRoot) || k._1.contains(mhRoot)))
     }
   }
 }

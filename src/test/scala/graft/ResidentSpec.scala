@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-resident serving (judge r10 #3): every resident path must be
-  * bit-identical to the distributed plan it replaces (same rows, same
-  * score DOUBLES by bit pattern), fire only under the gate (pinned +
-  * bounded), and cost ZERO Spark jobs per search.
+  * bit-identical to the distributed plan it replaces and to the partitioned
+  * tier (same rows, same score DOUBLES by bit pattern), fire only under the
+  * gate (pinned + bounded), and cost ZERO Spark jobs per search.
   */
 class ResidentSpec extends AnyFunSuite {
 
@@ -49,7 +49,9 @@ class ResidentSpec extends AnyFunSuite {
       case x => String.valueOf(x)
     }.mkString("|")).toSet
 
-  /** Run `f` with residency disabled (bound 0 → gate always false). */
+  /** Run `f` with residency disabled (bound 0 → gate always false): a
+    * pinned index serves from the partitioned tier.
+    */
   private def withoutResidency[A](f: => A): A = {
     spark.conf.set(Resident.DriverResidentRowsKey, "0")
     try f finally spark.conf.unset(Resident.DriverResidentRowsKey)
@@ -100,7 +102,7 @@ class ResidentSpec extends AnyFunSuite {
     assert(viaRes3.nonEmpty)
   }
 
-  test("minhash resident search: row-identical to single-stage and parallel plans") {
+  test("minhash resident search: row-identical to the partitioned tier and the unpinned plan") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_resident_mh").toString
     graft.operators.Dedup.minhashWriteIndex(
       graft.operators.Dedup.minhashBuildIndex(docs(150), "id", "text"), tmp)
@@ -113,10 +115,12 @@ class ResidentSpec extends AnyFunSuite {
     val (viaRes, d) = residentDelta(bits(graft.operators.Dedup
       .minhashSearchIndex(idx, q, "id", "text", jaccardThreshold = 0.4)))
     assert(d == 1)
-    val viaPlan = withoutResidency(bits(graft.operators.Dedup
+    val p0 = Resident.partitionedSearches.get()
+    val viaTier = withoutResidency(bits(graft.operators.Dedup
       .minhashSearchIndex(idx, q, "id", "text", jaccardThreshold = 0.4)))
-    assert(viaRes == viaPlan, "resident minhash diverged from the plan")
-    // parallel (unpinned) plan agrees too
+    assert(Resident.partitionedSearches.get() == p0 + 1)
+    assert(viaRes == viaTier, "resident minhash diverged from the partitioned tier")
+    // the parallel plan (idx0's frames are not the pinned ones) agrees too
     val viaParallel = bits(graft.operators.Dedup
       .minhashSearchIndex(idx0, q, "id", "text", jaccardThreshold = 0.4))
     assert(viaRes == viaParallel, "resident minhash diverged from the parallel plan")
@@ -135,16 +139,22 @@ class ResidentSpec extends AnyFunSuite {
     val (fRes, d1) = residentDelta(bits(graft.operators.Ann
       .annSearchIndex(idx, q, "vec_id", "embedding", k = 3, nProbe = 2)))
     assert(d1 == 1)
-    val fPlan = withoutResidency(bits(graft.operators.Ann
+    val fTier = withoutResidency(bits(graft.operators.Ann
       .annSearchIndex(idx, q, "vec_id", "embedding", k = 3, nProbe = 2)))
-    assert(fRes == fPlan, "resident float ANN diverged")
+    assert(fRes == fTier, "resident float ANN diverged from the partitioned tier")
+    assert(fRes == bits(graft.operators.Ann
+      .annSearchIndex(idx0, q, "vec_id", "embedding", k = 3, nProbe = 2)),
+      "resident float ANN diverged from the plan")
     assert(fRes.nonEmpty)
     val (iRes, d2) = residentDelta(bits(graft.operators.Ann
       .annSearchIndexInt8(idx, q, "vec_id", "embedding", k = 3, nProbe = 2)))
     assert(d2 == 1)
-    val iPlan = withoutResidency(bits(graft.operators.Ann
+    val iTier = withoutResidency(bits(graft.operators.Ann
       .annSearchIndexInt8(idx, q, "vec_id", "embedding", k = 3, nProbe = 2)))
-    assert(iRes == iPlan, "resident int8 ANN diverged")
+    assert(iRes == iTier, "resident int8 ANN diverged from the partitioned tier")
+    assert(iRes == bits(graft.operators.Ann
+      .annSearchIndexInt8(idx0, q, "vec_id", "embedding", k = 3, nProbe = 2)),
+      "resident int8 ANN diverged from the plan")
     assert(iRes.nonEmpty)
   }
 
@@ -166,19 +176,25 @@ class ResidentSpec extends AnyFunSuite {
     val (viaRes, d) = residentDelta(bits(graft.operators.Ann
       .annSearchIndexPq(idx, q, "vec_id", "embedding", k = 3, nProbe = 2)))
     assert(d == 1, "resident PQ path must fire on the pinned bounded index")
-    val viaPlan = withoutResidency(bits(graft.operators.Ann
+    val viaTier = withoutResidency(bits(graft.operators.Ann
       .annSearchIndexPq(idx, q, "vec_id", "embedding", k = 3, nProbe = 2)))
-    assert(viaRes == viaPlan, "resident PQ diverged from the ADC+rerank plan")
+    assert(viaRes == viaTier, "resident PQ diverged from the partitioned tier")
+    assert(viaRes == bits(graft.operators.Ann
+      .annSearchIndexPq(idx0, q, "vec_id", "embedding", k = 3, nProbe = 2)),
+      "resident PQ diverged from the ADC+rerank plan")
     assert(viaRes.nonEmpty)
     // and with a non-default rerankFactor (tighter coarse pool)
     val (viaRes2, d2) = residentDelta(bits(graft.operators.Ann
       .annSearchIndexPq(idx, q, "vec_id", "embedding", k = 3, nProbe = 2,
         rerankFactor = 2)))
     assert(d2 == 1)
-    val viaPlan2 = withoutResidency(bits(graft.operators.Ann
+    val viaTier2 = withoutResidency(bits(graft.operators.Ann
       .annSearchIndexPq(idx, q, "vec_id", "embedding", k = 3, nProbe = 2,
         rerankFactor = 2)))
-    assert(viaRes2 == viaPlan2, "resident PQ (rerankFactor=2) diverged")
+    assert(viaRes2 == viaTier2, "resident PQ (rerankFactor=2) diverged")
+    assert(viaRes2 == bits(graft.operators.Ann
+      .annSearchIndexPq(idx0, q, "vec_id", "embedding", k = 3, nProbe = 2, rerankFactor = 2)),
+      "resident PQ (rerankFactor=2) diverged from the plan")
     idx.cells.unpersist()
   }
 

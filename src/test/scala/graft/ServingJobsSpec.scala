@@ -5,17 +5,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Serving job budget (judge r8 #1, finished r10): a steady-state search
-  * through each persisted index must cost at most ONE Spark job — the wall
-  * of a sub-100ms search is jobs × scheduler round-trip, and each of the
-  * fast paths has a specific structural reason it stays at one:
+  * through each pinned persisted index over the resident bound must cost at
+  * most ONE Spark job — the wall of a sub-100ms search is jobs × scheduler
+  * round-trip. The partitioned tier stays at one because:
   *
-  *  - no broadcast build side (BroadcastExchangeExec materializes its child
-  *    via executeCollectIterator, which LocalTableScanExec does NOT
-  *    override — so broadcasting even a LocalRelation is a real job; the
-  *    driver-known query side rides a literal map instead);
   *  - no collect job on the query side (pre-Generate projections fold to a
-  *    LocalRelation, whose executeCollect is driver-local);
-  *  - no shuffle (single-partition chain elides every exchange).
+  *    LocalRelation, whose executeCollect is driver-local; a MinHash batch
+  *    that folds is collected without a job);
+  *  - the per-partition folds and the one-task merge are one RDD lineage,
+  *    wrapped as a one-partition plan, so an action adds no exchange.
   *
   * The census counts the jobs a warm search starts, exactly, through
   * [[SpecJobs]]. A regression in any of the structural properties above
@@ -59,9 +57,9 @@ class ServingJobsSpec extends AnyFunSuite {
   }
 
   test("serving: one job per search for ann, int8, bm25, minhash") {
-    // this budget pins the single-stage PLAN tier (the fallback between the
-    // r11 driver-resident bound and the parallel plan) — run with residency
-    // disabled; the resident tier's ZERO-job budget is ResidentSpec's
+    // this budget pins the partitioned tier (a pinned index over the r11
+    // driver-resident bound) — run with residency disabled; the resident
+    // tier's ZERO-job budget is ResidentSpec's
     spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
     val tmp = java.nio.file.Files.createTempDirectory("graft_serving_jobs").toString
 
