@@ -193,92 +193,6 @@ final class TopKPayloadBuffer(val k: Int) {
   }
 }
 
-/** [[TopKAggregate]] carrying a payload double per kept entry: a coarse
-  * score SELECTS the candidate set while an exact score rides along as the
-  * payload, so a coarse→rerank chain needs no join back to the scored rows.
-  *
-  * Output: array<struct<score double, id bigint, payload double>> in the
-  * same best-first (score desc, id asc) order as [[TopKAggregate]] — the
-  * selection is entry-for-entry identical on the same (score, id) stream.
-  */
-case class TopKPayloadAggregate(
-    scoreExpr: Expression,
-    idExpr: Expression,
-    payloadExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKPayloadBuffer] {
-
-  require(k >= 1, "k must be >= 1")
-
-  override def children: Seq[Expression] = Seq(scoreExpr, idExpr, payloadExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType =
-    ArrayType(
-      StructType(Seq(StructField("score", DoubleType), StructField("id", LongType),
-        StructField("payload", DoubleType))),
-      containsNull = false)
-  override def prettyName: String = "graft_top_k_payload"
-
-  override def createAggregationBuffer(): TopKPayloadBuffer = new TopKPayloadBuffer(k)
-
-  override def update(buf: TopKPayloadBuffer, input: InternalRow): TopKPayloadBuffer = {
-    val s = scoreExpr.eval(input)
-    val id = idExpr.eval(input)
-    val p = payloadExpr.eval(input)
-    if (s != null && id != null && p != null) {
-      buf.insert(s.asInstanceOf[Double], id.asInstanceOf[Long], p.asInstanceOf[Double])
-    }
-    buf
-  }
-
-  override def merge(buf: TopKPayloadBuffer, other: TopKPayloadBuffer): TopKPayloadBuffer = {
-    var i = 0
-    while (i < other.n) { buf.insert(other.scores(i), other.ids(i), other.payloads(i)); i += 1 }
-    buf
-  }
-
-  override def eval(buf: TopKPayloadBuffer): Any = {
-    val out = new Array[Any](buf.n)
-    var i = 0
-    while (i < buf.n) { out(i) = InternalRow(buf.scores(i), buf.ids(i), buf.payloads(i)); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: TopKPayloadBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + 24 * buf.n)
-    bb.putInt(buf.k).putInt(buf.n)
-    var i = 0
-    while (i < buf.n) {
-      bb.putDouble(buf.scores(i)).putLong(buf.ids(i)).putDouble(buf.payloads(i))
-      i += 1
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): TopKPayloadBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val buf = new TopKPayloadBuffer(bb.getInt())
-    val n = bb.getInt()
-    var i = 0
-    while (i < n) {
-      buf.scores(i) = bb.getDouble(); buf.ids(i) = bb.getLong(); buf.payloads(i) = bb.getDouble()
-      i += 1
-    }
-    buf.n = n
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): TopKPayloadAggregate =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): TopKPayloadAggregate =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TopKPayloadAggregate =
-    copy(scoreExpr = newChildren(0), idExpr = newChildren(1), payloadExpr = newChildren(2))
-}
-
 /** Growable parallel (key bytes, value) buffer for [[OrderedSumAggregate]]. */
 final class OrderedSumBuffer {
   var n: Int = 0
@@ -719,15 +633,6 @@ object VecExpressions {
   def topK(k: Int, score: Column, id: Column): Column =
     ColumnBridge.column(TopKAggregate(
       ColumnBridge.expression(score), ColumnBridge.expression(id), k).toAggregateExpression())
-
-  /** [[topK]] carrying one payload double per kept entry: array<struct<score,
-    * id, payload>> best-first, selection entry-for-entry identical to topK on
-    * the same (score, id) stream.
-    */
-  def topKPayload(k: Int, score: Column, id: Column, payload: Column): Column =
-    ColumnBridge.column(TopKPayloadAggregate(
-      ColumnBridge.expression(score), ColumnBridge.expression(id),
-      ColumnBridge.expression(payload), k).toAggregateExpression())
 
   /** Key-ordered double-sum aggregate column (bit-reproducible fold). */
   def orderedSum(key: Column, value: Column): Column =

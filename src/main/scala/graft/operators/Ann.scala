@@ -638,12 +638,11 @@ object Ann {
     case lp: LocalProbes if Serving.pinned(index.cells) &&
         (index.allowed.isEmpty || index.allowedServingSet.isDefined) =>
       val spark = index.cells.sparkSession
-      val allowed = index.allowedServingSet.orNull
+      val (probes, allowed) = (groupProbes(lp), index.allowedServingSet.orNull)
       Some(if (Resident.eligible(spark, index.nRows, index.cells))
-        Resident.toDf(spark, Resident.searchAnn(index.resident, groupProbes(lp), k, scoring,
-          allowed), Resident.AnnSchema)
-      else Resident.searchAnnPartitioned(spark, index.partitioned, groupProbes(lp), k, scoring,
-        allowed))
+        Resident.toDf(spark, Resident.searchAnn(index.resident, probes, k, scoring, allowed),
+          Resident.AnnSchema)
+      else Resident.searchAnnPartitioned(spark, index.partitioned, probes, k, scoring, allowed))
     case _ => None
   }
 

@@ -73,28 +73,20 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("topKPayload selects entry-for-entry like topK and carries the payload") {
-    import spark.implicits._
-    // adversarial stream: duplicate scores (id tie-break), payload unrelated
-    // to the selection order
-    val df = Seq(
-      (1L, 0.5, 10L, 111.0), (1L, 0.9, 3L, 222.0), (1L, 0.9, 1L, 333.0),
-      (1L, 0.1, 2L, 444.0), (2L, 0.7, 8L, 555.0), (2L, 0.7, 9L, 666.0))
-      .toDF("g", "s", "id", "p")
-    val viaTopK = df.groupBy("g")
-      .agg(graft.functions.VecExpressions.topK(2, col("s"), col("id")).as("t"))
-      .select(col("g"), explode(col("t")).as("e"))
-      .select(col("g"), col("e.score"), col("e.id")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).sortBy(x => (x._1, -x._2, x._3)).toSeq
-    val viaPayload = df.groupBy("g")
-      .agg(graft.functions.VecExpressions.topKPayload(2, col("s"), col("id"), col("p")).as("t"))
-      .select(col("g"), explode(col("t")).as("e"))
-      .select(col("g"), col("e.score"), col("e.id"), col("e.payload")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(x => (x._1, -x._2, x._3)).toSeq
-    assert(viaPayload.map(x => (x._1, x._2, x._3)) == viaTopK)
-    val payloadByGid = viaPayload.map(x => (x._1, x._3) -> x._4).toMap
-    assert(payloadByGid == Map((1L, 1L) -> 333.0, (1L, 3L) -> 222.0,
-      (2L, 8L) -> 555.0, (2L, 9L) -> 666.0))
+    // TopKPayloadBuffer, which the int8 and PQ serving folds pool with,
+    // against TopKBuffer on an adversarial stream: duplicate scores (id
+    // tie-break), payload unrelated to the selection order
+    val stream = Seq((0.5, 10L, 111.0), (0.9, 3L, 222.0), (0.9, 1L, 333.0),
+      (0.1, 2L, 444.0), (0.7, 8L, 555.0), (0.7, 9L, 666.0))
+    Seq(stream, stream.reverse).foreach { in =>
+      val plain = new graft.functions.TopKBuffer(3)
+      val pooled = new graft.functions.TopKPayloadBuffer(3)
+      in.foreach { case (s, id, p) => plain.insert(s, id); pooled.insert(s, id, p) }
+      val viaTopK = (0 until plain.n).map(i => (plain.scores(i), plain.ids(i)))
+      val viaPayload = (0 until pooled.n).map(i => (pooled.scores(i), pooled.ids(i), pooled.payloads(i)))
+      assert(viaPayload.map(x => (x._1, x._2)) == viaTopK)
+      assert(viaPayload == Seq((0.9, 1L, 333.0), (0.9, 3L, 222.0), (0.7, 8L, 555.0)))
+    }
   }
 
   // --- semantic joins -------------------------------------------------------
