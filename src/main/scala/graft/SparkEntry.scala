@@ -730,15 +730,15 @@ object SparkEntry {
       val probe = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
         .select("doc_id", "text").localCheckpoint(true)
       val qv = md5Vecs(docs.filter(col("doc_id") < 25)).localCheckpoint(true)
-      def searchBm(): DataFrame = {
+      def bmLeg(): DataFrame = {
         val (g, i) = sessBm.resolved
         Lexical.bm25SearchIndex(i, q, "qid", "text", k = 5).withColumn("gen", lit(g))
       }
-      def searchMh(): DataFrame = {
+      def mhLeg(): DataFrame = {
         val (g, i) = sessMh.resolved
         Dedup.minhashSearchIndex(i, probe, "doc_id", "text", 0.8).withColumn("gen", lit(g))
       }
-      def searchAnn(): DataFrame = {
+      def annLeg(): DataFrame = {
         val (g, i) = sessAnn.resolved
         Ann.annSearchIndexInt8(i, qv, "doc_id", "__vec", k = 5, nProbe = 8)
           .withColumn("gen", lit(g))
@@ -758,7 +758,7 @@ object SparkEntry {
           "doc_id", "__vec", s"b$e")
         IndexMaintenance.maintainIndexes(s, minhashRoot = Some(mhRoot),
           bm25Root = Some(bmRoot), annRoot = Some(annRoot), policy = policy)
-        val (bm, mh, an) = (searchBm(), searchMh(), searchAnn())
+        val (bm, mh, an) = (bmLeg(), mhLeg(), annLeg())
         census ++= Seq((e, "ann", sessAnn.generation, 0),
           (e, "bm25", sessBm.generation, 0),
           (e, "minhash", sessMh.generation, 0))
@@ -776,9 +776,9 @@ object SparkEntry {
       census ++= Seq((5, "ann", sessAnn.generation, pruned("ann")),
         (5, "bm25", sessBm.generation, pruned("bm25")),
         (5, "minhash", sessMh.generation, pruned("minhash")))
-      val bmPruned = searchBm().collect().toSeq
-      val mhPruned = searchMh().collect().toSeq
-      val annPruned = searchAnn().collect().toSeq
+      val bmPruned = bmLeg().collect().toSeq
+      val mhPruned = mhLeg().collect().toSeq
+      val annPruned = annLeg().collect().toSeq
       val finalGens = Map("bm25" -> sessBm.generation,
         "minhash" -> sessMh.generation, "ann" -> sessAnn.generation)
       sessBm.close(); sessMh.close(); sessAnn.close()

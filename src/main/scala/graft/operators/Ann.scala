@@ -185,42 +185,10 @@ object Ann {
       */
     lazy val centroidMat: VecScan.Mat =
       VecScan.collectMat(centroids, "centroid_id", "centroid_vec")
-    /** Driver-resident cell mirror, built ONCE per open on first eligible
-      * search (see [[Resident]] — gated on pinned frames + the row bound,
-      * so it never fires on a cold batch read or a large corpus). Held in
-      * a [[Resident.Holder]] so a serving session can release it
-      * explicitly on a generation swap.
+    /** The serving tiers ([[Resident.Tiers]]) of a pinned open: the driver
+      * cell mirror under the resident bound, the partitioned tier over it.
       */
-    @transient private[operators] val residentHolder =
-      new Resident.Holder[Resident.AnnResident]("ann")
-    private[operators] def resident: Resident.AnnResident =
-      residentHolder.get(Resident.buildAnn(this))
-    /** The partitioned tier ([[Resident.Partitioned]]) for pinned indexes
-      * over the resident bound: built once per open, shared and released
-      * like the driver mirror.
-      */
-    @transient private[operators] val partitionedHolder =
-      new Resident.Holder[Resident.Partitioned[Resident.AnnResident]]("ann-partitioned")
-    private[operators] def partitioned: Resident.Partitioned[Resident.AnnResident] =
-      partitionedHolder.get(Resident.buildAnnPartitioned(this,
-        Resident.partitionsFor(cells.sparkSession, nRows)))
-    /** Stamps the shared-mirror identity of both tiers (see
-      * [[Resident.Holder]]).
-      */
-    private[operators] def shareAs(key: Option[String]): Unit = {
-      residentHolder.shareKey = key
-      partitionedHolder.shareKey = key.map(_ + "|partitioned")
-    }
-    /** Driver-collected allow set for filtered RESIDENT serving (r13) — the
-      * [[graft.operators.Lexical.Bm25Index.allowedServingSet]] pattern:
-      * present iff this is a filtered view whose allow-list fits
-      * [[Serving.maxDriverAllowIds]]; collected once per view. The mirror
-      * itself stays the UNFILTERED index (shared with plain opens via the
-      * holder's shareKey) — the set filters candidates at search time.
-      */
-    @transient private[operators] lazy val allowedServingSet
-        : Option[java.util.HashSet[java.lang.Long]] =
-      allowed.flatMap(Serving.collectAllowSet)
+    @transient private[operators] val tiers = Resident.annTiers(cells, nRows, allowed)
   }
 
   /** Build the IVF structures: refined centroids + the cell-assigned corpus
@@ -467,7 +435,7 @@ object Ann {
       // is unaffected
       Pq.loadCodebook(spark, s"$path/pq_codebook.json"),
       deletedRows = dels.map(_.nRows).getOrElse(0L))
-    idx.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels)))
+    idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels)))
     idx
   }
 
@@ -539,19 +507,8 @@ object Ann {
     * resident bound) — candidate ids filtered in the scoring folds; any
     * other view keeps the distributed semi-join plan.
     */
-  def annFilteredView(index: AnnIndex, allowed: DataFrame, idCol: String): AnnIndex = {
-    val ids = allowed.select(col(idCol).cast("long").as("__allow_id")).distinct()
-    // view-of-a-view INTERSECTS (advisor r13): chaining filters means
-    // "both" — the new allow set semi-joins against the existing one
-    val v = index.copy(allowed = Some(
-      index.allowed.fold(ids)(prev =>
-        ids.join(prev, Seq("__allow_id"), "left_semi"))))
-    // inherit the mirror identity: the view's mirrors ARE the base index's
-    // (unfiltered — the allow set applies at search time), so two opens + a
-    // view share one census entry per tier
-    v.shareAs(index.residentHolder.shareKey)
-    v
-  }
+  def annFilteredView(index: AnnIndex, allowed: DataFrame, idCol: String): AnnIndex =
+    index.tiers.view(allowed, idCol)(a => index.copy(allowed = a))(_.tiers)
 
   /** A view's candidate restriction on the distributed plans: a `left_semi`
     * on `corpus_id` keeping every cell column. No-op without a view; AQE
@@ -625,24 +582,15 @@ object Ann {
   private final case class DistProbes(
       probes: DataFrame, restrict: DataFrame => DataFrame) extends ProbeResult
 
-  /** Pinned serving (see [[Resident]]): with the probes driver-known, a
-    * pinned index is searched by the same fold on the driver mirror under
-    * the resident bound (zero jobs) and on the partitioned tier over it (one
-    * job) — spec-pinned bit-identical to the plans. A filtered view serves
-    * here when its allow set is driver-sized; the pin check comes first,
-    * because the allow set's first evaluation is a collect job an unpinned
-    * view must not pay. None: the distributed plan serves.
+  /** Pinned serving ([[Resident.Tiers.serve]]): with the probes
+    * driver-known, the same fold serves from the driver mirror under the
+    * resident bound (zero jobs) or the partitioned tier over it (one job),
+    * spec-pinned bit-identical to the plans. None: the distributed plan
+    * serves.
     */
-  private def servePinned(index: AnnIndex, pr: ProbeResult, k: Int,
+  private def serveTiers(index: AnnIndex, pr: ProbeResult, k: Int,
       scoring: Resident.AnnScoring): Option[DataFrame] = pr match {
-    case lp: LocalProbes if Serving.pinned(index.cells) &&
-        (index.allowed.isEmpty || index.allowedServingSet.isDefined) =>
-      val spark = index.cells.sparkSession
-      val (probes, allowed) = (groupProbes(lp), index.allowedServingSet.orNull)
-      Some(if (Resident.eligible(spark, index.nRows, index.cells))
-        Resident.toDf(spark, Resident.searchAnn(index.resident, probes, k, scoring, allowed),
-          Resident.AnnSchema)
-      else Resident.searchAnnPartitioned(spark, index.partitioned, probes, k, scoring, allowed))
+    case lp: LocalProbes => Resident.serveAnn(index.tiers, groupProbes(lp), k, scoring)
     case _ => None
   }
 
@@ -718,7 +666,7 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    servePinned(index, pr, k, Resident.FloatScoring) match {
+    serveTiers(index, pr, k, Resident.FloatScoring) match {
       case Some(df) => return df
       case None =>
     }
@@ -765,7 +713,7 @@ object Ann {
     * `codes`/`cn2` (parquet column pruning keeps the 8-byte-per-lane `cv`
     * out of the coarse read, ~8x less IO) and a rerank JOIN pulls `cv` back
     * for the candidates; a pinned index serves from its mirrors instead
-    * (see [[servePinned]]).
+    * (see [[serveTiers]]).
     *
     * Output contract = [[annSearchIndex]]; `score` is the exact cosine
     * (bit-identical on every kept pair — only the candidate set is
@@ -782,7 +730,7 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    servePinned(index, pr, k, Resident.Int8Scoring(rerankFactor)) match {
+    serveTiers(index, pr, k, Resident.Int8Scoring(rerankFactor)) match {
       case Some(df) => return df
       case None =>
     }
@@ -853,7 +801,7 @@ object Ann {
     * in-plan in the distributed regime); each candidate then costs m table
     * lookups, zero multiplies.
     * A pinned index serves from its mirrors instead, ADC + rerank as the
-    * same arithmetic over the mirrored codes (see [[servePinned]]).
+    * same arithmetic over the mirrored codes (see [[serveTiers]]).
     */
   def annSearchIndexPq(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
@@ -866,7 +814,7 @@ object Ann {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    servePinned(index, pr, k,
+    serveTiers(index, pr, k,
       Resident.PqScoring(cb.flat, cb.m, cb.ks, cb.dsub, rerankFactor)) match {
       case Some(df) => return df
       case None =>

@@ -124,12 +124,14 @@ object Clustering extends Logging {
     */
   private[operators] def componentsOfEdgeIncident(edges: DataFrame): DataFrame = {
     // the edge list is evaluated once (it is the similarity self-scan) and
-    // pinned; both directions are derived from the pinned copy
+    // pinned; both directions are derived from the pinned copy. The pin is
+    // lazy: the bounded collect below computes and pins it in its one job,
+    // and the distributed iteration reads the pinned blocks
     val e0 = edges.select(
       col(edges.columns(0)).cast("long").as("src"),
       col(edges.columns(1)).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
+      .localCheckpoint(eager = false)
     val spark = edges.sparkSession
     import spark.implicits._
 

@@ -631,40 +631,12 @@ object Dedup extends Logging {
       * [[minhashCompactIndex]] when the fan-in grows past taste.
       */
     def unionFanIn: Int = appendedBatches + 1
-    /** Driver-resident (band, bucket) → postings + shingle-set mirror,
-      * built ONCE per open on first eligible search (see [[Resident]]).
-      * Held in a [[Resident.Holder]] so a serving session can release it
-      * explicitly on a generation swap.
+    /** The serving tiers ([[Resident.Tiers]]) of a pinned open: the driver
+      * (band, bucket) → postings + shingle-set mirror under the resident
+      * bound, the partitioned tier over it.
       */
-    @transient private[operators] val residentHolder =
-      new Resident.Holder[Resident.MinhashResident]("minhash")
-    private[operators] def resident: Resident.MinhashResident =
-      residentHolder.get(Resident.buildMinhash(this))
-    /** The partitioned tier ([[Resident.Partitioned]]) for pinned indexes
-      * over the resident bound: built once per open, shared and released
-      * like the driver mirror.
-      */
-    @transient private[operators] val partitionedHolder =
-      new Resident.Holder[Resident.Partitioned[Resident.MinhashResident]]("minhash-partitioned")
-    private[operators] def partitioned: Resident.Partitioned[Resident.MinhashResident] =
-      partitionedHolder.get(Resident.buildMinhashPartitioned(this,
-        Resident.partitionsFor(postings.sparkSession, nRows)))
-    /** Stamps the shared-mirror identity of both tiers (see
-      * [[Resident.Holder]]).
-      */
-    private[operators] def shareAs(key: Option[String]): Unit = {
-      residentHolder.shareKey = key
-      partitionedHolder.shareKey = key.map(_ + "|partitioned")
-    }
-    /** Driver-collected allow set for filtered RESIDENT serving (r13) — the
-      * [[graft.operators.Lexical.Bm25Index.allowedServingSet]] pattern:
-      * present iff this is a filtered view whose allow-list fits
-      * [[Serving.maxDriverAllowIds]]; over-bound views keep the distributed
-      * semi-join plan.
-      */
-    @transient private[operators] lazy val allowedServingSet
-        : Option[java.util.HashSet[java.lang.Long]] =
-      allowed.flatMap(Serving.collectAllowSet)
+    @transient private[operators] val tiers =
+      Resident.minhashTiers(postings, shingles, nRows, allowed)
   }
 
   /** Build the persistable structures: banded postings + shingle sets (same
@@ -879,7 +851,7 @@ object Dedup extends Logging {
       Some(meta.get("n_rows").asLong() + batches.map(_.nRows).sum),
       appendedBatches = batches.size,
       deletedPostings = dels.map(_.nRows).getOrElse(0L))
-    idx.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels)))
+    idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels)))
     idx
   }
 
@@ -954,48 +926,25 @@ object Dedup extends Logging {
     * ignore views.
     */
   def minhashFilteredView(
-      index: MinHashIndex, allowed: DataFrame, idCol: String): MinHashIndex = {
-    val ids = allowed.select(col(idCol).cast("long").as("__allow_id")).distinct()
-    // view-of-a-view INTERSECTS (advisor r13): chaining filters means
-    // "both" — the new allow set semi-joins against the existing one
-    val v = index.copy(allowed = Some(
-      index.allowed.fold(ids)(prev =>
-        ids.join(prev, Seq("__allow_id"), "left_semi"))))
-    // inherit the mirror identity (see [[graft.operators.Lexical
-    // .bm25FilteredView]]) — the mirrors are the unfiltered index's, shared
-    v.shareAs(index.residentHolder.shareKey)
-    v
-  }
+      index: MinHashIndex, allowed: DataFrame, idCol: String): MinHashIndex =
+    index.tiers.view(allowed, idCol)(a => index.copy(allowed = a))(_.tiers)
 
   def minhashSearchIndex(
       index: MinHashIndex, batch: DataFrame, idCol: String, textCol: String,
       jaccardThreshold: Double = 0.5): DataFrame = {
     val b = shingleSig(batch, col(idCol), col(textCol),
       index.shingleSize, index.numBands * index.rowsPerBand, index.hashFamily)
-    // pinned serving (see [[Resident]]): the batch's rows are collected
-    // once, bounded, and the same fold answers on the driver mirror under
-    // the resident bound (zero jobs) or on the partitioned tier over it (one
-    // job) — spec-pinned row-identical to the plan below. Pinned-ness comes
-    // before the allow set, whose first evaluation is a collect job an
-    // unpinned view must not pay
-    if (Serving.pinned(index.postings, index.shingles) &&
-        (index.allowed.isEmpty || index.allowedServingSet.isDefined)) {
-      servingBatch(b) match {
-        case Some(rows) =>
-          val spark = index.postings.sparkSession
-          val schema = StructType(Seq(
-            StructField("corpus_id", index.postings.schema("id").dataType, nullable = true),
-            StructField("batch_id", b.schema("id").dataType, nullable = true),
-            StructField("jaccard", DoubleType, nullable = false)))
-          val allowed = index.allowedServingSet.orNull
-          return if (Resident.eligible(spark, index.nRows, index.postings, index.shingles))
-            Resident.toDf(spark, Resident.searchMinhash(index.resident, rows, index.numBands,
-              index.rowsPerBand, jaccardThreshold, allowed), schema)
-          else Resident.searchMinhashPartitioned(spark, index.partitioned, rows,
-            index.numBands, index.rowsPerBand, jaccardThreshold, allowed, schema)
-        case None => // the batch blew the bound: the plan below
-      }
-    }
+    // pinned serving ([[Resident.Tiers.serve]]): the batch's rows are
+    // collected once, bounded, and the same fold answers on the driver
+    // mirror under the resident bound (zero jobs) or on the partitioned tier
+    // over it (one job) — spec-pinned row-identical to the plan below. The
+    // batch is collected only for a pinned index
+    val served = Resident.serveMinhash(index.tiers, servingBatch(b), index.numBands,
+      index.rowsPerBand, jaccardThreshold, StructType(Seq(
+        StructField("corpus_id", index.postings.schema("id").dataType, nullable = true),
+        StructField("batch_id", b.schema("id").dataType, nullable = true),
+        StructField("jaccard", DoubleType, nullable = false))))
+    if (served.isDefined) return served.get
     // distributed plan: a view's allow semi-join sits on the postings scan,
     // before band candidates form (see [[minhashFilteredView]]). The ALLOW
     // side is cast into the id domain, not the ids into long (advisor r13):

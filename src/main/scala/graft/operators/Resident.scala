@@ -5,6 +5,7 @@ import graft.functions.VectorOps.asDouble
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import scala.reflect.ClassTag
@@ -48,6 +49,13 @@ import org.apache.spark.sql.types._
   * is not mirrored on the driver: pinned, it serves from per-partition
   * mirrors ([[Resident.Partitioned]]) with the same fold, one job per
   * search; unpinned, it keeps the distributed partition-pruned plan.
+  *
+  * One shape for both tiers: the driver mirror is the partitioned tier
+  * with one partition, merged on the driver. Each index open holds one
+  * [[Resident.Tiers]] (both mirrors and the gate between them and the
+  * plan); each family gives its index rows and mirror build once
+  * (`bm25Tiers`, `annTiers`, `minhashTiers`) and, per search, one fold and
+  * one merge (`serveBm25`, `serveAnn`, `serveMinhash`).
   */
 object Resident {
 
@@ -82,10 +90,10 @@ object Resident {
     spark.conf.getOption(DriverResidentBytesKey).map(_.toLong)
       .getOrElse(Long.MaxValue)
 
-  /** Residency gate for PINNED frames (the serving configuration; every
-    * caller has checked [[Serving.pinned]] first, and a pin lookup walks the
-    * cache manager, so it is not repeated here): known row count under the
-    * bound + pinned bytes under the optional byte budget.
+  /** Residency gate for PINNED frames (the serving configuration; its
+    * caller, [[Tiers]], has checked [[Serving.pinned]] first, and a pin
+    * lookup walks the cache manager, so it is not repeated here): known row
+    * count under the bound + pinned bytes under the optional byte budget.
     */
   private[operators] def eligible(
       spark: SparkSession, nRows: Option[Long], frames: DataFrame*): Boolean = {
@@ -292,11 +300,12 @@ object Resident {
     * pinned index over [[driverResidentRows]]: the index rows dealt to
     * partitions by their document id, each partition holding the mirror of
     * its documents, cached MEMORY_ONLY. A search is one job whose tasks run
-    * the family's driver fold over their partition, merged in one task.
-    * Each document is whole inside one partition and every selection orders
-    * by (score desc, id asc), which is total, so the rows are those of the
-    * driver fold whatever the partition count. An evicted block is rebuilt
-    * from lineage: eviction costs speed, never correctness.
+    * the family's fold over their partition, merged in one task. Each
+    * document is whole inside one partition and every selection orders by
+    * (score desc, id asc), which is total, so the rows are those of the
+    * driver mirror (one partition) whatever the partition count. An evicted
+    * block is rebuilt from lineage: eviction costs speed, never
+    * correctness.
     */
   private[operators] final class Partitioned[M <: Mirror](val parts: RDD[M]) extends Mirror {
     /** The cached blocks as the block manager's status store reports them:
@@ -307,24 +316,123 @@ object Resident {
     override private[operators] def release(): Unit = parts.unpersist(blocking = false)
     /** Builds and caches every partition: one job. */
     def materialize(): Unit = { parts.count(); () }
-
-    /** One search, as a one-partition plan: `fold` runs in each partition's
-      * task over its mirror, `merge` in one task over every partition's
-      * output, so any action on the result (a count included) is one job.
-      * Counts in [[partitionedSearches]], not as a resident search.
-      */
-    private[operators] def search[T: ClassTag](spark: SparkSession, schema: StructType)(
-        fold: M => Iterator[T])(merge: Iterator[T] => Iterator[InternalRow]): DataFrame = {
-      partitionedSearches.incrementAndGet()
-      org.apache.spark.sql.graftbridge.ColumnBridge.fromSinglePartitionRows(spark,
-        parts.flatMap(fold).coalesce(1, shuffle = true).mapPartitions(merge), schema)
-    }
   }
 
   /** Count of searches served by a partitioned tier — the sibling of
     * [[residentSearches]].
     */
   private[graft] val partitionedSearches = new java.util.concurrent.atomic.AtomicLong
+
+  /** A view's driver-sized allow set, passed to every fold; null without a
+    * view.
+    */
+  private[operators] type AllowSet = java.util.HashSet[java.lang.Long]
+
+  /** The serving tiers of one index open, and the one decision between
+    * them and the plan ([[serve]]). The driver mirror is the partitioned
+    * tier with one partition, merged on the driver, so a family gives each
+    * once: its index rows (`rows(dealt)`, frames read by `Row => R`;
+    * `dealt` is true for the partitioned tier), the document id of a row
+    * (`key`, the deal key) and the mirror of a run of rows; a search gives a
+    * fold over one mirror and a merge of the folds' output. `frames` are the
+    * index frames the gate checks, `allowed` a filtered view's allow frame.
+    */
+  private[operators] final class Tiers[R: ClassTag, M <: Mirror: ClassTag](
+      kind: String, val frames: Seq[DataFrame], nRows: Option[Long],
+      allowed: Option[DataFrame])(
+      rows: Boolean => Seq[(DataFrame, Row => R)], key: R => Any, mirror: Iterator[R] => M) {
+    // each tier in a holder, so a serving session can release it
+    // explicitly on a generation swap
+    private val driver = new Holder[M](kind)
+    private val dealt = new Holder[Partitioned[M]](kind + "-partitioned")
+    private def spark: SparkSession = frames.head.sparkSession
+
+    /** The shared-mirror identity of both tiers (see [[Holder]]); stamped
+      * once by the index openers.
+      */
+    def shareKey: Option[String] = driver.shareKey
+    def shareAs(key: Option[String]): Unit = {
+      driver.shareKey = key
+      dealt.shareKey = key.map(_ + "|partitioned")
+    }
+
+    /** A filtered view's allow set, collected once per view on its first
+      * pinned search; None when the allow-list exceeds
+      * [[Serving.maxDriverAllowIds]] (the view keeps the semi-join plan).
+      */
+    private lazy val allowSet: Option[AllowSet] = allowed.flatMap(Serving.collectAllowSet)
+
+    /** The driver mirror: every index row collected into one mirror. */
+    def driverMirror: M = driver.get(mirror(rows(false).iterator.flatMap { case (frame, row) =>
+      frame.collect().iterator.map(row)
+    }))
+
+    /** The partitioned tier, dealt into `nParts` partitions by the call that
+      * builds it.
+      */
+    def partitioned(nParts: Int = partitionsFor(spark, nRows)): Partitioned[M] = dealt.get {
+      val k = key
+      deal(rows(true).map { case (frame, row) => frame.rdd.map(row) }.reduce(_ union _)
+        .map(r => (k(r), r)), nParts, kind + "-partitioned")(mirror)
+    }
+
+    /** True when a pinned search is served by the driver mirror, false
+      * when by the partitioned tier.
+      */
+    private def onDriver: Boolean = eligible(spark, nRows, frames: _*)
+
+    /** Builds the tier the searches of the pinned frames will use. */
+    def prewarm(): Unit = if (onDriver) driverMirror else partitioned().materialize()
+
+    /** Estimated bytes of the driver mirror; 0 while it is not built. */
+    def residentBytes: Long = driver.peek.map(_.bytes).getOrElse(0L)
+
+    /** Releases both tiers (see [[Holder.drop]]). */
+    def drop(): Unit = { driver.drop(); dealt.drop() }
+
+    /** The one serving gate. When the frames are pinned, any allow set is
+      * driver-sized and the search is `ready`, the search runs as
+      * `merge(fold(mirror, allowSet))`: on the driver mirror under
+      * [[driverResidentRows]] (a LocalRelation, zero jobs, counted in
+      * [[residentSearches]]), else on the partitioned tier (counted in
+      * [[partitionedSearches]]) as a one-partition plan: `fold` runs in each
+      * partition's task, `merge` in one task over their output, so any
+      * action on the result (a count included) is one job. None: the
+      * family's distributed plan serves. The pin check comes first: the
+      * allow set's first evaluation and a search's `ready` may run jobs an
+      * unpinned index must not pay; `fold` and `merge` are built after the
+      * checks.
+      */
+    def serve[T: ClassTag](schema: StructType, ready: => Boolean = true)(
+        fold: => (M, AllowSet) => Iterator[T])(
+        merge: => Iterator[T] => Iterator[InternalRow]): Option[DataFrame] =
+      if (!Serving.pinned(frames: _*) || allowed.isDefined && allowSet.isEmpty || !ready) None
+      else {
+        val (f, m, allow) = (fold, merge, allowSet.orNull)
+        Some(if (onDriver) {
+          residentSearches.incrementAndGet()
+          ColumnBridge.fromLocalRows(spark, m(f(driverMirror, allow)).toVector, schema)
+        } else {
+          partitionedSearches.incrementAndGet()
+          ColumnBridge.fromSinglePartitionRows(spark, partitioned().parts
+            .flatMap(f(_, allow)).coalesce(1, shuffle = true).mapPartitions(m), schema)
+        })
+      }
+
+    /** A filtered view of this index: `copy` of it with the allow frame of
+      * `allowedIds`' `idCol`, intersected with its own (chained filters mean
+      * "both"), and with this index's mirror identity: the view's mirrors
+      * ARE this index's, unfiltered, since the allow set applies in the
+      * fold, so a view never duplicates a mirror a plain open holds.
+      */
+    def view[I](allowedIds: DataFrame, idCol: String)(copy: Option[DataFrame] => I)(
+        tiersOf: I => Tiers[_, _ <: Mirror]): I = {
+      val ids = allowedIds.select(col(idCol).cast("long").as("__allow_id")).distinct()
+      val v = copy(Some(allowed.fold(ids)(prev => ids.join(prev, Seq("__allow_id"), "left_semi"))))
+      tiersOf(v).shareAs(shareKey)
+      v
+    }
+  }
 
   /** Index rows one partition of the tier holds: an index just over the
     * resident bound spreads over 4 partitions.
@@ -343,7 +451,7 @@ object Resident {
     * search or [[Partitioned.materialize]]) deals and caches it, inside its
     * own job.
     */
-  private def partitioned[R: ClassTag, M <: Mirror: ClassTag](
+  private def deal[R: ClassTag, M <: Mirror: ClassTag](
       rows: RDD[(Any, R)], nParts: Int, kind: String)(mirror: Iterator[R] => M): Partitioned[M] =
     new Partitioned(rows.partitionBy(new HashPartitioner(nParts))
       .mapPartitions(it => Iterator.single(mirror(it.map(_._2))))
@@ -466,131 +574,88 @@ object Resident {
     new Bm25Resident(byTerm)
   }
 
-  private[operators] def buildBm25(index: Lexical.Bm25Index): Bm25Resident = {
-    val hasBake = index.postings.columns.contains("contrib0")
-    val cols = Seq(col("doc_id").cast("long"), col("term"),
-      col("tf").cast("double"), col("dl").cast("double")) ++
-      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
-    val rows = index.postings.select(cols: _*).collect()
-    bm25Slices(rows.iterator.map(r => Bm25Row(r.getLong(0), r.getString(1),
-      r.getDouble(2), r.getDouble(3), Double.NaN, if (hasBake) r.getDouble(4) else 0.0)),
-      hasBake)
-  }
-
-  /** The partitioned tier over `postings`, which carries each term's
-    * corpus-wide `df`, dealt by `doc_id` into `nParts` partitions.
+  /** The tiers of a BM25 index's postings, dealt by `doc_id`. The
+    * partitioned tier's rows carry each term's corpus-wide df, attached
+    * in-plan, so appended and tombstoned indexes score exactly; the driver
+    * mirror holds every row, so a term's df is its slice length.
     */
-  private[operators] def buildBm25Partitioned(
-      postings: DataFrame, nParts: Int): Partitioned[Bm25Resident] = {
+  private[operators] def bm25Tiers(postings: DataFrame, nRows: Option[Long],
+      allowed: Option[DataFrame]): Tiers[Bm25Row, Bm25Resident] = {
     val hasBake = postings.columns.contains("contrib0")
-    val cols = Seq(col("doc_id").cast("long"), col("term"), col("tf").cast("double"),
-      col("dl").cast("double"), col("df").cast("double")) ++
-      (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
-    val rows = postings.select(cols: _*).queryExecution.toRdd.map { r =>
-      (r.getLong(0): Any, Bm25Row(r.getLong(0), r.getUTF8String(1).toString, r.getDouble(2),
-        r.getDouble(3), r.getDouble(4), if (hasBake) r.getDouble(5) else 0.0))
-    }
-    partitioned(rows, nParts, "bm25-partitioned")(bm25Slices(_, hasBake))
+    new Tiers[Bm25Row, Bm25Resident]("bm25", Seq(postings), nRows, allowed)({ dealt =>
+      val (frame, df) =
+        if (dealt) (Lexical.ensureDf(postings), col("df").cast("double"))
+        else (postings, lit(Double.NaN))
+      val cols = Seq(col("doc_id").cast("long"), col("term"), col("tf").cast("double"),
+        col("dl").cast("double"), df) ++
+        (if (hasBake) Seq(col("contrib0").cast("double")) else Nil)
+      Seq((frame.select(cols: _*), r => Bm25Row(r.getLong(0), r.getString(1), r.getDouble(2),
+        r.getDouble(3), r.getDouble(4), if (hasBake) r.getDouble(5) else 0.0)))
+    }, _.docId, bm25Slices(_, hasBake))
   }
 
-  /** The BM25 fold over one mirror: same df (the slice's corpus-wide
-    * count), same `contribCol` arithmetic in the same operation order, same
-    * term-byte-order score fold as `MultiOrderedSumAggregate`, same
-    * `TopKBuffer` selection as `topKPerQuery`. Hands each query's buffer to
-    * `emit`.
+  /** A BM25 search through `tiers`: the fold over one mirror has the same
+    * df (the slice's corpus-wide count), the same `contribCol` arithmetic in
+    * the same operation order, the same term-byte-order score fold as
+    * `MultiOrderedSumAggregate` and the same `TopKBuffer` selection as
+    * `topKPerQuery`, and keeps at most k `(query_id, doc_id, score)` per
+    * query; the merge re-selects them with the same [[TopKBuffer]] and
+    * emits `(query_id, rank, doc_id, score)` rows in query order.
     */
-  private def foldBm25(
-      res: Bm25Resident, qSets: Seq[(Long, Seq[String])],
+  private[operators] def serveBm25(
+      tiers: Tiers[Bm25Row, Bm25Resident], qSets: Seq[(Long, Seq[String])],
       nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
-      useBake: Boolean, allowed: java.util.HashSet[java.lang.Long])(
-      emit: (Long, TopKBuffer) => Unit): Unit = {
-    val k1p1 = k1 + 1.0
-    val oneMinusB = 1.0 - b
-    // per-term idf memo: log() is per-row in the plan but value-identical.
-    // StrictMath, as Catalyst's Log evaluates: the Math.log intrinsic may
-    // differ from it in the last bit
-    val idf = new java.util.HashMap[String, java.lang.Double]
-    def idfOf(t: String, dfv: Double): Double = {
-      val cached = idf.get(t)
-      if (cached != null) cached.doubleValue()
-      else {
-        val v = StrictMath.log(1.0 + (nDocs - dfv + 0.5) / (dfv + 0.5))
-        idf.put(t, v); v
-      }
-    }
-    qSets.foreach { case (qid, ts) =>
-      val sorted = ts.distinct.map(t => (t, t.getBytes("UTF-8"))).sortWith {
-        (a, bb) => Utf8Order.compare(a._2, bb._2) < 0
-      }
-      // per-doc accumulator: each doc's contributions arrive in global
-      // sorted-term order (the outer loop IS the MultiOrderedSum fold
-      // order); the primitive map only holds running sums
-      var expected = 0
-      sorted.foreach { case (t, _) =>
-        val p = res.byTerm.get(t)
-        if (p != null) expected += p.docIds.length
-      }
-      val scores = new LongDoubleSumMap(expected)
-      sorted.foreach { case (t, _) =>
-        val p = res.byTerm.get(t)
-        if (p != null) {
-          val w = idfOf(t, p.df)
-          var i = 0
-          while (i < p.docIds.length) {
-            val contrib =
-              if (useBake && p.contrib0 != null) p.contrib0(i)
-              else w * p.tf(i) * k1p1 /
-                (p.tf(i) + k1 * (oneMinusB + b * p.dl(i) / avgdl))
-            scores.add(p.docIds(i), contrib)
-            i += 1
-          }
+      useBake: Boolean): Option[DataFrame] = {
+    val qids = qSets.map(_._1).toArray
+    tiers.serve(Bm25Schema) { (res, allowed) =>
+      val k1p1 = k1 + 1.0
+      val oneMinusB = 1.0 - b
+      // per-term idf memo: log() is per-row in the plan but value-identical.
+      // StrictMath, as Catalyst's Log evaluates: the Math.log intrinsic may
+      // differ from it in the last bit
+      val idf = new java.util.HashMap[String, java.lang.Double]
+      def idfOf(t: String, dfv: Double): Double = {
+        val cached = idf.get(t)
+        if (cached != null) cached.doubleValue()
+        else {
+          val v = StrictMath.log(1.0 + (nDocs - dfv + 0.5) / (dfv + 0.5))
+          idf.put(t, v); v
         }
       }
-      val buf = new TopKBuffer(k)
-      // allow-list filters MEMBERSHIP only, after scoring: df/idf above came
-      // from the full corpus (filter-context, [[graft.operators
-      // .Lexical.bm25FilteredView]])
-      scores.foreach((d, s) => if (allowed == null || allowed.contains(d)) buf.insert(s, d))
-      emit(qid, buf)
-    }
-  }
-
-  /** `(query_id, rank, doc_id, score)` rows of one query's buffer. */
-  private def ranked(qid: Long, buf: TopKBuffer, out: scala.collection.mutable.Growable[Row]): Unit = {
-    var r = 0
-    while (r < buf.n) {
-      out += Row(qid, (r + 1).toLong, buf.ids(r), buf.scores(r))
-      r += 1
-    }
-  }
-
-  /** Driver-side BM25 search over the resident postings ([[foldBm25]]).
-    * Emits `(query_id, rank, doc_id, score)` rows.
-    */
-  private[operators] def searchBm25(
-      res: Bm25Resident, qSets: Seq[(Long, Seq[String])],
-      nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
-      useBake: Boolean,
-      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
-    residentSearches.incrementAndGet()
-    val out = Seq.newBuilder[Row]
-    foldBm25(res, qSets, nDocs, avgdl, k, k1, b, useBake, allowed)(ranked(_, _, out))
-    out.result()
-  }
-
-  /** [[searchBm25]] over the partitioned tier: each task folds its
-    * partition and returns at most k rows per query, which one task merges
-    * with the same [[TopKBuffer]].
-    */
-  private[operators] def searchBm25Partitioned(
-      spark: SparkSession, tier: Partitioned[Bm25Resident], qSets: Seq[(Long, Seq[String])],
-      nDocs: Double, avgdl: Double, k: Int, k1: Double, b: Double,
-      useBake: Boolean,
-      allowed: java.util.HashSet[java.lang.Long] = null): DataFrame = {
-    val qids = qSets.map(_._1).toArray
-    tier.search(spark, Bm25Schema) { res =>
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-      foldBm25(res, qSets, nDocs, avgdl, k, k1, b, useBake, allowed) { (qid, buf) =>
+      qSets.foreach { case (qid, ts) =>
+        val sorted = ts.distinct.map(t => (t, t.getBytes("UTF-8"))).sortWith {
+          (a, bb) => Utf8Order.compare(a._2, bb._2) < 0
+        }
+        // per-doc accumulator: each doc's contributions arrive in global
+        // sorted-term order (the outer loop IS the MultiOrderedSum fold
+        // order); the primitive map only holds running sums
+        var expected = 0
+        sorted.foreach { case (t, _) =>
+          val p = res.byTerm.get(t)
+          if (p != null) expected += p.docIds.length
+        }
+        val scores = new LongDoubleSumMap(expected)
+        sorted.foreach { case (t, _) =>
+          val p = res.byTerm.get(t)
+          if (p != null) {
+            val w = idfOf(t, p.df)
+            var i = 0
+            while (i < p.docIds.length) {
+              val contrib =
+                if (useBake && p.contrib0 != null) p.contrib0(i)
+                else w * p.tf(i) * k1p1 /
+                  (p.tf(i) + k1 * (oneMinusB + b * p.dl(i) / avgdl))
+              scores.add(p.docIds(i), contrib)
+              i += 1
+            }
+          }
+        }
+        val buf = new TopKBuffer(k)
+        // allow-list filters MEMBERSHIP only, after scoring: df/idf above came
+        // from the full corpus (filter-context, [[graft.operators
+        // .Lexical.bm25FilteredView]])
+        scores.foreach((d, s) => if (allowed == null || allowed.contains(d)) buf.insert(s, d))
         var r = 0
         while (r < buf.n) { out += ((qid, buf.ids(r), buf.scores(r))); r += 1 }
       }
@@ -650,7 +715,7 @@ object Resident {
   /** One row of a MinHash mirror build, keyed by its corpus id: a banded
     * posting or a document's shingle set.
     */
-  private sealed trait MinhashRow extends Serializable { def id: Any }
+  private[operators] sealed trait MinhashRow extends Serializable { def id: Any }
   private final case class MinhashPosting(id: Any, band: Int, bucket: Seq[Any]) extends MinhashRow
   private final case class MinhashShingles(id: Any, sh: Seq[Any]) extends MinhashRow
 
@@ -667,52 +732,42 @@ object Resident {
     new MinhashResident(byBucket, shingles, corpusIdType)
   }
 
-  /** The index's postings and shingle sets, each a frame and its rows. */
-  private def minhashRows(index: Dedup.MinHashIndex): Seq[(DataFrame, Row => MinhashRow)] = Seq(
-    (index.postings.select(col("id"), col("band").cast("int"), col("bucket")),
-      r => MinhashPosting(r.get(0), r.getInt(1), r.getSeq[Any](2))),
-    (index.shingles.select(col("id"), col("sh")),
-      r => MinhashShingles(r.get(0), r.getSeq[Any](1))))
-
-  private[operators] def buildMinhash(index: Dedup.MinHashIndex): MinhashResident =
-    minhashMirror(minhashRows(index).iterator.flatMap { case (frame, row) =>
-      frame.collect().iterator.map(row)
-    }, index.postings.schema("id").dataType)
-
-  /** The partitioned tier of a MinHash index: postings and shingle sets
-    * dealt by the same hash of the corpus id, so every document is whole in
-    * one partition.
+  /** The tiers of a MinHash index: postings and shingle sets dealt by the
+    * same hash of the corpus id, so every document is whole in one
+    * partition.
     */
-  private[operators] def buildMinhashPartitioned(
-      index: Dedup.MinHashIndex, nParts: Int): Partitioned[MinhashResident] = {
-    val idType = index.postings.schema("id").dataType
-    val rows = minhashRows(index).map { case (frame, row) => frame.rdd.map(row) }
-      .reduce(_ union _).map(r => (r.id, r))
-    partitioned(rows, nParts, "minhash-partitioned")(minhashMirror(_, idType))
+  private[operators] def minhashTiers(postings: DataFrame, shingles: DataFrame,
+      nRows: Option[Long], allowed: Option[DataFrame]): Tiers[MinhashRow, MinhashResident] = {
+    val idType = postings.schema("id").dataType
+    new Tiers[MinhashRow, MinhashResident]("minhash", Seq(postings, shingles), nRows, allowed)(
+      _ => Seq(
+        (postings.select(col("id"), col("band").cast("int"), col("bucket")),
+          r => MinhashPosting(r.get(0), r.getInt(1), r.getSeq[Any](2))),
+        (shingles.select(col("id"), col("sh")),
+          r => MinhashShingles(r.get(0), r.getSeq[Any](1)))),
+      _.id, minhashMirror(_, idType))
   }
 
-  /** Driver-side [[Dedup.minhashSearchIndex]] ([[foldMinhash]]). */
-  private[operators] def searchMinhash(
-      res: MinhashResident, batchRows: Array[Row],
-      numBands: Int, rowsPerBand: Int, jaccardThreshold: Double,
-      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
-    residentSearches.incrementAndGet()
-    foldMinhash(res, batchRows, numBands, rowsPerBand, jaccardThreshold, allowed)
-  }
-
-  /** [[searchMinhash]] over the partitioned tier: every document is whole
-    * in one partition, so the merge is a concatenation.
+  /** A [[Dedup.minhashSearchIndex]] through `tiers`, over the batch's
+    * `(id, sh, sig)` rows; `batch` is read only for a pinned index, and
+    * None declines the tiers. Every document is whole in one partition, so
+    * the merge is a concatenation.
     */
-  private[operators] def searchMinhashPartitioned(
-      spark: SparkSession, tier: Partitioned[MinhashResident], batchRows: Array[Row],
+  private[operators] def serveMinhash(
+      tiers: Tiers[MinhashRow, MinhashResident], batch: => Option[Array[Row]],
       numBands: Int, rowsPerBand: Int, jaccardThreshold: Double,
-      allowed: java.util.HashSet[java.lang.Long], schema: StructType): DataFrame =
-    tier.search(spark, schema) { res =>
-      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(schema)
-      foldMinhash(res, batchRows, numBands, rowsPerBand, jaccardThreshold, allowed)
-        .iterator.map(toRow(_).asInstanceOf[InternalRow])
+      schema: StructType): Option[DataFrame] = {
+    lazy val rows = batch
+    tiers.serve(schema, rows.isDefined) {
+      val batchRows = rows.get
+      (res, allowed) => {
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(schema)
+        foldMinhash(res, batchRows, numBands, rowsPerBand, jaccardThreshold, allowed)
+          .iterator.map(toRow(_).asInstanceOf[InternalRow])
+      }
     }(identity)
+  }
 
   /** The [[Dedup.minhashSearchIndex]] fold over one mirror: per batch band
     * slice, exact (band, bucket) candidate lookup, per distinct (corpus,
@@ -723,7 +778,7 @@ object Resident {
   private def foldMinhash(
       res: MinhashResident, batchRows: Array[Row],
       numBands: Int, rowsPerBand: Int, jaccardThreshold: Double,
-      allowed: java.util.HashSet[java.lang.Long]): Seq[Row] = {
+      allowed: AllowSet): Seq[Row] = {
     // Allow-set membership by corpus-id TYPE (advisor r13): minhash corpus
     // ids are generic — a string-id corpus crashed here on the old
     // `asInstanceOf[Number]` while the distributed plan's cast semi-join
@@ -813,22 +868,26 @@ object Resident {
   /** One cell row of an ANN mirror build; `codes` and `pq` are null on
     * layouts without the SQ8 / PQ bake.
     */
-  private final case class AnnRow(id: Long, vec: Array[Double], cell: Long,
+  private[operators] final case class AnnRow(id: Long, vec: Array[Double], cell: Long,
       codes: Array[Byte], cn2: Long, pq: Array[Byte], cn: Double)
 
-  /** The index cells, as mirror rows. */
-  private def annRows(index: Ann.AnnIndex): (DataFrame, Row => AnnRow) = {
-    val hasCodes = index.cells.columns.contains("codes")
-    val hasPq = index.cells.columns.contains("pq")
+  /** The tiers of an ANN index's cells, dealt by `corpus_id`. */
+  private[operators] def annTiers(cells: DataFrame, nRows: Option[Long],
+      allowed: Option[DataFrame]): Tiers[AnnRow, AnnResident] = {
+    val hasCodes = cells.columns.contains("codes")
+    val hasPq = cells.columns.contains("pq")
     val cols = Seq(col("corpus_id").cast("long"), asDouble(col("cv")),
       col("__cell").cast("long")) ++
       (if (hasCodes) Seq(col("codes"), col("cn2").cast("long")) else Nil) ++
       (if (hasPq) Seq(col("pq"), col("cn").cast("double")) else Nil)
     val pqOff = if (hasCodes) 5 else 3
-    (index.cells.select(cols: _*), r => AnnRow(r.getLong(0), r.getSeq[Double](1).toArray,
-      r.getLong(2),
-      if (hasCodes) r.getSeq[Byte](3).toArray else null, if (hasCodes) r.getLong(4) else 0L,
-      if (hasPq) r.getSeq[Byte](pqOff).toArray else null, if (hasPq) r.getDouble(pqOff + 1) else 0.0))
+    new Tiers[AnnRow, AnnResident]("ann", Seq(cells), nRows, allowed)(
+      _ => Seq((cells.select(cols: _*), r => AnnRow(r.getLong(0), r.getSeq[Double](1).toArray,
+        r.getLong(2),
+        if (hasCodes) r.getSeq[Byte](3).toArray else null, if (hasCodes) r.getLong(4) else 0L,
+        if (hasPq) r.getSeq[Byte](pqOff).toArray else null,
+        if (hasPq) r.getDouble(pqOff + 1) else 0.0))),
+      _.id, annMirror)
   }
 
   private def annMirror(rows: Iterator[AnnRow]): AnnResident = {
@@ -851,19 +910,6 @@ object Resident {
         if (hasPq) rs.map(_.cn).toArray else null))
     }
     new AnnResident(cells)
-  }
-
-  private[operators] def buildAnn(index: Ann.AnnIndex): AnnResident = {
-    val (frame, row) = annRows(index)
-    annMirror(frame.collect().iterator.map(row))
-  }
-
-  /** The partitioned tier of an ANN index: cells dealt by `corpus_id`. */
-  private[operators] def buildAnnPartitioned(
-      index: Ann.AnnIndex, nParts: Int): Partitioned[AnnResident] = {
-    val (frame, row) = annRows(index)
-    partitioned(frame.rdd.map { r => val a = row(r); (a.id: Any, a) }, nParts,
-      "ann-partitioned")(annMirror)
   }
 
   private[operators] val AnnSchema: StructType = StructType(Seq(
@@ -907,8 +953,8 @@ object Resident {
 
   /** The ANN fold over one mirror: per query, the candidate pool of its
     * probed cells as a [[TopKPayloadBuffer]] of `scoring.pool(k)` entries
-    * — (selection score, id) with the exact cosine as payload — handed to
-    * `emit`. The kernels are the plans': the exact scan [[VecScan.scores]]
+    * — (selection score, id) with the exact cosine as payload — as
+    * `(query_id, score, id, payload)` rows. The kernels are the plans': the exact scan [[VecScan.scores]]
     * (or [[VecScan.cosine]] of [[VecScan.dot]] for an allow-listed cell),
     * the same query quantization and int8 kernels, the same PQ lookup
     * table, ADC, zero-norm guard and `/ (qn·cn)` normalization, and the
@@ -919,8 +965,8 @@ object Resident {
     */
   private def foldAnn(
       res: AnnResident, probes: Seq[(Long, Array[Double], Double, Seq[Long])],
-      k: Int, scoring: AnnScoring, allowed: java.util.HashSet[java.lang.Long])(
-      emit: (Long, TopKPayloadBuffer) => Unit): Unit = {
+      k: Int, scoring: AnnScoring, allowed: AllowSet): Iterator[(Long, Double, Long, Double)] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long, Double)]
     val scores = cellScratch(res)
     def exact(qv: Array[Double], qn: Double, m: CellMat, i: Int): Double =
       if (allowed == null) scores(i) else VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
@@ -981,54 +1027,35 @@ object Resident {
             }
           }
       }
-      emit(qid, pool)
+      var i = 0
+      while (i < pool.n) { out += ((qid, pool.scores(i), pool.ids(i), pool.payloads(i))); i += 1 }
     }
+    out.iterator
   }
 
-  /** Driver-side [[Ann.annSearchIndex]], [[Ann.annSearchIndexInt8]] and
-    * [[Ann.annSearchIndexPq]] ([[foldAnn]], then the exact rerank).
+  /** An [[Ann.annSearchIndex]], [[Ann.annSearchIndexInt8]] or
+    * [[Ann.annSearchIndexPq]] through `tiers` ([[foldAnn]]): each fold
+    * emits its mirror's pool per query, and the merge re-selects the pools
+    * with the same [[TopKPayloadBuffer]] before the exact rerank. The
+    * global pool is the best of the mirrors' pools, so the rows are those
+    * of one fold over every cell.
     */
-  private[operators] def searchAnn(
-      res: AnnResident, probes: Seq[(Long, Array[Double], Double, Seq[Long])],
-      k: Int, scoring: AnnScoring,
-      allowed: java.util.HashSet[java.lang.Long] = null): Seq[Row] = {
-    residentSearches.incrementAndGet()
-    val out = Seq.newBuilder[Row]
-    foldAnn(res, probes, k, scoring, allowed) { (qid, pool) =>
-      val fin = rerank(pool, k)
-      var r = 0
-      while (r < fin.n) { out += Row(qid, fin.ids(r), fin.scores(r), r + 1); r += 1 }
-    }
-    out.result()
-  }
-
-  /** [[searchAnn]] over the partitioned tier: each task emits its
-    * partition's pool per query, and one task re-selects the pools with the
-    * same [[TopKPayloadBuffer]] before the exact rerank. The global pool is
-    * the best of the partitions' pools, so the rows are the driver fold's.
-    */
-  private[operators] def searchAnnPartitioned(
-      spark: SparkSession, tier: Partitioned[AnnResident],
-      probes: Seq[(Long, Array[Double], Double, Seq[Long])],
-      k: Int, scoring: AnnScoring,
-      allowed: java.util.HashSet[java.lang.Long] = null): DataFrame = {
-    val qids = probes.map(_._1).toArray
+  private[operators] def serveAnn(
+      tiers: Tiers[AnnRow, AnnResident], probes: => Seq[(Long, Array[Double], Double, Seq[Long])],
+      k: Int, scoring: AnnScoring): Option[DataFrame] = {
+    lazy val ps = probes
     val poolK = scoring.pool(k)
-    tier.search(spark, AnnSchema) { res =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long, Double)]
-      foldAnn(res, probes, k, scoring, allowed) { (qid, pool) =>
-        var i = 0
-        while (i < pool.n) { out += ((qid, pool.scores(i), pool.ids(i), pool.payloads(i))); i += 1 }
+    tiers.serve(AnnSchema) { val p = ps; foldAnn(_, p, k, scoring, _) } {
+      val qids = ps.map(_._1).toArray
+      hits => {
+        val pools = new java.util.HashMap[java.lang.Long, TopKPayloadBuffer]
+        hits.foreach { case (qid, s, id, p) =>
+          pools.computeIfAbsent(qid, _ => new TopKPayloadBuffer(poolK)).insert(s, id, p)
+        }
+        val merged = new java.util.HashMap[java.lang.Long, TopKBuffer]
+        pools.forEach((qid, pool) => { merged.put(qid, rerank(pool, k)); () })
+        inQueryOrder(qids, merged)((qid, buf, r) => InternalRow(qid, buf.ids(r), buf.scores(r), r + 1))
       }
-      out.iterator
-    } { hits =>
-      val pools = new java.util.HashMap[java.lang.Long, TopKPayloadBuffer]
-      hits.foreach { case (qid, s, id, p) =>
-        pools.computeIfAbsent(qid, _ => new TopKPayloadBuffer(poolK)).insert(s, id, p)
-      }
-      val merged = new java.util.HashMap[java.lang.Long, TopKBuffer]
-      pools.forEach((qid, pool) => { merged.put(qid, rerank(pool, k)); () })
-      inQueryOrder(qids, merged)((qid, buf, r) => InternalRow(qid, buf.ids(r), buf.scores(r), r + 1))
     }
   }
 

@@ -1,13 +1,13 @@
 package graft.operators
 
-/** Shared serving-regime gates for the persisted indexes. Every family
+/** Shared serving-regime settings for the persisted indexes. Every family
   * follows one rule: a PINNED index under [[Resident.driverResidentRows]]
   * serves from its driver mirror (zero jobs), a pinned index over it from
   * its partitioned tier ([[Resident.Partitioned]], one job), and anything
   * else runs the distributed plan. The table lives in README "Retrieval
-  * indexes"; the gates are here, in [[Resident.eligible]], and in the
-  * per-family search entry points; [[ServingSession]] adds the
-  * generation-following lifecycle on top.
+  * indexes"; the one gate is [[Resident.Tiers.serve]], which reads
+  * [[pinned]], the allow-set bound below and [[Resident.eligible]];
+  * [[ServingSession]] adds the generation-following lifecycle on top.
   *
   * Why the tiers exist, measured (r10, `ServingProbe` with PROBE_STEADY on
   * the bench box): an EMPTY one-task job (`spark.range(1).count()`) costs

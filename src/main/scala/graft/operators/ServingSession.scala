@@ -48,8 +48,7 @@ final class ServingSession[I] private[operators] (
     spark: SparkSession,
     val root: String,
     opener: String => I,
-    frames: I => Seq[DataFrame],
-    holders: I => Seq[Resident.Holder[_ <: Resident.Mirror]],
+    tiers: I => Resident.Tiers[_, _ <: Resident.Mirror],
     prewarm: I => Unit,
     checkIntervalMs: Long,
     asyncSwap: Boolean) extends AutoCloseable {
@@ -68,12 +67,14 @@ final class ServingSession[I] private[operators] (
     * append hold DIFFERENT plans and must not share a pin count).
     */
   private def pinKey(gen: Int, idx: I): String =
-    holders(idx).head.shareKey.getOrElse(IndexMaintenance.genPath(root, gen))
+    tiers(idx).shareKey.getOrElse(IndexMaintenance.genPath(root, gen))
 
   /** Drops every mirror `idx` holds (the driver mirror and the partitioned
     * tier); shared slots refcount their own.
     */
-  private def drop(idx: I): Unit = holders(idx).foreach(_.drop())
+  private def drop(idx: I): Unit = tiers(idx).drop()
+
+  private def frames(idx: I): Seq[DataFrame] = tiers(idx).frames
 
   private def openGen(gen: Int): (Int, I) = {
     require(gen >= 0, s"no committed generation under $root " +
@@ -88,6 +89,7 @@ final class ServingSession[I] private[operators] (
     try {
       frames(idx).foreach { f => f.persist(); f.count() }
       prewarm(idx)
+      tiers(idx).prewarm()
     } catch {
       case e: Throwable =>
         if (ServingSession.PinRegistry.unpin(key))
@@ -254,7 +256,7 @@ final class ServingSession[I] private[operators] (
     * [[Resident.residentCensus]] instead) and 0 again after [[close]].
     */
   def residentBytes: Long =
-    if (closed) 0L else holders(cur._2).head.peek.map(_.bytes).getOrElse(0L)
+    if (closed) 0L else tiers(cur._2).residentBytes
 
   private def release(gen: Int, idx: I): Unit = {
     // derived views of the released generation hold their OWN references
@@ -328,50 +330,35 @@ object ServingSession {
     * generation). `checkIntervalMs` ≤ 0 checks the generation markers on
     * every [[ServingSession.resolved]] call; `asyncSwap` moves the
     * open+pin+prewarm of a new generation off the search path entirely.
-    * Prewarm builds the driver mirror under the resident bound and the
-    * partitioned tier ([[Resident.Partitioned]]) over it, so the swap pays
-    * for either and every search is zero jobs or one; the ann and minhash
-    * sessions do the same.
+    * Prewarm reads the stats row, then builds the tier the index's
+    * [[Resident.Tiers]] will serve from — the driver mirror under the
+    * resident bound, the partitioned tier over it — so the swap pays for it
+    * and every search is zero jobs or one; the ann and minhash sessions do
+    * the same.
     */
   def bm25(spark: SparkSession, root: String,
       checkIntervalMs: Long = 0L,
       asyncSwap: Boolean = false): ServingSession[Lexical.Bm25Index] =
-    new ServingSession[Lexical.Bm25Index](
-      spark, root, p => Lexical.bm25OpenIndex(spark, p),
-      i => Seq(i.postings), i => Seq(i.residentHolder, i.partitionedHolder),
-      i => {
-        i.statsRow
-        if (Resident.eligible(spark, i.nRows, i.postings)) i.resident
-        else i.partitioned.materialize()
-      },
-      checkIntervalMs, asyncSwap)
+    new ServingSession[Lexical.Bm25Index](spark, root, p => Lexical.bm25OpenIndex(spark, p),
+      _.tiers, _.statsRow, checkIntervalMs, asyncSwap)
 
   /** Serve a maintained ANN root ([[Ann.annOpenIndex]] per generation) —
     * float, int8, and PQ searches all route through the one pinned index.
+    * Prewarm collects the centroid matrix, then builds the serving tier.
     */
   def ann(spark: SparkSession, root: String,
       checkIntervalMs: Long = 0L,
       asyncSwap: Boolean = false): ServingSession[Ann.AnnIndex] =
-    new ServingSession[Ann.AnnIndex](
-      spark, root, p => Ann.annOpenIndex(spark, p),
-      i => Seq(i.cells), i => Seq(i.residentHolder, i.partitionedHolder),
-      i => {
-        i.centroidMat
-        if (Resident.eligible(spark, i.nRows, i.cells)) i.resident
-        else i.partitioned.materialize()
-      },
-      checkIntervalMs, asyncSwap)
+    new ServingSession[Ann.AnnIndex](spark, root, p => Ann.annOpenIndex(spark, p),
+      _.tiers, _.centroidMat, checkIntervalMs, asyncSwap)
 
   /** Serve a maintained MinHash root ([[Dedup.minhashOpenIndex]] per
-    * generation) — the incremental-dedup serving tier.
+    * generation) — the incremental-dedup serving tier. Prewarm builds the
+    * serving tier.
     */
   def minhash(spark: SparkSession, root: String,
       checkIntervalMs: Long = 0L,
       asyncSwap: Boolean = false): ServingSession[Dedup.MinHashIndex] =
-    new ServingSession[Dedup.MinHashIndex](
-      spark, root, p => Dedup.minhashOpenIndex(spark, p),
-      i => Seq(i.postings, i.shingles), i => Seq(i.residentHolder, i.partitionedHolder),
-      i => if (Resident.eligible(spark, i.nRows, i.postings, i.shingles)) i.resident
-        else i.partitioned.materialize(),
-      checkIntervalMs, asyncSwap)
+    new ServingSession[Dedup.MinHashIndex](spark, root, p => Dedup.minhashOpenIndex(spark, p),
+      _.tiers, _ => (), checkIntervalMs, asyncSwap)
 }

@@ -43,6 +43,15 @@ object ColumnBridge {
         org.apache.spark.sql.catalyst.plans.physical.SinglePartition)(session))
   }
 
+  /** Wrap driver-held rows already in `schema`'s internal form as a
+    * LocalRelation: collecting it is a zero-job driver read.
+    */
+  def fromLocalRows(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** A DataFrame's analyzed logical plan (for composing custom operators). */
   def analyzedPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-identical (scores compared by bit pattern) to the distributed plan of
   * the same files opened unpinned, which stays the reference, and to the
   * driver mirror (and, for bm25, to `bm25TopK`), at any partition count. The
-  * specs live in `graft.operators` to reach the tiers' holders and builds.
+  * specs live in `graft.operators` to reach each index's `Resident.Tiers`.
   */
 class PartitionedTierSpec extends AnyFunSuite {
 
@@ -106,7 +106,7 @@ class PartitionedTierSpec extends AnyFunSuite {
           assert(got == bits(Lexical.bm25TopK(corpus, "id", "text", queries, "id", "text",
             5, k1, b)), s"$label: diverged from bm25TopK")
         } finally {
-          idx.partitionedHolder.drop(); idx.residentHolder.drop(); idx.postings.unpersist()
+          idx.tiers.drop(); idx.postings.unpersist()
         }
       }
       check("baked", base, 1.2, 0.75)
@@ -143,12 +143,10 @@ class PartitionedTierSpec extends AnyFunSuite {
       try {
         /** Search `idx` through a tier of `parts` partitions. */
         def at(parts: Int, idx: Lexical.Bm25Index): Set[String] = {
-          idx.partitionedHolder.get(
-            Resident.buildBm25Partitioned(Lexical.ensureDf(idx.postings), parts))
-          assert(idx.partitioned.parts.getNumPartitions == parts)
+          assert(idx.tiers.partitioned(parts).parts.getNumPartitions == parts)
           val (got, p, _) = counted(search(idx))
           assert(p == 1)
-          idx.partitionedHolder.drop()
+          idx.tiers.drop()
           got
         }
         // copy(): fresh holders with no share key, one tier per copy
@@ -185,7 +183,7 @@ class PartitionedTierSpec extends AnyFunSuite {
         val counted = jobsOf(search(idx).count())
         assert(counted == 1, s"a counted search ran $counted jobs")
       } finally {
-        idx.partitionedHolder.drop()
+        idx.tiers.drop()
         idx.postings.unpersist()
       }
     }
@@ -305,11 +303,10 @@ class PartitionedTierSpec extends AnyFunSuite {
   private def annTiers(idx: Ann.AnnIndex, parts: Seq[Int]): (Seq[Seq[Set[String]]], Seq[Set[String]]) = {
     val viaTiers = parts.map { n =>
       val tiered = idx.copy() // fresh holders with no share key: one tier per copy
-      tiered.partitionedHolder.get(Resident.buildAnnPartitioned(tiered, n))
-      assert(tiered.partitioned.parts.getNumPartitions == n)
+      assert(tiered.tiers.partitioned(n).parts.getNumPartitions == n)
       val (got, p, r) = tally(annSearches(tiered))
       assert(p == 3 && r == 0, s"$n partitions: the partitioned tier must serve all three")
-      tiered.partitionedHolder.drop()
+      tiered.tiers.drop()
       got
     }
     spark.conf.unset(Resident.DriverResidentRowsKey)
@@ -318,7 +315,7 @@ class PartitionedTierSpec extends AnyFunSuite {
       try tally(annSearches(mirror))
       finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
     assert(p == 0 && r == 3, "the driver mirror must serve all three")
-    mirror.residentHolder.drop()
+    mirror.tiers.drop()
     (viaTiers, viaMirror)
   }
 
@@ -410,11 +407,10 @@ class PartitionedTierSpec extends AnyFunSuite {
   private def minhashTiers(idx: Dedup.MinHashIndex, parts: Seq[Int]): (Seq[Set[String]], Set[String]) = {
     val viaTiers = parts.map { n =>
       val tiered = idx.copy()
-      tiered.partitionedHolder.get(Resident.buildMinhashPartitioned(tiered, n))
-      assert(tiered.partitioned.parts.getNumPartitions == n)
+      assert(tiered.tiers.partitioned(n).parts.getNumPartitions == n)
       val (got, p, r) = tally(mhSearch(tiered))
       assert(p == 1 && r == 0, s"$n partitions: the partitioned tier must serve")
-      tiered.partitionedHolder.drop()
+      tiered.tiers.drop()
       got
     }
     spark.conf.unset(Resident.DriverResidentRowsKey)
@@ -423,7 +419,7 @@ class PartitionedTierSpec extends AnyFunSuite {
       try tally(mhSearch(mirror))
       finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
     assert(p == 0 && r == 1, "the driver mirror must serve")
-    mirror.residentHolder.drop()
+    mirror.tiers.drop()
     (viaTiers, viaMirror)
   }
 
@@ -497,8 +493,8 @@ class PartitionedTierSpec extends AnyFunSuite {
         val mhCounted = jobsOf(Dedup.minhashSearchIndex(mh, mhBatch, "id", "text", 0.5).count())
         assert(mhCounted == 1, s"a counted minhash search ran $mhCounted jobs")
       } finally {
-        ann.partitionedHolder.drop(); ann.cells.unpersist()
-        mh.partitionedHolder.drop(); mh.postings.unpersist(); mh.shingles.unpersist()
+        ann.tiers.drop(); ann.cells.unpersist()
+        mh.tiers.drop(); mh.postings.unpersist(); mh.shingles.unpersist()
       }
     }
   }
