@@ -254,7 +254,7 @@ object Resident {
     * reference; the mirror dies with the LAST holder. Ad-hoc builds and
     * `copy()`d indexes have no key and keep the per-open behavior.
     */
-  final class Holder[A <: Mirror](kind: String) {
+  private[operators] final class Holder[A <: Mirror](kind: String) {
     /** Stamped once by the index openers (same package); never mutated
       * after the index escapes the open call.
       */
@@ -363,7 +363,7 @@ object Resident {
     private lazy val allowSet: Option[AllowSet] = allowed.flatMap(Serving.collectAllowSet)
 
     /** The driver mirror: every index row collected into one mirror. */
-    def driverMirror: M = driver.get(mirror(rows(false).iterator.flatMap { case (frame, row) =>
+    private def driverMirror: M = driver.get(mirror(rows(false).iterator.flatMap { case (frame, row) =>
       frame.collect().iterator.map(row)
     }))
 
@@ -442,7 +442,7 @@ object Resident {
   /** Partitions for `nRows` index rows: [[RowsPerPartition]] each, at least
     * one, at most `parallelism`.
     */
-  private[operators] def partitionsFor(spark: SparkSession, nRows: Option[Long]): Int =
+  private def partitionsFor(spark: SparkSession, nRows: Option[Long]): Int =
     math.max(1L, math.min((nRows.getOrElse(0L) + RowsPerPartition - 1) / RowsPerPartition,
       math.max(spark.sparkContext.defaultParallelism, 1).toLong)).toInt
 
