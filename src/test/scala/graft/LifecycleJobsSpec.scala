@@ -1,0 +1,96 @@
+package graft
+
+import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical}
+import graft.operators.IndexMaintenance.genPath
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Job budgets of the index write path: a delete that finds its ids, one
+  * that finds none, a compaction per family, and a maintenance pass over
+  * three roots where no signal fires. The write path sets index_churn's
+  * `rows_per_s`, so a refactor of the lifecycle must keep these counts.
+  */
+class LifecycleJobsSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def docs(n: Long): DataFrame = {
+    import spark.implicits._
+    (0L until n).map { i =>
+      (i, s"doc$i alpha doc$i beta doc$i gamma word${i % 5} delta epsilon")
+    }.toDF("doc_id", "text")
+  }
+
+  private def ids(xs: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    xs.toDF("id")
+  }
+
+  /** One committed gen-0 root per family. */
+  private def roots(): (String, String, String) = {
+    import spark.implicits._
+    val mh = tmp("graft_jobs_mh")
+    Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(docs(40), "doc_id", "text"),
+      genPath(mh, 0))
+    val bm = tmp("graft_jobs_bm25")
+    val (p, st) = Lexical.bm25BuildIndex(docs(40), "doc_id", "text")
+    Lexical.bm25WriteIndex(p, st, genPath(bm, 0), nBuckets = 8)
+    val an = tmp("graft_jobs_ann")
+    val v = (0L until 40L).map(i => (i, Array.tabulate(8)(d => math.sin(i * 13 + d * 7))))
+      .toDF("vec_id", "embedding")
+    val (cells, cents) = Ann.annBuildIndex(v, "vec_id", "embedding", nCentroids = 4)
+    Ann.annWriteIndex(cells, cents, genPath(an, 0))
+    Seq(mh, bm, an).foreach(IndexMaintenance.commitGeneration(spark, _, 0))
+    (mh, bm, an)
+  }
+
+  private def jobs(f: => Any): Long = SpecJobs.count(spark)(f)
+
+  test("deletes: jobs of a found and a not-found delete per family") {
+    val (mh, bm, an) = roots()
+    val (m, b, a) = (genPath(mh, 0), genPath(bm, 0), genPath(an, 0))
+    val found = ids(Seq(1L, 2L, 3L))
+    val absent = ids(Seq(900L, 901L))
+    val counts = Map(
+      "bm25 found" -> jobs(Lexical.bm25DeleteFromIndex(spark, b, found, "id", "d0")),
+      "bm25 absent" -> jobs(Lexical.bm25DeleteFromIndex(spark, b, absent, "id", "d1")),
+      "ann found" -> jobs(Ann.annDeleteFromIndex(spark, a, found, "id", "d0")),
+      "ann absent" -> jobs(Ann.annDeleteFromIndex(spark, a, absent, "id", "d1")),
+      "minhash found" -> jobs(Dedup.minhashDeleteFromIndex(spark, m, found, "id", "d0")),
+      "minhash absent" -> jobs(Dedup.minhashDeleteFromIndex(spark, m, absent, "id", "d1")))
+    assert(counts == Map(
+      "bm25 found" -> 6L, "bm25 absent" -> 5L,
+      "ann found" -> 5L, "ann absent" -> 5L,
+      "minhash found" -> 5L, "minhash absent" -> 5L), s"jobs were $counts")
+  }
+
+  test("compactions: jobs of one compaction per family over a tombstoned generation") {
+    val (mh, bm, an) = roots()
+    val (m, b, a) = (genPath(mh, 0), genPath(bm, 0), genPath(an, 0))
+    val doomed = ids(Seq(4L, 5L))
+    Lexical.bm25DeleteFromIndex(spark, b, doomed, "id", "d0")
+    Ann.annDeleteFromIndex(spark, a, doomed, "id", "d0")
+    Dedup.minhashDeleteFromIndex(spark, m, doomed, "id", "d0")
+    val counts = Map(
+      "bm25" -> jobs(Lexical.bm25CompactIndex(spark, b, genPath(bm, 1))),
+      "ann" -> jobs(Ann.annCompactIndex(spark, a, genPath(an, 1))),
+      "minhash" -> jobs(Dedup.minhashCompactIndex(spark, m, genPath(mh, 1))))
+    assert(counts == Map("bm25" -> 10L, "ann" -> 8L, "minhash" -> 6L),
+      s"jobs were $counts")
+  }
+
+  test("maintenance: jobs of a pass over three roots where nothing fires") {
+    val (mh, bm, an) = roots()
+    val (evs, js) = SpecJobs.of(spark)(IndexMaintenance.maintainIndexes(spark,
+      minhashRoot = Some(mh), bm25Root = Some(bm), annRoot = Some(an)))
+    assert(evs.map(_.action) == Seq("none", "none", "none"))
+    assert(js.size == 3, s"jobs were ${js.size}")
+  }
+}
