@@ -262,7 +262,8 @@ object Bench {
             graft.operators.Lexical.bm25DeleteFromIndex(spark, g0,
               docsDf.filter(pmod(col("doc_id"), lit(10)) === 7)
                 .select("doc_id"), "doc_id", "bench_d2")
-            val snap0 = graft.operators.Snapshots.openBm25(spark, sessRoot, "bench_pin")
+            val snap0 = graft.operators.Snapshots.open(spark,
+              graft.operators.Lexical.Bm25Lifecycle, sessRoot, "bench_pin")
             val snap = snap0.copy(postings = snap0.postings.coalesce(1))
             snap.postings.persist(); snap.postings.count()
             docSlices.map(q => () =>

@@ -3471,7 +3471,7 @@ object SparkEntry {
       val queries = ld(s, dir, "documents").filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("text"))
       Lexical.bm25SearchIndex(
-          graft.operators.Snapshots.openBm25(s, root, "s0"),
+          graft.operators.Snapshots.open(s, Lexical.Bm25Lifecycle, root, "s0"),
           queries, "qid", "text", k = 5)
         .withColumn("score", round(col("score"), 6))
         .orderBy(col("query_id"), col("rank"))
@@ -3502,7 +3502,7 @@ object SparkEntry {
     // added is empty, removed is exactly the post-capture takedowns.
     "q_snapshot_diff" -> ((s, dir) => {
       val root = steadySnapshotRoot(s, dir)
-      graft.operators.Snapshots.diffBm25(s, root, "s0")
+      graft.operators.Snapshots.diff(s, Lexical.Bm25Lifecycle, root, "s0")
         .orderBy(col("change"), col("id"))
     }),
 
@@ -3528,7 +3528,7 @@ object SparkEntry {
       val queries = ld(s, dir, "documents").filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("text"))
       Lexical.bm25SearchIndex(
-          graft.operators.Snapshots.openBm25AsOf(s, root, t0).get,
+          graft.operators.Snapshots.openAsOf(s, Lexical.Bm25Lifecycle, root, t0).get,
           queries, "qid", "text", k = 5)
         .withColumn("score", round(col("score"), 6))
         .orderBy(col("query_id"), col("rank"))
@@ -3541,7 +3541,7 @@ object SparkEntry {
       val queries = ld(s, dir, "documents").filter(col("doc_id") < 10)
         .select(col("doc_id").as("qid"), col("text"))
       Lexical.bm25SearchIndex(
-          graft.operators.Snapshots.openBm25AsOf(s, root, t1).get,
+          graft.operators.Snapshots.openAsOf(s, Lexical.Bm25Lifecycle, root, t1).get,
           queries, "qid", "text", k = 5)
         .withColumn("score", round(col("score"), 6))
         .orderBy(col("query_id"), col("rank"))

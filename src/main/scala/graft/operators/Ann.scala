@@ -81,8 +81,8 @@ object Ann {
     * p = 1 - θ/π). The scale path for near-dup candidate generation — a
     * bucket equi-join (one shuffle on the band key) instead of the O(n²)
     * all-pairs scan; hot buckets are handled by AQE skew splitting.
-    */
-  /** `hyperplanes` picks the projection family: `"md5"` (default; md5-derived
+    *
+    * `hyperplanes` picks the projection family: `"md5"` (default; md5-derived
     * signs the SQL oracle reproduces bit-exactly — see
     * graft.functions.SrpBandsMd5) or `"splitmix"` (seeded, constant-memory —
     * no sign matrix — for very high dims or when a different seed is wanted).
@@ -139,13 +139,6 @@ object Ann {
       .select(col("left_id"), coalesce(col("recall"), lit(0.0)).as("recall"))
   }
 
-  /** IVF top-k: returns (left_id, right_id, score, rank) like the exact join.
-    *
-    * Both the corpus→centroid assignment and the query→probe-list expansion are
-    * broadcast nested-loop joins against the (small) centroid table followed by
-    * partial-agg top-k — no all-pairs shuffle; the candidate scoring join is an
-    * equi-join on centroid_id.
-    */
   /** A persisted IVF index opened from disk: `cells` is the corpus stored
     * cell-partitioned (`corpus_id`, `cv` double vector, `__cell` = assigned
     * centroid id as a parquet partition column), `centroids` the small
@@ -214,21 +207,6 @@ object Ann {
     (cells, cents)
   }
 
-  /** Persist an [[annBuildIndex]] pair: cells land cell-partitioned (one
-    * parquet partition per centroid cell, rows clustered before the write so
-    * tasks hold whole cells — the [[Lexical.bm25WriteIndex]] move), plus the
-    * centroid table and a meta file carrying the cell count.
-    *
-    * Incremental updates: [[annAppendIndex]] absorbs a batch against the
-    * FROZEN centroids (the existing-centroids middle ground — same
-    * assignment kernel, same quantizer, `_COMMITTED`-marker atomicity).
-    * That keeps search ≡ rebuild-with-the-same-centroids exactly, but the
-    * centroids themselves were fitted before the appended data existed, so
-    * cell balance and recall degrade as the appended fraction grows
-    * ([[AnnIndex.appendStaleness]] is the rebuild-cadence signal) — a full
-    * rebuild refits them (centroid fit + assignment are the cheap part of
-    * the build; the recall gates re-verify each epoch).
-    */
   /** Bake the quantized scoring columns next to the double vectors: always
     * the IVF_SQ8 pair (`codes`, `cn2`); with a codebook also the IVF_PQ
     * pair (`pq` m-byte codes, `cn` exact double norm — ADC ranks by
@@ -267,12 +245,25 @@ object Ann {
       s""""n_centroids": $n, "n_rows": $nRows""")
   }
 
-  /** Write the cell layout. `pqM > 0` additionally fits a PQ codebook on
-    * the cells ([[Pq.pqTrain]], deterministic seeded sample) and bakes the
-    * IVF_PQ columns — the layout [[annSearchIndexPq]] serves from; the
-    * codebook persists as `pq_codebook.json` so appends encode new batches
-    * identically. `pqM = 0` (default) writes the classic IVF_SQ8 layout
-    * unchanged.
+  /** Persist an [[annBuildIndex]] pair: cells land cell-partitioned (one
+    * parquet partition per centroid cell, rows clustered before the write so
+    * tasks hold whole cells — the [[Lexical.bm25WriteIndex]] move), plus the
+    * centroid table and a meta file carrying the cell count. `pqM > 0`
+    * additionally fits a PQ codebook on the cells ([[Pq.pqTrain]],
+    * deterministic seeded sample) and bakes the IVF_PQ columns — the layout
+    * [[annSearchIndexPq]] serves from; the codebook persists as
+    * `pq_codebook.json` so appends encode new batches identically. `pqM = 0`
+    * (default) writes the classic IVF_SQ8 layout unchanged.
+    *
+    * Incremental updates: [[annAppendIndex]] absorbs a batch against the
+    * FROZEN centroids (the existing-centroids middle ground — same
+    * assignment kernel, same quantizer, `_COMMITTED`-marker atomicity).
+    * That keeps search ≡ rebuild-with-the-same-centroids exactly, but the
+    * centroids themselves were fitted before the appended data existed, so
+    * cell balance and recall degrade as the appended fraction grows
+    * ([[AnnIndex.appendStaleness]] is the rebuild-cadence signal) — a full
+    * rebuild refits them (centroid fit + assignment are the cheap part of
+    * the build; the recall gates re-verify each epoch).
     */
   def annWriteIndex(cells: DataFrame, centroids: DataFrame, path: String,
       pqM: Int = 0, pqSampleRows: Int = 4096, pqSeed: Long = 42L): Unit = {
@@ -345,26 +336,17 @@ object Ann {
     * one cell-partitioned layout with the SAME centroids (cell assignments
     * are already final; the quantizer re-derives bit-identical codes from
     * `cv`), so `open(dst) → search ≡ open(src) → search` row-for-row while
-    * the per-search union fan-in drops back to one root. Non-in-place by
-    * design: no atomicity gymnastics, the caller swaps paths (or just
-    * points new opens at `dstPath`) and deletes the old directory on their
-    * own cadence. This bounds append accumulation WITHOUT refitting —
+    * the per-search union fan-in drops back to one root
+    * ([[IndexLifecycle.compact]]). This bounds append accumulation WITHOUT
+    * refitting —
     * [[AnnIndex.appendStaleness]] still says when a true rebuild (refit) is
     * due, and a compact does not reset it: the new meta's row count is the
     * full corpus, so staleness reads 0 — record the epoch externally if the
     * distinction matters.
     */
   def annCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    IndexLayout.requireNonInPlace(srcPath, dstPath)
-    val idx = annOpenIndex(spark, srcPath)
-    // the source codebook passes through unchanged (retraining would change
-    // every code): compacted searches stay row-identical to the source's
-    writeLayout(idx.cells.select(col("corpus_id"), col("cv"), col("__cell")),
-      idx.centroids, dstPath, idx.pqCodebook)
-    // the opened cells already exclude tombstones: deletes apply physically
-    IndexLayout.carryLedgers(spark, srcPath, dstPath)
-  }
+      srcPath: String, dstPath: String): Unit =
+    AnnLifecycle.compact(spark, srcPath, dstPath)
 
   /** Exact schemas of the persisted cell/centroid layouts, as
     * [[writeLayout]] / [[annAppendIndex]] write them (r16): a known schema
@@ -400,16 +382,12 @@ object Ann {
     * `__cell=` partition pruning still holds in every branch; the meta's
     * row count is topped up with the committed batches' counts so the
     * serving fast-path gate and the staleness signal see the true size.
-    */
-  def annOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): AnnIndex =
-    annOpenIndex(spark, path, None)
-
-  /** `pins` (r15, [[Snapshots]]): restrict the open to exactly the named
+    * `pins` (r15, [[Snapshots]]) restricts the open to exactly the named
     * committed batches and tombstone dirs — the capture-time view; missing
     * pinned components REFUSE (see [[Lexical.bm25OpenIndex]]).
     */
   def annOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      pins: Option[IndexPins]): AnnIndex = {
+      pins: Option[IndexPins] = None): AnnIndex = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = IndexLayout.readMeta(fs, path, IndexLayout.AnnIvf)
@@ -449,36 +427,87 @@ object Ann {
     * that's the semantics, not an approximation). Centroids fitted over
     * since-deleted data drift from the surviving distribution the same slow
     * way append-staleness drifts — [[IndexMaintenance]]'s refit signal is
-    * the repair, unchanged.
-    *
-    * Ids not present (never indexed, or already tombstoned) are ignored with
-    * zero movement. @return true if the tombstone was written (or resolved
-    * to an empty no-op), false if `delId` was already committed or applied
-    * by a compaction (idempotent no-op).
+    * the repair, unchanged. Protocol and return value:
+    * [[IndexLifecycle.delete]].
     */
   def annDeleteFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, idCol: String, delId: String): Boolean = {
-    IndexLayout.requireDirName("delId", delId)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (Tombstones.alreadyDeleted(fs, path, delId)) return false
-    // open() excludes prior tombstones: re-deleting an already-deleted id
-    // under a new delId resolves to "not present"
-    val idx = annOpenIndex(spark, path)
-    val del = ids.select(col(idCol).cast("long").as("id")).distinct()
-    val found = idx.cells
-      .join(del, idx.cells("corpus_id") === del("id"), "left_semi")
-      .select(col("corpus_id").as("id"))
-      .localCheckpoint(false) // two consumers below: one compute
-    val n = found.count()
-    // nothing present: a committed no-op with NO tombstone dir
-    if (n == 0) { found.unpersist(); return true }
-    // one cell row per vector: ids dropped == rows dropped
-    Tombstones.writeDelete(spark, path, delId, found,
-      nIds = n, nRows = n, nDocs = 0.0, sumDl = 0.0)
-    found.unpersist()
-    true
+      ids: DataFrame, idCol: String, delId: String): Boolean =
+    AnnLifecycle.delete(spark, path, ids, idCol, delId)
+
+  /** The IVF lifecycle ([[IndexLifecycle]]): one cell row per vector, so a
+    * delete drops as many rows as ids, and a compaction rewrites the cells
+    * at the SAME centroids and codebook. Maintenance tries a centroid refit
+    * first (the share of the corpus appended since the last refit, off by
+    * default), then compacts on the appended share, then on the tombstoned
+    * share. Every compaction carries the `rows_at_refit` watermark; a refit
+    * resets it to the corpus it fitted.
+    */
+  object AnnLifecycle extends IndexLifecycle("ann", "corpus_id") {
+    type Index = AnnIndex
+
+    def open(spark: org.apache.spark.sql.SparkSession, path: String, pins: Option[IndexPins]) =
+      annOpenIndex(spark, path, pins)
+
+    protected def members(index: AnnIndex): DataFrame = index.cells
+
+    protected def deltas(index: AnnIndex, doomed: DataFrame): Tombstones.Deltas = {
+      val n = doomed.count()
+      Tombstones.Deltas(nIds = n, nRows = n)
+    }
+
+    // the source codebook passes through unchanged (retraining would change
+    // every code): compacted searches stay row-identical to the source's
+    protected def compactInto(index: AnnIndex, dst: String): Unit =
+      writeLayout(index.cells.select(col("corpus_id"), col("cv"), col("__cell")),
+        index.centroids, dst, index.pqCodebook)
+
+    private[operators] def signals(spark: org.apache.spark.sql.SparkSession, idx: AnnIndex,
+        src: String, policy: IndexMaintenance.Policy): Seq[IndexLifecycle.Signal] = {
+      import org.apache.hadoop.fs.Path
+      val fs = new Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val refitMeta = "refit_meta.json"
+      def writeRefitMeta(dst: String, rows: Long): Unit = IndexLayout.writeJson(fs,
+        new Path(dst, refitMeta), s"""{"rows_at_refit": $rows}""", overwrite = true)
+      // corpus rows as of the last centroid refit, carried across
+      // compactions so the refit signal measures drift since the centroids
+      // were FITTED, not since the last fold; a generation written by a
+      // build or a refit has no file: base rows = meta rows − appended
+      val baseRows =
+        if (fs.exists(new Path(src, refitMeta)))
+          Some(IndexLayout.readJson(fs, new Path(src, refitMeta)).get("rows_at_refit").asLong())
+        else idx.nRows.map(_ - idx.appendedRows)
+      val sinceRefit = (for (n <- idx.nRows; b <- baseRows; if n > 0)
+        yield 1.0 - b.toDouble / n).getOrElse(0.0)
+      // true rebuild: refit centroids (and the PQ codebook, if any) on the
+      // grown corpus — the one action that repairs recall drift. The opened
+      // cells already exclude tombstones, so the refit fits the SURVIVING
+      // corpus and applies deletes physically.
+      def refit(dst: String): Unit = {
+        val corpus = idx.cells.select(col("corpus_id"), col("cv"))
+        val (cells, cents) = annBuildIndex(corpus, "corpus_id", "cv",
+          nCentroids = idx.nCentroids)
+        annWriteIndex(cells, cents, dst, pqM = idx.pqCodebook.map(_.m).getOrElse(0))
+        IndexLayout.carryLedgers(spark, src, dst)
+        // the watermark is the corpus the centroids were FITTED on: nRows is
+        // a scan estimate that still counts tombstoned rows, but the refit
+        // trained on the excluded frame — record survivors only
+        writeRefitMeta(dst, idx.nRows.getOrElse(0L) - idx.deletedRows)
+      }
+      // compaction folds batches but does NOT refit: the rows-at-refit
+      // watermark carries so the refit signal keeps accumulating
+      def compact(dst: String): Unit = {
+        this.compact(spark, src, dst)
+        baseRows.foreach(writeRefitMeta(dst, _))
+      }
+      Seq(
+        IndexLifecycle.Signal("stalenessSinceRefit", sinceRefit,
+          policy.annRefitStaleness, "refit", refit),
+        IndexLifecycle.Signal("appendFraction", idx.appendStaleness,
+          policy.annMaxAppendFraction, "compact", compact),
+        IndexLifecycle.Signal("deleteFraction", idx.deleteFraction,
+          policy.maxDeleteFraction, "compact", compact))
+    }
   }
 
   /** A FILTERED view of a persisted index — the vector-DB "filtered search"
@@ -549,22 +578,6 @@ object Ann {
     */
   private[graft] val joinRestrictionSearches = new java.util.concurrent.atomic.AtomicLong
 
-  /** Probe assignment + cell restriction shared by [[annSearchIndex]] /
-    * [[annSearchIndexInt8]]. Both regimes are row-identical by construction
-    * (the guard spec differential-tests them); only the physical shape
-    * differs:
-    *
-    *  - [[LocalProbes]] (under the bound): the query vectors live on the
-    *    driver, probes were computed against the cached centroid matrix
-    *    with the SAME dot/cosine/TopKBuffer kernels as the distributed scan
-    *    (bit-equal assignments), and `exploded` carries the fused
-    *    `(query_id, vec, norm, cell)` rows — callers build the scoring
-    *    input as ONE LocalRelation, with no probe broadcast and no
-    *    query-probe join in the plan (the serving regime's job-count lever).
-    *  - [[DistProbes]] (over the bound): nothing touches the driver; the
-    *    probe frame stays distributed and the restriction is a broadcast
-    *    semi-join.
-    */
   /** LocalProbes' exploded rows regrouped per query (probe order preserved;
     * TopK selection is order-invariant anyway) — the [[Resident]] search
     * input shape.
@@ -594,6 +607,22 @@ object Ann {
     case _ => None
   }
 
+  /** Probe assignment + cell restriction shared by [[annSearchIndex]] /
+    * [[annSearchIndexInt8]]. Both regimes are row-identical by construction
+    * (the guard spec differential-tests them); only the physical shape
+    * differs:
+    *
+    *  - [[LocalProbes]] (under the bound): the query vectors live on the
+    *    driver, probes were computed against the cached centroid matrix
+    *    with the SAME dot/cosine/TopKBuffer kernels as the distributed scan
+    *    (bit-equal assignments), and `exploded` carries the fused
+    *    `(query_id, vec, norm, cell)` rows — callers build the scoring
+    *    input as ONE LocalRelation, with no probe broadcast and no
+    *    query-probe join in the plan (the serving regime's job-count lever).
+    *  - [[DistProbes]] (over the bound): nothing touches the driver; the
+    *    probe frame stays distributed and the restriction is a broadcast
+    *    semi-join.
+    */
   private def probeAndPrune(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
       nProbe: Int, maxProbeRowsParam: Long): ProbeResult = {
@@ -869,6 +898,13 @@ object Ann {
         cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score")), k)
   }
 
+  /** IVF top-k: returns (left_id, right_id, score, rank) like the exact join.
+    *
+    * Both the corpus→centroid assignment and the query→probe-list expansion are
+    * broadcast nested-loop joins against the (small) centroid table followed by
+    * partial-agg top-k — no all-pairs shuffle; the candidate scoring join is an
+    * equi-join on centroid_id.
+    */
   def ivfTopK(
       queries: DataFrame, qId: String, qVec: String,
       corpus: DataFrame, cId: String, cVec: String,

@@ -758,17 +758,12 @@ object Dedup extends Logging {
     * COMMITTED batch are rewritten as one band-partitioned layout with the
     * same banding params (the postings already carry their band buckets —
     * nothing is re-shingled, so `open(dst) → search ≡ open(src) → search`
-    * row-for-row) and a freshly counted meta row count. Non-in-place by
-    * design, like the ANN sibling: no atomicity gymnastics, the caller
-    * swaps paths and deletes the old directory on their own cadence.
+    * row-for-row) and a freshly counted meta row count
+    * ([[IndexLifecycle.compact]]).
     */
   def minhashCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    IndexLayout.requireNonInPlace(srcPath, dstPath)
-    minhashWriteIndex(minhashOpenIndex(spark, srcPath), dstPath)
-    // the opened frames already exclude tombstones: deletes apply physically
-    IndexLayout.carryLedgers(spark, srcPath, dstPath)
-  }
+      srcPath: String, dstPath: String): Unit =
+    MinhashLifecycle.compact(spark, srcPath, dstPath)
 
   /** Exact schemas of the persisted layout components, as
     * [[minhashWriteIndex]] / [[minhashAppendIndex]] write them (r16): a
@@ -808,17 +803,13 @@ object Dedup extends Logging {
     * without the `_COMMITTED` marker are in-flight or failed appends and
     * are ignored). Multi-path parquet reads keep per-directory `band=`
     * partition pruning, so a banded search still scans only the probed
-    * band's files in each layout.
-    */
-  def minhashOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): MinHashIndex =
-    minhashOpenIndex(spark, path, None)
-
-  /** `pins` (r15, [[Snapshots]]): restrict the open to exactly the named
-    * committed batches and tombstone dirs — the capture-time view; missing
-    * pinned components REFUSE (see [[Lexical.bm25OpenIndex]]).
+    * band's files in each layout. `pins` (r15, [[Snapshots]]) restricts
+    * the open to exactly the named committed batches and tombstone dirs —
+    * the capture-time view; missing pinned components REFUSE (see
+    * [[Lexical.bm25OpenIndex]]).
     */
   def minhashOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      pins: Option[IndexPins]): MinHashIndex = {
+      pins: Option[IndexPins] = None): MinHashIndex = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = IndexLayout.readMeta(fs, path, IndexLayout.MinHashLsh)
@@ -865,48 +856,60 @@ object Dedup extends Logging {
     * hash-checks it). A deleted document stops matching incoming batches
     * immediately: a re-crawled copy of a taken-down page is NOT a duplicate
     * of the (now absent) corpus entry and will be admitted as new — exactly
-    * the takedown semantics a dedup corpus needs.
-    *
-    * Ids not present (never indexed, or already tombstoned) are ignored
-    * with zero movement. @return true if the tombstone was written (or
-    * resolved to an empty no-op), false if `delId` was already committed or
-    * applied by a compaction (idempotent no-op).
+    * the takedown semantics a dedup corpus needs. Protocol and return
+    * value: [[IndexLifecycle.delete]].
     */
   def minhashDeleteFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, idCol: String, delId: String): Boolean = {
-    IndexLayout.requireDirName("delId", delId)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (Tombstones.alreadyDeleted(fs, path, delId)) return false
-    // open() excludes prior tombstones: re-deleting an already-deleted id
-    // under a new delId resolves to "not present"
-    val idx = minhashOpenIndex(spark, path)
-    val del = ids.select(col(idCol).cast("long").as("id")).distinct()
-    // one shingle row per document — the membership table
-    val found = idx.shingles
-      .join(del, idx.shingles("id") === del("id"), "left_semi")
-      .select(col("id"))
-      .localCheckpoint(false) // two consumers below: one compute
-    val n = found.count()
-    // nothing present: a committed no-op with NO tombstone dir
-    if (n == 0) { found.unpersist(); return true }
-    // exactly numBands posting rows per document (posexplode over the fixed
-    // band sequence), so the dropped-row count needs no second scan
-    Tombstones.writeDelete(spark, path, delId, found,
-      nIds = n, nRows = n * idx.numBands, nDocs = 0.0, sumDl = 0.0)
-    found.unpersist()
-    true
+      ids: DataFrame, idCol: String, delId: String): Boolean =
+    MinhashLifecycle.delete(spark, path, ids, idCol, delId)
+
+  /** The MinHash lifecycle ([[IndexLifecycle]]): one shingle row per
+    * document is the membership table, and every document has exactly
+    * `numBands` posting rows (posexplode over the fixed band sequence), so a
+    * delete's dropped-row count needs no second scan. Maintenance compacts
+    * on the union fan-in, then on the tombstoned share, and carries the
+    * `ingest_manifests` directory into the new generation so a
+    * crash-replayed ingest epoch still reads its committed survivor set
+    * back from the new current path.
+    */
+  object MinhashLifecycle extends IndexLifecycle("minhash", "id") {
+    type Index = MinHashIndex
+
+    def open(spark: org.apache.spark.sql.SparkSession, path: String, pins: Option[IndexPins]) =
+      minhashOpenIndex(spark, path, pins)
+
+    protected def members(index: MinHashIndex): DataFrame = index.shingles
+
+    protected def deltas(index: MinHashIndex, doomed: DataFrame): Tombstones.Deltas = {
+      val n = doomed.count()
+      Tombstones.Deltas(nIds = n, nRows = n * index.numBands)
+    }
+
+    protected def compactInto(index: MinHashIndex, dst: String): Unit =
+      minhashWriteIndex(index, dst)
+
+    private[operators] def signals(spark: org.apache.spark.sql.SparkSession, index: MinHashIndex,
+        src: String, policy: IndexMaintenance.Policy): Seq[IndexLifecycle.Signal] = {
+      import org.apache.hadoop.fs.{FileUtil, Path}
+      def compact(dst: String): Unit = {
+        this.compact(spark, src, dst)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val fs = new Path(src).getFileSystem(conf)
+        val mani = new Path(src, "ingest_manifests")
+        // a false return must fail the pass before the generation commits
+        if (fs.exists(mani)) require(
+          FileUtil.copy(fs, mani, fs, new Path(dst, "ingest_manifests"), false, conf),
+          s"copy $mani -> $dst/ingest_manifests reported failure")
+      }
+      Seq(
+        IndexLifecycle.Signal("unionFanIn", index.unionFanIn,
+          policy.minhashMaxFanIn, "compact", compact),
+        IndexLifecycle.Signal("deleteFraction", index.deleteFraction,
+          policy.maxDeleteFraction, "compact", compact))
+    }
   }
 
-  /** Near-dup pairs between an incoming batch and the persisted corpus:
-    * `(corpus_id, batch_id, jaccard)` with jaccard ≥ the threshold — exactly
-    * [[contamination]]'s relation when corpus/benchmark are the same frames
-    * (same banding, same verify), but the corpus side costs a parquet scan
-    * instead of a full re-shingle + re-minhash. Only the BATCH is shingled
-    * and signed per run; the band equi-join shuffles the batch's ≤numBands
-    * rows per doc against the persisted postings.
-    */
   /** Allow-list-restricted view of a MinHash index — the near-dup leg of
     * the metadata-filtered-retrieval surface ([[graft.operators.Ann
     * .annFilteredView]] / [[graft.operators.Lexical.bm25FilteredView]] are
@@ -929,6 +932,14 @@ object Dedup extends Logging {
       index: MinHashIndex, allowed: DataFrame, idCol: String): MinHashIndex =
     index.tiers.view(allowed, idCol)(a => index.copy(allowed = a))(_.tiers)
 
+  /** Near-dup pairs between an incoming batch and the persisted corpus:
+    * `(corpus_id, batch_id, jaccard)` with jaccard ≥ the threshold — exactly
+    * [[contamination]]'s relation when corpus/benchmark are the same frames
+    * (same banding, same verify), but the corpus side costs a parquet scan
+    * instead of a full re-shingle + re-minhash. Only the BATCH is shingled
+    * and signed per run; the band equi-join shuffles the batch's ≤numBands
+    * rows per doc against the persisted postings.
+    */
   def minhashSearchIndex(
       index: MinHashIndex, batch: DataFrame, idCol: String, textCol: String,
       jaccardThreshold: Double = 0.5): DataFrame = {

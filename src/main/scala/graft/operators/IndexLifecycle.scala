@@ -1,0 +1,114 @@
+package graft.operators
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+/** One persisted index family's write lifecycle, declared once beside the
+  * family's verbs ([[Lexical.Bm25Lifecycle]], [[Ann.AnnLifecycle]],
+  * [[Dedup.MinhashLifecycle]]): how it opens, which frame lists its
+  * servable ids, what a delete measures, how a compaction rewrites an open
+  * index, and its ordered maintenance signals. The protocols over it are
+  * written once: delete and compaction here; the maintenance pass, audits
+  * and takedown fan-out in [[IndexMaintenance]]; snapshot opens and diff in
+  * [[Snapshots]]. `name` is the short name events, audits and the SQL
+  * table functions use; `memberId` is the id column of [[members]].
+  */
+abstract class IndexLifecycle(val name: String, memberId: String) {
+
+  /** What the family's opener returns. */
+  type Index
+
+  /** Open the index at `path`; `pins` restricts it to a snapshot's components. */
+  def open(spark: SparkSession, path: String, pins: Option[IndexPins]): Index
+
+  /** The frame whose `memberId` lists the servable (not tombstoned) ids. */
+  protected def members(index: Index): DataFrame
+
+  /** A delete's rows per found id, from the [[members]] rows of the ids it
+    * names: an `id` column plus whatever [[deltas]] reads.
+    */
+  protected def perId(found: DataFrame): DataFrame = found.select(col(memberId).as("id"))
+
+  /** The exact stat deltas of tombstoning the (pinned) `doomed` rows;
+    * `nIds` 0 means none of the named ids is present.
+    */
+  protected def deltas(index: Index, doomed: DataFrame): Tombstones.Deltas
+
+  /** The family's check of a delete's id frame before anything is read. */
+  protected def checkIds(ids: DataFrame, idCol: String): Unit = ()
+
+  /** Write `index` as a fresh single layout at `dst` with the family's writer. */
+  protected def compactInto(index: Index, dst: String): Unit
+
+  /** The maintenance signals of `index`, opened from generation `src`, in
+    * the order they are tried ([[IndexMaintenance.maintainIndexes]]).
+    */
+  private[operators] def signals(spark: SparkSession, index: Index, src: String,
+      policy: IndexMaintenance.Policy): Seq[IndexLifecycle.Signal]
+
+  /** The servable ids of `index` as one long `id` column. */
+  final def servable(index: Index): DataFrame =
+    members(index).select(col(memberId).cast("long").as("id"))
+
+  /** Tombstone the ids of `ids`' `idCol` that the index at `path` serves,
+    * under `delId` ([[Tombstones]] holds the on-disk protocol). Ids not
+    * present (never indexed, or already tombstoned: the open excludes
+    * them) move nothing, and a delete that finds none writes no dir.
+    *
+    * @return true if the tombstone was written (or resolved to an empty
+    *         no-op), false if `delId` was already committed or applied by a
+    *         compaction (idempotent no-op).
+    */
+  final def delete(spark: SparkSession, path: String,
+      ids: DataFrame, idCol: String, delId: String): Boolean = {
+    IndexLayout.requireDirName("delId", delId)
+    checkIds(ids, idCol)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (Tombstones.alreadyDeleted(fs, path, delId)) return false
+    val index = open(spark, path, None)
+    val del = ids.select(col(idCol).cast("long").as("id")).distinct()
+    val m = members(index)
+    val doomed = perId(m.join(del, m(memberId) === del("id"), "left_semi"))
+      .localCheckpoint(false) // two consumers below: one compute
+    try {
+      val d = deltas(index, doomed)
+      // none present: a committed no-op with NO dir (an empty parquet dir
+      // has no footers and would corrupt later opens)
+      if (d.nIds > 0) Tombstones.writeDelete(spark, path, delId, doomed, d)
+    } finally doomed.unpersist()
+    true
+  }
+
+  /** Compact the index at `srcPath` into a fresh single layout at
+    * `dstPath`: the open frames (committed batches in, tombstones out) are
+    * rewritten by [[compactInto]], then the absorbed-batch and
+    * applied-delete ledgers are carried ([[IndexLayout.carryLedgers]]) so
+    * a crash-replayed append or delete of a folded id stays a no-op.
+    * Non-in-place: the caller swaps paths and deletes the old directory on
+    * their own cadence.
+    */
+  final def compact(spark: SparkSession, srcPath: String, dstPath: String): Unit = {
+    IndexLayout.requireNonInPlace(srcPath, dstPath)
+    compactInto(open(spark, srcPath, None), dstPath)
+    IndexLayout.carryLedgers(spark, srcPath, dstPath)
+  }
+}
+
+object IndexLifecycle {
+
+  /** One maintenance signal: it fires when `value` is strictly above
+    * `threshold`, and then `act` writes the next generation into the
+    * directory it is given. `action` names what `act` does (`compact` |
+    * `refit`).
+    */
+  final case class Signal(name: String, value: Double, threshold: Double,
+      action: String, act: String => Unit)
+
+  /** The family called `name` (`bm25` | `ann` | `minhash`). */
+  def named(name: String): IndexLifecycle = {
+    val all = Seq(Lexical.Bm25Lifecycle, Ann.AnnLifecycle, Dedup.MinhashLifecycle)
+    all.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"family must be ${all.map(_.name).mkString("|")}, got '$name'"))
+  }
+}

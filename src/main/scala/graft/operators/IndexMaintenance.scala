@@ -42,6 +42,15 @@ import org.apache.spark.sql.functions.col
   * additionally CARRIES the `ingest_manifests` directory forward, so a
   * replayed [[graft.streaming.StreamOps.ingestEpochPipeline]] epoch still
   * re-delivers its committed survivor set after the swap.
+  *
+  * ## One loop over the family descriptors
+  *
+  * Nothing here is written per family: each managed root is paired with
+  * its family's [[IndexLifecycle]] descriptor, and [[maintainIndexes]],
+  * both removal audits and the takedown fan-out run one loop over those
+  * pairs. A family's descriptor orders its signals and says what each one
+  * does when it fires (compact, carrying the MinHash ingest manifests or
+  * the ANN refit watermark; or the ANN refit itself).
   */
 object IndexMaintenance {
 
@@ -154,17 +163,9 @@ object IndexMaintenance {
       keepLatest: Int = 1): Seq[Int] = {
     require(keepLatest >= 1, s"keepLatest must be >= 1, got $keepLatest")
     val fs = fsOf(spark, root)
-    val cur = currentGeneration(spark, root)
-    // mirror currentGeneration's missing-root tolerance: pruning a
-    // not-yet-seeded root is a no-op, not a FileNotFoundException
-    if (cur < 0 || !fs.exists(new Path(root))) return Seq.empty
-    val committed = fs.listStatus(new Path(root)).toSeq
-      .collect { case st if st.isDirectory => st.getPath.getName }
-      .collect { case GenRe(n) if
-        fs.exists(new Path(genPath(root, n.toInt), GenMarker)) => n.toInt }
-      .sorted
-    val pinned = Snapshots.pinnedGens(spark, root)
-    val old = committed.dropRight(keepLatest).filterNot(pinned)
+    // a not-yet-seeded root lists nothing: pruning it is a no-op
+    val old = committedGenerations(spark, root).dropRight(keepLatest)
+      .filterNot(Snapshots.pinnedGens(spark, root))
     old.foreach(n => fs.delete(new Path(genPath(root, n)), true))
     old
   }
@@ -238,6 +239,13 @@ object IndexMaintenance {
   private val LogMarker = "_COMMITTED"
   private val PassRe = "pass-(\\d+)".r
 
+  /** Test seam for the two-writer log race: invoked between the
+    * committed-pass listing and the collision skip loop, so a spec can
+    * commit a concurrent maintainer's pass inside the exact window the
+    * skip loop exists for (IndexMaintenanceSpec). No-op in production.
+    */
+  private[graft] var logListedHook: () => Unit = () => ()
+
   /** Append one maintenance pass's events under `root/maintenance_log/
     * pass-<n>/` — the same append-batch idiom as everything else here:
     * write the parquet fully, then ONE atomic marker create makes the pass
@@ -259,13 +267,6 @@ object IndexMaintenance {
     * on the marker create and must simply re-run), so one maintainer per
     * root remains the sensible deployment.
     */
-  /** Test seam for the two-writer log race: invoked between the
-    * committed-pass listing and the collision skip loop, so a spec can
-    * commit a concurrent maintainer's pass inside the exact window the
-    * skip loop exists for (IndexMaintenanceSpec). No-op in production.
-    */
-  private[graft] var logListedHook: () => Unit = () => ()
-
   private def appendLog(spark: SparkSession, root: String, events: Seq[Event]): Unit = {
     if (events.isEmpty) return
     val fs = fsOf(spark, root)
@@ -509,7 +510,7 @@ object IndexMaintenance {
       annRoot: Option[String] = None,
       jaccardThreshold: Double = 0.8,
       denyFuture: Boolean = false): org.apache.spark.sql.DataFrame = {
-    val idx = Dedup.minhashOpenIndex(spark, currentPath(spark, minhashRoot))
+    val idx = Dedup.MinhashLifecycle.open(spark, currentPath(spark, minhashRoot), None)
     val resolved = Dedup.minhashSearchIndex(idx, probes, idCol, textCol, jaccardThreshold)
       .select(org.apache.spark.sql.functions.col("corpus_id")
         .cast("long").as("doc_id"))
@@ -525,13 +526,52 @@ object IndexMaintenance {
     // (no-op) or the ids re-resolve because minhash is still live.
     if (denyFuture)
       graft.streaming.Denylist.append(spark, minhashRoot, resolved, "doc_id", delId)
-    bm25Root.foreach(r => Lexical.bm25DeleteFromIndex(spark,
-      currentPath(spark, r), resolved, "doc_id", delId))
-    annRoot.foreach(r => Ann.annDeleteFromIndex(spark,
-      currentPath(spark, r), resolved, "doc_id", delId))
-    Dedup.minhashDeleteFromIndex(spark,
-      currentPath(spark, minhashRoot), resolved, "doc_id", delId)
+    takedown(spark, resolved, "doc_id", delId, minhashRoot, bm25Root, annRoot)
     resolved
+  }
+
+  /** The managed roots of one call, in maintenance and audit order:
+    * minhash, bm25, ann.
+    */
+  private def managed(minhashRoot: Option[String], bm25Root: Option[String],
+      annRoot: Option[String]): Seq[(IndexLifecycle, String)] =
+    minhashRoot.map((Dedup.MinhashLifecycle, _)).toSeq ++
+      bm25Root.map((Lexical.Bm25Lifecycle, _)) ++ annRoot.map((Ann.AnnLifecycle, _))
+
+  /** The takedown fan-out: tombstone `ids` under `delId` on the current
+    * generation of every managed root — bm25 and ann first, the MinHash
+    * delete LAST ([[takedownByContent]]'s crash-replay order).
+    */
+  private[graft] def takedown(spark: SparkSession,
+      ids: org.apache.spark.sql.DataFrame, idCol: String, delId: String,
+      minhashRoot: String, bm25Root: Option[String], annRoot: Option[String]): Unit =
+    (managed(None, bm25Root, annRoot) :+ ((Dedup.MinhashLifecycle, minhashRoot))).foreach {
+      case (family, root) => family.delete(spark, currentPath(spark, root), ids, idCol, delId)
+    }
+
+  /** Both audits: each leg's servable ids semi-joined against the
+    * root-level [[graft.streaming.Denylist]], labelled by one string column
+    * per `keys` entry. The denylist is pinned once and BROADCAST; `legs` is
+    * read only when a denylist exists, so a root without one opens nothing.
+    */
+  private def audit(spark: SparkSession, denylistRoot: String, keys: Seq[String],
+      legs: => Seq[(Seq[String], org.apache.spark.sql.DataFrame)]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, lit}
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(keys.map(StructField(_, StringType)) :+
+        StructField("id", LongType, nullable = false)))
+    graft.streaming.Denylist.read(spark, denylistRoot) match {
+      case None => empty
+      case Some(deny0) =>
+        val deny = deny0.select(col("id").as("__deny_id")).localCheckpoint(true)
+        legs.map { case (labels, ids) =>
+          ids.join(broadcast(deny), col("id") === col("__deny_id"), "left_semi")
+            .distinct()
+            .select(keys.zip(labels).map { case (k, v) => lit(v).as(k) } :+ col("id"): _*)
+        }.foldLeft(empty)(_.unionByName(_))
+    }
   }
 
   /** Removal-coverage audit (r15): compliance's closing question — after
@@ -559,41 +599,19 @@ object IndexMaintenance {
       denylistRoot: String,
       minhashRoot: Option[String] = None,
       bm25Root: Option[String] = None,
-      annRoot: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("family", StringType),
-        StructField("id", LongType, nullable = false))))
-    graft.streaming.Denylist.read(spark, denylistRoot) match {
-      case None => empty
-      case Some(deny0) =>
-        val deny = deny0.select(col("id").as("__deny_id")).localCheckpoint(true)
-        def leg(family: String,
-            ids: org.apache.spark.sql.DataFrame, idCol: String) =
-          ids.select(col(idCol).cast("long").as("id"))
-            .join(broadcast(deny), col("id") === col("__deny_id"), "left_semi")
-            .distinct()
-            .select(lit(family).as("family"), col("id"))
-        // NOTE (r15): the three family opens must stay SEQUENTIAL. The
-        // graft_removal_audit SQL TVF invokes this builder from INSIDE the
-        // Catalyst analyzer, and concurrent Dataset construction (each open
-        // runs its own analysis for the tombstone exclusion filter) from
-        // worker threads while the calling thread is mid-analysis livelocks
-        // the rule executor — observed as a wedged Verify sweep. The ~0.3 s
-        // of serialized open jobs is not worth a thread-safety caveat on an
-        // analyzer-reachable path.
-        val legs =
-          minhashRoot.map(r => leg("minhash",
-            Dedup.minhashOpenIndex(spark, currentPath(spark, r)).shingles, "id")).toSeq ++
-          bm25Root.map(r => leg("bm25",
-            Lexical.bm25OpenIndex(spark, currentPath(spark, r)).postings, "doc_id")) ++
-          annRoot.map(r => leg("ann",
-            Ann.annOpenIndex(spark, currentPath(spark, r)).cells, "corpus_id"))
-        legs.foldLeft(empty)(_.unionByName(_))
-    }
-  }
+      annRoot: Option[String] = None): org.apache.spark.sql.DataFrame =
+    // NOTE (r15): the family opens must stay SEQUENTIAL. The
+    // graft_removal_audit SQL TVF invokes this builder from INSIDE the
+    // Catalyst analyzer, and concurrent Dataset construction (each open
+    // runs its own analysis for the tombstone exclusion filter) from
+    // worker threads while the calling thread is mid-analysis livelocks
+    // the rule executor — observed as a wedged Verify sweep. The ~0.3 s
+    // of serialized open jobs is not worth a thread-safety caveat on an
+    // analyzer-reachable path.
+    audit(spark, denylistRoot, Seq("family"),
+      managed(minhashRoot, bm25Root, annRoot).map { case (family, root) =>
+        (Seq(family.name), family.servable(family.open(spark, currentPath(spark, root), None)))
+      })
 
   /** [[auditRemovals]]' snapshot phase (r15): snapshots pin REMOVALS too —
     * a doc tombstoned (and denylisted) after a capture still serves
@@ -616,54 +634,12 @@ object IndexMaintenance {
       denylistRoot: String,
       minhashRoot: Option[String] = None,
       bm25Root: Option[String] = None,
-      annRoot: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("family", StringType),
-        StructField("snapshot", StringType),
-        StructField("id", LongType, nullable = false))))
-    graft.streaming.Denylist.read(spark, denylistRoot) match {
-      case None => empty
-      case Some(deny0) =>
-        val deny = deny0.select(col("id").as("__deny_id")).localCheckpoint(true)
-        def leg(family: String, snap: String,
-            ids: org.apache.spark.sql.DataFrame, idCol: String) =
-          ids.select(col(idCol).cast("long").as("id"))
-            .join(broadcast(deny), col("id") === col("__deny_id"), "left_semi")
-            .distinct()
-            .select(lit(family).as("family"), lit(snap).as("snapshot"), col("id"))
-        val legs =
-          minhashRoot.toSeq.flatMap(r => Snapshots.list(spark, r).map(s =>
-            leg("minhash", s.name,
-              Snapshots.openMinhash(spark, r, s.name).shingles, "id"))) ++
-          bm25Root.toSeq.flatMap(r => Snapshots.list(spark, r).map(s =>
-            leg("bm25", s.name,
-              Snapshots.openBm25(spark, r, s.name).postings, "doc_id"))) ++
-          annRoot.toSeq.flatMap(r => Snapshots.list(spark, r).map(s =>
-            leg("ann", s.name,
-              Snapshots.openAnn(spark, r, s.name).cells, "corpus_id")))
-        legs.foldLeft(empty)(_.unionByName(_))
-    }
-  }
-
-  private val RefitMetaFile = "refit_meta.json"
-
-  /** Corpus rows as of the last centroid refit — carried across compactions
-    * so [[Policy.annRefitStaleness]] measures drift since the centroids were
-    * actually FITTED, not since the last fold. Absent file (a gen written by
-    * build/refit before any compact) ⇒ base rows = meta rows − appended.
-    */
-  private def rowsAtRefit(fs: FileSystem, path: String, idx: Ann.AnnIndex): Option[Long] = {
-    val p = new Path(path, RefitMetaFile)
-    if (fs.exists(p)) Some(IndexLayout.readJson(fs, p).get("rows_at_refit").asLong())
-    else idx.nRows.map(_ - idx.appendedRows)
-  }
-
-  private def writeRefitMeta(fs: FileSystem, path: String, rows: Long): Unit =
-    IndexLayout.writeJson(fs, new Path(path, RefitMetaFile),
-      s"""{"rows_at_refit": $rows}""", overwrite = true)
+      annRoot: Option[String] = None): org.apache.spark.sql.DataFrame =
+    audit(spark, denylistRoot, Seq("family", "snapshot"),
+      managed(minhashRoot, bm25Root, annRoot).flatMap { case (family, root) =>
+        Snapshots.list(spark, root).map(s =>
+          (Seq(family.name, s.name), family.servable(Snapshots.open(spark, family, root, s.name))))
+      })
 
   /** Prepare `genPath(root, cur+1)` for a compaction/refit write: delete an
     * uncommitted leftover from a failed attempt (invisible by protocol,
@@ -702,129 +678,34 @@ object IndexMaintenance {
       bm25Root: Option[String] = None,
       annRoot: Option[String] = None,
       policy: Policy = Policy()): Seq[Event] = {
-    val events = Seq.newBuilder[Event]
+    val roots = managed(minhashRoot, bm25Root, annRoot)
     // per-index wall clock: `at` = when the decision completed (epoch ms),
-    // `durationMs` = signal read through generation commit (monotonic diff)
-    def stamped(ev: Event, t0: Long): Event = ev.copy(
-      at = System.currentTimeMillis(),
-      durationMs = (System.nanoTime() - t0) / 1000000L)
-
-    minhashRoot.foreach { root =>
-      val t0 = System.nanoTime()
-      val cur = currentGeneration(spark, root)
-      val src = genPath(root, cur)
-      val idx = Dedup.minhashOpenIndex(spark, src)
-      val fanIn = idx.unionFanIn
-      val delFrac = idx.deleteFraction
-      // primary signal first; the delete signal (r13) is secondary — the
-      // SAME compaction applies tombstones physically either way, so a pass
-      // still emits one event naming whichever signal fired
-      val fired =
-        if (fanIn > policy.minhashMaxFanIn)
-          Some(("unionFanIn", fanIn.toDouble, policy.minhashMaxFanIn.toDouble))
-        else if (delFrac > policy.maxDeleteFraction)
-          Some(("deleteFraction", delFrac, policy.maxDeleteFraction))
-        else None
-      val ev = fired match {
-        case Some((sig, v, thr)) =>
-          val fs = fsOf(spark, root)
-          val dst = nextGenDir(spark, root, cur)
-          Dedup.minhashCompactIndex(spark, src, dst) // carries both ledgers
-          // carry the epoch manifests so a crash-replayed ingest epoch still
-          // reads its committed survivor set back from the NEW current path
-          val mani = new Path(src, "ingest_manifests")
-          if (fs.exists(mani))
-            // same partial-copy guard as [[replicateGeneration]]: a false
-            // return must fail the pass before the generation commits
-            require(FileUtil.copy(fs, mani, fs, new Path(dst, "ingest_manifests"),
-                false, spark.sparkContext.hadoopConfiguration),
-              s"copy $mani -> $dst/ingest_manifests reported failure")
-          commitGeneration(spark, root, cur + 1)
-          Event("minhash", sig, v, thr, "compact", cur, cur + 1)
-        case None => Event("minhash", "unionFanIn", fanIn.toDouble,
-          policy.minhashMaxFanIn.toDouble, "none", cur, cur)
-      }
-      val evS = stamped(ev, t0)
-      appendLog(spark, root, Seq(evS))
-      events += evS
+    // `durationMs` = signal read through generation commit (monotonic
+    // diff); every decision is logged as soon as it is made
+    def logged(root: String, ev: Event, t0: Long): Event = {
+      val stamped = ev.copy(at = System.currentTimeMillis(),
+        durationMs = (System.nanoTime() - t0) / 1000000L)
+      appendLog(spark, root, Seq(stamped))
+      stamped
     }
 
-    bm25Root.foreach { root =>
+    // the first signal that fires acts into a fresh generation; a pass
+    // where none fires logs the family's first compaction signal
+    val decisions = roots.map { case (family, root) =>
       val t0 = System.nanoTime()
       val cur = currentGeneration(spark, root)
       val src = genPath(root, cur)
-      val idx = Lexical.bm25OpenIndex(spark, src)
-      val frac = idx.appendFraction
-      val delFrac = idx.deleteFraction
-      val fired =
-        if (frac > policy.bm25MaxAppendFraction)
-          Some(("appendFraction", frac, policy.bm25MaxAppendFraction))
-        else if (delFrac > policy.maxDeleteFraction)
-          Some(("deleteFraction", delFrac, policy.maxDeleteFraction))
-        else None
-      val ev = fired match {
-        case Some((sig, v, thr)) =>
-          val dst = nextGenDir(spark, root, cur)
-          Lexical.bm25CompactIndex(spark, src, dst) // carries both ledgers
+      val signals = family.signals(spark, family.open(spark, src, None), src, policy)
+      val ev = signals.find(s => s.value > s.threshold) match {
+        case Some(s) =>
+          s.act(nextGenDir(spark, root, cur))
           commitGeneration(spark, root, cur + 1)
-          Event("bm25", sig, v, thr, "compact", cur, cur + 1)
-        case None => Event("bm25", "appendFraction", frac,
-          policy.bm25MaxAppendFraction, "none", cur, cur)
+          Event(family.name, s.name, s.value, s.threshold, s.action, cur, cur + 1)
+        case None =>
+          val s = signals.find(_.action == "compact").get
+          Event(family.name, s.name, s.value, s.threshold, "none", cur, cur)
       }
-      val evS = stamped(ev, t0)
-      appendLog(spark, root, Seq(evS))
-      events += evS
-    }
-
-    annRoot.foreach { root =>
-      val t0 = System.nanoTime()
-      val fs = fsOf(spark, root)
-      val cur = currentGeneration(spark, root)
-      val src = genPath(root, cur)
-      val idx = Ann.annOpenIndex(spark, src)
-      val baseRows = rowsAtRefit(fs, src, idx)
-      val sinceRefit = (for (n <- idx.nRows; b <- baseRows; if n > 0)
-        yield 1.0 - b.toDouble / n).getOrElse(0.0)
-      val ev = if (sinceRefit > policy.annRefitStaleness) {
-        // true rebuild: refit centroids (and the PQ codebook, if any) on
-        // the grown corpus — the one action that repairs recall drift. The
-        // opened cells already exclude tombstones, so the refit fits the
-        // SURVIVING corpus and applies deletes physically.
-        val dst = nextGenDir(spark, root, cur)
-        val corpus = idx.cells.select(col("corpus_id"), col("cv"))
-        val (cells, cents) = Ann.annBuildIndex(corpus, "corpus_id", "cv",
-          nCentroids = idx.nCentroids)
-        Ann.annWriteIndex(cells, cents, dst,
-          pqM = idx.pqCodebook.map(_.m).getOrElse(0))
-        IndexLayout.carryLedgers(spark, src, dst)
-        // the watermark is the corpus the centroids were FITTED on: nRows is
-        // a scan estimate that still counts tombstoned rows, but the refit
-        // trained on the excluded frame — record survivors only
-        writeRefitMeta(fs, dst, idx.nRows.getOrElse(0L) - idx.deletedRows)
-        commitGeneration(spark, root, cur + 1)
-        Event("ann", "stalenessSinceRefit", sinceRefit,
-          policy.annRefitStaleness, "refit", cur, cur + 1)
-      } else if (idx.appendStaleness > policy.annMaxAppendFraction) {
-        val dst = nextGenDir(spark, root, cur)
-        Ann.annCompactIndex(spark, src, dst) // carries both ledgers
-        // compaction folds batches but does NOT refit: the rows-at-refit
-        // watermark carries so the refit signal keeps accumulating
-        baseRows.foreach(writeRefitMeta(fs, dst, _))
-        commitGeneration(spark, root, cur + 1)
-        Event("ann", "appendFraction", idx.appendStaleness,
-          policy.annMaxAppendFraction, "compact", cur, cur + 1)
-      } else if (idx.deleteFraction > policy.maxDeleteFraction) {
-        val dst = nextGenDir(spark, root, cur)
-        Ann.annCompactIndex(spark, src, dst) // applies tombstones physically
-        baseRows.foreach(writeRefitMeta(fs, dst, _))
-        commitGeneration(spark, root, cur + 1)
-        Event("ann", "deleteFraction", idx.deleteFraction,
-          policy.maxDeleteFraction, "compact", cur, cur + 1)
-      } else Event("ann", "appendFraction", idx.appendStaleness,
-        policy.annMaxAppendFraction, "none", cur, cur)
-      val evS = stamped(ev, t0)
-      appendLog(spark, root, Seq(evS))
-      events += evS
+      logged(root, ev, t0)
     }
 
     // tombstone-dir hygiene (r14): consolidate when the visible delete-dir
@@ -832,46 +713,34 @@ object IndexMaintenance {
     // compaction above (whose physical apply leaves zero delete dirs, making
     // this a no-op for that root this pass). In-place on the live deletes/
     // dir; one logged "consolidate" event per root that actually folded.
-    if (policy.maxDeleteDirs >= 1) {
-      Seq(minhashRoot.map(("minhash", _)), bm25Root.map(("bm25", _)),
-          annRoot.map(("ann", _))).flatten.foreach { case (fam, root) =>
+    val consolidations = if (policy.maxDeleteDirs < 1) Nil else roots.flatMap {
+      case (family, root) =>
         val t0 = System.nanoTime()
         val cur = currentGeneration(spark, root)
         val p = genPath(root, cur)
         val n = Tombstones.deleteDirCount(spark, p)
-        if (n > policy.maxDeleteDirs) {
-          val foldedN = Tombstones.consolidate(spark, p)
-          if (foldedN > 0) {
-            val ev = stamped(Event(fam, "deleteDirs", n.toDouble,
-              policy.maxDeleteDirs.toDouble, "consolidate", cur, cur), t0)
-            appendLog(spark, root, Seq(ev))
-            events += ev
-          }
-        }
-      }
+        if (n > policy.maxDeleteDirs && Tombstones.consolidate(spark, p) > 0)
+          Some(logged(root, Event(family.name, "deleteDirs", n.toDouble,
+            policy.maxDeleteDirs.toDouble, "consolidate", cur, cur), t0))
+        else None
     }
 
     // policy-driven generation pruning (r13): bound every managed root's
     // disk inside the self-maintaining loop itself. Emits a logged "prune"
     // event per root only when something was deleted, so the default-off
     // knob leaves existing logs byte-stable.
-    if (policy.pruneKeepLatest >= 1) {
-      Seq(minhashRoot.map(("minhash", _)), bm25Root.map(("bm25", _)),
-          annRoot.map(("ann", _))).flatten.foreach { case (fam, root) =>
+    val prunes = if (policy.pruneKeepLatest < 1) Nil else roots.flatMap {
+      case (family, root) =>
         val t0 = System.nanoTime()
         val cur = currentGeneration(spark, root)
         val pruned = pruneGenerations(spark, root, policy.pruneKeepLatest)
-        if (pruned.nonEmpty) {
-          // value = committed generations BEFORE the prune (pruned + kept)
-          val ev = stamped(Event(fam, "generations",
-            (pruned.size + policy.pruneKeepLatest).toDouble,
-            policy.pruneKeepLatest.toDouble, "prune", cur, cur), t0)
-          appendLog(spark, root, Seq(ev))
-          events += ev
-        }
-      }
+        // value = committed generations BEFORE the prune (pruned + kept)
+        if (pruned.isEmpty) None
+        else Some(logged(root, Event(family.name, "generations",
+          (pruned.size + policy.pruneKeepLatest).toDouble,
+          policy.pruneKeepLatest.toDouble, "prune", cur, cur), t0))
     }
 
-    events.result()
+    decisions ++ consolidations ++ prunes
   }
 }

@@ -371,11 +371,8 @@ object Lexical {
     * pinned tombstone must still be visible ([[Tombstones.read]] refuses
     * otherwise); post-capture batches and deletes are simply not read.
     */
-  def bm25OpenIndex(spark: org.apache.spark.sql.SparkSession, path: String): Bm25Index =
-    bm25OpenIndex(spark, path, None)
-
   def bm25OpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      pins: Option[IndexPins]): Bm25Index = {
+      pins: Option[IndexPins] = None): Bm25Index = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = IndexLayout.readMeta(fs, path, IndexLayout.Bm25)
@@ -518,53 +515,17 @@ object Lexical {
     * index serves un-baked until [[bm25CompactIndex]] folds the tombstones
     * in physically and re-bakes.
     *
-    * Ids not present in the index (never indexed, or already tombstoned)
-    * are ignored with zero stat movement — deletes are idempotent at the
-    * id level, not just the `delId` level. One honest edge: a zero-token
+    * One honest edge: a zero-token
     * document leaves no postings, so its membership can't be recovered from
     * the index and deleting it moves nothing (a rebuild would also drop its
     * `n_docs` contribution); corpora with empty documents should compact
-    * on a delete-heavy cadence or filter blanks before indexing.
-    *
-    * @return true if the tombstone was written (or resolved to an empty
-    *         no-op), false if `delId` was already committed or applied by a
-    *         compaction (idempotent no-op).
+    * on a delete-heavy cadence or filter blanks before indexing. Protocol
+    * and return value: [[IndexLifecycle.delete]].
     */
   def bm25DeleteFromIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, idCol: String, delId: String): Boolean = {
-    IndexLayout.requireDirName("delId", delId)
-    requireIntegralId(ids, idCol, "ids")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (Tombstones.alreadyDeleted(fs, path, delId)) return false
-    // open() excludes prior tombstones, so re-deleting an already-deleted
-    // doc under a NEW delId resolves to "not present" and moves no stats
-    val idx = bm25OpenIndex(spark, path)
-    val del = ids.select(col(idCol).cast("long").as("id")).distinct()
-    // the doomed docs' exact stat contributions, from the index's own
-    // surviving postings: dl rides on every posting row (first per doc),
-    // df needs no bookkeeping (recomputed in-plan from the excluded scan)
-    val perDoc = idx.postings
-      .join(del, idx.postings("doc_id") === del("id"), "left_semi")
-      .groupBy("doc_id")
-      .agg(first(col("dl")).as("__dl"), count(lit(1)).as("__np"))
-      .localCheckpoint(false) // two consumers below: one compute
-    val st = perDoc.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(col("__dl")), lit(0.0)).as("s"),
-      coalesce(sum(col("__np")), lit(0L)).as("p")).head()
-    val found = st.getLong(0)
-    // nothing present: a committed no-op with NO tombstone dir (the empty
-    // append-batch convention — an empty parquet dir corrupts later opens)
-    if (found == 0) { perDoc.unpersist(); return true }
-    Tombstones.writeDelete(spark, path, delId,
-      perDoc.select(col("doc_id").as("id")),
-      nIds = found, nRows = st.getLong(2),
-      nDocs = found.toDouble, sumDl = st.getDouble(1))
-    perDoc.unpersist()
-    true
-  }
+      ids: DataFrame, idCol: String, delId: String): Boolean =
+    Bm25Lifecycle.delete(spark, path, ids, idCol, delId)
 
   /** Compact an appended/tombstoned index into a fresh single-layout index
     * at `dstPath`: base postings plus every COMMITTED batch, minus every
@@ -573,18 +534,58 @@ object Lexical {
     * meta — searches against the compacted index are row-identical to the
     * source's (both equal a rebuild's) and the serving fast path is
     * restored. Tombstones are applied PHYSICALLY here (the opened frames
-    * already exclude them) and ledgered so a crash-replayed delete against
-    * the new layout stays a no-op. Non-in-place by design (the sibling
-    * compactors' contract): the caller swaps paths and deletes the old
-    * directory on their own cadence.
+    * already exclude them) and ledgered ([[IndexLifecycle.compact]]).
     */
   def bm25CompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit = {
-    IndexLayout.requireNonInPlace(srcPath, dstPath)
-    val idx = bm25OpenIndex(spark, srcPath)
-    bm25WriteIndex(idx.postings.select("doc_id", "term", "tf", "dl"),
-      idx.stats, dstPath, idx.nBuckets)
-    IndexLayout.carryLedgers(spark, srcPath, dstPath)
+      srcPath: String, dstPath: String): Unit =
+    Bm25Lifecycle.compact(spark, srcPath, dstPath)
+
+  /** The BM25 lifecycle ([[IndexLifecycle]]): ids must be integral, a
+    * delete measures each doomed doc's exact `dl` and posting count from
+    * the surviving postings (df needs no bookkeeping: it is recomputed
+    * in-plan from the excluded scan), and a compaction re-bakes df and
+    * `contrib0` over the surviving corpus. Maintenance compacts on the
+    * appended share of postings, then on the tombstoned share.
+    */
+  object Bm25Lifecycle extends IndexLifecycle("bm25", "doc_id") {
+    type Index = Bm25Index
+
+    def open(spark: SparkSession, path: String, pins: Option[IndexPins]) =
+      bm25OpenIndex(spark, path, pins)
+
+    protected def members(index: Bm25Index): DataFrame = index.postings
+
+    override protected def checkIds(ids: DataFrame, idCol: String): Unit =
+      requireIntegralId(ids, idCol, "ids")
+
+    // dl rides on every posting row (first per doc)
+    override protected def perId(found: DataFrame): DataFrame =
+      found.groupBy("doc_id")
+        .agg(first(col("dl")).as("__dl"), count(lit(1)).as("__np"))
+        .select(col("doc_id").as("id"), col("__dl"), col("__np"))
+
+    protected def deltas(index: Bm25Index, doomed: DataFrame): Tombstones.Deltas = {
+      val st = doomed.agg(
+        count(lit(1)).as("n"),
+        coalesce(sum(col("__dl")), lit(0.0)).as("s"),
+        coalesce(sum(col("__np")), lit(0L)).as("p")).head()
+      Tombstones.Deltas(nIds = st.getLong(0), nRows = st.getLong(2),
+        nDocs = st.getLong(0).toDouble, sumDl = st.getDouble(1))
+    }
+
+    protected def compactInto(index: Bm25Index, dst: String): Unit =
+      bm25WriteIndex(index.postings.select("doc_id", "term", "tf", "dl"),
+        index.stats, dst, index.nBuckets)
+
+    private[operators] def signals(spark: SparkSession, index: Bm25Index, src: String,
+        policy: IndexMaintenance.Policy): Seq[IndexLifecycle.Signal] = {
+      val compact = (dst: String) => this.compact(spark, src, dst)
+      Seq(
+        IndexLifecycle.Signal("appendFraction", index.appendFraction,
+          policy.bm25MaxAppendFraction, "compact", compact),
+        IndexLifecycle.Signal("deleteFraction", index.deleteFraction,
+          policy.maxDeleteFraction, "compact", compact))
+    }
   }
 
   /** Driver materialization bound for a search's exploded (query_id, term)
@@ -890,10 +891,6 @@ object Lexical {
         StructField("__trank", IntegerType, nullable = false))))
   }
 
-  /** The per-posting BM25 contribution term over a `(doc_id, term, tf, dl,
-    * df)` frame — shared verbatim by the joined and batch-fold scoring paths
-    * so their doubles cannot drift apart.
-    */
   /** Keep a layout's baked `contrib0` column only when the search runs at
     * the params it was baked with — a mismatched (k1, b) must recompute from
     * tf/dl/df (dropping a column that does not exist is a no-op, so pre-bake
@@ -929,6 +926,10 @@ object Lexical {
       col("tf") * lit(k1 + 1.0) /
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / lit(avgdl)))
 
+  /** The per-posting BM25 contribution term over a `(doc_id, term, tf, dl,
+    * df)` frame — shared verbatim by the joined and batch-fold scoring paths
+    * so their doubles cannot drift apart.
+    */
   private def withContrib(
       withDf: DataFrame, nDocs: Double, avgdl: Double,
       k1: Double, b: Double): DataFrame =

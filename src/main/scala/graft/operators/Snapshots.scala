@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions.{col, lit}
 
 /** The exact component set a snapshot open restricts an index to: the
   * committed append-batch names and the visible tombstone-dir names that
-  * existed at capture. Threaded through the three family openers
-  * ([[Lexical.bm25OpenIndex]], [[Ann.annOpenIndex]],
-  * [[Dedup.minhashOpenIndex]]) — an open with pins reads ONLY these
+  * existed at capture. Threaded through each family's opener
+  * ([[IndexLifecycle.open]]) — an open with pins reads ONLY these
   * components of the (immutable-per-component) layout, so it reconstructs
   * the capture-time view bit-for-bit no matter what landed since.
   */
@@ -33,8 +32,10 @@ final case class IndexPins(batches: Set[String], deletes: Set[String])
   * batch names and visible tombstone-dir names of its directory at capture
   * (`_COMMITTED` marker-last, the repo's single-visibility-event idiom —
   * a crashed create is invisible and a retry overwrites it). Capture cost
-  * is three directory listings; open cost is a normal family open
-  * restricted to the pinned components. At 100 TB nothing is rewritten:
+  * is three directory listings. Opens ([[open]], [[openAsOf]]) and the
+  * drift [[diff]] are written once over a family's [[IndexLifecycle]]
+  * descriptor: an open is that family's opener restricted to the pinned
+  * components. At 100 TB nothing is rewritten:
   * the pinned generation's data files are immutable, so the snapshot is
   * O(names), and the ONLY ongoing cost is retention — a pinned generation
   * dir stays on disk until the snapshot drops.
@@ -100,16 +101,22 @@ object Snapshots {
     val batches = IndexLayout.committedBatchIds(fs, p)
     val deletes = Tombstones.visibleDeleteNames(fs, p)
     val info = Info(name, gen, batches, deletes, System.currentTimeMillis())
-    // uncommitted leftover from a crashed create: invisible, safe to drop
+    writeInfo(fs, dir, info)
+    info
+  }
+
+  /** Commit `info`'s manifest under `dir`, marker last. An uncommitted
+    * leftover of a crashed write is invisible and dropped first.
+    */
+  private def writeInfo(fs: FileSystem, dir: Path, info: Info): Unit = {
     if (fs.exists(dir)) fs.delete(dir, true)
     def arr(xs: Seq[String]): String =
       xs.sorted.map(x => "\"" + x + "\"").mkString("[", ", ", "]")
     IndexLayout.writeJson(fs, new Path(dir, ManifestFile),
-      s"""{"name": "$name", "gen": $gen, "at": ${info.at}, """ +
-        s""""batches": ${arr(batches)}, "deletes": ${arr(deletes)}}""",
+      s"""{"name": "${info.name}", "gen": ${info.gen}, "at": ${info.at}, """ +
+        s""""batches": ${arr(info.batches)}, "deletes": ${arr(info.deletes)}}""",
       overwrite = false)
     fs.create(new Path(dir, Marker), false).close()
-    info
   }
 
   private def readInfo(fs: FileSystem, dir: Path): Info = {
@@ -179,34 +186,15 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"no committed snapshot '$name' under $root/$SnapDir"))
 
-  /** The pinned generation directory of snapshot `name` — for callers that
-    * want the raw path (the open* helpers already resolve it).
+  /** Open snapshot `name` of `root` through `family`'s opener — searches
+    * answer exactly as they did at capture (pinned batches merge in,
+    * pinned tombstones exclude and, for BM25, shrink the stats; nothing
+    * newer exists).
     */
-  def path(spark: SparkSession, root: String, name: String): String =
-    IndexMaintenance.genPath(root, resolved(spark, root, name).gen)
-
-  /** Open snapshot `name`'s BM25 view — searches score exactly as they did
-    * at capture (pinned batches merge in, pinned tombstones shrink the
-    * stats, nothing newer exists).
-    */
-  def openBm25(spark: SparkSession, root: String, name: String): Lexical.Bm25Index = {
+  def open(spark: SparkSession, family: IndexLifecycle, root: String,
+      name: String): family.Index = {
     val info = resolved(spark, root, name)
-    Lexical.bm25OpenIndex(spark,
-      IndexMaintenance.genPath(root, info.gen), Some(info.pins))
-  }
-
-  /** Open snapshot `name`'s IVF view ([[openBm25]]'s ANN sibling). */
-  def openAnn(spark: SparkSession, root: String, name: String): Ann.AnnIndex = {
-    val info = resolved(spark, root, name)
-    Ann.annOpenIndex(spark,
-      IndexMaintenance.genPath(root, info.gen), Some(info.pins))
-  }
-
-  /** Open snapshot `name`'s MinHash view ([[openBm25]]'s dedup sibling). */
-  def openMinhash(spark: SparkSession, root: String, name: String): Dedup.MinHashIndex = {
-    val info = resolved(spark, root, name)
-    Dedup.minhashOpenIndex(spark,
-      IndexMaintenance.genPath(root, info.gen), Some(info.pins))
+    family.open(spark, IndexMaintenance.genPath(root, info.gen), Some(info.pins))
   }
 
   /** Time-travel resolution (r15): the [[Info]] a snapshot WOULD have
@@ -232,67 +220,37 @@ object Snapshots {
       Info(s"asof-$atMillis", g, batches, deletes, atMillis)
     }
 
-  /** Open the BM25 view serving at wall time `atMillis` — [[asOf]] pins
-    * applied through the family opener; None on the honest miss.
+  /** Open `family`'s view of `root` serving at wall time `atMillis` —
+    * [[asOf]] pins applied through the family opener; None on the honest
+    * miss.
     */
-  def openBm25AsOf(spark: SparkSession, root: String,
-      atMillis: Long): Option[Lexical.Bm25Index] =
-    asOf(spark, root, atMillis).map(i => Lexical.bm25OpenIndex(spark,
-      IndexMaintenance.genPath(root, i.gen), Some(i.pins)))
-
-  /** [[openBm25AsOf]]'s IVF sibling. */
-  def openAnnAsOf(spark: SparkSession, root: String,
-      atMillis: Long): Option[Ann.AnnIndex] =
-    asOf(spark, root, atMillis).map(i => Ann.annOpenIndex(spark,
-      IndexMaintenance.genPath(root, i.gen), Some(i.pins)))
-
-  /** [[openBm25AsOf]]'s MinHash sibling. */
-  def openMinhashAsOf(spark: SparkSession, root: String,
-      atMillis: Long): Option[Dedup.MinHashIndex] =
-    asOf(spark, root, atMillis).map(i => Dedup.minhashOpenIndex(spark,
-      IndexMaintenance.genPath(root, i.gen), Some(i.pins)))
+  def openAsOf(spark: SparkSession, family: IndexLifecycle, root: String,
+      atMillis: Long): Option[family.Index] =
+    asOf(spark, root, atMillis).map(i =>
+      family.open(spark, IndexMaintenance.genPath(root, i.gen), Some(i.pins)))
 
   /** What drifted since the pin — `('added'|'removed', id)` rows comparing
     * the ids servable through snapshot `name` against the root's CURRENT
-    * serving view. The operational question a pinned eval/training set
-    * raises later: "how far has the live corpus moved from what I
-    * measured on?" — answered from the two views' id scans alone. `added`
-    * = servable now but not through the pin (post-capture ingest);
-    * `removed` = servable through the pin but not now (post-capture
-    * takedowns/dedup). Plan shape: two column-pruned id scans, one
-    * left-anti join per direction (AQE broadcasts the smaller side),
-    * `distinct` after the anti-join so each leg pays one shuffle on its
-    * RESULT, not its input.
+    * serving view, both listed by `family`'s servable-id frame. The
+    * operational question a pinned eval/training set raises later: "how
+    * far has the live corpus moved from what I measured on?" — answered
+    * from the two views' id scans alone. `added` = servable now but not
+    * through the pin (post-capture ingest); `removed` = servable through
+    * the pin but not now (post-capture takedowns/dedup). Plan shape: two
+    * column-pruned id scans, one left-anti join per direction (AQE
+    * broadcasts the smaller side), `distinct` after the anti-join so each
+    * leg pays one shuffle on its RESULT, not its input.
     */
-  private def diffIds(pinned: DataFrame, current: DataFrame, idCol: String): DataFrame = {
-    val p = pinned.select(col(idCol).cast("long").as("id"))
-    val c = current.select(col(idCol).cast("long").as("id"))
+  def diff(spark: SparkSession, family: IndexLifecycle, root: String,
+      name: String): DataFrame = {
+    val p = family.servable(open(spark, family, root, name))
+    val c = family.servable(family.open(spark, IndexMaintenance.currentPath(spark, root), None))
     val added = c.join(p, Seq("id"), "left_anti").distinct()
       .select(lit("added").as("change"), col("id"))
     val removed = p.join(c, Seq("id"), "left_anti").distinct()
       .select(lit("removed").as("change"), col("id"))
     added.unionByName(removed)
   }
-
-  /** [[diffIds]] over the BM25 family: pinned postings vs the current
-    * generation's.
-    */
-  def diffBm25(spark: SparkSession, root: String, name: String): DataFrame =
-    diffIds(openBm25(spark, root, name).postings,
-      Lexical.bm25OpenIndex(spark,
-        IndexMaintenance.currentPath(spark, root)).postings, "doc_id")
-
-  /** [[diffIds]] over the IVF family. */
-  def diffAnn(spark: SparkSession, root: String, name: String): DataFrame =
-    diffIds(openAnn(spark, root, name).cells,
-      Ann.annOpenIndex(spark,
-        IndexMaintenance.currentPath(spark, root)).cells, "corpus_id")
-
-  /** [[diffIds]] over the MinHash family. */
-  def diffMinhash(spark: SparkSession, root: String, name: String): DataFrame =
-    diffIds(openMinhash(spark, root, name).shingles,
-      Dedup.minhashOpenIndex(spark,
-        IndexMaintenance.currentPath(spark, root)).shingles, "id")
 
   /** Mirror the source's snapshot catalog onto a replica root (r15) — the
     * pins half of blue-green replication: a standby whose generations
@@ -326,17 +284,7 @@ object Snapshots {
       dstGens.contains(i.gen) && !dstByName.get(i.name).contains(i)
     }.map { i =>
       if (dstByName.contains(i.name)) drop(spark, dstRoot, i.name)
-      val dir = snapPath(dstRoot, i.name)
-      if (fs.exists(dir)) fs.delete(dir, true) // crashed copy leftover
-      val out = fs.create(new Path(dir, ManifestFile), false)
-      def arr(xs: Seq[String]): String =
-        xs.sorted.map(x => "\"" + x + "\"").mkString("[", ", ", "]")
-      try out.write(
-        (s"""{"name": "${i.name}", "gen": ${i.gen}, "at": ${i.at}, """ +
-          s""""batches": ${arr(i.batches)}, "deletes": ${arr(i.deletes)}}""")
-          .getBytes("UTF-8"))
-      finally out.close()
-      fs.create(new Path(dir, Marker), false).close()
+      writeInfo(fs, snapPath(dstRoot, i.name), i)
       i.name
     }
     (copied, dropped)

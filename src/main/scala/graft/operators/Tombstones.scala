@@ -40,6 +40,11 @@ import scala.jdk.CollectionConverters._
   * and the exclusion is a distributed left-anti join whose small side AQE
   * broadcasts while it fits.
   *
+  * The delete verb itself is written once, [[IndexLifecycle.delete]]:
+  * each family's descriptor names the frame that lists its servable ids
+  * and the deltas a delete records (BM25's per-doc `n_docs`/`sum_dl`,
+  * ANN's one row per id, MinHash's `numBands` rows per id).
+  *
   * Compaction applies tombstones PHYSICALLY for free — the compactors
   * rebuild from the opened (already-filtered) frames — and ledgers the
   * applied delete ids (`applied_deletes.json`, the absorbed-batches idiom)
@@ -264,15 +269,31 @@ object Tombstones {
       appliedDeletes(fs, path).contains(delId) ||
       foldedDeletes(fs, path).contains(delId)
 
-  /** Land one tombstone: `foundIds` (one long `id` column — the ids the
-    * family resolved as actually present) plus the family's exact stat
-    * deltas, committed by one atomic marker create. Caller has already
-    * passed [[alreadyDeleted]] and knows `foundIds` is non-empty.
+  /** A delete's exact stat deltas: ids and index rows dropped, and for
+    * BM25 the `n_docs`/`sum_dl` corpus sums that shrink.
+    */
+  final case class Deltas(nIds: Long, nRows: Long, nDocs: Double = 0.0, sumDl: Double = 0.0) {
+    def +(o: Deltas): Deltas =
+      Deltas(nIds + o.nIds, nRows + o.nRows, nDocs + o.nDocs, sumDl + o.sumDl)
+    /** The `delete_meta.json` members that record these deltas. */
+    def json: String =
+      s""""n_ids": $nIds, "n_rows": $nRows, "n_docs": $nDocs, "sum_dl": $sumDl"""
+  }
+
+  /** The deltas one committed tombstone dir recorded. */
+  private def deltasOf(meta: com.fasterxml.jackson.databind.JsonNode): Deltas =
+    Deltas(meta.get("n_ids").asLong(), meta.get("n_rows").asLong(),
+      meta.get("n_docs").asDouble(), meta.get("sum_dl").asDouble())
+
+  /** Land one tombstone: `foundIds` (an `id` column — the ids the family
+    * resolved as actually present) plus the family's exact stat deltas,
+    * committed by one atomic marker create. The caller
+    * ([[IndexLifecycle.delete]]) has already passed [[alreadyDeleted]] and
+    * knows `foundIds` is non-empty.
     */
   private[operators] def writeDelete(
       spark: SparkSession, path: String, delId: String,
-      foundIds: DataFrame,
-      nIds: Long, nRows: Long, nDocs: Double, sumDl: Double): Unit = {
+      foundIds: DataFrame, d: Deltas): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = dirOf(path, delId)
     // uncommitted leftover from a failed attempt: invisible to open(), safe
@@ -283,8 +304,7 @@ object Tombstones {
     foundIds.select(col("id").cast("long").as("id"))
       .coalesce(1).write.parquet(new Path(dir, "ids").toString)
     IndexLayout.writeJson(fs, new Path(dir, MetaFile),
-      s"""{"n_ids": $nIds, "n_rows": $nRows, """ +
-        s""""n_docs": $nDocs, "sum_dl": $sumDl, """ +
+      s"""{${d.json}, """ +
         // wall timestamp for the audit surface (the maintenance-log move):
         // WHEN was this takedown applied — compliance wants the answer
         s""""at": ${System.currentTimeMillis()}}""",
@@ -356,14 +376,7 @@ object Tombstones {
         present
     }
     if (dirs.isEmpty) return None
-    var nIds = 0L; var nRows = 0L; var nDocs = 0.0; var sumDl = 0.0
-    dirs.foreach { d =>
-      val node = deleteMeta(fs, d)
-      nIds += node.get("n_ids").asLong()
-      nRows += node.get("n_rows").asLong()
-      nDocs += node.get("n_docs").asDouble()
-      sumDl += node.get("sum_dl").asDouble()
-    }
+    val total = dirs.map(d => deltasOf(deleteMeta(fs, d))).foldLeft(Deltas(0L, 0L))(_ + _)
     // ONE multi-path read (the Denylist.read idiom, judge r13 #1): the ids
     // are a single flat long column, so the partition-structure-inference
     // caveat that justifies the index openers' per-root folds does not
@@ -374,7 +387,7 @@ object Tombstones {
     val idsDf = spark.read.schema(idsReadSchema)
       .parquet(dirs.map(d => new Path(d, "ids").toString): _*)
     val exclusion =
-      if (nIds <= maxDriverDeleteIds(spark))
+      if (total.nIds <= maxDriverDeleteIds(spark))
         Left(idsDf.collect().map(_.getLong(0)))
       else
         // EAGERLY pinned (the Denylist.exclude idiom, advisor r13 / judge
@@ -389,7 +402,7 @@ object Tombstones {
         // exclusion set would serve taken-down docs.) Under-bound opens —
         // the common case — already collect eagerly above.
         Right(idsDf.localCheckpoint(true))
-    Some(Deletes(dirs.map(_.getName), nIds, nRows, nDocs, sumDl, exclusion))
+    Some(Deletes(dirs.map(_.getName), total.nIds, total.nRows, total.nDocs, total.sumDl, exclusion))
   }
 
   /** Fold every visible tombstone of `path` into ONE consolidated delete
@@ -450,7 +463,7 @@ object Tombstones {
     val visible = all.filterNot(d => folded.contains(d.getName))
       .filterNot(d => preserve.contains(d.getName))
     if (visible.size <= 1) return 0
-    var nIds = 0L; var nRows = 0L; var nDocs = 0.0; var sumDl = 0.0
+    var total = Deltas(0L, 0L)
     val transitive = Seq.newBuilder[String]
     // each absorbed name's COMMIT INSTANT rides along (r15): the sweep
     // destroys the marker whose mtime is the only record of when that
@@ -461,10 +474,7 @@ object Tombstones {
     val foldedAts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     visible.foreach { d =>
       val node = deleteMeta(fs, d)
-      nIds += node.get("n_ids").asLong()
-      nRows += node.get("n_rows").asLong()
-      nDocs += node.get("n_docs").asDouble()
-      sumDl += node.get("sum_dl").asDouble()
+      total += deltasOf(node)
       transitive += d.getName
       foldedAts(d.getName) =
         fs.getFileStatus(new Path(d, Marker)).getModificationTime
@@ -497,9 +507,7 @@ object Tombstones {
       .distinct()
       .coalesce(1).write.parquet(new Path(dir, "ids").toString)
     IndexLayout.writeJson(fs, new Path(dir, MetaFile),
-      s"""{"n_ids": $nIds, "n_rows": $nRows, """ +
-        s""""n_docs": $nDocs, "sum_dl": $sumDl, """ +
-        s""""at": ${System.currentTimeMillis()}, """ +
+      s"""{${total.json}, "at": ${System.currentTimeMillis()}, """ +
         transitive.result().sorted.map(id => "\"" + id + "\"")
           .mkString(""""folds": [""", ", ", "], ") +
         foldedAts.toSeq.sortBy(_._1).map { case (n, t) => s""""$n": $t""" }

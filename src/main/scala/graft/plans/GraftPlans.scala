@@ -525,24 +525,18 @@ object GraftPlans {
   }
 
   /** `graft_snapshot_diff('root', 'name', 'family')` — what drifted since
-    * the pin, from SQL ([[graft.operators.Snapshots.diffBm25]] and
-    * siblings): `('added'|'removed', id)` rows comparing the ids servable
-    * through the named snapshot against the root's current generation.
-    * `family` ∈ bm25 | ann | minhash.
+    * the pin, from SQL ([[graft.operators.Snapshots.diff]]):
+    * `('added'|'removed', id)` rows comparing the ids servable through the
+    * named snapshot against the root's current generation. `family` is an
+    * [[graft.operators.IndexLifecycle]] name: bm25 | ann | minhash.
     */
   private def snapshotDiffBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.length == 3, "graft_snapshot_diff(root, name, family)")
     val root = str(args(0), "root")
     val name = str(args(1), "name")
     val spark = SparkSession.active
-    val df = str(args(2), "family") match {
-      case "bm25" => graft.operators.Snapshots.diffBm25(spark, root, name)
-      case "ann" => graft.operators.Snapshots.diffAnn(spark, root, name)
-      case "minhash" => graft.operators.Snapshots.diffMinhash(spark, root, name)
-      case other => throw new IllegalArgumentException(
-        s"graft_snapshot_diff family must be bm25|ann|minhash, got '$other'")
-    }
-    ColumnBridge.analyzedPlan(df)
+    val family = graft.operators.IndexLifecycle.named(str(args(2), "family"))
+    ColumnBridge.analyzedPlan(graft.operators.Snapshots.diff(spark, family, root, name))
   }
 
   /** (name, info, builder) for every exposed table function. */

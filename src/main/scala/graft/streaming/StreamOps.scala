@@ -481,9 +481,9 @@ object StreamOps {
     * same exactly-once discipline as the ingest loop.
     *
     * Per micro-batch: one tombstone per managed index under
-    * `delId = <takedownTag>_<epochId>` ([[graft.operators.Dedup
-    * .minhashDeleteFromIndex]] / [[graft.operators.Lexical
-    * .bm25DeleteFromIndex]] / [[graft.operators.Ann.annDeleteFromIndex]] —
+    * `delId = <takedownTag>_<epochId>` (the takedown fan-out
+    * [[graft.operators.IndexMaintenance.takedown]]: bm25 and ann first,
+    * minhash last, each [[graft.operators.IndexLifecycle.delete]] —
     * each idempotent on `delId`, each recording exact stat deltas measured
     * against the live index, ids not present resolving to no-ops), then an
     * optional maintenance pass whose `deleteFraction` signal compacts the
@@ -529,7 +529,7 @@ object StreamOps {
       onBatch: Long => Unit = _ => (),
       onMaintenance: Seq[graft.operators.IndexMaintenance.Event] => Unit =
         _ => ()): DataStreamWriter[Row] = {
-    import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical}
+    import graft.operators.IndexMaintenance
     deletes.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -552,12 +552,8 @@ object StreamOps {
               // batch source must not be re-evaluated per consumer
               val ids = batch.select(col(idCol).cast("long").as(idCol))
                 .distinct().localCheckpoint(true)
-              Dedup.minhashDeleteFromIndex(spark,
-                IndexMaintenance.currentPath(spark, minhashRoot), ids, idCol, delId)
-              bm25Root.foreach(r => Lexical.bm25DeleteFromIndex(spark,
-                IndexMaintenance.currentPath(spark, r), ids, idCol, delId))
-              annRoot.foreach(r => Ann.annDeleteFromIndex(spark,
-                IndexMaintenance.currentPath(spark, r), ids, idCol, delId))
+              IndexMaintenance.takedown(spark, ids, idCol, delId,
+                minhashRoot, bm25Root, annRoot)
               if (denyFuture) Denylist.append(spark, minhashRoot, ids, idCol, delId)
           }
           onBatch(epochId)

@@ -114,7 +114,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Lexical.bm25DeleteFromIndex(spark, g0, idsDf(Seq(5L, 25L)), "id", "d2"))
     assert(Tombstones.consolidate(spark, g0) == 2, "folds d1+d2, preserves pinned d0")
     val live = bm25Search(Lexical.bm25OpenIndex(spark, g0))
-    val snap = bm25Search(Snapshots.openBm25(spark, root, "s0"))
+    val snap = bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "s0"))
     assert(snap == atCapture, "the snapshot must serve the capture-time view bit-for-bit")
     assert(live != atCapture, "the live view must have moved (b1 + d1 + d2)")
     // the pinned tombstone dir survived the fold next to fold-0
@@ -131,7 +131,7 @@ class SnapshotSpec extends AnyFunSuite {
   test("prune skips a pinned generation and collects it after drop") {
     val (root, g0) = seedBm25Root("prune")
     Snapshots.create(spark, root, "keep0")
-    val snapAtCapture = bm25Search(Snapshots.openBm25(spark, root, "keep0"))
+    val snapAtCapture = bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "keep0"))
     // compact gen-0 → gen-1 (applies b0 + d0 physically), then prune
     val g1 = IndexMaintenance.genPath(root, 1)
     Lexical.bm25CompactIndex(spark, g0, g1)
@@ -139,7 +139,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(IndexMaintenance.pruneGenerations(spark, root, keepLatest = 1).isEmpty,
       "gen-0 is pinned — prune must leave it")
     assert(IndexMaintenance.committedGenerations(spark, root) == Seq(0, 1))
-    assert(bm25Search(Snapshots.openBm25(spark, root, "keep0")) == snapAtCapture,
+    assert(bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "keep0")) == snapAtCapture,
       "the snapshot still opens after compaction + attempted prune")
     assert(Snapshots.drop(spark, root, "keep0"))
     assert(IndexMaintenance.pruneGenerations(spark, root, keepLatest = 1) == Seq(0),
@@ -154,7 +154,7 @@ class SnapshotSpec extends AnyFunSuite {
     // call a snapshot-unaware maintainer might make — sweeps pinned d0
     assert(Lexical.bm25DeleteFromIndex(spark, g0, idsDf(Seq(3L)), "id", "d1"))
     assert(Tombstones.consolidate(spark, g0, preserve = Set.empty) == 2)
-    val ex = intercept[IllegalArgumentException](Snapshots.openBm25(spark, root, "s0"))
+    val ex = intercept[IllegalArgumentException](Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "s0"))
     assert(ex.getMessage.contains("pins were violated"))
   }
 
@@ -172,7 +172,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Ann.annAppendIndex(spark, g0, emb(250).filter(col("vec_id") >= 200),
       "vec_id", "embedding", "b1"))
     assert(Ann.annDeleteFromIndex(spark, g0, idsDf(Seq(3L, 7L)), "id", "d1"))
-    assert(search(Snapshots.openAnn(spark, root, "s0")) == atCapture)
+    assert(search(Snapshots.open(spark, Ann.AnnLifecycle, root, "s0")) == atCapture)
     assert(search(Ann.annOpenIndex(spark, g0)) != atCapture)
 
     val mroot = tmp("fammh"); val mg0 = IndexMaintenance.genPath(mroot, 0)
@@ -186,7 +186,7 @@ class SnapshotSpec extends AnyFunSuite {
     val matCapture = msearch(Dedup.minhashOpenIndex(spark, mg0))
     Snapshots.create(spark, mroot, "s0")
     assert(Dedup.minhashDeleteFromIndex(spark, mg0, idsDf(Seq(50L)), "id", "d1"))
-    assert(msearch(Snapshots.openMinhash(spark, mroot, "s0")) == matCapture,
+    assert(msearch(Snapshots.open(spark, Dedup.MinhashLifecycle, mroot, "s0")) == matCapture,
       "the snapshot still matches a copy of doc 50 — it was live at capture")
     assert(msearch(Dedup.minhashOpenIndex(spark, mg0)) != matCapture)
   }
@@ -248,10 +248,10 @@ class SnapshotSpec extends AnyFunSuite {
     // no deletes and no batches, t1 has d0 only — b1 and d1 are invisible
     val i0 = Snapshots.asOf(spark, root, t0).get
     assert(i0.batches.isEmpty && i0.deletes.isEmpty)
-    assert(bm25Search(Snapshots.openBm25AsOf(spark, root, t0).get) == at0)
+    assert(bm25Search(Snapshots.openAsOf(spark, Lexical.Bm25Lifecycle, root, t0).get) == at0)
     val i1 = Snapshots.asOf(spark, root, t1).get
     assert(i1.batches.isEmpty && i1.deletes == Seq("d0"))
-    assert(bm25Search(Snapshots.openBm25AsOf(spark, root, t1).get) == at1)
+    assert(bm25Search(Snapshots.openAsOf(spark, Lexical.Bm25Lifecycle, root, t1).get) == at1)
     // a fold committed AFTER t1 sweeps d0/d1 — the t1 window is gone and
     // the resolver must say so, not under-exclude
     assert(Tombstones.consolidate(spark, g0) == 2)
@@ -261,17 +261,17 @@ class SnapshotSpec extends AnyFunSuite {
     val t2 = System.currentTimeMillis()
     val i2 = Snapshots.asOf(spark, root, t2).get
     assert(i2.deletes == Seq("fold-0") && i2.batches == Seq("b1"))
-    assert(bm25Search(Snapshots.openBm25AsOf(spark, root, t2).get) ==
+    assert(bm25Search(Snapshots.openAsOf(spark, Lexical.Bm25Lifecycle, root, t2).get) ==
       bm25Search(Lexical.bm25OpenIndex(spark, g0)))
     // and t0 still resolves: the empty window needs nothing the fold swept
-    assert(bm25Search(Snapshots.openBm25AsOf(spark, root, t0).get) == at0)
+    assert(bm25Search(Snapshots.openAsOf(spark, Lexical.Bm25Lifecycle, root, t0).get) == at0)
   }
 
   test("replication mirrors the pin catalog: copies, drop propagation, missing-gen skip") {
     val (src, g0) = seedBm25Root("replsrc")
     val dst = tmp("repldst")
     Snapshots.create(spark, src, "s0")
-    val atCapture = bm25Search(Snapshots.openBm25(spark, src, "s0"))
+    val atCapture = bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, src, "s0"))
     Lexical.bm25CompactIndex(spark, g0, IndexMaintenance.genPath(src, 1))
     IndexMaintenance.commitGeneration(spark, src, 1)
     val follower = new IndexMaintenance.ReplicaFollower(spark, src, dst,
@@ -280,7 +280,7 @@ class SnapshotSpec extends AnyFunSuite {
     // the replica serves the pin exactly as the source does, and its own
     // prune respects the replicated pin
     assert(Snapshots.list(spark, dst).map(_.name) == Seq("s0"))
-    assert(bm25Search(Snapshots.openBm25(spark, dst, "s0")) == atCapture)
+    assert(bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, dst, "s0")) == atCapture)
     assert(IndexMaintenance.pruneGenerations(spark, dst, keepLatest = 1).isEmpty)
     // a source-side drop + re-capture under a NEW name propagates both ways
     assert(Snapshots.drop(spark, src, "s0"))
@@ -306,7 +306,7 @@ class SnapshotSpec extends AnyFunSuite {
   test("maintainIndexes' consolidation pass preserves pins without being told") {
     val (root, g0) = seedBm25Root("maint")
     Snapshots.create(spark, root, "s0")
-    val snapAtCapture = bm25Search(Snapshots.openBm25(spark, root, "s0"))
+    val snapAtCapture = bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "s0"))
     assert(Lexical.bm25DeleteFromIndex(spark, g0, idsDf(Seq(3L)), "id", "d1"))
     assert(Lexical.bm25DeleteFromIndex(spark, g0, idsDf(Seq(9L)), "id", "d2"))
     // the policy path reaches consolidate() through its no-preserve form,
@@ -318,6 +318,6 @@ class SnapshotSpec extends AnyFunSuite {
     assert(events.exists(e => e.signal == "deleteDirs" && e.action == "consolidate"))
     assert(Tombstones.deletesDf(spark, g0).select("del_id")
       .collect().map(_.getString(0)).toSet == Set("d0", "fold-0"))
-    assert(bm25Search(Snapshots.openBm25(spark, root, "s0")) == snapAtCapture)
+    assert(bm25Search(Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "s0")) == snapAtCapture)
   }
 }

@@ -7,7 +7,8 @@ of each end-to-end metric.
 
 Each pair runs `python3 perfbench/run.py --workload W --seed N --seconds S
 --trace 0` once in each checkout, one after the other; the side that runs
-first alternates from pair to pair. Every run must print correct=true and
+first alternates from pair to pair, so `--pairs` must be even for each side
+to run first equally often. Every run must print correct=true and
 failed=0, or the script stops. For each end-to-end metric that BENCHMARK.json
 (read from the change checkout) declares, it prints each side's median and
 quartiles, the change's win fraction (ties count for neither side) and a
@@ -18,6 +19,9 @@ verdict:
   regression  the change's median is worse than the parent's by more than
               the metric's bound (relative), or loses >= 9/10 of the pairs
               by more than the parent's quartile distance
+  unresolved  the parent's quartile distance exceeds bound x |parent median|,
+              so a move of the bound's size cannot be told from the spread,
+              unless every change run beats every parent run
   flat        otherwise
 
 `--seconds` defaults to BENCHMARK.json's run_seconds. The script changes no
@@ -69,6 +73,9 @@ def verdict(parent, change, better, bound):
     elif (bound is not None and pmed != 0 and -delta / abs(pmed) > bound) or \
             (losses >= 0.9 * n and -delta > iqr):
         v = "regression"
+    elif bound is not None and iqr > bound * abs(pmed) and \
+            not min(sign * c for c in change) > max(sign * p for p in parent):
+        v = "unresolved"
     else:
         v = "flat"
     return wins / n, v
@@ -84,13 +91,18 @@ def main():
     ap.add_argument("--seconds", type=float)
     ap.add_argument("--json", help="also write every run's metrics and the verdicts here")
     a = ap.parse_args()
+    if a.pairs < 2 or a.pairs % 2:
+        ap.error(f"--pairs must be even and at least 2, got {a.pairs}: the first side "
+                 "alternates, and an odd count lets one side run first more often")
 
     spec = json.load(open(os.path.join(a.change, "BENCHMARK.json")))
     seconds = a.seconds if a.seconds is not None else spec["run_seconds"]
     metrics = spec["end_to_end"]
     runs = {"parent": [], "change": []}
+    first = []
     for i in range(a.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        first.append(order[0])
         for side in order:
             runs[side].append(run(getattr(a, side), a.workload, a.seed, seconds))
         print(f"pair {i + 1}/{a.pairs} ({order[0]} first): " + ", ".join(
@@ -113,7 +125,7 @@ def main():
     if a.json:
         with open(a.json, "w") as f:
             json.dump({"workload": a.workload, "seed": a.seed, "pairs": a.pairs,
-                       "seconds": seconds, "metrics": report}, f, indent=1)
+                       "seconds": seconds, "first": first, "metrics": report}, f, indent=1)
 
 
 if __name__ == "__main__":
