@@ -412,7 +412,7 @@ object Ann {
       // absent in non-PQ layouts: annSearchIndexPq refuses, everything else
       // is unaffected
       Pq.loadCodebook(spark, s"$path/pq_codebook.json"),
-      deletedRows = dels.map(_.nRows).getOrElse(0L))
+      deletedRows = dels.map(_.deltas.nRows).getOrElse(0L))
     idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels)))
     idx
   }

@@ -841,7 +841,7 @@ object Dedup extends Logging {
       // tombstoned rows are still SCANNED: the estimate keeps them
       Some(meta.get("n_rows").asLong() + batches.map(_.nRows).sum),
       appendedBatches = batches.size,
-      deletedPostings = dels.map(_.nRows).getOrElse(0L))
+      deletedPostings = dels.map(_.deltas.nRows).getOrElse(0L))
     idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels)))
     idx
   }

@@ -412,10 +412,10 @@ object Lexical {
       // merged n_docs/avgdl equal a rebuild-without-the-deleted-docs'
       val nDocs = meta.get("n_docs").asDouble() +
         batches.map(_.meta.get("n_docs").asDouble()).sum -
-        dels.map(_.nDocs).getOrElse(0.0)
+        dels.map(_.deltas.nDocs).getOrElse(0.0)
       val sumDl = meta.get("sum_dl").asDouble() +
         batches.map(_.meta.get("sum_dl").asDouble()).sum -
-        dels.map(_.sumDl).getOrElse(0.0)
+        dels.map(_.deltas.sumDl).getOrElse(0.0)
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
       val stats = spark.createDataFrame(
         java.util.Arrays.asList(Row(nDocs, sumDl / nDocs)),
@@ -428,7 +428,7 @@ object Lexical {
         Some(baseNRows + appended),
         // stale by construction — searches must recompute from tf/dl
         bakedParams = None, appendedPostings = appended,
-        deletedPostings = dels.map(_.nRows).getOrElse(0L))
+        deletedPostings = dels.map(_.deltas.nRows).getOrElse(0L))
     }
     // shared-mirror key (judge r12 #5): a new delete keys a NEW mirror
     idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.Bm25, path, batches, dels)))

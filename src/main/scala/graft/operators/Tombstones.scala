@@ -77,16 +77,29 @@ object Tombstones {
     spark.conf.getOption(MaxDriverDeleteIdsKey).map(_.toLong)
       .getOrElse(DefaultMaxDriverDeleteIds)
 
+  /** A delete's exact stat deltas: ids and index rows dropped, and for
+    * BM25 the `n_docs`/`sum_dl` corpus sums that shrink.
+    */
+  final case class Deltas(nIds: Long, nRows: Long, nDocs: Double = 0.0, sumDl: Double = 0.0) {
+    def +(o: Deltas): Deltas =
+      Deltas(nIds + o.nIds, nRows + o.nRows, nDocs + o.nDocs, sumDl + o.sumDl)
+    /** The `delete_meta.json` members that record these deltas. */
+    def json: String =
+      s""""n_ids": $nIds, "n_rows": $nRows, "n_docs": $nDocs, "sum_dl": $sumDl"""
+  }
+
+  /** The deltas one committed tombstone dir recorded. */
+  private def deltasOf(meta: com.fasterxml.jackson.databind.JsonNode): Deltas =
+    Deltas(meta.get("n_ids").asLong(), meta.get("n_rows").asLong(),
+      meta.get("n_docs").asDouble(), meta.get("sum_dl").asDouble())
+
   /** One family's view of an index's committed tombstones: the sorted delete
     * ids (the shareKey / census component), the exact summed stat deltas,
     * and the exclusion to apply to id-keyed frames.
     */
   final case class Deletes(
       names: Seq[String],
-      nIds: Long,
-      nRows: Long,
-      nDocs: Double,
-      sumDl: Double,
+      deltas: Deltas,
       private val exclusion: Either[Array[Long], DataFrame]) {
     /** Exclude the tombstoned ids from `df` keyed by `idCol`. Literal-set
       * form stays inside whole-stage codegen (In → InSet past the optimizer
@@ -269,22 +282,6 @@ object Tombstones {
       appliedDeletes(fs, path).contains(delId) ||
       foldedDeletes(fs, path).contains(delId)
 
-  /** A delete's exact stat deltas: ids and index rows dropped, and for
-    * BM25 the `n_docs`/`sum_dl` corpus sums that shrink.
-    */
-  final case class Deltas(nIds: Long, nRows: Long, nDocs: Double = 0.0, sumDl: Double = 0.0) {
-    def +(o: Deltas): Deltas =
-      Deltas(nIds + o.nIds, nRows + o.nRows, nDocs + o.nDocs, sumDl + o.sumDl)
-    /** The `delete_meta.json` members that record these deltas. */
-    def json: String =
-      s""""n_ids": $nIds, "n_rows": $nRows, "n_docs": $nDocs, "sum_dl": $sumDl"""
-  }
-
-  /** The deltas one committed tombstone dir recorded. */
-  private def deltasOf(meta: com.fasterxml.jackson.databind.JsonNode): Deltas =
-    Deltas(meta.get("n_ids").asLong(), meta.get("n_rows").asLong(),
-      meta.get("n_docs").asDouble(), meta.get("sum_dl").asDouble())
-
   /** Land one tombstone: `foundIds` (an `id` column — the ids the family
     * resolved as actually present) plus the family's exact stat deltas,
     * committed by one atomic marker create. The caller
@@ -402,7 +399,7 @@ object Tombstones {
         // exclusion set would serve taken-down docs.) Under-bound opens —
         // the common case — already collect eagerly above.
         Right(idsDf.localCheckpoint(true))
-    Some(Deletes(dirs.map(_.getName), total.nIds, total.nRows, total.nDocs, total.sumDl, exclusion))
+    Some(Deletes(dirs.map(_.getName), total, exclusion))
   }
 
   /** Fold every visible tombstone of `path` into ONE consolidated delete
