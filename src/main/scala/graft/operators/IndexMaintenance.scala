@@ -555,7 +555,8 @@ object IndexMaintenance {
     * read only when a denylist exists, so a root without one opens nothing.
     */
   private def audit(spark: SparkSession, denylistRoot: String, keys: Seq[String],
-      legs: => Seq[(Seq[String], org.apache.spark.sql.DataFrame)]): org.apache.spark.sql.DataFrame = {
+      legs: => Seq[(Seq[String], org.apache.spark.sql.DataFrame)])
+      : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit}
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val empty = spark.createDataFrame(

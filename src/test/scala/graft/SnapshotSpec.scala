@@ -154,7 +154,8 @@ class SnapshotSpec extends AnyFunSuite {
     // call a snapshot-unaware maintainer might make — sweeps pinned d0
     assert(Lexical.bm25DeleteFromIndex(spark, g0, idsDf(Seq(3L)), "id", "d1"))
     assert(Tombstones.consolidate(spark, g0, preserve = Set.empty) == 2)
-    val ex = intercept[IllegalArgumentException](Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "s0"))
+    val ex = intercept[IllegalArgumentException](
+      Snapshots.open(spark, Lexical.Bm25Lifecycle, root, "s0"))
     assert(ex.getMessage.contains("pins were violated"))
   }
 

@@ -600,7 +600,8 @@ class StreamTakedownSpec extends AnyFunSuite {
         idx, q, "doc_id", "text", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-    assert(bmBitsIdx(Snapshots.open(spark, Lexical.Bm25Lifecycle, bmRoot, "mix_pin")) == bmBits(capRef),
+    assert(bmBitsIdx(Snapshots.open(spark, Lexical.Bm25Lifecycle, bmRoot, "mix_pin")) ==
+        bmBits(capRef),
       s"the pinned view diverged from the model's capture-time state (seed $seed)")
     // the compliance seam the pin opens is exactly the model's: ids denied
     // AFTER capture that were present AT capture are servable through the
