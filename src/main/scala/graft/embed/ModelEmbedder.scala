@@ -1,5 +1,6 @@
 package graft.embed
 
+import graft.operators.IndexLayout
 import org.apache.spark.sql.SparkSession
 
 /** Local-model embedding artifact: a linear projection `W` (dimOut × dimIn)
@@ -93,11 +94,9 @@ object LinearModel {
       .repartition(1) // weight matrices are small; one footer beats 32
       .write.mode("overwrite").parquet(weightsPath(dir).toString)
     val fs = metaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaPath(dir), true)
-    try out.write(
-      (s"""{"type": "linear", "dim_in": $dimIn, "dim_out": ${w.length}, """ +
-        s""""featurizer": "$featurizer"}""").getBytes("UTF-8"))
-    finally out.close()
+    IndexLayout.writeJson(fs, metaPath(dir),
+      s"""{"type": "linear", "dim_in": $dimIn, "dim_out": ${w.length}, """ +
+        s""""featurizer": "$featurizer"}""", overwrite = true)
   }
 
   /** Driver-side artifact read: `(dimIn, dimOut, rows, featurizer)` with the
@@ -109,9 +108,7 @@ object LinearModel {
       maxWeightBytes: Long = 64L << 20): (Int, Int, Array[(Int, Array[Double])], String) = {
     val fs = metaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(metaPath(dir)), s"no linear model artifact at $dir")
-    val in = fs.open(metaPath(dir))
-    val metaStr = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(metaStr)
+    val node = IndexLayout.readJson(fs, metaPath(dir))
     val tpe = Option(node.get("type")).map(_.asText()).getOrElse("")
     require(tpe == "linear", s"unknown model type '$tpe' in $dir")
     val dimIn = node.get("dim_in").asInt()

@@ -97,8 +97,9 @@ object PqKernels {
     s
   }
 
-  /** Plain-array twins of [[lut]]/[[adc]] for the broadcast-matrix scan
-    * kernel ([[graft.operators.Pq.pqTopK]]'s coarse stage): same loops, same
+  /** Plain-array twins of [[lut]]/[[adc]] for the array form of
+    * `Resident.PqScoring` (the driver mirror's fold and the
+    * [[graft.operators.Pq.pqTopK]] scan): same loops, same
     * accumulation order, element for element — `ArrayData.getDouble(i)`
     * reads the identical double the primitive array holds at `i`, so the
     * two forms cannot drift (the ADC-algebra spec pins the expression form

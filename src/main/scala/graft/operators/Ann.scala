@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * corpus vectors are assigned to their nearest centroid once, queries probe only
   * the `nProbe` nearest centroid lists, so the scored candidate set shrinks by
   * ~nProbe/nCentroids while recall stays high for clustered data.
+  *
+  * The persisted-index searches (float, IVF_SQ8, IVF_PQ) are one body
+  * ([[searchIndex]]) and the broadcast quantized scans one more
+  * ([[scanTopK]]); how each scores is [[Resident.AnnScoring]].
   */
 object Ann {
 
@@ -211,16 +215,11 @@ object Ann {
     * the IVF_SQ8 pair (`codes`, `cn2`); with a codebook also the IVF_PQ
     * pair (`pq` m-byte codes, `cn` exact double norm — ADC ranks by
     * reconstruction-dot over TRUE norms, so the coarse scan never touches
-    * `cv`).
+    * `cv`). Each pair is its [[Resident.AnnScoring]]'s bake.
     */
   private def enrichCells(cells: DataFrame, cb: Option[Pq.PqCodebook]): DataFrame = {
-    val sq8 = graft.operators.Quantize
-      .quantize(cells, "cv", "codes", "qscale")
-      .withColumn("cn2", graft.operators.Quantize.norm2I8(col("codes")))
-    cb match {
-      case Some(c) => Pq.pqEncode(sq8, "cv", c, "pq").withColumn("cn", norm(col("cv")))
-      case None => sq8
-    }
+    val sq8 = Resident.Int8Scoring.bake(cells)
+    cb.fold(sq8)(Resident.PqScoring.bake(sq8, _))
   }
 
   private def writeLayout(cells: DataFrame, centroids: DataFrame, path: String,
@@ -497,7 +496,7 @@ object Ann {
       // compaction folds batches but does NOT refit: the rows-at-refit
       // watermark carries so the refit signal keeps accumulating
       def compact(dst: String): Unit = {
-        this.compact(spark, src, dst)
+        this.compact(spark, idx, src, dst)
         baseRows.foreach(writeRefitMeta(dst, _))
       }
       Seq(
@@ -607,10 +606,9 @@ object Ann {
     case _ => None
   }
 
-  /** Probe assignment + cell restriction shared by [[annSearchIndex]] /
-    * [[annSearchIndexInt8]]. Both regimes are row-identical by construction
-    * (the guard spec differential-tests them); only the physical shape
-    * differs:
+  /** Probe assignment + cell restriction of [[searchIndex]]. Both regimes
+    * are row-identical by construction (the guard spec differential-tests
+    * them); only the physical shape differs:
     *
     *  - [[LocalProbes]] (under the bound): the query vectors live on the
     *    driver, probes were computed against the cached centroid matrix
@@ -692,48 +690,8 @@ object Ann {
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
       k: Int, nProbe: Int = 4, maxProbeRowsOverride: Long = 0L): DataFrame = {
     require(k >= 1 && nProbe >= 1, s"k/nProbe must be >= 1, got $k/$nProbe")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    serveTiers(index, pr, k, Resident.FloatScoring) match {
-      case Some(df) => return df
-      case None =>
-    }
-    val pruned = allowRestrict(pr.restrict(index.cells), index.allowed)
-    val scored = pr match {
-      // for LocalProbes the norms were computed driver-side with the same
-      // sequential-fold kernel the Catalyst norm expression lowers to
-      // (bit-identical doubles), and the explicit broadcast() pins the BUILD
-      // side to the LocalRelation (one materialization job; the scan side
-      // is big enough to want the parallelism)
-      case LocalProbes(_, exploded, _) =>
-        broadcast(exploded.toDF("query_id", "qv", "__qn", "__cell"))
-          .join(pruned.withColumn("__cn", norm(col("cv"))), Seq("__cell"))
-          .select(col("query_id"), col("corpus_id"),
-            cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score"))
-      case DistProbes(probes, _) => queries
-        .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("qv"))
-        .withColumn("__qn", norm(col("qv")))
-        .join(probes, "query_id")
-        .join(pruned.withColumn("__cn", norm(col("cv"))), Seq("__cell"))
-        .select(col("query_id"), col("corpus_id"),
-          cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score"))
-    }
-    rankedTopK(scored, k)
+    searchIndex(index, queries, qId, qVec, k, nProbe, maxProbeRowsOverride, Resident.FloatScoring)
   }
-
-  /** Per-query exact-cosine top-k of `(query_id, corpus_id, __score)` rows
-    * in the `(left_id, right_id, score, rank)` output contract.
-    */
-  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = scored
-    .groupBy(col("query_id"))
-    .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
-    .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-    .select(
-      col("query_id").as("left_id"),
-      col("__s.id").as("right_id"),
-      col("__s.score").as("score"),
-      (col("__pos") + 1).cast("int").as("rank"))
 
   /** IVF_SQ8 search of a persisted index: same cell pruning as
     * [[annSearchIndex]]; the int8 codes coarse-score the probed cells and
@@ -756,64 +714,8 @@ object Ann {
       s"k/nProbe/rerankFactor must be >= 1, got $k/$nProbe/$rerankFactor")
     require(index.cells.columns.contains("codes"),
       "index has no int8 codes — rebuild with annWriteIndex (IVF_SQ8 layout)")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    serveTiers(index, pr, k, Resident.Int8Scoring(rerankFactor)) match {
-      case Some(df) => return df
-      case None =>
-    }
-    // coarse: narrow scan — corpus_id, codes, cn2 only; cv never read here.
-    // The allow semi-join sits on the coarse scan, so disallowed vectors
-    // never enter the candidate pool (the rerank join below fetches vectors
-    // for already-filtered candidates only)
-    val coarseCells = allowRestrict(pr.restrict(index.cells), index.allowed)
-      .select(col("corpus_id"), col("codes"), col("cn2"), col("__cell"))
-    // local regime: quantize runs in-plan over the fused LocalRelation (once
-    // per probe row instead of once per query — same deterministic codes),
-    // skipping the probe broadcast + join entirely
-    val isLocal = pr.isInstanceOf[LocalProbes]
-    val qCodesBase = pr match {
-      case LocalProbes(_, exploded, _) =>
-        exploded.map(r => (r._1, r._2, r._4)).toDF("query_id", "__qv", "__cell")
-      case DistProbes(probes, _) => queries
-        .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("__qv"))
-        .join(probes, "query_id")
-    }
-    val qCodes0 = graft.operators.Quantize.quantize(qCodesBase, "__qv", "__qc", "__qs")
-      .withColumn("__qn2", graft.operators.Quantize.norm2I8(col("__qc")))
-      .select(col("query_id"), col("__qc"), col("__qn2"), col("__cell"))
-    // local regime: pin the BUILD side to the folded LocalRelation — the
-    // broadcast costs one materialization job (LocalTableScanExec does not
-    // override executeCollectIterator), which is fine in this batch regime;
-    // letting the planner broadcast the cell scan instead would cost a far
-    // bigger one
-    val qCodes = if (isLocal) broadcast(qCodes0) else qCodes0
-    val scoredCoarse0 = qCodes
-      .join(coarseCells, Seq("__cell"))
-      .select(col("query_id"), col("corpus_id"),
-        graft.operators.Quantize.cosineI8WithNorms(
-          graft.functions.Int8Kernels.dotI8(col("__qc"), col("codes")),
-          col("__qn2"), col("cn2")).as("__qscore"))
-    val candidates = scoredCoarse0
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VecExpressions
-        .topK(k * rerankFactor, col("__qscore"), col("corpus_id")).as("__top"))
-      .select(col("query_id"), explode(col("__top.id")).as("corpus_id"))
-    // exact rerank: only the candidate rows touch the double vectors; the
-    // local regime reuses the already-collected query rows (no re-scan of
-    // the query input)
-    val rerankCells = pr.restrict(index.cells)
-      .select(col("corpus_id"), asDouble(col("cv")).as("cv"))
-      .withColumn("__cn", norm(col("cv")))
-    val qFull = (pr match {
-      case LocalProbes(qRows, _, _) => qRows.toSeq.toDF("query_id", "qv")
-      case DistProbes(_, _) => queries
-        .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("qv"))
-    }).withColumn("__qn", norm(col("qv")))
-    rankedTopK(candidates.join(qFull, "query_id").join(rerankCells, "corpus_id")
-      .select(col("query_id"), col("corpus_id"),
-        cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score")), k)
+    searchIndex(index, queries, qId, qVec, k, nProbe, maxProbeRowsOverride,
+      Resident.Int8Scoring(rerankFactor))
   }
 
   /** IVF_PQ search of a persisted index written with `annWriteIndex(pqM >
@@ -824,13 +726,10 @@ object Ann {
     * rerank of the top `rerankFactor·k` per query. Output contract =
     * [[annSearchIndex]]; `score` is the exact cosine on every kept pair,
     * so only the candidate set is approximate (`q_ann_index_pq_recall`
-    * gates it). Per query the plan builds one m·ks ADC lookup table
-    * (driver-side through the probe rows in the local regime — the SAME
-    * [[graft.functions.PqKernels.lut]] kernel the expression calls — or
-    * in-plan in the distributed regime); each candidate then costs m table
-    * lookups, zero multiplies.
-    * A pinned index serves from its mirrors instead, ADC + rerank as the
-    * same arithmetic over the mirrored codes (see [[serveTiers]]).
+    * gates it). Per query the plan builds one m·ks ADC lookup table; each
+    * candidate then costs m table lookups, zero multiplies. A pinned index
+    * serves from its mirrors instead, ADC + rerank as the same arithmetic
+    * over the mirrored codes (see [[serveTiers]]).
     */
   def annSearchIndexPq(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
@@ -840,62 +739,146 @@ object Ann {
       s"k/nProbe/rerankFactor must be >= 1, got $k/$nProbe/$rerankFactor")
     val cb = index.pqCodebook.getOrElse(throw new IllegalArgumentException(
       "index has no PQ codebook — rebuild with annWriteIndex(pqM = ...) (IVF_PQ layout)"))
+    searchIndex(index, queries, qId, qVec, k, nProbe, maxProbeRowsOverride,
+      Resident.PqScoring(cb, rerankFactor))
+  }
+
+  /** The body of the three index searches: probes ([[probeAndPrune]]),
+    * then the pinned tiers ([[serveTiers]]) or the plan. The plan joins the
+    * probe rows to the probed cells on `__cell` and scores each pair with
+    * `scoring` ([[Resident.AnnScoring]]), reading only its cell columns.
+    * Float scores are exact and ranked directly; a quantized scoring keeps
+    * its pool per query and the exact rerank tail ([[rerankTopK]]) scores
+    * that pool against `cv`.
+    */
+  private def searchIndex(
+      index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
+      k: Int, nProbe: Int, maxProbeRowsOverride: Long,
+      scoring: Resident.AnnScoring): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
-    serveTiers(index, pr, k,
-      Resident.PqScoring(cb.flat, cb.m, cb.ks, cb.dsub, rerankFactor)) match {
-      case Some(df) => return df
-      case None =>
+    serveTiers(index, pr, k, scoring).getOrElse {
+      // the local regime reuses the collected query rows; its probe rows
+      // are ONE LocalRelation with the driver-side norms (the same
+      // sequential-fold kernel the Catalyst norm lowers to, bit-identical),
+      // so the plan has no probe broadcast and no query-probe join. The
+      // explicit broadcast() pins the BUILD side to it (one materialization
+      // job; the cell scan is big enough to want the parallelism)
+      lazy val qRows = pr match {
+        case lp: LocalProbes => lp.qRows.toSeq.toDF("query_id", "__qv")
+          .withColumn("__qn", norm(col("__qv")))
+        case _: DistProbes => queryRows(queries, qId, qVec)
+      }
+      val probeRows = pr match {
+        case lp: LocalProbes =>
+          broadcast(scoring.prep(lp.exploded.toDF("query_id", "__qv", "__qn", "__cell")))
+        case DistProbes(probes, _) => scoring.prep(qRows).join(probes, "query_id")
+      }
+      // the scan reads the scoring's cell columns only (a quantized coarse
+      // scan never reads cv); a view's allow semi-join sits on it, so
+      // disallowed vectors never form candidates
+      val cells = allowRestrict(pr.restrict(index.cells), index.allowed)
+        .select(col("corpus_id") +: col("__cell") +: scoring.cellCols: _*)
+      val scored = probeRows.join(cells, Seq("__cell"))
+        .select(col("query_id"), col("corpus_id"), scoring.score.as("__score"))
+      scoring match {
+        case Resident.FloatScoring => rankedTopK(scored, k)
+        case q: Resident.Quantized =>
+          val pool = scored.groupBy(col("query_id"))
+            .agg(graft.functions.VecExpressions
+              .topK(q.pool(k), col("__score"), col("corpus_id")).as("__top"))
+            .select(col("query_id"), explode(col("__top.id")).as("corpus_id"))
+          // the rerank join fetches vectors for already-filtered candidates
+          rerankTopK(pool, qRows, pr.restrict(index.cells).select(col("corpus_id"), col("cv")), k)
+      }
     }
-    // the allow semi-join sits on the ADC coarse scan (disallowed vectors
-    // never form candidates); the rerank join fetches filtered ids only
-    val coarseCells = allowRestrict(pr.restrict(index.cells), index.allowed)
-      .select(col("corpus_id"), col("pq"), col("cn"), col("__cell"))
-    val isLocal = pr.isInstanceOf[LocalProbes]
-    val qLut0 = pr match {
-      case LocalProbes(_, exploded, _) =>
-        // LUT per (query, probe) row via the same kernel the Catalyst
-        // expression calls — bit-identical tables, zero Spark work
-        exploded.map { case (qid, qv, qn, cell) =>
-          val lut = graft.functions.PqKernels.lut(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(qv),
-            cb.flat, cb.m, cb.ks, cb.dsub).toDoubleArray.toSeq
-          (qid, lut, qn, cell)
-        }.toDF("query_id", "__lut", "__qn", "__cell")
-      case DistProbes(probes, _) => queries
-        .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("__qv"))
-        .withColumn("__lut", graft.functions.PqColumns.pqLut(
-          col("__qv"), cb.flat, cb.m, cb.ks, cb.dsub))
-        .withColumn("__qn", norm(col("__qv")))
-        .select(col("query_id"), col("__lut"), col("__qn"))
-        .join(probes, "query_id") // probes carry (query_id, __cell)
-    }
-    val qLut = if (isLocal) broadcast(qLut0) else qLut0
-    val candidates = qLut
-      .join(coarseCells, Seq("__cell"))
-      .select(col("query_id"), col("corpus_id"),
-        when(col("__qn") === 0.0 || col("cn") === 0.0, lit(0.0))
-          .otherwise(graft.functions.PqColumns.pqAdc(col("pq"), col("__lut"), cb.m, cb.ks) /
-            (col("__qn") * col("cn")))
-          .as("__qscore"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VecExpressions
-        .topK(k * rerankFactor, col("__qscore"), col("corpus_id")).as("__top"))
-      .select(col("query_id"), explode(col("__top.id")).as("corpus_id"))
-    // exact rerank: only the candidate rows touch the double vectors; the
-    // local regime reuses the already-collected query rows
-    val rerankCells = pr.restrict(index.cells)
-      .select(col("corpus_id"), asDouble(col("cv")).as("cv"))
-      .withColumn("__cn", norm(col("cv")))
-    val qFull = (pr match {
-      case LocalProbes(qRows, _, _) => qRows.toSeq.toDF("query_id", "qv")
-      case DistProbes(_, _) => queries
-        .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("qv"))
-    }).withColumn("__qn", norm(col("qv")))
-    rankedTopK(candidates.join(qFull, "query_id").join(rerankCells, "corpus_id")
-      .select(col("query_id"), col("corpus_id"),
-        cosineWithNorms(dot(col("qv"), col("cv")), col("__qn"), col("__cn")).as("__score")), k)
+  }
+
+  /** `(query_id, __qv, __qn)`: each query's id, vector and norm. */
+  private def queryRows(queries: DataFrame, qId: String, qVec: String): DataFrame = queries
+    .select(col(qId).cast("long").as("query_id"), asDouble(col(qVec)).as("__qv"))
+    .withColumn("__qn", norm(col("__qv")))
+
+  /** Per-query exact-cosine top-k of `(query_id, corpus_id, __score)` rows
+    * in the `(left_id, right_id, score, rank)` output contract.
+    */
+  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = scored
+    .groupBy(col("query_id"))
+    .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("corpus_id")).as("__top"))
+    .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__s")))
+    .select(
+      col("query_id").as("left_id"),
+      col("__s.id").as("right_id"),
+      col("__s.score").as("score"),
+      (col("__pos") + 1).cast("int").as("rank"))
+
+  /** The exact rerank of a quantized pool: `(query_id, corpus_id)`
+    * candidates join their query rows ([[queryRows]]) and their
+    * `(corpus_id, cv)` vectors, and the exact float cosine ranks them — the
+    * pairs are few (≤ pool per query), so the per-row norms cost nothing.
+    */
+  private def rerankTopK(candidates: DataFrame, qRows: DataFrame, vecs: DataFrame,
+      k: Int): DataFrame =
+    rankedTopK(candidates.join(qRows, "query_id")
+      .join(vecs.select(col("corpus_id") +: Resident.FloatScoring.cellCols: _*), "corpus_id")
+      .select(col("query_id"), col("corpus_id"), Resident.FloatScoring.score.as("__score")), k)
+
+  /** A quantized top-k over a whole corpus, no index
+    * ([[Quantize.quantizedTopK]], [[Pq.pqTopK]]): the corpus is baked
+    * in-plan ([[Resident.Quantized.bake]]) and its code matrix collected in
+    * the one job that sizes it ([[VecScan.collectIfFits]], each row charged
+    * its id, code and norm bytes) under [[VecScan.maxBroadcastBytes]]
+    * (unbounded with `skipSizeCheck`; over the bound, `overBound(bound)` is
+    * the error), then broadcast. The coarse stage is a mapPartitions scan
+    * over the query rows — the [[VecScan.knn]] shape — that prepares each
+    * query once ([[Resident.Quantized.coarse]]) and keeps its
+    * `scoring.pool(k)` best candidates; the exact rerank tail
+    * ([[rerankTopK]]) scores them. Not the declarative
+    * `crossJoin(broadcast(codes))`: whole-stage codegen defers stream-side
+    * projections into a nested-loop join's inner loop, so the per-query prep
+    * (a quantize, or a PQ lookup table of m·ks doubles) would run once per
+    * PAIR — a measured 40x wall for the PQ table at the bench scale.
+    */
+  private[operators] def scanTopK(
+      queries: DataFrame, qId: String, qVec: String,
+      corpus: DataFrame, cId: String, cVec: String,
+      k: Int, scoring: Resident.Quantized, excludeSelf: Boolean, skipSizeCheck: Boolean,
+      overBound: Long => String): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val bound = if (skipSizeCheck) Long.MaxValue else VecScan.maxBroadcastBytes(spark)
+    val vecs = corpus.select(col(cId).cast("long").as("corpus_id"), asDouble(col(cVec)).as("cv"))
+    // a null id or vector has no code and matches nothing
+    val codeRows = scoring.bake(vecs.filter(col("corpus_id").isNotNull && col("cv").isNotNull))
+      .select(col("corpus_id"), col(scoring.codesCol), col(scoring.normCol).cast("double"))
+    val rows = VecScan.collectIfFits(codeRows, bound)(r => 16L + r.getArray(1).numElements(),
+      r => (r.getLong(0), r.getArray(1).toByteArray(), r.getDouble(2)))
+      .getOrElse(throw new IllegalArgumentException(overBound(bound)))
+    val matB = spark.sparkContext.broadcast(
+      (rows.map(_._1), new Resident.Codes(rows.map(_._2), rows.map(_._3))))
+    val poolK = scoring.pool(k)
+    val candidates = queries
+      .select(col(qId).cast("long"), asDouble(col(qVec)))
+      .as[(Long, Array[Double])]
+      .mapPartitions { it =>
+        val (ids, mat) = matB.value
+        it.flatMap { case (qid, qv) =>
+          if (qv == null) Iterator.empty // a null query vector matches nothing
+          else {
+            val coarse = scoring.coarse(qv, math.sqrt(VecScan.dot(qv, qv)))
+            val buf = new graft.functions.TopKBuffer(poolK)
+            var j = 0
+            while (j < ids.length) {
+              if (!(excludeSelf && ids(j) == qid)) buf.insert(coarse(mat.codes(j), mat.norms(j)), ids(j))
+              j += 1
+            }
+            Iterator.tabulate(buf.n)(r => (qid, buf.ids(r)))
+          }
+        }
+      }
+      .toDF("query_id", "corpus_id")
+    rerankTopK(candidates, queryRows(queries, qId, qVec), vecs, k)
   }
 
   /** IVF top-k: returns (left_id, right_id, score, rank) like the exact join.

@@ -893,7 +893,7 @@ object Dedup extends Logging {
         src: String, policy: IndexMaintenance.Policy): Seq[IndexLifecycle.Signal] = {
       import org.apache.hadoop.fs.{FileUtil, Path}
       def compact(dst: String): Unit = {
-        this.compact(spark, src, dst)
+        this.compact(spark, index, src, dst)
         val conf = spark.sparkContext.hadoopConfiguration
         val fs = new Path(src).getFileSystem(conf)
         val mani = new Path(src, "ingest_manifests")

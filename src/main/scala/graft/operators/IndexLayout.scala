@@ -41,12 +41,12 @@ object IndexLayout {
   // ObjectMapper reads are thread-safe: one mapper serves every read
   private val mapper = new ObjectMapper()
 
-  private[operators] def readJson(fs: FileSystem, p: Path): JsonNode = {
+  private[graft] def readJson(fs: FileSystem, p: Path): JsonNode = {
     val in = fs.open(p)
     try mapper.readTree(in) finally in.close()
   }
 
-  private[operators] def writeJson(
+  private[graft] def writeJson(
       fs: FileSystem, p: Path, json: String, overwrite: Boolean): Unit = {
     val out = fs.create(p, overwrite)
     try out.write(json.getBytes("UTF-8")) finally out.close()

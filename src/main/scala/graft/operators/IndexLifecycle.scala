@@ -88,9 +88,16 @@ abstract class IndexLifecycle(val name: String, memberId: String) {
     * Non-in-place: the caller swaps paths and deletes the old directory on
     * their own cadence.
     */
-  final def compact(spark: SparkSession, srcPath: String, dstPath: String): Unit = {
+  final def compact(spark: SparkSession, srcPath: String, dstPath: String): Unit =
+    compact(spark, open(spark, srcPath, None), srcPath, dstPath)
+
+  /** [[compact]] of `index`, already open from `srcPath`: a maintenance
+    * signal compacts the index it read its value from, without a second
+    * open.
+    */
+  final def compact(spark: SparkSession, index: Index, srcPath: String, dstPath: String): Unit = {
     IndexLayout.requireNonInPlace(srcPath, dstPath)
-    compactInto(open(spark, srcPath, None), dstPath)
+    compactInto(index, dstPath)
     IndexLayout.carryLedgers(spark, srcPath, dstPath)
   }
 }

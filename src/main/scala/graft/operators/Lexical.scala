@@ -579,7 +579,7 @@ object Lexical {
 
     private[operators] def signals(spark: SparkSession, index: Bm25Index, src: String,
         policy: IndexMaintenance.Policy): Seq[IndexLifecycle.Signal] = {
-      val compact = (dst: String) => this.compact(spark, src, dst)
+      val compact = (dst: String) => this.compact(spark, index, src, dst)
       Seq(
         IndexLifecycle.Signal("appendFraction", index.appendFraction,
           policy.bm25MaxAppendFraction, "compact", compact),

@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * a 64x capacity jump, the difference between broadcasting a 100M-vector
   * corpus and not.
   *
-  * Division of labor (mirrors [[Quantize.quantizedTopK]]):
+  * Division of labor (mirrors [[Quantize.quantizedTopK]]; the scoring
+  * itself is written once, in [[Resident.PqScoring]]):
   *  - [[pqTrain]] fits the codebook driver-side on a seeded deterministic
   *    sample (bounded collect — the k-means is O(sample·ks·dim·iters), far
   *    from corpus-sized);
@@ -175,8 +176,6 @@ object Pq {
   def saveCodebook(
       spark: org.apache.spark.sql.SparkSession, path: String, cb: PqCodebook): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
     val sb = new StringBuilder
     sb.append(s"""{"m": ${cb.m}, "ks": ${cb.ks}, "dsub": ${cb.dsub}, "flat": [""")
     var i = 0
@@ -186,11 +185,12 @@ object Pq {
       i += 1
     }
     sb.append("]}")
-    try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
+    IndexLayout.writeJson(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      sb.toString, overwrite = true)
   }
 
   /** Load a [[saveCodebook]] JSON; None when the file does not exist
-    * (pre-PQ layouts).
+    * (non-PQ layouts).
     */
   def loadCodebook(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[PqCodebook] = {
@@ -213,24 +213,16 @@ object Pq {
     * `adc_dot / (||q||·||x||)` — the reconstruction dot over the true
     * norms, so norm variation cannot masquerade as similarity.
     *
-    * Scale shape: the corpus side is encoded IN-PLAN (one distributed pass)
-    * and collected as an `m`-bytes-plus-norm code matrix (~dim/m x more
-    * vectors per broadcast byte than SQ8, size-guarded below); coarse
-    * scoring is a map-partitions scan over the broadcast matrix — the
-    * [[VecScan.knn]] pattern — that builds each query's LUT ONCE and then
-    * pays `m` lookups per candidate, emitting ≤ rerankFactor·k candidate
-    * rows per query; the exact rerank joins the survivors back to the
-    * original vectors.
-    *
-    * The scan kernel is deliberately NOT the declarative
-    * `crossJoin(broadcast(codes))` form: whole-stage codegen defers
-    * stream-side projections into the nested-loop join's inner loop, so the
-    * per-QUERY LUT (m·ks doubles — 16k multiplies and a 32 KB allocation at
-    * the defaults) was re-evaluated per PAIR, a measured 40x wall blowup at
-    * the bench scale (11 s for 100×2k pairs; jstack pinned the whole wall
-    * inside `PqKernels.lut` under the join stage). ADC's entire point is
-    * LUT amortization across candidates — the kernel form is the one shape
-    * Spark cannot silently de-amortize.
+    * Scale shape ([[Ann.scanTopK]] with [[Resident.PqScoring]]): the corpus
+    * side is encoded IN-PLAN (one distributed pass) and collected as an
+    * `m`-bytes-plus-id-and-norm code matrix (~dim/m x more vectors per
+    * broadcast byte than SQ8) in the one job that sizes it; coarse scoring
+    * is a map-partitions scan over the broadcast matrix that builds each
+    * query's LUT ONCE and then pays `m` lookups per candidate — ADC's
+    * point is LUT amortization across candidates, which the scan shape
+    * keeps; the exact rerank joins the survivors back to the original
+    * vectors. A corpus whose matrix exceeds [[VecScan.maxBroadcastBytes]]
+    * fails loudly unless `skipSizeCheck`.
     */
   def pqTopK(
       queries: DataFrame, qId: String, qVec: String,
@@ -239,81 +231,10 @@ object Pq {
       excludeSelf: Boolean = false, skipSizeCheck: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    if (!skipSizeCheck) {
-      val bound = VecScan.maxBroadcastBytes(corpus.sparkSession)
-      val (n, _) = Quantize.guardStats(corpus, cVec)
-      // m code bytes + 8 norm bytes per corpus vector
-      require(n * (cb.m + 8) <= bound,
-        s"corpus PQ matrix (~${n * (cb.m + 8)} bytes at ${cb.m}+8 bytes/vector) " +
-          s"exceeds the $bound-byte broadcast bound — raise " +
-          s"${VecScan.MaxBroadcastBytesKey} or shard the corpus (PQ within " +
-          "IVF cells)")
-    }
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // encode distributed (the same codegen kernel the persisted layout
-    // bakes with), collect only (id, m code bytes, norm) — the guard above
-    // sized exactly this materialization — and broadcast the matrix once
-    val cRows = corpus
-      .select(col(cId).cast("long").as("__cid"), asDouble(col(cVec)).as("__cv"))
-      .filter(col("__cv").isNotNull) // a null vector has no code and can match nothing
-      .select(col("__cid"),
-        PqColumns.pqEncode(col("__cv"), cb.flat, cb.m, cb.ks, cb.dsub).as("__pq"),
-        norm(col("__cv")).as("__cnorm"))
-      .as[(Long, Seq[Byte], Double)] // array<tinyint> decodes as Seq, not BINARY
-      .collect()
-    val ids = cRows.map(_._1)
-    val codes = cRows.map(_._2.toArray)
-    val norms = cRows.map(_._3)
-    val matB = spark.sparkContext.broadcast((ids, codes, norms))
-    val kk = k * rerankFactor
-    val coarse = queries
-      .select(col(qId).cast("long").as("__qid"), asDouble(col(qVec)).as("__qv"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (mIds, mCodes, mNorms) = matB.value
-        it.flatMap { case (qid, qv) =>
-          if (qv == null) Iterator.empty // null query vector matches nothing
-          else {
-            // LUT once per query (same arithmetic as the pq_lut expression
-            // — see PqKernels.lutArray), then m lookups per candidate; the
-            // same zero-norm → 0.0 convention as the expression form
-            val qn = math.sqrt(VecScan.dot(qv, qv))
-            val lut = graft.functions.PqKernels.lutArray(qv, cb.flat, cb.m, cb.ks, cb.dsub)
-            val buf = new graft.functions.TopKBuffer(kk)
-            var j = 0
-            while (j < mIds.length) {
-              if (!(excludeSelf && mIds(j) == qid)) {
-                val cn = mNorms(j)
-                val s =
-                  if (qn == 0.0 || cn == 0.0) 0.0
-                  else graft.functions.PqKernels.adcArray(mCodes(j), lut, cb.m, cb.ks) / (qn * cn)
-                buf.insert(s, mIds(j))
-              }
-              j += 1
-            }
-            (0 until buf.n).iterator.map(r => (qid, buf.ids(r)))
-          }
-        }
-      }
-      .toDF("__qid", "__cid")
-    val qFull = queries.select(col(qId).cast("long").as("__qid"), asDouble(col(qVec)).as("__qv"))
-      .withColumn("__qnorm", norm(col("__qv")))
-    val cFull = corpus.select(col(cId).cast("long").as("__cid"), asDouble(col(cVec)).as("__cv"))
-      .withColumn("__cnorm", norm(col("__cv")))
-    coarse
-      .join(qFull, "__qid")
-      .join(cFull, "__cid")
-      .select(col("__qid"), col("__cid"),
-        cosineWithNorms(dot(col("__qv"), col("__cv")), col("__qnorm"), col("__cnorm"))
-          .as("__score"))
-      .groupBy(col("__qid"))
-      .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("__cid")).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-      .select(
-        col("__qid").as("left_id"),
-        col("__s.id").as("right_id"),
-        col("__s.score").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
+    Ann.scanTopK(queries, qId, qVec, corpus, cId, cVec, k, Resident.PqScoring(cb, rerankFactor),
+      excludeSelf, skipSizeCheck, bound =>
+        s"corpus PQ matrix (8 id + ${cb.m} code + 8 norm bytes per vector) exceeds the " +
+          s"$bound-byte broadcast bound — raise ${VecScan.MaxBroadcastBytesKey} or " +
+          "shard the corpus (PQ within IVF cells)")
   }
 }

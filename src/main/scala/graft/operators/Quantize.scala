@@ -14,7 +14,9 @@ import org.apache.spark.sql.types.ByteType
   * reranking: the int8 cosine orders a candidate pool `rerankFactor·k` deep,
   * then the survivors are re-scored with the exact double kernel — the
   * standard SQ8 + refine design (FAISS's `SQ8` / Milvus `IVF_SQ8` regime,
-  * public algorithm), here as pure Catalyst expressions.
+  * public algorithm), here as pure Catalyst expressions. This object holds
+  * the kernels; [[Resident.Int8Scoring]] is the one place that scores with
+  * them, for the index plans, the driver mirror and [[quantizedTopK]].
   *
   * Determinism contract: `scale = max(|v|)/127` and
   * `code = floor(v/scale + 0.5)` are single-rounding double ops, and the int8
@@ -52,13 +54,13 @@ object Quantize {
   /** Integer squared norm of a code array (exact, Long). */
   def norm2I8(codes: Column): Column = dotI8(codes, codes)
 
-  /** Plain-array twin of [[quantize]] + [[norm2I8]] for driver/executor
-    * kernels (the serving fast path's per-batch query quantization and the
-    * [[quantizedTopK]] scan kernel): each step is the same double/long
-    * operation in the same order as the Catalyst form — `max(|x|)/127`
-    * scale, `floor(x/scale + 0.5)` cast byte, exact integer squared norm —
-    * so the codes are bit-identical (q_quantize_int8 oracles the column
-    * form; the guard spec differential-tests the paths that mix the two).
+  /** Plain-array twin of [[quantize]] + [[norm2I8]] for the array form of
+    * [[Resident.Int8Scoring]] (the mirror fold and the [[quantizedTopK]]
+    * scan): each step is the same double/long operation in the same order
+    * as the Catalyst form — `max(|x|)/127` scale, `floor(x/scale + 0.5)`
+    * cast byte, exact integer squared norm — so the codes are bit-identical
+    * (q_quantize_int8 oracles the column form; the guard spec
+    * differential-tests the paths that mix the two).
     */
   private[graft] def quantizeArray(qv: Array[Double]): (Array[Byte], Long) = {
     var mx = 0.0
@@ -78,7 +80,9 @@ object Quantize {
 
   /** Plain-array twins of [[graft.functions.Int8Kernels.dotI8]] and
     * [[cosineI8WithNorms]] — same ascending-index integer fold, same
-    * double division/clamp order.
+    * double division/clamp order. The integer squared norms arrive as
+    * doubles, which hold them exactly: the column form casts them the same
+    * way.
     */
   private[graft] def dotI8Array(a: Array[Byte], b: Array[Byte]): Long = {
     val n = math.min(a.length, b.length) // the VecDotI8 convention
@@ -88,10 +92,9 @@ object Quantize {
     s
   }
 
-  private[graft] def cosineI8Scalar(dotI: Long, n2a: Long, n2b: Long): Double =
-    if (n2a == 0L || n2b == 0L) 0.0
-    else math.min(math.max(
-      dotI.toDouble / (math.sqrt(n2a.toDouble) * math.sqrt(n2b.toDouble)), -1.0), 1.0)
+  private[graft] def cosineI8Scalar(dotI: Long, n2a: Double, n2b: Double): Double =
+    if (n2a == 0.0 || n2b == 0.0) 0.0
+    else math.min(math.max(dotI.toDouble / (math.sqrt(n2a) * math.sqrt(n2b)), -1.0), 1.0)
 
   /** Cosine of two code arrays from a precomputed integer dot and integer
     * squared norms. The per-vector scale cancels in cosine, so this is the
@@ -106,77 +109,6 @@ object Quantize {
         dotI.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double"))),
         lit(-1.0)), lit(1.0)))
 
-  /** Broadcast-guard sizing stats `(rowCount, dim)` per corpus plan — the
-    * "stats once, not per search" discipline the persisted indexes follow
-    * via their meta row counts (judge r8 #1: the guard's fresh
-    * `agg(count, first(size))` per call was one scheduler round-trip per
-    * search and the real component of `q_stress_int8`'s recorded doubling).
-    *
-    * Key = canonicalized plan PLUS a file-listing signature. Canonicalized
-    * equality alone is Spark's df-cache keying, but HadoopFsRelation
-    * canonicalizes on root paths only — a FRESH `spark.read.parquet` of the
-    * same directory after the data grew (an index rebuilt in place in the
-    * same JVM) would canonicalize equal and resurrect the stale smaller
-    * (n, d), letting the broadcast-OOM guard pass for a corpus that now
-    * exceeds the bound — the exact failure it exists to prevent (advisor
-    * r9). The signature folds every file-backed relation's listed files and
-    * total size (cheap: the listing is already cached in the plan's
-    * FileIndex), so a re-read after any rewrite — parquet part files carry
-    * fresh UUID names — keys a new entry. A STALE FileIndex inside one
-    * long-lived DataFrame still serves stale data in plain Spark too; the
-    * cache is no worse than the scan itself there.
-    *
-    * Eviction is LRU at [[GuardStatsMaxEntries]] entries (judge r9: the
-    * former size>64 clear-all let one pathological caller cycling 65 plans
-    * wipe the hot entries AND retained canonicalized plans from closed
-    * sessions unboundedly between wipes).
-    */
-  private[graft] val GuardStatsMaxEntries = 64
-  private val guardStatsCache =
-    new java.util.LinkedHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-        (Long, Long)](16, 0.75f, /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-            (Long, Long)]): Boolean = size() > GuardStatsMaxEntries
-    }
-
-  /** Observable compute count for the cache spec. */
-  private[graft] val guardStatsComputes = new java.util.concurrent.atomic.AtomicLong
-
-  private def fileSignature(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Long =
-    plan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case hfs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            // order-independent combine (sum of per-path hashes): no sort of
-            // a possibly-100k-file listing on every guarded search; part
-            // files carry fresh UUID names on rewrite, so any rewrite still
-            // flips the signature
-            var h = hfs.location.sizeInBytes
-            hfs.location.inputFiles.foreach(f => h += f.hashCode * 31L)
-            h
-          case _ => 0L
-        }
-    }.sum
-
-  private[graft] def guardStats(corpus: DataFrame, cVec: String): (Long, Long) = {
-    // key on the canonicalized plan INCLUDING the vec-column projection, so
-    // the same table guarded on different columns gets separate entries
-    val keyed = corpus.select(col(cVec))
-    val analyzed = keyed.queryExecution.analyzed
-    val key = (analyzed.canonicalized, fileSignature(analyzed))
-    guardStatsCache.synchronized {
-      val hit = guardStatsCache.get(key)
-      if (hit != null) return hit
-    }
-    guardStatsComputes.incrementAndGet()
-    val r = keyed.agg(count(lit(1)), first(size(col(cVec)), ignoreNulls = true)).first()
-    val n = r.getLong(0)
-    val d = if (r.isNullAt(1)) 1L else math.max(r.getInt(1), 1).toLong
-    guardStatsCache.synchronized { guardStatsCache.put(key, (n, d)) }
-    (n, d)
-  }
-
   /** Quantized top-k: int8 coarse scoring over the broadcast code matrix,
     * exact double rerank of the top `rerankFactor·k` candidates per query.
     * Output contract = [[SemanticJoin.knnJoinVec]] (`left_id, right_id,
@@ -184,23 +116,17 @@ object Quantize {
     * brute-force kernel on every pair it keeps — only the candidate set is
     * approximate, which `q_ann_int8_recall` gates against recall floors).
     *
-    * Scale shape: the corpus is quantized IN-PLAN (one distributed pass)
-    * and collected as a code matrix (1 byte/lane + one long norm — 8x more
-    * vectors per broadcast byte than the double matrix, size-guarded
-    * below); coarse scoring is a map-partitions scan over the broadcast
-    * matrix — the [[VecScan.knn]] pattern — that quantizes each QUERY once
-    * and pays one exact integer dot per candidate, emitting
-    * ≤ rerankFactor·k candidate rows per query; the rerank is an equi-join
-    * on corpus id against the original vectors — no all-pairs shuffle
-    * anywhere. Above broadcast bounds, compose with [[Ann.ivfTopK]] cells
-    * instead (quantize within cells).
-    *
-    * Not the declarative `crossJoin(broadcast(codes))` form: whole-stage
-    * codegen defers stream-side projections into the nested-loop join's
-    * inner loop (the [[graft.operators.Pq.pqTopK]] lesson, jstack-pinned
-    * there), so the per-QUERY quantize + integer norm — interpreted
-    * higher-order `transform` calls plus a code-array allocation — ran once
-    * per PAIR. The scan kernel quantizes per query row by construction.
+    * Scale shape ([[Ann.scanTopK]] with [[Resident.Int8Scoring]]): the
+    * corpus is quantized IN-PLAN (one distributed pass) and collected as a
+    * code matrix (1 byte per lane plus an id and a norm — ~8x more vectors
+    * per broadcast byte than the double matrix) in the one job that sizes
+    * it; coarse scoring is a map-partitions scan over the broadcast matrix
+    * that quantizes each QUERY once and pays one exact integer dot per
+    * candidate; the rerank is an equi-join on corpus id against the
+    * original vectors — no all-pairs shuffle anywhere. A corpus whose
+    * matrix exceeds [[VecScan.maxBroadcastBytes]] fails loudly with the
+    * alternative (IVF cells, [[Ann.annSearchIndexInt8]]) unless
+    * `skipSizeCheck`.
     */
   def quantizedTopK(
       queries: DataFrame, qId: String, qVec: String,
@@ -209,84 +135,11 @@ object Quantize {
       excludeSelf: Boolean = false, skipSizeCheck: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
-    // guard the corpus-code broadcast (advisor r7 — this was the one
-    // unguarded broadcast; codes are 1 byte/lane, so the effective capacity
-    // under the shared VecScan bound is ~8x the double matrix's): an
-    // over-bound corpus fails loudly with the documented alternative
-    // instead of OOMing the driver mid-broadcast
-    if (!skipSizeCheck) {
-      val bound = VecScan.maxBroadcastBytes(corpus.sparkSession)
-      val (n, d) = guardStats(corpus, cVec)
-      require(n * d <= bound,
-        s"corpus code matrix (~${n * d} bytes at 1 byte/lane) exceeds the " +
+    Ann.scanTopK(queries, qId, qVec, corpus, cId, cVec, k, Resident.Int8Scoring(rerankFactor),
+      excludeSelf, skipSizeCheck, bound =>
+        "corpus code matrix (8 id + 1 per lane + 8 norm bytes per vector) exceeds the " +
           s"$bound-byte broadcast bound — raise ${VecScan.MaxBroadcastBytesKey} " +
           "or compose with the IVF cells instead (Ann.annSearchIndexInt8 " +
           "quantizes within partition-pruned cells)")
-    }
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // quantize the corpus distributed (the oracle-checked column kernel),
-    // collect only (id, codes, integer norm) — the guard above sized
-    // exactly this materialization — and broadcast the matrix once
-    val cRows = quantize(
-      corpus.select(col(cId).cast("long").as("__cid"), asDouble(col(cVec)).as("__cv"))
-        .filter(col("__cv").isNotNull), // a null vector has no codes, matches nothing
-      "__cv", "__cc", "__cs")
-      .withColumn("__cn2", norm2I8(col("__cc")))
-      .select(col("__cid"), col("__cc"), col("__cn2"))
-      .as[(Long, Seq[Byte], Long)] // array<tinyint> decodes as Seq, not BINARY
-      .collect()
-    val ids = cRows.map(_._1)
-    val codes = cRows.map(_._2.toArray)
-    val norms2 = cRows.map(_._3)
-    val matB = spark.sparkContext.broadcast((ids, codes, norms2))
-    val kk = k * rerankFactor
-    val coarse = queries
-      .select(col(qId).cast("long").as("__qid"), asDouble(col(qVec)).as("__qv"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (mIds, mCodes, mNorms2) = matB.value
-        it.flatMap { case (qid, qv) =>
-          if (qv == null) Iterator.empty // null query vector matches nothing
-          else {
-            // quantize once per query (bit-identical to the column form —
-            // see quantizeArray), then exact integer dots per candidate
-            val (qc, qn2) = quantizeArray(qv)
-            val buf = new graft.functions.TopKBuffer(kk)
-            var j = 0
-            while (j < mIds.length) {
-              if (!(excludeSelf && mIds(j) == qid)) {
-                buf.insert(
-                  cosineI8Scalar(dotI8Array(qc, mCodes(j)), qn2, mNorms2(j)), mIds(j))
-              }
-              j += 1
-            }
-            (0 until buf.n).iterator.map(r => (qid, buf.ids(r)))
-          }
-        }
-      }
-      .toDF("__qid", "__cid")
-
-    // exact rerank: candidates join back to the ORIGINAL double vectors; the
-    // scored pair set is tiny (≤ rerankFactor·k per query) so norms-per-row +
-    // the exact codegen dot dominate nothing
-    val qFull = queries.select(col(qId).cast("long").as("__qid"), asDouble(col(qVec)).as("__qv"))
-      .withColumn("__qnorm", norm(col("__qv")))
-    val cFull = corpus.select(col(cId).cast("long").as("__cid"), asDouble(col(cVec)).as("__cv"))
-      .withColumn("__cnorm", norm(col("__cv")))
-    coarse
-      .join(qFull, "__qid")
-      .join(cFull, "__cid")
-      .select(col("__qid"), col("__cid"),
-        cosineWithNorms(dot(col("__qv"), col("__cv")), col("__qnorm"), col("__cnorm"))
-          .as("__score"))
-      .groupBy(col("__qid"))
-      .agg(graft.functions.VecExpressions.topK(k, col("__score"), col("__cid")).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")).as(Seq("__pos", "__s")))
-      .select(
-        col("__qid").as("left_id"),
-        col("__s.id").as("right_id"),
-        col("__s.score").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
   }
 }

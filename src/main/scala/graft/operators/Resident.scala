@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.functions.{TopKBuffer, TopKPayloadBuffer}
-import graft.functions.VectorOps.asDouble
+import graft.functions.{Int8Kernels, PqColumns, PqKernels, TopKBuffer, TopKPayloadBuffer}
+import graft.functions.VectorOps.{asDouble, cosineWithNorms, dot, norm}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import scala.reflect.ClassTag
 import org.apache.spark.sql.functions._
@@ -33,9 +33,8 @@ import org.apache.spark.sql.types._
   * [[graft.functions.TopKBuffer]] / [[TopKPayloadBuffer]] for selection,
   * the exact scan kernel [[VecScan.scores]] (and [[VecScan.dot]]/
   * [[VecScan.cosine]] for a candidate rerank or an allow-listed cell) for
-  * scoring,
-  * [[Quantize.quantizeArray]]/[[Quantize.dotI8Array]]/
-  * [[Quantize.cosineI8Scalar]] for the int8 path, the
+  * scoring, each quantized ANN scoring's array form ([[AnnScoring]]: the
+  * int8 quantize and integer dot, the PQ lookup table and ADC), the
   * [[graft.functions.MultiOrderedSumAggregate.ByteOrder]] comparator for
   * the BM25 fold order, and the `contribCol` arithmetic in the same
   * operation order. Specs differential-test every resident path against
@@ -832,13 +831,22 @@ object Resident {
   // ANN (float, int8, PQ)
   // ------------------------------------------------------------------
 
-  /** One cell's resident matrix; `codes`/`cn2` null on layouts without the
-    * SQ8 bake, `pq`/`cn` null on layouts without the PQ bake.
+  /** The coarse side of a quantized scoring: each row's code and the norm
+    * its zero-norm guard reads, as a double (int8's integer norms are exact
+    * in one).
     */
-  private[operators] final class CellMat(
-      val mat: VecScan.Mat,
-      val codes: Array[Array[Byte]], val cn2: Array[Long],
-      val pq: Array[Array[Byte]], val cn: Array[Double]) {
+  private[operators] final class Codes(val codes: Array[Array[Byte]], val norms: Array[Double])
+      extends Serializable {
+    def bytes: Long = {
+      val n = codes.length
+      arrBytes(n, 8) + codes.iterator.map(c => arrBytes(c.length, 1)).sum + arrBytes(n, 8)
+    }
+  }
+
+  /** One cell's resident matrix; `int8` null on layouts without the SQ8
+    * bake, `pq` null on layouts without the PQ bake.
+    */
+  private[operators] final class CellMat(val mat: VecScan.Mat, val int8: Codes, val pq: Codes) {
     def ids: Array[Long] = mat.ids
     def vecs: Array[Array[Double]] = mat.vecs
     def norms: Array[Double] = mat.norms
@@ -853,13 +861,7 @@ object Resident {
         val dim = if (n > 0) m.vecs(0).length else 0
         b += 60L + 2L * arrBytes(n, 8) +            // entry + ids + norms
           arrBytes(n, 8) + n.toLong * arrBytes(dim, 8) + // vec refs + vectors
-          (if (m.codes != null)
-            arrBytes(n, 8) + n.toLong * arrBytes(dim, 1) + arrBytes(n, 8)
-          else 0L) +
-          (if (m.pq != null) {
-            val pm = if (n > 0) m.pq(0).length else 0
-            arrBytes(n, 8) + n.toLong * arrBytes(pm, 1) + arrBytes(n, 8)
-          } else 0L)
+          Seq(m.int8, m.pq).iterator.filter(_ != null).map(_.bytes).sum
       }
       b
     }
@@ -869,7 +871,7 @@ object Resident {
     * layouts without the SQ8 / PQ bake.
     */
   private[operators] final case class AnnRow(id: Long, vec: Array[Double], cell: Long,
-      codes: Array[Byte], cn2: Long, pq: Array[Byte], cn: Double)
+      codes: Array[Byte], cn2: Double, pq: Array[Byte], cn: Double)
 
   /** The tiers of an ANN index's cells, dealt by `corpus_id`. */
   private[operators] def annTiers(cells: DataFrame, nRows: Option[Long],
@@ -878,13 +880,13 @@ object Resident {
     val hasPq = cells.columns.contains("pq")
     val cols = Seq(col("corpus_id").cast("long"), asDouble(col("cv")),
       col("__cell").cast("long")) ++
-      (if (hasCodes) Seq(col("codes"), col("cn2").cast("long")) else Nil) ++
+      (if (hasCodes) Seq(col("codes"), col("cn2").cast("double")) else Nil) ++
       (if (hasPq) Seq(col("pq"), col("cn").cast("double")) else Nil)
     val pqOff = if (hasCodes) 5 else 3
     new Tiers[AnnRow, AnnResident]("ann", Seq(cells), nRows, allowed)(
       _ => Seq((cells.select(cols: _*), r => AnnRow(r.getLong(0), r.getSeq[Double](1).toArray,
         r.getLong(2),
-        if (hasCodes) r.getSeq[Byte](3).toArray else null, if (hasCodes) r.getLong(4) else 0L,
+        if (hasCodes) r.getSeq[Byte](3).toArray else null, if (hasCodes) r.getDouble(4) else 0.0,
         if (hasPq) r.getSeq[Byte](pqOff).toArray else null,
         if (hasPq) r.getDouble(pqOff + 1) else 0.0))),
       _.id, annMirror)
@@ -899,15 +901,12 @@ object Resident {
     }
     val cells = new java.util.HashMap[java.lang.Long, CellMat](grouped.size() * 2)
     grouped.forEach { (cell, rs) =>
-      val hasCodes = rs(0).codes != null
-      val hasPq = rs(0).pq != null
+      def codes(code: AnnRow => Array[Byte], norm: AnnRow => Double): Codes =
+        if (code(rs(0)) == null) null else new Codes(rs.map(code).toArray, rs.map(norm).toArray)
       val vecs = rs.map(_.vec).toArray
       cells.put(cell, new CellMat(
         VecScan.Mat(rs.map(_.id).toArray, vecs, vecs.map(v => math.sqrt(VecScan.dot(v, v)))),
-        if (hasCodes) rs.map(_.codes).toArray else null,
-        if (hasCodes) rs.map(_.cn2).toArray else null,
-        if (hasPq) rs.map(_.pq).toArray else null,
-        if (hasPq) rs.map(_.cn).toArray else null))
+        codes(_.codes, _.cn2), codes(_.pq, _.cn)))
     }
     new AnnResident(cells)
   }
@@ -918,22 +917,95 @@ object Resident {
     StructField("score", DoubleType, nullable = false),
     StructField("rank", IntegerType, nullable = false)))
 
-  /** How an ANN search scores its probed cells, and the size of the
-    * candidate pool it keeps per query before the exact rerank.
+  /** How an ANN search scores candidates: the one place that knows each
+    * scoring's query prep, the cell columns it reads, its score and the
+    * pool it keeps per query before the exact rerank. The column form
+    * serves the plans ([[Ann.annSearchIndex]] and its int8/PQ siblings);
+    * the array form ([[Quantized.coarse]]) serves the mirror fold and the
+    * broadcast scan ([[Quantize.quantizedTopK]], [[Pq.pqTopK]]), with the
+    * same kernels in the same operation order, so every form scores
+    * bit-identically.
     */
-  private[operators] sealed trait AnnScoring extends Serializable { def pool(k: Int): Int }
-  /** Exact float cosine: the pool is the top k. */
-  private[operators] case object FloatScoring extends AnnScoring { def pool(k: Int): Int = k }
-  /** Int8 coarse scores keep k·rerankFactor candidates. */
-  private[operators] final case class Int8Scoring(rerankFactor: Int) extends AnnScoring {
-    def pool(k: Int): Int = k * rerankFactor
+  private[operators] sealed trait AnnScoring extends Serializable {
+    /** Candidates kept per query before the exact rerank. */
+    def pool(k: Int): Int
+    /** Column form: the cell columns [[score]] reads, beside `corpus_id`. */
+    def cellCols: Seq[Column]
+    /** Column form: query rows (`__qv`, `__qn`) with the prep [[score]] reads. */
+    def prep(queryRows: DataFrame): DataFrame = queryRows
+    /** Column form: the score of a (prepared query row, cell row) pair. */
+    def score: Column
   }
-  /** PQ ADC coarse scores over the codebook `flat` keep k·rerankFactor
-    * candidates.
+
+  /** Exact float cosine: the pool is the top k, and needs no rerank. */
+  private[operators] case object FloatScoring extends AnnScoring {
+    def pool(k: Int): Int = k
+    def cellCols: Seq[Column] = Seq(col("cv"), norm(col("cv")).as("__cn"))
+    def score: Column = cosineWithNorms(dot(col("__qv"), col("cv")), col("__qn"), col("__cn"))
+  }
+
+  /** A query's coarse score of one row's code and norm (the array form). */
+  private[operators] trait Coarse { def apply(code: Array[Byte], norm: Double): Double }
+
+  /** A coarse score over codes baked next to `cv` (the `codesCol` and
+    * `normCol` cell columns) keeps k·rerankFactor candidates per query,
+    * which the exact float cosine then reranks.
     */
-  private[operators] final case class PqScoring(flat: Array[Double], m: Int, ks: Int, dsub: Int,
-      rerankFactor: Int) extends AnnScoring {
+  private[operators] sealed abstract class Quantized(val codesCol: String, val normCol: String)
+      extends AnnScoring {
+    def rerankFactor: Int
     def pool(k: Int): Int = k * rerankFactor
+    def cellCols: Seq[Column] = Seq(col(codesCol), col(normCol))
+    /** `rows` (with `cv`) plus the baked code and norm columns. */
+    def bake(rows: DataFrame): DataFrame
+    /** A mirror cell's codes, or null when its layout has no bake. */
+    def codesOf(m: CellMat): Codes
+    /** Array form: the query `qv` (norm `qn`) prepared once, scoring rows. */
+    def coarse(qv: Array[Double], qn: Double): Coarse
+  }
+
+  /** Int8 cosine over the SQ8 codes and their integer squared norms. */
+  private[operators] final case class Int8Scoring(rerankFactor: Int)
+      extends Quantized("codes", "cn2") {
+    def bake(rows: DataFrame): DataFrame = Int8Scoring.bake(rows)
+    def codesOf(m: CellMat): Codes = m.int8
+    override def prep(queryRows: DataFrame): DataFrame =
+      Quantize.quantize(queryRows, "__qv", "__qc", "__qs")
+        .withColumn("__qn2", Quantize.norm2I8(col("__qc")))
+    def score: Column = Quantize.cosineI8WithNorms(
+      Int8Kernels.dotI8(col("__qc"), col("codes")), col("__qn2"), col("cn2"))
+    def coarse(qv: Array[Double], qn: Double): Coarse = {
+      val (qc, qn2) = Quantize.quantizeArray(qv)
+      (code, n2) => Quantize.cosineI8Scalar(Quantize.dotI8Array(qc, code), qn2.toDouble, n2)
+    }
+  }
+
+  private[operators] object Int8Scoring {
+    def bake(rows: DataFrame): DataFrame = Quantize.quantize(rows, "cv", "codes", "qscale")
+      .withColumn("cn2", Quantize.norm2I8(col("codes")))
+  }
+
+  /** PQ ADC over the codebook `cb`: one lookup table per query, `m`
+    * lookups per candidate over its `pq` code, divided by the query and
+    * candidate norms (`cn`); a zero norm on either side scores 0.
+    */
+  private[operators] final case class PqScoring(cb: Pq.PqCodebook, rerankFactor: Int)
+      extends Quantized("pq", "cn") {
+    def bake(rows: DataFrame): DataFrame = PqScoring.bake(rows, cb)
+    def codesOf(m: CellMat): Codes = m.pq
+    override def prep(queryRows: DataFrame): DataFrame = queryRows.withColumn("__lut",
+      PqColumns.pqLut(col("__qv"), cb.flat, cb.m, cb.ks, cb.dsub))
+    def score: Column = when(col("__qn") === 0.0 || col("cn") === 0.0, lit(0.0))
+      .otherwise(PqColumns.pqAdc(col("pq"), col("__lut"), cb.m, cb.ks) / (col("__qn") * col("cn")))
+    def coarse(qv: Array[Double], qn: Double): Coarse = {
+      val lut = PqKernels.lutArray(qv, cb.flat, cb.m, cb.ks, cb.dsub)
+      (code, cn) => if (qn == 0.0 || cn == 0.0) 0.0 else PqKernels.adcArray(code, lut, cb.m, cb.ks) / (qn * cn)
+    }
+  }
+
+  private[operators] object PqScoring {
+    def bake(rows: DataFrame, cb: Pq.PqCodebook): DataFrame =
+      Pq.pqEncode(rows, "cv", cb, "pq").withColumn("cn", norm(col("cv")))
   }
 
   /** Score scratch for [[VecScan.scores]] over any one cell of `res`. */
@@ -954,12 +1026,12 @@ object Resident {
   /** The ANN fold over one mirror: per query, the candidate pool of its
     * probed cells as a [[TopKPayloadBuffer]] of `scoring.pool(k)` entries
     * — (selection score, id) with the exact cosine as payload — as
-    * `(query_id, score, id, payload)` rows. The kernels are the plans': the exact scan [[VecScan.scores]]
-    * (or [[VecScan.cosine]] of [[VecScan.dot]] for an allow-listed cell),
-    * the same query quantization and int8 kernels, the same PQ lookup
-    * table, ADC, zero-norm guard and `/ (qn·cn)` normalization, and the
-    * same (score desc, id asc) selection as their top-k aggregates. An
-    * allow-list filters membership before the pool, as the plans'
+    * `(query_id, score, id, payload)` rows. Float scoring selects by the
+    * exact scan [[VecScan.scores]] (or [[VecScan.cosine]] of [[VecScan.dot]]
+    * for an allow-listed cell); a quantized scoring selects by its
+    * [[Quantized.coarse]] score, then computes the exact cosine of only the
+    * pool's candidates. The selection is the plans' (score desc, id asc).
+    * An allow-list filters membership before the pool, as the plans'
     * semi-join filters the scan. `probes` is the per-query probe list from
     * the LocalProbes assignment (driver-known).
     */
@@ -968,63 +1040,46 @@ object Resident {
       k: Int, scoring: AnnScoring, allowed: AllowSet): Iterator[(Long, Double, Long, Double)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long, Double)]
     val scores = cellScratch(res)
-    def exact(qv: Array[Double], qn: Double, m: CellMat, i: Int): Double =
-      if (allowed == null) scores(i) else VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
     probes.foreach { case (qid, qv, qn, cellIds) =>
       val pool = new TopKPayloadBuffer(scoring.pool(k))
-      val cells = cellIds.flatMap(c => Option(res.cells.get(java.lang.Long.valueOf(c))))
+      val cells = cellIds.flatMap(c => Option(res.cells.get(java.lang.Long.valueOf(c)))).toIndexedSeq
+      def exact(m: CellMat, i: Int): Double =
+        VecScan.cosine(VecScan.dot(qv, m.vecs(i)), qn, m.norms(i))
       scoring match {
-        case FloatScoring | Int8Scoring(_) =>
-          val quantized = scoring match {
-            case Int8Scoring(_) => Quantize.quantizeArray(qv)
-            case _ => null
-          }
+        case FloatScoring =>
           cells.foreach { m =>
             // the block kernel scores a whole cell; under an allow-list only
             // the allowed rows are scored (the same scalar form, bit for bit)
             if (allowed == null) VecScan.scores(qv, qn, m.mat, 0, scores)
             var i = 0
             while (i < m.ids.length) {
-              if (allowed == null || allowed.contains(m.ids(i))) {
-                val e = exact(qv, qn, m, i)
-                if (quantized == null) pool.insert(e, m.ids(i), e)
-                else pool.insert(Quantize.cosineI8Scalar(
-                  Quantize.dotI8Array(quantized._1, m.codes(i)), quantized._2, m.cn2(i)),
-                  m.ids(i), e)
+              if (allowed == null) pool.insert(scores(i), m.ids(i), scores(i))
+              else if (allowed.contains(m.ids(i))) {
+                val e = exact(m, i)
+                pool.insert(e, m.ids(i), e)
               }
               i += 1
             }
           }
-        case PqScoring(flat, pm, ks, dsub, _) =>
-          val lut = graft.functions.PqKernels.lutArray(qv, flat, pm, ks, dsub)
-          cells.foreach { mt =>
-            if (mt.pq != null) {
-              var i = 0
-              while (i < mt.ids.length) {
-                if (allowed == null || allowed.contains(mt.ids(i))) {
-                  val s =
-                    if (qn == 0.0 || mt.cn(i) == 0.0) 0.0
-                    else graft.functions.PqKernels.adcArray(mt.pq(i), lut, pm, ks) /
-                      (qn * mt.cn(i))
-                  pool.insert(s, mt.ids(i), 0.0)
-                }
-                i += 1
-              }
-            }
-          }
-          // the exact cosine of only the pool's candidates: one more pass
-          // over the probed cells
-          val slot = new java.util.HashMap[java.lang.Long, Integer](pool.n * 2)
-          var j = 0
-          while (j < pool.n) { slot.put(pool.ids(j), j); j += 1 }
-          cells.foreach { mt =>
+        case q: Quantized =>
+          // each candidate's payload is its place (cell ordinal, row) until
+          // the pool is final; then the exact cosine of only the pool's
+          // candidates replaces it
+          val coarse = q.coarse(qv, qn)
+          cells.iterator.zipWithIndex.foreach { case (m, at) =>
+            val c = q.codesOf(m)
             var i = 0
-            while (i < mt.ids.length) {
-              val at = slot.get(mt.ids(i))
-              if (at != null)
-                pool.payloads(at) = VecScan.cosine(VecScan.dot(qv, mt.vecs(i)), qn, mt.norms(i))
+            while (c != null && i < m.ids.length) {
+              if (allowed == null || allowed.contains(m.ids(i)))
+                pool.insert(coarse(c.codes(i), c.norms(i)), m.ids(i), (at.toLong << 32 | i).toDouble)
               i += 1
             }
+          }
+          var j = 0
+          while (j < pool.n) {
+            val at = pool.payloads(j).toLong
+            pool.payloads(j) = exact(cells((at >>> 32).toInt), (at & 0xffffffffL).toInt)
+            j += 1
           }
       }
       var i = 0

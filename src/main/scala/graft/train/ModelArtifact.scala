@@ -1,6 +1,7 @@
 package graft.train
 
 import graft.embed.Embedder
+import graft.operators.IndexLayout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Training configuration mirroring the reference's JSON config surface
@@ -237,10 +238,8 @@ object ModelArtifact {
           spark.sparkContext.parallelize(rows, math.max(1, rows.size / 100000)))
           .toDF("text", "centroid")
           .write.mode("overwrite").parquet(centroidsPath(dir).toString)
-        val out = fs.create(fittedMetaPath(dir), true)
-        try out.write(
-          s"""{"type": "centroid", "alpha": ${c.alpha}, "dim": ${c.dim}}""".getBytes("UTF-8"))
-        finally out.close()
+        IndexLayout.writeJson(fs, fittedMetaPath(dir),
+          s"""{"type": "centroid", "alpha": ${c.alpha}, "dim": ${c.dim}}""", overwrite = true)
       case _ =>
         if (fs.exists(fittedMetaPath(dir))) fs.delete(fittedMetaPath(dir), false)
         if (fs.exists(centroidsPath(dir))) fs.delete(centroidsPath(dir), true)
@@ -255,9 +254,7 @@ object ModelArtifact {
   def loadFitted(spark: SparkSession, dir: String, base: Embedder): Embedder = {
     val fs = fittedMetaPath(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(fittedMetaPath(dir))) return base
-    val in = fs.open(fittedMetaPath(dir))
-    val metaStr = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(metaStr)
+    val node = IndexLayout.readJson(fs, fittedMetaPath(dir))
     val tpe = Option(node.get("type")).map(_.asText()).getOrElse(
       throw new IllegalArgumentException(s"$dir/fitted_meta.json is malformed: missing \"type\""))
     require(tpe == "centroid", s"unknown fitted-model type '$tpe' in $dir")

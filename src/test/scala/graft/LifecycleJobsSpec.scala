@@ -93,4 +93,25 @@ class LifecycleJobsSpec extends AnyFunSuite {
     assert(evs.map(_.action) == Seq("none", "none", "none"))
     assert(js.size == 3, s"jobs were ${js.size}")
   }
+
+  test("maintenance: jobs of one firing pass per family over a tombstoned generation") {
+    val (mh, bm, an) = roots()
+    val doomed = ids(Seq(4L, 5L))
+    Lexical.bm25DeleteFromIndex(spark, genPath(bm, 0), doomed, "id", "d0")
+    Ann.annDeleteFromIndex(spark, genPath(an, 0), doomed, "id", "d0")
+    Dedup.minhashDeleteFromIndex(spark, genPath(mh, 0), doomed, "id", "d0")
+    // every deleteFraction signal fires; the compaction reuses the open
+    // index the pass read the signal from
+    val fire = IndexMaintenance.Policy(maxDeleteFraction = 0.0)
+    def pass(run: => Seq[IndexMaintenance.Event]): Long = {
+      val (evs, js) = SpecJobs.of(spark)(run)
+      assert(evs.map(e => (e.signal, e.action)) == Seq(("deleteFraction", "compact")))
+      js.size.toLong
+    }
+    val counts = Map(
+      "bm25" -> pass(IndexMaintenance.maintainIndexes(spark, bm25Root = Some(bm), policy = fire)),
+      "ann" -> pass(IndexMaintenance.maintainIndexes(spark, annRoot = Some(an), policy = fire)),
+      "minhash" -> pass(IndexMaintenance.maintainIndexes(spark, minhashRoot = Some(mh), policy = fire)))
+    assert(counts == Map("bm25" -> 11L, "ann" -> 9L, "minhash" -> 7L), s"jobs were $counts")
+  }
 }

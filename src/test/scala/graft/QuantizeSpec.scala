@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Int8Kernels
-import graft.operators.{Ann, Quantize, SemanticJoin}
+import graft.operators.{Ann, Pq, Quantize, SemanticJoin}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -125,33 +125,19 @@ class QuantizeSpec extends AnyFunSuite {
     } finally spark.conf.unset(graft.operators.VecScan.MaxBroadcastBytesKey)
   }
 
-  test("guard stats cache: LRU evicts only the eldest; repeat lookups are hits") {
-    import spark.implicits._
-    def plan(i: Int) = (0 until 3).map(r => (r.toLong, Array.fill(4)(i.toDouble)))
-      .toDF("vec_id", "embedding").filter(col("vec_id") >= 0 - i) // i-distinct plan
-    val cap = Quantize.GuardStatsMaxEntries
-    val c0 = Quantize.guardStatsComputes.get()
-    (0 to cap).foreach(i => Quantize.guardStats(plan(i), "embedding")) // cap+1 distinct
-    assert(Quantize.guardStatsComputes.get() === c0 + cap + 1)
-    // newest and second-eldest survive the eviction...
-    Quantize.guardStats(plan(cap), "embedding")
-    Quantize.guardStats(plan(1), "embedding")
-    assert(Quantize.guardStatsComputes.get() === c0 + cap + 1, "expected cache hits")
-    // ...only the eldest (plan 0, least recently used) was evicted
-    Quantize.guardStats(plan(0), "embedding")
-    assert(Quantize.guardStatsComputes.get() === c0 + cap + 2)
-  }
-
-  test("guard stats cache: in-place rewrite + fresh read is NOT served stale stats") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qguard").toString
-    vecs(10, 8).write.mode("overwrite").parquet(dir)
-    val (n1, d1) = Quantize.guardStats(spark.read.parquet(dir), "embedding")
-    assert(n1 === 10L && d1 === 8L)
-    // the corpus grows in place (an index rebuilt under the same path);
-    // root-path canonicalization alone would resurrect (10, 8) here and let
-    // the broadcast-OOM guard pass an over-bound corpus (advisor r9)
-    vecs(50, 8).write.mode("overwrite").parquet(dir)
-    val (n2, _) = Quantize.guardStats(spark.read.parquet(dir), "embedding")
-    assert(n2 === 50L, s"stale guard stats served after in-place rewrite: n=$n2")
+  test("quantizedTopK and pqTopK: the first search over a parquet corpus runs one job for the code matrix") {
+    def parquet(n: Int): org.apache.spark.sql.DataFrame = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_qscan").toString
+      vecs(n, 16).write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    }
+    // two corpora, so neither search finds sizing work the other did
+    val (c8, cPq) = (parquet(60), parquet(70))
+    val cb = Pq.pqTrain(cPq, "vec_id", "embedding", m = 4, ks = 16, sampleRows = 70)
+    val int8Jobs = SpecJobs.count(spark)(Quantize.quantizedTopK(
+      c8.filter(col("vec_id") < 5), "vec_id", "embedding", c8, "vec_id", "embedding", k = 3))
+    val pqJobs = SpecJobs.count(spark)(Pq.pqTopK(
+      cPq.filter(col("vec_id") < 5), "vec_id", "embedding", cPq, "vec_id", "embedding", cb, k = 3))
+    assert((int8Jobs, pqJobs) === ((1L, 1L)))
   }
 }
