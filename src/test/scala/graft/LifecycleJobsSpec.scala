@@ -5,10 +5,11 @@ import graft.operators.IndexMaintenance.genPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Job budgets of the index write path: a delete that finds its ids, one
-  * that finds none, a compaction per family, and a maintenance pass over
-  * three roots where no signal fires. The write path sets index_churn's
-  * `rows_per_s`, so a refactor of the lifecycle must keep these counts.
+/** Job budgets of the index write path: a base write and a batch append
+  * per family, a delete that finds its ids, one that finds none, a
+  * compaction per family, and a maintenance pass over three roots where no
+  * signal fires. The write path sets index_churn's `rows_per_s`, so a
+  * refactor of the lifecycle must keep these counts.
   */
 class LifecycleJobsSpec extends AnyFunSuite {
 
@@ -21,9 +22,11 @@ class LifecycleJobsSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def docs(n: Long): DataFrame = {
+  private def docs(n: Long): DataFrame = docs(0L until n)
+
+  private def docs(range: Seq[Long]): DataFrame = {
     import spark.implicits._
-    (0L until n).map { i =>
+    range.map { i =>
       (i, s"doc$i alpha doc$i beta doc$i gamma word${i % 5} delta epsilon")
     }.toDF("doc_id", "text")
   }
@@ -33,9 +36,14 @@ class LifecycleJobsSpec extends AnyFunSuite {
     xs.toDF("id")
   }
 
+  private def vecs(range: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    range.map(i => (i, Array.tabulate(8)(d => math.sin(i * 13 + d * 7))))
+      .toDF("vec_id", "embedding")
+  }
+
   /** One committed gen-0 root per family. */
   private def roots(): (String, String, String) = {
-    import spark.implicits._
     val mh = tmp("graft_jobs_mh")
     Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(docs(40), "doc_id", "text"),
       genPath(mh, 0))
@@ -43,15 +51,39 @@ class LifecycleJobsSpec extends AnyFunSuite {
     val (p, st) = Lexical.bm25BuildIndex(docs(40), "doc_id", "text")
     Lexical.bm25WriteIndex(p, st, genPath(bm, 0), nBuckets = 8)
     val an = tmp("graft_jobs_ann")
-    val v = (0L until 40L).map(i => (i, Array.tabulate(8)(d => math.sin(i * 13 + d * 7))))
-      .toDF("vec_id", "embedding")
-    val (cells, cents) = Ann.annBuildIndex(v, "vec_id", "embedding", nCentroids = 4)
+    val (cells, cents) = Ann.annBuildIndex(vecs(0L until 40L), "vec_id", "embedding",
+      nCentroids = 4)
     Ann.annWriteIndex(cells, cents, genPath(an, 0))
     Seq(mh, bm, an).foreach(IndexMaintenance.commitGeneration(spark, _, 0))
     (mh, bm, an)
   }
 
   private def jobs(f: => Any): Long = SpecJobs.count(spark)(f)
+
+  test("writes: jobs of one base write per family") {
+    val (cells, cents) = Ann.annBuildIndex(vecs(0L until 40L), "vec_id", "embedding",
+      nCentroids = 4)
+    val (p, st) = Lexical.bm25BuildIndex(docs(40), "doc_id", "text")
+    val mhIndex = Dedup.minhashBuildIndex(docs(40), "doc_id", "text")
+    val counts = Map(
+      "bm25" -> jobs(Lexical.bm25WriteIndex(p, st, tmp("graft_jobs_w_bm25"), nBuckets = 8)),
+      "ann" -> jobs(Ann.annWriteIndex(cells, cents, tmp("graft_jobs_w_ann"))),
+      "minhash" -> jobs(Dedup.minhashWriteIndex(mhIndex, tmp("graft_jobs_w_mh"))))
+    assert(counts == Map("bm25" -> 13L, "ann" -> 9L, "minhash" -> 5L), s"jobs were $counts")
+  }
+
+  test("appends: jobs of one 10-doc batch append per family") {
+    val (mh, bm, an) = roots()
+    val batch = 40L until 50L
+    val counts = Map(
+      "bm25" -> jobs(Lexical.bm25AppendIndex(spark, genPath(bm, 0), docs(batch),
+        "doc_id", "text", "b1")),
+      "ann" -> jobs(Ann.annAppendIndex(spark, genPath(an, 0), vecs(batch),
+        "vec_id", "embedding", "b1")),
+      "minhash" -> jobs(Dedup.minhashAppendIndex(spark, genPath(mh, 0), docs(batch),
+        "doc_id", "text", "b1")))
+    assert(counts == Map("bm25" -> 7L, "ann" -> 7L, "minhash" -> 5L), s"jobs were $counts")
+  }
 
   test("deletes: jobs of a found and a not-found delete per family") {
     val (mh, bm, an) = roots()
