@@ -222,32 +222,24 @@ object Ann {
     cb.fold(sq8)(Resident.PqScoring.bake(sq8, _))
   }
 
+  /** [[annWriteIndex]]'s layout with codebook `cb` (a compaction keeps the
+    * source's): the quantized searches' coarse pass reads only the baked
+    * narrow columns, and the serving tiers' residency gate reads `n_rows`.
+    */
   private def writeLayout(cells: DataFrame, centroids: DataFrame, path: String,
       cb: Option[Pq.PqCodebook]): Unit = {
-    val n = centroids.count().toInt
-    // corpus row count into the meta: one count at build buys every later
-    // search a free size estimate (the serving tiers' residency gate)
-    val nRows = cells.count()
-    // bake int8 codes + integer norms next to the double vectors (the
-    // IVF_SQ8 layout): the quantized search scans ONLY these narrow columns
-    // for coarse scoring — parquet column pruning makes the coarse pass read
-    // ~1/8 the bytes — and joins cv back for the exact rerank. With a PQ
-    // codebook the IVF_PQ columns ride too (m bytes + one norm per row).
-    enrichCells(cells, cb).repartition(col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(s"$path/cells")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val spark = cells.sparkSession
-    cb.foreach(c => Pq.saveCodebook(spark, s"$path/pq_codebook.json", c))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexLayout.writeMeta(fs, path, IndexLayout.AnnIvf,
+    val nRows = IndexLayout.writeComponent(path,
+      IndexLayout.Component("cells", enrichCells(cells, cb), Some("__cell")))
+    val n = IndexLayout.writeComponent(path, IndexLayout.Component("centroids", centroids))
+    cb.foreach(c => Pq.saveCodebook(cells.sparkSession, s"$path/pq_codebook.json", c))
+    IndexLayout.writeMeta(cells.sparkSession, path, IndexLayout.AnnIvf,
       s""""n_centroids": $n, "n_rows": $nRows""")
   }
 
   /** Persist an [[annBuildIndex]] pair: cells land cell-partitioned (one
-    * parquet partition per centroid cell, rows clustered before the write so
-    * tasks hold whole cells — the [[Lexical.bm25WriteIndex]] move), plus the
-    * centroid table and a meta file carrying the cell count. `pqM > 0`
+    * parquet partition per centroid cell, [[IndexLayout.writeComponent]]),
+    * plus the centroid table and a meta file carrying the cell and row
+    * counts. `pqM > 0`
     * additionally fits a PQ codebook on the cells ([[Pq.pqTrain]],
     * deterministic seeded sample) and bakes the IVF_PQ columns — the layout
     * [[annSearchIndexPq]] serves from; the codebook persists as
@@ -274,61 +266,24 @@ object Ann {
   }
 
   /** Absorb a new batch into a persisted index against its FROZEN centroids
-    * — the crawl regime's middle ground the MinHash index's append settled
-    * into ([[Dedup.minhashAppendIndex]]; judge r8 #4): each epoch's
-    * embed-once batch is assigned to the EXISTING centroids with the same
-    * 1-NN kernel the build used (bit-identical cell choice for identical
-    * vectors), quantized with the same SQ8 layout, and landed as a
-    * self-contained batch directory `path/batches/<batchId>/cells` made
-    * visible only by its `_COMMITTED` marker — one atomic filesystem
-    * create after the write succeeded, so a crash at any point leaves the
-    * index exactly as before, and re-running a committed `batchId` is an
-    * idempotent no-op. After the append, `open → search ≡
-    * rebuild-with-the-same-centroids → search` row-identically (spec +
-    * `q_ann_index_append` hash-check it).
+    * as one committed batch ([[IndexLifecycle.append]]: atomic, idempotent,
+    * crash-invisible): each vector is assigned to the EXISTING centroids
+    * with the same 1-NN kernel the build used (bit-identical cell choice for
+    * identical vectors), baked with the index's own codebook (never
+    * retrained), and lands as `path/batches/<batchId>/cells`. After the
+    * append, `open → search ≡ rebuild-with-the-same-centroids → search`
+    * row-identically (spec + `q_ann_index_append` hash-check it).
     *
-    * The honest caveat stays: centroids were fitted BEFORE this data, so
-    * recall against drifted distributions degrades as
-    * [[AnnIndex.appendStaleness]] grows — appends buy cheap freshness
-    * between rebuilds, not a substitute for them.
-    *
-    * @return true if the batch was written, false if `batchId` was already
-    *         committed (idempotent no-op).
+    * The centroids were fitted BEFORE this data, so recall against drifted
+    * distributions degrades as [[AnnIndex.appendStaleness]] grows — appends
+    * buy cheap freshness between rebuilds, not a substitute for them.
+    * Return value: [[IndexLifecycle.append]].
     */
   def annAppendIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String,
-      batchId: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = IndexLayout.beginBatch(fs, path, batchId) match {
-      case Some(d) => d
-      case None => return false
-    }
-    val idx = annOpenIndex(spark, path)
-    // frozen-centroid assignment: the same broadcast 1-NN kernel the build
-    // used, against the index's OWN centroid table
-    val assign = SemanticJoin.knnJoinVec(
-      batch, idCol, vecCol,
-      idx.centroids, "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
-      .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
-    val cells = batch
-      .select(col(idCol).cast("long").as("corpus_id"), asDouble(col(vecCol)).as("cv"))
-      .join(assign, "corpus_id")
-    val nRows = cells.count()
-    // empty batch: a committed no-op with NO batch dir — an empty
-    // partitioned parquet dir has no footers, and open() unioning it would
-    // fail on schema inference (index corruption from a no-data epoch)
-    if (nRows == 0) return true
-    // enrich with the index's OWN persisted codebook (never retrained —
-    // identical vectors encode bit-identically across build and append)
-    enrichCells(cells, idx.pqCodebook).repartition(col("__cell"))
-      .write.mode("overwrite").partitionBy("__cell").parquet(s"$batchDir/cells")
-    // open() sums the committed batches' row counts for the scan-size
-    // estimate + staleness
-    IndexLayout.commitBatch(fs, batchDir, nRows)
-    true
-  }
+      batchId: String): Boolean =
+    AnnLifecycle.append(spark, path, batch, idCol, vecCol, batchId)
 
   /** Compact an appended index into a fresh single-layout index at
     * `dstPath`: the base cells plus every COMMITTED batch are rewritten as
@@ -348,7 +303,7 @@ object Ann {
     AnnLifecycle.compact(spark, srcPath, dstPath)
 
   /** Exact schemas of the persisted cell/centroid layouts, as
-    * [[writeLayout]] / [[annAppendIndex]] write them (r16): a known schema
+    * [[writeLayout]] / [[annAppendIndex]] write them: a known schema
     * skips the footer/schema-inference job per `spark.read` — see
     * [[Lexical.postingsReadSchema]] for the rationale. The IVF_PQ layout
     * carries two extra baked columns, keyed off the codebook file the open
@@ -393,8 +348,8 @@ object Ann {
     val batches = IndexLayout.openBatches(fs, path, pins)
     val appendedRows = batches.map(_.nRows).sum
     val hasPq = fs.exists(new org.apache.hadoop.fs.Path(path, "pq_codebook.json"))
-    val raw = (s"$path/cells" +: batches.map(b => s"${b.dir}/cells"))
-      .map(spark.read.schema(cellsReadSchema(hasPq)).parquet(_))
+    val raw = (path +: batches.map(_.dir.toString))
+      .map(IndexLayout.readComponent(spark, _, "cells", cellsReadSchema(hasPq)))
       .reduce(_.unionByName(_))
     // committed tombstones (r13): exclusion over the merged scan — filters
     // AFTER the `__cell=` partition pruning, so probe-restricted reads keep
@@ -403,7 +358,7 @@ object Ann {
     val cells = dels.map(_.exclude(raw, "corpus_id")).getOrElse(raw)
     val idx = AnnIndex(
       cells,
-      spark.read.schema(centroidsReadSchema).parquet(s"$path/centroids"),
+      IndexLayout.readComponent(spark, path, "centroids", centroidsReadSchema),
       meta.get("n_centroids").asInt(),
       // tombstoned rows are still SCANNED, so the estimate keeps them
       Some(meta.get("n_rows").asLong() + appendedRows),
@@ -442,11 +397,29 @@ object Ann {
     * share. Every compaction carries the `rows_at_refit` watermark; a refit
     * resets it to the corpus it fitted.
     */
-  object AnnLifecycle extends IndexLifecycle("ann", "corpus_id") {
+  object AnnLifecycle extends IndexLifecycle("ann", "corpus_id", IndexLayout.AnnIvf) {
     type Index = AnnIndex
 
     def open(spark: org.apache.spark.sql.SparkSession, path: String, pins: Option[IndexPins]) =
       annOpenIndex(spark, path, pins)
+
+    // the frozen centroids and codebook are read on their own: an open
+    // would also read the tombstones, which an append never needs
+    protected def batchRows(spark: org.apache.spark.sql.SparkSession, path: String,
+        meta: com.fasterxml.jackson.databind.JsonNode, batch: DataFrame,
+        idCol: String, vecCol: String): IndexLifecycle.BatchRows = {
+      val assign = SemanticJoin.knnJoinVec(
+        batch, idCol, vecCol,
+        IndexLayout.readComponent(spark, path, "centroids", centroidsReadSchema),
+        "centroid_id", "centroid_vec", k = 1, skipSizeCheck = true)
+        .select(col("left_id").as("corpus_id"), col("right_id").as("__cell"))
+      val cells = batch
+        .select(col(idCol).cast("long").as("corpus_id"), asDouble(col(vecCol)).as("cv"))
+        .join(assign, "corpus_id")
+      val cb = Pq.loadCodebook(spark, s"$path/pq_codebook.json")
+      IndexLifecycle.BatchRows(Seq(
+        IndexLayout.Component("cells", enrichCells(cells, cb), Some("__cell"))))
+    }
 
     protected def members(index: AnnIndex): DataFrame = index.cells
 

@@ -646,8 +646,8 @@ object Dedup extends Logging {
     * CARRYING the banding params it was built with, so [[minhashWriteIndex]]
     * persists the params the postings actually encode — a caller can no
     * longer build with one banding and accidentally write a meta file
-    * claiming another (advisor r7: the meta file exists to prevent exactly
-    * that silent candidate-generation drift).
+    * claiming another (the silent candidate-generation drift the meta file
+    * exists to prevent).
     */
   def minhashBuildIndex(
       corpus: DataFrame, idCol: String, textCol: String,
@@ -665,21 +665,14 @@ object Dedup extends Logging {
     * directory), shingles as-is, plus a meta file pinning the banding
     * parameters THE INDEX CARRIES — a search against an index built with
     * different params would silently change semantics, so open() trusts the
-    * meta and the meta can only come from the build.
+    * meta and the meta can only come from the build. The meta's `n_rows` is
+    * the postings count the write took ([[IndexLayout.writeComponent]]),
+    * which the serving tiers' residency gate reads.
     */
   def minhashWriteIndex(index: MinHashIndex, path: String): Unit = {
-    val spark = index.postings.sparkSession
-    index.postings.repartition(col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/postings")
-    index.shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    // postings row count for the serving fast-path gate (see
-    // [[minhashSearchIndex]]) — counted from the written parquet (footer
-    // metadata only), same convention as the BM25/ANN index metas
-    val nRows = spark.read.schema(minhashCountReadSchema)
-      .parquet(s"$path/postings").count()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexLayout.writeMeta(fs, path, IndexLayout.MinHashLsh,
+    val nRows = layoutComponents(index.postings, index.shingles)
+      .map(IndexLayout.writeComponent(path, _)).head
+    IndexLayout.writeMeta(index.postings.sparkSession, path, IndexLayout.MinHashLsh,
       s""""shingle_size": ${index.shingleSize}, """ +
         s""""num_bands": ${index.numBands}, "rows_per_band": ${index.rowsPerBand}, """ +
         // the id column keeps the CORPUS id type (string keys are
@@ -689,66 +682,34 @@ object Dedup extends Logging {
         s""""hash_family": "${index.hashFamily}", "n_rows": $nRows""")
   }
 
-  /** Absorb a new batch into a persisted index WITHOUT a rebuild — the
-    * crawl regime's missing half (judge r7 #3): each day's batch is first
-    * deduped against the corpus ([[minhashSearchIndex]]), then the verified
-    * -new rows are appended here. Only the batch is shingled and signed —
-    * with the banding params pinned by the index's meta file, never
-    * caller-supplied. After the append, `open → search ≡ full rebuild →
-    * search` row-identically, which the spec and the
-    * `q_minhash_index_append` driver query (q_contamination's oracle)
-    * hash-check.
-    *
-    * Commit protocol (advisor r8: the former in-place two-table append was
-    * neither atomic nor idempotent — a failure between the postings and
-    * shingles writes left postings whose candidates vanished in the shingle
-    * join, and a retry duplicated rows): each append lands as a
-    * SELF-CONTAINED batch directory `path/batches/<batchId>/{postings,
-    * shingles}` and becomes visible only when the `_COMMITTED` marker is
-    * created — one atomic filesystem create, after both writes succeeded.
-    * [[minhashOpenIndex]] unions the base layout with committed batches
-    * ONLY, so a crash at any point leaves the index exactly as before the
-    * append. Re-running with the same `batchId` is idempotent: a committed
-    * batch is skipped, an uncommitted leftover is deleted and rewritten.
+  /** A base layout's or a batch's components; the postings are counted. */
+  private def layoutComponents(postings: DataFrame, shingles: DataFrame) =
+    Seq(IndexLayout.Component("postings", postings, Some("band")),
+      IndexLayout.Component("shingles", shingles))
+
+  /** Absorb a new batch into a persisted index WITHOUT a rebuild, as one
+    * committed batch ([[IndexLifecycle.append]]: atomic, idempotent,
+    * crash-invisible): a crawl pipeline first dedups each day's batch
+    * against the corpus ([[minhashSearchIndex]]), then appends the
+    * verified-new rows here. Only the batch is shingled and signed, with the
+    * banding params pinned by the index's meta file, never caller-supplied,
+    * and it lands as `path/batches/<batchId>/{postings, shingles}`. After
+    * the append, `open → search ≡ full rebuild → search` row-identically,
+    * which the spec and the `q_minhash_index_append` driver query
+    * (q_contamination's oracle) hash-check.
     *
     * This works for MinHash because the index holds no corpus-global
     * statistics: postings rows and shingle sets are per-document, so
-    * append IS the incremental build. The BM25 index (df/avgdl) genuinely
-    * needs rebuilds; the ANN index offers the existing-centroids middle
-    * ground ([[Ann.annAppendIndex]]) — see their docs.
-    *
-    * @return true if the batch was written, false if `batchId` was already
-    *         committed (idempotent no-op).
+    * append IS the incremental build. The BM25 append merges its exact
+    * corpus stats ([[Lexical.bm25AppendIndex]]); the ANN index offers the
+    * existing-centroids middle ground ([[Ann.annAppendIndex]]). Return
+    * value: [[IndexLifecycle.append]].
     */
   def minhashAppendIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, textCol: String,
-      batchId: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = IndexLayout.beginBatch(fs, path, batchId) match {
-      case Some(d) => d
-      case None => return false
-    }
-    val idx = minhashOpenIndex(spark, path)
-    val base = shingleSig(batch, col(idCol), col(textCol),
-      idx.shingleSize, idx.numBands * idx.rowsPerBand, idx.hashFamily)
-    // empty batch: absorbing nothing is a committed no-op with NO batch dir
-    // — an empty partitioned parquet dir has no footers, so the count
-    // read-back below and every later open would fail on it (a fully
-    // deduplicated crawl epoch is a normal event, not an error)
-    if (base.isEmpty) return true
-    bandBuckets(base, idx.numBands, idx.rowsPerBand)
-      .repartition(col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$batchDir/postings")
-    base.select(col("id"), col("sh"))
-      .write.mode("overwrite").parquet(s"$batchDir/shingles")
-    // batch postings count for the serving fast-path gate
-    val nRows = spark.read.schema(minhashCountReadSchema)
-      .parquet(s"$batchDir/postings").count()
-    IndexLayout.commitBatch(fs, batchDir, nRows)
-    true
-  }
+      batchId: String): Boolean =
+    MinhashLifecycle.append(spark, path, batch, idCol, textCol, batchId)
 
   /** Compact an appended index into a fresh single-layout index at
     * `dstPath` — the MinHash sibling of [[Ann.annCompactIndex]], bounding
@@ -766,7 +727,7 @@ object Dedup extends Logging {
     MinhashLifecycle.compact(spark, srcPath, dstPath)
 
   /** Exact schemas of the persisted layout components, as
-    * [[minhashWriteIndex]] / [[minhashAppendIndex]] write them (r16): a
+    * [[minhashWriteIndex]] / [[minhashAppendIndex]] write them: a
     * known schema skips the footer/schema-inference job per `spark.read` —
     * see [[Lexical.postingsReadSchema]] for the rationale. The id column
     * keeps the CORPUS id type, so it is parameterised from the meta's
@@ -788,14 +749,6 @@ object Dedup extends Logging {
     StructType(Seq(
       StructField("id", idType),
       StructField("sh", ArrayType(StringType))))
-  }
-  /** One always-fixed-type column is enough for a row COUNT over the
-    * postings (by-name parquet resolution reads just it), independent of
-    * the corpus id type.
-    */
-  private[graft] val minhashCountReadSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("bkey", LongType)))
   }
 
   /** Open a [[minhashWriteIndex]] directory: the base layout unioned with
@@ -822,8 +775,8 @@ object Dedup extends Logging {
     // from the meta (the corpus id type).
     val idType = org.apache.spark.sql.types.DataType.fromDDL(meta.get("id_type").asText())
     def layout(sub: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-      (s"$path/$sub" +: batches.map(b => s"${b.dir}/$sub"))
-        .map(spark.read.schema(schema).parquet(_)).reduce(_.unionByName(_))
+      (path +: batches.map(_.dir.toString))
+        .map(IndexLayout.readComponent(spark, _, sub, schema)).reduce(_.unionByName(_))
     // committed tombstones (r13): exclusion over both merged layouts —
     // filters AFTER the `band=` partition pruning, so banded probes keep
     // their pruned shape in every union branch
@@ -873,11 +826,23 @@ object Dedup extends Logging {
     * crash-replayed ingest epoch still reads its committed survivor set
     * back from the new current path.
     */
-  object MinhashLifecycle extends IndexLifecycle("minhash", "id") {
+  object MinhashLifecycle extends IndexLifecycle("minhash", "id", IndexLayout.MinHashLsh) {
     type Index = MinHashIndex
 
     def open(spark: org.apache.spark.sql.SparkSession, path: String, pins: Option[IndexPins]) =
       minhashOpenIndex(spark, path, pins)
+
+    // the banding params come from the meta alone: an open would also read
+    // the tombstones, which an append never needs
+    protected def batchRows(spark: org.apache.spark.sql.SparkSession, path: String,
+        meta: com.fasterxml.jackson.databind.JsonNode, batch: DataFrame,
+        idCol: String, textCol: String): IndexLifecycle.BatchRows = {
+      val (bands, rows) = (meta.get("num_bands").asInt(), meta.get("rows_per_band").asInt())
+      val base = shingleSig(batch, col(idCol), col(textCol),
+        meta.get("shingle_size").asInt(), bands * rows, meta.get("hash_family").asText())
+      IndexLifecycle.BatchRows(layoutComponents(
+        bandBuckets(base, bands, rows), base.select(col("id"), col("sh"))))
+    }
 
     protected def members(index: MinHashIndex): DataFrame = index.shingles
 

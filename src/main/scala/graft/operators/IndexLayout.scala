@@ -2,6 +2,9 @@ package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** The on-disk layout the three persisted index families share — BM25
   * ([[Lexical.bm25WriteIndex]]), IVF/PQ ANN ([[Ann.annWriteIndex]]) and
@@ -15,6 +18,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *   path/absorbed_batches.json               batch ids a compaction folded in
   *   path/deletes/<delId>/...                 tombstones (see [[Tombstones]])
   * }}}
+  *
+  * Every component's parquet (postings, stats, cells, centroids, shingles,
+  * tombstone ids) is written by [[writeComponent]] and read by
+  * [[readComponent]]; every batch is appended by [[IndexLifecycle.append]],
+  * the one caller of [[beginBatch]] and [[commitBatch]].
   *
   * Every root meta carries [[FormatVersion]], and [[readMeta]] — the only
   * reader of those files — refuses a meta without it or at another
@@ -60,6 +68,55 @@ object IndexLayout {
       s"$what must match [A-Za-z0-9._-]+ (it names a directory), got '$name'")
 
   // ------------------------------------------------------------------
+  // components
+  // ------------------------------------------------------------------
+
+  /** One persisted component: its rows, its dir name under an index root
+    * or batch dir, and the column its parquet is partitioned by, if any.
+    */
+  final case class Component(name: String, rows: DataFrame, partitionBy: Option[String] = None)
+
+  /** `df` with the named numeric aggregates `aggs` taken inside the job
+    * that computes its rows. The reader blocks until that job has ended and
+    * reads 0 for no rows. Observe only the rows a write carries: when a
+    * later step turns out empty, adaptive execution drops the stages below
+    * it, and their metrics with them.
+    */
+  private[operators] def observe(df: DataFrame, aggs: Column*): (DataFrame, String => Double) = {
+    val obs = Observation()
+    (df.observe(obs, aggs.head, aggs.tail: _*),
+      name => obs.get.get(name).collect { case n: Number => n.doubleValue }.getOrElse(0.0))
+  }
+
+  /** Write `c` under `parent` and return its row count, taken in the
+    * write's own job. A partitioned component is clustered by its column
+    * first, so each task opens one file per partition it holds. A component
+    * with no rows leaves no dir (an empty parquet dir has no footers);
+    * [[readComponent]] reads the missing dir as empty.
+    */
+  private[operators] def writeComponent(parent: String, c: Component): Long = {
+    val (rows, read) = observe(c.rows, count(lit(1)).as("n"))
+    val dir = new Path(parent, c.name)
+    c.partitionBy.fold(rows.write)(p => rows.repartition(col(p)).write.partitionBy(p))
+      .mode("overwrite").parquet(dir.toString)
+    val n = read("n").toLong
+    if (n == 0) dir.getFileSystem(c.rows.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(dir, true)
+    n
+  }
+
+  /** Read the component `name` under `parent` with its known `schema`,
+    * which skips the footer-inference job a read otherwise pays.
+    */
+  private[operators] def readComponent(
+      spark: SparkSession, parent: String, name: String, schema: StructType): DataFrame = {
+    val dir = new Path(parent, name)
+    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
+      spark.read.schema(schema).parquet(dir.toString)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  }
+
+  // ------------------------------------------------------------------
   // root meta
   // ------------------------------------------------------------------
 
@@ -67,8 +124,9 @@ object IndexLayout {
     * family's own `fields` (a JSON member list).
     */
   private[operators] def writeMeta(
-      fs: FileSystem, path: String, family: Family, fields: String): Unit =
-    writeJson(fs, new Path(path, family.metaFile),
+      spark: SparkSession, path: String, family: Family, fields: String): Unit =
+    writeJson(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(path, family.metaFile),
       s"""{"type": "${family.tag}", "format_version": $FormatVersion, $fields}""",
       overwrite = true)
 
@@ -146,10 +204,10 @@ object IndexLayout {
     }
   }
 
-  /** The pre-commit checks every append runs. A `batchId` already committed,
-    * or folded into the base by a compaction (the absorbed ledger — its dir
-    * is gone, so the marker no longer witnesses it), is an idempotent no-op:
-    * None. Otherwise an uncommitted leftover of a failed attempt (invisible
+  /** The pre-commit checks of [[IndexLifecycle.append]]. A `batchId`
+    * already committed, or folded into the base by a compaction (the
+    * absorbed ledger — its dir is gone, so the marker no longer witnesses
+    * it), is an idempotent no-op: None. Otherwise an uncommitted leftover of a failed attempt (invisible
     * to opens) is dropped and the dir to write the batch into is returned.
     */
   private[operators] def beginBatch(
@@ -162,10 +220,10 @@ object IndexLayout {
     Some(dir)
   }
 
-  /** Make a fully written batch visible: its `batch_meta.json` (the row
-    * count opens sum, then any family `fields`) goes in BEFORE the marker,
-    * so the marker create stays the single atomic visibility event and the
-    * shared root meta stays immutable.
+  /** Make a fully written batch visible ([[IndexLifecycle.append]]): its
+    * `batch_meta.json` (the row count opens sum, then any family `fields`)
+    * goes in BEFORE the marker, so the marker create stays the single
+    * atomic visibility event and the shared root meta stays immutable.
     */
   private[operators] def commitBatch(
       fs: FileSystem, dir: Path, nRows: Long, fields: String = ""): Unit = {
@@ -203,7 +261,7 @@ object IndexLayout {
     * marker stays the single visibility event).
     */
   private[operators] def carryLedgers(
-      spark: org.apache.spark.sql.SparkSession, srcPath: String, dstPath: String): Unit = {
+      spark: SparkSession, srcPath: String, dstPath: String): Unit = {
     val fs = new Path(srcPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val all = absorbedBatches(fs, srcPath) ++ committedBatchIds(fs, srcPath)
     if (all.nonEmpty) writeJson(fs, new Path(dstPath, LedgerFile),

@@ -1,26 +1,36 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** One persisted index family's write lifecycle, declared once beside the
   * family's verbs ([[Lexical.Bm25Lifecycle]], [[Ann.AnnLifecycle]],
-  * [[Dedup.MinhashLifecycle]]): how it opens, which frame lists its
-  * servable ids, what a delete measures, how a compaction rewrites an open
-  * index, and its ordered maintenance signals. The protocols over it are
-  * written once: delete and compaction here; the maintenance pass, audits
-  * and takedown fan-out in [[IndexMaintenance]]; snapshot opens and diff in
-  * [[Snapshots]]. `name` is the short name events, audits and the SQL
-  * table functions use; `memberId` is the id column of [[members]].
+  * [[Dedup.MinhashLifecycle]]): how it opens, how a batch becomes its rows,
+  * which frame lists its servable ids, what a delete measures, how a
+  * compaction rewrites an open index, and its ordered maintenance signals.
+  * The protocols over it are written once: append, delete and compaction
+  * here; the maintenance pass, audits and takedown fan-out in
+  * [[IndexMaintenance]]; snapshot opens and diff in [[Snapshots]]. `name`
+  * is the short name events, audits and the SQL table functions use,
+  * `memberId` the id column of [[members]], `layout` the root meta.
   */
-abstract class IndexLifecycle(val name: String, memberId: String) {
+abstract class IndexLifecycle(val name: String, memberId: String,
+    layout: IndexLayout.Family) {
 
   /** What the family's opener returns. */
   type Index
 
   /** Open the index at `path`; `pins` restricts it to a snapshot's components. */
   def open(spark: SparkSession, path: String, pins: Option[IndexPins]): Index
+
+  /** How `batch` becomes this family's rows, against the frozen parameters
+    * of the index at `path`: its root `meta` and the files beside it, never
+    * an open.
+    */
+  protected def batchRows(spark: SparkSession, path: String, meta: JsonNode,
+      batch: DataFrame, idCol: String, valueCol: String): IndexLifecycle.BatchRows
 
   /** The frame whose `memberId` lists the servable (not tombstoned) ids. */
   protected def members(index: Index): DataFrame
@@ -50,6 +60,30 @@ abstract class IndexLifecycle(val name: String, memberId: String) {
   /** The servable ids of `index` as one long `id` column. */
   final def servable(index: Index): DataFrame =
     members(index).select(col(memberId).cast("long").as("id"))
+
+  /** Append `batch` to the index at `path` as `path/batches/<batchId>/`:
+    * the family's [[batchRows]], each component written and counted once,
+    * made visible by one marker create. A crash at any point leaves the
+    * index as it was; a replay rewrites the uncommitted leftover. A batch
+    * that absorbs no document commits nothing and leaves no dir.
+    *
+    * @return true if the batch was written (or absorbed nothing), false if
+    *         `batchId` was already committed or folded by a compaction.
+    */
+  final def append(spark: SparkSession, path: String, batch: DataFrame,
+      idCol: String, valueCol: String, batchId: String): Boolean = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = IndexLayout.beginBatch(fs, path, batchId) match {
+      case Some(d) => d
+      case None => return false
+    }
+    val meta = IndexLayout.readMeta(fs, path, layout)
+    val rows = batchRows(spark, path, meta, batch, idCol, valueCol)
+    val nRows = rows.components.map(IndexLayout.writeComponent(dir.toString, _)).head
+    if (rows.absorbed(nRows)) IndexLayout.commitBatch(fs, dir, nRows, rows.fields)
+    else fs.delete(dir, true)
+    true
+  }
 
   /** Tombstone the ids of `ids`' `idCol` that the index at `path` serves,
     * under `delId` ([[Tombstones]] holds the on-disk protocol). Ids not
@@ -103,6 +137,14 @@ abstract class IndexLifecycle(val name: String, memberId: String) {
 }
 
 object IndexLifecycle {
+
+  /** A batch as one family persists it: its components in write order, the
+    * first one's rows being the batch's `n_rows`; the family's own
+    * `batch_meta.json` fields; and whether a batch of `n_rows` absorbed any
+    * document (by default: it wrote a row).
+    */
+  final case class BatchRows(components: Seq[IndexLayout.Component],
+      fields: String = "", absorbed: Long => Boolean = _ > 0)
 
   /** One maintenance signal: it fires when `value` is strictly above
     * `threshold`, and then `act` writes the next generation into the

@@ -259,14 +259,9 @@ object Lexical {
   def bm25WriteIndex(
       postings: DataFrame, stats: DataFrame, path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    // ONE materialization of the postings feeds all three consumers below
-    // (r16): the dfc aggregate, the n/sum_dl meta count, and the bucketed
-    // write each re-ran the caller's tokenize+aggregate lineage — three
-    // full corpus passes at any scale, three SINGLE-TASK passes above an
-    // unsplittable scan at bench scale (profiled: 3 × ~220 ms in
-    // q_bm25_index). A build pays one pin and frees it after the write;
-    // values are unchanged (the pin materializes the identical rows the
-    // lineage would recompute).
+    // one materialization of the postings feeds both the df aggregate and
+    // the bucketed write, instead of each re-running the caller's
+    // tokenize+aggregate lineage
     val pinned = postings.localCheckpoint(true)
     try {
     // bake per-term document frequency into the persisted postings (what a
@@ -278,24 +273,8 @@ object Lexical {
     // full postings). AQE picks the join: dfc is vocabulary-sized, broadcast
     // at bench scale, shuffle join on a 100 TB corpus.
     val dfc = pinned.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    // posting row count + exact doc-length sum into the meta, ONE job: the
-    // row count buys every later search a free size estimate (the serving
-    // tiers' residency gate; the df join is inner on term over the
-    // same rows, so counting the un-joined postings is exact), and `sum_dl`
-    // is what lets an append merge `avgdl` exactly — dl is one value per
-    // doc (repeated per posting), so sum the per-doc firsts; zero-token
-    // docs have no postings and contribute 0 either way. dl values are
-    // integral token counts, so the double sum is exact (< 2^53) in any
-    // accumulation order — merged avgdl ≡ rebuilt avgdl bit-for-bit.
-    val cRow = pinned.groupBy("doc_id")
-      .agg(first(col("dl")).as("__dl"), count(lit(1)).as("__np"))
-      .agg(coalesce(sum(col("__np")), lit(0L)).as("n"),
-        coalesce(sum(col("__dl")), lit(0.0)).as("s"))
-      .head()
-    val nRows = cRow.getLong(0)
-    val sumDl = cRow.getDouble(1)
-    // bake the per-posting CONTRIBUTION at the default (k1, b) too (r10,
-    // what Lucene-style impact-ordered indexes store): contrib(d,t) depends
+    // bake the per-posting CONTRIBUTION at the default (k1, b) too (what
+    // Lucene-style impact-ordered indexes store): contrib(d,t) depends
     // only on build-time quantities (tf, dl, df, n_docs, avgdl), so the
     // idf/log/divide chain runs once at build instead of once per posting
     // per search — same withContrib expressions over the same values, so
@@ -303,34 +282,37 @@ object Lexical {
     // (k1, b) searches recompute from tf/dl/df as before
     val sr = stats.select(col("n_docs"), col("avgdl")).head()
     val (bakeK1, bakeB) = (1.2, 0.75)
-    pinned.join(dfc, Seq("term"))
-      .withColumn("contrib0", contribCol(sr.getDouble(0), sr.getDouble(1), bakeK1, bakeB))
-      .withColumn("__bkt", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
-      // cluster rows by bucket before the partitioned write: without this,
-      // every upstream task opens a writer per bucket it touches (tasks ×
-      // nBuckets small files — 512 at bench scale, measured 5.6 s); with it,
-      // each shuffle partition holds whole buckets (hash on __bkt) and AQE
-      // sizes the task count to the data
-      .repartition(col("__bkt"))
-      .write.mode("overwrite").partitionBy("__bkt").parquet(s"$path/postings")
-    stats.write.mode("overwrite").parquet(s"$path/stats")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      postings.sparkSession.sparkContext.hadoopConfiguration)
-    IndexLayout.writeMeta(fs, path, IndexLayout.Bm25,
+    // `sum_dl` is what lets an append merge `avgdl` exactly. A doc's dl is
+    // its token count, the sum of its postings' tf, so the tf sum over the
+    // written postings is the dl sum over the docs (zero-token docs have no
+    // postings and add 0 either way), taken in the write's own job. Both are
+    // integral, so the double sum is exact (< 2^53) in any order — merged
+    // avgdl ≡ rebuilt avgdl bit-for-bit.
+    val (baked, sums) = IndexLayout.observe(
+      pinned.join(dfc, Seq("term"))
+        .withColumn("contrib0", contribCol(sr.getDouble(0), sr.getDouble(1), bakeK1, bakeB))
+        .withColumn("__bkt", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")),
+      sum(col("tf")).as("sum_dl"))
+    // the row count buys every later search a free size estimate (the
+    // serving tiers' residency gate)
+    val nRows = IndexLayout.writeComponent(path,
+      IndexLayout.Component("postings", baked, Some("__bkt")))
+    IndexLayout.writeComponent(path, IndexLayout.Component("stats", stats))
+    IndexLayout.writeMeta(postings.sparkSession, path, IndexLayout.Bm25,
       s""""n_buckets": $nBuckets, "n_rows": $nRows, """ +
         s""""contrib_k1": $bakeK1, "contrib_b": $bakeB, """ +
         // exact-merge inputs for bm25AppendIndex: Double.toString round-trips
         // through Jackson's asDouble bit-exactly
-        s""""n_docs": ${sr.getDouble(0)}, "sum_dl": $sumDl""")
+        s""""n_docs": ${sr.getDouble(0)}, "sum_dl": ${sums("sum_dl")}""")
     } finally pinned.unpersist(blocking = false)
   }
 
   /** Exact schemas of the persisted layout components, as [[bm25WriteIndex]]
-    * / [[bm25AppendIndex]] write them (r16, guide §1/§2 job-shape): passing
-    * the known schema to `spark.read` skips the footer/schema-inference JOB
-    * each open otherwise pays per component (~20-50 ms of scheduler
-    * round-trip each — the dominant cost of lifecycle queries whose indexes
-    * are takedown-sized). File sources force nullability themselves, so
+    * / [[bm25AppendIndex]] write them: passing the known schema to
+    * `spark.read` ([[IndexLayout.readComponent]]) skips the
+    * footer/schema-inference JOB each open otherwise pays per component
+    * (~20-50 ms of scheduler round-trip each — the dominant cost of
+    * lifecycle queries whose indexes are takedown-sized). File sources force nullability themselves, so
     * only names/types/order matter; a spec pins these equal to inference
     * (EngineSpec "open-side read schemas match parquet inference").
     */
@@ -384,24 +366,16 @@ object Lexical {
     // (r15) restrict to the capture-time names — both restrictions feed the
     // shareKey below, so a pinned view never aliases a live mirror.
     val dels = Tombstones.read(spark, path, pins.map(_.deletes))
+    val base = IndexLayout.readComponent(spark, path, "postings", postingsReadSchema)
     val idx = if (batches.isEmpty && dels.isEmpty) {
-      Bm25Index(
-        spark.read.schema(postingsReadSchema).parquet(s"$path/postings"),
-        spark.read.schema(statsReadSchema).parquet(s"$path/stats"),
+      Bm25Index(base, IndexLayout.readComponent(spark, path, "stats", statsReadSchema),
         nBuckets, Some(baseNRows),
         Some((meta.get("contrib_k1").asDouble(), meta.get("contrib_b").asDouble())))
     } else {
       val core = Seq("doc_id", "term", "tf", "dl", "__bkt").map(col)
-      val raw = (spark.read.schema(postingsReadSchema)
-        .parquet(s"$path/postings").select(core: _*) +:
-        batches.collect {
-          // zero-posting batches (all-blank docs) have stats but no postings
-          // dir — an empty partitioned parquet dir has no footers and would
-          // corrupt this very open (the minhash/ann append lesson)
-          case b if b.nRows > 0L =>
-            spark.read.schema(batchPostingsReadSchema)
-              .parquet(s"${b.dir}/postings").select(core: _*)
-        }).reduce(_.unionByName(_))
+      val raw = (base.select(core: _*) +: batches.map(b =>
+        IndexLayout.readComponent(spark, b.dir.toString, "postings", batchPostingsReadSchema)
+          .select(core: _*))).reduce(_.unionByName(_))
       // tombstone exclusion over the merged scan: df recomputes in-plan over
       // the FILTERED postings (the same mechanism that makes appends exact),
       // so per-term document frequencies equal a rebuild's without any
@@ -435,13 +409,11 @@ object Lexical {
     idx
   }
 
-  /** Absorb a new document batch into a persisted BM25 index — the lexical
-    * member of the crawl-regime append family ([[Dedup.minhashAppendIndex]],
-    * [[Ann.annAppendIndex]]; same `_COMMITTED`-marker protocol: the batch
-    * lands as a self-contained `path/batches/<batchId>/postings` bucket
-    * layout made visible only by one atomic marker create, a crash at any
-    * point leaves the index exactly as before, and re-running a committed
-    * `batchId` is an idempotent no-op).
+  /** Absorb a new document batch into a persisted BM25 index as one
+    * committed batch ([[IndexLifecycle.append]]: atomic, idempotent,
+    * crash-invisible). The batch lands as its own term-hash-bucketed
+    * `path/batches/<batchId>/postings` under the base layout's modulus, and
+    * its `batch_meta.json` records its exact `n_docs` and `sum_dl`.
     *
     * Unlike the ANN append there is NO staleness trade in the scores:
     * `open → search` after an append is bit-identical to a full rebuild's
@@ -449,56 +421,19 @@ object Lexical {
     * is the serving bake — df/contrib0 baked into the BASE layout no longer
     * cover the corpus, so [[bm25OpenIndex]] drops them and every search
     * recomputes df in-plan until [[bm25CompactIndex]] folds the batches back
-    * into one freshly-baked layout.
+    * into one freshly-baked layout. A batch of zero-token docs moves the
+    * stats but writes no postings.
     *
     * Caller contract: batch `docId`s must be disjoint from the corpus
     * already in the index (the same contract as the other two appends —
-    * duplicate ids would double-count their postings).
-    *
-    * @return true if the batch was written (or was an empty no-op), false
-    *         if `batchId` was already committed (idempotent no-op).
+    * duplicate ids would double-count their postings). Return value:
+    * [[IndexLifecycle.append]].
     */
   def bm25AppendIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, docId: String, docText: String,
-      batchId: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = IndexLayout.beginBatch(fs, path, batchId) match {
-      case Some(d) => d
-      case None => return false
-    }
-    requireIntegralId(batch, docId, "batch")
-    val nBuckets = IndexLayout.readMeta(fs, path, IndexLayout.Bm25).get("n_buckets").asInt()
-    // batch stats in one narrow pass: doc count + exact token-count sum
-    // (the same size(terms(...)) the build's stats aggregate uses)
-    val st = batch.agg(
-      count(lit(1)).cast("double").as("n"),
-      coalesce(sum(size(terms(col(docText))).cast("double")), lit(0.0)).as("s")).head()
-    // empty batch: a committed no-op with NO batch dir (see the zero-posting
-    // note below — and a no-doc batch moves no stats either)
-    if (st.getDouble(0) == 0) return true
-    val postings = tokensWithDl(batch, docId, docText)
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
-      // same bucket hash, same modulus as the base layout — searches prune
-      // base and batch branches with one bucket set
-      .withColumn("__bkt", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
-      .localCheckpoint(false) // counted below, then written: one tokenize pass
-    val nRows = postings.count()
-    // all-blank batch (docs exist, zero tokens): stats move (n_docs grows,
-    // avgdl shrinks) but there are no postings — write the batch meta ONLY,
-    // because an empty partitioned parquet dir has no footers and corrupts
-    // later opens (the bug both sibling appends fixed in r10)
-    if (nRows > 0) {
-      postings.repartition(col("__bkt"))
-        .write.mode("overwrite").partitionBy("__bkt").parquet(s"$batchDir/postings")
-    } else fs.mkdirs(batchDir)
-    IndexLayout.commitBatch(fs, batchDir, nRows,
-      s""", "n_docs": ${st.getDouble(0)}, "sum_dl": ${st.getDouble(1)}""")
-    postings.unpersist()
-    true
-  }
+      batchId: String): Boolean =
+    Bm25Lifecycle.append(spark, path, batch, docId, docText, batchId)
 
   /** Tombstone-delete documents from a persisted BM25 index — the removal
     * verb of the lifecycle (judge r13 direction; see [[Tombstones]] for the
@@ -547,11 +482,32 @@ object Lexical {
     * `contrib0` over the surviving corpus. Maintenance compacts on the
     * appended share of postings, then on the tombstoned share.
     */
-  object Bm25Lifecycle extends IndexLifecycle("bm25", "doc_id") {
+  object Bm25Lifecycle extends IndexLifecycle("bm25", "doc_id", IndexLayout.Bm25) {
     type Index = Bm25Index
 
     def open(spark: SparkSession, path: String, pins: Option[IndexPins]) =
       bm25OpenIndex(spark, path, pins)
+
+    // the batch's doc count and exact token-count sum (the build's stats
+    // aggregate) take a pass of their own: zero-token docs count but leave
+    // no postings. The postings share the base layout's bucket modulus, so
+    // searches prune base and batch branches with one bucket set.
+    protected def batchRows(spark: SparkSession, path: String,
+        meta: com.fasterxml.jackson.databind.JsonNode, batch: DataFrame,
+        docId: String, docText: String): IndexLifecycle.BatchRows = {
+      requireIntegralId(batch, docId, "batch")
+      val st = batch.agg(
+        count(lit(1)).cast("double").as("n"),
+        coalesce(sum(size(terms(col(docText))).cast("double")), lit(0.0)).as("s")).head()
+      val postings = tokensWithDl(batch, docId, docText)
+        .groupBy("doc_id", "term")
+        .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
+        .withColumn("__bkt",
+          pmod(xxhash64(col("term")), lit(meta.get("n_buckets").asInt())).cast("int"))
+      IndexLifecycle.BatchRows(Seq(IndexLayout.Component("postings", postings, Some("__bkt"))),
+        fields = s""", "n_docs": ${st.getDouble(0)}, "sum_dl": ${st.getDouble(1)}""",
+        absorbed = _ => st.getDouble(0) > 0)
+    }
 
     protected def members(index: Bm25Index): DataFrame = index.postings
 

@@ -298,8 +298,8 @@ object Tombstones {
     if (fs.exists(dir)) fs.delete(dir, true)
     // tombstone sets are small relative to the index (a takedown batch, not
     // a corpus): one file keeps later opens' exclusion read to one footer
-    foundIds.select(col("id").cast("long").as("id"))
-      .coalesce(1).write.parquet(new Path(dir, "ids").toString)
+    IndexLayout.writeComponent(dir.toString, IndexLayout.Component("ids",
+      foundIds.select(col("id").cast("long").as("id")).coalesce(1)))
     IndexLayout.writeJson(fs, new Path(dir, MetaFile),
       s"""{${d.json}, """ +
         // wall timestamp for the audit surface (the maintenance-log move):
@@ -499,10 +499,10 @@ object Tombstones {
       .foldLeft(-1L)(math.max) + 1
     val dir = dirOf(path, s"fold-$k")
     if (fs.exists(dir)) fs.delete(dir, true) // uncommitted leftover
-    spark.read.schema(idsReadSchema)
-      .parquet(visible.map(d => new Path(d, "ids").toString): _*)
-      .distinct()
-      .coalesce(1).write.parquet(new Path(dir, "ids").toString)
+    IndexLayout.writeComponent(dir.toString, IndexLayout.Component("ids",
+      spark.read.schema(idsReadSchema)
+        .parquet(visible.map(d => new Path(d, "ids").toString): _*)
+        .distinct().coalesce(1)))
     IndexLayout.writeJson(fs, new Path(dir, MetaFile),
       s"""{${total.json}, "at": ${System.currentTimeMillis()}, """ +
         transitive.result().sorted.map(id => "\"" + id + "\"")

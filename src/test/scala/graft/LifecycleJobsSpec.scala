@@ -69,7 +69,7 @@ class LifecycleJobsSpec extends AnyFunSuite {
       "bm25" -> jobs(Lexical.bm25WriteIndex(p, st, tmp("graft_jobs_w_bm25"), nBuckets = 8)),
       "ann" -> jobs(Ann.annWriteIndex(cells, cents, tmp("graft_jobs_w_ann"))),
       "minhash" -> jobs(Dedup.minhashWriteIndex(mhIndex, tmp("graft_jobs_w_mh"))))
-    assert(counts == Map("bm25" -> 13L, "ann" -> 9L, "minhash" -> 5L), s"jobs were $counts")
+    assert(counts == Map("bm25" -> 10L, "ann" -> 4L, "minhash" -> 3L), s"jobs were $counts")
   }
 
   test("appends: jobs of one 10-doc batch append per family") {
@@ -82,7 +82,7 @@ class LifecycleJobsSpec extends AnyFunSuite {
         "vec_id", "embedding", "b1")),
       "minhash" -> jobs(Dedup.minhashAppendIndex(spark, genPath(mh, 0), docs(batch),
         "doc_id", "text", "b1")))
-    assert(counts == Map("bm25" -> 7L, "ann" -> 7L, "minhash" -> 5L), s"jobs were $counts")
+    assert(counts == Map("bm25" -> 5L, "ann" -> 4L, "minhash" -> 3L), s"jobs were $counts")
   }
 
   test("deletes: jobs of a found and a not-found delete per family") {
@@ -114,7 +114,7 @@ class LifecycleJobsSpec extends AnyFunSuite {
       "bm25" -> jobs(Lexical.bm25CompactIndex(spark, b, genPath(bm, 1))),
       "ann" -> jobs(Ann.annCompactIndex(spark, a, genPath(an, 1))),
       "minhash" -> jobs(Dedup.minhashCompactIndex(spark, m, genPath(mh, 1))))
-    assert(counts == Map("bm25" -> 10L, "ann" -> 8L, "minhash" -> 6L),
+    assert(counts == Map("bm25" -> 7L, "ann" -> 4L, "minhash" -> 4L),
       s"jobs were $counts")
   }
 
@@ -144,6 +144,6 @@ class LifecycleJobsSpec extends AnyFunSuite {
       "bm25" -> pass(IndexMaintenance.maintainIndexes(spark, bm25Root = Some(bm), policy = fire)),
       "ann" -> pass(IndexMaintenance.maintainIndexes(spark, annRoot = Some(an), policy = fire)),
       "minhash" -> pass(IndexMaintenance.maintainIndexes(spark, minhashRoot = Some(mh), policy = fire)))
-    assert(counts == Map("bm25" -> 11L, "ann" -> 9L, "minhash" -> 7L), s"jobs were $counts")
+    assert(counts == Map("bm25" -> 8L, "ann" -> 5L, "minhash" -> 5L), s"jobs were $counts")
   }
 }
