@@ -3,13 +3,15 @@ package graft
 import graft.operators.{Ann, Dedup, IndexLayout, Lexical}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared on-disk layout ([[IndexLayout]]), once per index family:
   * every writer stamps the current `format_version`, every reader (open,
   * append, delete) refuses a root meta without it or at another version
-  * with a rebuild hint — before anything lands — and a committed batch
-  * missing its `batch_meta.json` fails the open.
+  * with a rebuild hint — before anything lands — a committed batch
+  * missing its `batch_meta.json` fails the open, and an empty batch
+  * commits nothing and leaves no dir.
   */
 class IndexLayoutSpec extends AnyFunSuite {
 
@@ -31,14 +33,20 @@ class IndexLayoutSpec extends AnyFunSuite {
     }.toDF("id", "text", "vec")
   }
 
-  /** One family's write / open / append / delete, keyed by index dir. */
+  /** One family's write / open / append / delete / search, keyed by index
+    * dir; `search` returns the rows of a self-search of the first docs.
+    */
   private case class Family(
       name: String, metaFile: String,
       write: String => Unit,
       open: String => Unit,
-      append: (String, String) => Boolean,
+      appendOf: (String, DataFrame, String) => Boolean,
       delete: (String, String) => Boolean,
-      compact: (String, String) => Unit)
+      compact: (String, String) => Unit,
+      search: String => Long) {
+    def append(dir: String, batchId: String): Boolean =
+      appendOf(dir, docs(100 until 104), batchId)
+  }
 
   private val families = Seq(
     Family("bm25", "bm25_meta.json",
@@ -47,24 +55,30 @@ class IndexLayoutSpec extends AnyFunSuite {
         Lexical.bm25WriteIndex(postings, stats, dir, nBuckets = 4)
       },
       dir => Lexical.bm25OpenIndex(spark, dir),
-      (dir, b) => Lexical.bm25AppendIndex(spark, dir, docs(100 until 104), "id", "text", b),
+      (dir, rows, b) => Lexical.bm25AppendIndex(spark, dir, rows, "id", "text", b),
       (dir, d) => Lexical.bm25DeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
-      (src, dst) => Lexical.bm25CompactIndex(spark, src, dst)),
+      (src, dst) => Lexical.bm25CompactIndex(spark, src, dst),
+      dir => Lexical.bm25SearchIndex(Lexical.bm25OpenIndex(spark, dir), docs(0 until 3),
+        "id", "text", k = 2).count()),
     Family("ann", "ann_meta.json",
       dir => {
         val (cells, cents) = Ann.annBuildIndex(docs(0 until 20), "id", "vec", nCentroids = 3)
         Ann.annWriteIndex(cells, cents, dir)
       },
       dir => Ann.annOpenIndex(spark, dir),
-      (dir, b) => Ann.annAppendIndex(spark, dir, docs(100 until 104), "id", "vec", b),
+      (dir, rows, b) => Ann.annAppendIndex(spark, dir, rows, "id", "vec", b),
       (dir, d) => Ann.annDeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
-      (src, dst) => Ann.annCompactIndex(spark, src, dst)),
+      (src, dst) => Ann.annCompactIndex(spark, src, dst),
+      dir => Ann.annSearchIndex(Ann.annOpenIndex(spark, dir), docs(0 until 3),
+        "id", "vec", k = 2).count()),
     Family("minhash", "minhash_meta.json",
       dir => Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(docs(0 until 20), "id", "text"), dir),
       dir => Dedup.minhashOpenIndex(spark, dir),
-      (dir, b) => Dedup.minhashAppendIndex(spark, dir, docs(100 until 104), "id", "text", b),
+      (dir, rows, b) => Dedup.minhashAppendIndex(spark, dir, rows, "id", "text", b),
       (dir, d) => Dedup.minhashDeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
-      (src, dst) => Dedup.minhashCompactIndex(spark, src, dst)))
+      (src, dst) => Dedup.minhashCompactIndex(spark, src, dst),
+      dir => Dedup.minhashSearchIndex(Dedup.minhashOpenIndex(spark, dir), docs(0 until 3),
+        "id", "text").count()))
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_layout_$tag").toString
@@ -127,6 +141,23 @@ class IndexLayoutSpec extends AnyFunSuite {
       fs.delete(new Path(s"$dir/batches/b1/batch_meta.json"), false)
       val e = intercept[IllegalArgumentException](f.open(dir))
       assert(e.getMessage.contains("batch_meta.json") && e.getMessage.contains("rebuild"))
+    }
+
+    test(s"${f.name}: an empty batch leaves no dir; replays, opens and searches stay healthy") {
+      val dir = tmp(s"${f.name}_empty")
+      f.write(dir)
+      val hits = f.search(dir)
+      assert(hits > 0)
+      val empty = docs(100 until 104).filter(col("id") < 0)
+      for (attempt <- Seq("first", "replay")) {
+        assert(f.appendOf(dir, empty, "e1"), attempt)
+        assert(!fs.exists(new Path(s"$dir/batches/e1")), attempt)
+        assert(f.search(dir) === hits, attempt)
+      }
+      // a batch with rows still lands after it
+      assert(f.append(dir, "b1"))
+      assert(fs.exists(new Path(s"$dir/batches/b1/_COMMITTED")))
+      f.open(dir)
     }
   }
 }

@@ -72,17 +72,34 @@ class LifecycleJobsSpec extends AnyFunSuite {
     assert(counts == Map("bm25" -> 10L, "ann" -> 4L, "minhash" -> 3L), s"jobs were $counts")
   }
 
-  test("appends: jobs of one 10-doc batch append per family") {
-    val (mh, bm, an) = roots()
+  /** Jobs of one 10-doc batch append to each gen-0 root. */
+  private def appendJobs(mh: String, bm: String, an: String): Map[String, Long] = {
     val batch = 40L until 50L
-    val counts = Map(
+    Map(
       "bm25" -> jobs(Lexical.bm25AppendIndex(spark, genPath(bm, 0), docs(batch),
         "doc_id", "text", "b1")),
       "ann" -> jobs(Ann.annAppendIndex(spark, genPath(an, 0), vecs(batch),
         "vec_id", "embedding", "b1")),
       "minhash" -> jobs(Dedup.minhashAppendIndex(spark, genPath(mh, 0), docs(batch),
         "doc_id", "text", "b1")))
+  }
+
+  test("appends: jobs of one 10-doc batch append per family") {
+    val (mh, bm, an) = roots()
+    val counts = appendJobs(mh, bm, an)
     assert(counts == Map("bm25" -> 5L, "ann" -> 4L, "minhash" -> 3L), s"jobs were $counts")
+  }
+
+  test("appends: a tombstoned root costs an append no more jobs than a clean one") {
+    val clean = (appendJobs _).tupled(roots())
+    val (mh, bm, an) = roots()
+    val doomed = ids(Seq(4L, 5L))
+    Lexical.bm25DeleteFromIndex(spark, genPath(bm, 0), doomed, "id", "d0")
+    Ann.annDeleteFromIndex(spark, genPath(an, 0), doomed, "id", "d0")
+    Dedup.minhashDeleteFromIndex(spark, genPath(mh, 0), doomed, "id", "d0")
+    val tombstoned = appendJobs(mh, bm, an)
+    assert(tombstoned.forall { case (f, n) => n <= clean(f) },
+      s"tombstoned $tombstoned, clean $clean")
   }
 
   test("deletes: jobs of a found and a not-found delete per family") {
