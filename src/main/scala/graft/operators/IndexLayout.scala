@@ -207,8 +207,9 @@ object IndexLayout {
   /** The pre-commit checks of [[IndexLifecycle.append]]. A `batchId`
     * already committed, or folded into the base by a compaction (the
     * absorbed ledger — its dir is gone, so the marker no longer witnesses
-    * it), is an idempotent no-op: None. Otherwise an uncommitted leftover of a failed attempt (invisible
-    * to opens) is dropped and the dir to write the batch into is returned.
+    * it), is an idempotent no-op: None. Otherwise an uncommitted leftover
+    * of a failed attempt (invisible to opens) is dropped and the dir to
+    * write the batch into is returned.
     */
   private[operators] def beginBatch(
       fs: FileSystem, path: String, batchId: String): Option[Path] = {

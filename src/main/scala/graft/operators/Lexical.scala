@@ -312,9 +312,10 @@ object Lexical {
     * `spark.read` ([[IndexLayout.readComponent]]) skips the
     * footer/schema-inference JOB each open otherwise pays per component
     * (~20-50 ms of scheduler round-trip each — the dominant cost of
-    * lifecycle queries whose indexes are takedown-sized). File sources force nullability themselves, so
-    * only names/types/order matter; a spec pins these equal to inference
-    * (EngineSpec "open-side read schemas match parquet inference").
+    * lifecycle queries whose indexes are takedown-sized). File sources
+    * force nullability themselves, so only names/types/order matter; a
+    * spec pins these equal to inference (EngineSpec "open-side read
+    * schemas match parquet inference").
     */
   private[graft] val postingsReadSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType),
