@@ -695,7 +695,7 @@ object Dedup extends Logging {
     * banding params pinned by the index's meta file, never caller-supplied,
     * and it lands as `path/batches/<batchId>/{postings, shingles}`. After
     * the append, `open → search ≡ full rebuild → search` row-identically,
-    * which the spec and the `q_minhash_index_append` driver query
+    * which the spec and the `q_minhash_index_append` bench query
     * (q_contamination's oracle) hash-check.
     *
     * This works for MinHash because the index holds no corpus-global
