@@ -229,8 +229,8 @@ object Ann {
   private def writeLayout(cells: DataFrame, centroids: DataFrame, path: String,
       cb: Option[Pq.PqCodebook]): Unit = {
     val nRows = IndexLayout.writeComponent(path,
-      IndexLayout.Component("cells", enrichCells(cells, cb), Some("__cell")))
-    val n = IndexLayout.writeComponent(path, IndexLayout.Component("centroids", centroids))
+      IndexLayout.Component("cells", enrichCells(cells, cb), Some("__cell"))).nRows
+    val n = IndexLayout.writeComponent(path, IndexLayout.Component("centroids", centroids)).nRows
     cb.foreach(c => Pq.saveCodebook(cells.sparkSession, s"$path/pq_codebook.json", c))
     IndexLayout.writeMeta(cells.sparkSession, path, IndexLayout.AnnIvf,
       s""""n_centroids": $n, "n_rows": $nRows""")

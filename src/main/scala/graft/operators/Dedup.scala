@@ -671,7 +671,7 @@ object Dedup extends Logging {
     */
   def minhashWriteIndex(index: MinHashIndex, path: String): Unit = {
     val nRows = layoutComponents(index.postings, index.shingles)
-      .map(IndexLayout.writeComponent(path, _)).head
+      .map(IndexLayout.writeComponent(path, _).nRows).head
     IndexLayout.writeMeta(index.postings.sparkSession, path, IndexLayout.MinHashLsh,
       s""""shingle_size": ${index.shingleSize}, """ +
         s""""num_bands": ${index.numBands}, "rows_per_band": ${index.rowsPerBand}, """ +

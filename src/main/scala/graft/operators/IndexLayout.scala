@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Every component's parquet (postings, stats, cells, centroids, shingles,
   * tombstone ids) is written by [[writeComponent]] and read by
-  * [[readComponent]]; every batch is appended by [[IndexLifecycle.append]],
+  * [[readComponents]]; every batch is appended by [[IndexLifecycle.append]],
   * the one caller of [[beginBatch]] and [[commitBatch]].
   *
   * Every root meta carries [[FormatVersion]], and [[readMeta]] — the only
@@ -76,43 +76,49 @@ object IndexLayout {
     */
   final case class Component(name: String, rows: DataFrame, partitionBy: Option[String] = None)
 
-  /** `df` with the named numeric aggregates `aggs` taken inside the job
-    * that computes its rows. The reader blocks until that job has ended and
-    * reads 0 for no rows. Observe only the rows a write carries: when a
-    * later step turns out empty, adaptive execution drops the stages below
-    * it, and their metrics with them.
-    */
-  private[operators] def observe(df: DataFrame, aggs: Column*): (DataFrame, String => Double) = {
-    val obs = Observation()
-    (df.observe(obs, aggs.head, aggs.tail: _*),
-      name => obs.get.get(name).collect { case n: Number => n.doubleValue }.getOrElse(0.0))
-  }
+  /** What [[writeComponent]] took in the write's own job, 0 for no rows. */
+  final case class Written(nRows: Long, sum: String => Double)
 
-  /** Write `c` under `parent` and return its row count, taken in the
-    * write's own job. A partitioned component is clustered by its column
-    * first, so each task opens one file per partition it holds. A component
-    * with no rows leaves no dir (an empty parquet dir has no footers);
-    * [[readComponent]] reads the missing dir as empty.
+  /** Write `c` under `parent` and return its row count and the named
+    * aggregates `sums`, taken by one `Dataset.observe` of the rows the
+    * write carries. A partitioned component is clustered by its column
+    * first (each task opens one file per partition it holds), and the
+    * observation sits above that shuffle, in the write's result stage:
+    * Spark applies a result task's metrics once, a re-run map stage's
+    * again. A component with no rows leaves no dir (an empty parquet dir
+    * has no footers); [[readComponent]] reads the missing dir as empty.
     */
-  private[operators] def writeComponent(parent: String, c: Component): Long = {
-    val (rows, read) = observe(c.rows, count(lit(1)).as("n"))
+  private[operators] def writeComponent(parent: String, c: Component, sums: Column*): Written = {
+    val out = c.partitionBy.fold(c.rows)(p => c.rows.repartition(col(p)))
+    val obs = Observation()
+    val observed = out.observe(obs, count(lit(1)).as(RowCount), sums: _*)
     val dir = new Path(parent, c.name)
-    c.partitionBy.fold(rows.write)(p => rows.repartition(col(p)).write.partitionBy(p))
+    c.partitionBy.fold(observed.write)(observed.write.partitionBy(_))
       .mode("overwrite").parquet(dir.toString)
-    val n = read("n").toLong
+    // an empty input can leave the metrics map empty: read a missing one as 0
+    val got = obs.get.collect { case (k, n: Number) => k -> n.doubleValue }
+    val n = got.getOrElse(RowCount, 0.0).toLong
     if (n == 0) dir.getFileSystem(c.rows.sparkSession.sparkContext.hadoopConfiguration)
       .delete(dir, true)
-    n
+    Written(n, got.getOrElse(_, 0.0))
   }
+  private val RowCount = "__n_rows"
 
   /** Read the component `name` under `parent` with its known `schema`,
     * which skips the footer-inference job a read otherwise pays.
     */
   private[operators] def readComponent(
-      spark: SparkSession, parent: String, name: String, schema: StructType): DataFrame = {
-    val dir = new Path(parent, name)
-    if (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir))
-      spark.read.schema(schema).parquet(dir.toString)
+      spark: SparkSession, parent: String, name: String, schema: StructType): DataFrame =
+    readComponents(spark, Seq(parent), name, schema)
+
+  /** [[readComponent]] of an UNPARTITIONED component under all `parents`
+    * as one multi-path read; a parent without it (no rows) adds nothing.
+    */
+  private[operators] def readComponents(spark: SparkSession, parents: Seq[String],
+      name: String, schema: StructType): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dirs = parents.map(new Path(_, name)).filter(d => d.getFileSystem(conf).exists(d))
+    if (dirs.nonEmpty) spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 

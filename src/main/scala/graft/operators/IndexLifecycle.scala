@@ -79,7 +79,7 @@ abstract class IndexLifecycle(val name: String, memberId: String,
     }
     val meta = IndexLayout.readMeta(fs, path, layout)
     val rows = batchRows(spark, path, meta, batch, idCol, valueCol)
-    val nRows = rows.components.map(IndexLayout.writeComponent(dir.toString, _)).head
+    val nRows = rows.components.map(IndexLayout.writeComponent(dir.toString, _).nRows).head
     if (rows.absorbed(nRows)) IndexLayout.commitBatch(fs, dir, nRows, rows.fields)
     else fs.delete(dir, true)
     true

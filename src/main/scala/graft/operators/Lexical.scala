@@ -287,23 +287,20 @@ object Lexical {
     // written postings is the dl sum over the docs (zero-token docs have no
     // postings and add 0 either way), taken in the write's own job. Both are
     // integral, so the double sum is exact (< 2^53) in any order — merged
-    // avgdl ≡ rebuilt avgdl bit-for-bit.
-    val (baked, sums) = IndexLayout.observe(
+    // avgdl ≡ rebuilt avgdl bit-for-bit. The row count buys every later
+    // search a free size estimate (the serving tiers' residency gate).
+    val written = IndexLayout.writeComponent(path, IndexLayout.Component("postings",
       pinned.join(dfc, Seq("term"))
         .withColumn("contrib0", contribCol(sr.getDouble(0), sr.getDouble(1), bakeK1, bakeB))
         .withColumn("__bkt", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")),
-      sum(col("tf")).as("sum_dl"))
-    // the row count buys every later search a free size estimate (the
-    // serving tiers' residency gate)
-    val nRows = IndexLayout.writeComponent(path,
-      IndexLayout.Component("postings", baked, Some("__bkt")))
+      Some("__bkt")), sum(col("tf")).as("sum_dl"))
     IndexLayout.writeComponent(path, IndexLayout.Component("stats", stats))
     IndexLayout.writeMeta(postings.sparkSession, path, IndexLayout.Bm25,
-      s""""n_buckets": $nBuckets, "n_rows": $nRows, """ +
+      s""""n_buckets": $nBuckets, "n_rows": ${written.nRows}, """ +
         s""""contrib_k1": $bakeK1, "contrib_b": $bakeB, """ +
         // exact-merge inputs for bm25AppendIndex: Double.toString round-trips
         // through Jackson's asDouble bit-exactly
-        s""""n_docs": ${sr.getDouble(0)}, "sum_dl": ${sums("sum_dl")}""")
+        s""""n_docs": ${sr.getDouble(0)}, "sum_dl": ${written.sum("sum_dl")}""")
     } finally pinned.unpersist(blocking = false)
   }
 

@@ -374,15 +374,12 @@ object Tombstones {
     }
     if (dirs.isEmpty) return None
     val total = dirs.map(d => deltasOf(deleteMeta(fs, d))).foldLeft(Deltas(0L, 0L))(_ + _)
-    // ONE multi-path read (the Denylist.read idiom, judge r13 #1): the ids
-    // are a single flat long column, so the partition-structure-inference
-    // caveat that justifies the index openers' per-root folds does not
-    // apply, and the per-dir read + left-deep union fold cost N footer
-    // round-trips and an N-node plan per open
-    // known one-column schema (r16): skips the footer/schema-inference job
-    // the read otherwise pays across every tombstone dir per open
-    val idsDf = spark.read.schema(idsReadSchema)
-      .parquet(dirs.map(d => new Path(d, "ids").toString): _*)
+    // ONE multi-path read with the known schema (the Denylist.read idiom):
+    // the ids are a single flat long column, so the partition-inference
+    // caveat behind the index openers' per-root folds does not apply, and a
+    // per-dir read + union fold would cost N footer round-trips and an
+    // N-node plan per open
+    val idsDf = IndexLayout.readComponents(spark, dirs.map(_.toString), "ids", idsReadSchema)
     val exclusion =
       if (total.nIds <= maxDriverDeleteIds(spark))
         Left(idsDf.collect().map(_.getLong(0)))
@@ -500,8 +497,7 @@ object Tombstones {
     val dir = dirOf(path, s"fold-$k")
     if (fs.exists(dir)) fs.delete(dir, true) // uncommitted leftover
     IndexLayout.writeComponent(dir.toString, IndexLayout.Component("ids",
-      spark.read.schema(idsReadSchema)
-        .parquet(visible.map(d => new Path(d, "ids").toString): _*)
+      IndexLayout.readComponents(spark, visible.map(_.toString), "ids", idsReadSchema)
         .distinct().coalesce(1)))
     IndexLayout.writeJson(fs, new Path(dir, MetaFile),
       s"""{${total.json}, "at": ${System.currentTimeMillis()}, """ +

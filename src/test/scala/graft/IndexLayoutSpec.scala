@@ -3,15 +3,18 @@ package graft
 import graft.operators.{Ann, Dedup, IndexLayout, Lexical}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared on-disk layout ([[IndexLayout]]), once per index family:
   * every writer stamps the current `format_version`, every reader (open,
   * append, delete) refuses a root meta without it or at another version
   * with a rebuild hint — before anything lands — a committed batch
-  * missing its `batch_meta.json` fails the open, and an empty batch
-  * commits nothing and leaves no dir.
+  * missing its `batch_meta.json` fails the open, an empty batch
+  * commits nothing and leaves no dir, and every write counts its rows in
+  * its own result stage.
   */
 class IndexLayoutSpec extends AnyFunSuite {
 
@@ -158,6 +161,29 @@ class IndexLayoutSpec extends AnyFunSuite {
       assert(f.append(dir, "b1"))
       assert(fs.exists(new Path(s"$dir/batches/b1/_COMMITTED")))
       f.open(dir)
+    }
+  }
+
+  for (f <- families) {
+    test(s"${f.name}: each component write counts its rows above every shuffle") {
+      // a shuffle-map stage re-run after a lost executor applies its metrics
+      // again; a result stage's tasks apply theirs once
+      val plans = collection.mutable.Buffer[String]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          plans.synchronized(plans += qe.executedPlan.toString)
+        def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try SpecJobs.count(spark)(f.write(tmp(s"${f.name}_observe")))
+      finally spark.listenerManager.unregister(listener)
+      val writes = plans.synchronized(plans.toList).filter(_.contains("CollectMetrics"))
+      assert(writes.exists(_.contains("Exchange hashpartitioning")), writes)
+      for (p <- writes) {
+        val lines = p.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).toSeq
+        val lastObserve = lines.lastIndexWhere(_.contains("CollectMetrics"))
+        assert(!lines.take(lastObserve).exists(_.contains("Exchange")), p)
+      }
     }
   }
 }
