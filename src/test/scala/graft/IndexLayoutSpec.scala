@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * append, delete) refuses a root meta without it or at another version
   * with a rebuild hint — before anything lands — a committed batch
   * missing its `batch_meta.json` fails the open, an empty batch
-  * commits nothing and leaves no dir, and every write counts its rows in
-  * its own result stage.
+  * commits nothing and leaves no dir, a delete that finds nothing leaves
+  * no dir, a delete records each found id once however often it is named,
+  * and every write and delete counts its rows in its own result stage.
   */
 class IndexLayoutSpec extends AnyFunSuite {
 
@@ -26,7 +27,7 @@ class IndexLayoutSpec extends AnyFunSuite {
 
   private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def docs(ids: Range): DataFrame = {
+  private def docs(ids: Seq[Int]): DataFrame = {
     import spark.implicits._
     val vocab = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
     ids.map { i =>
@@ -44,11 +45,13 @@ class IndexLayoutSpec extends AnyFunSuite {
       write: String => Unit,
       open: String => Unit,
       appendOf: (String, DataFrame, String) => Boolean,
-      delete: (String, String) => Boolean,
+      deleteOf: (String, DataFrame, String) => Boolean,
       compact: (String, String) => Unit,
       search: String => Long) {
     def append(dir: String, batchId: String): Boolean =
       appendOf(dir, docs(100 until 104), batchId)
+    def delete(dir: String, delId: String): Boolean =
+      deleteOf(dir, docs(0 until 2), delId)
   }
 
   private val families = Seq(
@@ -59,7 +62,7 @@ class IndexLayoutSpec extends AnyFunSuite {
       },
       dir => Lexical.bm25OpenIndex(spark, dir),
       (dir, rows, b) => Lexical.bm25AppendIndex(spark, dir, rows, "id", "text", b),
-      (dir, d) => Lexical.bm25DeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
+      (dir, ids, d) => Lexical.bm25DeleteFromIndex(spark, dir, ids, "id", d),
       (src, dst) => Lexical.bm25CompactIndex(spark, src, dst),
       dir => Lexical.bm25SearchIndex(Lexical.bm25OpenIndex(spark, dir), docs(0 until 3),
         "id", "text", k = 2).count()),
@@ -70,7 +73,7 @@ class IndexLayoutSpec extends AnyFunSuite {
       },
       dir => Ann.annOpenIndex(spark, dir),
       (dir, rows, b) => Ann.annAppendIndex(spark, dir, rows, "id", "vec", b),
-      (dir, d) => Ann.annDeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
+      (dir, ids, d) => Ann.annDeleteFromIndex(spark, dir, ids, "id", d),
       (src, dst) => Ann.annCompactIndex(spark, src, dst),
       dir => Ann.annSearchIndex(Ann.annOpenIndex(spark, dir), docs(0 until 3),
         "id", "vec", k = 2).count()),
@@ -78,7 +81,7 @@ class IndexLayoutSpec extends AnyFunSuite {
       dir => Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(docs(0 until 20), "id", "text"), dir),
       dir => Dedup.minhashOpenIndex(spark, dir),
       (dir, rows, b) => Dedup.minhashAppendIndex(spark, dir, rows, "id", "text", b),
-      (dir, d) => Dedup.minhashDeleteFromIndex(spark, dir, docs(0 until 2), "id", d),
+      (dir, ids, d) => Dedup.minhashDeleteFromIndex(spark, dir, ids, "id", d),
       (src, dst) => Dedup.minhashCompactIndex(spark, src, dst),
       dir => Dedup.minhashSearchIndex(Dedup.minhashOpenIndex(spark, dir), docs(0 until 3),
         "id", "text").count()))
@@ -164,26 +167,80 @@ class IndexLayoutSpec extends AnyFunSuite {
     }
   }
 
+  /** The executed plans of the observed writes `run` starts. */
+  private def observedWrites(run: => Any): List[String] = {
+    val plans = collection.mutable.Buffer[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SpecJobs.count(spark)(run)
+    finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toList).filter(_.contains("CollectMetrics"))
+  }
+
+  /** No `Exchange` sits above a write's last `CollectMetrics`. */
+  private def assertObservedAboveShuffles(writes: Seq[String]): Unit =
+    for (p <- writes) {
+      val lines = p.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).toSeq
+      val lastObserve = lines.lastIndexWhere(_.contains("CollectMetrics"))
+      assert(!lines.take(lastObserve).exists(_.contains("Exchange")), p)
+    }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   for (f <- families) {
     test(s"${f.name}: each component write counts its rows above every shuffle") {
       // a shuffle-map stage re-run after a lost executor applies its metrics
       // again; a result stage's tasks apply theirs once
-      val plans = collection.mutable.Buffer[String]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-          plans.synchronized(plans += qe.executedPlan.toString)
-        def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try SpecJobs.count(spark)(f.write(tmp(s"${f.name}_observe")))
-      finally spark.listenerManager.unregister(listener)
-      val writes = plans.synchronized(plans.toList).filter(_.contains("CollectMetrics"))
+      val writes = observedWrites(f.write(tmp(s"${f.name}_observe")))
       assert(writes.exists(_.contains("Exchange hashpartitioning")), writes)
-      for (p <- writes) {
-        val lines = p.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).toSeq
-        val lastObserve = lines.lastIndexWhere(_.contains("CollectMetrics"))
-        assert(!lines.take(lastObserve).exists(_.contains("Exchange")), p)
+      assertObservedAboveShuffles(writes)
+      val dir = tmp(s"${f.name}_observe_delete")
+      f.write(dir)
+      val deletes = observedWrites(assert(f.delete(dir, "d1")))
+      assert(deletes.nonEmpty)
+      assertObservedAboveShuffles(deletes)
+    }
+
+    test(s"${f.name}: a delete that names an id twice records what naming it once does") {
+      def recorded(ids: DataFrame): Map[String, String] = {
+        val dir = tmp(s"${f.name}_twice")
+        f.write(dir)
+        assert(f.deleteOf(dir, ids, "d1"))
+        // the tombstone ids: one long `id` column in one parquet file
+        val files = fs.listStatus(new Path(s"$dir/deletes/d1/ids")).map(_.getPath.getName)
+        assert(files.count(_.endsWith(".parquet")) === 1, files.toSeq)
+        val persisted = spark.read.parquet(s"$dir/deletes/d1/ids")
+        assert(persisted.schema.map(c => (c.name, c.dataType)) ===
+          graft.operators.Tombstones.idsReadSchema.map(c => (c.name, c.dataType)))
+        assert(persisted.count() === 2)
+        val in = fs.open(new Path(s"$dir/deletes/d1/delete_meta.json"))
+        val node = try mapper.readTree(in) finally in.close()
+        Seq("n_ids", "n_rows", "n_docs", "sum_dl").map(k => k -> node.get(k).asText()).toMap
       }
+      val once = recorded(docs(0 until 2))
+      assert(once("n_ids") === "2")
+      assert(recorded(docs(0 until 2).union(docs(Seq(1, 0, 1)))) === once)
+    }
+
+    test(s"${f.name}: a delete that finds nothing leaves no dir; replays, opens and searches stay healthy") {
+      val dir = tmp(s"${f.name}_absent")
+      f.write(dir)
+      val hits = f.search(dir)
+      assert(hits > 0)
+      for (attempt <- Seq("first", "replay")) {
+        assert(f.deleteOf(dir, docs(900 until 902), "n1"), attempt)
+        assert(!fs.exists(new Path(s"$dir/deletes/n1")), attempt)
+        f.open(dir)
+        assert(f.search(dir) === hits, attempt)
+      }
+      // a delete that finds its ids still lands after it
+      assert(f.delete(dir, "d1"))
+      assert(fs.exists(new Path(s"$dir/deletes/d1/_COMMITTED")))
+      f.open(dir)
     }
   }
 }
