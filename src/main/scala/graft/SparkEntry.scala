@@ -4037,16 +4037,16 @@ object SparkEntry {
     // run ONCE per process (the q_stream_ingest family's convention — the
     // composite mutates its indexes, and re-paying the triad build + five
     // append protocols per bench attempt measures nothing new); the census
-    // VALUES are the evidence: fan-in growth and the +~5 jobs/epoch
+    // VALUES are the evidence: the fan-in and batch-count growth of the
     // append-accumulation curve that maintainIndexes exists to flatten
     "q_stress_ingest" -> ((s, dir) => {
       // collected rows, not a cached frame: the bench unpersists every
       // retained block between attempts, which kills a localCheckpoint
       val (rows, schema) = Fixture.memo("stress_ingest", s, dir) { _ =>
         // both curves side by side (judge r11 #6): the unmanaged run's
-        // fan-in / batch counts / ingest jobs grow per epoch; the managed
-        // run (the q_maintenance_census policy) commits maint_generations
-        // and keeps the ingest-side curve ~flat after compactions fire
+        // fan-in / batch counts grow per epoch; the managed run (the
+        // q_maintenance_census policy) commits maint_generations and keeps
+        // them ~flat after compactions fire
         val plain = Stress.ingestTriadSummary(ld(s, dir, "documents"),
           "doc_id", "text", md5Embedder, epochs = 5, m = 10)
           .withColumn("mode", lit("plain"))
