@@ -356,15 +356,18 @@ object Bench {
       s""""cpus":$cpus,"detail":"$detail","sf":"$sf"}"""
   }
 
-  /** The bench's session: `local[cpus]` with its shuffle, AQE and
-    * small-file settings. The diagnostic mains (Profile, PlanAudit,
-    * ServingProbe) run in it too, so what they show is what the bench times.
+  /** The bench's session: `local[cpus]` with its shuffle, AQE, small-file
+    * and time-zone settings. The correctness dump (Verify) and the
+    * diagnostic mains (Profile, PlanAudit, ServingProbe) run in it too, so
+    * what they check and show is what the bench times.
     */
   def session(cpus: String): SparkSession =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
+      // timestamps render and truncate the same on every box
+      .config("spark.sql.session.timeZone", "UTC")
       // Spark's 128-key default turns every collect_list/typed aggregate with
       // >128 groups per partition into a SORT-based aggregate (TimSort showed
       // up in bm25's score-fold profile); spilling still bounds memory at the
