@@ -329,45 +329,29 @@ object Ann {
       StructField("centroid_vec", ArrayType(DoubleType))))
   }
 
-  /** Open an [[annWriteIndex]] directory: the base cell layout unioned with
-    * every COMMITTED append batch (see [[annAppendIndex]] — batches without
-    * the `_COMMITTED` marker are in-flight or failed appends and are
-    * ignored). Each root is read separately and unioned, so per-directory
-    * `__cell=` partition pruning still holds in every branch; the meta's
-    * row count is topped up with the committed batches' counts so the
-    * serving fast-path gate and the staleness signal see the true size.
-    * `pins` (r15, [[Snapshots]]) restricts the open to exactly the named
-    * committed batches and tombstone dirs — the capture-time view; missing
-    * pinned components REFUSE (see [[Lexical.bm25OpenIndex]]).
+  /** Open an [[annWriteIndex]] directory ([[IndexLayout.open]]): the base
+    * cell layout unioned with every committed append batch, minus every
+    * visible tombstone, with per-directory `__cell=` partition pruning in
+    * every branch; the row estimate counts the committed batches, so the
+    * serving gate and the staleness signal see the true size. Surviving
+    * vectors keep their cell assignments. `pins` restricts the open to a
+    * snapshot's batches and tombstones ([[Snapshots]]).
     */
   def annOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       pins: Option[IndexPins] = None): AnnIndex = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = IndexLayout.readMeta(fs, path, IndexLayout.AnnIvf)
-    val batches = IndexLayout.openBatches(fs, path, pins)
-    val appendedRows = batches.map(_.nRows).sum
-    val hasPq = fs.exists(new org.apache.hadoop.fs.Path(path, "pq_codebook.json"))
-    val raw = (path +: batches.map(_.dir.toString))
-      .map(IndexLayout.readComponent(spark, _, "cells", cellsReadSchema(hasPq)))
-      .reduce(_.unionByName(_))
-    // committed tombstones (r13): exclusion over the merged scan — filters
-    // AFTER the `__cell=` partition pruning, so probe-restricted reads keep
-    // their pruned shape; surviving vectors' cell assignments are untouched
-    val dels = Tombstones.read(spark, path, pins.map(_.deletes))
-    val cells = dels.map(_.exclude(raw, "corpus_id")).getOrElse(raw)
+    val o = IndexLayout.open(spark, path, IndexLayout.AnnIvf, pins)
+    val hasPq = o.fs.exists(new org.apache.hadoop.fs.Path(path, "pq_codebook.json"))
     val idx = AnnIndex(
-      cells,
+      o.component("cells", cellsReadSchema(hasPq), "corpus_id"),
       IndexLayout.readComponent(spark, path, "centroids", centroidsReadSchema),
-      meta.get("n_centroids").asInt(),
-      // tombstoned rows are still SCANNED, so the estimate keeps them
-      Some(meta.get("n_rows").asLong() + appendedRows),
-      appendedRows,
+      o.meta.get("n_centroids").asInt(),
+      Some(o.nRows),
+      o.appendedRows,
       // absent in non-PQ layouts: annSearchIndexPq refuses, everything else
       // is unaffected
       Pq.loadCodebook(spark, s"$path/pq_codebook.json"),
-      deletedRows = dels.map(_.deltas.nRows).getOrElse(0L))
-    idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.AnnIvf, path, batches, dels)))
+      deletedRows = o.deltas.nRows)
+    o.share(idx.tiers)
     idx
   }
 
@@ -423,10 +407,10 @@ object Ann {
 
     protected def members(index: AnnIndex): DataFrame = index.cells
 
-    protected def deltas(index: AnnIndex, doomed: DataFrame): Tombstones.Deltas = {
-      val n = doomed.count()
-      Tombstones.Deltas(nIds = n, nRows = n)
-    }
+    // one cell row per vector
+    protected def doomed(index: AnnIndex, found: DataFrame): IndexLifecycle.Doomed =
+      IndexLifecycle.Doomed(found.select(col("corpus_id").as("id")),
+        w => Tombstones.Deltas(nIds = w.nRows, nRows = w.nRows))
 
     // the source codebook passes through unchanged (retraining would change
     // every code): compacted searches stay row-identical to the source's

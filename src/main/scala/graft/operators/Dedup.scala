@@ -751,51 +751,29 @@ object Dedup extends Logging {
       StructField("sh", ArrayType(StringType))))
   }
 
-  /** Open a [[minhashWriteIndex]] directory: the base layout unioned with
-    * every COMMITTED append batch (see [[minhashAppendIndex]] — batches
-    * without the `_COMMITTED` marker are in-flight or failed appends and
-    * are ignored). Multi-path parquet reads keep per-directory `band=`
-    * partition pruning, so a banded search still scans only the probed
-    * band's files in each layout. `pins` (r15, [[Snapshots]]) restricts
-    * the open to exactly the named committed batches and tombstone dirs —
-    * the capture-time view; missing pinned components REFUSE (see
-    * [[Lexical.bm25OpenIndex]]).
+  /** Open a [[minhashWriteIndex]] directory ([[IndexLayout.open]]): the
+    * base layout unioned with every committed append batch, minus every
+    * visible tombstone, in both the postings and the shingles, with
+    * per-directory `band=` partition pruning in every branch, so a banded
+    * search still scans only the probed band's files in each layout. The
+    * id type comes from the meta (the corpus id type). `pins` restricts
+    * the open to a snapshot's batches and tombstones ([[Snapshots]]).
     */
   def minhashOpenIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       pins: Option[IndexPins] = None): MinHashIndex = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = IndexLayout.readMeta(fs, path, IndexLayout.MinHashLsh)
-    val batches = IndexLayout.openBatches(fs, path, pins)
-    // each root is read separately and unioned (a single multi-root read
-    // trips partition-structure inference); a band filter still prunes
-    // inside EVERY branch's scan — union pushes predicates to each child.
-    // Known schemas (r16): skip the footer/schema-inference job per branch
-    // — see Lexical.postingsReadSchema for the rationale. The id type comes
-    // from the meta (the corpus id type).
-    val idType = org.apache.spark.sql.types.DataType.fromDDL(meta.get("id_type").asText())
-    def layout(sub: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-      (path +: batches.map(_.dir.toString))
-        .map(IndexLayout.readComponent(spark, _, sub, schema)).reduce(_.unionByName(_))
-    // committed tombstones (r13): exclusion over both merged layouts —
-    // filters AFTER the `band=` partition pruning, so banded probes keep
-    // their pruned shape in every union branch
-    val dels = Tombstones.read(spark, path, pins.map(_.deletes))
-    def excl(df: DataFrame): DataFrame =
-      dels.map(_.exclude(df, "id")).getOrElse(df)
+    val o = IndexLayout.open(spark, path, IndexLayout.MinHashLsh, pins)
+    val idType = org.apache.spark.sql.types.DataType.fromDDL(o.meta.get("id_type").asText())
     val idx = MinHashIndex(
-      excl(layout("postings", minhashPostingsReadSchema(idType))),
-      excl(layout("shingles", shinglesReadSchema(idType))),
-      meta.get("shingle_size").asInt(),
-      meta.get("num_bands").asInt(),
-      meta.get("rows_per_band").asInt(),
-      meta.get("hash_family").asText(),
-      // total postings = base meta + every committed batch's own count;
-      // tombstoned rows are still SCANNED: the estimate keeps them
-      Some(meta.get("n_rows").asLong() + batches.map(_.nRows).sum),
-      appendedBatches = batches.size,
-      deletedPostings = dels.map(_.deltas.nRows).getOrElse(0L))
-    idx.tiers.shareAs(Some(IndexLayout.shareKey(fs, IndexLayout.MinHashLsh, path, batches, dels)))
+      o.component("postings", minhashPostingsReadSchema(idType), "id"),
+      o.component("shingles", shinglesReadSchema(idType), "id"),
+      o.meta.get("shingle_size").asInt(),
+      o.meta.get("num_bands").asInt(),
+      o.meta.get("rows_per_band").asInt(),
+      o.meta.get("hash_family").asText(),
+      Some(o.nRows),
+      appendedBatches = o.batches.size,
+      deletedPostings = o.deltas.nRows)
+    o.share(idx.tiers)
     idx
   }
 
@@ -846,10 +824,9 @@ object Dedup extends Logging {
 
     protected def members(index: MinHashIndex): DataFrame = index.shingles
 
-    protected def deltas(index: MinHashIndex, doomed: DataFrame): Tombstones.Deltas = {
-      val n = doomed.count()
-      Tombstones.Deltas(nIds = n, nRows = n * index.numBands)
-    }
+    protected def doomed(index: MinHashIndex, found: DataFrame): IndexLifecycle.Doomed =
+      IndexLifecycle.Doomed(found.select(col("id")),
+        w => Tombstones.Deltas(nIds = w.nRows, nRows = w.nRows * index.numBands))
 
     protected def compactInto(index: MinHashIndex, dst: String): Unit =
       minhashWriteIndex(index, dst)

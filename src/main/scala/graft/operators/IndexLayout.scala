@@ -22,7 +22,12 @@ import org.apache.spark.sql.types.StructType
   * Every component's parquet (postings, stats, cells, centroids, shingles,
   * tombstone ids) is written by [[writeComponent]] and read by
   * [[readComponents]]; every batch is appended by [[IndexLifecycle.append]],
-  * the one caller of [[beginBatch]] and [[commitBatch]].
+  * the one caller of [[beginBatch]] and [[commitBatch]]. Every family's
+  * open reads the layout through [[open]]: the root meta, the committed
+  * batches, the visible tombstones, each component as base ∪ batches −
+  * tombstoned ids, the scan estimate and the shared-mirror key. A
+  * tombstone is counted by its own write: [[IndexLifecycle.delete]]'s
+  * one ids write takes the delete's counts and sums in its observation.
   *
   * Every root meta carries [[FormatVersion]], and [[readMeta]] — the only
   * reader of those files — refuses a meta without it or at another
@@ -72,9 +77,12 @@ object IndexLayout {
   // ------------------------------------------------------------------
 
   /** One persisted component: its rows, its dir name under an index root
-    * or batch dir, and the column its parquet is partitioned by, if any.
+    * or batch dir, the column its parquet is partitioned by, if any, and
+    * the columns it keeps (all when empty): a write may sum a column it
+    * does not persist.
     */
-  final case class Component(name: String, rows: DataFrame, partitionBy: Option[String] = None)
+  final case class Component(name: String, rows: DataFrame, partitionBy: Option[String] = None,
+      keep: Seq[String] = Nil)
 
   /** What [[writeComponent]] took in the write's own job, 0 for no rows. */
   final case class Written(nRows: Long, sum: String => Double)
@@ -92,8 +100,9 @@ object IndexLayout {
     val out = c.partitionBy.fold(c.rows)(p => c.rows.repartition(col(p)))
     val obs = Observation()
     val observed = out.observe(obs, count(lit(1)).as(RowCount), sums: _*)
+    val kept = if (c.keep.isEmpty) observed else observed.select(c.keep.map(col): _*)
     val dir = new Path(parent, c.name)
-    c.partitionBy.fold(observed.write)(observed.write.partitionBy(_))
+    c.partitionBy.fold(kept.write)(kept.write.partitionBy(_))
       .mode("overwrite").parquet(dir.toString)
     // an empty input can leave the metrics map empty: read a missing one as 0
     val got = obs.get.collect { case (k, n: Number) => k -> n.doubleValue }
@@ -190,7 +199,7 @@ object IndexLayout {
     * batch must still be committed — generations are only deleted whole, so
     * a missing one means the pin was violated.
     */
-  private[operators] def openBatches(
+  private def openBatches(
       fs: FileSystem, path: String, pins: Option[IndexPins]): Seq[Batch] = {
     val all = committedBatchIds(fs, path)
     val ids = pins match {
@@ -208,6 +217,66 @@ object IndexLayout {
       require(fs.exists(p), s"committed batch $dir has no $BatchMetaFile; $RebuildHint")
       Batch(dir, readJson(fs, p))
     }
+  }
+
+  /** One open of the index at `path`, as every family reads it: the root
+    * `meta`, the committed `batches` and the visible tombstones, each
+    * restricted to `pins` ([[Snapshots]]) when given. A pinned batch that is
+    * no longer committed, or a pinned tombstone no longer visible, refuses
+    * the open ([[openBatches]], [[Tombstones.read]]): a partial view would
+    * serve what the captured state had removed.
+    */
+  private[operators] def open(spark: SparkSession, path: String, family: Family,
+      pins: Option[IndexPins]): Opened = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = readMeta(fs, path, family)
+    Opened(spark, fs, path, family, meta, openBatches(fs, path, pins),
+      Tombstones.read(spark, path, pins.map(_.deletes)))
+  }
+
+  /** What [[open]] read. `dels` is None when no tombstone is visible. */
+  final case class Opened(spark: SparkSession, fs: FileSystem, path: String, family: Family,
+      meta: JsonNode, batches: Seq[Batch], dels: Option[Tombstones.Deletes]) {
+
+    /** No committed batch and no tombstone: the base layout alone. */
+    def pristine: Boolean = batches.isEmpty && dels.isEmpty
+
+    /** The component `name` of the base layout and of every batch, minus
+      * the tombstoned ids of its `idCol`. Each root is read on its own and
+      * the reads are unioned (one multi-root read trips partition
+      * inference); a partition filter still prunes inside every branch, as
+      * a union pushes predicates to each child, and the exclusion filters
+      * after that pruning. The base is read with `baseSchema` and cut to
+      * `schema`'s columns when the two differ.
+      */
+    def component(name: String, schema: StructType, idCol: String,
+        baseSchema: Option[StructType] = None): DataFrame = {
+      val base = readComponent(spark, path, name, baseSchema.getOrElse(schema))
+      val rows = (baseSchema.fold(base)(_ => base.select(schema.fieldNames.map(col): _*)) +:
+        batches.map(b => readComponent(spark, b.dir.toString, name, schema)))
+        .reduce(_.unionByName(_))
+      dels.fold(rows)(_.exclude(rows, idCol))
+    }
+
+    /** The rows the committed batches added. */
+    def appendedRows: Long = batches.map(_.nRows).sum
+
+    /** The scan estimate: the base's rows plus the batches'. Tombstoned rows
+      * are still scanned (the exclusion filters after the read), so it keeps
+      * them.
+      */
+    def nRows: Long = meta.get("n_rows").asLong() + appendedRows
+
+    /** A meta sum `field` over the base and every batch. */
+    def total(field: String): Double =
+      meta.get(field).asDouble() + batches.map(_.meta.get(field).asDouble()).sum
+
+    /** The summed deltas of the visible tombstones. */
+    def deltas: Tombstones.Deltas = dels.fold(Tombstones.Deltas(0L, 0L))(_.deltas)
+
+    /** Stamp `tiers` with this open's shared-mirror key ([[shareKey]]). */
+    def share(tiers: Resident.Tiers[_, _]): Unit =
+      tiers.shareAs(Some(shareKey(fs, family, path, batches, dels)))
   }
 
   /** The pre-commit checks of [[IndexLifecycle.append]]. A `batchId`
@@ -287,7 +356,7 @@ object IndexLayout {
     * mirror and a new append or delete keys a NEW mirror (pinned views
     * restrict both lists, so they never alias a live mirror).
     */
-  private[operators] def shareKey(fs: FileSystem, family: Family, path: String,
+  private def shareKey(fs: FileSystem, family: Family, path: String,
       batches: Seq[Batch], dels: Option[Tombstones.Deletes]): String =
     s"${family.tag}:${fs.makeQualified(new Path(path))}#" +
       batches.map(_.dir.getName).mkString(",") + "!" +

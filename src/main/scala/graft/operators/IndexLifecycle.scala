@@ -2,14 +2,15 @@ package graft.operators
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** One persisted index family's write lifecycle, declared once beside the
   * family's verbs ([[Lexical.Bm25Lifecycle]], [[Ann.AnnLifecycle]],
   * [[Dedup.MinhashLifecycle]]): how it opens, how a batch becomes its rows,
-  * which frame lists its servable ids, what a delete measures, how a
-  * compaction rewrites an open index, and its ordered maintenance signals.
+  * which frame lists its servable ids, what a delete records of the rows
+  * it finds, how a compaction rewrites an open index, and its ordered
+  * maintenance signals.
   * The protocols over it are written once: append, delete and compaction
   * here; the maintenance pass, audits and takedown fan-out in
   * [[IndexMaintenance]]; snapshot opens and diff in [[Snapshots]]. `name`
@@ -35,15 +36,10 @@ abstract class IndexLifecycle(val name: String, memberId: String,
   /** The frame whose `memberId` lists the servable (not tombstoned) ids. */
   protected def members(index: Index): DataFrame
 
-  /** A delete's rows per found id, from the [[members]] rows of the ids it
-    * names: an `id` column plus whatever [[deltas]] reads.
+  /** How a delete persists and counts the [[members]] rows `found` of the
+    * ids it names, against the open `index`.
     */
-  protected def perId(found: DataFrame): DataFrame = found.select(col(memberId).as("id"))
-
-  /** The exact stat deltas of tombstoning the (pinned) `doomed` rows;
-    * `nIds` 0 means none of the named ids is present.
-    */
-  protected def deltas(index: Index, doomed: DataFrame): Tombstones.Deltas
+  protected def doomed(index: Index, found: DataFrame): IndexLifecycle.Doomed
 
   /** The family's check of a delete's id frame before anything is read. */
   protected def checkIds(ids: DataFrame, idCol: String): Unit = ()
@@ -88,7 +84,10 @@ abstract class IndexLifecycle(val name: String, memberId: String,
   /** Tombstone the ids of `ids`' `idCol` that the index at `path` serves,
     * under `delId` ([[Tombstones]] holds the on-disk protocol). Ids not
     * present (never indexed, or already tombstoned: the open excludes
-    * them) move nothing, and a delete that finds none writes no dir.
+    * them) move nothing, and a delete that finds none writes no dir. The
+    * family's [[doomed]] rows are written and counted in one job: a
+    * left-semi join never repeats a member row, so an id named twice is
+    * found once.
     *
     * @return true if the tombstone was written (or resolved to an empty
     *         no-op), false if `delId` was already committed or applied by a
@@ -101,16 +100,10 @@ abstract class IndexLifecycle(val name: String, memberId: String,
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (Tombstones.alreadyDeleted(fs, path, delId)) return false
     val index = open(spark, path, None)
-    val del = ids.select(col(idCol).cast("long").as("id")).distinct()
+    val del = ids.select(col(idCol).cast("long").as("id"))
     val m = members(index)
-    val doomed = perId(m.join(del, m(memberId) === del("id"), "left_semi"))
-      .localCheckpoint(false) // two consumers below: one compute
-    try {
-      val d = deltas(index, doomed)
-      // none present: a committed no-op with NO dir (an empty parquet dir
-      // has no footers and would corrupt later opens)
-      if (d.nIds > 0) Tombstones.writeDelete(spark, path, delId, doomed, d)
-    } finally doomed.unpersist()
+    Tombstones.writeDelete(spark, path, delId,
+      doomed(index, m.join(del, m(memberId) === del("id"), "left_semi")))
     true
   }
 
@@ -145,6 +138,14 @@ object IndexLifecycle {
     */
   final case class BatchRows(components: Seq[IndexLayout.Component],
       fields: String = "", absorbed: Long => Boolean = _ > 0)
+
+  /** A delete as one family records it: one row per found id, its `id`
+    * column persisted and the rest only summed; the named aggregates `sums`
+    * the ids write takes beside its row count; and the tombstone's exact
+    * stat deltas from what that write took.
+    */
+  final case class Doomed(rows: DataFrame, deltas: IndexLayout.Written => Tombstones.Deltas,
+      sums: Seq[Column] = Nil)
 
   /** One maintenance signal: it fires when `value` is strictly above
     * `threshold`, and then `act` writes the next generation into the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,8 +31,9 @@ import scala.jdk.CollectionConverters._
   *     invisible and overwritten by a retry, and a committed `delId` replay
   *     is an idempotent no-op.
   *
-  * `open()` in each family reads the committed tombstones and EXCLUDES the
-  * ids from the frames it assembles, so every downstream consumer — searches,
+  * The one layout open ([[IndexLayout.open]]) reads the visible tombstones
+  * ([[read]]) and EXCLUDES the ids from every component frame it
+  * assembles, so every downstream consumer — searches,
   * driver-resident mirrors, compactors — sees the post-delete corpus without
   * knowing deletes exist. Exclusion shape is the repo's bounded-driver
   * pattern: under [[maxDriverDeleteIds]] total ids, one small collect per
@@ -42,8 +44,10 @@ import scala.jdk.CollectionConverters._
   *
   * The delete verb itself is written once, [[IndexLifecycle.delete]]:
   * each family's descriptor names the frame that lists its servable ids
-  * and the deltas a delete records (BM25's per-doc `n_docs`/`sum_dl`,
-  * ANN's one row per id, MinHash's `numBands` rows per id).
+  * and what a delete records of the rows it finds (BM25's per-doc
+  * `n_docs`/`sum_dl`, ANN's one row per id, MinHash's `numBands` rows per
+  * id). A tombstone is counted by its own write: [[writeDelete]]'s one
+  * ids write takes the found rows' count and sums in its observation.
   *
   * Compaction applies tombstones PHYSICALLY for free — the compactors
   * rebuild from the opened (already-filtered) frames — and ledgers the
@@ -53,8 +57,8 @@ import scala.jdk.CollectionConverters._
 object Tombstones {
 
   /** The ids parquet written by [[writeDelete]]/[[consolidate]] is a single
-    * long column (r16: the known schema skips the footer/schema-inference
-    * job per read — see Lexical.postingsReadSchema for the rationale).
+    * long column (the known schema skips the footer/schema-inference job
+    * per read — see Lexical.postingsReadSchema for the rationale).
     */
   private[graft] val idsReadSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
@@ -89,7 +93,7 @@ object Tombstones {
   }
 
   /** The deltas one committed tombstone dir recorded. */
-  private def deltasOf(meta: com.fasterxml.jackson.databind.JsonNode): Deltas =
+  private def deltasOf(meta: JsonNode): Deltas =
     Deltas(meta.get("n_ids").asLong(), meta.get("n_rows").asLong(),
       meta.get("n_docs").asDouble(), meta.get("sum_dl").asDouble())
 
@@ -123,6 +127,27 @@ object Tombstones {
   private def deleteMeta(fs: FileSystem, dir: Path) =
     IndexLayout.readJson(fs, new Path(dir, MetaFile))
 
+  /** The delIds a tombstone meta says it absorbed ([[consolidate]]'s
+    * `folds`), and each one's commit instant (`folded_ats`); both empty
+    * for a plain delete.
+    */
+  private def foldsOf(meta: JsonNode): Seq[String] =
+    Option(meta.get("folds")).toSeq.flatMap(n => (0 until n.size()).map(n.get(_).asText()))
+  private def foldedAtsOf(meta: JsonNode): Map[String, Long] =
+    Option(meta.get("folded_ats")).toSeq
+      .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue.asLong())).toMap
+
+  /** Commit the fully written tombstone `dir`: its `delete_meta.json` (the
+    * deltas, the wall time the takedown was applied — the audit surface's
+    * WHEN — then any `fields`) goes in before the marker, the single
+    * visibility event.
+    */
+  private def commit(fs: FileSystem, dir: Path, d: Deltas, fields: String = ""): Unit = {
+    IndexLayout.writeJson(fs, new Path(dir, MetaFile),
+      s"""{${d.json}, "at": ${System.currentTimeMillis()}$fields}""", overwrite = false)
+    fs.create(new Path(dir, Marker), false).close()
+  }
+
   /** Committed tombstone directories under `path/deletes`, name-sorted —
     * the same visibility rule as the append batches: no `_COMMITTED`, not
     * there.
@@ -142,18 +167,14 @@ object Tombstones {
     * stat deltas double-count. Transitively complete — a fold of a fold
     * carries the inner names forward. A dir's OWN name is dropped from its
     * absorbed set: self-absorption is structurally impossible (defense in
-    * depth behind [[consolidate]]'s never-reuse-a-name rule — the r14 bug
-    * reused a swept fold's name whose string survived in the transitive
-    * ledger, and the new fold filtered ITSELF out of [[visibleDeleteDirs]],
-    * silently resurrecting every taken-down doc).
+    * depth behind [[consolidate]]'s never-reuse-a-name rule — a fold that
+    * reused a swept fold's name, whose string survives in the transitive
+    * ledger, would filter ITSELF out of [[visibleDeleteDirs]] and silently
+    * resurrect every taken-down doc).
     */
   private[operators] def foldedDeletes(fs: FileSystem, path: String): Set[String] = {
-    committedDeleteDirs(fs, path).flatMap { d =>
-      val node = deleteMeta(fs, d).get("folds")
-      if (node == null) Nil
-      else (0 until node.size()).map(node.get(_).asText())
-        .filterNot(_ == d.getName)
-    }.toSet
+    committedDeleteDirs(fs, path)
+      .flatMap(d => foldsOf(deleteMeta(fs, d)).filterNot(_ == d.getName)).toSet
   }
 
   /** The delete dirs a reader may SUM: committed, minus those a committed
@@ -175,7 +196,7 @@ object Tombstones {
     visibleDeleteDirs(fs, path).map(_.getName)
 
   /** The tombstone-dir names a reader at wall time `atMillis` would have
-    * summed (r15, the [[Snapshots.asOf]] resolver): committed dirs whose
+    * summed (the [[Snapshots.asOf]] resolver): committed dirs whose
     * marker mtime is ≤ the timestamp — each marker is the dir's single
     * commit point and is never rewritten, so its mtime IS the visibility
     * instant (the `generationAsOf` argument) — minus dirs absorbed by an
@@ -202,16 +223,8 @@ object Tombstones {
         foldedAts: Map[String, Long])
     val ds = committedDeleteDirs(fs, path).map { d =>
       val node = deleteMeta(fs, d)
-      val f = node.get("folds")
-      val folds =
-        if (f == null) Seq.empty[String]
-        else (0 until f.size()).map(f.get(_).asText()).filterNot(_ == d.getName)
-      val fa = node.get("folded_ats")
-      val ats =
-        if (fa == null) Map.empty[String, Long]
-        else fa.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
       D(d.getName, fs.getFileStatus(new Path(d, Marker)).getModificationTime,
-        folds, ats)
+        foldsOf(node).filterNot(_ == d.getName), foldedAtsOf(node))
     }
     val byName = ds.map(d => d.name -> d).toMap
     val include = Seq.newBuilder[String]
@@ -282,15 +295,17 @@ object Tombstones {
       appliedDeletes(fs, path).contains(delId) ||
       foldedDeletes(fs, path).contains(delId)
 
-  /** Land one tombstone: `foundIds` (an `id` column — the ids the family
-    * resolved as actually present) plus the family's exact stat deltas,
-    * committed by one atomic marker create. The caller
-    * ([[IndexLifecycle.delete]]) has already passed [[alreadyDeleted]] and
-    * knows `foundIds` is non-empty.
+  /** Land one tombstone: the family's `doomed` rows (one per id the
+    * family resolved as actually present), written as the `id` column of
+    * one parquet file by one write that also takes the rows' count and
+    * sums, then the exact stat deltas from them, committed by one atomic
+    * marker create. A delete that found no row writes no meta, no marker
+    * and no dir (an empty parquet dir has no footers and would corrupt
+    * later opens). The caller ([[IndexLifecycle.delete]]) has already
+    * passed [[alreadyDeleted]].
     */
-  private[operators] def writeDelete(
-      spark: SparkSession, path: String, delId: String,
-      foundIds: DataFrame, d: Deltas): Unit = {
+  private[operators] def writeDelete(spark: SparkSession, path: String, delId: String,
+      doomed: IndexLifecycle.Doomed): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = dirOf(path, delId)
     // uncommitted leftover from a failed attempt: invisible to open(), safe
@@ -298,15 +313,11 @@ object Tombstones {
     if (fs.exists(dir)) fs.delete(dir, true)
     // tombstone sets are small relative to the index (a takedown batch, not
     // a corpus): one file keeps later opens' exclusion read to one footer
-    IndexLayout.writeComponent(dir.toString, IndexLayout.Component("ids",
-      foundIds.select(col("id").cast("long").as("id")).coalesce(1)))
-    IndexLayout.writeJson(fs, new Path(dir, MetaFile),
-      s"""{${d.json}, """ +
-        // wall timestamp for the audit surface (the maintenance-log move):
-        // WHEN was this takedown applied — compliance wants the answer
-        s""""at": ${System.currentTimeMillis()}}""",
-      overwrite = false)
-    fs.create(new Path(dir, Marker), false).close()
+    val written = IndexLayout.writeComponent(dir.toString, IndexLayout.Component("ids",
+      doomed.rows.withColumn("id", col("id").cast("long")).coalesce(1), keep = Seq("id")),
+      doomed.sums: _*)
+    if (written.nRows == 0) fs.delete(dir, true)
+    else commit(fs, dir, doomed.deltas(written))
   }
 
   /** The tombstone audit surface of one index as a DataFrame — one row per
@@ -336,16 +347,13 @@ object Tombstones {
     spark.createDataFrame(rows, schema)
   }
 
-  /** Read `path`'s committed tombstones into one [[Deletes]] view; None when
-    * the index has none (the overwhelmingly common case — zero overhead:
+  /** Read `path`'s visible tombstones into one [[Deletes]] view, for
+    * [[IndexLayout.open]]; None when the index has none (the common case:
     * one `exists` on the deletes dir). Under [[maxDriverDeleteIds]] total
     * ids this pays ONE small job per open to collect the exclusion set
     * (footer-bounded single-file reads); over it the ids stay distributed.
-    */
-  private[operators] def read(spark: SparkSession, path: String): Option[Deletes] =
-    read(spark, path, None)
-
-  /** [[read]] restricted to a PINNED name set (r15, [[Snapshots]]): a
+    *
+    * `only` restricts the read to a PINNED name set ([[Snapshots]]): a
     * snapshot open must exclude exactly the tombstones that were visible at
     * capture — no more (post-capture takedowns belong to the live view,
     * not the frozen one) and no less. Every pinned name must still be
@@ -376,7 +384,7 @@ object Tombstones {
     val total = dirs.map(d => deltasOf(deleteMeta(fs, d))).foldLeft(Deltas(0L, 0L))(_ + _)
     // ONE multi-path read with the known schema (the Denylist.read idiom):
     // the ids are a single flat long column, so the partition-inference
-    // caveat behind the index openers' per-root folds does not apply, and a
+    // caveat behind the layout open's per-root reads does not apply, and a
     // per-dir read + union fold would cost N footer round-trips and an
     // N-node plan per open
     val idsDf = IndexLayout.readComponents(spark, dirs.map(_.toString), "ids", idsReadSchema)
@@ -384,26 +392,26 @@ object Tombstones {
       if (total.nIds <= maxDriverDeleteIds(spark))
         Left(idsDf.collect().map(_.getLong(0)))
       else
-        // EAGERLY pinned (the Denylist.exclude idiom, advisor r13 / judge
-        // r14 #2): this frame is planned from a dir listing, and a
-        // concurrent consolidate() deletes its source dirs after committing
-        // the fold — an over-bound open whose lazy anti-join executed after
-        // the sweep hit FileNotFoundException mid-job. The checkpoint
-        // narrows the race window from "whole open lifetime" to the
-        // listing-to-materialize instant; a loss there still fails CLEANLY
-        // before any result is served, and a re-open re-lists and sees the
-        // fold. (Never ignoreMissingFiles: silently under-reading an
-        // exclusion set would serve taken-down docs.) Under-bound opens —
-        // the common case — already collect eagerly above.
+        // EAGERLY pinned (the Denylist.exclude idiom): this frame is planned
+        // from a dir listing, and a concurrent consolidate() deletes its
+        // source dirs after committing the fold — an over-bound open whose
+        // lazy anti-join ran after the sweep would hit FileNotFoundException
+        // mid-job. The checkpoint narrows the race window from "whole open
+        // lifetime" to the listing-to-materialize instant; a loss there
+        // still fails CLEANLY before any result is served, and a re-open
+        // re-lists and sees the fold. (Never ignoreMissingFiles: silently
+        // under-reading an exclusion set would serve taken-down docs.)
+        // Under-bound opens — the common case — already collect eagerly
+        // above.
         Right(idsDf.localCheckpoint(true))
     Some(Deletes(dirs.map(_.getName), total, exclusion))
   }
 
   /** Fold every visible tombstone of `path` into ONE consolidated delete
-    * dir — the dir-count hygiene verb (judge r13 #1): `deleteFraction`
-    * compacts on deleted-row FRACTION, so a takedown trickle on a large
-    * index (fraction ≪ threshold forever) accumulated dirs without bound,
-    * and every `open()` of every family re-paid N footer+meta reads. Wired
+    * dir — the dir-count hygiene verb: `deleteFraction` compacts on
+    * deleted-row FRACTION, so a takedown trickle on a large index
+    * (fraction ≪ threshold forever) would accumulate dirs without bound,
+    * and every `open()` of every family would re-pay N footer+meta reads. Wired
     * to [[IndexMaintenance.Policy.maxDeleteDirs]]; callable directly on the
     * same cadence as [[graft.streaming.Denylist.compact]].
     *
@@ -434,7 +442,7 @@ object Tombstones {
     * absorbed set, so a fold can never absorb itself.
     * Returns the number of dirs folded (0 when ≤ 1 is visible).
     *
-    * Snapshot pins (r15): dirs named by a live [[Snapshots]] pin of this
+    * Snapshot pins: dirs named by a live [[Snapshots]] pin of this
     * generation are PRESERVED — never folded, never swept — so a pinned
     * open can keep reconstructing its exact capture-time exclusion set
     * (a fold's distinct-union destroys the per-dir partition a pin needs).
@@ -459,7 +467,7 @@ object Tombstones {
     if (visible.size <= 1) return 0
     var total = Deltas(0L, 0L)
     val transitive = Seq.newBuilder[String]
-    // each absorbed name's COMMIT INSTANT rides along (r15): the sweep
+    // each absorbed name's COMMIT INSTANT rides along: the sweep
     // destroys the marker whose mtime is the only record of when that
     // tombstone became visible, and [[deleteNamesAsOf]] needs it to decide
     // whether a historical window intersects this fold — directly-absorbed
@@ -472,20 +480,16 @@ object Tombstones {
       transitive += d.getName
       foldedAts(d.getName) =
         fs.getFileStatus(new Path(d, Marker)).getModificationTime
-      val f = node.get("folds")
-      if (f != null) (0 until f.size()).foreach(i => transitive += f.get(i).asText())
-      val fa = node.get("folded_ats")
-      if (fa != null) fa.properties().asScala.foreach { e =>
-        foldedAts.getOrElseUpdate(e.getKey, e.getValue.asLong()); ()
-      }
+      transitive ++= foldsOf(node)
+      foldedAtsOf(node).foreach { case (n, t) => foldedAts.getOrElseUpdate(n, t) }
     }
     // Fold names are NEVER reused — a ledgered name is reserved forever.
-    // The r14 bug probed for the first fold-k with no on-disk marker, but
+    // Probing for the first fold-k with no on-disk marker is not enough:
     // swept folds free their dirs while their names live on in the
-    // transitive `folds` ledgers: the third consolidation on a takedown
-    // trickle reused fold-0, whose carried-forward ledger then contained
-    // the new fold's OWN name — it absorbed itself, visibleDeleteDirs went
-    // empty, and every taken-down doc served again. Pick k strictly past
+    // transitive `folds` ledgers, so the third consolidation on a takedown
+    // trickle would reuse fold-0, whose carried-forward ledger contains
+    // the new fold's OWN name — it would absorb itself, visibleDeleteDirs
+    // would go empty, and every taken-down doc would serve again. Pick k strictly past
     // every fold index ANY ledger knows: committed dirs, fold names
     // absorbed by committed folds, names applied by compactions, and the
     // transitive array this fold is about to write.
@@ -499,14 +503,11 @@ object Tombstones {
     IndexLayout.writeComponent(dir.toString, IndexLayout.Component("ids",
       IndexLayout.readComponents(spark, visible.map(_.toString), "ids", idsReadSchema)
         .distinct().coalesce(1)))
-    IndexLayout.writeJson(fs, new Path(dir, MetaFile),
-      s"""{${total.json}, "at": ${System.currentTimeMillis()}, """ +
-        transitive.result().sorted.map(id => "\"" + id + "\"")
-          .mkString(""""folds": [""", ", ", "], ") +
+    commit(fs, dir, total,
+      transitive.result().sorted.map(id => "\"" + id + "\"")
+        .mkString(""", "folds": [""", ", ", "], ") +
         foldedAts.toSeq.sortBy(_._1).map { case (n, t) => s""""$n": $t""" }
-          .mkString(""""folded_ats": {""", ", ", "}}"),
-      overwrite = false)
-    fs.create(new Path(dir, Marker), false).close()
+          .mkString(""""folded_ats": {""", ", ", "}"))
     // sweep AFTER the commit: a crash leaves absorbed-but-present dirs that
     // readers skip via the folds array and the next call deletes
     visible.foreach(d => fs.delete(d, true))

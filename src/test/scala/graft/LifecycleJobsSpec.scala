@@ -115,9 +115,9 @@ class LifecycleJobsSpec extends AnyFunSuite {
       "minhash found" -> jobs(Dedup.minhashDeleteFromIndex(spark, m, found, "id", "d0")),
       "minhash absent" -> jobs(Dedup.minhashDeleteFromIndex(spark, m, absent, "id", "d1")))
     assert(counts == Map(
-      "bm25 found" -> 6L, "bm25 absent" -> 5L,
-      "ann found" -> 5L, "ann absent" -> 5L,
-      "minhash found" -> 5L, "minhash absent" -> 5L), s"jobs were $counts")
+      "bm25 found" -> 3L, "bm25 absent" -> 4L,
+      "ann found" -> 2L, "ann absent" -> 3L,
+      "minhash found" -> 2L, "minhash absent" -> 3L), s"jobs were $counts")
   }
 
   test("compactions: jobs of one compaction per family over a tombstoned generation") {
