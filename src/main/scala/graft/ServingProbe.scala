@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Regime
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: per-job anatomy of one steady-state search through each
@@ -115,8 +116,7 @@ object ServingProbe {
       // the pinned index with the residency bound at 0 serves from the
       // partitioned tier: one job per search, the first search (which deals
       // and caches the tier) included
-      spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
-      try {
+      Regime.forcing(spark, Regime.DriverResidentRows, 0L) {
         val bm25 = SparkEntry.steadyBm25Index(spark, sfDir)
         bm25.postings.persist(); bm25.postings.count()
         bm25.statsRow // once per open, as a serving session's prewarm reads it
@@ -127,7 +127,7 @@ object ServingProbe {
         probe("bm25_partitioned", () => 0L,
           () => graft.operators.Lexical.bm25SearchIndex(bm25, q1, "doc_id", "text", k = 5).count())
         bm25.postings.unpersist()
-      } finally spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+      }
     }
     if (which("ann") || which("int8")) {
       val ann0 = SparkEntry.steadyAnnIndex(spark, sfDir)

@@ -55,7 +55,7 @@ object SparkEntry {
     * when the calling thread is not mid-analysis). Used by the
     * parity/diff queries whose `a.exceptAll(b) ∪ b.exceptAll(a)` shape
     * would otherwise evaluate every search subtree TWICE inside one huge
-    * union plan (verdict r15 #3): pinning each search once makes the diff
+    * union plan: pinning each search once makes the diff
     * legs read the materialized rows.
     */
   private def pinConcurrently(fns: (() => DataFrame)*): Seq[DataFrame] = {
@@ -227,7 +227,7 @@ object SparkEntry {
       Lexical.bm25OpenIndex(s, d)
     }
 
-  /** Tombstoned sibling of [[steadyBm25Index]] (r13): the full-corpus index
+  /** Tombstoned sibling of [[steadyBm25Index]]: the full-corpus index
     * with every `doc_id % 10 == 3` document REMOVED via
     * [[Lexical.bm25DeleteFromIndex]]. `q_bm25_index_delete` checks its
     * searches against an INDEPENDENT DuckDB BM25 recomputation over the
@@ -248,14 +248,13 @@ object SparkEntry {
     Fixture.memo("bm25_del_open", s, dir)(_ =>
       Lexical.bm25OpenIndex(s, steadyBm25DeletedDir(s, dir)))
 
-  /** Consolidation fixture (r14, judge r13 #1; r15: THREE fold cycles —
-    * judge r14 #1): the full-corpus BM25 index with the SAME takedown set
-    * as [[steadyBm25DeletedDir]] (`doc_id % 10 == 3`) applied as a
-    * takedown TRICKLE of six tombstones (`doc_id % 60 ∈ {3, 13, 23, 33,
-    * 43, 53}` under delIds t0..t5) interleaved with three
+  /** Consolidation fixture (THREE fold cycles): the full-corpus BM25
+    * index with the SAME takedown set as [[steadyBm25DeletedDir]]
+    * (`doc_id % 10 == 3`) applied as a takedown TRICKLE of six tombstones
+    * (`doc_id % 60 ∈ {3, 13, 23, 33, 43, 53}` under delIds t0..t5) interleaved with three
     * [[graft.operators.Tombstones.consolidate]] calls — two deletes per
     * fold cycle. The THIRD consolidation is exactly the window where the
-    * r14 fold-name-reuse bug silently resurrected every taken-down doc
+    * earlier fold-name-reuse bug silently resurrected every taken-down doc
     * (the swept fold-0's name survived in the transitive ledger and got
     * reused, so the new fold absorbed itself): with the fix the dirs
     * advance fold-0 → fold-1 → fold-2 and the exclusion set survives.
@@ -281,8 +280,8 @@ object SparkEntry {
       d
     }
 
-  /** The ANN family's fold-cycle fixture (judge r14 #6): consolidation is
-    * family-shared code, but both r14 fold oracles were BM25-rooted — this
+  /** The ANN family's fold-cycle fixture: consolidation is
+    * family-shared code, but both earlier fold oracles were BM25-rooted — this
     * IVF index takes the same `vec_id % 10 == 3` takedown as
     * [[steadyAnnDeletedPair]] as a trickle (`% 30 ∈ {3, 13}` then `{23}`)
     * across TWO consolidate calls (fold-0, then fold-1 absorbing fold-0
@@ -305,7 +304,7 @@ object SparkEntry {
       d
     }
 
-  /** Snapshot fixture (r15): a managed BM25 root whose capture-time state
+  /** Snapshot fixture: a managed BM25 root whose capture-time state
     * is EXACTLY the tombstone oracle's corpus (full minus `doc_id % 10 ==
     * 3`) assembled the composed way — base `% 7 != 3`, held-out slice as
     * committed append batch `b0`, takedown tombstone — then snapshotted as
@@ -343,7 +342,7 @@ object SparkEntry {
       root
     }
 
-  /** The snapshot lifecycle's observable-census trace (r15) — every number
+  /** The snapshot lifecycle's observable-census trace — every number
     * structural (dir/generation/fold counts), so one VALUES oracle covers
     * both scales. Runs on its OWN tiny root because the tail DROPS the
     * snapshot to prove both collectors reclaim the freed components —
@@ -395,7 +394,7 @@ object SparkEntry {
       trace.result()
     }
 
-  /** Time-travel fixture (r15): a managed BM25 root over the FULL corpus
+  /** Time-travel fixture: a managed BM25 root over the FULL corpus
     * with two takedowns and two wall timestamps captured between the
     * commits — t0 after the generation commit (nothing deleted yet), t1
     * after the `% 10 == 3` takedown (before the `% 10 == 7` one). NO
@@ -421,7 +420,7 @@ object SparkEntry {
       (root, t0, t1)
     }
 
-  /** Snapshot-compliance fixture (r15): a managed BM25 root whose
+  /** Snapshot-compliance fixture: a managed BM25 root whose
     * snapshot `pre` was captured BEFORE the `doc_id % 10 == 3` takedown
     * (tombstone + denylist) and whose snapshot `post` was captured after.
     * The current generation is compliant — `auditRemovals` is clean — but
@@ -442,7 +441,7 @@ object SparkEntry {
       root
     }
 
-  /** Composed-lifecycle sibling (r14, judge r13 #6): built on `doc_id % 7
+  /** Composed-lifecycle sibling: built on `doc_id % 7
     * != 3`, APPENDED with the held-out slice (so df is recomputed in-plan
     * over base+batch at search time), then `doc_id % 10 == 3` tombstoned.
     * `q_bm25_filtered_deleted` searches it through a FILTERED view — the
@@ -464,7 +463,7 @@ object SparkEntry {
       Lexical.bm25OpenIndex(s, d)
     }
 
-  /** Tombstoned sibling of [[steadyMinhashIndex]] (r13): full-corpus index
+  /** Tombstoned sibling of [[steadyMinhashIndex]]: full-corpus index
     * minus the `doc_id % 10 == 3` takedown set. `q_minhash_index_delete`
     * probes it with a batch containing copies of BOTH deleted and surviving
     * docs, against the DuckDB banding+jaccard oracle restricted to the
@@ -501,7 +500,7 @@ object SparkEntry {
       (Ann.annOpenIndex(s, subApp), Ann.annOpenIndex(s, subRef))
     }
 
-  /** Tombstoned sibling of [[steadyAnnIndex]] plus its reference (r13): the
+  /** Tombstoned sibling of [[steadyAnnIndex]] plus its reference: the
     * live index is the FULL corpus with the `vec_id % 10 == 3` slice removed
     * via [[graft.operators.Ann.annDeleteFromIndex]]; the reference assigns
     * only the SURVIVORS to the SAME centroids in one shot (the
@@ -789,7 +788,7 @@ object SparkEntry {
         Ann.annOpenIndex(s, currentPath(s, annRoot)))
     }
 
-  /** The STREAMING capstone, oracle-gated (judge r12 #2): live
+  /** The STREAMING capstone, oracle-gated: live
     * [[graft.operators.ServingSession]]s serving THROUGH the
     * self-maintaining streaming loop
     * ([[graft.streaming.StreamOps.streamingIngestPipelineManaged]]).
@@ -839,7 +838,7 @@ object SparkEntry {
       }
       // always-fire policies: every epoch's single append trips both
       // cadence signals, so the generation trace is deterministic (1,2,3).
-      // pruneKeepLatest = 2 (r13): the loop also prunes superseded
+      // pruneKeepLatest = 2: the loop also prunes superseded
       // generations as it goes — the capstone proves ingest + maintenance
       // + PRUNE + serving compose live (the sessions re-resolve each epoch,
       // so the keep-2 margin covers them; a prune that raced a session
@@ -882,7 +881,7 @@ object SparkEntry {
         Dedup.minhashOpenIndex(s, currentPath(s, mhRoot)))
     }
 
-  /** The streaming-TAKEDOWN capstone fixture (r13):
+  /** The streaming-TAKEDOWN capstone fixture:
     * minhash + bm25 generation roots on the full documents corpus, one
     * takedown epoch streaming every `doc_id % 10 == 3` through
     * [[graft.streaming.StreamOps.streamingTakedownPipelineManaged]] with an
@@ -972,7 +971,7 @@ object SparkEntry {
         survivors.result().sorted, denylist, mhRoot)
     }
 
-  /** Multi-tenant serving fixture (r14, judge r13 #2's census leg): one
+  /** Multi-tenant serving fixture: one
     * live BM25 [[graft.operators.ServingSession]] serving TWO tenants
     * through keyed [[graft.operators.ServingSession.derived]] views,
     * interleaved, across a maintenance-committed generation swap. Legs:
@@ -982,7 +981,7 @@ object SparkEntry {
     * current generation (0 = the cached view serves exactly the right
     * corpus slice); 'derives' pins `deriveCount` at 4 — two tenants × two
     * generations, despite eight interleaved calls (the keyed cache does
-    * not thrash under tenant alternation, which is the r13 single-slot
+    * not thrash under tenant alternation, which is the single-slot
     * bug this gates against).
     */
   private final case class TenantViewsFixture(legs: Seq[(String, Long, Long)])
@@ -1029,7 +1028,7 @@ object SparkEntry {
       TenantViewsFixture(legs.result())
     }
 
-  /** Replica-FOLLOWER fixture (r14, judge r13 #3 — the continuous half of
+  /** Replica-FOLLOWER fixture (the continuous half of
     * `q_replica_serving`'s one-shot copy): a managed
     * minhash source root advances through three committed generations
     * (base build, two append+compact passes) while an
@@ -1068,7 +1067,7 @@ object SparkEntry {
       ReplicaFollowFixture(src, dst, trace.result())
     }
 
-  /** Content-based takedown fixture (r13): dedicated
+  /** Content-based takedown fixture: dedicated
     * minhash + bm25 generation roots over the full documents corpus; the
     * "notice" is copies of every `doc_id % 10 == 6` document under offset
     * ids (content known, corpus ids not);
@@ -1193,7 +1192,7 @@ object SparkEntry {
     t
   }
 
-  /** Removal-audit fixture (r15): four generation roots sharing ONE
+  /** Removal-audit fixture: four generation roots sharing ONE
     * takedown promise — ids `% 10 == 3` denylisted at the minhash root.
     * MinHash and BM25 are tombstoned (compliant); one ANN root is
     * deliberately NOT tombstoned (the violation
@@ -1222,7 +1221,7 @@ object SparkEntry {
       (mh, bm, av, ac)
     }
 
-  /** As-of fixture (r15): three committed minhash generations with wall
+  /** As-of fixture: three committed minhash generations with wall
     * timestamps captured between the commits, then pruned to latest-2 —
     * so `q_gen_asof` can pin each timestamp to the exact generation that
     * was serving then (or the honest miss for the pruned window)
@@ -1802,7 +1801,7 @@ object SparkEntry {
     // DuckDB oracle recomputes every output from the closed form — any
     // decode/resample/feature bug breaks the hash.
     "q_image_decode" -> ((s, dir) => {
-      // LIMITED spread (r15): javax.imageio's decode path takes a shared
+      // LIMITED spread: javax.imageio's decode path takes a shared
       // provider-registry lock per call, so 32-way parallel decode measured
       // SLOWER than the single scan task (1.94s vs 1.09s on the audio twin)
       // — but the lock only guards reader LOOKUP, not the PNG decode
@@ -1839,7 +1838,7 @@ object SparkEntry {
     // from the closed form — any header/endianness/sample-decode bug breaks
     // the hash.
     "q_audio_decode" -> ((s, dir) => {
-      // NOT spread (r15): unlike imageio (whose registry lock guards only
+      // NOT spread: unlike imageio (whose registry lock guards only
       // reader LOOKUP — see q_image_decode's bounded split), javax.sound's
       // getAudioInputStream serializes effectively the whole decode: even a
       // 4-way split measured 1.9s vs 1.0s single-task
@@ -1916,7 +1915,7 @@ object SparkEntry {
     }),
 
     // Streaming quality gate's unknownKeys policies as DRIVER evidence
-    // (judge r8 #7 — the "keep" leg was spec-only): thresholds are fit
+    // (the "keep" leg was spec-only): thresholds are fit
     // OFFLINE on every source EXCEPT src0 (per-source cutoff = min quality
     // of the exact top-25% — min is order-invariant, so the cutoff is
     // bit-reproducible), then src0 plays the novel source appearing
@@ -1981,7 +1980,7 @@ object SparkEntry {
       a.exceptAll(b).unionByName(b.exceptAll(a))
     }),
 
-    // Policy-driven maintenance parity (judge r10 #1): after four ingest
+    // Policy-driven maintenance parity: after four ingest
     // epochs with compaction firing mid-run on two cadences (see
     // steadyMaintenance), all three maintained indexes must serve
     // IDENTICALLY to from-scratch rebuilds over (corpus ∪ all survivors):
@@ -2003,8 +2002,8 @@ object SparkEntry {
           "text", "__vec")
         .select("doc_id", "__vec")
       // ONE search pass per (index, family), pinned and reused across both
-      // exceptAll sides, all six built concurrently (r16, verdict r15 #4 —
-      // the sequential small-job chain was the query's wall)
+      // exceptAll sides, all six built concurrently (the sequential
+      // small-job chain was the query's wall)
       val Seq(maintBm, refBm, maintMh, refMh, maintAn, refAn) = pinConcurrently(
         () => Lexical.bm25SearchIndex(f.maintBm, q, "qid", "text", k = 5),
         () => Lexical.bm25SearchIndex(f.refBm, q, "qid", "text", k = 5),
@@ -2036,12 +2035,12 @@ object SparkEntry {
         .orderBy(col("epoch"), col("idx"))
     }),
 
-    // The PERSISTED maintenance history (judge r11 #7): the same decision
+    // The PERSISTED maintenance history: the same decision
     // trace as q_maintenance_census, read back from the three roots'
     // append-only maintenance_log parquet (atomic-marker passes) through
     // the SQL-auditable IndexMaintenance.eventsDf — four passes per root,
     // pass number + action + generation transition all deterministic
-    // given the policy. r13 adds the wall columns (judge r12 #6) as
+    // given the policy. The wall columns are
     // BOUNDS-checked booleans — `at` is a real epoch-millis timestamp
     // (post-2020, pre-2100) and `duration_ms` non-negative and sane — so
     // the hash gates their presence and plausibility while the exact
@@ -2067,7 +2066,7 @@ object SparkEntry {
            |ORDER BY pass, idx""".stripMargin)
     }),
 
-    // Drift → degradation → refit recovery (judge r10 #2): after two
+    // Drift → degradation → refit recovery: after two
     // distribution-shifted frozen-centroid appends push appendStaleness to
     // 2/3, the maintenance refit must RECOVER recall on the drifted
     // workload. Emits one row per violated link of the chain
@@ -2095,17 +2094,16 @@ object SparkEntry {
         .orderBy(col("check"))
     }),
 
-    // Driver-resident serving parity (judge r10 #3): pin per-process copies
+    // Driver-resident serving parity: pin per-process copies
     // of the three steady indexes (the serving configuration), search each
     // through the RESIDENT tier and through the distributed plan (residency
     // bound forced to 0), and emit the symmetric differences — bit-for-bit
     // score parity of the zero-job driver mirrors, as an oracle-gated
     // driver leg on real corpus data (ResidentSpec covers synthetic).
     "q_resident_parity" -> ((s, dir) => {
-      import graft.operators.Resident
       val (bm, ann, mh, pq) = steadyPinnedIndexes(s, dir)
       // the forced-PLAN legs search the parquet-backed steady indexes,
-      // which nothing pins, not the coalesce(1)-pinned copies (r15): with
+      // which nothing pins, not the coalesce(1)-pinned copies: with
       // the resident bound at 0 a pinned copy would serve from its
       // partitioned tier instead of the plan. Same index directories, so
       // parity semantics are unchanged — and the plan legs verify the
@@ -2118,10 +2116,7 @@ object SparkEntry {
       val probe = ld(s, dir, "documents").filter(pmod(col("doc_id"), lit(10)) === 0)
       val qv = ld(s, dir, "embeddings").filter(col("vec_id") < 25)
         .select("vec_id", "embedding").localCheckpoint(true)
-      def withPlan[A](f: => A): A = {
-        s.conf.set(Resident.DriverResidentRowsKey, "0")
-        try f finally s.conf.unset(Resident.DriverResidentRowsKey)
-      }
+      def withPlan[A](f: => A): A = Regime.forcing(s, Regime.DriverResidentRows, 0L)(f)
       def diff(a: DataFrame, b: DataFrame) =
         a.exceptAll(b).unionByName(b.exceptAll(a))
       def norm(d: DataFrame, leg: String, a: String, b: String, v: String) =
@@ -2130,7 +2125,7 @@ object SparkEntry {
       val bmRes = Lexical.bm25SearchIndex(bm, q, "qid", "text", k = 5)
       val mhRes = Dedup.minhashSearchIndex(mh, probe, "doc_id", "text", 0.8)
       val anRes = Ann.annSearchIndexInt8(ann, qv, "vec_id", "embedding", k = 5, nProbe = 8)
-      // r12: the fourth family — the IVF_PQ index's resident ADC+rerank
+      // the fourth family — the IVF_PQ index's resident ADC+rerank
       // tier vs its distributed plan
       val pqRes = Ann.annSearchIndexPq(pq, qv, "vec_id", "embedding", k = 5, nProbe = 8)
       // the four independent plan-leg searches run CONCURRENTLY (guide
@@ -2156,7 +2151,7 @@ object SparkEntry {
               k = 5, nProbe = 8).localCheckpoint(true)),
             Future(Ann.annSearchIndexPq(pqP, qv, "vec_id", "embedding",
               k = 5, nProbe = 8).localCheckpoint(true)))
-          // finite await (advisor r15): a wedged leg must fail the query
+          // finite await: a wedged leg must fail the query
           // with a clear error, not hang the harness forever on a
           // non-daemon pool
           val r = fs.map(Await.result(_, Duration(10, "min")))
@@ -2170,7 +2165,7 @@ object SparkEntry {
         .orderBy(col("leg"), col("a"), col("b"))
     }),
 
-    // Generation-aware serving session (judge r11 #1, see
+    // Generation-aware serving session (see
     // steadyServingSession): the sessions' post-swap (epoch-4) and
     // post-prune search results — every row tagged with the generation it
     // was served from — must equal FRESH OPENS of each final generation
@@ -2188,7 +2183,7 @@ object SparkEntry {
           schema: org.apache.spark.sql.types.StructType) =
         s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       // ONE search pass per reference family, pinned and reused across the
-      // swap AND pruned diff legs (r16, verdict r15 #3): each ref subtree
+      // swap AND pruned diff legs: each ref subtree
       // previously appeared in four exceptAll sides of the union plan, so
       // the 33-task search stages ran repeatedly inside the single count
       val Seq(refBm, refMh, refAnn) = pinConcurrently(
@@ -2232,7 +2227,7 @@ object SparkEntry {
         .orderBy(col("epoch"), col("family"))
     }),
 
-    // The streaming capstone under the oracle gate (judge r12 #2, see
+    // The streaming capstone under the oracle gate (see
     // steadyStreamServing): live ServingSessions keep serving THROUGH the
     // self-maintaining streaming ingest loop. One frame, three leg kinds:
     // the two symmetric differences (epoch-3 session results vs fresh
@@ -2249,7 +2244,7 @@ object SparkEntry {
       def fromRows(rows: Seq[org.apache.spark.sql.Row],
           schema: org.apache.spark.sql.types.StructType) =
         s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      // ONE pinned search pass per reference family (r16 — the
+      // ONE pinned search pass per reference family (the
       // q_serving_session treatment: each ref subtree sat in two exceptAll
       // sides of the union plan)
       val Seq(refBm, refMh) = pinConcurrently(
@@ -2343,7 +2338,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // r7 composite (the corpus-prep regime the round's new operators exist
+    // The corpus-prep composite (the regime the corpus-prep operators exist
     // for, proved to COMPOSE): rank-exact quality gate (keep each source's
     // best half) → DSIR importance resampling toward the src0 slice (Gumbel
     // top-200) → per-source 300-token budget assembly. One DuckDB oracle
@@ -2477,7 +2472,7 @@ object SparkEntry {
           |ORDER BY doc_id""".stripMargin)
     }),
 
-    // The local-model seam exercised end-to-end (judge r7 #7): a persisted
+    // The local-model seam exercised end-to-end: a persisted
     // LinearModel artifact (md5 featurizer, integer-formula weights) is
     // loaded, broadcast, assembled once per executor, and batch-applied to
     // the documents table; the exploded projection is hash-checked against
@@ -2568,7 +2563,7 @@ object SparkEntry {
     }),
 
     "q_bm25" -> ((s, dir) => {
-      // NOT spread (r15): measured flat wall with ~2x cpu — the tokenize
+      // NOT spread: measured flat wall with ~2x cpu — the tokenize
       // above the scan is not this query's bottleneck
       val docs = ld(s, dir, "documents").select("doc_id", "text")
       val queries = docs.filter(col("doc_id") < 10)
@@ -2584,7 +2579,7 @@ object SparkEntry {
     // equal to q_bm25's ad-hoc output (same oracle SQL), which proves the
     // "pay the vocabulary aggregate once" path returns identical scores.
     "q_bm25_index" -> ((s, dir) => {
-      // spread RESTORED (r16): r15's revert was about the write's
+      // spread RESTORED: an earlier revert was about the write's
       // multi-branch plan re-running the spread exchange per branch
       // (1.68 -> 2.69 s, 3x cpu); bm25WriteIndex now pins the postings
       // once (localCheckpoint), so every branch reads the materialized
@@ -2602,7 +2597,7 @@ object SparkEntry {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // The index regime's two cost legs timed SEPARATELY (judge r5: timing
+    // The index regime's two cost legs timed SEPARATELY (timing
     // build+write+search per iteration in q_bm25_index overstated the
     // steady-state search cost ~5x — q_bm25_index stays as the end-to-end
     // correctness contract; these two are the honest accounting lines).
@@ -2613,7 +2608,7 @@ object SparkEntry {
     // the parquet roundtrip (bucketing, partition columns, double encoding),
     // not just the in-memory aggregate.
     "q_bm25_index_build" -> ((s, dir) => {
-      // spread (r16): safe now that bm25WriteIndex pins the postings —
+      // spread: safe now that bm25WriteIndex pins the postings —
       // see q_bm25_index above
       val docs = spread(ld(s, dir, "documents").select("doc_id", "text"))
       val (postings, stats) = Lexical.bm25BuildIndex(docs, "doc_id", "text")
@@ -2655,7 +2650,7 @@ object SparkEntry {
       a.exceptAll(b).unionByName(b.exceptAll(a))
     }),
 
-    // Exact-delete parity against an INDEPENDENT oracle (r13 — the removal
+    // Exact-delete parity against an INDEPENDENT oracle (the removal
     // verb of the lifecycle): searches through the TOMBSTONED index (full
     // corpus, doc_id % 10 == 3 removed via bm25DeleteFromIndex) must equal
     // DuckDB's BM25 recomputed from scratch over the survivor corpus —
@@ -2726,8 +2721,8 @@ object SparkEntry {
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     }),
 
-    // The FIXED right/full salted path under the oracle gate (r12 — the
-    // r11 advisor's spurious-null-extended-rows bug class): unmatched rows
+    // The FIXED right/full salted path under the oracle gate (the
+    // spurious-null-extended-rows bug class): unmatched rows
     // manufactured on BOTH sides by complementary filters, full-outer
     // salted join ≡ the plain FULL JOIN (matched pairs from the inner
     // salted leg, each unmatched row null-extended exactly once by the
@@ -2750,7 +2745,7 @@ object SparkEntry {
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     }),
 
-    // The census + mitigation COMPOSED (judge r8 #6): skewAwareJoin measures
+    // The census + mitigation COMPOSED: skewAwareJoin measures
     // the hottest key's skew in one bounded pass and picks plain-vs-salted;
     // either branch is row-identical to the plain equi-join, so the leg
     // shares q_salted_join's oracle. On this table the census reads ~uniform
@@ -2838,7 +2833,7 @@ object SparkEntry {
     // names differ only in digit positions — exactly the shared-prefix regime
     // where q-gram blocking degenerates and deletion variants stay exact
     "q_fuzzy_pairs" -> ((s, dir) => {
-      // NOT spread (r15): flat wall, ~2x cpu — the variant explode is not
+      // NOT spread: flat wall, ~2x cpu — the variant explode is not
       // the bottleneck (the vkey join dominates and is already parallel)
       Fuzzy.fuzzyPairs(ld(s, dir, "customer"), "c_custkey", "c_name", maxDist = 1)
         .orderBy(col("i"), col("j"))
@@ -2868,7 +2863,7 @@ object SparkEntry {
     "q_token_sort" -> ((s, dir) => {
       // spread the probe side: the block join broadcasts `b`, so the whole
       // token-sort kernel otherwise runs inside the single scan task
-      // (profiled r15: one 1.74 s single-task job under a 2.3 s wall)
+      // (profiled: one 1.74 s single-task job under a 2.3 s wall)
       val p = spread(ld(s, dir, "part")
         .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_size")))
       p.as("a").join(p.as("b"), Seq("p_brand", "p_size"))
@@ -2901,7 +2896,7 @@ object SparkEntry {
     "q_jaccard_pairs" -> ((s, dir) => {
       // spread before shingling: the operator localCheckpoints its shingle
       // projection, so a 1-partition scan pins every downstream branch to
-      // one task (profiled r15: a 1.37 s single-task shingle job)
+      // one task (profiled: a 1.37 s single-task shingle job)
       Dedup.ngramJaccardPairs(spread(ld(s, dir, "documents")), "doc_id", "text",
           shingleSize = 3, threshold = 0.4, maxShingleDf = 100)
         .orderBy(col("i"), col("j"))
@@ -2970,7 +2965,7 @@ object SparkEntry {
         .orderBy(col("corpus_id"), col("benchmark_id"))
     }),
 
-    // Takedown semantics against the INDEPENDENT banding oracle (r13): the
+    // Takedown semantics against the INDEPENDENT banding oracle: the
     // probe batch (doc_id % 5 == 3) contains copies of BOTH deleted
     // (doc_id % 10 == 3) and surviving (doc_id % 10 == 8) corpus docs —
     // searched through the tombstoned index, survivors still self-match at
@@ -3058,13 +3053,13 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    // Flagship composite pipeline (judge r3 task 7): BM25 candidate
+    // Flagship composite pipeline: BM25 candidate
     // generation (Lexical) → md5-embedding cosine re-rank (functions kernels +
     // bounded TopKAggregate) → pairwise judge adjudication (Llm) — the
     // retrieve-rerank-judge / hard-negative-mining shape every training-data
     // pipeline runs, hash-checked end-to-end through all three subsystems.
     // Candidate generation runs against the PERSISTED bucket-pruned BM25
-    // index (judge r6 task 2): the composite models the steady-state
+    // index: the composite models the steady-state
     // retrieval regime the index exists for, and the ad-hoc corpus-wide
     // tokenize+aggregate it previously ran per invocation was the suite's
     // heaviest CPU leg (task_sec ≈ 29s for 50 output rows). Same scores by
@@ -3103,7 +3098,7 @@ object SparkEntry {
     // HierarchicalClustering.labelsFromMst). Capped at 400 vectors: the parity
     // contract is constant-size (it checks label agreement, not scale — the
     // scale probe is q_cluster_hdbscan), and the double run (driver Prim +
-    // distributed Borůvka) at 1000 vectors cost 11 s of every bench (judge r4).
+    // distributed Borůvka) at 1000 vectors cost 11 s of every bench.
     "q_hdbscan_parity" -> ((s, dir) => {
       val e = ld(s, dir, "embeddings").filter(col("vec_id") < 400)
         .select("vec_id", "embedding")
@@ -3120,8 +3115,8 @@ object SparkEntry {
     // 0.3, or corpus average under 0.7, as a left_id=-1 summary row) of the
     // nProbe=8/16 index against exact brute force. The oracle contract is
     // emptiness — measured at sf0.01 and sf0.1: min per-query recall 0.4,
-    // avg 0.82-0.85 (r4), so the floors have real margin. Turns the one
-    // rows-only ANN query into a quantified guarantee (judge r3 task 4).
+    // avg 0.82-0.85, so the floors have real margin. Turns the one
+    // rows-only ANN query into a quantified guarantee.
     "q_ann_recall" -> ((s, dir) => {
       val e = ld(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 100)
@@ -3265,7 +3260,7 @@ object SparkEntry {
           .select(lit(-1L).as("left_id"), col("recall")))
     }),
 
-    // FILTERED recall gate (r13): the selective-filter caveat the
+    // FILTERED recall gate: the selective-filter caveat the
     // annFilteredView scaladoc documents, measured WITH its documented
     // mitigation — a 1-in-3 allow-list shrinks every probed cell's
     // candidate pool, so the probe width scales with selectivity: nProbe
@@ -3290,7 +3285,7 @@ object SparkEntry {
           .select(lit(-1L).as("left_id"), col("recall")))
     }),
 
-    // Frozen-centroid append parity (judge r8 #4): the appended index (4/5
+    // Frozen-centroid append parity: the appended index (4/5
     // base + held-out slice absorbed by Ann.annAppendIndex) must search
     // row-identically to a one-shot rebuild that assigned the FULL corpus
     // to the SAME centroids. Emits the symmetric difference of the two
@@ -3305,7 +3300,7 @@ object SparkEntry {
       a.exceptAll(b).unionByName(b.exceptAll(a))
     }),
 
-    // Exact-delete parity for the vector family (r13): the tombstoned index
+    // Exact-delete parity for the vector family: the tombstoned index
     // (full corpus, vec_id % 10 == 3 removed) must search row-identically to
     // a one-shot rebuild of the SURVIVORS at the same centroids — surviving
     // vectors keep their cell assignments and score doubles bit-for-bit, and
@@ -3327,7 +3322,7 @@ object SparkEntry {
       Ann.annSearchIndex(steadyAnnIndex(s, dir), q, "vec_id", "embedding", k = 5, nProbe = 8)
     }),
 
-    // Filtered search (r13 — the vector-DB metadata-predicate primitive):
+    // Filtered search (the vector-DB metadata-predicate primitive):
     // top-5 over ONLY the allowed ids (vec_id % 3 == 0) through a semi-join
     // filtered view of the steady index, probed exhaustively (nProbe = all
     // 16 cells) so the result is exactly brute force over the allowed set —
@@ -3343,7 +3338,7 @@ object SparkEntry {
         .orderBy(col("left_id"), col("rnk"))
     }),
 
-    // The SQL surface for filtered search (r13): the same allow-list
+    // The SQL surface for filtered search: the same allow-list
     // restriction through the graft_ann_search TVF's optional trailing
     // (allowedTable, allowedIdCol) pair — must equal q_ann_filtered exactly
     // (same oracle), proving the catalog-resolved path carries the identical
@@ -3362,7 +3357,7 @@ object SparkEntry {
            |ORDER BY left_id, rnk""".stripMargin)
     }),
 
-    // Tombstone audit from SQL (r13): graft_index_deletes over the
+    // Tombstone audit from SQL: graft_index_deletes over the
     // takedown-fixture index — del_id and every recorded delta recomputed
     // independently by the oracle from the documents table (n_ids = deleted
     // docs, n_rows = their summed distinct-term counts = postings dropped,
@@ -3378,12 +3373,12 @@ object SparkEntry {
            |ORDER BY del_id""".stripMargin)
     }),
 
-    // Tombstone consolidation, oracle-gated (r14, judge r13 #1; r15: the
-    // fixture now drives THREE fold cycles — the r14 fold-name-reuse bug's
+    // Tombstone consolidation, oracle-gated (the
+    // fixture drives THREE fold cycles — an earlier fold-name-reuse bug's
     // exact failure window): six trickled takedowns folded cycle by cycle
     // into one `fold-2` dir — the audit TVF shows ONE fold row whose
     // deltas the oracle recomputes as the union's, and at_ok bounds-checks
-    // the fold's own wall timestamp. Under the r14 bug this relation went
+    // the fold's own wall timestamp. Under that bug this relation went
     // EMPTY at the third cycle (the fold absorbed itself).
     "q_tombstone_fold" -> ((s, dir) => {
       graft.plans.GraftPlans.install(s)
@@ -3409,7 +3404,7 @@ object SparkEntry {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // Tombstones through the SQL surface (r14, judge r13 #7): the TVFs
+    // Tombstones through the SQL surface: the TVFs
     // open per call, so a search through graft_bm25_search over the
     // takedown fixture must see the post-delete corpus — same independent
     // survivor-BM25 oracle as q_bm25_index_delete, closing the "every
@@ -3426,7 +3421,7 @@ object SparkEntry {
            |ORDER BY query_id, rank""".stripMargin)
     }),
 
-    // The ANN sibling (r14): graft_ann_search over the tombstoned IVF index
+    // The ANN sibling: graft_ann_search over the tombstoned IVF index
     // at exhaustive nProbe ≡ brute-force cosine top-k over the SURVIVORS —
     // an independent DuckDB oracle, not rebuild parity.
     "q_ann_delete_sql" -> ((s, dir) => {
@@ -3440,13 +3435,13 @@ object SparkEntry {
            |ORDER BY left_id, rnk""".stripMargin)
     }),
 
-    // ANN fold cycle (r15, judge r14 #6): consolidation is family-shared
-    // code but the r14 fold oracles were BM25-rooted — this leg searches a
+    // ANN fold cycle: consolidation is family-shared
+    // code but the earlier fold oracles were BM25-rooted — this leg searches a
     // TWICE-consolidated IVF index (trickle a0,a1 → fold-0; a2 → fold-1
     // absorbing fold-0 transitively) through the graft_ann_search TVF at
     // exhaustive probes. Same deleted set as the tombstone fixture, so it
     // shares q_ann_delete_sql's independent brute-force survivor oracle;
-    // under the r14 fold-name-reuse bug a third-cycle sibling of this
+    // under the earlier fold-name-reuse bug a third-cycle sibling of this
     // index would have served the deleted vectors again.
     "q_ann_fold_search" -> ((s, dir) => {
       graft.plans.GraftPlans.install(s)
@@ -3459,7 +3454,7 @@ object SparkEntry {
            |ORDER BY left_id, rnk""".stripMargin)
     }),
 
-    // Named snapshots (r15): the frozen point-in-time view. The fixture
+    // Named snapshots: the frozen point-in-time view. The fixture
     // pins capture-time state = full corpus minus the takedown set, then
     // mutates the root through every class the engine has — append batch,
     // two more tombstones, a consolidation (folding AROUND the pinned
@@ -3477,7 +3472,7 @@ object SparkEntry {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // The snapshot lifecycle census (r15): every observable of the GC
+    // The snapshot lifecycle census: every observable of the GC
     // contract as one structural trace — the graft_snapshots TVF catalog
     // row, a consolidation folding around the pinned tombstone, a prune
     // refusing the pinned generation, then the drop releasing both to the
@@ -3487,14 +3482,14 @@ object SparkEntry {
       steadySnapshotTrace(s, dir).toDF("step", "v").orderBy("step")
     }),
 
-    // Snapshot compliance (r15): snapshots pin removals too — the 'pre'
+    // Snapshot compliance: snapshots pin removals too — the 'pre'
     // pin (captured before the takedown) still serves every denylisted
     // doc while the current generation and the 'post' pin are clean.
     // graft_snapshot_audit surfaces exactly those (family, snapshot, id)
     // conflicts — the purge's worklist (remedy = Snapshots.drop, never a
     // quiet edit of a frozen view) — and the current-generation audit's
     // emptiness rides along as a zero-row union leg.
-    // Snapshot drift (r15): "how far has the live corpus moved from what
+    // Snapshot drift: "how far has the live corpus moved from what
     // my pinned eval set measured on?" — the id-level diff between the
     // pin and the current generation. On the snapshot fixture the pin
     // serves (full − %10==3) while the live gen-1 (compacted after the
@@ -3506,7 +3501,7 @@ object SparkEntry {
         .orderBy(col("change"), col("id"))
     }),
 
-    // The drift diff's SQL twin (r15): graft_snapshot_diff over the same
+    // The drift diff's SQL twin: graft_snapshot_diff over the same
     // pinned root — same oracle.
     "q_snapshot_diff_sql" -> ((s, dir) => {
       graft.plans.GraftPlans.install(s)
@@ -3516,7 +3511,7 @@ object SparkEntry {
            |ORDER BY change, id""".stripMargin)
     }),
 
-    // Time-travel opens (r15): Snapshots.asOf derives the pin a snapshot
+    // Time-travel opens: Snapshots.asOf derives the pin a snapshot
     // WOULD have recorded at a wall timestamp, from commit-marker mtimes
     // alone — the best-effort form for moments nobody thought to pin
     // (refusing honestly when a later consolidation destroyed the
@@ -3560,7 +3555,7 @@ object SparkEntry {
            |) ORDER BY family, snapshot, id""".stripMargin)
     }),
 
-    // Removal-coverage audit (r15): the composed compliance invariant —
+    // Removal-coverage audit: the composed compliance invariant —
     // "is anything the denylist promises to keep out still servable
     // anywhere?" — checked across families from the directories alone.
     // The fixture denylists ids % 10 == 3 and tombstones minhash + bm25
@@ -3594,7 +3589,7 @@ object SparkEntry {
         .orderBy("phase", "family", "id")
     }),
 
-    // Generation-as-of (r15): reproducibility's resolver — a training
+    // Generation-as-of: reproducibility's resolver — a training
     // run's wall timestamp pins the exact immutable generation its
     // sessions searched, from the commit markers alone. The fixture
     // commits three generations with captured timestamps and prunes to
@@ -3611,7 +3606,7 @@ object SparkEntry {
         .toDF("label", "gen").orderBy("label")
     }),
 
-    // The resolver's SQL twin (r15): graft_gen_asof pins each captured
+    // The resolver's SQL twin: graft_gen_asof pins each captured
     // timestamp through the TVF — same fixture, same VALUES oracle (the
     // miss rows COALESCE the TVF's honest nulls to -1).
     "q_gen_asof_sql" -> ((s, dir) => {
@@ -3629,7 +3624,7 @@ object SparkEntry {
            |) ORDER BY label""".stripMargin)
     }),
 
-    // The audit's SQL twin (r15): graft_removal_audit drives the same
+    // The audit's SQL twin: graft_removal_audit drives the same
     // composed invariant through the TVF surface — same fixture, same
     // independent oracle ('' skips a family).
     "q_removal_audit_sql" -> ((s, dir) => {
@@ -3645,7 +3640,7 @@ object SparkEntry {
            |) ORDER BY phase, family, id""".stripMargin)
     }),
 
-    // Filtered lexical search (r13 — the BM25 leg of the metadata-filtered
+    // Filtered lexical search (the BM25 leg of the metadata-filtered
     // retrieval surface, completing q_ann_filtered's vector leg): top-5
     // over ONLY the allowed docs (doc_id % 3 == 0) through a filtered view
     // of the steady index. Filter-context semantics: the oracle recomputes
@@ -3663,7 +3658,7 @@ object SparkEntry {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // The SQL surface for filtered lexical search (r13): the same allow-list
+    // The SQL surface for filtered lexical search: the same allow-list
     // restriction through graft_bm25_search's optional trailing
     // (allowedTable, allowedIdCol) pair — must equal q_bm25_filtered exactly
     // (same oracle), proving the catalog-resolved path carries the identical
@@ -3683,9 +3678,9 @@ object SparkEntry {
            |ORDER BY query_id, rank""".stripMargin)
     }),
 
-    // Filtered search over a TOMBSTONED + APPENDED index (r14, judge r13
-    // #6): the full stat composition on one index — the append keeps df on
-    // the recompute-in-plan path, tombstones SHRINK n_docs/avgdl/df to
+    // Filtered search over a TOMBSTONED + APPENDED index: the full stat
+    // composition on one index — the append keeps df on the
+    // recompute-in-plan path, tombstones SHRINK n_docs/avgdl/df to
     // survivor values, and the allow-list must NOT shrink them further
     // (filter-context: an allowed survivor scores exactly as in the
     // unfiltered survivor search; only ranks close up). The oracle
@@ -3701,7 +3696,7 @@ object SparkEntry {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // Filtered near-dup search (r13 — the MinHash leg): contamination probe
+    // Filtered near-dup search (the MinHash leg): contamination probe
     // against ONLY the allowed corpus docs through a filtered view of the
     // steady minhash index. Jaccard has no corpus-global stats, so the
     // oracle is simply the banding recomputation with the corpus side
@@ -3717,7 +3712,7 @@ object SparkEntry {
         .orderBy(col("corpus_id"), col("benchmark_id"))
     }),
 
-    // Filtered HYBRID retrieval (r13): both legs of the RRF fusion restricted
+    // Filtered HYBRID retrieval: both legs of the RRF fusion restricted
     // to the same allow-list — the filtered BM25 view for the lexical leg and
     // the allow-restricted corpus for the vector leg — then fused exactly as
     // q_hybrid_rrf. The oracle recomputes both filtered rankings and the RRF
@@ -3742,7 +3737,7 @@ object SparkEntry {
         .orderBy(col("query_id"), col("rank"))
     }),
 
-    // Streaming TAKEDOWN capstone (r13): the removal half of the lifecycle
+    // Streaming TAKEDOWN capstone: the removal half of the lifecycle
     // under one oracle. One takedown epoch tombstones doc_id % 10 == 3
     // across minhash+bm25 through streamingTakedownPipelineManaged,
     // compaction applies the tombstones, live sessions follow the swap, and
@@ -3777,7 +3772,7 @@ object SparkEntry {
         .orderBy(col("leg"), col("a"), col("b"))
     }),
 
-    // Generation replication under the oracle gate (r13): the takedown
+    // Generation replication under the oracle gate: the takedown
     // fixture's minhash root (post-takedown, gen-1) replicates to a fresh
     // replica root; searches through the replica must be ROW-IDENTICAL to
     // the source (emptiness legs) and the replica's generation must equal
@@ -3809,7 +3804,7 @@ object SparkEntry {
         .orderBy(col("leg"), col("a"), col("b"))
     }),
 
-    // Replica FOLLOWER (r14, judge r13 #3 — blue-green completed): the
+    // Replica FOLLOWER (blue-green completed): the
     // standby tracks a source root through three committed generations,
     // including a two-generation downtime backlog caught up in order. Legs:
     // 'follow' rows trace every (poll, replicated generation), 'wm' pins
@@ -3836,7 +3831,7 @@ object SparkEntry {
         .orderBy(col("leg"), col("a"), col("b"))
     }),
 
-    // Multi-tenant serving census (r14, judge r13 #2): two tenants
+    // Multi-tenant serving census: two tenants
     // interleaved on ONE live session across a maintenance swap — every
     // derived call tagged (tenant, generation), per-(tenant, gen) diffs
     // against fresh filtered opens empty, and deriveCount exactly 4 (the
@@ -3847,7 +3842,7 @@ object SparkEntry {
         .orderBy(col("leg"), col("a"), col("b"))
     }),
 
-    // Content-based takedown (r13): the notice names CONTENT (copies of the
+    // Content-based takedown: the notice names CONTENT (copies of the
     // doc_id % 10 == 6 documents under offset ids), takedownByContent
     // resolves it through the banded near-dup search and tombstones both
     // indexes. Two legs, both DuckDB-recomputed end to end: the resolved id
@@ -3867,7 +3862,7 @@ object SparkEntry {
       bm.unionByName(res).orderBy(col("leg"), col("a"), col("b"))
     }),
 
-    // The SQL surface for filtered near-dup search (r13): graft_minhash_search
+    // The SQL surface for filtered near-dup search: graft_minhash_search
     // with the optional allow-list pair must equal q_minhash_filtered exactly
     // (same oracle) — the TVF's catalog-resolved batch and allow tables carry
     // the identical postings-scan semi-join as the DataFrame view.
@@ -3886,7 +3881,7 @@ object SparkEntry {
            |ORDER BY corpus_id, benchmark_id""".stripMargin)
     }),
 
-    // Denylist audit from SQL (r13): graft_denylist over the takedown
+    // Denylist audit from SQL: graft_denylist over the takedown
     // fixture's root — the "which ids can never re-enter" compliance view,
     // oracle-recomputed from the documents table.
     "q_denylist_sql" -> ((s, dir) => {
@@ -3984,15 +3979,15 @@ object SparkEntry {
     // persisted-ANN search with a corpus-sized query batch (m=20 full
     // embeddings = 40k queries at sf0.1) forced onto the over-probe-bound
     // JOIN path: probe assignment stays distributed, the cell restriction
-    // is the broadcast semi-join — the only unguarded driver collect the r7
-    // judge found, now exercised guarded at stress scale (value semantics
+    // is the broadcast semi-join — once the only unguarded driver collect,
+    // now exercised guarded at stress scale (value semantics
     // gated by hash-green q_ann_index_recall + the guard spec's path parity)
     "q_stress_ann_search" -> ((s, dir) => {
       Stress.annSearchSummary(steadyAnnIndex(s, dir), ld(s, dir, "embeddings"),
         "vec_id", "embedding", m = 20)
     }),
 
-    // Naturally-tripped guard legs (judge r8 #5): corpus-sized query
+    // Naturally-tripped guard legs: corpus-sized query
     // batches exceed the DEFAULT maxQueryTermRows / maxProbeRows under
     // stock session conf — no override — and the census row records the
     // observed joinRestrictionSearches delta (guard_trips, expected 1).
@@ -4003,7 +3998,7 @@ object SparkEntry {
         ld(s, dir, "documents"), "doc_id", "text")
     }),
 
-    // Filtered search at tenant scale (r13): an allow frame of ~40x corpus
+    // Filtered search at tenant scale: an allow frame of ~40x corpus
     // rows (even corpus ids + synthetic surplus) through the distributed
     // semi-join path — the census's n_disallowed must be 0 (the filter
     // held) and the extrema are m-invariant, value-gated by hash-green
@@ -4019,7 +4014,7 @@ object SparkEntry {
     }),
 
     // the corpus-prep composite with the SCALE forms composed (approx gate →
-    // DSIR → budget) at 5x rows — closes the r7 gap where the 100 TB recipe
+    // DSIR → budget) at 5x rows — closes the gap where the 100 TB recipe
     // was only proven in its bit-exact (windowed-gate) bench form; the
     // approx-composite ≡ exact-composite membership is spec-pinned at bench
     // scale (StressSpec), value semantics gated by hash-green
@@ -4028,7 +4023,7 @@ object SparkEntry {
       Stress.pipelineSummary(ld(s, dir, "documents"), "doc_id", "source", "text", m = 5)
     }),
 
-    // The ingest triad load-tested (judge r10 #6): five crawl epochs, each
+    // The ingest triad load-tested: five crawl epochs, each
     // a disjoint reversed corpus slice replicated 10x (intra-batch near-dup
     // cliques collapse BEFORE the corpus search), appending to all three
     // indexes in lockstep. Rows-only census (epoch, batch/survivor counts,
@@ -4043,7 +4038,7 @@ object SparkEntry {
       // collected rows, not a cached frame: the bench unpersists every
       // retained block between attempts, which kills a localCheckpoint
       val (rows, schema) = Fixture.memo("stress_ingest", s, dir) { _ =>
-        // both curves side by side (judge r11 #6): the unmanaged run's
+        // both curves side by side: the unmanaged run's
         // fan-in / batch counts grow per epoch; the managed run (the
         // q_maintenance_census policy) commits maint_generations and keeps
         // them ~flat after compactions fire
@@ -4114,20 +4109,6 @@ object SparkEntry {
        |      t -> CAST('0x' || substr(md5(t), 1, 16) AS UBIGINT)) AS hs
        |  FROM $from)""".stripMargin
 
-  /** DuckDB subquery: per-doc distinct word-3-gram shingle set (`sh`) and the
-    * 32-component md5 minhash signature (`sig`) — bit-identical to
-    * `graft.functions.{WordShinglesExpr, MinHashSigMd5}` with the engine's
-    * 8-band × 4-row defaults: shingle hash = unsigned 32-bit md5 prefix;
-    * component j = min over shingles of `(a_j·h + b_j) mod 4294967291` with
-    * 30-bit md5-derived coefficients (a_j odd).
-    */
-  /** DuckDB mirror of `TextAnalysis.wordShingles` + `array_distinct`:
-    * `(idCol, sh)` with sh the distinct 3-gram word shingle list.
-    */
-  /** Oracle for the n-gram membership contamination pair: distinct 3-grams
-    * per corpus doc intersected with the benchmark slice's global gram set,
-    * counted per doc (same shingle construction as the minhash oracle).
-    */
   /** Token-budget assembly oracle — the reference window over
     * (md5 millionths, id); shared by the DataFrame path and the
     * `graft_token_budget` TVF.
@@ -4385,7 +4366,7 @@ object SparkEntry {
   /** The BM25 CTE chain shared by q_bm25 (ad-hoc plan), q_bm25_index
     * (persisted-index plan), and the hybrid fusion (q_hybrid_rrf): all must
     * hash-match this exact relation. Yields CTEs up to
-    * `bmtop` = top-`maxRank` rows per query. `allowedPred` (r13) injects an
+    * `bmtop` = top-`maxRank` rows per query. `allowedPred` injects an
     * allow-list predicate on the scored candidates BEFORE ranking — the
     * filtered-view oracle: full-corpus stats/df untouched (they're computed
     * upstream of the filter), candidate set restricted, exactly
@@ -4460,7 +4441,7 @@ object SparkEntry {
 
   /** Survivor-corpus BM25 recomputed from scratch (the tombstone-delete
     * oracle): corpus = `doc_id % 10 <> 3`, full-table queries, stats/df
-    * over survivors. `allowedPred` (r14) additionally restricts the
+    * over survivors. `allowedPred` additionally restricts the
     * CANDIDATE set before ranking — survivor-then-allowed, the
     * filtered-view-over-tombstones composition — without touching the
     * survivor stats.
@@ -4502,11 +4483,6 @@ object SparkEntry {
 
   private lazy val Bm25DeleteOracleSql: String = Bm25DeleteCtes("")
 
-  /** The removal audit's violations, recomputed from the embeddings table
-    * (every embedding id is also a denylisted doc id under the shared
-    * `% 10 == 3` slice; the compliant families and the fixed ANN sibling
-    * contribute nothing) — shared by the DataFrame and TVF forms.
-    */
   /** The as-of fixture's fully-determined resolution trace — shared by
     * the DataFrame and TVF forms.
     */
@@ -4515,6 +4491,11 @@ object SparkEntry {
       |  ('at_pre', -1), ('at_g0_pruned', -1), ('at_g1', 1), ('at_g2', 2))
       |AS t(label, gen) ORDER BY label""".stripMargin
 
+  /** The removal audit's violations, recomputed from the embeddings table
+    * (every embedding id is also a denylisted doc id under the shared
+    * `% 10 == 3` slice; the compliant families and the fixed ANN sibling
+    * contribute nothing) — shared by the DataFrame and TVF forms.
+    */
   private val RemovalAuditOracleSql: String =
     """SELECT 'pre' AS phase, 'ann' AS family, CAST(vec_id AS BIGINT) AS id
       |FROM embeddings WHERE vec_id % 10 = 3
@@ -4522,7 +4503,7 @@ object SparkEntry {
 
   /** Brute-force cosine top-5 over the SURVIVOR vectors (`vec_id % 10 <>
     * 3` removed) — the independent oracle shared by the tombstoned-ANN TVF
-    * leg and the twice-consolidated fold leg (r15), whose indexes hold the
+    * leg and the twice-consolidated fold leg, whose indexes hold the
     * identical deleted set.
     */
   private lazy val AnnDeleteOracleSql: String =
@@ -5440,7 +5421,7 @@ object SparkEntry {
     // the same contamination relation
     "q_minhash_index_append" -> MinhashContaminationOracleSql,
 
-    // tombstone-delete leg (r13): the same banding+verify recomputation,
+    // tombstone-delete leg: the same banding+verify recomputation,
     // restricted to the survivor corpus (doc_id % 10 <> 3), probed with a
     // batch (doc_id % 5 = 3) holding copies of both deleted and surviving
     // docs — survivors self-match at 1.0, taken-down docs return nothing
@@ -5602,7 +5583,7 @@ object SparkEntry {
     // the banded scale form is rank-exact — same oracle proves same set
     "q_quality_gate_sketch" -> QualityGateOracleSql,
 
-    // r7 composite: quality gate (best half per source) -> DSIR toward the
+    // The corpus-prep composite: quality gate (best half per source) -> DSIR toward the
     // kept src0 slice (Gumbel top-200) -> 300-token budget per source. Each
     // stage reuses its proven oracle shape; the chaining is the point.
     "q_corpus_pipeline2" ->
@@ -5817,7 +5798,7 @@ object SparkEntry {
     // The persisted maintenance log replays the census trace (passes are
     // 0-based calls of maintainIndexes; epochs in q_maintenance_census are
     // 1-based): bm25/ann compact every pass, minhash on passes 1 and 3.
-    // at_ok/dur_ok (r13): every recorded event must carry a plausible
+    // at_ok/dur_ok: every recorded event must carry a plausible
     // epoch-millis timestamp and a sane non-negative duration.
     "q_maintenance_log" ->
       """SELECT * FROM (VALUES
@@ -5870,7 +5851,7 @@ object SparkEntry {
         |) AS t(leg, a, b, v, g)
         |ORDER BY leg, a, b""".stripMargin,
 
-    // generation replication (r13): replica search ≡ source search
+    // generation replication: replica search ≡ source search
     // (emptiness diff legs) and the replica landed at the source's
     // generation — the takedown fixture ends at gen-1
     "q_replica_serving" ->
@@ -5879,7 +5860,7 @@ object SparkEntry {
         |FROM (VALUES ('replica_gen', 1, 1, 0.0)) AS t(leg, a, b, v)
         |ORDER BY leg, a, b""".stripMargin,
 
-    // multi-tenant serving census (r14): eight interleaved derived calls,
+    // multi-tenant serving census: eight interleaved derived calls,
     // two tenants x two generations, four derives, all diffs empty
     "q_tenant_views" ->
       """SELECT leg, CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b
@@ -5890,7 +5871,7 @@ object SparkEntry {
         |  ('derives',4,0)) AS t(leg, a, b)
         |ORDER BY leg, a, b""".stripMargin,
 
-    // replica follower (r14): poll-0 replicates gen-0, the source commits
+    // replica follower: poll-0 replicates gen-0, the source commits
     // gens 1+2 during follower downtime, poll-1 catches up in order, the
     // watermark equals the source generation, and the search-diff leg
     // (standby ≡ source, emptiness) contributes no rows
@@ -5900,7 +5881,7 @@ object SparkEntry {
         |             ('wm', 2, 2)) AS t(leg, a, b)
         |ORDER BY leg, a, b""".stripMargin,
 
-    // content-based takedown (r13): the oracle derives the resolved set
+    // content-based takedown: the oracle derives the resolved set
     // itself — banding candidates between the corpus and the offset-id
     // probe copies, Jaccard-verified at 0.8 — then recomputes BM25 from
     // scratch over everything it did NOT resolve
@@ -5958,7 +5939,7 @@ object SparkEntry {
          |  CAST(v AS DOUBLE) AS v, CAST(g AS INTEGER) AS g
          |FROM united ORDER BY leg, a, b""".stripMargin,
 
-    // streaming takedown capstone (r13): all five legs recomputed
+    // streaming takedown capstone: all five legs recomputed
     // independently — survivor-corpus BM25 from scratch, banding over
     // survivors for the minhash probe, the denylist and expected ingest
     // survivors straight from the documents table, the generation trace as
@@ -6033,23 +6014,23 @@ object SparkEntry {
         |  CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS DOUBLE) AS score
         |WHERE FALSE""".stripMargin,
 
-    // tombstone-delete leg (r13): BM25 recomputed FROM SCRATCH over the
+    // tombstone-delete leg: BM25 recomputed FROM SCRATCH over the
     // survivor corpus (doc_id % 10 <> 3) — queries keep the full documents
     // table (a query's text exists whether or not its doc was taken down),
     // corpus stats and df shrink to the survivors. The engine side serves
     // this through tombstone exclusion + recorded stat deltas, never
     // rebuilding — the hash proves exact delete ≡ rebuild independently.
-    // Shared with q_bm25_delete_sql (r14): the graft_bm25_search TVF over
+    // Shared with q_bm25_delete_sql: the graft_bm25_search TVF over
     // the same tombstoned index must produce the identical relation.
     "q_bm25_index_delete" -> Bm25DeleteOracleSql,
     "q_bm25_delete_sql" -> Bm25DeleteOracleSql,
     "q_bm25_fold_search" -> Bm25DeleteOracleSql,
-    // snapshot open (r15): the capture-time state IS the tombstone
+    // snapshot open: the capture-time state IS the tombstone
     // oracle's corpus (full minus % 10 == 3, assembled base + append
     // batch + takedown) — every post-capture mutation must be invisible
     "q_snapshot_search" -> Bm25DeleteOracleSql,
 
-    // snapshot lifecycle census (r15): the GC-protection contract as
+    // snapshot lifecycle census: the GC-protection contract as
     // structural counts — catalog row via the TVF (1 snapshot pinning gen
     // 0, 0 batches, 1 tombstone), the post-capture pair folding into ONE
     // dir around the pin (2 folded → takedown + fold-0 visible), the
@@ -6065,13 +6046,13 @@ object SparkEntry {
         |  ('pruned_after_drop', 1), ('gens_after_drop', 1))
         |AS t(step, v) ORDER BY step""".stripMargin,
 
-    // time-travel opens (r15): the t0 view of the twice-tombstoned index
+    // time-travel opens: the t0 view of the twice-tombstoned index
     // ≡ the full-corpus oracle, the t1 view ≡ the survivor oracle — each
     // moment bit-equal to its own from-scratch recomputation
     "q_asof_t0" -> Bm25OracleSql,
     "q_asof_t1" -> Bm25DeleteOracleSql,
 
-    // snapshot drift (r15): nothing added since the pin; removed = the
+    // snapshot drift: nothing added since the pin; removed = the
     // post-capture takedowns, recomputed from the documents table
     "q_snapshot_diff" ->
       """SELECT 'removed' AS change, doc_id AS id FROM documents
@@ -6082,7 +6063,7 @@ object SparkEntry {
         |WHERE doc_id % 10 = 7 OR doc_id % 10 = 9
         |ORDER BY change, id""".stripMargin,
 
-    // snapshot compliance audit (r15): the 'pre' pin serves every
+    // snapshot compliance audit: the 'pre' pin serves every
     // denylisted id (recomputed from the documents table); the 'post' pin
     // and the live generation contribute nothing
     "q_snapshot_audit" ->
@@ -6090,7 +6071,7 @@ object SparkEntry {
         |FROM documents WHERE doc_id % 10 = 3
         |ORDER BY family, snapshot, id""".stripMargin,
 
-    // consolidation audit (r14; r15: three fold cycles, so the surviving
+    // consolidation audit (three fold cycles, so the surviving
     // dir is fold-2): one fold row whose deltas are the union of the six
     // trickled takedowns — recomputed from the documents table
     "q_tombstone_fold" ->
@@ -6106,7 +6087,7 @@ object SparkEntry {
         |  TRUE AS at_ok
         |FROM del WHERE len(toks) > 0""".stripMargin,
 
-    // composed lifecycle (r14, judge r13 #6): survivor-THEN-allowed BM25 —
+    // composed lifecycle: survivor-THEN-allowed BM25 —
     // build + append + tombstone shrink the stats to the survivor corpus,
     // the allow-list restricts candidates only (filter-context within the
     // survivor world: a surviving allowed doc's score is bit-identical to
@@ -6317,7 +6298,7 @@ object SparkEntry {
       """SELECT CAST(NULL AS BIGINT) AS left_id, CAST(NULL AS DOUBLE) AS recall
         |WHERE FALSE""".stripMargin,
 
-    // filtered recall gate (r13): same emptiness contract, recall measured
+    // filtered recall gate: same emptiness contract, recall measured
     // against brute force over the allowed subset
     "q_ann_filtered_recall" ->
       """SELECT CAST(NULL AS BIGINT) AS left_id, CAST(NULL AS DOUBLE) AS recall
@@ -6331,21 +6312,21 @@ object SparkEntry {
         |  CAST(NULL AS DOUBLE) AS score, CAST(NULL AS INTEGER) AS rank
         |WHERE FALSE""".stripMargin,
 
-    // filtered search (r13): exhaustive-probe filtered view ≡ brute-force
+    // filtered search: exhaustive-probe filtered view ≡ brute-force
     // top-k over the allowed subset, computed independently (DataFrame API
     // and the graft_ann_search TVF's allow-list form share the oracle)
     "q_ann_filtered" -> AnnFilteredOracleSql,
     "q_ann_filtered_sql" -> AnnFilteredOracleSql,
 
-    // tombstones through the ANN TVF (r14): exhaustive-probe IVF over the
+    // tombstones through the ANN TVF: exhaustive-probe IVF over the
     // tombstoned index ≡ brute-force cosine top-5 over the SURVIVOR
-    // vectors. Shared with q_ann_fold_search (r15): the twice-consolidated
+    // vectors. Shared with q_ann_fold_search: the twice-consolidated
     // index holds the identical deleted set, so its TVF searches must
     // produce the identical relation.
     "q_ann_delete_sql" -> AnnDeleteOracleSql,
     "q_ann_fold_search" -> AnnDeleteOracleSql,
 
-    // filtered lexical / near-dup / hybrid legs (r13): the allow-list
+    // filtered lexical / near-dup / hybrid legs: the allow-list
     // surface across the remaining retrieval families — DataFrame view and
     // TVF forms of BM25 share one oracle; the hybrid oracle re-ranks BOTH
     // legs under the filter before fusing
@@ -6355,7 +6336,7 @@ object SparkEntry {
     "q_minhash_search_sql" -> MinhashFilteredOracleSql,
     "q_hybrid_filtered" -> HybridFilteredOracleSql,
 
-    // removal-coverage audit (r15): the only servable denylisted ids are
+    // removal-coverage audit: the only servable denylisted ids are
     // the deliberately-untombstoned ANN root's — recomputed from the
     // embeddings table (every embedding id is also a denylisted doc id
     // under the shared % 10 == 3 slice); the compliant families and the
@@ -6363,20 +6344,20 @@ object SparkEntry {
     "q_removal_audit" -> RemovalAuditOracleSql,
     "q_removal_audit_sql" -> RemovalAuditOracleSql,
 
-    // generation-as-of (r15): the fixture's timestamp → generation
+    // generation-as-of: the fixture's timestamp → generation
     // resolution is fully determined by its build script — pre-commit and
     // pruned windows miss honestly, surviving windows pin exactly
     // (DataFrame and graft_gen_asof TVF forms share the oracle)
     "q_gen_asof" -> GenAsOfOracleSql,
     "q_gen_asof_sql" -> GenAsOfOracleSql,
 
-    // denylist audit TVF (r13): the recorded never-re-enter ids are exactly
+    // denylist audit TVF: the recorded never-re-enter ids are exactly
     // the takedown fixture's id slice, recomputed from the documents table
     "q_denylist_sql" ->
       """SELECT CAST(doc_id AS BIGINT) AS id FROM documents
         |WHERE doc_id % 10 = 3 ORDER BY id""".stripMargin,
 
-    // tombstone audit (r13): every recorded delta recomputed from the
+    // tombstone audit: every recorded delta recomputed from the
     // documents table — docs with zero tokens leave no postings, hence the
     // len(toks) > 0 guard (the engine's found-set contract)
     "q_index_deletes" ->
@@ -6392,7 +6373,7 @@ object SparkEntry {
         |  TRUE AS at_ok
         |FROM del WHERE len(toks) > 0""".stripMargin,
 
-    // tombstone-delete emptiness contract (r13): search-via-tombstones ≡
+    // tombstone-delete emptiness contract: search-via-tombstones ≡
     // search-via-survivor-rebuild at the same centroids, row-identically
     "q_ann_index_delete" ->
       """SELECT CAST(NULL AS BIGINT) AS left_id, CAST(NULL AS BIGINT) AS right_id,

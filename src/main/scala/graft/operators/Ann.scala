@@ -127,7 +127,7 @@ object Ann {
     * the `(left_id, right_id, ...)` contract of [[bruteForceTopK]]/[[ivfTopK]]).
     * Queries the approximate run missed entirely get recall 0, not a missing
     * row. Turns the ANN approximation into a quantified, checkable guarantee
-    * (judge r3) — the driver query `q_ann_recall` asserts no query falls below
+    * — the driver query `q_ann_recall` asserts no query falls below
     * its floor. Note ties at the k-th score make 1.0 unreachable in general:
     * both sides break ties by id, but equal-score neighbors beyond rank k are
     * legitimately interchangeable.
@@ -486,7 +486,7 @@ object Ann {
     * The view is cheap to build (no data moves) but collects its centroid
     * matrix lazily on first search — REUSE one view across a query stream
     * rather than rebuilding it per search. A PINNED index with a
-    * driver-sized allow-list (r13, [[Serving.maxDriverAllowIds]], collected
+    * driver-sized allow-list ([[Regime.MaxDriverAllowIds]], collected
     * once per view) serves filtered searches from the base index's mirrors
     * (the driver mirror at zero jobs, or the partitioned tier over the
     * resident bound) — candidate ids filtered in the scoring folds; any
@@ -504,29 +504,6 @@ object Ann {
       case Some(ids) => df.join(ids, df("corpus_id") === ids("__allow_id"), "left_semi")
       case None => df
     }
-
-  /** Driver materialization bound for a persisted-index search's probe set,
-    * in probe rows (|queries| × nProbe). Under the bound, `bound / nProbe`
-    * query vectors are collected in one limited action, probes are computed
-    * driver-side against the per-open cached centroid matrix, and the cell
-    * scan gets STATIC parquet partition pruning via an `isin` over the
-    * probed cells (the serving shape: ~one Spark job of bookkeeping per
-    * search). Over it (a large query batch — the 100 TB regime where
-    * "queries" are themselves a corpus) nothing stays on the driver: the
-    * probe assignment runs distributed and the cell restriction becomes a
-    * broadcast semi-join on `__cell` (the distinct probed-cell set is
-    * ≤ nCentroids rows by construction, so the semi-join side is always
-    * tiny; dynamic partition pruning recovers most of the static prune).
-    * Same pattern as [[VecScan.maxBroadcastBytes]]; tune with
-    * `spark.graft.ann.maxProbeRows` — the collected bytes are
-    * `(bound/nProbe) · (8 + 8·dim)`, so size it with the vector width in
-    * mind (the 1M default at dim 64 is ~65 MB worst case).
-    */
-  val MaxProbeRowsKey = "spark.graft.ann.maxProbeRows"
-  val DefaultMaxProbeRows: Long = 1L << 20
-
-  def maxProbeRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(MaxProbeRowsKey).map(_.toLong).getOrElse(DefaultMaxProbeRows)
 
   /** Count of searches that took the join-based (over-bound) restriction —
     * observable so the guard spec can assert which path ran, the
@@ -580,16 +557,15 @@ object Ann {
     */
   private def probeAndPrune(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
-      nProbe: Int, maxProbeRowsParam: Long): ProbeResult = {
+      nProbe: Int): ProbeResult = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val bound = if (maxProbeRowsParam > 0) maxProbeRowsParam else maxProbeRows(spark)
     // the under-bound path collects the query VECTORS (bound/nProbe rows) in
     // one limited action and decides the regime from whether the limit
     // truncated — no separate count job. A search that trips into the
     // over-bound regime pays one discarded limited collect — once per
     // regime boundary, not per search.
-    val boundQ = math.min(bound / math.max(nProbe, 1), (Int.MaxValue - 1).toLong).toInt
+    val boundQ = Regime.MaxProbeRows.rows(spark, per = nProbe)
     // no coalesce(1) here (unlike the bm25 sibling): this projection has no
     // generator, so a LocalRelation query side folds through
     // ConvertToLocalRelation and the collect is a ZERO-job driver-side
@@ -636,18 +612,17 @@ object Ann {
   /** Search a persisted index with cell pruning: queries probe their
     * `nProbe` nearest centroids (broadcast 1-NN against the ≤nCentroids
     * centroid table), the probe set restricts the cell scan (static parquet
-    * partition pruning under [[maxProbeRows]], a broadcast semi-join above
-    * it — see [[probeAndPrune]]), and only the probed cells are scored.
-    * Output contract = [[ivfTopK]] (bit-identical scores for the same build
-    * parameters: same quantizer, same assignment, same cosine expression).
-    * `maxProbeRowsOverride` > 0 replaces the session conf bound (stress legs
-    * force the join path with it).
+    * partition pruning under [[Regime.MaxProbeRows]], a broadcast semi-join
+    * above it — see [[probeAndPrune]]), and only the probed cells are
+    * scored. Output contract = [[ivfTopK]] (bit-identical scores for the
+    * same build parameters: same quantizer, same assignment, same cosine
+    * expression).
     */
   def annSearchIndex(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
-      k: Int, nProbe: Int = 4, maxProbeRowsOverride: Long = 0L): DataFrame = {
+      k: Int, nProbe: Int = 4): DataFrame = {
     require(k >= 1 && nProbe >= 1, s"k/nProbe must be >= 1, got $k/$nProbe")
-    searchIndex(index, queries, qId, qVec, k, nProbe, maxProbeRowsOverride, Resident.FloatScoring)
+    searchIndex(index, queries, qId, qVec, k, nProbe, Resident.FloatScoring)
   }
 
   /** IVF_SQ8 search of a persisted index: same cell pruning as
@@ -665,14 +640,12 @@ object Ann {
     */
   def annSearchIndexInt8(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
-      k: Int, nProbe: Int = 4, rerankFactor: Int = 4,
-      maxProbeRowsOverride: Long = 0L): DataFrame = {
+      k: Int, nProbe: Int = 4, rerankFactor: Int = 4): DataFrame = {
     require(k >= 1 && nProbe >= 1 && rerankFactor >= 1,
       s"k/nProbe/rerankFactor must be >= 1, got $k/$nProbe/$rerankFactor")
     require(index.cells.columns.contains("codes"),
       "index has no int8 codes — rebuild with annWriteIndex (IVF_SQ8 layout)")
-    searchIndex(index, queries, qId, qVec, k, nProbe, maxProbeRowsOverride,
-      Resident.Int8Scoring(rerankFactor))
+    searchIndex(index, queries, qId, qVec, k, nProbe, Resident.Int8Scoring(rerankFactor))
   }
 
   /** IVF_PQ search of a persisted index written with `annWriteIndex(pqM >
@@ -690,14 +663,12 @@ object Ann {
     */
   def annSearchIndexPq(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
-      k: Int, nProbe: Int = 4, rerankFactor: Int = 10,
-      maxProbeRowsOverride: Long = 0L): DataFrame = {
+      k: Int, nProbe: Int = 4, rerankFactor: Int = 10): DataFrame = {
     require(k >= 1 && nProbe >= 1 && rerankFactor >= 1,
       s"k/nProbe/rerankFactor must be >= 1, got $k/$nProbe/$rerankFactor")
     val cb = index.pqCodebook.getOrElse(throw new IllegalArgumentException(
       "index has no PQ codebook — rebuild with annWriteIndex(pqM = ...) (IVF_PQ layout)"))
-    searchIndex(index, queries, qId, qVec, k, nProbe, maxProbeRowsOverride,
-      Resident.PqScoring(cb, rerankFactor))
+    searchIndex(index, queries, qId, qVec, k, nProbe, Resident.PqScoring(cb, rerankFactor))
   }
 
   /** The body of the three index searches: probes ([[probeAndPrune]]),
@@ -710,11 +681,10 @@ object Ann {
     */
   private def searchIndex(
       index: AnnIndex, queries: DataFrame, qId: String, qVec: String,
-      k: Int, nProbe: Int, maxProbeRowsOverride: Long,
-      scoring: Resident.AnnScoring): DataFrame = {
+      k: Int, nProbe: Int, scoring: Resident.AnnScoring): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val pr = probeAndPrune(index, queries, qId, qVec, nProbe, maxProbeRowsOverride)
+    val pr = probeAndPrune(index, queries, qId, qVec, nProbe)
     serveTiers(index, pr, k, scoring).getOrElse {
       // the local regime reuses the collected query rows; its probe rows
       // are ONE LocalRelation with the driver-side norms (the same
@@ -785,7 +755,7 @@ object Ann {
     * ([[Quantize.quantizedTopK]], [[Pq.pqTopK]]): the corpus is baked
     * in-plan ([[Resident.Quantized.bake]]) and its code matrix collected in
     * the one job that sizes it ([[VecScan.collectIfFits]], each row charged
-    * its id, code and norm bytes) under [[VecScan.maxBroadcastBytes]]
+    * its id, code and norm bytes) under [[Regime.MaxBroadcastBytes]]
     * (unbounded with `skipSizeCheck`; over the bound, `overBound(bound)` is
     * the error), then broadcast. The coarse stage is a mapPartitions scan
     * over the query rows — the [[VecScan.knn]] shape — that prepares each
@@ -804,7 +774,7 @@ object Ann {
       overBound: Long => String): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val bound = if (skipSizeCheck) Long.MaxValue else VecScan.maxBroadcastBytes(spark)
+    val bound = if (skipSizeCheck) Long.MaxValue else Regime.MaxBroadcastBytes(spark)
     val vecs = corpus.select(col(cId).cast("long").as("corpus_id"), asDouble(col(cVec)).as("cv"))
     // a null id or vector has no code and matches nothing
     val codeRows = scoring.bake(vecs.filter(col("corpus_id").isNotNull && col("cv").isNotNull))

@@ -3,7 +3,7 @@ package graft.operators
 import graft.embed.Embedder
 import graft.core.{Keys, Serialize}
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed clustering over embedding vectors (the engine's semantic GROUP BY).
@@ -44,16 +44,6 @@ object Clustering extends Logging {
     if (pBand >= 1.0) 1
     else math.ceil(math.log(1.0 - targetRecall) / math.log(1.0 - pBand)).toInt.max(1)
   }
-
-  /** Edge-count bound for the driver union-find fast path in
-    * [[connectedComponents]] (~80 MB of collected longs at the limit).
-    * Overridable via conf so tests can force the distributed iteration.
-    */
-  val SmallGraphEdgeLimit: Long = 5L * 1000 * 1000
-  val SmallGraphEdgeLimitKey = "spark.graft.cc.smallGraphEdgeLimit"
-
-  private[operators] def smallGraphEdgeLimit(spark: SparkSession): Long =
-    spark.conf.getOption(SmallGraphEdgeLimitKey).map(_.toLong).getOrElse(SmallGraphEdgeLimit)
 
   /** Driver union-find (path-halving + union-by-rank) over an edge list;
     * returns (id, minIdOfComponent) for every edge-incident node.
@@ -141,7 +131,7 @@ object Clustering extends Logging {
     // longs at the limit), so this never materializes the INPUT — only the
     // (already ε/LSH-filtered) edge list. The distributed iteration below
     // remains the path for genuinely large graphs.
-    val small = VecScan.collectIfFits(e0, smallGraphEdgeLimit(spark))(
+    val small = VecScan.collectIfFits(e0, Regime.SmallGraphEdgeLimit(spark))(
       _ => 1L, r => (r.getLong(0), r.getLong(1)))
     if (small.isDefined)
       return spark.createDataset(unionFindMinLabel(small.get)).toDF("id", "component")
@@ -192,48 +182,31 @@ object Clustering extends Logging {
   /** ε-neighbor pairs over `(id, v)` with cosine >= tau.
     *
     * Plan selection: broadcast-matrix scan (exact, zero shuffle) while the
-    * table fits the broadcast bound; above it the default escalates to the
-    * SRP-LSH bucket equi-join (candidates exact-verified at >= tau —
-    * precision 1, recall < 1 near the threshold) because an O(n²) crossJoin
-    * over a table that big is not a survivable plan at 100 TB. Pass
-    * `forceExact=true` to keep the exact crossJoin regardless (small
-    * over-bound tables where exactness matters more than wall-clock).
+    * table fits [[Regime.MaxBroadcastBytes]]; above it the SRP-LSH bucket
+    * equi-join (candidates exact-verified at >= tau — precision 1, recall
+    * < 1 near the threshold), because an O(n²) crossJoin over a table that
+    * big is not a survivable plan.
     */
   private def rangePairs(
       pts: DataFrame, tau: Double, onlyUpperPairs: Boolean,
-      forceExact: Boolean = false,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
-    import graft.functions.VectorOps._
     val mat = VecScan.collectMatIfFits(pts, "id", "v")
     if (mat.isDefined) {
       VecScan.range(pts, "id", "v", mat.get, tau,
         excludeSelf = true, onlyUpperPairs = onlyUpperPairs)
-    } else if (!forceExact) {
+    } else {
       // never silent: results become approximate here, and at tau ~0.5 the
       // default 8x8 bands are far from recall 1 — surface both facts
       logWarning(
         f"rangePairs: input exceeds the broadcast bound " +
-        f"(${VecScan.MaxBroadcastBytesKey}); escalating from the exact scan to " +
+        f"(${Regime.MaxBroadcastBytes.key}); escalating from the exact scan to " +
         f"SRP-LSH candidate pairs ($nBands bands x $bitsPerBand bits, estimated " +
         f"worst-case pair recall ${srpRecallAtTau(tau, nBands, bitsPerBand)}%.3f " +
-        f"at tau=$tau%.3f). Raise nBands to trade cost for recall, or pass " +
-        f"exactPairs=true to keep the exact O(n^2) plan.")
+        f"at tau=$tau%.3f). Raise nBands to trade cost for recall.")
       val upper = Ann.srpCandidatePairs(pts, "id", "v", tau, nBands, bitsPerBand)
         .select(col("i").as("left_id"), col("j").as("right_id"), col("score"))
       if (onlyUpperPairs) upper
       else upper.union(upper.select(col("right_id"), col("left_id"), col("score")))
-    } else {
-      val a = pts.select(col("id").as("left_id"), col("v").as("va"))
-        .withColumn("na", norm(col("va")))
-      val b = pts.select(col("id").as("right_id"), col("v").as("vb"))
-        .withColumn("nb", norm(col("vb")))
-      val pred = if (onlyUpperPairs) col("left_id") < col("right_id")
-        else col("left_id") =!= col("right_id")
-      a.join(b, pred)
-        .withColumn("score",
-          cosineWithNorms(dot(col("va"), col("vb")), col("na"), col("nb")))
-        .filter(col("score") >= lit(tau))
-        .select("left_id", "right_id", "score")
     }
   }
 
@@ -250,12 +223,11 @@ object Clustering extends Logging {
     * EXACT while the table fits the broadcast bound; above it ε-neighbor
     * candidates come from the SRP-LSH bucket join (recall < 1 near the
     * threshold → degrees can undercount; a logWarning is emitted and
-    * `nBands`/`bitsPerBand` size the recall — see [[srpRecallAtTau]]). Pass
-    * `exactPairs=true` to keep the exact O(n²) crossJoin above the bound.
+    * `nBands`/`bitsPerBand` size the recall — see [[srpRecallAtTau]]).
     */
   def dbscanCosine(
       df: DataFrame, idCol: String, vecCol: String,
-      eps: Double, minSamples: Int = 2, exactPairs: Boolean = false,
+      eps: Double, minSamples: Int = 2,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     import graft.functions.VectorOps._
     val tau = 1.0 - eps
@@ -274,8 +246,7 @@ object Clustering extends Logging {
     // border stages (3 shuffles + 2 checkpoints) — this is the default path
     // for dedup_rows.
     if (minSamples <= 2) {
-      val edges = rangePairs(pts, tau, onlyUpperPairs = true, forceExact = exactPairs,
-          nBands = nBands, bitsPerBand = bitsPerBand)
+      val edges = rangePairs(pts, tau, onlyUpperPairs = true, nBands, bitsPerBand)
         .select(col("left_id").as("i"), col("right_id").as("j"))
       // edge-incident components only; everything else is noise (-1)
       val labels = componentsOfEdgeIncident(edges)
@@ -285,8 +256,7 @@ object Clustering extends Logging {
 
     // ε-neighbor pairs (i != j), both directions retained by symmetry of the
     // predicate; checkpointed so downstream stages never re-run the self-scan
-    val nbrs = rangePairs(pts, tau, onlyUpperPairs = false, forceExact = exactPairs,
-        nBands = nBands, bitsPerBand = bitsPerBand)
+    val nbrs = rangePairs(pts, tau, onlyUpperPairs = false, nBands, bitsPerBand)
       .select(col("left_id").as("i"), col("right_id").as("j"))
       .localCheckpoint(true)
 
@@ -316,17 +286,14 @@ object Clustering extends Logging {
   /** Pure ε-graph single-linkage clustering (no density requirement): connected
     * components of the cosine >= tau graph; singletons are their own cluster.
     * The distributed backend for near-dup detection. Exact within the broadcast
-    * bound; above it SRP-LSH candidates unless `exactPairs=true` (see
-    * [[dbscanCosine]]).
+    * bound; above it SRP-LSH candidates (see [[dbscanCosine]]).
     */
   def epsilonCluster(
       df: DataFrame, idCol: String, vecCol: String, tau: Double,
-      exactPairs: Boolean = false,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     import graft.functions.VectorOps._
     val pts = df.select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-    val edges = rangePairs(pts, tau, onlyUpperPairs = true, forceExact = exactPairs,
-        nBands = nBands, bitsPerBand = bitsPerBand)
+    val edges = rangePairs(pts, tau, onlyUpperPairs = true, nBands, bitsPerBand)
       .select(col("left_id").as("i"), col("right_id").as("j"))
     connectedComponents(pts.select("id"), edges)
       .withColumnRenamed("component", "cluster")
@@ -357,7 +324,6 @@ object Clustering extends Logging {
       threshold: Double = 0.5, minClusterSize: Int = 2,
       sep: String = Serialize.DefaultSep,
       method: String = "SLINK",
-      exactPairs: Boolean = false,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     Keys.requireNoReserved(df, Seq("__graft_id", "__graft_text", "__graft_vec", "cluster"))
     val withId = df.withColumn("__graft_id", monotonically_increasing_id())
@@ -373,7 +339,7 @@ object Clustering extends Logging {
     val labels = method match {
       case "SLINK" =>
         dbscanCosine(emb, "__graft_id", "__graft_vec",
-          eps = 1.0 - threshold, minSamples = minClusterSize, exactPairs = exactPairs,
+          eps = 1.0 - threshold, minSamples = minClusterSize,
           nBands = nBands, bitsPerBand = bitsPerBand)
       case "agglomerative" =>
         HierarchicalClustering.agglomerative(emb, "__graft_id", "__graft_vec",
@@ -396,7 +362,6 @@ object Clustering extends Logging {
   def dedupRows(
       df: DataFrame, on: Seq[String], embedder: Embedder,
       threshold: Double = 0.55, minClusterSize: Int = 2,
-      exactPairs: Boolean = false,
       nBands: Int = 8, bitsPerBand: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     Keys.requireNoReserved(df, Seq("__graft_ord"))
@@ -406,7 +371,7 @@ object Clustering extends Logging {
     val exact = withOrd.withColumn("__rn", row_number().over(exactW))
       .filter(col("__rn") === 1).drop("__rn")
     val clustered = clusterRows(exact, on, embedder, threshold, minClusterSize,
-      exactPairs = exactPairs, nBands = nBands, bitsPerBand = bitsPerBand)
+      nBands = nBands, bitsPerBand = bitsPerBand)
     val w = Window.partitionBy(col("cluster")).orderBy(col("__graft_ord"))
     clustered
       .withColumn("__rn", row_number().over(w))

@@ -90,7 +90,7 @@ object Dedup extends Logging {
     // it is pinned eagerly to compute shingles/minhash once — EXCEPT when
     // the whole plan folds to a LocalRelation (a serving-regime batch):
     // there the fold is a cheap driver-side eval, and the checkpoint would
-    // cost a scheduler job per search for nothing (r10 serving census)
+    // cost a scheduler job per search for nothing (serving job census)
     val folded = sig.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     if (folded) sig else sig.localCheckpoint(true)
@@ -250,7 +250,7 @@ object Dedup extends Logging {
       jaccardThreshold: Double): Option[DataFrame] = {
     val spark = sig.sparkSession
     val numHashes = numBands * rowsPerBand
-    val collected = VecScan.collectIfFits(sig, VecScan.maxBroadcastBytes(spark))(
+    val collected = VecScan.collectIfFits(sig, Regime.MaxBroadcastBytes(spark))(
       lshDocBytes(_, numHashes), readLshDoc)
     if (collected.isEmpty) return None
     val docs = collected.get.filter(_.id != null).sortBy(_.id.longValue)
@@ -270,7 +270,7 @@ object Dedup extends Logging {
       m.values.asScala.filter(_.length > 1)
     }
     val rowPairs = buckets.iterator.map(g => g.length.toLong * (g.length - 1) / 2).sum
-    if (rowPairs > Clustering.smallGraphEdgeLimit(spark)) return None
+    if (rowPairs > Regime.SmallGraphEdgeLimit(spark)) return None
 
     // dense id index u: distinct ids in order, rows of u in [start(u), start(u + 1))
     val ids = mutable.ArrayBuilder.make[Long]
@@ -371,8 +371,8 @@ object Dedup extends Logging {
     * for callers that can build the shingle arrays cheaper than a full
     * re-tokenize — e.g. the scale-stress leg, whose replicas share every
     * base-document shingle by construction, so pinning the 1x base arrays
-    * and expanding in-plan beats checkpointing m copies (judge r6: the
-    * multiplied checkpoint was 5.9s of GC under a 4.8s wall). Four branches
+    * and expanding in-plan beats checkpointing m copies (the multiplied
+    * checkpoint was 5.9s of GC under a 4.8s wall). Four branches
     * read `shingled` (postings twice via the self-join, sizes, survivor
     * verify): pass a pinned frame or one whose recompute is cheap.
     */
@@ -864,7 +864,7 @@ object Dedup extends Logging {
     * docs never generate candidates (a post-filter on the output would
     * verify and then discard them). No broadcast hint — AQE broadcasts a
     * small allow set. A PINNED index with a driver-sized allow-list still
-    * serves from the base index's mirrors (r13, [[Serving.maxDriverAllowIds]]):
+    * serves from the base index's mirrors ([[Regime.MaxDriverAllowIds]]):
     * candidate ids are filtered in the fold before Jaccard verification —
     * zero jobs on the driver mirror, one on the partitioned tier, same
     * rows. Search-only: append/delete/compact take the index PATH and
@@ -900,7 +900,7 @@ object Dedup extends Logging {
     if (served.isDefined) return served.get
     // distributed plan: a view's allow semi-join sits on the postings scan,
     // before band candidates form (see [[minhashFilteredView]]). The ALLOW
-    // side is cast into the id domain, not the ids into long (advisor r13):
+    // side is cast into the id domain, not the ids into long:
     // long→string never fails, while string-id postings under ANSI mode
     // would throw on the first non-numeric id — a non-numeric id must be
     // EXCLUDED by a long-keyed filter, not crash the search
@@ -1118,7 +1118,7 @@ object Dedup extends Logging {
     * decision is `groupBy(p).agg(min(struct(ord, pos)))` — a hash aggregate
     * with PARTIAL (map-side) combine, so a cross-site boilerplate paragraph
     * repeated a billion times collapses to one candidate row per map task
-    * before the shuffle (advisor r3: the previous row_number window funneled
+    * before the shuffle (a row_number window instead would funnel
     * every occurrence of a hot paragraph into one task — a straggler/OOM
     * hazard at 100 TB). The join back on `p` is first-row-vs-all, and AQE's
     * skew-join split handles residual hot keys (windows get no such help);

@@ -255,8 +255,8 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     * Borůvka ([[hdbscanDistributed]]) reach the SAME labels even though
     * mutual-reachability weights tie constantly (w = max(core_a, core_b, d):
     * one hot core distance ties every edge it dominates). A binary-merge tail
-    * would be edge-order-dependent under those ties (r4: 41/500 labels
-    * diverged before batching).
+    * would be edge-order-dependent under those ties (41/500 labels diverged
+    * before batching).
     */
   private def labelsFromMst(
       spark: SparkSession, ids: Array[Long],
@@ -444,8 +444,8 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     * whenever MST weights are tie-free (any MST yields the same
     * single-linkage component evolution; ties are implementation-defined in
     * the driver kernel too — see [[labelsFromMst]]).
-    */
-  /** `exactPairBound` also bounds the checkpointed candidate-edge table: the
+    *
+    * `exactPairBound` also bounds the checkpointed candidate-edge table: the
     * complete graph has n(n-1)/2 rows (~32M at the 8192 default, ~800 MB of
     * executor storage with spill) — raise it only with the memory to match;
     * the SRP-LSH path above the bound materializes only bucket collisions.
@@ -510,7 +510,7 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     // maxDriverMstEdges entries — the driver holds the full n−1-edge MST at
     // the end anyway, and round 1 already collects ≤ n/2 selection edges);
     // each round broadcasts the flattened id→root remap into the edge
-    // labeling, so a round is ONE agg+collect job. The r4 shape — a
+    // labeling, so a round is ONE agg+collect job. The earlier shape — a
     // distributed `comp` table re-joined, re-mapped, and re-checkpointed
     // every round — made small-n walls pure job-scheduling overhead
     // (q_hdbscan_parity: 57 jobs, wall ≈ 100 ms × jobs with taskSum under 5 s).
@@ -527,9 +527,9 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
       r0
     }
     val mstBuf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    // 3a. Kruskal fast path (r16): when the CANDIDATE edge table itself fits
-    // the existing driver bound (the same maxDriverMstEdges the MST collect
-    // and the CC union-find fast path already accept — the exact path has
+    // 3a. Kruskal fast path: when the CANDIDATE edge table itself fits
+    // [[Regime.KruskalEdgeBound]] (unset, the same maxDriverMstEdges the MST
+    // collect and the CC union-find fast path accept — the exact path has
     // n(n-1)/2 edges, known without a job), collect it ONCE and run Kruskal
     // under the identical strict total order (w, a, b). A strict total order
     // on edges makes the minimum spanning forest UNIQUE, so Kruskal selects
@@ -539,8 +539,7 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     // one collect (q_hdbscan_parity spent its wall on the round chain, not
     // on compute: 39 jobs, task_min 0.6 s, wall 1.4-1.6 s).
     val exactPairCount = if (exact) n * (n - 1) / 2 else -1L
-    val kruskalBound = sys.props.getOrElse(
-      "graft.hdbscan.kruskalEdgeBound", maxDriverMstEdges.toString).toLong
+    val kruskalBound = Regime.KruskalEdgeBound.orElse(spark, maxDriverMstEdges)
     if (exactPairCount >= 0 && exactPairCount <= kruskalBound) {
       val arr = edges.select(col("a"), col("b"), col("w")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -606,7 +605,7 @@ object HierarchicalClustering extends org.apache.spark.internal.Logging {
     // component representatives with an above-any-real-density weight so the
     // dendrogram stays a single tree and every point keeps a label. Union
     // roots are the min id of their component (unions parent the larger root
-    // under the smaller), so reps match the r4 distributed min(id)-per-comp.
+    // under the smaller), so reps match a distributed min(id)-per-comp.
     if (mstBuf.length < n - 1) {
       val reps = ids.map(find).distinct.sorted
       val bridgeW = (mstBuf.iterator.map(_._3) ++ Iterator(2.0)).max * 2 + 1.0

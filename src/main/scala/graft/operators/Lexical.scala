@@ -23,7 +23,7 @@ object Lexical {
     * vertical tab while RE2-style engines' does not; the explicit class means
     * any engine reproduces the tokens.
     *
-    * Since r5 a native single-byte-scan kernel ([[graft.functions.TermsExpr]],
+    * A native single-byte-scan kernel ([[graft.functions.TermsExpr]],
     * codegen, no per-row regex) — value-identical to the previous
     * `array_remove(split(lower(trim(text)), ...), "")` built-in composition
     * (equivalence property-tested each build and hash-checked by every
@@ -36,7 +36,7 @@ object Lexical {
     * array column) because putting `size(terms(text))` in the same select as
     * `explode(terms(text))` makes the optimizer hoist the `size` ABOVE the
     * Generate — re-tokenizing once per OUTPUT TOKEN instead of once per doc.
-    * Measured (r5, sf0.1, jstack-confirmed in `UTF8String.split`): the hoisted
+    * Measured (sf0.1, jstack-confirmed in `UTF8String.split`): the hoisted
     * form burned ~3.5 s single-task in every bm25 materialization; this form
     * tokenizes each doc once (two-expression CollapseProject is blocked by the
     * double reference to the non-cheap array).
@@ -49,7 +49,7 @@ object Lexical {
         explode(col("__toks")).as("term"))
 
   /** Ids must be integral: a silent `cast("long")` would turn string keys into
-    * nulls that vanish inside the top-k aggregate with no error (judge r3).
+    * nulls that vanish inside the top-k aggregate with no error.
     */
   private def requireIntegralId(df: DataFrame, c: String, side: String): Unit = {
     import org.apache.spark.sql.types._
@@ -73,7 +73,7 @@ object Lexical {
     * Returns `(query_id, rank, doc_id, score)`, rank 1-based by
     * `(score desc, doc_id asc)` — deterministic under ties.
     *
-    * Scale shape (each step shrinks the data — judge r3: the corpus
+    * Scale shape (each step shrinks the data — the corpus
     * vocabulary must never reach a shuffle in the ad-hoc regime):
     *  1. the query-term vocabulary (small by regime) broadcast-semi-joins the
     *     exploded token stream BEFORE any aggregation, so the only (doc,term)
@@ -84,7 +84,7 @@ object Lexical {
     *     aggregate — no separate doc-length join.
     *  2. the restricted tf table is checkpointed once and reused by both the
     *     df(t) aggregate and the scoring join — without it, Spark would
-    *     re-scan the corpus for each broadcast subtree (the r3 16.9 s plan).
+    *     re-scan the corpus for each broadcast subtree (a 16.9 s plan at sf0.1).
     *  3. corpus stats (`n_docs`, `avgdl`) come from `dlCol` when the caller
     *     already carries a BM25-consistent token count (the usual pipeline
     *     case — zero extra scans); otherwise from one narrow no-shuffle
@@ -163,7 +163,7 @@ object Lexical {
       appendedPostings: Long = 0L, deletedPostings: Long = 0L,
       allowed: Option[DataFrame] = None) {
     /** Tombstoned postings ÷ scanned postings — the delete-cadence signal
-      * (judge r13 direction: real corpora shrink too). Deletes are EXACT in
+      * (real corpora shrink too). Deletes are EXACT in
       * the scores (see [[bm25DeleteFromIndex]]); what accumulates is
       * physical: every search scans the tombstoned rows before the
       * exclusion filter drops them, and stats stay un-baked. Compact when
@@ -217,7 +217,7 @@ object Lexical {
     * top-k — candidates drop as early as semantics permit. No broadcast
     * hint: AQE broadcasts a small allow-list and shuffles a tenant-sized
     * one, both correct at 100 TB. A pinned view whose allow-list fits
-    * [[Serving.maxDriverAllowIds]] serves from the base index's mirrors
+    * [[Regime.MaxDriverAllowIds]] serves from the base index's mirrors
     * (the driver mirror, or the partitioned tier over the resident bound),
     * filtering membership after scoring; any other view runs the
     * distributed plan. Search-only: append/delete/compact take the index
@@ -501,23 +501,6 @@ object Lexical {
     }
   }
 
-  /** Driver materialization bound for a search's exploded (query_id, term)
-    * pairs — the BM25 sibling of [[Ann.maxProbeRows]] (judge r7: "same
-    * hardening applies"). Under the bound the pairs are collected (the
-    * serving regime: everything query-sided becomes a LocalRelation and the
-    * bucket restriction is STATIC partition pruning). Over it — a
-    * corpus-sized query batch — nothing touches the driver: the pairs stay
-    * distributed, the bucket restriction becomes a broadcast semi-join on
-    * `__bkt` (≤ nBuckets distinct rows by construction), and scoring runs
-    * the joined form.
-    */
-  val MaxQueryTermRowsKey = "spark.graft.bm25.maxQueryTermRows"
-  val DefaultMaxQueryTermRows: Long = 1L << 20
-
-  def maxQueryTermRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(MaxQueryTermRowsKey).map(_.toLong)
-      .getOrElse(DefaultMaxQueryTermRows)
-
   /** Count of searches that took the over-bound distributed path —
     * observable for the guard spec (the [[Ann.joinRestrictionSearches]]
     * move).
@@ -529,9 +512,9 @@ object Lexical {
     * list is bounded by the DISTINCT BUCKET count (≤ nBuckets values, never
     * vocabulary-sized), so the `isin` reaches the reader as partition pruning
     * and untouched buckets are never read. Output contract = [[bm25TopK]].
-    * Query batches over [[maxQueryTermRows]] take a fully distributed path
-    * (semi-join bucket restriction + joined scoring), differential-tested
-    * row-identical.
+    * Query batches over [[Regime.MaxQueryTermRows]] take a fully
+    * distributed path (semi-join bucket restriction on `__bkt`, ≤ nBuckets
+    * distinct rows, + joined scoring), differential-tested row-identical.
     */
   def bm25SearchIndex(
       index: Bm25Index,
@@ -549,7 +532,7 @@ object Lexical {
     // matters in the regime this index exists for: many small searches,
     // each dominated by fixed job overhead, not data. Whether the limit
     // truncated decides the regime (no separate count job).
-    val boundQt = math.min(maxQueryTermRows(spark), (Int.MaxValue - 1).toLong).toInt
+    val boundQt = Regime.MaxQueryTermRows.rows(spark)
     // lazy: only the non-folded / over-bound regimes consume this plan, and
     // Dataset creation runs full ANALYSIS eagerly — a measurable per-search
     // cost on the serving path that never touches it
@@ -585,7 +568,7 @@ object Lexical {
         }
         out.toArray
       } else {
-        // Plain CollectLimit, NO coalesce(1) (r15). The r9 coalesce avoided
+        // Plain CollectLimit, NO coalesce(1). A coalesce avoided
         // CollectLimitExec's incremental partition probing for small
         // serving batches — but those batches are LocalRelations served by
         // the zero-job branch above, and every remaining caller's query
@@ -623,7 +606,7 @@ object Lexical {
     // once per partition of the partitioned tier, in a lazy one-partition
     // plan that any action runs as one job. Decided BEFORE the per-term
     // XxHash evals and the pruned-scan Dataset analysis below — those are
-    // executor-plan setup neither tier uses (judge r11 advice). Same contrib
+    // executor-plan setup neither tier uses. Same contrib
     // op order, same fold order, same TopKBuffer — spec-pinned bit-identical
     // to the batch-fold plan below. A filtered view serves there too when
     // its allow set is driver-sized: the fold computes every score from the
@@ -737,7 +720,7 @@ object Lexical {
     // When the caller supplied a (term, __trank) ranking (rank order ≡ term
     // byte order by construction — see rankTermsInPlan/rankTermsDriverSide),
     // the fold below runs int-keyed with no per-row key-byte clone in the
-    // aggregate buffers (r10; the clones were the joined scoring stage's
+    // aggregate buffers (the clones were the joined scoring stage's
     // dominant allocation: q_stress_bm25 2.30→1.44 s). Callers whose query
     // vocabulary is NOT small-by-contract (the over-bound guard regime)
     // pass None and keep the byte-keyed fold: ranking there would cost a
@@ -753,7 +736,7 @@ object Lexical {
     // bit-identical across engines (a plain sum(double) is accumulation-order
     // dependent). Native OrderedSumAggregate, not collect_list → sort_array →
     // aggregate(...): the HOF fold ran interpreted and the struct-per-row
-    // partial agg dominated the scoring stage's CPU (r5, sf0.1).
+    // partial agg dominated the scoring stage's CPU (sf0.1).
     // The explicit group-key repartition BEFORE the aggregate is deliberate:
     // orderedSum is a collect-style aggregate, so its map-side partial phase
     // reduces nothing — it just builds and reserializes the same pairs at

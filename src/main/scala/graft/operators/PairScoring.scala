@@ -72,7 +72,7 @@ object PairScoring {
     // by the input, not the output; the broadcast side materializes anyway.
     val lhs = l.drop("__t").localCheckpoint(true)
     val joined =
-      if (r0.count() * embedder.dim.toLong * 8L <= VecScan.maxBroadcastBytes(r0.sparkSession))
+      if (r0.count() * embedder.dim.toLong * 8L <= Regime.MaxBroadcastBytes(r0.sparkSession))
         lhs.crossJoin(broadcast(rhs))
       else lhs.crossJoin(rhs)
     joined

@@ -92,7 +92,7 @@ object Pq {
     // the seeded Fisher-Yates shuffles are drawn SEQUENTIALLY up front (the
     // single Random's stream is the determinism contract — subspace j's
     // shuffle depends on every earlier draw), then the flop-heavy Lloyd
-    // loops run in PARALLEL across subspaces (r15): they are independent,
+    // loops run in PARALLEL across subspaces: they are independent,
     // write disjoint `flat` regions, and keep their per-subspace arithmetic
     // order — the codebook stays bit-identical to the sequential fit
     val initIdx: Array[Array[Int]] = Array.fill(m) {
@@ -221,7 +221,7 @@ object Pq {
     * query's LUT ONCE and then pays `m` lookups per candidate — ADC's
     * point is LUT amortization across candidates, which the scan shape
     * keeps; the exact rerank joins the survivors back to the original
-    * vectors. A corpus whose matrix exceeds [[VecScan.maxBroadcastBytes]]
+    * vectors. A corpus whose matrix exceeds [[Regime.MaxBroadcastBytes]]
     * fails loudly unless `skipSizeCheck`.
     */
   def pqTopK(
@@ -234,7 +234,7 @@ object Pq {
     Ann.scanTopK(queries, qId, qVec, corpus, cId, cVec, k, Resident.PqScoring(cb, rerankFactor),
       excludeSelf, skipSizeCheck, bound =>
         s"corpus PQ matrix (8 id + ${cb.m} code + 8 norm bytes per vector) exceeds the " +
-          s"$bound-byte broadcast bound — raise ${VecScan.MaxBroadcastBytesKey} or " +
+          s"$bound-byte broadcast bound — raise ${Regime.MaxBroadcastBytes.key} or " +
           "shard the corpus (PQ within IVF cells)")
   }
 }

@@ -124,7 +124,7 @@ object Quantize {
     * that quantizes each QUERY once and pays one exact integer dot per
     * candidate; the rerank is an equi-join on corpus id against the
     * original vectors — no all-pairs shuffle anywhere. A corpus whose
-    * matrix exceeds [[VecScan.maxBroadcastBytes]] fails loudly with the
+    * matrix exceeds [[Regime.MaxBroadcastBytes]] fails loudly with the
     * alternative (IVF cells, [[Ann.annSearchIndexInt8]]) unless
     * `skipSizeCheck`.
     */
@@ -138,7 +138,7 @@ object Quantize {
     Ann.scanTopK(queries, qId, qVec, corpus, cId, cVec, k, Resident.Int8Scoring(rerankFactor),
       excludeSelf, skipSizeCheck, bound =>
         "corpus code matrix (8 id + 1 per lane + 8 norm bytes per vector) exceeds the " +
-          s"$bound-byte broadcast bound — raise ${VecScan.MaxBroadcastBytesKey} " +
+          s"$bound-byte broadcast bound — raise ${Regime.MaxBroadcastBytes.key} " +
           "or compose with the IVF cells instead (Ann.annSearchIndexInt8 " +
           "quantizes within partition-pruned cells)")
   }

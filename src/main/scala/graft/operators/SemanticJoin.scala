@@ -34,15 +34,13 @@ object SemanticJoin {
       right: DataFrame, rightId: String, rightVec: String,
       k: Int,
       excludeSelf: Boolean = false,
-      broadcastRight: Boolean = true,
       skipSizeCheck: Boolean = false): DataFrame = {
     // the broadcast path is size-guarded: an over-limit right side falls back
     // to the shuffle plan instead of collecting to the driver (100 TB safety).
     // skipSizeCheck lets callers with a size guarantee by construction (e.g. a
     // ≤nCentroids centroid table) collect without the bound.
     val mat =
-      if (!broadcastRight) None
-      else if (skipSizeCheck) Some(VecScan.collectMat(right, rightId, rightVec))
+      if (skipSizeCheck) Some(VecScan.collectMat(right, rightId, rightVec))
       else VecScan.collectMatIfFits(right, rightId, rightVec)
     mat match {
       case Some(m) => VecScan.knn(left, leftId, leftVec, m, k, excludeSelf)
@@ -86,10 +84,8 @@ object SemanticJoin {
       right: DataFrame, rightId: String, rightVec: String,
       tau: Double,
       excludeSelf: Boolean = false,
-      keepUnmatched: Boolean = true,
-      broadcastRight: Boolean = true): DataFrame = {
-    val mat = if (broadcastRight) VecScan.collectMatIfFits(right, rightId, rightVec) else None
-    mat match {
+      keepUnmatched: Boolean = true): DataFrame = {
+    VecScan.collectMatIfFits(right, rightId, rightVec) match {
       case Some(m) =>
         VecScan.range(left, leftId, leftVec, m, tau, excludeSelf, keepUnmatched = keepUnmatched)
       case None =>
@@ -143,19 +139,13 @@ object SemanticJoin {
     * Output: all df1 columns, all df2 columns (shared names suffixed), `score`;
     * k rows per left row, ordered (left, rank).
     */
-  /** `stableOrder=false` skips the final global `orderBy(left_id, rank)` — the
-    * reference's stable-output contract is a cross-partition sort, which at
-    * scale is a needless extra shuffle when the merge feeds another operator
-    * rather than a human-facing sink (VERDICT r1: make it opt-out).
-    */
   def mergeKnn(
       df1: DataFrame, df2: DataFrame,
       on: Seq[String] = Nil, leftOn: Seq[String] = Nil, rightOn: Seq[String] = Nil,
       embedder: Embedder,
       k: Int = 1,
       suffixes: (String, String) = ("_x", "_y"),
-      sep: String = Serialize.DefaultSep,
-      stableOrder: Boolean = true): DataFrame = {
+      sep: String = Serialize.DefaultSep): DataFrame = {
     val (lk, rk) = Keys.resolve(df1.columns, df2.columns, on, leftOn, rightOn)
     val l = withTextVec(df1, lk, LeftIdCol, embedder, sep)
     val r = withTextVec(df2, rk, RightIdCol, embedder, sep)
@@ -176,8 +166,7 @@ object SemanticJoin {
 
     val joined = knn.join(ls.withColumnRenamed(LeftIdCol, "left_id"), Seq("left_id"))
       .join(rs.withColumnRenamed(RightIdCol, "right_id"), Seq("right_id"))
-    (if (stableOrder) joined.orderBy(col("left_id"), col("rank")) else joined)
-      .select(outCols: _*)
+    joined.orderBy(col("left_id"), col("rank")).select(outCols: _*)
   }
 
   /** Semantic 1-NN join — the engine's `merge` (reference: infer.py:24-164). */

@@ -1,7 +1,7 @@
 package graft.operators
 
 /** Shared serving-regime settings for the persisted indexes. Every family
-  * follows one rule: a PINNED index under [[Resident.driverResidentRows]]
+  * follows one rule: a PINNED index under [[Regime.DriverResidentRows]]
   * serves from its driver mirror (zero jobs), a pinned index over it from
   * its partitioned tier ([[Resident.Partitioned]], one job), and anything
   * else runs the distributed plan. The table lives in README "Retrieval
@@ -9,13 +9,13 @@ package graft.operators
   * [[pinned]], the allow-set bound below and [[Resident.eligible]];
   * [[ServingSession]] adds the generation-following lifecycle on top.
   *
-  * Why the tiers exist, measured (r10, `ServingProbe` with PROBE_STEADY on
+  * Why the tiers exist, measured (`ServingProbe` with PROBE_STEADY on
   * the bench box): an EMPTY one-task job (`spark.range(1).count()`) costs
   * 0.06–0.08 s — the local-mode scheduler round-trip floor every 1-job
   * search pays before any data is touched — so a serving search's wall is
   * jobs × floor, not data. The driver mirror removes the floor (measured
   * sf0.1 census: 0.06/0.025/0.023/0.021 s per bm25/ann/int8/minhash
-  * search, from 0.164/0.088/0.115/0.169 at r10's 1-job paths); over the
+  * search, from 0.164/0.088/0.115/0.169 on the 1-job paths); over the
   * bound, the partitioned tier pays it once per search.
   */
 object Serving {
@@ -30,34 +30,20 @@ object Serving {
   def pinned(dfs: org.apache.spark.sql.DataFrame*): Boolean =
     dfs.forall(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
 
-  /** Filtered serving (r13): a filtered VIEW can still serve from the
-    * serving tiers when its allow-list is itself driver-sized — the id set
-    * is collected ONCE per view (one bounded job, amortized across the
-    * view's searches) and each search filters candidate ids in the fold. Filter-context exact: scores and corpus stats are
-    * computed BEFORE the membership check, so filtering changes top-k
-    * membership only, never a score. Over the bound the view keeps the
-    * distributed semi-join plan — a tenant-sized allow-list has no business
-    * on the driver.
-    */
-  val MaxDriverAllowIdsKey = "spark.graft.serving.maxDriverAllowIds"
-
-  /** Same order as the resident row bound: an allow-list bigger than the
-    * index rows it filters has stopped being a "filter".
-    */
-  val DefaultMaxDriverAllowIds: Int = 1 << 17
-
-  def maxDriverAllowIds(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption(MaxDriverAllowIdsKey).map(_.toInt)
-      .getOrElse(DefaultMaxDriverAllowIds)
-
   /** Collect a view's `(__allow_id: long)` frame into a driver set, or None
-    * when it exceeds [[maxDriverAllowIds]] (the limit stops the single task
-    * at bound + 1 rows — no unbounded driver materialization either way).
+    * when it exceeds [[Regime.MaxDriverAllowIds]] (the limit stops the
+    * single task at bound + 1 rows — no unbounded driver materialization
+    * either way). A filtered VIEW serves from the serving tiers when its
+    * allow-list is driver-sized: the set is collected once per view and
+    * each search filters candidate ids in the fold. Scores and corpus stats
+    * are computed BEFORE the membership check, so filtering changes top-k
+    * membership only, never a score. Over the bound the view keeps the
+    * distributed semi-join plan.
     */
   private[operators] def collectAllowSet(
       allowed: org.apache.spark.sql.DataFrame)
       : Option[java.util.HashSet[java.lang.Long]] = {
-    val bound = maxDriverAllowIds(allowed.sparkSession)
+    val bound = Regime.MaxDriverAllowIds.rows(allowed.sparkSession)
     val rows = allowed.coalesce(1).limit(bound + 1).collect()
     if (rows.length > bound) None
     else {

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Generation-aware serving session (judge r11 #1): the composition of the
+/** Generation-aware serving session: the composition of the
   * driver-resident serving tier ([[Resident]]) with generation-managed
   * index maintenance ([[IndexMaintenance]]) that neither had alone — a
   * long-lived server used to pin gen-N's frames and keep serving them
@@ -166,16 +166,14 @@ final class ServingSession[I] private[operators] (
   /** Current index, following generation swaps per the check cadence. */
   def index: I = resolved._2
 
-  // Keyed per-generation cache for [[derived]] (r14, judge r13 #2):
+  // Keyed per-generation cache for [[derived]]:
   // access-order LinkedHashMap = LRU once the tenant count passes the
   // bound. Guarded by the session monitor (the same lock swaps and close
   // take), entries dropped on swap/evict/close with the same holder
   // accounting as the old single slot.
   private val derivedCache =
     new java.util.LinkedHashMap[AnyRef, (Int, I)](16, 0.75f, true)
-  private val maxDerived: Int =
-    spark.conf.getOption(ServingSession.MaxDerivedViewsKey).map(_.toInt)
-      .getOrElse(ServingSession.DefaultMaxDerivedViews)
+  private val maxDerived: Long = Regime.MaxDerivedViews(spark)
 
   /** Count of [[derived]] calls that actually ran `derive` — observable
     * for the specs (zero re-derives per search after warm is the
@@ -183,7 +181,7 @@ final class ServingSession[I] private[operators] (
     */
   private[graft] val deriveCount = new java.util.concurrent.atomic.AtomicLong
 
-  /** A per-generation DERIVED view of the served index (r13) — the
+  /** A per-generation DERIVED view of the served index — the
     * composition seam for filtered serving on a LIVE root: pass e.g.
     * `sess.derived(allowDf)(i => Lexical.bm25FilteredView(i, allowDf,
     * "doc_id"))` and search the returned view. `derive` runs once per
@@ -192,20 +190,20 @@ final class ServingSession[I] private[operators] (
     * amortizes across searches AND follows the lifecycle — a stale view
     * serving a superseded generation is exactly the bug this prevents.
     *
-    * MULTI-TENANT (r14): the cache is a keyed LRU — K tenants alternating
+    * MULTI-TENANT: the cache is a keyed LRU — K tenants alternating
     * on one session each keep their warm view across searches AND swaps
-    * (the r13 single slot re-derived per call under interleaving, quietly
+    * (a single slot would re-derive per call under interleaving, quietly
     * re-paying the allow-set collect that 0-job serving exists to avoid).
     * Keys compare by `equals`, which for DataFrames is reference identity
     * — reuse ONE key object per tenant (the tenant's allow frame, or a
-    * stable string id). Past [[ServingSession.MaxDerivedViewsKey]]
+    * stable string id). Past [[Regime.MaxDerivedViews]]
     * (default 16) the least-recently-used view is evicted and re-derived
     * on next use. Derived views share the base generation's pinned frames
     * and mirror (the filtered-view constructors inherit the holder's
     * shareKey), so swap/release accounting is untouched: K cached views
     * cost K shared-slot refs on ONE mirror, zero extra bytes.
     *
-    * Swap-race-safe (advisor r13): `derive` runs OUTSIDE the session
+    * Swap-race-safe: `derive` runs OUTSIDE the session
     * monitor (it may run Spark jobs), and the cache write re-checks the
     * generation under the monitor — a derive that straddles a concurrent
     * swap drops its stale view's holder reference and retries against
@@ -262,7 +260,7 @@ final class ServingSession[I] private[operators] (
     // derived views of the released generation hold their OWN references
     // on the shared mirror slot (each holder acquired independently) —
     // drop them here or a server cycling generations leaks one slot ref
-    // per cached view per swap (review r13: the refcount never reached
+    // per cached view per swap (the refcount would never reach
     // zero, so superseded mirrors and their census entries survived
     // until GC). Views of OTHER generations stay cached.
     val it = derivedCache.entrySet().iterator()
@@ -274,7 +272,7 @@ final class ServingSession[I] private[operators] (
     // own), then the frames — but ONLY when this session was the LAST
     // pinner of this generation: Spark's CacheManager is PLAN-keyed, so a
     // blind unpersist here would also unpin a SIBLING session's identical
-    // frames (r13 — the two-session sharing spec caught exactly that)
+    // frames (the two-session sharing spec pins this)
     drop(idx)
     if (ServingSession.PinRegistry.unpin(pinKey(gen, idx)))
       frames(idx).foreach(_.unpersist(false))
@@ -293,17 +291,7 @@ final class ServingSession[I] private[operators] (
 
 object ServingSession {
 
-  /** Derived views kept per live session (r14) — the multi-tenant cache
-    * bound. Each cached view costs one shared-slot ref on the base
-    * generation's mirror (zero extra mirror bytes) plus its collected
-    * allow set, so the default is sized for "a handful of hot tenants
-    * per server process"; raise it when a server legitimately serves
-    * more tenants than this from one session.
-    */
-  val MaxDerivedViewsKey = "spark.graft.serving.maxDerivedViews"
-  val DefaultMaxDerivedViews: Int = 16
-
-  /** Generation-pin refcounts across sessions (r13): Spark's CacheManager
+  /** Generation-pin refcounts across sessions: Spark's CacheManager
     * dedupes cache entries by canonicalized plan, so two sessions over one
     * generation share ONE cache entry — the unpersist must belong to the
     * LAST session releasing that generation, or closing one session

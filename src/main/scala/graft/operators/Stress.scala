@@ -55,15 +55,16 @@ object Stress {
   }
 
   /** The same kNN at `m`x left rows FORCED onto the shuffled
-    * crossJoin + partial-agg top-k fallback (the over-broadcast-bound path):
-    * every candidate pair becomes a row, the bounded TopKAggregate prunes
-    * map-side, ≤k rows per left key shuffle.
+    * crossJoin + partial-agg top-k fallback (the over-broadcast-bound path,
+    * [[Regime.MaxBroadcastBytes]] at 0): every candidate pair becomes a
+    * row, the bounded TopKAggregate prunes map-side, ≤k rows per left key
+    * shuffle.
     */
   def knnShuffleSummary(emb: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int = 5): DataFrame = {
     val left = multiplied(emb.select(col(idCol), col(vecCol)), idCol, m)
-    SemanticJoin.knnJoinVec(left, idCol, vecCol, emb, idCol, vecCol,
-        k = k, broadcastRight = false)
+    Regime.forcing(emb.sparkSession, Regime.MaxBroadcastBytes, 0L)(
+      SemanticJoin.knnJoinVec(left, idCol, vecCol, emb, idCol, vecCol, k = k))
       .groupBy(col("rank"))
       .agg(count(lit(1)).as("n_pairs"),
         round(min(col("score")), 6).as("min_score"),
@@ -94,9 +95,9 @@ object Stress {
     * multiplied scale. Summary: qualifying-pair census + score extrema (the
     * only order-sensitive reduction — the avg's sum — rounded to 3).
     *
-    * Shingles once on the BASE table, before the multiply (judge r6 task 7:
-    * checkpointing the multiplied corpus pinned m copies of every shingle
-    * array — 5.9s of GC under a 4.8s wall). Appending the one replica token
+    * Shingles once on the BASE table, before the multiply (checkpointing
+    * the multiplied corpus pinned m copies of every shingle array — 5.9s
+    * of GC under a 4.8s wall). Appending the one replica token
     * to a text with >= 3 tokens adds exactly one tail shingle
     * `"t_{n-1} t_n rep<r>"` to an otherwise-identical shingle set, so the
     * replica arrays are built in-plan from the pinned 1x arrays by one
@@ -213,7 +214,7 @@ object Stress {
 
   /** Persisted-ANN search at `m`x query rows — the serving regime where the
     * query batch is itself corpus-sized, which is exactly the case the probe
-    * guard ([[Ann.maxProbeRows]]) exists for: the multiplied batch exceeds
+    * guard ([[Regime.MaxProbeRows]]) exists for: the multiplied batch exceeds
     * the forced bound, so the search runs the JOIN-based cell restriction
     * (probe assignment stays distributed, cell restriction is the broadcast
     * semi-join on `__cell`, zero driver materialization) rather than the
@@ -226,8 +227,9 @@ object Stress {
   def annSearchSummary(index: Ann.AnnIndex, emb: DataFrame,
       idCol: String, vecCol: String, m: Int, k: Int = 5, nProbe: Int = 8): DataFrame = {
     val queries = multiplied(emb.select(col(idCol), col(vecCol)), idCol, m)
-    Ann.annSearchIndex(index, queries, idCol, vecCol, k = k, nProbe = nProbe,
-        maxProbeRowsOverride = 1L) // force the over-bound (join) path
+    // force the over-bound (join) path
+    Regime.forcing(emb.sparkSession, Regime.MaxProbeRows, 1L)(
+      Ann.annSearchIndex(index, queries, idCol, vecCol, k = k, nProbe = nProbe))
       .groupBy(col("rank"))
       .agg(count(lit(1)).as("n_pairs"),
         round(min(col("score")), 6).as("min_score"),
@@ -329,10 +331,10 @@ object Stress {
         round(max(col("score")), 6).as("max_score"))
   }
 
-  /** Naturally-tripped BM25 query-side guard (judge r8 #5): a corpus-sized
+  /** Naturally-tripped BM25 query-side guard: a corpus-sized
     * query batch — a few real documents plus enough synthetic one-term
     * queries to push the exploded (query_id, term) pairs past the DEFAULT
-    * [[Lexical.maxQueryTermRows]] — so the over-bound distributed path
+    * [[Regime.MaxQueryTermRows]] — so the over-bound distributed path
     * (checkpointed pairs, bucket semi-join, joined scoring) runs under
     * stock session conf, not a forced override. The synthetic terms miss
     * the corpus vocabulary, so the scoring join stays bounded by the real
@@ -344,7 +346,7 @@ object Stress {
   def bm25GuardDefaultSummary(index: Lexical.Bm25Index, docs: DataFrame,
       idCol: String, textCol: String, nRealQueries: Int = 8, k: Int = 5): DataFrame = {
     val spark = docs.sparkSession
-    val bound = Lexical.maxQueryTermRows(spark)
+    val bound = Regime.MaxQueryTermRows(spark)
     val synthetic = spark.range(bound + (bound >> 4)).toDF("qid")
       .select(col("qid"), concat(lit("zzzmiss"), col("qid")).as("qtext"))
     val real = docs.filter(col(idCol) < nRealQueries)
@@ -364,9 +366,9 @@ object Stress {
       .withColumn("guard_trips", lit(trips))
   }
 
-  /** Filtered search with a tenant-scale allow-list (r13): the allow frame
+  /** Filtered search with a tenant-scale allow-list: the allow frame
     * is the corpus's even ids plus `(m-1)·N` synthetic ids beyond the
-    * corpus range — large enough to defeat [[Serving.maxDriverAllowIds]]
+    * corpus range — large enough to defeat [[Regime.MaxDriverAllowIds]]
     * at bench scale, so the restriction runs as the distributed semi-join
     * (AQE picks broadcast vs shuffle from the DISTINCT matched side). The
     * synthetic surplus matches no posting, so the result census is
@@ -396,7 +398,7 @@ object Stress {
   }
 
   /** Naturally-tripped ANN probe guard: the multiplied query batch exceeds
-    * the DEFAULT [[Ann.maxProbeRows]] (|queries| x nProbe probe rows), so
+    * the DEFAULT [[Regime.MaxProbeRows]] (|queries| x nProbe probe rows), so
     * the distributed probe assignment + broadcast-semi-join cell
     * restriction runs under stock conf. The index is a small ad-hoc build
     * (few rows per cell) so the multiplied scoring join stays bounded while
@@ -417,7 +419,7 @@ object Stress {
     // regime decision flips naturally without the leg ballooning at larger
     // scale factors
     val nBase = emb.count()
-    val m = (Ann.maxProbeRows(emb.sparkSession) / math.max(nProbe, 1) / nBase + 1).toInt + 1
+    val m = (Regime.MaxProbeRows(emb.sparkSession) / math.max(nProbe, 1) / nBase + 1).toInt + 1
     val queries = multiplied(emb.select(col(idCol), col(vecCol)), idCol, m)
     val before = Ann.joinRestrictionSearches.get()
     val res = Ann.annSearchIndex(index, queries, idCol, vecCol, k = k, nProbe = nProbe)
@@ -446,7 +448,7 @@ object Stress {
         sum(when(col("cluster") === -1L, 1L).otherwise(0L)).as("n_noise"))
   }
 
-  /** The streaming ingest triad load-tested (judge r10 #6): fresh MinHash +
+  /** The streaming ingest triad load-tested: fresh MinHash +
     * BM25 + ANN indexes over the corpus, then `epochs` multiplied crawl
     * epochs through [[graft.streaming.StreamOps.ingestEpochPipeline]] — each
     * epoch's batch is a disjoint corpus slice, reversed (genuinely new
@@ -477,7 +479,7 @@ object Stress {
     val spark = docs.sparkSession
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_stress_ingest").toString
-    // managed mode (judge r11 #6): the same triad under GENERATION roots
+    // managed mode: the same triad under GENERATION roots
     // with maintainIndexes after each epoch — the census then shows the
     // append-accumulation curve (fan-in / batch counts) FLATTENING as
     // compactions fire, next to the unmanaged curve's growth

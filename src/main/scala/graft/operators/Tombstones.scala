@@ -36,7 +36,7 @@ import scala.jdk.CollectionConverters._
   * assembles, so every downstream consumer — searches,
   * driver-resident mirrors, compactors — sees the post-delete corpus without
   * knowing deletes exist. Exclusion shape is the repo's bounded-driver
-  * pattern: under [[maxDriverDeleteIds]] total ids, one small collect per
+  * pattern: under [[Regime.MaxDriverDeleteIds]] total ids, one small collect per
   * open turns into a codegen'd `NOT IN` set probe (no join in the serving
   * plans, partition pruning untouched); over it, nothing touches the driver
   * and the exclusion is a distributed left-anti join whose small side AQE
@@ -67,19 +67,6 @@ object Tombstones {
   private val Marker = "_COMMITTED"
   private val LedgerFile = "applied_deletes.json"
   private val MetaFile = "delete_meta.json"
-
-  /** Driver materialization bound for the exclusion set, in total deleted
-    * ids across all committed tombstones of one index. Under it the ids are
-    * collected once per open and pushed as a literal set probe; over it the
-    * exclusion stays a distributed anti-join. The collected bytes are
-    * `n_ids * 8`, so the 65536 default is ~512 KB.
-    */
-  val MaxDriverDeleteIdsKey = "spark.graft.index.maxDriverDeleteIds"
-  val DefaultMaxDriverDeleteIds: Long = 1L << 16
-
-  private def maxDriverDeleteIds(spark: SparkSession): Long =
-    spark.conf.getOption(MaxDriverDeleteIdsKey).map(_.toLong)
-      .getOrElse(DefaultMaxDriverDeleteIds)
 
   /** A delete's exact stat deltas: ids and index rows dropped, and for
     * BM25 the `n_docs`/`sum_dl` corpus sums that shrink.
@@ -349,7 +336,7 @@ object Tombstones {
 
   /** Read `path`'s visible tombstones into one [[Deletes]] view, for
     * [[IndexLayout.open]]; None when the index has none (the common case:
-    * one `exists` on the deletes dir). Under [[maxDriverDeleteIds]] total
+    * one `exists` on the deletes dir). Under [[Regime.MaxDriverDeleteIds]] total
     * ids this pays ONE small job per open to collect the exclusion set
     * (footer-bounded single-file reads); over it the ids stay distributed.
     *
@@ -389,7 +376,7 @@ object Tombstones {
     // N-node plan per open
     val idsDf = IndexLayout.readComponents(spark, dirs.map(_.toString), "ids", idsReadSchema)
     val exclusion =
-      if (total.nIds <= maxDriverDeleteIds(spark))
+      if (total.nIds <= Regime.MaxDriverDeleteIds(spark))
         Left(idsDf.collect().map(_.getLong(0)))
       else
         // EAGERLY pinned (the Denylist.exclude idiom): this frame is planned

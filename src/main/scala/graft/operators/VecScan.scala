@@ -34,7 +34,7 @@ import scala.reflect.ClassTag
   *
   * Scale posture: the right side is collected once ([[collectMatIfFits]]:
   * one job that sizes and collects it together, [[collectIfFits]]) and
-  * broadcast, bounded by [[maxBroadcastBytes]]; callers fall back to the
+  * broadcast, bounded by [[Regime.MaxBroadcastBytes]]; callers fall back to the
   * shuffle/crossJoin plan (or IVF) above that. The left side streams and
   * is split by pair work ([[scanRdd]]): a scan worth more than one task's
   * share of multiply-adds runs on up to `defaultParallelism` tasks even
@@ -43,20 +43,6 @@ import scala.reflect.ClassTag
   * stays in one task.
   */
 object VecScan {
-
-  /** Right side must stay under this to take the broadcast path. The default
-    * (256 MiB of packed doubles) leaves headroom under Spark's default
-    * `spark.driver.maxResultSize=1g`: [[collectMatIfFits]] pulls the matrix
-    * through the driver, so a bound near 1 GiB kills the job with a confusing
-    * driver-side error instead of falling back to the shuffle plan. Tune with
-    * `spark.graft.vecscan.maxBroadcastBytes` (raise it together with
-    * maxResultSize / driver memory).
-    */
-  val DefaultMaxBroadcastBytes: Long = 256L << 20
-  val MaxBroadcastBytesKey = "spark.graft.vecscan.maxBroadcastBytes"
-
-  def maxBroadcastBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(MaxBroadcastBytesKey).map(_.toLong).getOrElse(DefaultMaxBroadcastBytes)
 
   /** Scan-ready right side: ids, vectors and their norms, with no null id or
     * vector (a null never matches).
@@ -384,9 +370,9 @@ object VecScan {
       .map(all => Mat.of(all.map(_._1), all.map(_._2)))
   }
 
-  /** [[collectMatIfFits]] under the session's [[maxBroadcastBytes]]. */
+  /** [[collectMatIfFits]] under the session's [[Regime.MaxBroadcastBytes]]. */
   private[graft] def collectMatIfFits(df: DataFrame, idCol: String, vecCol: String): Option[Mat] =
-    collectMatIfFits(df, idCol, vecCol, maxBroadcastBytes(df.sparkSession))
+    collectMatIfFits(df, idCol, vecCol, Regime.MaxBroadcastBytes(df.sparkSession))
 
   /** The whole right side as a [[Mat]], for sides bounded by construction. */
   private[graft] def collectMat(df: DataFrame, idCol: String, vecCol: String): Mat =

@@ -1,7 +1,7 @@
 package graft.train
 
 import graft.embed.Embedder
-import graft.operators.IndexLayout
+import graft.operators.{IndexLayout, Regime}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Training configuration mirroring the reference's JSON config surface
@@ -179,13 +179,6 @@ class CentroidAdjustedEmbedder(
   */
 object ModelArtifact {
 
-  /** Bound (bytes) on the driver-collected text→centroid map when reloading a
-    * fitted artifact — an artifact written under a larger fit config must not
-    * OOM a smaller reload cluster. Conf-overridable.
-    */
-  val FittedMaxCollectBytesKey = "spark.graft.fitted.maxCollectBytes"
-  val DefaultFittedMaxCollectBytes: Long = 256L << 20
-
   /** Estimated driver-heap bytes of a text→centroid HashMap: per entry one
     * double[] (dim×8 + header) + a UTF-16 String (2×chars + header) + map
     * entry overhead (~128 B combined headers/entry).
@@ -265,15 +258,14 @@ object ModelArtifact {
     val centroidsDf = spark.read.parquet(centroidsPath(dir).toString)
     // size-guard the collect: the artifact may have been written under a
     // larger fit config than this cluster's driver can hold
-    val maxBytes = spark.conf.getOption(FittedMaxCollectBytesKey)
-      .map(_.toLong).getOrElse(DefaultFittedMaxCollectBytes)
+    val maxBytes = Regime.FittedMaxCollectBytes(spark)
     import org.apache.spark.sql.functions.{avg, coalesce, count, length, lit, col => fcol}
     val stats = centroidsDf.agg(
       count(lit(1)), coalesce(avg(length(fcol("text"))), lit(0.0))).first()
     val estBytes = estimatedCentroidMapBytes(stats.getLong(0), dim, stats.getDouble(1))
     require(estBytes <= maxBytes,
       s"fitted artifact in $dir holds ${stats.getLong(0)} centroids " +
-      s"(~$estBytes estimated bytes), over the $FittedMaxCollectBytesKey bound " +
+      s"(~$estBytes estimated bytes), over the ${Regime.FittedMaxCollectBytes.key} bound " +
       s"of $maxBytes — raise the bound on a driver large enough to hold it, or " +
       s"refit under a smaller config")
     val map = centroidsDf

@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.{Ann, Stress}
+import graft.operators.{Ann, Regime, Stress}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The persisted-IVF probe guard (judge r7 #1): the collected-probe isin path
+/** The persisted-IVF probe guard: the collected-probe isin path
   * and the over-bound join-based cell restriction must be row-identical
   * (bit-equal scores), the guard must actually pick the path the bound
   * dictates, and the stress leg's census must equal the base census at
@@ -44,9 +44,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val viaIsin = sortedRows(
       Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 3))
     assert(Ann.joinRestrictionSearches.get() === before, "default bound must collect probes")
-    val viaJoin = sortedRows(
-      Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 3,
-        maxProbeRowsOverride = 1L))
+    val viaJoin = sortedRows(Regime.forcing(spark, Regime.MaxProbeRows, 1L)(
+      Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 3)))
     assert(Ann.joinRestrictionSearches.get() === before + 1, "forced bound must trip the guard")
     assert(viaJoin === viaIsin, "join-based cell restriction must be row-identical")
     assert(viaIsin.nonEmpty)
@@ -55,13 +54,12 @@ class AnnIndexSpec extends AnyFunSuite {
   test("guard: session conf bound trips the guard without the override") {
     val q = emb(300).filter(col("vec_id") < 10)
     val before = Ann.joinRestrictionSearches.get()
-    spark.conf.set(Ann.MaxProbeRowsKey, "5")
-    try {
+    Regime.forcing(spark, Regime.MaxProbeRows, 5L) {
       val viaConf = sortedRows(
         Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 3))
       assert(Ann.joinRestrictionSearches.get() === before + 1)
       assert(viaConf.nonEmpty)
-    } finally spark.conf.unset(Ann.MaxProbeRowsKey)
+    }
   }
 
   test("guard: int8 search paths are row-identical too") {
@@ -69,9 +67,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val viaIsin = sortedRows(
       Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 3))
     val before = Ann.joinRestrictionSearches.get()
-    val viaJoin = sortedRows(
-      Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 3,
-        maxProbeRowsOverride = 1L))
+    val viaJoin = sortedRows(Regime.forcing(spark, Regime.MaxProbeRows, 1L)(
+      Ann.annSearchIndexInt8(index, q, "vec_id", "embedding", k = 3, nProbe = 3)))
     assert(Ann.joinRestrictionSearches.get() === before + 1)
     assert(viaJoin === viaIsin)
     assert(viaIsin.nonEmpty)
@@ -79,8 +76,8 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("join path: no isin partition filter, restriction rides a broadcast semi-join") {
     val q = emb(300).filter(col("vec_id") < 20)
-    val df = Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 3,
-      maxProbeRowsOverride = 1L)
+    val df = Regime.forcing(spark, Regime.MaxProbeRows, 1L)(
+      Ann.annSearchIndex(index, q, "vec_id", "embedding", k = 3, nProbe = 3))
     val phys = df.queryExecution.executedPlan.toString
     assert(phys.contains("LeftSemi"), phys)
     assert(!phys.toLowerCase.contains("cartesianproduct"), phys)
@@ -105,9 +102,7 @@ class AnnIndexSpec extends AnyFunSuite {
       */
     def tiers(search: => DataFrame): (Seq[(Long, Long, Double, Int)], Seq[(Long, Long, Double, Int)]) = {
       val p0 = Resident.partitionedSearches.get()
-      spark.conf.set(Resident.DriverResidentRowsKey, "0")
-      val viaTier = try sortedRows(search)
-        finally spark.conf.unset(Resident.DriverResidentRowsKey)
+      val viaTier = Regime.forcing(spark, Regime.DriverResidentRows, 0L)(sortedRows(search))
       assert(Resident.partitionedSearches.get() == p0 + 1, "the partitioned tier must serve")
       val r0 = Resident.residentSearches.get()
       val viaMirror = sortedRows(search)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Lexical
+import graft.operators.{Lexical, Regime}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -93,11 +93,10 @@ class Bm25AppendSpec extends AnyFunSuite {
     // over-bound guard regime (joined scoring form) on the appended index:
     // row-identical to the batch-fold regime
     val before = Lexical.joinRestrictionSearches.get()
-    spark.conf.set(Lexical.MaxQueryTermRowsKey, "1")
-    try {
+    Regime.forcing(spark, Regime.MaxQueryTermRows, 1L) {
       assert(search(appended, q) === viaAppend)
       assert(Lexical.joinRestrictionSearches.get() === before + 1)
-    } finally spark.conf.unset(Lexical.MaxQueryTermRowsKey)
+    }
 
     // compact: one fresh layout, re-baked, row-identical, further appends OK
     val cmpDir = tmp("graft_bm25_cmp_spec")

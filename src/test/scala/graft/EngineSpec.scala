@@ -325,7 +325,7 @@ class EngineSpec extends AnyFunSuite {
         |       word_shingle_rep_ratio('spam spam spam', 2) AS r""".stripMargin).first()
     assert(q.getString(0) == "mail <EMAIL> see <URL> ref <NUM>")
     assert(q.getDouble(1) == 0.5) // bigrams: [spam spam, spam spam] → 1 - 1/2
-    // r5 kernels on the SQL surface: tokenizer + key-ordered sum aggregate
+    // the native kernels on the SQL surface: tokenizer + key-ordered sum aggregate
     val t = spark.sql(
       """SELECT graft_terms(concat('  MiXeD', char(9), 'case  WORDS ')) AS toks,
         |       (SELECT graft_ordered_sum(k, v)
@@ -344,7 +344,7 @@ class EngineSpec extends AnyFunSuite {
     // keys 950..999 are each a SINGLE big-side row matched by `other` — with
     // saltFactor=8 at least some salt to nonzero, so a per-replica (instead
     // of per-row) unmatched-ness decision in right/full deterministically
-    // emits spurious null-extended rows here (judge r11 advice)
+    // emits spurious null-extended rows here
     val other = (Seq((7L, "hot"), (42L, "dup1"), (42L, "dup2"), (9999L, "nomatch")) ++
       (950 until 1000).map(i => (i.toLong, s"m$i"))).toDF("k", "w")
     def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -763,9 +763,7 @@ class EngineSpec extends AnyFunSuite {
       rows(Ann.annSearchIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)))
     idx.cells.persist(); idx.cells.count()
     val p0 = graft.operators.Resident.partitionedSearches.get()
-    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
-    val (tierSq8, tierDouble) = try both()
-      finally spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+    val (tierSq8, tierDouble) = Regime.forcing(spark, Regime.DriverResidentRows, 0L)(both())
     assert(graft.operators.Resident.partitionedSearches.get() == p0 + 2)
     assert(tierSq8 == tierDouble)
     val r0 = graft.operators.Resident.residentSearches.get()
@@ -777,8 +775,8 @@ class EngineSpec extends AnyFunSuite {
     idx.cells.unpersist()
     val viaDouble = Ann.annSearchIndex(idx, q, "vec_id", "embedding", k = 5, nProbe = 4)
     assert(rows(viaDouble) == tierDouble)
-    val viaSq8Dist = Ann.annSearchIndexInt8(idx, q, "vec_id", "embedding",
-      k = 5, nProbe = 4, rerankFactor = 50, maxProbeRowsOverride = 1L)
+    val viaSq8Dist = Regime.forcing(spark, Regime.MaxProbeRows, 1L)(
+      Ann.annSearchIndexInt8(idx, q, "vec_id", "embedding", k = 5, nProbe = 4, rerankFactor = 50))
     // both regimes are row- and bit-identical
     assert(rows(viaSq8Dist) == rows(viaDouble))
     val formatted = viaSq8Dist.queryExecution.explainString(
@@ -928,12 +926,11 @@ class EngineSpec extends AnyFunSuite {
     val basis = Array.fill(40)(Array.fill(6)(rnd.nextDouble() * 2 - 1))
     val data = (0L until 200L).map(i => (i, basis((i % 40).toInt))).toDF("id", "vec")
     def run(broadcastOk: Boolean) = {
-      if (!broadcastOk) spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
-      try SemanticJoin.knnJoinVec(data, "id", "vec", data, "id", "vec",
-          k = 4, excludeSelf = true)
+      val bound = if (broadcastOk) Regime.MaxBroadcastBytes.default else 1L
+      Regime.forcing(spark, Regime.MaxBroadcastBytes, bound)(
+        SemanticJoin.knnJoinVec(data, "id", "vec", data, "id", "vec", k = 4, excludeSelf = true)
         .collect().map(r => (r.getAs[Long]("left_id"), r.getAs[Int]("rank").toLong,
-          r.getAs[Long]("right_id"), r.getAs[Double]("score"))).toSet
-      finally if (!broadcastOk) spark.conf.unset(VecScan.MaxBroadcastBytesKey)
+          r.getAs[Long]("right_id"), r.getAs[Double]("score"))).toSet)
     }
     val b = run(broadcastOk = true)
     val s = run(broadcastOk = false)
@@ -998,9 +995,7 @@ class EngineSpec extends AnyFunSuite {
     def run() = Clustering.connectedComponents(nodes, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val viaUnionFind = run()
-    spark.conf.set(Clustering.SmallGraphEdgeLimitKey, "0")
-    try assert(run() == viaUnionFind)
-    finally spark.conf.unset(Clustering.SmallGraphEdgeLimitKey)
+    Regime.forcing(spark, Regime.SmallGraphEdgeLimit, 0L)(assert(run() == viaUnionFind))
     assert(viaUnionFind(19L) == 0L && viaUnionFind(102L) == 100L &&
       viaUnionFind(201L) == 200L && viaUnionFind(300L) == 300L)
   }
@@ -1066,11 +1061,10 @@ class EngineSpec extends AnyFunSuite {
     def clusters() = Clustering.epsilonCluster(df, "id", "vec", tau = 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val exact = clusters()
-    spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
-    try {
+    Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L) {
       assert(VecScan.collectMatIfFits(df, "id", "vec").isEmpty)
       assert(clusters() == exact)
-    } finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
+    }
     assert(exact.values.toSet.size == 3)
   }
 
@@ -1382,7 +1376,7 @@ class EngineSpec extends AnyFunSuite {
         s"alpha beta gamma delta epsilon zeta eta theta variant ${i % 3}")
     }.toDF("id", "text")
     // non-default banding: the meta must carry the params the build used
-    // (advisor r7 — a lying meta would silently change candidate generation)
+    // (a lying meta would silently change candidate generation)
     val tmp = java.nio.file.Files.createTempDirectory("graft_mh_app").toString
     Dedup.minhashWriteIndex(
       Dedup.minhashBuildIndex(docs.filter(col("id") < 20), "id", "text",
@@ -1448,10 +1442,9 @@ class EngineSpec extends AnyFunSuite {
     idx.postings.persist(); idx.postings.count()
     idx.shingles.persist(); idx.shingles.count()
     val p0 = graft.operators.Resident.partitionedSearches.get()
-    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
-    val tierRows = try {
+    val tierRows = Regime.forcing(spark, Regime.DriverResidentRows, 0L) {
       pairs(Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5))
-    } finally spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+    }
     assert(graft.operators.Resident.partitionedSearches.get() == p0 + 1)
     val r0 = graft.operators.Resident.residentSearches.get()
     val fastRows = pairs(Dedup.minhashSearchIndex(idx, batch, "id", "text", jaccardThreshold = 0.5))
@@ -1928,11 +1921,10 @@ class EngineSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("left_id"), r.getAs[Long]("right_id"),
         r.getAs[Int]("rank"))).toSet
     val viaBroadcast = run()
-    spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
-    try {
+    Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L) {
       assert(VecScan.collectMatIfFits(e, "id", "vec").isEmpty)
       assert(run() == viaBroadcast)
-    } finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
+    }
     assert(VecScan.collectMatIfFits(e, "id", "vec").isDefined)
   }
 
@@ -1944,8 +1936,7 @@ class EngineSpec extends AnyFunSuite {
       df.queryExecution.optimizedPlan.toString.toLowerCase
     val hinted = PairScoring.allPairCombos(d1, Seq("name"), d2, Seq("name"), emb)
     assert(planOf(hinted).contains("broadcast"))
-    spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
-    try {
+    Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L) {
       val plain = PairScoring.allPairCombos(d1, Seq("name"), d2, Seq("name"), emb)
       assert(!planOf(plain).contains("broadcast"))
       // results identical either way
@@ -1953,7 +1944,7 @@ class EngineSpec extends AnyFunSuite {
         df.collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(rows(plain.select(col("name"), col("name_y"))) ==
         rows(hinted.select(col("name"), col("name_y"))))
-    } finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
+    }
   }
 
   test("assignGroupIds: oversized key set joins without a forced broadcast, same result") {
@@ -2138,7 +2129,7 @@ class EngineSpec extends AnyFunSuite {
     Lexical.bm25WriteIndex(postings, stats, dir, nBuckets = 8)
     val idx = Lexical.bm25OpenIndex(spark, dir)
     assert(idx.nBuckets == 8) // modulus travels with the layout, not a conf
-    // r10: contributions are baked at the default (k1, b) — the search above
+    // contributions are baked at the default (k1, b) — the search above
     // reads contrib0 instead of recomputing, and `rows(search) == adhoc`
     // below is the bit-parity proof (exact Double equality in the set)
     assert(idx.bakedParams.contains((1.2, 0.75)))
@@ -2171,15 +2162,14 @@ class EngineSpec extends AnyFunSuite {
 
     // over-bound query batches take the fully distributed path (semi-join
     // bucket restriction + joined scoring) and stay row-identical — the
-    // Ann.maxProbeRows guard applied to BM25 (judge r7)
+    // ANN probe guard applied to BM25
     val before = Lexical.joinRestrictionSearches.get()
-    spark.conf.set(Lexical.MaxQueryTermRowsKey, "2")
-    try {
+    Regime.forcing(spark, Regime.MaxQueryTermRows, 2L) {
       val viaDist = rows(Lexical.bm25SearchIndex(idx, q, "qid", "text", k = 4))
       assert(Lexical.joinRestrictionSearches.get() === before + 1,
         "tiny bound must trip the distributed path")
       assert(viaDist == adhoc)
-    } finally spark.conf.unset(Lexical.MaxQueryTermRowsKey)
+    }
   }
 
   test("bm25TopK: dlCol stats path equals recomputed stats; string ids rejected") {
@@ -2258,7 +2248,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("open-side read schemas match parquet inference") {
-    // r16: the openers pass the writers' known schemas to spark.read so no
+    // the openers pass the writers' known schemas to spark.read so no
     // footer/schema-inference job runs per component. This pins every
     // constant equal to what inference would have produced — names, types,
     // order, partition columns — so a writer-side schema change fails HERE,
@@ -2323,7 +2313,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("hdbscanDistributed kruskal fast path ≡ forced Borůvka rounds") {
-    // the r16 fast path collects the candidate edges and runs Kruskal under
+    // the fast path collects the candidate edges and runs Kruskal under
     // the same strict (w, a, b) total order the Borůvka rounds select by; a
     // strict total order makes the MST unique, so the labels must be
     // IDENTICAL. Forcing the bound to 0 re-runs the round-chain path.
@@ -2333,10 +2323,8 @@ class EngineSpec extends AnyFunSuite {
       d.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val kruskal = asMap(HierarchicalClustering.hdbscanDistributed(
       e, "vec_id", "embedding", minClusterSize = 4))
-    sys.props("graft.hdbscan.kruskalEdgeBound") = "0"
-    val boruvka = try asMap(HierarchicalClustering.hdbscanDistributed(
-      e, "vec_id", "embedding", minClusterSize = 4))
-    finally sys.props.remove("graft.hdbscan.kruskalEdgeBound")
+    val boruvka = Regime.forcing(spark, Regime.KruskalEdgeBound, 0L)(asMap(
+      HierarchicalClustering.hdbscanDistributed(e, "vec_id", "embedding", minClusterSize = 4)))
     assert(kruskal.keySet == boruvka.keySet)
     val diff = kruskal.keySet.filter(k => kruskal(k) != boruvka(k))
     assert(diff.isEmpty,
@@ -2370,7 +2358,7 @@ class EngineSpec extends AnyFunSuite {
     assert(out(1).getAs[String]("txt") == "beta" && out(1).getAs[Long]("n_kept") == 1L)
     assert(out(2).getAs[String]("txt") == "" && out(2).getAs[Long]("n_kept") == 0L)
     // the keep-first decision must be a partial-aggregatable groupBy, not a
-    // window (advisor r3: windows have no map-side combine)
+    // window (windows have no map-side combine)
     val plan = Dedup.paragraphDedup(df, "id", "txt").queryExecution.executedPlan.toString
     assert(!plan.contains("RunningWindowFunction") && !plan.toLowerCase.contains("window"))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Lexical}
+import graft.operators.{Dedup, Lexical, Regime}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,12 +75,10 @@ class FilteredViewSpec extends AnyFunSuite {
 
     // over-bound guard regime: force the joined distributed path and demand
     // the same rows — the allow semi-join sits in scoreAndTopK there
-    val key = Lexical.MaxQueryTermRowsKey
-    spark.conf.set(key, "1")
-    try {
+    Regime.forcing(spark, Regime.MaxQueryTermRows, 1L) {
       val gotJoined = bm25Rows(Lexical.bm25SearchIndex(view, q, "doc_id", "text", k = 5))
       assert(gotJoined == expected)
-    } finally spark.conf.unset(key)
+    }
   }
 
   test("bm25 filtered view on an APPENDED (stale-bake) index: df recomputed " +
@@ -142,12 +140,19 @@ class FilteredViewSpec extends AnyFunSuite {
         Lexical.bm25SearchIndex(view, q, "doc_id", "text", k = 3).collect().length) == 0L)
       // over-bound allow set: fresh view under a zero budget keeps the
       // distributed semi-join plan, rows identical
-      spark.conf.set(graft.operators.Serving.MaxDriverAllowIdsKey, "0")
-      try {
+      Regime.forcing(spark, Regime.MaxDriverAllowIds, 0L) {
         val view2 = Lexical.bm25FilteredView(idx, allowDf, "doc_id")
         val got2 = bm25Rows(Lexical.bm25SearchIndex(view2, q, "doc_id", "text", k = 3))
         assert(got2 == expected)
-      } finally spark.conf.unset(graft.operators.Serving.MaxDriverAllowIdsKey)
+      }
+      // a bound at or past Int.MaxValue serves as the default does: the
+      // allow-set collect's limit(bound + 1) must stay a valid limit
+      for (bound <- Seq(Int.MaxValue.toLong, Long.MaxValue))
+        Regime.forcing(spark, Regime.MaxDriverAllowIds, bound) {
+          val view3 = Lexical.bm25FilteredView(idx, allowDf, "doc_id")
+          assert(bm25Rows(Lexical.bm25SearchIndex(view3, q, "doc_id", "text", k = 3)) == expected,
+            s"allow-list bound $bound")
+        }
     } finally idx.postings.unpersist()
   }
 
@@ -181,10 +186,8 @@ class FilteredViewSpec extends AnyFunSuite {
       resident.foreach { legs =>
         assert(legs.nonEmpty && legs.forall(_._2 % 3 == 0), "disallowed id leaked")
       }
-      spark.conf.set(graft.operators.Serving.MaxDriverAllowIdsKey, "0")
-      val distributed =
-        try searches(Ann.annFilteredView(idx, allowDf, "vec_id"))
-        finally spark.conf.unset(graft.operators.Serving.MaxDriverAllowIdsKey)
+      val distributed = Regime.forcing(spark, Regime.MaxDriverAllowIds, 0L)(
+        searches(Ann.annFilteredView(idx, allowDf, "vec_id")))
       assert(resident == distributed,
         "resident filtered ann must equal the distributed semi-join plan, all paths")
       assert(jobsFor(() => Ann.annSearchIndex(
@@ -211,11 +214,9 @@ class FilteredViewSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val resident = pairs(Dedup.minhashSearchIndex(
         Dedup.minhashFilteredView(idx, allowDf, "doc_id"), batch, "doc_id", "text", 0.5))
-      spark.conf.set(graft.operators.Serving.MaxDriverAllowIdsKey, "0")
-      val distributed =
-        try pairs(Dedup.minhashSearchIndex(
-          Dedup.minhashFilteredView(idx, allowDf, "doc_id"), batch, "doc_id", "text", 0.5))
-        finally spark.conf.unset(graft.operators.Serving.MaxDriverAllowIdsKey)
+      val distributed = Regime.forcing(spark, Regime.MaxDriverAllowIds, 0L)(pairs(
+        Dedup.minhashSearchIndex(
+          Dedup.minhashFilteredView(idx, allowDf, "doc_id"), batch, "doc_id", "text", 0.5)))
       assert(resident == distributed)
       assert(resident.nonEmpty && resident.forall(_._1 % 3 == 0))
     } finally { idx.postings.unpersist(); idx.shingles.unpersist() }
@@ -301,7 +302,7 @@ class FilteredViewSpec extends AnyFunSuite {
       "the distributed plan instead of crashing on non-Number ids") {
     import spark.implicits._
     // numeric-string ids plus a non-numeric one ("x1") that collides into
-    // the same near-dup buckets — the r13 resident path crashed on ANY
+    // the same near-dup buckets — an earlier resident path crashed on ANY
     // string candidate (asInstanceOf[Number]); the allow semantics are the
     // distributed cast's: allow ids rendered into the id domain, so "x1"
     // is excluded, "1"/"11"/… match their numeric allow ids
@@ -322,11 +323,9 @@ class FilteredViewSpec extends AnyFunSuite {
           .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val view = Dedup.minhashFilteredView(idx, allowDf, "doc_id")
       val resident = pairs(Dedup.minhashSearchIndex(view, batch, "doc_id", "text", 0.8))
-      spark.conf.set(graft.operators.Serving.MaxDriverAllowIdsKey, "0")
-      val distributed =
-        try pairs(Dedup.minhashSearchIndex(
-          Dedup.minhashFilteredView(idx, allowDf, "doc_id"), batch, "doc_id", "text", 0.8))
-        finally spark.conf.unset(graft.operators.Serving.MaxDriverAllowIdsKey)
+      val distributed = Regime.forcing(spark, Regime.MaxDriverAllowIds, 0L)(pairs(
+        Dedup.minhashSearchIndex(
+          Dedup.minhashFilteredView(idx, allowDf, "doc_id"), batch, "doc_id", "text", 0.8)))
       assert(resident == distributed)
       assert(resident == Set(("1", "q0"), ("11", "q0"), ("21", "q0"), ("31", "q0"), ("4", "q1")),
         s"got $resident")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Clustering, Dedup, VecScan}
+import graft.operators.{Dedup, Regime}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -86,7 +86,7 @@ class MinhashLshSpec extends AnyFunSuite {
     val c0 = counters
     val (drv, drvSchema) = run(df, shingleSize, numBands, rowsPerBand, tau, family)
     val c1 = counters
-    val (plan, planSchema) = withConf(VecScan.MaxBroadcastBytesKey, "1")(
+    val (plan, planSchema) = Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L)(
       run(df, shingleSize, numBands, rowsPerBand, tau, family))
     val c2 = counters
     assert(c1._1 - c0._1 == 1, "the driver regime did not run")
@@ -138,9 +138,9 @@ class MinhashLshSpec extends AnyFunSuite {
     // 60 identical texts: one bucket of 60 rows in every band (8 × 1,770 row pairs)
     val hot = ((1L to 60L).map(i => (i, base)) ++ corpus.collect {
       case (Some(i), t) => (i + 100L, t) }).toDF("doc", "body")
-    val (ref, _) = withConf(VecScan.MaxBroadcastBytesKey, "1")(run(hot))
+    val (ref, _) = Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L)(run(hot))
     val runs = Dedup.lshDriverRuns(spark.sparkContext).value
-    val (got, _) = withConf(Clustering.SmallGraphEdgeLimitKey, "1000")(run(hot))
+    val (got, _) = Regime.forcing(spark, Regime.SmallGraphEdgeLimit, 1000L)(run(hot))
     assert(Dedup.lshDriverRuns(spark.sparkContext).value == runs, "the driver regime ran")
     assert(got == ref)
     assert((1L to 60L).forall(i => got.contains((Some(i), Some(1L)))))
@@ -165,6 +165,7 @@ class MinhashLshSpec extends AnyFunSuite {
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("doc", "body")
     assert(run(empty)._1.isEmpty)
-    assert(withConf(VecScan.MaxBroadcastBytesKey, "1")(run(empty.repartition(2)))._1.isEmpty)
+    assert(Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L)(
+      run(empty.repartition(2)))._1.isEmpty)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Regime
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,10 +51,11 @@ class PartitionedTierSpec extends AnyFunSuite {
     }.mkString("|")).toSet
 
   /** Runs `f` with the resident bound at 0: every pinned index is over it. */
-  private def overBound[A](f: => A): A = {
-    spark.conf.set(Resident.DriverResidentRowsKey, "0")
-    try f finally spark.conf.unset(Resident.DriverResidentRowsKey)
-  }
+  private def overBound[A](f: => A): A = Regime.forcing(spark, Regime.DriverResidentRows, 0L)(f)
+
+  /** Runs `f` with the resident bound at its default, inside [[overBound]]. */
+  private def underBound[A](f: => A): A =
+    Regime.forcing(spark, Regime.DriverResidentRows, Regime.DriverResidentRows.default)(f)
 
   private def write(corpus: DataFrame): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_partitioned").toString
@@ -98,10 +100,7 @@ class PartitionedTierSpec extends AnyFunSuite {
           assert(got.nonEmpty)
           assert(got == plan, s"$label: diverged from the plan")
           // the driver mirror runs the same fold
-          spark.conf.unset(Resident.DriverResidentRowsKey)
-          val (viaMirror, _, mirrored) =
-            try counted(search(idx, k1, b))
-            finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
+          val (viaMirror, _, mirrored) = underBound(counted(search(idx, k1, b)))
           assert(mirrored == 1 && viaMirror == plan, s"$label: the driver mirror diverged")
           assert(got == bits(Lexical.bm25TopK(corpus, "id", "text", queries, "id", "text",
             5, k1, b)), s"$label: diverged from bm25TopK")
@@ -309,11 +308,8 @@ class PartitionedTierSpec extends AnyFunSuite {
       tiered.tiers.drop()
       got
     }
-    spark.conf.unset(Resident.DriverResidentRowsKey)
     val mirror = idx.copy()
-    val (viaMirror, p, r) =
-      try tally(annSearches(mirror))
-      finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
+    val (viaMirror, p, r) = underBound(tally(annSearches(mirror)))
     assert(p == 0 && r == 3, "the driver mirror must serve all three")
     mirror.tiers.drop()
     (viaTiers, viaMirror)
@@ -413,11 +409,8 @@ class PartitionedTierSpec extends AnyFunSuite {
       tiered.tiers.drop()
       got
     }
-    spark.conf.unset(Resident.DriverResidentRowsKey)
     val mirror = idx.copy()
-    val (viaMirror, p, r) =
-      try tally(mhSearch(mirror))
-      finally spark.conf.set(Resident.DriverResidentRowsKey, "0")
+    val (viaMirror, p, r) = underBound(tally(mhSearch(mirror)))
     assert(p == 0 && r == 1, "the driver mirror must serve")
     mirror.tiers.drop()
     (viaTiers, viaMirror)

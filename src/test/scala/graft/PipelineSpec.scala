@@ -2,7 +2,7 @@ package graft
 
 import graft.embed.HashEmbedder
 import graft.llm.{ChatBatchTransformer, ChatHttpTransport, ChatMessage, ChatPairJudge, ChatRowClassifier, GeminiChatTransport, GeminiPairJudge, Llm, RetryingChatTransport, Routing}
-import graft.operators.{Multimodal, SemanticJoin}
+import graft.operators.{Multimodal, Regime, SemanticJoin}
 import graft.sources.Io
 import graft.streaming.StreamOps
 import graft.train.{CentroidAdjustedEmbedder, CentroidFitter, ModelArtifact, TrainConfig, TrainPrep}
@@ -727,7 +727,7 @@ class PipelineSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(first == Set(100L))
     // replay under the same batchId: the committed survivor manifest is
-    // read back — before r11 this path recomputed against the grown corpus
+    // read back — an earlier path recomputed against the grown corpus
     // and silently returned the EMPTY set (at-most-once delivery)
     val replay = graft.streaming.StreamOps
       .ingestEpoch(batch, "doc_id", "text", dir, 0.5, "legacy_0")
@@ -929,7 +929,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.table("quality_gate_out").columns.toSeq ==
       Seq("doc_id", "source", "text", "quality"))
 
-    // unknown-key policy (advisor r7): a source ABSENT from the offline-fit
+    // unknown-key policy: a source ABSENT from the offline-fit
     // table is silently dropped by default and passed through with "keep"
     val stream2 = MemoryStream[(Long, String, String)]
     stream2.addData(corpus :+ ((999L, "srcNEW", "a brand new source appearing mid stream")): _*)
@@ -1064,13 +1064,12 @@ class PipelineSpec extends AnyFunSuite {
     val fitted = new CentroidFitter(alpha = 0.4).fit(clusters, emb, TrainConfig())
     val dir = java.nio.file.Files.createTempDirectory("graft_fit_bound").toString
     ModelArtifact.saveFitted(spark, dir, fitted)
-    spark.conf.set(ModelArtifact.FittedMaxCollectBytesKey, "8")
-    try {
+    Regime.forcing(spark, Regime.FittedMaxCollectBytes, 8L) {
       val e = intercept[IllegalArgumentException] {
         ModelArtifact.loadFitted(spark, dir, emb)
       }
-      assert(e.getMessage.contains(ModelArtifact.FittedMaxCollectBytesKey))
-    } finally spark.conf.unset(ModelArtifact.FittedMaxCollectBytesKey)
+      assert(e.getMessage.contains(Regime.FittedMaxCollectBytes.key))
+    }
     // and with the default bound the same artifact loads fine
     assert(ModelArtifact.loadFitted(spark, dir, emb)
       .isInstanceOf[CentroidAdjustedEmbedder])

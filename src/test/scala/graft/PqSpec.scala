@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Ann, Pq, VecScan}
+import graft.operators.{Ann, Pq, Regime}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -161,8 +161,8 @@ class PqSpec extends AnyFunSuite {
     assert(schemas.exists(sch => sch.contains("pq") && !sch.contains("cv:")),
       schemas.mkString("; "))
     // distributed (over-bound) regime is row-identical too
-    val viaDist = Ann.annSearchIndexPq(idx, q, "vec_id", "embedding",
-      k = 5, nProbe = 4, rerankFactor = 100, maxProbeRowsOverride = 1L)
+    val viaDist = Regime.forcing(spark, Regime.MaxProbeRows, 1L)(
+      Ann.annSearchIndexPq(idx, q, "vec_id", "embedding", k = 5, nProbe = 4, rerankFactor = 100))
     assert(rows(viaDist) === rows(viaPq))
     // append with the persisted codebook: appended search == search of a
     // rebuild with the same centroids AND the same codebook
@@ -195,13 +195,12 @@ class PqSpec extends AnyFunSuite {
     val e = emb(200)
     val q = e.filter(col("vec_id") < 5)
     val cb = Pq.pqTrain(e, "vec_id", "embedding", m = 4, ks = 16, sampleRows = 64)
-    spark.conf.set(VecScan.MaxBroadcastBytesKey, "10")
-    try {
+    Regime.forcing(spark, Regime.MaxBroadcastBytes, 10L) {
       val ex = intercept[IllegalArgumentException](
         Pq.pqTopK(q, "vec_id", "embedding", e, "vec_id", "embedding", cb, k = 3))
       assert(ex.getMessage.contains("broadcast bound"))
       assert(Pq.pqTopK(q, "vec_id", "embedding", e, "vec_id", "embedding", cb,
         k = 3, skipSizeCheck = true).count() > 0)
-    } finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Int8Kernels
-import graft.operators.{Ann, Pq, Quantize, SemanticJoin}
+import graft.operators.{Ann, Pq, Quantize, Regime, SemanticJoin}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,8 +113,7 @@ class QuantizeSpec extends AnyFunSuite {
 
   test("quantizedTopK: over-bound corpus fails loudly (advisor r7), skipSizeCheck bypasses") {
     val df = vecs(100, 16) // 1600 code bytes
-    spark.conf.set(graft.operators.VecScan.MaxBroadcastBytesKey, "100")
-    try {
+    Regime.forcing(spark, Regime.MaxBroadcastBytes, 100L) {
       val e = intercept[IllegalArgumentException] {
         Quantize.quantizedTopK(df, "vec_id", "embedding", df, "vec_id", "embedding", k = 2)
       }
@@ -122,7 +121,7 @@ class QuantizeSpec extends AnyFunSuite {
       // explicit opt-out still runs (the caller owns the bound decision)
       assert(Quantize.quantizedTopK(df, "vec_id", "embedding", df, "vec_id", "embedding",
         k = 2, skipSizeCheck = true).count() > 0)
-    } finally spark.conf.unset(graft.operators.VecScan.MaxBroadcastBytesKey)
+    }
   }
 
   test("quantizedTopK and pqTopK: the first search over a parquet corpus runs one job for the code matrix") {

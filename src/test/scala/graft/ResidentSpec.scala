@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.Resident
+import graft.operators.{Regime, Resident}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-resident serving (judge r10 #3): every resident path must be
+/** Driver-resident serving: every resident path must be
   * bit-identical to the distributed plan it replaces and to the partitioned
   * tier (same rows, same score DOUBLES by bit pattern), fire only under the
   * gate (pinned + bounded), and cost ZERO Spark jobs per search.
@@ -52,10 +52,8 @@ class ResidentSpec extends AnyFunSuite {
   /** Run `f` with residency disabled (bound 0 → gate always false): a
     * pinned index serves from the partitioned tier.
     */
-  private def withoutResidency[A](f: => A): A = {
-    spark.conf.set(Resident.DriverResidentRowsKey, "0")
-    try f finally spark.conf.unset(Resident.DriverResidentRowsKey)
-  }
+  private def withoutResidency[A](f: => A): A =
+    Regime.forcing(spark, Regime.DriverResidentRows, 0L)(f)
 
   private def residentDelta[A](f: => A): (A, Long) = {
     val before = Resident.residentSearches.get()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Serving job budget (judge r8 #1, finished r10): a steady-state search
+/** Serving job budget: a steady-state search
   * through each pinned persisted index over the resident bound must cost at
   * most ONE Spark job — the wall of a sub-100ms search is jobs × scheduler
   * round-trip. The partitioned tier stays at one because:
@@ -57,10 +57,14 @@ class ServingJobsSpec extends AnyFunSuite {
   }
 
   test("serving: one job per search for ann, int8, bm25, minhash") {
-    // this budget pins the partitioned tier (a pinned index over the r11
+    // this budget pins the partitioned tier (a pinned index over the
     // driver-resident bound) — run with residency disabled; the resident
     // tier's ZERO-job budget is ResidentSpec's
-    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
+    graft.operators.Regime.forcing(spark, graft.operators.Regime.DriverResidentRows, 0L)(
+      partitionedBudgets())
+  }
+
+  private def partitionedBudgets(): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft_serving_jobs").toString
 
     // ANN index (float + int8 share the layout)
@@ -113,6 +117,5 @@ class ServingJobsSpec extends AnyFunSuite {
       k = 3, nProbe = 2).count() > 0)
     assert(graft.operators.Lexical.bm25SearchIndex(bm25, dq, "id", "text", k = 3)
       .count() > 0)
-    spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Stress
+import graft.operators.{Regime, Stress}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -187,7 +187,7 @@ class StressSpec extends AnyFunSuite {
   }
 
   test("pipeline leg: sketch-gate composite ≡ exact-gate composite at bench scale") {
-    // closes r7 'What's wrong #2': the 100 TB recipe (sketch gate → DSIR →
+    // the 100 TB recipe (sketch gate → DSIR →
     // budget) composed end-to-end must select the SAME membership as the
     // whole-group-window composite — the sketch gate is rank-exact by
     // construction, checked here on the real bench corpus at a real
@@ -235,8 +235,7 @@ class StressSpec extends AnyFunSuite {
     // a small session bound keeps the spec fast; the DRIVER leg runs the
     // same function under the stock 2^20 default — this pins the mechanics
     // (auto-sized multiplier, one trip, census shape)
-    spark.conf.set(graft.operators.Ann.MaxProbeRowsKey, "64")
-    try {
+    Regime.forcing(spark, Regime.MaxProbeRows, 64L) {
       val out = Stress.annGuardDefaultSummary(emb(16), "vec_id", "embedding",
         corpusRows = 16, nCentroids = 4, k = 1, nProbe = 2).collect()
       assert(out.nonEmpty)
@@ -245,12 +244,11 @@ class StressSpec extends AnyFunSuite {
       // every replica query finds its base vector at rank 1 (score 1.0)
       val r1 = out.find(_.getAs[Int]("rank") == 1).get
       assert(math.abs(r1.getAs[Double]("max_score") - 1.0) < 1e-12)
-    } finally spark.conf.unset(graft.operators.Ann.MaxProbeRowsKey)
+    }
   }
 
   test("bm25 guard leg: batch sized off the session bound trips the guard once") {
-    spark.conf.set(graft.operators.Lexical.MaxQueryTermRowsKey, "256")
-    try {
+    Regime.forcing(spark, Regime.MaxQueryTermRows, 256L) {
       val d = docs(8)
       val (postings, stats) = graft.operators.Lexical.bm25BuildIndex(d, "doc_id", "text")
       val dir = java.nio.file.Files.createTempDirectory("graft_bm25_guard").toString
@@ -261,6 +259,6 @@ class StressSpec extends AnyFunSuite {
       assert(out.getAs[Long]("guard_trips") == 1L, s"got $out")
       // the 4 real-document queries each retrieve themselves (disjoint vocab)
       assert(out.getAs[Long]("n_queries") == 4L, s"got $out")
-    } finally spark.conf.unset(graft.operators.Lexical.MaxQueryTermRowsKey)
+    }
   }
 }

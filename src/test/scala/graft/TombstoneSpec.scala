@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical, Tombstones}
+import graft.operators.{Ann, Dedup, IndexMaintenance, Lexical, Regime, Tombstones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tombstone deletes (r13): the removal verb of the persisted-index
+/** Tombstone deletes: the removal verb of the persisted-index
   * lifecycle. The contract per family: `delete → open → search` is
   * row-identical (bit-equal scores) to a full rebuild over the surviving
   * corpus; deletes are atomic (uncommitted tombstones invisible), idempotent
@@ -150,11 +150,10 @@ class TombstoneSpec extends AnyFunSuite {
     Lexical.bm25WriteIndex(p, st, live, nBuckets = 8)
     assert(Lexical.bm25DeleteFromIndex(spark, live, idsDf(Seq(2L, 9L, 21L)), "id", "d1"))
     val viaSet = bm25Search(live)
-    spark.conf.set(Tombstones.MaxDriverDeleteIdsKey, "1")
-    try {
+    Regime.forcing(spark, Regime.MaxDriverDeleteIds, 1L) {
       val viaJoin = bm25Search(live)
       assert(viaJoin == viaSet, "anti-join exclusion must equal the literal-set probe")
-    } finally spark.conf.unset(Tombstones.MaxDriverDeleteIdsKey)
+    }
   }
 
   // ------------------------------------------------------------------
@@ -243,10 +242,7 @@ class TombstoneSpec extends AnyFunSuite {
       val a = f
       (a, Resident.residentSearches.get() - before)
     }
-    def withoutResidency[A](f: => A): A = {
-      spark.conf.set(Resident.DriverResidentRowsKey, "0")
-      try f finally spark.conf.unset(Resident.DriverResidentRowsKey)
-    }
+    def withoutResidency[A](f: => A): A = Regime.forcing(spark, Regime.DriverResidentRows, 0L)(f)
     // bm25: the stats-bearing family — the mirror's df comes from the
     // FILTERED posting slices, so resident scores shift exactly like the
     // plan's
@@ -345,7 +341,7 @@ class TombstoneSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------------------------
-  // consolidation (r14, judge r13 #1): N delete dirs fold into one
+  // consolidation: N delete dirs fold into one
   // ------------------------------------------------------------------
 
   private def rawCommittedDeleteDirs(path: String): Set[String] = {
@@ -468,9 +464,9 @@ class TombstoneSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------------------------
-  // fold-name reuse (r15, judge r14 #1): the third consolidation on a
+  // fold-name reuse: the third consolidation on a
   // takedown trickle must NOT reuse a swept fold's ledgered name — the
-  // r14 probe-for-missing-marker scan made the new fold absorb itself,
+  // earlier probe-for-missing-marker scan made the new fold absorb itself,
   // visibleDeleteDirs went empty, and every taken-down doc served again
   // ------------------------------------------------------------------
 
@@ -509,7 +505,7 @@ class TombstoneSpec extends AnyFunSuite {
     deleted :+= 99L
     assert(Tombstones.consolidate(spark, live) == 2)
     checkCycle("fold-1")
-    // the r14 failure cycle: the scan found no fold-0 dir and reused the name
+    // the earlier failure cycle: the scan found no fold-0 dir and reused the name
     assert(Lexical.bm25DeleteFromIndex(spark, live, idsDf(Seq(42L)), "id", "d4"))
     deleted :+= 42L
     assert(Tombstones.consolidate(spark, live) == 2)
@@ -563,7 +559,7 @@ class TombstoneSpec extends AnyFunSuite {
     assert(Lexical.bm25DeleteFromIndex(spark, live, idsDf(Seq(17L)), "id", "d2"))
     assert(Tombstones.consolidate(spark, live) == 2)
     val before = bm25Search(live)
-    // hand-corrupt the meta the way the r14 bug wrote it: the fold's own
+    // hand-corrupt the meta the way an earlier bug wrote it: the fold's own
     // name inside its transitive folds array
     val metaFile = new java.io.File(s"$live/deletes/fold-0/delete_meta.json")
     val json = new String(
@@ -589,21 +585,19 @@ class TombstoneSpec extends AnyFunSuite {
     val (rp, rst) = Lexical.bm25BuildIndex(
       docs(120).filter(!col("id").isin(5L, 17L, 33L)), "id", "text")
     Lexical.bm25WriteIndex(rp, rst, ref, nBuckets = 8)
-    spark.conf.set(Tombstones.MaxDriverDeleteIdsKey, "0") // force Right(frame)
-    spark.conf.set(graft.operators.Resident.DriverResidentRowsKey, "0")
-    try {
-      val idx = Lexical.bm25OpenIndex(spark, live)
-      // the maintenance cadence fires between the open and its searches:
-      // consolidate commits fold-0 and SWEEPS d1/d2's source dirs
-      assert(Tombstones.consolidate(spark, live) == 2)
-      assert(!new java.io.File(s"$live/deletes/d1").exists())
-      // without read()'s localCheckpoint pin this search read the swept
-      // paths mid-job → FileNotFoundException
-      val got = bits(Lexical.bm25SearchIndex(idx, docs(8, from = 300), "id", "text", k = 5))
-      assert(got == bm25Search(ref), "pinned exclusion must still exclude")
-    } finally {
-      spark.conf.unset(Tombstones.MaxDriverDeleteIdsKey)
-      spark.conf.unset(graft.operators.Resident.DriverResidentRowsKey)
+    // force Right(frame)
+    Regime.forcing(spark, Regime.MaxDriverDeleteIds, 0L) {
+      Regime.forcing(spark, Regime.DriverResidentRows, 0L) {
+        val idx = Lexical.bm25OpenIndex(spark, live)
+        // the maintenance cadence fires between the open and its searches:
+        // consolidate commits fold-0 and SWEEPS d1/d2's source dirs
+        assert(Tombstones.consolidate(spark, live) == 2)
+        assert(!new java.io.File(s"$live/deletes/d1").exists())
+        // without read()'s localCheckpoint pin this search read the swept
+        // paths mid-job → FileNotFoundException
+        val got = bits(Lexical.bm25SearchIndex(idx, docs(8, from = 300), "id", "text", k = 5))
+        assert(got == bm25Search(ref), "pinned exclusion must still exclude")
+      }
     }
   }
 }

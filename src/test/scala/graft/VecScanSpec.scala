@@ -2,7 +2,7 @@ package graft
 
 import graft.embed.HashEmbedder
 import graft.functions.TopKBuffer
-import graft.operators.{Clustering, SemanticJoin, SlicedRDD, VecScan}
+import graft.operators.{Clustering, Regime, SemanticJoin, SlicedRDD, VecScan}
 import graft.plans.GraftPlans
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -101,11 +101,7 @@ class VecScanSpec extends AnyFunSuite {
     val r = frame(Seq(Row(10L, Seq(1.0, 0.0)), Row(11L, null), Row(12L, Seq(0.0, 1.0)),
       Row(null, Seq(1.0, 0.0))))
     def forced[T](shuffle: Boolean)(f: => T): T =
-      if (!shuffle) f
-      else {
-        spark.conf.set(VecScan.MaxBroadcastBytesKey, "1")
-        try f finally spark.conf.unset(VecScan.MaxBroadcastBytesKey)
-      }
+      if (!shuffle) f else Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L)(f)
     val knnWant = Set(Seq[Any](1L, 10L, 1.0, 1), Seq[Any](1L, 12L, 0.0, 2))
     // a null left id has no identity to keep: no row on any path
     val outerWant = Set(Seq[Any](1L, 10L, 1.0), Seq[Any](2L, null, null))
