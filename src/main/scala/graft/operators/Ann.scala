@@ -304,7 +304,7 @@ object Ann {
 
   /** Exact schemas of the persisted cell/centroid layouts, as
     * [[writeLayout]] / [[annAppendIndex]] write them: a known schema
-    * skips the footer/schema-inference job per `spark.read` — see
+    * skips the footer/schema-inference job per component read — see
     * [[Lexical.postingsReadSchema]] for the rationale. The IVF_PQ layout
     * carries two extra baked columns, keyed off the codebook file the open
     * already checks. Spec-pinned equal to inference (EngineSpec).

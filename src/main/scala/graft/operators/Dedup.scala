@@ -728,7 +728,7 @@ object Dedup extends Logging {
 
   /** Exact schemas of the persisted layout components, as
     * [[minhashWriteIndex]] / [[minhashAppendIndex]] write them: a
-    * known schema skips the footer/schema-inference job per `spark.read` —
+    * known schema skips the footer/schema-inference job per component read —
     * see [[Lexical.postingsReadSchema]] for the rationale. The id column
     * keeps the CORPUS id type, so it is parameterised from the meta's
     * `id_type` record. Spec-pinned equal to inference (EngineSpec), incl.

@@ -1,9 +1,10 @@
 package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graftbridge.RelationBridge
 import org.apache.spark.sql.types.StructType
 
 /** The on-disk layout the three persisted index families share — BM25
@@ -124,12 +125,48 @@ object IndexLayout {
     * as one multi-path read; a parent without it (no rows) adds nothing.
     */
   private[operators] def readComponents(spark: SparkSession, parents: Seq[String],
-      name: String, schema: StructType): DataFrame = {
+      name: String, schema: StructType): DataFrame =
+    readDirs(spark, parents.map(new Path(_, name)), schema)
+
+  /** The parquet under `dirs`, read with `schema` as one relation; a missing
+    * dir adds nothing. Every component read comes here. The dirs are listed
+    * on the driver, so no read starts Spark's listing job (which it does
+    * for any dir with more than `parallelPartitionDiscovery.threshold`
+    * subdirs, as a 64-bucket or 64-cell component has). The scan is then
+    * cut to the tasks the session's split rule gives its bytes:
+    * `ceil(bytes / maxPartitionBytes)`, but no fewer than the splits a file
+    * scan spreads over (`minPartitionNum`, else the cores), so a component
+    * under one split still reads on every core. Spark itself also charges
+    * each file `openCostInBytes`, which by default exceeds a small
+    * `maxPartitionBytes`, so it would run one task per file. A scan with
+    * fewer splits than that keeps them. Nothing is cached across reads.
+    */
+  private[operators] def readDirs(spark: SparkSession, dirs: Seq[Path],
+      schema: StructType): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dirs = parents.map(new Path(_, name)).filter(d => d.getFileSystem(conf).exists(d))
-    if (dirs.nonEmpty) spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
-    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val listing = dirs.flatMap { d =>
+      val fs = d.getFileSystem(conf)
+      val dir = fs.makeQualified(d)
+      val top = try Some(fs.listStatus(dir)) catch { case _: java.io.FileNotFoundException => None }
+      top.map(sts => dir -> leafFiles(fs, sts))
+    }
+    if (listing.isEmpty)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val (rows, bytes) = RelationBridge.parquet(spark, listing, schema)
+    val (maxSplit, minSplits) = RelationBridge.splitRule(spark)
+    val split = math.max(maxSplit, 1L)
+    rows.coalesce(math.max(minSplits.toLong, math.min((bytes + split - 1) / split, Int.MaxValue)).toInt)
   }
+
+  /** The files among `listed` and under its dirs, recursively, minus the
+    * names a Spark listing hides: `_x` (but not a `k=v` partition dir), `.x`
+    * and `x._COPYING_`.
+    */
+  private def leafFiles(fs: FileSystem, listed: Array[FileStatus]): Array[FileStatus] =
+    listed.filterNot { st =>
+      val n = st.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    }.flatMap(st => if (st.isDirectory) leafFiles(fs, fs.listStatus(st.getPath)) else Array(st))
 
   // ------------------------------------------------------------------
   // root meta

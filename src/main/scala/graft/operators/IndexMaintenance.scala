@@ -318,16 +318,10 @@ object IndexMaintenance {
       StructField("at", LongType), StructField("duration_ms", LongType)))
     val fs = fsOf(spark, root)
     val logRoot = new Path(root, LogDir)
-    if (!fs.exists(logRoot))
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    val committed = fs.listStatus(logRoot).toSeq
+    val committed = if (!fs.exists(logRoot)) Nil else fs.listStatus(logRoot).toSeq
       .collect { case st if st.isDirectory &&
-        fs.exists(new Path(st.getPath, LogMarker)) => st.getPath.toString }
-    if (committed.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    else spark.read.schema(schema).parquet(committed: _*)
+        fs.exists(new Path(st.getPath, LogMarker)) => st.getPath }
+    IndexLayout.readDirs(spark, committed, schema)
   }
 
   /** Replicate the CURRENT committed generation of `srcRoot` onto

@@ -306,7 +306,7 @@ object Lexical {
 
   /** Exact schemas of the persisted layout components, as [[bm25WriteIndex]]
     * / [[bm25AppendIndex]] write them: passing the known schema to
-    * `spark.read` ([[IndexLayout.readComponent]]) skips the
+    * the component read ([[IndexLayout.readComponent]]) skips the
     * footer/schema-inference JOB each open otherwise pays per component
     * (~20-50 ms of scheduler round-trip each — the dominant cost of
     * lifecycle queries whose indexes are takedown-sized). File sources

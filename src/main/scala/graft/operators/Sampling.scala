@@ -144,15 +144,6 @@ object Sampling {
       .drop("__rn", "__cnt")
   }
 
-  /** The scale form of [[topFractionExact]]: per-group score threshold from
-    * `approx_percentile` (one partial aggregate), joined back as a tiny
-    * per-key table (Catalyst/AQE broadcasts it) and applied as a codegen
-    * `score >= threshold` filter — no window, no per-group sort, works with
-    * millions of groups. The kept set can differ from the exact gate by the
-    * rows within the sketch's rank-error band around the cutoff
-    * (`accuracy` trades memory for band width); the spec pins the two forms
-    * equal at bench scale where the sketch is exact.
-    */
   /** The per-key `(keys..., thrCol)` threshold table behind
     * [[topFractionApprox]] — exposed so other regimes (e.g. a streaming
     * gate joining each micro-batch against a static threshold table) can
@@ -167,6 +158,15 @@ object Sampling {
       .agg(percentile_approx(col(scoreCol), lit(1.0 - frac), lit(accuracy)).as(thrCol))
   }
 
+  /** The scale form of [[topFractionExact]]: per-group score threshold from
+    * `approx_percentile` (one partial aggregate), joined back as a tiny
+    * per-key table (Catalyst/AQE broadcasts it) and applied as a codegen
+    * `score >= threshold` filter — no window, no per-group sort, works with
+    * millions of groups. The kept set can differ from the exact gate by the
+    * rows within the sketch's rank-error band around the cutoff
+    * (`accuracy` trades memory for band width); the spec pins the two forms
+    * equal at bench scale where the sketch is exact.
+    */
   def topFractionApprox(
       df: DataFrame, scoreCol: String, keys: Seq[String], frac: Double,
       accuracy: Int = 10000): DataFrame = {
@@ -200,8 +200,8 @@ object Sampling {
     * sorting a two-hundredth of it, with the exact gate's bit-identical
     * output (spec-pinned equal on adversarial tie/tiny-group inputs, and the
     * composite spec pins the whole gate→DSIR→budget recipe equal through it).
-    */
-  /** Default accuracy 1000, NOT topFractionApprox's 10000: here the sketch
+    *
+    * Default accuracy 1000, NOT topFractionApprox's 10000: here the sketch
     * never decides membership (the per-group counts make exactness
     * unconditional), it only positions the band — and the margin is floored
     * at `bandFrac` (0.005 > 4/1000), so a finer sketch buys nothing while

@@ -279,7 +279,7 @@ object SemanticJoin {
     val rk = keyed(r, RightIdCol)
     val parts = VecScan.slicesFor(VecScan.estimatedRows(lk.queryExecution.optimizedPlan),
       math.min(VecScan.estimatedRows(rk.queryExecution.optimizedPlan), Int.MaxValue).toInt,
-      dim, upper = false, leftParts = 1, spark.sparkContext.defaultParallelism)
+      dim, upper = false, spark.sparkContext.defaultParallelism)
     val keyEnc = Encoders.row(StructType(lk.schema.take(blockingVars.length)))
     def grouped(df: DataFrame) = df.repartition(parts, blockingVars.map(col): _*)
       .groupBy(blockingVars.map(col): _*).as[Row, Row](keyEnc, Encoders.row(df.schema))

@@ -37,10 +37,10 @@ import scala.reflect.ClassTag
   * broadcast, bounded by [[Regime.MaxBroadcastBytes]]; callers fall back to the
   * shuffle/crossJoin plan (or IVF) above that. The left side streams and
   * is split by pair work ([[scanRdd]]): a scan worth more than one task's
-  * share of multiply-adds runs on up to `defaultParallelism` tasks even
-  * when its left side is one partition (re-read per slice when cached or
-  * checkpointed, else shuffled once into the slices), and a small scan
-  * stays in one task.
+  * share of multiply-adds runs on up to `defaultParallelism` tasks, its
+  * left rows dealt across all of them by id hash whatever partitions they
+  * come in (re-read per task when cached or checkpointed, else shuffled
+  * once into the tasks), and a small scan stays in its left partitions.
   */
 object VecScan {
 
@@ -173,16 +173,15 @@ object VecScan {
     */
   private[graft] val WorkPerTask: Long = 1L << 26
 
-  /** How many tasks each left partition's rows are dealt across: the scan's
-    * pair work (`estLeftRows × nRight`, halved for the i<j self-scan, times
-    * the dimension) in [[WorkPerTask]] units, capped at `parallelism` tasks
-    * in all, over the left side's `leftParts` partitions.
+  /** How many tasks a scan's left rows are dealt across: the scan's pair
+    * work (`estLeftRows × nRight`, halved for the i<j self-scan, times the
+    * dimension) in [[WorkPerTask]] units, at least 1 and capped at
+    * `parallelism`.
     */
   private[graft] def slicesFor(estLeftRows: Long, nRight: Int, dim: Int, upper: Boolean,
-      leftParts: Int, parallelism: Int): Int = {
+      parallelism: Int): Int = {
     val work = BigInt(math.max(estLeftRows, 0L)) * nRight * math.max(dim, 1) / (if (upper) 2 else 1)
-    val tasks = ((work + WorkPerTask - 1) / WorkPerTask).min(BigInt(math.max(parallelism, 1))).toInt
-    math.max(1, tasks / math.max(leftParts, 1))
+    math.max(1, ((work + WorkPerTask - 1) / WorkPerTask).min(BigInt(math.max(parallelism, 1))).toInt)
   }
 
   /** Row-count estimate of a plan: the optimizer's row count, else its size
@@ -226,29 +225,28 @@ object VecScan {
   /** The distributed scan: left rows (id at `idOrd`, vector at `vecOrd`) to
     * the rows of `spec`, scored against the matrix `mat` returns on the
     * executor. Split by pair work ([[slicesFor]]): each left row goes to the
-    * slice of its id ([[sliceOf]]). A [[materialized]] left partition is
-    * re-read by each of its slices ([[SlicedRDD]], no shuffle); any other
-    * left side is shuffled once into the slices, so its lineage is not
-    * recomputed per slice.
+    * slice of its id ([[sliceOf]]) among all the scan's tasks, from whichever
+    * left partition it comes, so a left side whose ids run in order per
+    * partition (the i<j self-scan's work falls with the id) still spreads
+    * evenly. A [[materialized]] left side is re-read by each slice
+    * ([[SlicedRDD]], no shuffle); any other is shuffled once into the slices,
+    * so its lineage is not recomputed per slice. A one-task scan keeps its
+    * left partitions.
     */
   private[graft] def scanRdd(
       left: RDD[InternalRow], idOrd: Int, idType: DataType, vecOrd: Int, vecElem: DataType,
       estLeftRows: Long, nRight: Int, dim: Int, mat: () => Mat, spec: ScanSpec): RDD[InternalRow] = {
     val sc = left.sparkContext
-    val slices = slicesFor(estLeftRows, nRight, dim, spec.upper,
-      left.getNumPartitions, sc.defaultParallelism)
+    val slices = slicesFor(estLeftRows, nRight, dim, spec.upper, sc.defaultParallelism)
     val src =
       if (slices == 1) left
       else {
         // a null id yields no row, so its slice does not matter
-        val sliceBy = (r: InternalRow, n: Int) =>
-          if (r.isNullAt(idOrd)) 0 else sliceOf(graft.plans.RowVec.getId(r, idOrd, idType), n)
-        if (materialized(left)) new SlicedRDD(left, slices, sliceBy(_: InternalRow, slices))
-        else {
-          val n = left.getNumPartitions * slices
-          new ShuffledRDD[Int, InternalRow, InternalRow](
-            left.mapPartitions(_.map(r => (sliceBy(r, n), r.copy()))), new HashPartitioner(n)).values
-        }
+        val sliceBy = (r: InternalRow) =>
+          if (r.isNullAt(idOrd)) 0 else sliceOf(graft.plans.RowVec.getId(r, idOrd, idType), slices)
+        if (materialized(left)) new SlicedRDD(left, slices, sliceBy)
+        else new ShuffledRDD[Int, InternalRow, InternalRow](
+          left.mapPartitions(_.map(r => (sliceBy(r), r.copy()))), new HashPartitioner(slices)).values
       }
     val pairs = pairsScored(sc)
     src.mapPartitions({ it =>
@@ -397,35 +395,35 @@ object VecScan {
       RangeSpec(tau, excludeSelf, onlyUpperPairs, keepUnmatched), rangeSchema(keepUnmatched))
 }
 
-/** Deals each parent partition's rows over `slices` child partitions (row
-  * `r` to slice `slice(r)`, in `[0, slices)`): a one-partition input then runs
-  * on `slices` tasks without a shuffle. Each slice reads the whole parent
-  * partition, so this pays off only when the read is cheap (a cached or
-  * checkpointed parent) and per-row work dwarfs it — a similarity scan. The
-  * slice must be a function of the row, not of its position: two reads of a
-  * partition may return its rows in different orders.
+/** Deals the rows of every parent partition over `slices` child partitions
+  * (row `r` to slice `slice(r)`, in `[0, slices)`): a one-partition input
+  * then runs on `slices` tasks, and a many-partition one on `slices` tasks
+  * of even shares, without a shuffle. Each slice reads the whole parent, so
+  * this pays off only when the read is cheap (a cached or checkpointed
+  * parent) and per-row work dwarfs it — a similarity scan. The slice must be
+  * a function of the row, not of its position: two reads of a partition may
+  * return its rows in different orders.
   */
 private[graft] final class SlicedRDD[T: scala.reflect.ClassTag](parent: RDD[T], slices: Int,
     slice: T => Int)
   extends RDD[T](parent.sparkContext, Seq(new NarrowDependency[T](parent) {
-    override def getParents(partitionId: Int): Seq[Int] = Seq(partitionId / slices)
+    override def getParents(partitionId: Int): Seq[Int] = parent.partitions.indices
   })) {
 
   override protected def getPartitions: Array[Partition] = {
     val ps = parent.partitions
-    Array.tabulate[Partition](ps.length * slices)(i => SlicePartition(i, ps(i / slices)))
+    Array.tabulate[Partition](slices)(SlicePartition(_, ps))
   }
 
-  override def compute(split: Partition, context: TaskContext): Iterator[T] = {
-    val mine = split.index % slices
-    parent.iterator(split.asInstanceOf[SlicePartition].parent, context).filter(slice(_) == mine)
-  }
+  override def compute(split: Partition, context: TaskContext): Iterator[T] =
+    split.asInstanceOf[SlicePartition].parents.iterator
+      .flatMap(parent.iterator(_, context)).filter(slice(_) == split.index)
 
   override protected def getPreferredLocations(split: Partition): Seq[String] =
-    parent.preferredLocations(split.asInstanceOf[SlicePartition].parent)
+    split.asInstanceOf[SlicePartition].parents.toSeq.flatMap(parent.preferredLocations).distinct
 }
 
-/** A slice of `parent`, carried along: a parent RDD's partitions are known
-  * on the driver only.
+/** A slice of `parent`, with the parent's partitions carried along: they
+  * are known on the driver only.
   */
-private final case class SlicePartition(index: Int, parent: Partition) extends Partition
+private final case class SlicePartition(index: Int, parents: Array[Partition]) extends Partition

@@ -9,31 +9,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 
-/** Logical plan node for the semantic top-k (cosine kNN) join — the engine's
-  * core operator lifted to a first-class Catalyst citizen (SURVEY §4.2's
-  * optional SQL-surface item). The node is declarative: it names the id/vec
-  * columns of each side and `k`; HOW it runs (broadcast side, kernel, rank
-  * materialization) is decided at planning by [[GraftStrategy]], exactly like
-  * Spark's own Join → {Broadcast,SortMerge,Hash}JoinExec split.
-  *
-  * Column bindings are by NAME (resolved against each child's own output
-  * independently), not by `Expression`: a semantic self-join reads the same
-  * table on both sides, where attribute-based bindings would collide on
-  * duplicate expression ids — the exact hazard `DeduplicateRelations` exists
-  * to patch for Spark's built-in binary nodes, which does not know about this
-  * one. By-name binding per side makes the ambiguity unrepresentable.
-  *
-  * Output is `(left_id long, right_id long, score double, rank int)` — the
-  * same contract as [[graft.operators.SemanticJoin.knnJoinVec]], rank 1-based
-  * best-first, ties broken (score desc, right_id asc), scores bit-identical
-  * to the DataFrame path (same double op order + clamp as
-  * [[graft.operators.VecScan]]).
-  *
-  * The output attributes are a constructor field (with fresh ids by default)
-  * so that optimizer copies — `withNewChildrenInternal`, rule rewrites —
-  * preserve expression ids; regenerating them per copy would orphan every
-  * reference above this node.
-  */
 /** Shared by-name column binding + validation for the semantic vector join
   * family ([[SemanticTopKJoin]], [[SemanticRangeJoin]]): each node names the
   * id/vec columns of each side and resolves them against that child's own
@@ -74,6 +49,31 @@ trait SemanticVecJoin extends BinaryNode {
     find(right, rightVecCol).exists(a => vecOk(a.dataType))
 }
 
+/** Logical plan node for the semantic top-k (cosine kNN) join — the engine's
+  * core operator lifted to a first-class Catalyst citizen (SURVEY §4.2's
+  * optional SQL-surface item). The node is declarative: it names the id/vec
+  * columns of each side and `k`; HOW it runs (broadcast side, kernel, rank
+  * materialization) is decided at planning by [[GraftStrategy]], exactly like
+  * Spark's own Join → {Broadcast,SortMerge,Hash}JoinExec split.
+  *
+  * Column bindings are by NAME (resolved against each child's own output
+  * independently), not by `Expression`: a semantic self-join reads the same
+  * table on both sides, where attribute-based bindings would collide on
+  * duplicate expression ids — the exact hazard `DeduplicateRelations` exists
+  * to patch for Spark's built-in binary nodes, which does not know about this
+  * one. By-name binding per side makes the ambiguity unrepresentable.
+  *
+  * Output is `(left_id long, right_id long, score double, rank int)` — the
+  * same contract as [[graft.operators.SemanticJoin.knnJoinVec]], rank 1-based
+  * best-first, ties broken (score desc, right_id asc), scores bit-identical
+  * to the DataFrame path (same double op order + clamp as
+  * [[graft.operators.VecScan]]).
+  *
+  * The output attributes are a constructor field (with fresh ids by default)
+  * so that optimizer copies — `withNewChildrenInternal`, rule rewrites —
+  * preserve expression ids; regenerating them per copy would orphan every
+  * reference above this node.
+  */
 case class SemanticTopKJoin(
     left: LogicalPlan,
     right: LogicalPlan,

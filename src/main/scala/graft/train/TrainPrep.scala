@@ -17,6 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object TrainPrep {
 
+  /** Broadcast the key→id mapping only below this row count; above it the
+    * distinct-key set is itself big data (high-cardinality keys at 100 TB) and
+    * a forced broadcast would blow executor memory — fall through to a plain
+    * equi-join and let Catalyst pick SMJ/shuffled-hash.
+    */
+  val MaxBroadcastGroupKeys: Long = 4L * 1000 * 1000
+
   /** Dense 0-based group ids per distinct key tuple, in key sort order — the
     * engine's `groupby(ids).ngroup()` (reference: preprocess.py:51, 131-147).
     *
@@ -25,13 +32,6 @@ object TrainPrep {
     * ranks + per-partition offsets) — no single-task global window anywhere,
     * even when the distinct-key set itself is large.
     */
-  /** Broadcast the key→id mapping only below this row count; above it the
-    * distinct-key set is itself big data (high-cardinality keys at 100 TB) and
-    * a forced broadcast would blow executor memory — fall through to a plain
-    * equi-join and let Catalyst pick SMJ/shuffled-hash.
-    */
-  val MaxBroadcastGroupKeys: Long = 4L * 1000 * 1000
-
   def assignGroupIds(
       df: DataFrame, keys: Seq[String], outCol: String = "group_id",
       maxBroadcastKeys: Long = MaxBroadcastGroupKeys): DataFrame = {

@@ -15,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * missing its `batch_meta.json` fails the open, an empty batch
   * commits nothing and leaves no dir, a delete that finds nothing leaves
   * no dir, a delete records each found id once however often it is named,
-  * and every write and delete counts its rows in its own result stage.
+  * and every write and delete counts its rows in its own result stage. An
+  * open of a root with more than 32 partition dirs per component starts no
+  * job, and each component scan runs on as many tasks as its bytes fill,
+  * and no fewer than the cores.
   */
 class IndexLayoutSpec extends AnyFunSuite {
 
@@ -242,5 +245,54 @@ class IndexLayoutSpec extends AnyFunSuite {
       assert(fs.exists(new Path(s"$dir/deletes/d1/_COMMITTED")))
       f.open(dir)
     }
+  }
+
+  test("opens of a 64-bucket bm25 and a 40-cell ANN root start no job; scans split by bytes") {
+    val bm = tmp("bm25_wide")
+    val (postings, stats) = Lexical.bm25BuildIndex(docs(0 until 400), "id", "text")
+    Lexical.bm25WriteIndex(postings, stats, bm) // the default 64 buckets
+    val an = tmp("ann_wide")
+    val (cells, cents) = Ann.annBuildIndex(docs(0 until 400), "id", "vec", nCentroids = 40)
+    Ann.annWriteIndex(cells, cents, an)
+    def partitionDirs(dir: String): Int =
+      fs.listStatus(new Path(dir)).count(st => st.isDirectory && st.getPath.getName.contains("="))
+    assert(partitionDirs(s"$bm/postings") > 32)
+    assert(partitionDirs(s"$an/cells") > 32)
+    /** The bytes of the parquet files under `dir`. */
+    def bytes(dir: Path): Long = fs.listStatus(dir).map { st =>
+      if (st.isDirectory) bytes(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) st.getLen else 0L
+    }.sum
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    // at the default split (one task per component) and at one small enough
+    // to give several tasks, yet fewer than the files
+    for (split <- Seq(128L << 20, 16L << 10)) try {
+      spark.conf.set(key, split.toString)
+      val (bmIdx, bmJobs) = SpecJobs.of(spark)(Lexical.bm25OpenIndex(spark, bm))
+      val (anIdx, anJobs) = SpecJobs.of(spark)(Ann.annOpenIndex(spark, an))
+      assert(bmJobs.isEmpty && anJobs.isEmpty, s"split $split: ${bmJobs ++ anJobs}")
+      for ((name, dir, df, partCol) <- Seq(
+          ("postings", s"$bm/postings", bmIdx.postings, "__bkt"),
+          ("cells", s"$an/cells", anIdx.cells, "__cell"))) {
+        // the session's split rule in bytes: no more splits than the bytes
+        // fill, and no fewer than the cores
+        val files = fs.globStatus(new Path(s"$dir/*/*.parquet")).length
+        val want = math.max((bytes(new Path(dir)) + split - 1) / split,
+          spark.sparkContext.defaultParallelism)
+        val tasks = df.queryExecution.toRdd.getNumPartitions
+        assert(tasks <= want && tasks < files, s"$name at split $split: $tasks tasks, " +
+          s"$files files, max(ceil(bytes / split), cores) = $want")
+        val plain = spark.read.schema(df.schema).parquet(dir)
+        assert(df.collect().map(_.toString).sorted.toSeq ==
+          plain.collect().map(_.toString).sorted.toSeq, s"$name at split $split")
+        val pruned = df.filter(col(partCol) === 3)
+        val scan = pruned.queryExecution.executedPlan.toString
+        assert(scan.linesIterator.exists(l => l.contains("PartitionFilters") &&
+          l.contains(s"($partCol#") && l.contains("= 3)")), scan)
+        assert(pruned.collect().map(_.toString).sorted.toSeq ==
+          plain.filter(col(partCol) === 3).collect().map(_.toString).sorted.toSeq)
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

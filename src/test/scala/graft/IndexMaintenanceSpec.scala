@@ -125,6 +125,23 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       s"per-root `at` must be monotone in pass order, got $walls")
   }
 
+  test("persisted maintenance log: more than 32 passes read with no listing job") {
+    val root = tmp("graft_maint_log_wide")
+    Dedup.minhashWriteIndex(
+      Dedup.minhashBuildIndex(docs(0L until 8L, i => s"base$i"), "doc_id", "text"),
+      genPath(root, 0))
+    IndexMaintenance.commitGeneration(spark, root, 0)
+    // 34 passes: Spark lists more than 32 paths in a job of its own
+    val passes = 34
+    (0 until passes).foreach(_ => IndexMaintenance.maintainIndexes(spark, minhashRoot = Some(root)))
+    val (log, jobs) = SpecJobs.of(spark)(IndexMaintenance.eventsDf(spark, root))
+    assert(jobs.isEmpty, s"jobs were $jobs")
+    val (rows, readJobs) = SpecJobs.of(spark)(log.select("pass", "action").collect())
+    assert(readJobs.size == 1, s"jobs were $readJobs")
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).sorted.toSeq ==
+      (0 until passes).map(_ -> "none"))
+  }
+
   test("two-writer log race: a pass committed between listing and write shifts BOTH the directory and the pass column (judge r12 #1)") {
     val root = tmp("graft_maint_race")
     Dedup.minhashWriteIndex(

@@ -205,14 +205,35 @@ class VecScanSpec extends AnyFunSuite {
       want.sortBy(r => (r(0).asInstanceOf[Long], r(3).asInstanceOf[Int])))
   }
 
+  test("split: an i<j self-scan over two partitions of ordered ids deals even pair counts to every task") {
+    import spark.implicits._
+    val rows = randomVecs(2000, 128, 7)
+    val mat = VecScan.Mat.of(rows.map(_._1).toArray, rows.map(_._2).toArray)
+    // each partition holds a contiguous id run: the low ids carry most of
+    // the i<j pairs
+    val ordered = rows.toDF("id", "vec").repartitionByRange(2, col("id"))
+    for ((name, left) <- Seq("through a shuffle" -> ordered,
+        "checkpointed" -> ordered.localCheckpoint())) {
+      assert(left.rdd.getNumPartitions == 2, name)
+      // τ = -1 keeps every scored pair, so a task's rows are its pairs
+      val scan = VecScan.range(left, "id", "vec", mat, -1.0, excludeSelf = true,
+        onlyUpperPairs = true)
+      val perTask = scan.queryExecution.toRdd.mapPartitions(it => Iterator(it.size.toLong)).collect()
+      assert(perTask.length > 2 && perTask.sum == 2000L * 1999 / 2, s"$name: ${perTask.toSeq}")
+      assert(perTask.max <= 1.5 * perTask.min, s"$name: pairs per task ${perTask.toSeq}")
+    }
+  }
+
   test("SlicedRDD: every row lands in exactly one slice even when each read returns a new order") {
-    val parent = spark.sparkContext.parallelize(0L until 2000L, 1)
-      .mapPartitions(it => scala.util.Random.shuffle(it.toVector).iterator)
-    val sliced = new SlicedRDD(parent, 4, (id: Long) => VecScan.sliceOf(id, 4))
-    assert(sliced.getNumPartitions == 4)
-    val perSlice = sliced.glom().collect()
-    assert(perSlice.forall(_.nonEmpty))
-    assert(perSlice.flatten.sorted.toSeq == (0L until 2000L))
+    for (parts <- Seq(1, 3)) {
+      val parent = spark.sparkContext.parallelize(0L until 2000L, parts)
+        .mapPartitions(it => scala.util.Random.shuffle(it.toVector).iterator)
+      val sliced = new SlicedRDD(parent, 4, (id: Long) => VecScan.sliceOf(id, 4))
+      assert(sliced.getNumPartitions == 4, parts)
+      val perSlice = sliced.glom().collect()
+      assert(perSlice.forall(_.nonEmpty), parts)
+      assert(perSlice.flatten.sorted.toSeq == (0L until 2000L), parts)
+    }
   }
 
   // --- partition independence and one evaluation per operator ---------------
