@@ -120,7 +120,8 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point: scalar functions, the
   * `graft_knn_join` table function, the [[graft.plans.GraftStrategy]]
-  * planner strategy, and the left-id pushdown optimizer rule.
+  * planner strategy, and the optimizer rules: the left-id pushdown and
+  * [[graft.plans.CountLocalRelation]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -133,5 +134,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.plans.GraftPlans.tableFunctions.foreach(ext.injectTableFunction)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughSemanticVecJoin)
+    ext.injectOptimizerRule(_ => graft.plans.CountLocalRelation)
   }
 }

@@ -603,8 +603,8 @@ object Lexical {
     // pinned serving ([[Resident.Tiers.serve]]): under the row bound the
     // whole search is driver arithmetic over the per-open term →
     // posting-slice mirror, zero Spark jobs; over it, the same fold runs
-    // once per partition of the partitioned tier, in a lazy one-partition
-    // plan that any action runs as one job. Decided BEFORE the per-term
+    // once per partition of the partitioned tier, in one job of one stage
+    // that runs here, merged on the driver. Decided BEFORE the per-term
     // XxHash evals and the pruned-scan Dataset analysis below — those are
     // executor-plan setup neither tier uses. Same contrib
     // op order, same fold order, same TopKBuffer — spec-pinned bit-identical

@@ -35,8 +35,10 @@ object Regime {
 
   /** Bytes of a side collected and broadcast as a scan matrix or a code
     * table (`VecScan.collectMatIfFits`, MinHash's driver dedup, the
-    * quantized scans). Over it the joins take the shuffled crossJoin plan
-    * and clustering the SRP-LSH candidate pairs. 256 MiB leaves headroom
+    * quantized scans), and the fold output a partitioned-tier search ships
+    * to the driver (an even share per partition). Over it the joins take
+    * the shuffled crossJoin plan, clustering the SRP-LSH candidate pairs
+    * and a pinned search the family's plan. 256 MiB leaves headroom
     * under Spark's default `spark.driver.maxResultSize=1g`; raise it
     * together with maxResultSize and driver memory.
     */
@@ -50,8 +52,8 @@ object Regime {
 
   /** Index rows (postings, cells, signatures) a pinned index may hold in a
     * driver mirror: ~131k of the widest rows is a few tens of MB. Over it,
-    * or at 0, a pinned index serves from the partitioned tier (one job per
-    * search); an unpinned index always takes the plan.
+    * or at 0, a pinned index serves from the partitioned tier (one job of
+    * one stage per search); an unpinned index always takes the plan.
     */
   val DriverResidentRows = Bound("spark.graft.serving.driverResidentRows", 1L << 17)
 

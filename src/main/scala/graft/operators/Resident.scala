@@ -271,13 +271,13 @@ object Resident {
   /** The tier between the driver mirror and the distributed plan, for a
     * pinned index over [[Regime.DriverResidentRows]]: the index rows dealt to
     * partitions by their document id, each partition holding the mirror of
-    * its documents, cached MEMORY_ONLY. A search is one job whose tasks run
-    * the family's fold over their partition, merged in one task. Each
-    * document is whole inside one partition and every selection orders by
-    * (score desc, id asc), which is total, so the rows are those of the
-    * driver mirror (one partition) whatever the partition count. An evicted
-    * block is rebuilt from lineage: eviction costs speed, never
-    * correctness.
+    * its documents, cached MEMORY_ONLY. A search is one job of one stage
+    * whose tasks run the family's fold over their partition; the driver
+    * merges their output. Each document is whole inside one partition and
+    * every selection orders by (score desc, id asc), which is total, so the
+    * rows are those of the driver mirror (one partition) whatever the
+    * partition count. An evicted block is rebuilt from lineage: eviction
+    * costs speed, never correctness.
     */
   private[operators] final class Partitioned[M <: Mirror](val parts: RDD[M]) extends Mirror {
     /** The cached blocks as the block manager's status store reports them:
@@ -364,12 +364,13 @@ object Resident {
 
     /** The one serving gate. When the frames are pinned, any allow set is
       * driver-sized and the search is `ready`, the search runs as
-      * `merge(fold(mirror, allowSet))`: on the driver mirror under
-      * [[Regime.DriverResidentRows]] (a LocalRelation, zero jobs, counted in
-      * [[residentSearches]]), else on the partitioned tier (counted in
-      * [[partitionedSearches]]) as a one-partition plan: `fold` runs in each
-      * partition's task, `merge` in one task over their output, so any
-      * action on the result (a count included) is one job. None: the
+      * `merge(fold(mirror, allowSet))` and returns a LocalRelation: on the
+      * driver mirror under [[Regime.DriverResidentRows]] (zero jobs, counted
+      * in [[residentSearches]]), else on the partitioned tier ([[foldParts]],
+      * counted in [[partitionedSearches]]), whose one job runs here, when the
+      * search is called, not when its result is acted on. Either way an
+      * action on the result runs no job, a `count()` included
+      * ([[graft.plans.CountLocalRelation]], installed here). None: the
       * family's distributed plan serves. The pin check comes first: the
       * allow set's first evaluation and a search's `ready` may run jobs an
       * unpinned index must not pay; `fold` and `merge` are built after the
@@ -381,15 +382,30 @@ object Resident {
       if (!Serving.pinned(frames: _*) || allowed.isDefined && allowSet.isEmpty || !ready) None
       else {
         val (f, m, allow) = (fold, merge, allowSet.orNull)
-        Some(if (onDriver) {
-          residentSearches.incrementAndGet()
-          ColumnBridge.fromLocalRows(spark, m(f(driverMirror, allow)).toVector, schema)
-        } else {
-          partitionedSearches.incrementAndGet()
-          ColumnBridge.fromSinglePartitionRows(spark, partitioned().parts
-            .flatMap(f(_, allow)).coalesce(1, shuffle = true).mapPartitions(m), schema)
-        })
+        val folded =
+          if (onDriver) { residentSearches.incrementAndGet(); Some(f(driverMirror, allow)) }
+          else foldParts(f, allow).map { out => partitionedSearches.incrementAndGet(); out }
+        folded.map { out =>
+          graft.plans.GraftPlans.installRules(spark)
+          ColumnBridge.fromLocalRows(spark, m(out).toVector, schema)
+        }
       }
+
+    /** `f` over every partition of the tier, in one job of one stage: each
+      * task ships its fold's output when its estimated size fits an even
+      * share of [[Regime.MaxBroadcastBytes]], so the driver never holds more
+      * than the bound. None when a partition's output is over its share.
+      */
+    private def foldParts[T: ClassTag](f: (M, AllowSet) => Iterator[T],
+        allow: AllowSet): Option[Iterator[T]] = {
+      val parts = partitioned().parts
+      val share = Regime.MaxBroadcastBytes(spark) / math.max(parts.getNumPartitions, 1)
+      val outs = spark.sparkContext.runJob(parts, (it: Iterator[M]) => {
+        val out = it.flatMap(f(_, allow)).toArray
+        if (org.apache.spark.util.SizeEstimator.estimate(out) <= share) out else null
+      })
+      if (outs.contains(null)) None else Some(outs.iterator.flatMap(_.iterator))
+    }
 
     /** A filtered view of this index: `copy` of it with the allow frame of
       * `allowedIds`' `idCol`, intersected with its own (chained filters mean

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Entry points for the Catalyst-native semantic join: a Dataset-level
   * constructor, a `graft_knn_join` SQL table function, and the session
-  * wiring that installs the strategy + optimizer rule at runtime (the
+  * wiring that installs the strategy + optimizer rules at runtime (the
   * config-time path is `spark.sql.extensions=graft.GraftExtensions`).
   */
 object GraftPlans {
@@ -603,19 +603,27 @@ object GraftPlans {
         new ExpressionInfo("graft", "graft_snapshot_diff"),
         snapshotDiffBuilder _))
 
-  /** Install strategy, pushdown rule, and table functions on a live session.
-    * Idempotent — safe to call per query.
+  /** Install strategy, optimizer rules ([[installRules]]) and table
+    * functions on a live session. Idempotent — safe to call per query.
     */
   def install(spark: SparkSession): Unit = {
     if (!spark.experimental.extraStrategies.contains(GraftStrategy)) {
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GraftStrategy
     }
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughSemanticVecJoin)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughSemanticVecJoin
-    }
+    installRules(spark)
     tableFunctions.foreach { case (ident, info, builder) =>
       spark.sessionState.tableFunctionRegistry.registerFunction(ident, info, builder)
+    }
+  }
+
+  /** Install the optimizer rules on a live session: the left-id pushdown and
+    * [[CountLocalRelation]]. Idempotent; a serving search calls it.
+    */
+  def installRules(spark: SparkSession): Unit = spark.experimental.synchronized {
+    val missing = Seq(PushFilterThroughSemanticVecJoin, CountLocalRelation)
+      .filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty) {
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ missing
     }
   }
 }

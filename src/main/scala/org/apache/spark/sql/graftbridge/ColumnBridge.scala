@@ -27,22 +27,6 @@ object ColumnBridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
 
-  /** Wrap a ONE-partition RDD of rows in `schema`'s internal form as a
-    * DataFrame whose plan knows it is one partition: an action over it, a
-    * count's aggregate included, adds no exchange and runs as the RDD's
-    * own job.
-    */
-  def fromSinglePartitionRows(spark: org.apache.spark.sql.SparkSession,
-      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
-    require(rows.getNumPartitions == 1, s"want one partition, got ${rows.getNumPartitions}")
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    org.apache.spark.sql.classic.Dataset.ofRows(session,
-      org.apache.spark.sql.execution.LogicalRDD(
-        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows,
-        org.apache.spark.sql.catalyst.plans.physical.SinglePartition)(session))
-  }
-
   /** Wrap driver-held rows already in `schema`'s internal form as a
     * LocalRelation: collecting it is a zero-job driver read.
     */

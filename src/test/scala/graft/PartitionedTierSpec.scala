@@ -178,7 +178,7 @@ class PartitionedTierSpec extends AnyFunSuite {
         assert(first == 1, s"first search (deals and caches the tier) ran $first jobs")
         val second = jobsOf(search(idx, 0.9, 0.4).collect())
         assert(second == 1, s"second search ran $second jobs")
-        // the result is a one-partition plan: a count adds no exchange
+        // the job ran at the call; a count of the LocalRelation result runs none
         val counted = jobsOf(search(idx).count())
         assert(counted == 1, s"a counted search ran $counted jobs")
       } finally {
@@ -486,6 +486,105 @@ class PartitionedTierSpec extends AnyFunSuite {
         val mhCounted = jobsOf(Dedup.minhashSearchIndex(mh, mhBatch, "id", "text", 0.5).count())
         assert(mhCounted == 1, s"a counted minhash search ran $mhCounted jobs")
       } finally {
+        ann.tiers.drop(); ann.cells.unpersist()
+        mh.tiers.drop(); mh.postings.unpersist(); mh.shingles.unpersist()
+      }
+    }
+  }
+
+  test("a warm search is one job of one completed stage: bm25, bm25 filtered, ann float, int8 and PQ, minhash; the first search is one job") {
+    overBound {
+      /** `f`'s jobs, with the partitioned searches it ran. */
+      def census(f: => DataFrame): (Vector[graft.Instrument.Job], Long) = {
+        val (jobs, parts, _) = tally(graft.SpecJobs.of(spark)(f.collect())._2)
+        (jobs, parts)
+      }
+      /** The first search deals and caches the tier: one job. */
+      def first(label: String)(f: => DataFrame): Unit = {
+        val (jobs, parts) = census(f)
+        assert(parts == 1 && jobs.size == 1, s"$label: first search ran ${jobs.size} jobs")
+      }
+      /** A warm search: one job of one completed stage, served by the tier. */
+      def warm(label: String)(f: => DataFrame): Unit = {
+        val (jobs, parts) = census(f)
+        assert(parts == 1, s"$label: the partitioned tier must serve")
+        assert(jobs.size == 1, s"$label: a warm search ran ${jobs.size} jobs")
+        assert(jobs.head.stages == 1,
+          s"$label: a warm search ran ${jobs.head.stages} stages: ${jobs.head.stageSites}")
+      }
+      val bm25 = pinned(write(docs(200)))
+      bm25.statsRow // read once per open, by the first search or a session's prewarm
+      val annDir = java.nio.file.Files.createTempDirectory("graft_partitioned_ann_stages").toString
+      val (cells, cents) = Ann.annBuildIndex(vecDf(vecs(200)), "vec_id", "embedding", nCentroids = 4)
+      Ann.annWriteIndex(cells, cents, annDir, pqM = 4)
+      val ann = pinnedAnn(annDir)
+      ann.centroidMat
+      val mhDir = java.nio.file.Files.createTempDirectory("graft_partitioned_mh_stages").toString
+      Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(mhCorpus, "id", "text"), mhDir)
+      val mh = pinnedMinhash(mhDir)
+      try {
+        first("bm25")(search(bm25))
+        warm("bm25")(search(bm25, 0.9, 0.4))
+        val view = Lexical.bm25FilteredView(bm25, docs(200).select(col("id"))
+          .filter(col("id") % 2 === 0), "id")
+        search(view).collect() // collects the view's allow set once
+        warm("bm25 filtered")(search(view))
+        first("ann float")(Ann.annSearchIndex(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2))
+        warm("ann float")(Ann.annSearchIndex(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2))
+        warm("ann int8")(Ann.annSearchIndexInt8(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2))
+        warm("ann PQ")(Ann.annSearchIndexPq(ann, annQueries, "vec_id", "embedding", k = 3,
+          nProbe = 2))
+        first("minhash")(Dedup.minhashSearchIndex(mh, mhBatch, "id", "text", 0.5))
+        warm("minhash")(Dedup.minhashSearchIndex(mh, mhBatch, "id", "text", 0.5))
+      } finally {
+        bm25.tiers.drop(); bm25.postings.unpersist()
+        ann.tiers.drop(); ann.cells.unpersist()
+        mh.tiers.drop(); mh.postings.unpersist(); mh.shingles.unpersist()
+      }
+    }
+  }
+
+  test("over the byte bound a pinned search falls back to the family's plan: bm25, ann and minhash rows bit-identical, the tier serves none") {
+    overBound {
+      /** `f`'s rows, with the byte bound the fold outputs share forced to 1 byte. */
+      def tiny(f: => DataFrame): (Set[String], Long, Long) =
+        Regime.forcing(spark, Regime.MaxBroadcastBytes, 1L)(counted(f))
+      val dir = write(docs(200))
+      val (plan, p0, _) = counted(search(Lexical.bm25OpenIndex(spark, dir)))
+      assert(p0 == 0 && plan.nonEmpty)
+      val bm25 = pinned(dir)
+      val annDir = java.nio.file.Files.createTempDirectory("graft_partitioned_ann_bytes").toString
+      val (cells, cents) = Ann.annBuildIndex(vecDf(vecs(200)), "vec_id", "embedding", nCentroids = 4)
+      Ann.annWriteIndex(cells, cents, annDir, pqM = 4)
+      def annSearch(idx: Ann.AnnIndex): DataFrame =
+        Ann.annSearchIndex(idx, annQueries, "vec_id", "embedding", k = 3, nProbe = 2)
+      val (annPlan, pa0, _) = counted(annSearch(Ann.annOpenIndex(spark, annDir)))
+      assert(pa0 == 0 && annPlan.nonEmpty)
+      val ann = pinnedAnn(annDir)
+      val mhDir = java.nio.file.Files.createTempDirectory("graft_partitioned_mh_bytes").toString
+      Dedup.minhashWriteIndex(Dedup.minhashBuildIndex(mhCorpus, "id", "text"), mhDir)
+      def mhFrame(idx: Dedup.MinHashIndex): DataFrame =
+        Dedup.minhashSearchIndex(idx, mhBatch, "id", "text", jaccardThreshold = 0.5)
+      val (mhPlan, pm0, _) = counted(mhFrame(Dedup.minhashOpenIndex(spark, mhDir)))
+      assert(pm0 == 0 && mhPlan.nonEmpty)
+      val mh = pinnedMinhash(mhDir)
+      try {
+        Seq[(String, Set[String], () => DataFrame)](
+          ("bm25", plan, () => search(bm25)),
+          ("ann", annPlan, () => annSearch(ann)),
+          ("minhash", mhPlan, () => mhFrame(mh))).foreach { case (label, reference, f) =>
+          val (got, parts, res) = tiny(f())
+          assert(parts == 0 && res == 0, s"$label: over its byte share the tier must not serve")
+          assert(got == reference, s"$label: the fallback diverged from the plan")
+          // under the default bound the same pinned index serves from the tier
+          val (served, p1, _) = counted(f())
+          assert(p1 == 1 && served == reference, s"$label: the tier diverged from the plan")
+        }
+      } finally {
+        bm25.tiers.drop(); bm25.postings.unpersist()
         ann.tiers.drop(); ann.cells.unpersist()
         mh.tiers.drop(); mh.postings.unpersist(); mh.shingles.unpersist()
       }

@@ -218,4 +218,31 @@ class ResidentSpec extends AnyFunSuite {
     assert(n > 0)
     assert(jobs.isEmpty, s"resident bm25 search ran ${jobs.size} jobs, expected 0")
   }
+
+  test("a driver-mirror search's count() runs no job: bm25 and ann") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_resident_count").toString
+    val (p, st) = graft.operators.Lexical.bm25BuildIndex(docs(150), "id", "text")
+    graft.operators.Lexical.bm25WriteIndex(p, st, s"$tmp/bm25", nBuckets = 8)
+    val bm0 = graft.operators.Lexical.bm25OpenIndex(spark, s"$tmp/bm25")
+    val bm = bm0.copy(postings = bm0.postings.coalesce(1))
+    bm.postings.persist(); bm.postings.count()
+    val (cells, cents) =
+      graft.operators.Ann.annBuildIndex(vecs(200), "vec_id", "embedding", nCentroids = 4)
+    graft.operators.Ann.annWriteIndex(cells, cents, s"$tmp/ann")
+    val ann0 = graft.operators.Ann.annOpenIndex(spark, s"$tmp/ann")
+    val ann = ann0.copy(cells = ann0.cells.coalesce(1))
+    ann.cells.persist(); ann.cells.count()
+    try {
+      def bmSearch = graft.operators.Lexical.bm25SearchIndex(bm, docs(3, from = 300), "id", "text", k = 3)
+      def annSearch = graft.operators.Ann.annSearchIndex(ann, vecs(4, from = 500), "vec_id",
+        "embedding", k = 3, nProbe = 2)
+      Seq("bm25" -> (() => bmSearch), "ann" -> (() => annSearch)).foreach { case (label, search) =>
+        val rows = search().collect().length.toLong // warm: builds the mirror
+        val ((n, served), jobs) = SpecJobs.of(spark)(residentDelta(search().count()))
+        assert(served == 1, s"$label: the driver mirror must serve")
+        assert(n == rows && n > 0)
+        assert(jobs.isEmpty, s"$label: a resident search's count() ran ${jobs.size} jobs, expected 0")
+      }
+    } finally { bm.postings.unpersist(); ann.cells.unpersist() }
+  }
 }

@@ -12,8 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - no collect job on the query side (pre-Generate projections fold to a
   *    LocalRelation, whose executeCollect is driver-local; a MinHash batch
   *    that folds is collected without a job);
-  *  - the per-partition folds and the one-task merge are one RDD lineage,
-  *    wrapped as a one-partition plan, so an action adds no exchange.
+  *  - the per-partition folds run as one job of one stage, when the search
+  *    is called, and the driver merges their output into a LocalRelation,
+  *    whose count is answered on the driver (`CountLocalRelation`), so an
+  *    action adds no job.
   *
   * The census counts the jobs a warm search starts, exactly, through
   * [[SpecJobs]]. A regression in any of the structural properties above
